@@ -5,7 +5,8 @@ Prints, for each audited query at $SPARK_GRAFT_SF_DIR:
     (PushedFilters / ReadSchema)
   * the number of Exchanges (shuffles) and their keys
   * WholeStageCodegen span count (JVM-side hot path)
-  * Python/Arrow crossings (ArrowEvalPython / MapInPandas / FlatMapsInPandas)
+  * Python/Arrow crossings (ArrowEvalPython / MapInPandas / MapInArrow /
+    FlatMapsInPandas)
 
 Writes BENCH/PLANS.md.  Run: python BENCH/plan_audit.py
 """
@@ -93,7 +94,8 @@ def summarize(plan: str) -> dict:
         # codegen stages print as "*(n) Operator" in executedPlan strings
         "codegen_spans": len(set(re.findall(r"\*\((\d+)\)", plan))),
         "python_crossings": len(re.findall(
-            r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)),
+            r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas",
+            plan)),
         "pushed_filters": bool(re.search(r"PushedFilters: \[[^\]]", plan)),
         "read_schemas": sorted(set(re.findall(r"ReadSchema: struct<([^>]*)>",
                                               plan)))[:2],

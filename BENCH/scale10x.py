@@ -11,7 +11,7 @@ no size cap or guard raise firing anywhere.
 Stages (each timed separately; one JSON line at the end + a markdown
 report written to BENCH/SCALE10X.md):
   gen       generate + write the tokenized parquet (excluded from pps)
-  tiers     1m rollup (relational, surrogate keys) -> gap-fill -> 1h -> 1d
+  tiers     gap-filled 1m rollup (Arrow kernel) -> 1h -> 1d
             (the scaling bench job, points/sec = north-rule metric)
   serve     serve_range over the materialized tiers + raw slivers for an
             unaligned [t0, t1) (tier stitch at 10x)
@@ -108,21 +108,21 @@ def main() -> None:
 
     # -- tiers: the north-rule job at 10x (exactly the scaling-bench job:
     # no salted repartition — that lever belongs to skewed grouped-kernel
-    # stages, and the relational rollup keys its hash agg on (doc, bucket)
-    # where Zipf sources are not a key; one untimed warm-up run first,
-    # matching the scaling bench's measurement regime) -------------------
+    # stages, and the 1m kernel is map-only, so Zipf sources never meet in
+    # one task; one untimed warm-up run first, matching the scaling
+    # bench's measurement regime) ----------------------------------------
     def _tier_job():
-        m1 = R.rollup_from_tokens_relational(
-            toks, tier="1m", positions_col="positions").localCheckpoint()
-        g1 = R.gapfill(m1, "1m").localCheckpoint()
-        h1 = R.rollup_tier_up(g1, "1h").localCheckpoint()
+        m1 = R.rollup_from_tokens(
+            toks, tier="1m", gapfill=True,
+            positions_col="positions").localCheckpoint()
+        h1 = R.rollup_tier_up(m1, "1h").localCheckpoint()
         d1 = R.rollup_tier_up(h1, "1d").localCheckpoint()
         _force(d1)
-        return m1, g1, h1, d1
+        return m1, h1, d1
 
     _tier_job()  # warm-up: daemons, codegen, page cache
     with timed("tiers"):
-        m1, g1, h1, d1 = _tier_job()
+        m1, h1, d1 = _tier_job()
     notes["rollup_points_per_sec"] = int(n_points / raw["tiers"])
     notes["tier_rows_1m"] = m1.count()
 
@@ -140,7 +140,7 @@ def main() -> None:
         t1 = dt.datetime.fromtimestamp(R.BASE_EPOCH + 2645, dt.timezone.utc)
         served = R.serve_range(
             points, t0, t1,
-            tiers={"1m": g1, "1h": h1, "1d": d1})
+            tiers={"1m": m1, "1h": h1, "1d": d1})
         notes["serve_rows"] = served.count()
 
     # -- docs + the dedup chain (distributed CC branch) ------------------

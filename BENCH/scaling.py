@@ -1,29 +1,30 @@
 """Two-cluster-size scaling evidence for the north rule.
 
 The rule requires >=0.8 throughput scaling efficiency going from N to 4N
-executors on a real cluster.  No real cluster exists in this sandbox, so
-(per the driver instructions) the evidence is the SAME job on the SAME
-on-disk input at two parallelism levels — ``local[8]`` (N) and
-``local[32]`` (4N) — each in a fresh JVM, shuffle partitions sized to the
-core count exactly as they would be per cluster size.
+executors on a real cluster.  Without a cluster, the evidence is the SAME
+job on the SAME on-disk input at two parallelism levels taken from the
+host's core count — ``local[nproc // 4]`` (N) and ``local[nproc]`` (4N) —
+each in a fresh JVM, shuffle partitions sized to the core count exactly as
+they would be per cluster size.
 
 Single-box confound, measured and reported: on this VM even an
 embarrassingly-parallel pure-Python workload (no Spark, no shared state,
-one process per core) loses per-core throughput going 8 -> 32 processes
+one process per core) loses per-core throughput going N -> 4N processes
 (vCPU contention + shared cache/memory bandwidth — resources a real
 cluster scales WITH node count).  The harness therefore runs that
 calibration probe alongside the Spark job and reports BOTH the raw
 efficiency and the efficiency normalized by the machine's own ceiling.
 
 Job under test = the north-rule headline: tokenized input table ->
-1m rollup (pure-JVM posexplode + partial/final hash agg) -> relational
-gap-fill -> 1h tier -> 1d tier, every tier materialized.
+gap-filled 1m tier (`rollup_from_tokens`, the map-only Arrow kernel the
+shipped RollupPipeline runs) -> 1h tier -> 1d tier, every tier
+materialized.
 Throughput = sum(n_tok) / wall seconds ("rolled-up points/sec, all tiers").
 
 Usage:
     python BENCH/scaling.py                  # full run, writes BENCH/BASELINE.md
-    python BENCH/scaling.py --worker 8 DIR   # internal: one measured level
-    python BENCH/scaling.py --calibrate 8    # internal: machine ceiling probe
+    python BENCH/scaling.py --worker N DIR   # internal: one measured level
+    python BENCH/scaling.py --calibrate N    # internal: machine ceiling probe
 """
 
 from __future__ import annotations
@@ -41,7 +42,8 @@ sys.path.insert(0, REPO)
 INPUT_DIR = os.environ.get("SCALING_INPUT", "/tmp/ts2g2_scaling_input_lg")
 N_DOCS = int(os.environ.get("SCALING_DOCS", "600000"))
 SEED = 42
-LEVELS = (8, 32)
+# N and 4N: 4N is every core of this host
+LEVELS = (max(1, os.cpu_count() // 4), os.cpu_count())
 REPEATS = int(os.environ.get("SCALING_REPEATS", "3"))
 
 
@@ -52,8 +54,8 @@ def _ensure_input() -> None:
     from ts2g2_spark import datagen
     from ts2g2_spark.session import get_spark
 
-    spark = get_spark(app_name="scaling_datagen", parallelism=32,
-                      shuffle_partitions=32)
+    spark = get_spark(app_name="scaling_datagen", parallelism=LEVELS[1],
+                      shuffle_partitions=LEVELS[1])
     df = datagen.tokenized_sequences(spark, N_DOCS, seed=SEED, gap_p=0.02)
     # 256 files: fine-grained splits so both levels get balanced task waves
     df.repartition(256).write.mode("overwrite").parquet(INPUT_DIR)
@@ -74,12 +76,11 @@ def _worker(cores: int, input_dir: str) -> None:
     def job(df):
         # every tier materializes before the next consumes it — the
         # continuous-aggregate contract (and it keeps each Spark job a
-        # single pass; feeding a lazy m1 into gap-fill would recompute the
-        # full aggregation once per consumer)
-        m1 = R.rollup_from_tokens_relational(
-            df, tier="1m", positions_col="positions").localCheckpoint()
-        g1 = R.gapfill(m1, "1m").localCheckpoint()
-        h1 = R.rollup_tier_up(g1, "1h").localCheckpoint()
+        # single pass)
+        m1 = R.rollup_from_tokens(
+            df, tier="1m", gapfill=True,
+            positions_col="positions").localCheckpoint()
+        h1 = R.rollup_tier_up(m1, "1h").localCheckpoint()
         _force(R.rollup_tier_up(h1, "1d"))
 
     full = spark.read.parquet(input_dir)
@@ -192,7 +193,7 @@ def main() -> None:
     norm_unclamped = eff / ceiling
     norm_clamped = min(1.0, norm_unclamped)
     report = {
-        "job": ("rollup tiers 1m(relational, gapfill)->1h->1d "
+        "job": ("rollup tiers 1m(Arrow kernel, gapfill)->1h->1d "
                 "on tokenized input"),
         "input_docs": N_DOCS,
         "input_points": results[n]["points"],
@@ -219,7 +220,7 @@ def main() -> None:
     md = f"""# BENCH/BASELINE.md — two-cluster-size scaling evidence
 
 North rule: throughput scaling efficiency >= 0.8 going from N to 4N
-executors.  No real cluster exists in this sandbox; evidence is the same
+executors.  Without a real cluster, the evidence is the same
 job on the same on-disk Parquet input at two parallelism levels
 (`local[{n}]` = N, `local[{n4}]` = 4N, each taskset-PINNED to exactly its
 core budget), fresh JVM per level, shuffle
@@ -229,9 +230,9 @@ interleaves three N/4N pairs and reports the MEDIAN per-pair efficiency
 (per-round numbers in `BENCH/scaling.json`).
 
 **Job**: tokenized sequences ({N_DOCS:,} docs, {results[n]['points']:,}
-points, Zipf-skewed sources) -> 1m rollup (posexplode + map-side partial
-hash agg, whole-stage codegen, zero per-point shuffle rows) -> relational
-gap-fill -> 1h tier -> 1d tier, all three tiers materialized.
+points, Zipf-skewed sources) -> gap-filled 1m tier (`rollup_from_tokens`:
+map-only Arrow kernel, no exchange) -> 1h tier -> 1d tier, all three
+tiers materialized.
 Metric = rolled-up points/sec through all tiers.
 
 | level | cores | wall s | points/sec |
@@ -250,8 +251,8 @@ workload (one process per core, zero IPC) run in the same interleaved
 rounds measured an N->4N efficiency of **{ceiling:.3f}**.  The probe is
 a CONTENTION REFERENCE POINT, not a universal upper bound: it is
 memory-bandwidth-bound, so under heavy host contention it can lose MORE
-efficiency than a less bandwidth-sensitive workload (the codegen'd
-hash-agg pipeline){probe_note}.
+efficiency than a less bandwidth-sensitive workload (the rollup
+job){probe_note}.
 
 Normalized efficiency raw/probe = {eff:.3f} / {ceiling:.3f} =
 **{norm_unclamped:.3f}** (unclamped); conservative clamp
@@ -264,29 +265,26 @@ contention than a perfectly-parallel shared-nothing probe did in the
 same minutes, so its intrinsic parallel overheads (shuffle,
 coordination, skew) are not the binding constraint at 4N — host
 contention is, and a real 4N-executor cluster adds nodes instead of
-subdividing one contended box.  (Quieter-host reference: round-1
-measured raw 0.492 vs probe 0.493, ratio 0.998.)
+subdividing one contended box.
 
 ## Why this holds at real cluster scale
 
-* the 1m tier is map-side partial-aggregated: the exchange carries one row
-  per (doc, minute-bucket), never one per point — shuffle bytes per input
-  point are constant in cluster size;
+* the 1m tier (gap-fill included) is map-only: each doc's series is
+  row-local, so no point and no 1m row crosses an exchange;
 * tier-up aggregations are associative partial+final hash aggs over
   already-tiny tier tables;
-* gap-fill joins on (doc_id, bucket) with AQE handling runtime skew;
-  hot-source skew in grouped-kernel stages is pre-split by salted
+* hot-source skew in grouped-kernel stages is pre-split by salted
   repartition (`plans/points.salted_repartition`);
 * no driver-side loops or collects anywhere in the job.
 
 ## One decade up
 
 `BENCH/SCALE10X.md` (written by `BENCH/scale10x.py`) runs the SAME tier
-job at 10x this input (6M docs / ~1.9B points) plus serve_range and the
+job at 6M docs / ~1.9B points plus serve_range and the
 dedup/ANN chains, exercising the at-scale branches the sf fixtures never
 reach (distributed connected_components, the sign-LSH embedding near-dup
-path) — throughput held within ~25% of this page's 4N figure one decade
-up, with no size guard firing.
+path) with no size guard firing.  Its recorded numbers predate the
+single-kernel 1m tier and were taken on a 32-core host.
 
 Reproduce: `python BENCH/scaling.py` (env: SCALING_DOCS, SCALING_REPEATS).
 Raw numbers: `BENCH/scaling.json`.

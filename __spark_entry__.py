@@ -428,32 +428,27 @@ join bk on bk.user_id = d.user_id and bk.t = d.t
 """
 
 
-def q_tokens_rollup_1m(spark, sf_dir):
-    """The NORTH-RULE core operator over the exact input_hint shape
-    (doc_id:string, tokens:array<int32>, n_tok:int32, source:string):
-    1m rollup of per-doc token streams via
-    plans/rollup.rollup_from_tokens_relational — posexplode inside the
-    task + map-side partial hash agg, the exchange carries one row per
-    (doc, minute-bucket), never one per token.  The token table is
-    derived DETERMINISTICALLY from the documents table (token i =
-    md5-h64(word_i) mod 32003, ts = BASE_EPOCH + position seconds) so
-    the DuckDB oracle replays the identical streams bit-for-bit — this
-    gives the rolled-up-points contract a driver value-hash check on the
-    true input shape, not just the events-table twin."""
+def _tokens_table(spark, sf_dir):
+    """The input_hint token table (doc_id:string, source:string,
+    tokens:array<int32>, n_tok:int32) derived DETERMINISTICALLY from the
+    documents table: its bigint doc_id cast to string, token i =
+    md5-h64(word_i) mod 32003, docs without words dropped."""
     from ts2g2_spark.functions.hashing import h64
-    from ts2g2_spark.plans import rollup as rollup_mod
 
     docs = _docs(spark, sf_dir)
     words = F.filter(F.split(F.trim("text"), r"[ \t\n\f\r]+"),
                      lambda w: w != F.lit(""))
     toks = F.transform(words, lambda w: F.pmod(h64(w), F.lit(32003))
                        .cast("int"))
-    tok_table = docs.select(
-        "doc_id", "source", toks.alias("tokens"),
-        F.size(words).cast("int").alias("n_tok"),
+    return docs.select(
+        F.col("doc_id").cast("string").alias("doc_id"), "source",
+        toks.alias("tokens"), F.size(words).cast("int").alias("n_tok"),
     ).where(F.col("n_tok") > 0)
-    out = rollup_mod.rollup_from_tokens_relational(tok_table, tier="1m")
-    return out.select(
+
+
+def _tokens_rollup_out(tier):
+    """A rollup tier in the TOKENS_ROLLUP_SQL output shape."""
+    return tier.select(
         "doc_id", "source", "bucket_ts",
         "cnt", F.col("sum").alias("sum_val"),
         F.col("min").alias("min_val"), F.col("max").alias("max_val"),
@@ -461,9 +456,23 @@ def q_tokens_rollup_1m(spark, sf_dir):
     )
 
 
+def q_tokens_rollup_1m(spark, sf_dir):
+    """The NORTH-RULE core operator over the exact input_hint shape
+    (`_tokens_table`): 1m rollup of per-doc token streams via
+    plans/rollup.rollup_from_tokens -- the map-only Arrow kernel of the
+    shipped RollupPipeline, no exchange at all.  ts = BASE_EPOCH +
+    position seconds, so the DuckDB oracle replays the identical streams
+    bit-for-bit — this gives the rolled-up-points contract a value-hash
+    check on the true input shape, not just the events-table twin."""
+    from ts2g2_spark.plans import rollup as rollup_mod
+
+    return _tokens_rollup_out(rollup_mod.rollup_from_tokens(
+        _tokens_table(spark, sf_dir), tier="1m"))
+
+
 TOKENS_ROLLUP_SQL = """
 with w as (
-  select doc_id, source,
+  select cast(doc_id as varchar) as doc_id, source,
          list_filter(regexp_split_to_array(trim(text), '\\s+'),
                      x -> x != '') as words
   from documents
@@ -497,32 +506,16 @@ def q_tokens_refresh_late(spark, sf_dir):
     broadcast anti/semi split touches nothing else).  Token values are
     integers, so even the merged sums are exact — the oracle is the
     plain full recompute (TOKENS_ROLLUP_SQL) with no rounding."""
-    from ts2g2_spark.functions.hashing import h64
     from ts2g2_spark.plans import rollup as rollup_mod
     from ts2g2_spark.plans.points import explode_points
 
-    docs = _docs(spark, sf_dir)
-    words = F.filter(F.split(F.trim("text"), r"[ \t\n\f\r]+"),
-                     lambda w: w != F.lit(""))
-    toks = F.transform(words, lambda w: F.pmod(h64(w), F.lit(32003))
-                       .cast("int"))
-    tok_table = docs.select(
-        "doc_id", "source", toks.alias("tokens"),
-        F.size(words).cast("int").alias("n_tok"),
-    ).where(F.col("n_tok") > 0)
-    pts = explode_points(tok_table)
+    pts = explode_points(_tokens_table(spark, sf_dir))
     is_late = F.pmod(F.xxhash64("doc_id"), F.lit(20)) == 7
     state = rollup_mod.rollup_state(
         pts.where(~is_late), "1m", okey=F.col("idx"))
     refreshed = rollup_mod.refresh_tier(
         state, pts.where(is_late), "1m", okey=F.col("idx"))
-    out = rollup_mod.finalize_state(refreshed)
-    return out.select(
-        "doc_id", "source", "bucket_ts",
-        "cnt", F.col("sum").alias("sum_val"),
-        F.col("min").alias("min_val"), F.col("max").alias("max_val"),
-        F.col("first").alias("first_val"), F.col("last").alias("last_val"),
-    )
+    return _tokens_rollup_out(rollup_mod.finalize_state(refreshed))
 
 
 def q_rollup_1m_quantiles(spark, sf_dir):

@@ -57,21 +57,6 @@ def test_kernel_rollup_matches_relational(spark, input_df):
     assert np.array_equal(k["sum"].to_numpy(), r["sum"].to_numpy())
 
 
-def test_relational_from_tokens_matches_kernel(spark, input_df):
-    """rollup_from_tokens_relational (posexplode + codegen hash agg — the
-    scaling-benchmark path) == the Arrow-kernel path, bit-exact."""
-    k = rollup_mod.rollup_from_tokens(input_df, tier="1m").toPandas()
-    r = rollup_mod.rollup_from_tokens_relational(
-        input_df, tier="1m").toPandas()
-    for df in (k, r):
-        df.sort_values(["doc_id", "bucket_ts"], inplace=True,
-                       ignore_index=True)
-    assert len(k) == len(r)
-    for c in ("doc_id", "bucket_ts", "cnt", "sum", "min", "max", "first",
-              "last"):
-        assert np.array_equal(k[c].to_numpy(), r[c].to_numpy()), c
-
-
 def test_tier_from_tier_exact(spark, input_df):
     """Continuous-aggregate contract: 1h from 1m == 1h from raw points."""
     m1 = rollup_mod.rollup_from_tokens(input_df, tier="1m")
@@ -116,6 +101,18 @@ def test_rollup_vs_duckdb_oracle(spark, input_df):
                            rtol=0, atol=0), c
 
 
+def _assert_same_rollup(k, r):
+    """Row-for-row equality of two rollup frames (pandas), NaN == NaN."""
+    for df in (k, r):
+        df.sort_values(["doc_id", "bucket_ts"], inplace=True,
+                       ignore_index=True)
+    assert len(k) == len(r)
+    for c in ("doc_id", "source", "bucket_ts", "cnt", "sum", "min", "max",
+              "first", "last", "gapfilled"):
+        np.testing.assert_array_equal(
+            k[c].to_numpy(), r[c].to_numpy(), err_msg=c)
+
+
 def test_kernel_gapfill_matches_relational(spark, gappy_df):
     k = rollup_mod.rollup_from_tokens(
         gappy_df, tier="1m", gapfill=True, positions_col="positions"
@@ -123,17 +120,45 @@ def test_kernel_gapfill_matches_relational(spark, gappy_df):
     sparse = rollup_mod.rollup_from_tokens(
         gappy_df, tier="1m", gapfill=False, positions_col="positions")
     r = rollup_mod.gapfill(sparse, "1m").toPandas()
-    for df in (k, r):
-        df.sort_values(["doc_id", "bucket_ts"], inplace=True,
-                       ignore_index=True)
-    assert len(k) == len(r)
-    assert (k["gapfilled"] == r["gapfilled"]).all()
-    assert (k["cnt"] == r["cnt"]).all()
+    _assert_same_rollup(k, r)
     assert k["gapfilled"].sum() > 0  # gaps actually exercised
     # dense invariant: filled + present == full span per doc
     for doc, g in k.groupby("doc_id"):
         span = (g["bucket_ts"].max() - g["bucket_ts"].min()).total_seconds()
         assert len(g) == span / 60 + 1
+
+
+@pytest.mark.parametrize("use_positions", [False, True])
+@pytest.mark.parametrize("step_seconds", [1, 30])
+@pytest.mark.parametrize("fill", [False, True])
+def test_kernel_doc_segments_in_one_batch(spark, use_positions,
+                                          step_seconds, fill):
+    """Several docs packed into ONE Arrow batch -- an empty tokens array,
+    a one-point doc, a one-bucket doc and gappy multi-bucket docs -- roll
+    up exactly like the relational path over exploded points."""
+    docs = [  # (doc_id, tokens, positions)
+        ("d1", [42], [7]),
+        ("d0", [], []),
+        ("d3", [3, 9, 1, 4, 4, 7, 2], [0, 1, 59, 60, 61, 200, 400]),
+        ("d2", [4, 2], [10, 11]),
+        ("d4", [6, 5, 8], [0, 5, 130]),
+    ]
+    rows = [(d, f"s{i % 2}", t, len(t), p if use_positions
+             else list(range(len(t)))) for i, (d, t, p) in enumerate(docs)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, source string, tokens array<int>, "
+              "n_tok int, positions array<int>").coalesce(1)
+    pos_col = "positions" if use_positions else None
+    k = rollup_mod.rollup_from_tokens(
+        df, tier="1m", step_seconds=step_seconds, gapfill=fill,
+        positions_col=pos_col).toPandas()
+    r = rollup_mod.rollup_points(
+        explode_points(df, step_seconds=step_seconds, positions_col=pos_col),
+        "1m", order_col="idx")
+    if fill:
+        r = rollup_mod.gapfill(r, "1m")
+    _assert_same_rollup(k, r.toPandas())
+    assert "d0" not in set(k["doc_id"])
 
 
 def test_chunks_roundtrip_token_equality(spark, input_df):

@@ -1,7 +1,7 @@
 """Per-stage, per-partition lineage + metrics (north rule requirement).
 
 Every pipeline stage appends rows
-(run_id, stage, partition_id, rows, bytes_approx, wall_ms, fingerprint)
+(run_id, stage, partition_id, rows, wall_ms, fingerprint, recorded_at)
 to the `lineage` table.  Partition-level counts come from a cheap
 spark_partition_id() groupBy over the stage's committed output — one extra
 columnar scan of data that is already hot, no interference with the stage's

@@ -131,8 +131,7 @@ class RollupPipeline(StagedPipeline):
             name = f"rollup_{tier}"
             df = self.cat.read(name)
             kept = rollup_mod.apply_retention(df, tier, now_epoch, horizons)
-            kept_cached = kept.localCheckpoint() if kept.isStreaming is False \
-                else kept
-            self.cat.write(kept_cached, name)
+            # the checkpoint cuts the read of the table being overwritten
+            self.cat.write(kept.localCheckpoint(), name)
             out[name] = self.cat.read(name)
         return out

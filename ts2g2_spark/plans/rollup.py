@@ -1,17 +1,18 @@
 """Continuous-aggregate rollup tiers (1m/1h/1d), gap-fill, retention.
 
-Two physical strategies for the same logical rollup, chosen by data shape:
+The 1m tier has one implementation per input shape:
 
-1. ARRAY-NATIVE (`rollup_from_tokens`): the input table keeps a doc's whole
-   series in one row (input_hint), so the 1m tier is computable with ZERO
-   shuffle — a mapInPandas kernel turns each tokens array directly into
-   bucket rows.  At 100 TB this is the difference between a map-only stage
-   and a trillion-row exchange.
+1. TOKENIZED TABLE (`rollup_from_tokens`): the input table keeps a doc's
+   whole series in one row (input_hint), so the 1m tier is computable with
+   ZERO shuffle -- a mapInArrow kernel turns each Arrow batch of tokens
+   arrays into bucket rows in one vectorized pass (gap-fill included).
+   At 100 TB this is the difference between a map-only stage and a
+   trillion-row exchange.
 
-2. RELATIONAL (`rollup_points`): when points arrive as rows (e.g. an events
-   table), the tier is a groupBy window aggregate — Catalyst plans it as
-   partial (map-side) + final hash aggregation, so the shuffle carries one
-   row per (series, bucket), not per point.
+2. ROW-PER-POINT TABLE (`rollup_points`): when points arrive as rows
+   (e.g. an events table), the tier is a groupBy window aggregate --
+   Catalyst plans it as partial (map-side) + final hash aggregation, so
+   the shuffle carries one row per (series, bucket), not per point.
 
 Coarser tiers always derive from the finer tier (`rollup_tier_up`) — the
 continuous-aggregate contract: sum/cnt re-aggregate, min/min, max/max,
@@ -24,10 +25,12 @@ tokens, and tests assert equality against recomputation from raw.
 
 from __future__ import annotations
 
+import datetime as _dt
+import functools
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,47 +53,7 @@ ROLLUP_SCHEMA = (
     "sum double, min double, max double, first double, last double, "
     "gapfilled boolean"
 )
-
-
-def _rollup_arrays(
-    pos: np.ndarray, vals: np.ndarray, tier_s: int, step_s: int,
-    base_epoch: int, gapfill: bool,
-) -> dict[str, np.ndarray]:
-    """Vectorized per-doc rollup: positions+values -> per-bucket aggregates.
-    Positions are ascending; first/last are by position within bucket."""
-    ts = base_epoch + pos.astype(np.int64) * step_s
-    bucket = (ts // tier_s) * tier_s
-    # positions ascending => buckets ascending => reduceat-friendly
-    uniq, starts = np.unique(bucket, return_index=True)
-    cnt = np.diff(np.append(starts, len(bucket)))
-    sums = np.add.reduceat(vals, starts)
-    mins = np.minimum.reduceat(vals, starts)
-    maxs = np.maximum.reduceat(vals, starts)
-    firsts = vals[starts]
-    lasts = vals[np.append(starts[1:], len(vals)) - 1]
-    if gapfill and len(uniq) > 1:
-        dense = np.arange(uniq[0], uniq[-1] + tier_s, tier_s)
-        idx = np.searchsorted(uniq, dense)
-        present = (idx < len(uniq)) & (uniq[np.minimum(idx, len(uniq) - 1)] == dense)
-        out = {
-            "bucket": dense,
-            "cnt": np.zeros(len(dense), dtype=np.int64),
-            "sum": np.full(len(dense), np.nan),
-            "min": np.full(len(dense), np.nan),
-            "max": np.full(len(dense), np.nan),
-            "first": np.full(len(dense), np.nan),
-            "last": np.full(len(dense), np.nan),
-            "gapfilled": ~present,
-        }
-        for k, src in (("cnt", cnt), ("sum", sums), ("min", mins),
-                       ("max", maxs), ("first", firsts), ("last", lasts)):
-            out[k][present] = src
-        return out
-    return {
-        "bucket": uniq, "cnt": cnt, "sum": sums, "min": mins, "max": maxs,
-        "first": firsts, "last": lasts,
-        "gapfilled": np.zeros(len(uniq), dtype=bool),
-    }
+_ROLLUP_COLS = [f.split()[0] for f in ROLLUP_SCHEMA.split(", ")]
 
 
 def rollup_from_tokens(
@@ -104,121 +67,70 @@ def rollup_from_tokens(
     """Map-only rollup of the tokenized input table (no shuffle).
 
     Each doc's series is row-local, so per-(doc, bucket) aggregates are a
-    pure Arrow-batch transform.  Gap-fill is also row-local: the dense
-    bucket range per doc is emitted with gapfilled=true markers (cnt=0,
-    null aggregates) — exactly the rows a sequence()+anti-join would add,
-    minus the join."""
+    pure Arrow-batch transform: one vectorized pass per batch over all of
+    its docs' points, which must be in ascending position order within a
+    doc.  first/last are by position within the bucket.  Gap-fill is also
+    row-local: the dense bucket range per doc is emitted with
+    gapfilled=true markers (cnt=0, null aggregates) -- exactly the rows a
+    sequence()+anti-join would add, minus the join."""
     tier_s = TIER_SECONDS[tier]
-    has_pos = positions_col is not None
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "source", "bucket", "cnt", "sum", "min", "max",
-                "first", "last", "gapfilled")}
-            for row in pdf.itertuples(index=False):
-                toks = np.asarray(row.tokens, dtype=np.float64)
-                if len(toks) == 0:
-                    continue
-                pos = (np.asarray(getattr(row, positions_col), dtype=np.int64)
-                       if has_pos else np.arange(len(toks), dtype=np.int64))
-                r = _rollup_arrays(pos, toks, tier_s, step_seconds,
-                                   base_epoch, gapfill)
-                m = len(r["bucket"])
-                out["doc_id"].append(np.repeat(row.doc_id, m))
-                out["source"].append(np.repeat(row.source, m))
-                for k in ("bucket", "cnt", "sum", "min", "max", "first",
-                          "last", "gapfilled"):
-                    out[k].append(r[k])
-            if not out["doc_id"]:
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            toks = batch.column("tokens")
+            n = toks.value_lengths().fill_null(0).to_numpy()
+            if not n.any():
                 continue
-            res = pd.DataFrame({
-                k: np.concatenate(v) for k, v in out.items()})
-            res["bucket_ts"] = pd.to_datetime(res.pop("bucket"), unit="s")
-            yield res[["doc_id", "source", "bucket_ts", "cnt", "sum", "min",
-                       "max", "first", "last", "gapfilled"]]
+            vals = toks.flatten().to_numpy().astype(np.float64)
+            doc = np.repeat(np.arange(len(n)), n)
+            if positions_col is None:
+                pos = np.arange(len(vals)) - np.repeat(np.cumsum(n) - n, n)
+            else:
+                pos = batch.column(positions_col).flatten().to_numpy()
+            bucket = ((base_epoch + pos.astype(np.int64) * step_seconds)
+                      // tier_s * tier_s)
+            # one group per run of equal (doc, bucket): the key only
+            # changes where the doc or the bucket does
+            new = np.ones(len(vals), dtype=bool)
+            new[1:] = (doc[1:] != doc[:-1]) | (bucket[1:] != bucket[:-1])
+            starts = np.flatnonzero(new)
+            ends = np.append(starts[1:], len(vals))
+            gdoc, gbucket = doc[starts], bucket[starts]
+            aggs = {
+                "cnt": ends - starts,
+                "sum": np.add.reduceat(vals, starts),
+                "min": np.minimum.reduceat(vals, starts),
+                "max": np.maximum.reduceat(vals, starts),
+                "first": vals[starts],
+                "last": vals[ends - 1],
+            }
+            if gapfill:
+                # dense spine of every doc's [first, last] bucket range;
+                # slot = the spine row of each non-empty group
+                dstart = np.flatnonzero(np.diff(gdoc, prepend=-1))
+                per_doc = np.diff(np.append(dstart, len(gdoc)))
+                lo = gbucket[dstart]
+                m = (gbucket[dstart + per_doc - 1] - lo) // tier_s + 1
+                off = np.cumsum(m) - m
+                slot = (np.repeat(off, per_doc)
+                        + (gbucket - np.repeat(lo, per_doc)) // tier_s)
+                gdoc = np.repeat(gdoc[dstart], m)
+                gbucket = (np.repeat(lo - off * tier_s, m)
+                           + np.arange(m.sum()) * tier_s)
+                for k, v in aggs.items():
+                    aggs[k] = np.full(len(gdoc), 0 if k == "cnt" else np.nan,
+                                      dtype=v.dtype)
+                    aggs[k][slot] = v
+            yield pa.RecordBatch.from_arrays([
+                batch.column("doc_id").take(gdoc),
+                batch.column("source").take(gdoc),
+                pa.array(gbucket * 1_000_000,
+                         type=pa.timestamp("us", tz="UTC")),
+                *[pa.array(v, from_pandas=True) for v in aggs.values()],
+                pa.array(aggs["cnt"] == 0),  # only spine rows are empty
+            ], names=_ROLLUP_COLS)
 
-    return df.mapInPandas(kernel, schema=ROLLUP_SCHEMA)
-
-
-def rollup_from_tokens_relational(
-    df: DataFrame,
-    tier: str = "1m",
-    step_seconds: int = 1,
-    base_epoch: int = BASE_EPOCH,
-    positions_col: str | None = None,
-    surrogate: bool = True,
-) -> DataFrame:
-    """Pure-JVM tier build from the tokenized table: posexplode inside the
-    task + partial (map-side) hash aggregate, so whole-stage codegen covers
-    the hot path and the exchange carries one row per (doc, bucket), never
-    per point.  Measured ~1.5x the Arrow-kernel path's throughput and
-    better core scaling (BENCH/BASELINE.md); the kernel path
-    (`rollup_from_tokens`) remains the choice when in-kernel gap-fill or
-    compression fusion is wanted.
-
-    first/last per bucket are by position (deterministic: positions are
-    unique within a doc)."""
-    tier_s = TIER_SECONDS[tier]
-    if positions_col:
-        pz = F.posexplode(F.arrays_zip(positions_col, "tokens")).alias(
-            "i", "pz")
-        pos = F.col(f"pz.{positions_col}").cast("long")
-        val = F.col("pz.tokens").cast("double")
-    else:
-        pz = F.posexplode("tokens").alias("i", "tok")
-        pos = F.col("i").cast("long")
-        val = F.col("tok").cast("double")
-    # Surrogate series key: the exploded per-point stream repeats the
-    # series identity 10^2-10^3 times per doc — carrying the doc_id STRING
-    # through 10^12 rows and the hash agg dominates memory traffic
-    # (measured ~35-45% of stage time).  Two independent 64-bit hashes
-    # stand in for it (collision needs both to collide: ~2^-128-ish, safe
-    # at 10^12 series; deterministic under task retries, unlike
-    # monotonically_increasing_id); the (surrogate -> doc_id, source) dim
-    # table is one row per SERIES, broadcast back after the aggregate.
-    # Trade-off: the join-back is broadcast, which caps at O(10^8) series
-    # per job; beyond that either pass surrogate=False (string keys stream
-    # through the agg, no join — partial agg keeps the exchange small
-    # either way) or shard the input so each job's dim side broadcasts.
-    bucket_s = (
-        (F.lit(base_epoch) + pos * step_seconds) / tier_s
-    ).cast("long") * tier_s
-    if not surrogate:
-        pts = df.select("doc_id", "source", pz).select(
-            "doc_id", "source", bucket_s.alias("b"), pos.alias("pos"),
-            val.alias("value"))
-        return pts.groupBy("doc_id", "source", "b").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-            F.min_by("value", F.col("pos")).alias("first"),
-            F.max_by("value", F.col("pos")).alias("last"),
-        ).select(
-            "doc_id", "source", F.timestamp_seconds("b").alias("bucket_ts"),
-            "cnt", "sum", "min", "max", "first", "last",
-            F.lit(False).alias("gapfilled"),
-        )
-    sid = [F.xxhash64("doc_id", "source").alias("s1"),
-           F.xxhash64("doc_id", F.lit(42), "source").alias("s2")]
-    dims = df.select(*sid, "doc_id", "source").dropDuplicates(["s1", "s2"])
-    pts = df.select(*sid, pz).select(
-        "s1", "s2", bucket_s.alias("b"), pos.alias("pos"),
-        val.alias("value"))
-    agg = pts.groupBy("s1", "s2", "b").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("value").alias("sum"),
-        F.min("value").alias("min"),
-        F.max("value").alias("max"),
-        F.min_by("value", F.col("pos")).alias("first"),
-        F.max_by("value", F.col("pos")).alias("last"),
-    )
-    return agg.join(F.broadcast(dims), ["s1", "s2"]).select(
-        "doc_id", "source", F.timestamp_seconds("b").alias("bucket_ts"),
-        "cnt", "sum", "min", "max", "first", "last",
-        F.lit(False).alias("gapfilled"),
-    )
+    return df.mapInArrow(kernel, schema=ROLLUP_SCHEMA)
 
 
 def rollup_points(
@@ -229,24 +141,16 @@ def rollup_points(
     val_col: str = "value",
     order_col: str | None = None,
 ) -> DataFrame:
-    """Relational rollup for row-per-point tables.  Partial+final hash agg;
-    first/last are deterministic via min_by/max_by on (ts, order_col)."""
-    tier_s = TIER_SECONDS[tier]
-    bucket = _bucket_ts(F.col(ts_col), tier_s).alias("bucket_ts")
+    """Relational rollup for row-per-point tables: the serving row of
+    `rollup_state`.  Partial+final hash agg; first/last are deterministic
+    via min_by/max_by on (ts, order_col).  Catalyst prunes the state's
+    unused order-key aggregates, so the plan is one Aggregate."""
     okey = (F.struct(F.col(ts_col), F.col(order_col)) if order_col
-            else F.col(ts_col))
-    return (
-        points.groupBy(*[F.col(c) for c in series_cols], bucket)
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(val_col).alias("sum"),
-            F.min(val_col).alias("min"),
-            F.max(val_col).alias("max"),
-            F.min_by(val_col, okey).alias("first"),
-            F.max_by(val_col, okey).alias("last"),
-        )
-        .withColumn("gapfilled", F.lit(False))
-    )
+            else None)
+    return finalize_state(
+        rollup_state(points, tier, series_cols=series_cols, ts_col=ts_col,
+                     val_col=val_col, okey=okey),
+        series_cols=series_cols)
 
 
 def rollup_tier_up(
@@ -530,6 +434,56 @@ def decompose_range(t0_us: int, t1_us: int,
     return segs
 
 
+def _epoch_us(x) -> int:
+    """datetime (naive = UTC) or epoch microseconds -> epoch microseconds."""
+    if isinstance(x, _dt.datetime):
+        if x.tzinfo is None:
+            x = x.replace(tzinfo=_dt.timezone.utc)
+        return int(x.timestamp() * 1_000_000)
+    return int(x)
+
+
+def _in_ranges(col, ranges):
+    p = F.lit(False)
+    for lo, hi in ranges:
+        p = p | ((col >= F.lit(lo)) & (col < F.lit(hi)))
+    return p
+
+
+def _stitch_range(name, points, t0, t1, tiers, build, ts_col,
+                  tier_rows, raw_rows) -> DataFrame:
+    """The range stitch behind `serve_range` and `serve_range_histogram`:
+    cover [t0, t1) with the supplied tiers' buckets (coarsest first) plus
+    raw slivers, and union one frame per covering source.
+
+    `tiers=None` builds them with `build(points)` from the points
+    pre-filtered to the request (every consumed bucket is fully inside
+    [t0, t1), so this is exact) -- otherwise the whole table is rolled up
+    to serve a one-hour ask.  `tier_rows(df, bucket_us)` and
+    `raw_rows(df, ts_us)` project a range-filtered tier frame or raw frame
+    to the caller's union schema."""
+    t0_us, t1_us = _epoch_us(t0), _epoch_us(t1)
+    ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    if tiers is None:
+        points = points.where(
+            (ts_us >= F.lit(t0_us)) & (ts_us < F.lit(t1_us)))
+        tiers = build(points)
+    unknown = set(tiers) - set(TIER_SECONDS)
+    if unknown:
+        raise ValueError(f"{name}: unknown tier names {unknown}")
+    # decompose against the tiers actually supplied -- a partial
+    # catalog (e.g. 1d dropped by retention) stitches from what exists
+    by_us = {TIER_SECONDS[t] * 1_000_000: t for t in tiers}
+    segs = decompose_range(t0_us, t1_us, sorted(by_us, reverse=True))
+    b_us = F.unix_micros(F.col("bucket_ts"))
+    parts = [tier_rows(tiers[by_us[t]].where(_in_ranges(b_us, ranges)), b_us)
+             for t, ranges in segs.items() if t != "raw" and ranges]
+    if segs["raw"]:
+        parts.append(raw_rows(
+            points.where(_in_ranges(ts_us, segs["raw"])), ts_us))
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
 def serve_range(
     points: DataFrame,
     t0,
@@ -570,73 +524,28 @@ def serve_range(
     partial+final hash agg on the series key; no joins, no windows.
     The raw scan reads only the sub-minute slivers.
     """
-    import datetime as _dt
-
-    def _us(x):
-        if isinstance(x, _dt.datetime):
-            if x.tzinfo is None:
-                x = x.replace(tzinfo=_dt.timezone.utc)
-            return int(x.timestamp() * 1_000_000)
-        return int(x)
-
-    t0_us, t1_us = _us(t0), _us(t1)
-    raw_pred_src = None
-    if tiers is None:
-        # fallback builds tiers from raw: pre-filter to the request
-        # first (every consumed bucket is fully inside [t0, t1), so
-        # this is exact) -- otherwise the whole table is rolled up to
-        # serve a one-hour ask
-        ts_us_src = F.unix_micros(F.col(ts_col).cast("timestamp"))
-        points = points.where(
-            (ts_us_src >= F.lit(t0_us)) & (ts_us_src < F.lit(t1_us)))
-        m1 = rollup_points(points, "1m", series_cols=series_cols,
+    def build(pts):
+        m1 = rollup_points(pts, "1m", series_cols=series_cols,
                            ts_col=ts_col, val_col=val_col,
                            order_col=order_col)
         h1 = rollup_tier_up(m1, "1h", series_cols=series_cols)
-        d1 = rollup_tier_up(h1, "1d", series_cols=series_cols)
-        tiers = {"1m": m1, "1h": h1, "1d": d1}
-    unknown = set(tiers) - set(TIER_SECONDS)
-    if unknown:
-        raise ValueError(f"serve_range: unknown tier names {unknown}")
-    # decompose against the tiers actually supplied -- a partial
-    # catalog (e.g. 1d dropped by retention) stitches from what exists
-    by_us = {TIER_SECONDS[name] * 1_000_000: name for name in tiers}
-    segs = decompose_range(t0_us, t1_us, sorted(by_us, reverse=True))
-
-    def _pred(col, ranges):
-        p = F.lit(False)
-        for lo, hi in ranges:
-            p = p | ((col >= F.lit(lo)) & (col < F.lit(hi)))
-        return p
+        return {"1m": m1, "1h": h1,
+                "1d": rollup_tier_up(h1, "1d", series_cols=series_cols)}
 
     scols = [F.col(c) for c in series_cols]
-    parts = []
-    for t_us, ranges in segs.items():
-        if t_us == "raw" or not ranges:
-            continue
-        df = tiers[by_us[t_us]]
-        b_us = F.unix_micros(F.col("bucket_ts"))
-        parts.append(
-            df.where(~F.col("gapfilled")).where(_pred(b_us, ranges))
-            .select(*scols, b_us.alias("_t"), F.lit(-1).alias("_o"),
-                    "cnt", F.col("sum").alias("_s"), "min", "max",
-                    "first", "last"))
-    if segs["raw"]:
-        ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-        v = F.col(val_col).cast("double")
-        o = F.col(order_col).cast("long") if order_col else F.lit(0)
-        parts.append(
-            points.where(_pred(ts_us, segs["raw"]))
-            .select(*scols, ts_us.alias("_t"), o.alias("_o"),
-                    F.lit(1).cast("long").alias("cnt"), v.alias("_s"),
-                    v.alias("min"), v.alias("max"),
-                    v.alias("first"), v.alias("last")))
-    if not parts:
-        raise ValueError("serve_range: no tier covers the interval "
-                         "and no raw frame segments were produced")
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
+    v = F.col(val_col).cast("double")
+    o = F.col(order_col).cast("long") if order_col else F.lit(0)
+    u = _stitch_range(
+        "serve_range", points, t0, t1, tiers, build, ts_col,
+        tier_rows=lambda df, b_us: df.where(~F.col("gapfilled")).select(
+            *scols, b_us.alias("_t"), F.lit(-1).alias("_o"),
+            "cnt", F.col("sum").alias("_s"), "min", "max",
+            "first", "last"),
+        raw_rows=lambda df, ts_us: df.select(
+            *scols, ts_us.alias("_t"), o.alias("_o"),
+            F.lit(1).cast("long").alias("cnt"), v.alias("_s"),
+            v.alias("min"), v.alias("max"),
+            v.alias("first"), v.alias("last")))
     k = F.struct(F.col("_t"), F.col("_o"))
     agg = u.groupBy(*series_cols).agg(
         F.sum("cnt").alias("cnt"),
@@ -787,6 +696,43 @@ def histogram_tier_up(
     )
 
 
+def _grid_quantiles(hist: DataFrame, keys: list[str], qs: list[float],
+                    lo: float, hi: float, n_bins: int,
+                    round_dp: int) -> DataFrame:
+    """(keys..., q, quantile) from a (keys..., bin, cnt) histogram: per
+    key group and q, the upper edge of the first bin whose cumulative
+    count reaches rank ceil(q * n), clamped to [lo, hi] for the overflow
+    bins.  One window cumsum + one aggregate on `keys`."""
+    from pyspark.sql.window import Window
+
+    width = (hi - lo) / n_bins
+    w = (
+        Window.partitionBy(*keys).orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = hist.select(
+        *keys, "bin", "cnt",
+        F.sum("cnt").over(w).alias("cum"),
+        F.sum("cnt").over(
+            Window.partitionBy(*keys).rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing)
+        ).alias("total"),
+    )
+    edge = F.greatest(
+        F.lit(float(lo)),
+        F.least(F.lit(float(hi)),
+                F.lit(float(lo)) + (F.col("bin") + 1) * F.lit(width)),
+    )
+    return (
+        cum.select(
+            *keys, "bin", "cum", "total",
+            F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q"))
+        .where(F.col("cum") >= F.ceil(F.col("q") * F.col("total")))
+        .groupBy(*keys, "q")
+        .agg(F.round(F.min(edge), round_dp).alias("quantile"))
+    )
+
+
 def histogram_quantiles(
     hist: DataFrame,
     qs: list[float],
@@ -803,39 +749,8 @@ def histogram_quantiles(
     grid resolution.  Pure grid arithmetic on longs + literal doubles,
     identical in any engine; one window cumsum + one aggregate, both on
     the (series, bucket) key the tier is already grouped by."""
-    from pyspark.sql.window import Window
-
-    width = (hi - lo) / n_bins
-    keys = [*series_cols, "bucket_ts"]
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = hist.select(
-        *keys, "bin", "cnt",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(
-            Window.partitionBy(*keys).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("total"),
-    )
-    q_lit = F.explode(
-        F.array(*[F.lit(float(q)) for q in qs])
-    ).alias("q")
-    edge = F.greatest(
-        F.lit(float(lo)),
-        F.least(
-            F.lit(float(hi)),
-            F.lit(float(lo)) + (F.col("bin") + 1) * F.lit(width),
-        ),
-    )
-    return (
-        cum.select(*keys, "bin", "cum", "total", q_lit)
-        .where(F.col("cum") >= F.ceil(F.col("q") * F.col("total")))
-        .groupBy(*keys, "q")
-        .agg(F.round(F.min(edge), round_dp).alias("quantile"))
-    )
+    return _grid_quantiles(hist, [*series_cols, "bucket_ts"], qs, lo, hi,
+                           n_bins, round_dp)
 
 
 # ---------------------------------------------------------------------------
@@ -928,60 +843,21 @@ def serve_range_histogram(
     `tiers` maps tier name -> histogram frame in the histogram_rollup
     schema (series cols + bucket_ts, bin, cnt); None builds all three
     from (pre-filtered) raw — the oracle-checkable fallback."""
-    import datetime as _dt
-
-    def _us(x):
-        if isinstance(x, _dt.datetime):
-            if x.tzinfo is None:
-                x = x.replace(tzinfo=_dt.timezone.utc)
-            return int(x.timestamp() * 1_000_000)
-        return int(x)
-
-    t0_us, t1_us = _us(t0), _us(t1)
-    if tiers is None:
-        ts_us_src = F.unix_micros(F.col(ts_col).cast("timestamp"))
-        points = points.where(
-            (ts_us_src >= F.lit(t0_us)) & (ts_us_src < F.lit(t1_us)))
-        m1 = histogram_rollup(points, "1m", lo, hi, n_bins,
+    def build(pts):
+        m1 = histogram_rollup(pts, "1m", lo, hi, n_bins,
                               series_cols=series_cols, ts_col=ts_col,
                               val_col=val_col)
         h1 = histogram_tier_up(m1, "1h", series_cols=series_cols)
-        d1 = histogram_tier_up(h1, "1d", series_cols=series_cols)
-        tiers = {"1m": m1, "1h": h1, "1d": d1}
-    unknown = set(tiers) - set(TIER_SECONDS)
-    if unknown:
-        raise ValueError(
-            f"serve_range_histogram: unknown tier names {unknown}")
-    by_us = {TIER_SECONDS[name] * 1_000_000: name for name in tiers}
-    segs = decompose_range(t0_us, t1_us, sorted(by_us, reverse=True))
-
-    def _pred(col, ranges):
-        p = F.lit(False)
-        for lo_us, hi_us in ranges:
-            p = p | ((col >= F.lit(lo_us)) & (col < F.lit(hi_us)))
-        return p
+        return {"1m": m1, "1h": h1,
+                "1d": histogram_tier_up(h1, "1d", series_cols=series_cols)}
 
     scols = [F.col(c) for c in series_cols]
-    parts = []
-    for t_us, ranges in segs.items():
-        if t_us == "raw" or not ranges:
-            continue
-        df = tiers[by_us[t_us]]
-        b_us = F.unix_micros(F.col("bucket_ts"))
-        parts.append(
-            df.where(_pred(b_us, ranges)).select(*scols, "bin", "cnt"))
-    if segs["raw"]:
-        ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-        parts.append(
-            points.where(_pred(ts_us, segs["raw"]))
-            .select(*scols, _hist_bin(val_col, lo, hi, n_bins).alias("bin"),
-                    F.lit(1).cast("long").alias("cnt")))
-    if not parts:
-        raise ValueError("serve_range_histogram: no tier covers the "
-                         "interval and no raw segments were produced")
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
+    u = _stitch_range(
+        "serve_range_histogram", points, t0, t1, tiers, build, ts_col,
+        tier_rows=lambda df, b_us: df.select(*scols, "bin", "cnt"),
+        raw_rows=lambda df, ts_us: df.select(
+            *scols, _hist_bin(val_col, lo, hi, n_bins).alias("bin"),
+            F.lit(1).cast("long").alias("cnt")))
     return u.groupBy(*series_cols, "bin").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -1004,35 +880,8 @@ def serve_range_quantiles(
     composition of the mergeable quantile tier (exact vs recomputing
     the histogram from raw; accuracy = grid resolution).  One range
     stitch + one window cumsum + one aggregate."""
-    from pyspark.sql.window import Window
-
     hist = serve_range_histogram(
         points, t0, t1, lo, hi, n_bins, tiers=tiers,
         series_cols=series_cols, ts_col=ts_col, val_col=val_col)
-    width = (hi - lo) / n_bins
-    keys = list(series_cols)
-    w = (
-        Window.partitionBy(*keys).orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = hist.select(
-        *keys, "bin", "cnt",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(
-            Window.partitionBy(*keys).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing)
-        ).alias("total"),
-    )
-    edge = F.greatest(
-        F.lit(float(lo)),
-        F.least(F.lit(float(hi)),
-                F.lit(float(lo)) + (F.col("bin") + 1) * F.lit(width)),
-    )
-    return (
-        cum.select(
-            *keys, "bin", "cum", "total",
-            F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q"))
-        .where(F.col("cum") >= F.ceil(F.col("q") * F.col("total")))
-        .groupBy(*keys, "q")
-        .agg(F.round(F.min(edge), round_dp).alias("quantile"))
-    )
+    return _grid_quantiles(hist, list(series_cols), qs, lo, hi, n_bins,
+                           round_dp)
