@@ -86,3 +86,28 @@ def test_gorilla_roundtrip_property(xs):
     v = np.array(xs, dtype=np.float64)
     dec = codecs.gorilla_decode(codecs.gorilla_encode(v))
     assert np.array_equal(dec.view(np.uint64), v.view(np.uint64))
+
+
+@settings(max_examples=200, deadline=None)
+@given(hst.lists(hst.lists(hst.integers(min_value=-2**40, max_value=2**40),
+                           max_size=20), max_size=8))
+def test_segment_encoders_equal_per_array_encodes(segs):
+    """Many chunks in one pass (zero-length segments included) give
+    exactly the bytes of encoding each segment on its own, and each
+    segment decodes back to its values."""
+    seg_len = np.array([len(s) for s in segs], dtype=np.int64)
+    ts = np.array([x for s in segs for x in s], dtype=np.int64)
+    vals = ts.astype(np.float64) / 7
+    bounds = np.concatenate([[0], np.cumsum(seg_len)])
+    for encode, decode, seg_encode, x in (
+            (codecs.dod_encode, codecs.dod_decode,
+             codecs.dod_encode_segments, ts),
+            (codecs.gorilla_encode, codecs.gorilla_decode,
+             codecs.gorilla_encode_segments, vals)):
+        offsets, data = seg_encode(x, seg_len)
+        assert len(offsets) == len(segs) + 1
+        for i in range(len(segs)):
+            part = x[bounds[i]:bounds[i + 1]]
+            chunk = data[offsets[i]:offsets[i + 1]].tobytes()
+            assert chunk == encode(part)
+            assert np.array_equal(decode(chunk), part)

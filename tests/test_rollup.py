@@ -1,7 +1,10 @@
 """Rollup correctness: kernel vs relational vs duckdb oracle; tier-from-tier
-exactness; gap-fill; codec round-trip through Spark; pipeline resume."""
+exactness; gap-fill; chunk kernel bytes and codec round-trip through Spark;
+pipeline resume, lineage and retention."""
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
@@ -178,6 +181,47 @@ def test_chunks_roundtrip_token_equality(spark, input_df):
     assert sizes.vb < sizes.n * 8
 
 
+@pytest.mark.parametrize("use_positions", [False, True])
+@pytest.mark.parametrize("step_seconds", [1, 30])
+@pytest.mark.parametrize("chunk_points", [1, 512])
+def test_chunk_kernel_segments_in_one_batch(spark, use_positions,
+                                            step_seconds, chunk_points):
+    """One Arrow batch holding an empty tokens array, a one-point doc and
+    a doc longer than chunk_points: every chunk's bytes equal the codecs'
+    single-chunk encodes of that window, and decode round-trips."""
+    from ts2g2_spark.functions import codecs
+    from ts2g2_spark.plans.points import BASE_EPOCH
+
+    rng = np.random.default_rng(5)
+    long_toks = rng.integers(0, 50257, 700).tolist()
+    long_pos = np.sort(rng.choice(5000, 700, replace=False)).tolist()
+    docs = [("d0", [], []), ("d1", [42], [9]), ("d2", long_toks, long_pos)]
+    rows = [(d, f"s{i}", t, len(t), p if use_positions
+             else list(range(len(t)))) for i, (d, t, p) in enumerate(docs)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, source string, tokens array<int>, "
+              "n_tok int, positions array<int>").coalesce(1)
+    ch = chunks_mod.compress_chunks(
+        df, step_seconds=step_seconds, chunk_points=chunk_points,
+        positions_col="positions" if use_positions else None)
+    got = ch.toPandas()
+    for doc_id, source, toks, _, pos in rows:
+        g = got[got["doc_id"] == doc_id].sort_values("chunk_id")
+        ts = BASE_EPOCH + np.asarray(pos, np.int64) * step_seconds
+        starts = range(0, max(len(toks), 1), chunk_points)
+        assert list(g["chunk_id"]) == list(range(len(starts)))
+        for r, c in zip(g.itertuples(), starts):
+            t = np.asarray(toks[c:c + chunk_points], np.float64)
+            s = ts[c:c + chunk_points]
+            assert r.source == source and r.n == len(t)
+            assert r.chunk_ts.timestamp() == (s[0] if len(s) else BASE_EPOCH)
+            assert bytes(r.ts_dod) == codecs.dod_encode(s)
+            assert bytes(r.val_gorilla) == codecs.gorilla_encode(t)
+    dec = {r.doc_id: list(r.tokens)
+           for r in chunks_mod.decompress_chunks(ch).collect()}
+    assert dec == {d: t for d, _, t, _, _ in rows}
+
+
 def test_pipeline_resume(spark, input_df, tmp_path):
     root = str(tmp_path / "cat")
     p1 = RollupPipeline(spark, root, run_id="r1")
@@ -219,6 +263,71 @@ def test_retention(spark, input_df, tmp_path):
     assert 0 < n_after < n_before
     mins = kept["rollup_1m"].agg({"bucket_ts": "min"}).collect()[0][0]
     assert mins.timestamp() >= now - 99_880
+
+
+def _part_files(path):
+    return {os.path.relpath(os.path.join(d, f), path):
+            os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _, fs in os.walk(path) for f in fs
+            if f.startswith("part-")}
+
+
+def test_lineage_rows_from_written_files(spark, input_df, tmp_path):
+    p = RollupPipeline(spark, str(tmp_path / "cat"), run_id="r1")
+    out = p.run(input_df, "x")
+    lin = out["lineage"].toPandas()
+    for st in p.stage_log:
+        table = st["stage"]
+        rows = lin[lin["stage"] == table]
+        assert rows["rows"].sum() == out[table].count() == st["rows"]
+        pids = {int(f.split("-")[1])
+                for f in _part_files(p.cat.table_path(table))}
+        assert set(rows["partition_id"]) == pids
+        assert st["partition_skew"] >= 1.0
+
+
+def test_lineage_not_duplicated_on_stage_retry(spark, input_df, tmp_path,
+                                               monkeypatch):
+    """A crash after the lineage write but before the commit, retried
+    under the same run_id, leaves one lineage row set for that stage."""
+    root = str(tmp_path / "cat")
+    p1 = RollupPipeline(spark, root, run_id="r1")
+    commit = p1.cat.commit
+
+    def crash_on_1h(stage, *a, **k):
+        if stage == "rollup_1h":
+            raise RuntimeError("injected crash")
+        return commit(stage, *a, **k)
+
+    monkeypatch.setattr(p1.cat, "commit", crash_on_1h)
+    with pytest.raises(RuntimeError, match="injected"):
+        p1.run(input_df, "x")
+    p2 = RollupPipeline(spark, root, run_id="r1")
+    out = p2.run(input_df, "x")
+    assert [s["skipped"] for s in p2.stage_log] == [True, False, False,
+                                                    False]
+    lin = out["lineage"].toPandas()
+    for stage in ("rollup_1m", "rollup_1h"):
+        rows = lin[lin["stage"] == stage]
+        assert rows["partition_id"].is_unique
+        assert rows["rows"].sum() == out[stage].count()
+
+
+def test_retention_leaves_unexpired_tiers_untouched(spark, input_df,
+                                                    tmp_path):
+    p = RollupPipeline(spark, str(tmp_path / "cat"), run_id="r1")
+    p.run(input_df, "x")
+    now = 1704067200 + 100_000
+    horizons = {"1m": 99_880, "1h": 10**9, "1d": 10**9}
+    before = {t: _part_files(p.cat.table_path(f"rollup_{t}"))
+              for t in horizons}
+    n_1h = p.cat.read("rollup_1h").count()
+    kept = p.retention(now, horizons=horizons)
+    after = {t: _part_files(p.cat.table_path(f"rollup_{t}"))
+             for t in horizons}
+    assert after["1h"] == before["1h"] and after["1d"] == before["1d"]
+    assert after["1m"] != before["1m"]  # the 1m tier expired rows
+    assert kept["rollup_1h"].count() == n_1h
 
 
 def test_gapfill_linear_interpolates_endpoints(spark):

@@ -3,11 +3,17 @@
 In-sandbox everything is Parquet on the local FS.  The seam is written
 against "last committed snapshot" semantics so that swapping in an Iceberg
 catalog (org.apache.iceberg.spark.SparkCatalog; jar absent here — SURVEY §0)
-only changes `_write`/`_read` and commit becomes the Iceberg snapshot
-itself.  Here, commit = write to a temp dir + atomic manifest rename; a
-stage is committed iff its manifest file exists and matches the input
-fingerprint, which gives idempotent resume (north rule: resumable from the
-last committed checkpoint).
+only changes `write`/`read` and commit becomes the Iceberg snapshot
+itself.  Here, `write` overwrites the table directory in place (Spark's
+overwrite mode) and `commit` then writes the stage's manifest under a
+temporary name and renames it atomically; a stage is committed iff its
+manifest file exists and matches the input fingerprint, which gives
+idempotent resume (north rule: resumable from the last committed
+checkpoint).  The table write itself is not atomic: a crash while a
+committed table is rewritten (a forced re-run, a retention rewrite) leaves
+a torn table behind a manifest that still validates.  Versioned table
+directories, with the manifest naming the committed version, are open
+work (ROADMAP item 4).
 """
 
 from __future__ import annotations

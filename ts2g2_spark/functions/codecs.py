@@ -82,23 +82,59 @@ def _unpack_bytes(payload: np.ndarray, nbytes: np.ndarray) -> np.ndarray:
     ), starts  # starts returned for testability
 
 
+def _frame(seg_len: np.ndarray, controls: np.ndarray, nbytes: np.ndarray,
+           payload: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Lay out many chunks back to back, each as [n][controls][payload].
+
+    `controls`/`nbytes` hold one entry per value and `payload` the packed
+    bytes of all values, in value order; segment i owns the next
+    `seg_len[i]` values.  Returns (offsets, data): chunk i is
+    data[offsets[i]:offsets[i + 1]]."""
+    seg_len = np.asarray(seg_len, dtype=np.int64)
+    el_start = np.cumsum(seg_len) - seg_len
+    pay_cum = np.zeros(len(nbytes) + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=pay_cum[1:])
+    pay_start = pay_cum[el_start]
+    size = 4 + seg_len + pay_cum[el_start + seg_len] - pay_start
+    offsets = np.zeros(len(seg_len) + 1, dtype=np.int64)
+    np.cumsum(size, out=offsets[1:])
+    data = np.empty(offsets[-1], dtype=np.uint8)
+    hdr = offsets[:-1, None] + np.arange(4)
+    data[hdr.ravel()] = seg_len.astype("<u4").view(np.uint8)
+    seg = np.repeat(np.arange(len(seg_len)), seg_len)  # segment of each value
+    ctrl_at = offsets[:-1] + 4 - el_start
+    data[np.arange(len(controls)) + ctrl_at[seg]] = controls
+    pay_at = offsets[:-1] + 4 + seg_len - pay_start
+    data[np.arange(len(payload)) + np.repeat(pay_at[seg], nbytes)] = payload
+    return offsets, data
+
+
+def _seg_index(n: int, seg_len: np.ndarray) -> np.ndarray:
+    """Index of each of n values within its segment."""
+    seg_len = np.asarray(seg_len, dtype=np.int64)
+    return np.arange(n) - np.repeat(np.cumsum(seg_len) - seg_len, seg_len)
+
+
+def dod_encode_segments(ts: np.ndarray, seg_len: np.ndarray,
+                        ) -> tuple[np.ndarray, np.ndarray]:
+    """Delta-of-delta encode consecutive segments of `ts` as separate
+    chunks in one numpy pass; returns (offsets, data) as `_frame`."""
+    ts = np.asarray(ts, dtype=np.int64)
+    k = _seg_index(len(ts), seg_len)
+    d = np.zeros_like(ts)
+    d[1:] = ts[1:] - ts[:-1]
+    dod = np.zeros_like(ts)
+    dod[1:] = d[1:] - d[:-1]
+    # first value raw, second its delta, the rest delta-of-delta
+    stream = _zigzag(np.where(k == 0, ts, np.where(k == 1, d, dod)))
+    nb = _sig_bytes(stream)
+    return _frame(seg_len, nb, nb, _pack_bytes(stream, nb))
+
+
 def dod_encode(ts: np.ndarray) -> bytes:
     """Delta-of-delta encode int64 values (timestamps in any fixed unit)."""
     ts = np.asarray(ts, dtype=np.int64)
-    n = len(ts)
-    header = np.array([n], dtype=np.uint32).tobytes()
-    if n == 0:
-        return header
-    if n == 1:
-        stream = _zigzag(ts)
-    else:
-        d = np.diff(ts)
-        dod = np.diff(d) if n > 2 else np.empty(0, dtype=np.int64)
-        stream = np.concatenate([
-            _zigzag(ts[:1]), _zigzag(d[:1]), _zigzag(dod)])
-    nb = _sig_bytes(stream)
-    payload = _pack_bytes(stream, nb)
-    return header + nb.tobytes() + payload.tobytes()
+    return dod_encode_segments(ts, [len(ts)])[1].tobytes()
 
 
 def dod_decode(buf: bytes) -> np.ndarray:
@@ -122,17 +158,18 @@ def dod_decode(buf: bytes) -> np.ndarray:
     return out
 
 
-def gorilla_encode(values: np.ndarray) -> bytes:
-    """XOR-with-predecessor encode float64 values (Gorilla §4.1.2 scheme,
-    stream-split byte-aligned — see module docstring)."""
-    v = np.asarray(values, dtype=np.float64)
-    n = len(v)
-    header = np.array([n], dtype=np.uint32).tobytes()
-    if n == 0:
-        return header
-    bits = v.view(np.uint64)
+def gorilla_encode_segments(values: np.ndarray, seg_len: np.ndarray,
+                            ) -> tuple[np.ndarray, np.ndarray]:
+    """XOR-with-predecessor encode consecutive segments of float64 values
+    as separate chunks in one numpy pass (Gorilla §4.1.2 scheme,
+    stream-split byte-aligned -- see module docstring); returns
+    (offsets, data) as `_frame`."""
+    bits = np.asarray(values, dtype=np.float64).view(np.uint64)
+    n = len(bits)
     xor = bits.copy()
     xor[1:] = bits[1:] ^ bits[:-1]
+    first = _seg_index(n, seg_len) == 0
+    xor[first] = bits[first]
     # offset = lowest significant byte index (trailing-zero bytes dropped)
     lo = np.zeros(n, dtype=np.uint8)
     hi = np.zeros(n, dtype=np.uint8)  # significant byte count from offset
@@ -152,8 +189,13 @@ def gorilla_encode(values: np.ndarray) -> bytes:
         hi[nz] = sig
     controls = ((lo << 4) | hi).astype(np.uint8)
     shifted_all = xor >> (np.uint64(8) * lo.astype(np.uint64))
-    payload = _pack_bytes(shifted_all, hi)
-    return header + controls.tobytes() + payload.tobytes()
+    return _frame(seg_len, controls, hi, _pack_bytes(shifted_all, hi))
+
+
+def gorilla_encode(values: np.ndarray) -> bytes:
+    """XOR-with-predecessor encode float64 values as one chunk."""
+    v = np.asarray(values, dtype=np.float64)
+    return gorilla_encode_segments(v, [len(v)])[1].tobytes()
 
 
 def gorilla_decode(buf: bytes) -> np.ndarray:

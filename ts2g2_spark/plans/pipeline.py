@@ -5,16 +5,23 @@ the checkpoint granularity of the north rule):
 
   input (tokenized_sequences)
     -> salted repartition                 [explicit skew handling]
-    -> rollup_1m  (map-only array kernel, gap-filled)
+    -> rollup_1m  (map-only Arrow kernel, gap-filled)
     -> rollup_1h  (tier-from-tier continuous aggregate)
     -> rollup_1d  (tier-from-tier)
-    -> chunks     (delta-of-delta + Gorilla, map-only)
-    -> retention  (partition-predicate drop per tier)
-  every stage appends per-partition lineage rows.
+    -> chunks     (delta-of-delta + Gorilla, map-only Arrow kernel)
+    -> retention  (per-tier horizon filter; tiers with nothing to expire
+                   are left untouched)
+
+Each stage is one Spark write.  Its lineage rows (rows per writing task)
+come from the parquet footers of the files it wrote and are written by
+the pipeline process as one small file per (run_id, stage) -- no second
+Spark job; its `stage_log` entry carries the row total and the partition
+skew (max/median of those counts).
 
 Resume: a stage whose manifest matches the input fingerprint is skipped and
 its table is read back instead of recomputed; re-running a killed job
-produces identical tables with no duplicates (overwrite + atomic manifest).
+produces identical tables with no duplicates (overwrite + atomic manifest;
+a stage re-run under the same run_id replaces its lineage file).
 """
 
 from __future__ import annotations
@@ -28,7 +35,8 @@ from pyspark.sql import functions as F
 from ts2g2_spark.catalog import Catalog
 from ts2g2_spark.plans import chunks as chunks_mod
 from ts2g2_spark.plans import rollup as rollup_mod
-from ts2g2_spark.plans.lineage import partition_metrics
+from ts2g2_spark.plans.lineage import (
+    partition_metrics, partition_skew, write_lineage)
 from ts2g2_spark.plans.points import salted_repartition
 
 
@@ -62,14 +70,16 @@ class StagedPipeline:
         df = build()
         self.cat.write(df, stage, partition_by=partition_by)
         wall_ms = (time.time() - t0) * 1000
-        out = self.cat.read(stage)
-        lin = partition_metrics(out, self.run_id, stage, fingerprint, wall_ms)
-        lin.write.mode("append").parquet(self.cat.table_path("lineage"))
+        lin = partition_metrics(self.cat.table_path(stage), self.run_id,
+                                stage, fingerprint, wall_ms)
+        write_lineage(self.cat.table_path("lineage"), self.run_id, stage, lin)
         self.cat.commit(stage, fingerprint,
                         {"wall_ms": wall_ms, "run_id": self.run_id})
+        rows = lin.column("rows").to_numpy()
         self.stage_log.append(
-            {"stage": stage, "skipped": False, "wall_ms": wall_ms})
-        return out
+            {"stage": stage, "skipped": False, "wall_ms": wall_ms,
+             "rows": int(rows.sum()), "partition_skew": partition_skew(rows)})
+        return self.cat.read(stage)
 
 
 class RollupPipeline(StagedPipeline):
@@ -125,13 +135,23 @@ class RollupPipeline(StagedPipeline):
                   horizons: dict[str, int] = rollup_mod.DEFAULT_RETENTION,
                   ) -> dict[str, DataFrame]:
         """Apply tier-scoped retention, rewriting each tier table filtered
-        by its horizon (with Iceberg: a partition-predicate DELETE)."""
+        by its horizon (with Iceberg: a partition-predicate DELETE).  One
+        aggregate per tier decides first: a tier whose oldest bucket is
+        inside the horizon and has no null bucket_ts (the rows the filter
+        would drop) is left untouched."""
         out = {}
         for tier in ("1m", "1h", "1d"):
             name = f"rollup_{tier}"
             df = self.cat.read(name)
-            kept = rollup_mod.apply_retention(df, tier, now_epoch, horizons)
-            # the checkpoint cuts the read of the table being overwritten
-            self.cat.write(kept.localCheckpoint(), name)
-            out[name] = self.cat.read(name)
+            oldest, nulls = df.agg(
+                F.min(F.unix_timestamp("bucket_ts")),
+                F.count(F.lit(1)) - F.count("bucket_ts")).first()
+            cutoff = now_epoch - horizons[tier]
+            if nulls or (oldest is not None and oldest < cutoff):
+                kept = rollup_mod.apply_retention(
+                    df, tier, now_epoch, horizons)
+                # the checkpoint cuts the read of the table being overwritten
+                self.cat.write(kept.localCheckpoint(), name)
+                df = self.cat.read(name)
+            out[name] = df
         return out
