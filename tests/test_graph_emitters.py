@@ -1,0 +1,262 @@
+"""Pins for the Arrow edge emitters in operators/graphs.py that need no
+reference checkout.
+
+(a) Every Spark emitter's rows equal the same numpy kernel run per series
+    in-process, on a frame with an empty series, 1- and 2-point series,
+    flat runs, ties, a null `values` row, and more rows than
+    maxRecordsPerBatch, so one task sees several Arrow batches.
+(b) Hypothesis properties at n <= 40: the HVG/NVG kernels against O(n^3)
+    brute force written from the published predicates (strict >, `limit`
+    skips the first intermediates), and the OPG/QG kernels against brute
+    force from their definitions.
+"""
+
+from __future__ import annotations
+
+import math
+from collections import Counter
+
+import numpy as np
+import pyarrow as pa
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as hst
+from pyspark.sql import functions as F
+
+from ts2g2_spark.operators import graphs, kernels
+
+BATCH_ROWS = 7
+
+SERIES = [
+    ("empty", []),
+    ("one", [3.0]),
+    ("two", [2.0, 1.0]),
+    ("flat", [4.0] * 9),
+    ("ties", [1.0, 2.0, 2.0, 1.0, 2.0, 2.0, 0.0, 2.0]),
+    ("runs", [1.0, 1.0, 1.0, 5.0, 5.0, 0.0, 0.0, 0.0, 5.0, 1.0]),
+    ("null", None),
+    ("inc", [1.0, 2.0, 3.0, 4.0, 5.0, 6.0]),
+]
+_rng = np.random.default_rng(5)
+SERIES += [(f"r{i}", np.round(_rng.normal(size=int(n)), 1).tolist())
+           for i, n in enumerate(_rng.integers(0, 30, size=30))]
+
+
+@pytest.fixture(scope="module")
+def frame(spark):
+    """The series frame in one partition, read in BATCH_ROWS-row Arrow
+    batches while the module runs."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(BATCH_ROWS))
+    try:
+        yield spark.createDataFrame(
+            SERIES, "series_key string, values array<double>").coalesce(1)
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_frame_spans_several_arrow_batches(frame):
+    sizes = frame.mapInArrow(
+        lambda it: (pa.RecordBatch.from_pydict({"n": [b.num_rows]})
+                    for b in it), "n long").collect()
+    assert len(sizes) > 1 and max(r.n for r in sizes) <= BATCH_ROWS
+    assert sum(r.n for r in sizes) == len(SERIES)
+
+
+def _weight(w: float):
+    return None if math.isnan(w) else w
+
+
+def _expected_edges(kernel) -> Counter:
+    """Rows the emitter must produce: kernel(y) per non-null series."""
+    rows = Counter()
+    for key, vals in SERIES:
+        if vals is None:
+            continue
+        out = kernel(np.asarray(vals, np.float64))
+        if len(out) == 2:  # (edges[m, 2], weights[m])
+            rows.update((key, s, d, _weight(x))
+                        for (s, d), x in zip(out[0].tolist(),
+                                             out[1].tolist()))
+        else:  # (src_patterns, dst_patterns, weights)
+            rows.update(
+                (key, ",".join(map(str, s)), ",".join(map(str, d)),
+                 _weight(x))
+                for s, d, x in zip(*(a.tolist() for a in out)))
+    return rows
+
+
+def _got(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("kind", ["natural", "horizontal"])
+@pytest.mark.parametrize("limit,angle,weighted", [
+    (0, None, False), (2, None, False), (0, 0.4, False), (0, None, True),
+    (1, 0.4, True),
+])
+def test_visibility_emitter_matches_kernel(frame, kind, limit, angle,
+                                           weighted):
+    df = graphs.visibility_edges(frame, kind=kind, limit=limit, angle=angle,
+                                 weighted=weighted)
+    got = _got(df)
+    assert got == _expected_edges(lambda y: kernels.visibility_graph(
+        y, kind=kind, limit=limit, angle=angle, weighted=weighted))
+    assert "null" not in {k for k, *_ in got}
+    if not weighted:  # unweighted edges carry a null weight, not NaN
+        assert all(r[3] is None for r in got)
+    if weighted and angle is not None:  # path edges the angle rejected
+        assert any(r[3] is None for r in got)
+
+
+@pytest.mark.parametrize("w,tau,use_q", [(3, 1, False), (2, 2, False),
+                                         (4, 1, True)])
+def test_opg_emitter_matches_kernel(frame, w, tau, use_q):
+    got = _got(graphs.opg_edges(frame, w, tau, use_quantiles=use_q, Q=3))
+    assert got == _expected_edges(lambda y: kernels.opg_edges(
+        kernels.ordinal_patterns(y, w, tau, use_quantiles=use_q, Q=3)))
+    assert len(got) > 0
+
+
+@pytest.mark.parametrize("Q,phi", [(4, 1), (3, 2)])
+def test_qg_emitter_matches_kernel(frame, Q, phi):
+    got = _got(graphs.qg_edges(frame, Q, phi))
+    assert got == _expected_edges(lambda y: kernels.qg_edges(y, Q, phi))
+    assert len(got) > 0
+
+
+def test_proximity_emitter_matches_kernel(frame):
+    got = _got(graphs.proximity_edges(
+        frame, method="recurrence", recurrence_type="epsilon", epsilon=0.5))
+    assert got == _expected_edges(
+        lambda y: kernels.proximity_epsilon_edges(y, 0.5))
+
+
+def test_multivariate_opg_emitter_matches_kernel(frame):
+    mv = frame.select("series_key", F.when(
+        F.col("values").isNotNull(),
+        F.array("values", F.expr("transform(values, x -> -x * x)")),
+    ).alias("variables"))
+    got = _got(graphs.opg_edges_multivariate(mv, 3, 1))
+    want = Counter()
+    for key, vals in SERIES:
+        if vals is None:
+            continue
+        y = np.asarray(vals, np.float64)
+        s, d, w = kernels.opg_edges(
+            kernels.multivariate_ordinal_patterns([y, -y * y], 3, 1))
+        want.update((key, ",".join(map(str, a)), ",".join(map(str, b)), x)
+                    for a, b, x in zip(s.tolist(), d.tolist(), w.tolist()))
+    assert got == want and len(got) > 0
+
+
+def test_histogram_emitter_matches_numpy(frame):
+    got = {r.series_key: (r.bin_edges, r.freqs)
+           for r in graphs.histogram(frame, 4).collect()}
+    want = {}
+    for key, vals in SERIES:
+        if vals is not None:
+            f, b = np.histogram(np.asarray(vals, np.float64), 4)
+            want[key] = (b.tolist(), f.tolist())
+    assert got == want
+
+
+# ------------------------------------------------------ (b) brute force
+def _brute_visibility(y, kind, limit=0, angle=None, weighted=False):
+    """Path edges always; pair (i, j), j >= i + 2, visible iff no
+    intermediate k in [i + limit + 1, j) obstructs it (strict >): HVG
+    y_k > max(y_i, y_j), NVG y_k above the i-j line.  The angle
+    constraint drops scanned pairs (adjacent or visible) with
+    |atan(slope)| < |angle|; weight = |atan(slope)| of a kept pair, None
+    for an unweighted or dropped path edge."""
+    n = len(y)
+    out = {}
+    for i in range(n):
+        for j in range(i + 1, n):
+            slope = (y[j] - y[i]) / (j - i)
+            offset = y[j] - slope * j
+            obstructed = any(
+                (y[k] > max(y[i], y[j])) if kind == "horizontal"
+                else (y[k] > slope * k + offset)
+                for k in range(i + limit + 1, j))
+            if obstructed:
+                continue
+            ang = abs(math.atan(slope))
+            keep = angle is None or not ang < abs(angle)
+            if keep:
+                out[(i, j)] = ang if weighted else None
+            elif j == i + 1:
+                out[(i, j)] = None
+    return out
+
+
+def _brute_opg(y, w, tau):
+    """Stable rank pattern of every window y[i : i + w*tau : tau];
+    weight = transition count / number of patterns."""
+    pats = []
+    for i in range(len(y) - w * tau + 1):
+        win = [y[i + k * tau] for k in range(w)]
+        order = sorted(range(w), key=lambda k: win[k])
+        ranks = [0] * w
+        for r, k in enumerate(order):
+            ranks[k] = r
+        pats.append(tuple(ranks))
+    if len(pats) < 2:
+        return {}
+    counts = Counter(zip(pats[:-1], pats[1:]))
+    return {k: c / float(len(pats)) for k, c in counts.items()}
+
+
+def _brute_qg(y, Q, phi):
+    """Bin of y_t = #(quantile edges < y_t) - 1, the first edge lowered by
+    1e-9; weight = transition count / transitions out of the same bin."""
+    if len(y) <= phi:
+        return {}
+    edges = np.quantile(np.asarray(y, np.float64), np.linspace(0, 1, Q + 1))
+    edges[0] -= 1e-9
+    q = [sum(1 for b in edges if b < v) - 1 for v in y]
+    counts = Counter(zip(q[:-phi], q[phi:]))
+    out_of = Counter()
+    for (s, _), c in counts.items():
+        out_of[s] += c
+    return {k: c / float(out_of[k[0]]) for k, c in counts.items()}
+
+
+values = hst.lists(
+    hst.one_of(hst.integers(-4, 4).map(float),
+               hst.floats(-50, 50, allow_nan=False, width=32)),
+    max_size=40)
+
+
+@settings(max_examples=150, deadline=None)
+@given(y=values, limit=hst.integers(0, 3),
+       angle=hst.sampled_from([None, 0.0, 0.5, -1.2]),
+       kind=hst.sampled_from(["natural", "horizontal"]))
+def test_visibility_kernel_matches_brute_force(y, limit, angle, kind):
+    e, w = kernels.visibility_graph(np.asarray(y, np.float64), kind=kind,
+                                    limit=limit, angle=angle, weighted=True)
+    got = {tuple(p): _weight(x) for p, x in zip(e.tolist(), w.tolist())}
+    want = _brute_visibility(y, kind, limit, angle, weighted=True)
+    assert got.keys() == want.keys()
+    for p, x in want.items():
+        # np.arctan and math.atan may differ in the last bits
+        assert got[p] == (None if x is None else pytest.approx(x, rel=1e-15))
+
+
+@settings(max_examples=150, deadline=None)
+@given(y=values, w=hst.integers(2, 4), tau=hst.integers(1, 3))
+def test_opg_kernel_matches_brute_force(y, w, tau):
+    s, d, wt = kernels.opg_edges(
+        kernels.ordinal_patterns(np.asarray(y, np.float64), w, tau))
+    got = {(tuple(a), tuple(b)): x
+           for a, b, x in zip(s.tolist(), d.tolist(), wt.tolist())}
+    assert got == _brute_opg(y, w, tau)
+
+
+@settings(max_examples=150, deadline=None)
+@given(y=values, Q=hst.integers(2, 5), phi=hst.integers(1, 3))
+def test_qg_kernel_matches_brute_force(y, Q, phi):
+    e, wt = kernels.qg_edges(np.asarray(y, np.float64), Q, phi)
+    got = {tuple(p): x for p, x in zip(e.tolist(), wt.tolist())}
+    assert got == _brute_qg(y, Q, phi)

@@ -2,23 +2,26 @@
 
 Data contract — the "series frame": (series_key string, values
 array<double>).  A series is row-local (one row = one whole series or one
-segment), so every kernel below is a mapInPandas over Arrow batches with
-ZERO shuffle: edges come out as rows keyed by series_key.  Adjacency is
-data, never a driver-side object (SURVEY §1.2).
+segment), so every kernel below is one `mapInArrow` over Arrow batches with
+ZERO shuffle, sharing one emitter (`_map_series`): it reads a batch's
+`values` lengths and flat float64 buffer once, runs the numpy kernel from
+`kernels` once per series on a slice of that buffer, and builds the output
+batch column-wise (series_key gathered with `take`, numeric columns with
+`pa.array`) — no pandas and no per-edge Python objects.  Edges come out as
+rows keyed by series_key; adjacency is data, never a driver-side object
+(SURVEY §1.2).  A null `values` row yields no output rows.
 
-Two physical strategies for OPG/QG:
-  * kernel (default): row-local numpy, map-only — the 100 TB path.
-  * relational: lead()-window + hash-aggregate over a row-per-point table —
-    used when points arrive as rows and for SQL-oracle cross-checks; the
-    shuffle carries one row per (series, bucket-pattern), partial-agg'd.
+OPG/QG run as these kernels.  `qg_edges_relational` (lead()-window +
+hash-aggregate over a row-per-point table) stays for inputs that arrive as
+rows and for the integer transition counts `generate.hash_walks` needs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -29,6 +32,105 @@ EDGE_SCHEMA = "series_key string, src long, dst long, weight double"
 PAT_EDGE_SCHEMA = (
     "series_key string, src_pattern string, dst_pattern string, weight double"
 )
+
+
+# ---------------------------------------------------------------- emitter
+def _slices(arr: pa.Array) -> list:
+    """Each row of a list<double> column as a float64 slice of one flat
+    buffer, None for a null row; a list<list<double>> row becomes a list of
+    such slices."""
+    lengths = arr.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    off = np.concatenate(([0], np.cumsum(lengths, dtype=np.int64))).tolist()
+    child = arr.flatten()  # skips the child ranges of null rows
+    if pa.types.is_list(child.type):
+        flat = _slices(child)
+    else:
+        flat = np.asarray(child.to_numpy(zero_copy_only=False), np.float64)
+    valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
+    return [flat[a:b] if ok else None
+            for a, b, ok in zip(off[:-1], off[1:], valid)]
+
+
+def _map_series(
+    df: DataFrame,
+    schema: str,
+    kernel: Callable,
+    build: Callable[[list], dict[str, pa.Array]],
+    col: str = "values",
+) -> DataFrame:
+    """The one emitter of this module: a map-only mapInArrow over `df`.
+
+    Per Arrow batch, kernel(y) runs once per non-null `col` row (a null row
+    yields nothing) and returns a tuple of arrays whose first axis is that
+    series' output rows; build(results) turns the batch's results into the
+    output columns after series_key, which is gathered from the input with
+    one `take`."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows, parts = [], []
+            for i, y in enumerate(_slices(batch.column(col))):
+                if y is not None:
+                    rows.append(i)
+                    parts.append(kernel(y))
+            if not parts:
+                continue
+            take = np.repeat(rows, [len(p[0]) for p in parts])
+            yield pa.RecordBatch.from_pydict({
+                "series_key": batch.column("series_key").take(take),
+                **build(parts),
+            })
+
+    return df.mapInArrow(run, schema=schema)
+
+
+def _edge_columns(parts: list) -> dict[str, pa.Array]:
+    """(edges[m, 2], weights[m]) per series -> src, dst, weight.  A NaN
+    weight becomes null (an unweighted edge)."""
+    e = np.concatenate([p[0] for p in parts]).reshape(-1, 2)
+    return {
+        "src": pa.array(e[:, 0], pa.int64()),
+        "dst": pa.array(e[:, 1], pa.int64()),
+        "weight": pa.array(np.concatenate([p[1] for p in parts]),
+                           pa.float64(), from_pandas=True),
+    }
+
+
+def _pattern_strings(mats: list[np.ndarray]) -> pa.Array:
+    """Comma-joined rank strings of the rows of `mats`, in order.  Each
+    distinct pattern is formatted once and gathered with `take`; rows of
+    different widths are padded with -1 (ranks are >= 0) for the grouping."""
+    starts = np.cumsum([0] + [len(m) for m in mats]).tolist()
+    pats = np.full((starts[-1], max(m.shape[1] for m in mats)), -1, np.int64)
+    for m, a in zip(mats, starts):
+        pats[a:a + len(m), :m.shape[1]] = m
+    if not len(pats):
+        return pa.array([], pa.string())
+    uniq, inv = np.unique(pats, axis=0, return_inverse=True)
+    text = pa.array([",".join(str(r) for r in row if r >= 0)
+                     for row in uniq.tolist()], pa.string())
+    return text.take(inv.reshape(-1))
+
+
+def _pattern_edge_columns(parts: list) -> dict[str, pa.Array]:
+    """(src_patterns[m, w], dst_patterns[m, w], weights[m]) per series ->
+    src_pattern, dst_pattern, weight."""
+    text = _pattern_strings([p[0] for p in parts] + [p[1] for p in parts])
+    m = len(text) // 2
+    return {
+        "src_pattern": text.slice(0, m),
+        "dst_pattern": text.slice(m),
+        "weight": pa.array(np.concatenate([p[2] for p in parts]),
+                           pa.float64(), from_pandas=True),
+    }
+
+
+def _list_rows(rows: np.ndarray, type_: pa.DataType) -> pa.Array:
+    """2-D array -> Arrow list column, one list per row."""
+    n, k = rows.shape
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(n + 1, dtype=np.int32) * k),
+        pa.array(rows.ravel(), type_))
 
 
 # ----------------------------------------------------------------- inputs
@@ -102,17 +204,19 @@ def histogram(df: DataFrame, bins: int) -> DataFrame:
     """np.histogram per series (ref core/model.py:225-233), exact."""
     schema = "series_key string, bin_edges array<double>, freqs array<long>"
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                f, b = np.histogram(np.asarray(r.values, np.float64), bins)
-                rows.append({"series_key": r.series_key, "bin_edges": b,
-                             "freqs": f})
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        f, b = np.histogram(y, bins)
+        return b[None, :], f[None, :]
 
-    return df.mapInPandas(kern, schema=schema)
+    def build(parts: list) -> dict[str, pa.Array]:
+        return {
+            "bin_edges": _list_rows(
+                np.concatenate([p[0] for p in parts]), pa.float64()),
+            "freqs": _list_rows(
+                np.concatenate([p[1] for p in parts]), pa.int64()),
+        }
+
+    return _map_series(df, schema, kernel, build)
 
 
 # --------------------------------------------------- visibility (G1-G5)
@@ -129,57 +233,26 @@ def visibility_edges(
     Map-only; per-series cost O(n^2) worst-case vectorized (reference is
     O(n^3) Python: to_graph/strategies.py:527-540)."""
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, srcs, dsts, ws = [], [], [], []
-            for r in pdf.itertuples(index=False):
-                y = np.asarray(r.values, np.float64)
-                e, w = kernels.visibility_graph(
-                    y, kind=kind, limit=limit, angle=angle,
-                    angle_abs=angle_abs, weighted=weighted,
-                    weight_abs=weight_abs)
-                keys.append(np.repeat(r.series_key, len(e)))
-                srcs.append(e[:, 0] if len(e) else np.empty(0, np.int64))
-                dsts.append(e[:, 1] if len(e) else np.empty(0, np.int64))
-                ws.append(w)
-            if keys:
-                yield pd.DataFrame({
-                    "series_key": np.concatenate(keys),
-                    "src": np.concatenate(srcs),
-                    "dst": np.concatenate(dsts),
-                    "weight": np.concatenate(ws),
-                })
+    def kernel(y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        return kernels.visibility_graph(
+            y, kind=kind, limit=limit, angle=angle, angle_abs=angle_abs,
+            weighted=weighted, weight_abs=weight_abs)
 
-    return df.mapInPandas(kern, schema=EDGE_SCHEMA)
+    return _map_series(df, EDGE_SCHEMA, kernel, _edge_columns)
 
 
 # ------------------------------------------- ordinal partition (G6/G7)
-def _pat_str(arr: np.ndarray) -> list[str]:
-    return [",".join(map(str, row)) for row in arr.tolist()]
-
-
 def opg_edges(
     df: DataFrame, w: int, tau: int, use_quantiles: bool = False, Q: int = 4
 ) -> DataFrame:
     """Ordinal-partition transition edges per series (kernel path).
     Patterns serialized as comma-joined rank strings."""
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pats = kernels.ordinal_patterns(
-                    np.asarray(r.values, np.float64), w, tau,
-                    use_quantiles=use_quantiles, Q=Q)
-                s, d, wt = kernels.opg_edges(pats)
-                for ss, dd, ww in zip(_pat_str(s), _pat_str(d), wt.tolist()):
-                    rows.append({"series_key": r.series_key,
-                                 "src_pattern": ss, "dst_pattern": dd,
-                                 "weight": ww})
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(y: np.ndarray) -> tuple[np.ndarray, ...]:
+        return kernels.opg_edges(kernels.ordinal_patterns(
+            y, w, tau, use_quantiles=use_quantiles, Q=Q))
 
-    return df.mapInPandas(kern, schema=PAT_EDGE_SCHEMA)
+    return _map_series(df, PAT_EDGE_SCHEMA, kernel, _pattern_edge_columns)
 
 
 def opg_edges_multivariate(df: DataFrame, w: int, tau: int) -> DataFrame:
@@ -189,102 +262,22 @@ def opg_edges_multivariate(df: DataFrame, w: int, tau: int) -> DataFrame:
     frame: (series_key, variables array<array<double>>) — all variables of
     one multivariate series row-local, so the kernel stays map-only."""
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                series = [np.asarray(v, np.float64) for v in r.variables]
-                pats = kernels.multivariate_ordinal_patterns(series, w, tau)
-                s, d, wt = kernels.opg_edges(pats)
-                for ss, dd, ww in zip(_pat_str(s), _pat_str(d), wt.tolist()):
-                    rows.append({"series_key": r.series_key,
-                                 "src_pattern": ss, "dst_pattern": dd,
-                                 "weight": ww})
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(series: list[np.ndarray]) -> tuple[np.ndarray, ...]:
+        return kernels.opg_edges(
+            kernels.multivariate_ordinal_patterns(series, w, tau))
 
-    return df.mapInPandas(kern, schema=PAT_EDGE_SCHEMA)
-
-
-def opg_edges_relational(
-    points: DataFrame,
-    key_col: str,
-    w: int,
-    tau: int,
-    ts_col: str = "ts",
-    val_col: str = "value",
-    order_col: str | None = None,
-) -> DataFrame:
-    """Catalyst-native OPG over a row-per-point table: lead() windows build
-    the embedding vector, a vectorized pandas_udf ranks it (stable argsort,
-    ref to_graph/strategies.py:64-70), then transitions are a partial+final
-    hash aggregate and the weight denominator a broadcast-joined per-series
-    count.  Shuffle: one exchange on key_col (window), one on
-    (key, src, dst) (agg) — both partial-agg friendly."""
-    @F.pandas_udf("string")
-    def rank_pattern(v: pd.Series) -> pd.Series:
-        out = []
-        for arr in v:
-            if arr is None or any(x is None for x in arr):
-                out.append(None)
-                continue
-            a = np.asarray(arr, np.float64)
-            order = np.argsort(a, kind="stable")
-            ranks = np.empty(len(a), dtype=np.int64)
-            ranks[order] = np.arange(len(a))
-            out.append(",".join(map(str, ranks.tolist())))
-        return pd.Series(out)
-
-    okeys2 = [F.col(ts_col)] + ([F.col(order_col)] if order_col else [])
-    kwin = Window.partitionBy(key_col).orderBy(*okeys2)
-    # reference off-by-one (to_graph/strategies.py:54): the embedding loop
-    # is range(n - w*tau + 1), which DROPS the last tau-1 windows that a
-    # stride-tau slice could still fill — enforce pos <= n - w*tau + 1.
-    ordered = points.select(
-        F.col(key_col).cast("string").alias("series_key"),
-        F.row_number().over(kwin).alias("pos"),
-        F.count(F.lit(1)).over(Window.partitionBy(key_col)).alias("n"),
-        F.array(*[F.lead(val_col, i * tau).over(kwin)
-                  for i in range(w)]).alias("vec"),
-    ).where(
-        (~F.exists("vec", lambda x: x.isNull()))
-        & (F.col("pos") <= F.col("n") - w * tau + 1)
-    ).select("series_key", "pos", rank_pattern("vec").alias("pattern"))
-    nxt = F.lead("pattern").over(
-        Window.partitionBy("series_key").orderBy("pos"))
-    trans = ordered.select("series_key", F.col("pattern").alias("src_pattern"),
-                           nxt.alias("dst_pattern"))
-    npat = ordered.groupBy("series_key").agg(
-        F.count(F.lit(1)).alias("n_patterns"))
-    return (
-        trans.where(F.col("dst_pattern").isNotNull())
-        .groupBy("series_key", "src_pattern", "dst_pattern")
-        .count()
-        .join(F.broadcast(npat), "series_key")
-        .select(
-            "series_key", "src_pattern", "dst_pattern",
-            (F.col("count") / F.col("n_patterns")).alias("weight"),
-        )
-    )
+    return _map_series(df, PAT_EDGE_SCHEMA, kernel, _pattern_edge_columns,
+                       col="variables")
 
 
 # ------------------------------------------------- quantile graph (G8/G9)
 def qg_edges(df: DataFrame, Q: int, phi: int = 1) -> DataFrame:
     """Quantile-graph transition edges per series (kernel path)."""
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                e, wt = kernels.qg_edges(
-                    np.asarray(r.values, np.float64), Q, phi)
-                for (s, d), ww in zip(e.tolist(), wt.tolist()):
-                    rows.append({"series_key": r.series_key, "src": s,
-                                 "dst": d, "weight": ww})
-            if rows:
-                yield pd.DataFrame(rows)
+    def kernel(y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        return kernels.qg_edges(y, Q, phi)
 
-    return df.mapInPandas(kern, schema=EDGE_SCHEMA)
+    return _map_series(df, EDGE_SCHEMA, kernel, _edge_columns)
 
 
 def qg_edges_relational(
@@ -379,21 +372,4 @@ def proximity_edges(
     else:
         raise ValueError(method)
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, srcs, dsts, ws = [], [], [], []
-            for r in pdf.itertuples(index=False):
-                e, w = fn(np.asarray(r.values, np.float64))
-                keys.append(np.repeat(r.series_key, len(e)))
-                srcs.append(e[:, 0] if len(e) else np.empty(0, np.int64))
-                dsts.append(e[:, 1] if len(e) else np.empty(0, np.int64))
-                ws.append(w)
-            if keys:
-                yield pd.DataFrame({
-                    "series_key": np.concatenate(keys),
-                    "src": np.concatenate(srcs),
-                    "dst": np.concatenate(dsts),
-                    "weight": np.concatenate(ws),
-                })
-
-    return df.mapInPandas(kern, schema=EDGE_SCHEMA)
+    return _map_series(df, EDGE_SCHEMA, fn, _edge_columns)

@@ -305,9 +305,12 @@ def visibility_graph(
         axis=1,
     ) if n > 1 else np.empty((0, 2), dtype=np.int64)
     scan_edges = np.concatenate([adj, extra]) if len(extra) else adj
+    # path edges the scan rejected: only the angle constraint rejects any
+    missing = adj[:0]
     if angle is not None and len(scan_edges):
         keep = _angle_visible(y, scan_edges, angle, angle_abs)
         scan_edges = scan_edges[keep]
+        missing = adj[~keep[:len(adj)]]
     if weighted:
         dy = y[scan_edges[:, 1]] - y[scan_edges[:, 0]]
         dx = (scan_edges[:, 1] - scan_edges[:, 0]).astype(np.float64)
@@ -317,14 +320,9 @@ def visibility_graph(
     else:
         w = np.full(len(scan_edges), np.nan)
     # union with path edges (unweighted where the scan rejected them)
-    if len(adj):
-        have = set(map(tuple, scan_edges.tolist()))
-        missing = [e for e in adj.tolist() if tuple(e) not in have]
-        if missing:
-            scan_edges = np.concatenate(
-                [scan_edges, np.array(missing, dtype=np.int64)]
-            )
-            w = np.concatenate([w, np.full(len(missing), np.nan)])
+    if len(missing):
+        scan_edges = np.concatenate([scan_edges, missing])
+        w = np.concatenate([w, np.full(len(missing), np.nan)])
     order = np.lexsort((scan_edges[:, 1], scan_edges[:, 0]))
     return scan_edges[order], w[order]
 
@@ -456,21 +454,18 @@ def qg_edges(
     """Quantile-graph transition edges with per-source normalization
     (strategies.py:437-459).  Returns (edges[m,2] int64, weights[m]).
     Nodes 0..Q-1 always exist; only edges are returned here."""
-    _, idx = quantile_bins_indices(y, Q)
-    if len(idx) <= phi:
+    if len(y) <= phi:  # no transition (and np.quantile rejects [])
         return np.empty((0, 2), dtype=np.int64), np.empty(0)
+    _, idx = quantile_bins_indices(y, Q)
     src = idx[:-phi]
     dst = idx[phi:]
     pairs = np.stack([src, dst], axis=1)
     uniq, counts = np.unique(pairs, axis=0, return_counts=True)
+    # normalize per source node over its successors (sums of integer
+    # counts: exact in float64)
+    _, src_of = np.unique(uniq[:, 0], return_inverse=True)
     w = counts.astype(np.float64)
-    # normalize per source node over its successors
-    for s in np.unique(uniq[:, 0]):
-        mask = uniq[:, 0] == s
-        tot = w[mask].sum()
-        if tot > 0:
-            w[mask] = w[mask] / tot
-    return uniq, w
+    return uniq, w / np.bincount(src_of, weights=w)[src_of]
 
 
 def qg_mean_jump_length(y: np.ndarray, Q: int, phi_max: int) -> np.ndarray:

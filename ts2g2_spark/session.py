@@ -5,6 +5,25 @@ the one you would set on a real 1000-executor cluster: AQE on (runtime
 skew-join splitting + partition coalescing), Arrow on (all Python crossings
 are columnar batches), shuffle partitions sized to the parallelism, and
 bounded Arrow batch sizes so per-segment kernels have bounded memory.
+
+Python workers fork from `ts2g2_spark.pydaemon` (`spark.python.daemon.module`)
+instead of `pyspark.daemon`.  pyspark's worker calls
+`importlib.invalidate_caches()` at the start of every task, and on CPython
+< 3.13 that re-reads `pyspark.zip`'s central directory once per package
+directory imported from it (110-175 ms per task, see `pydaemon`), more with
+every pyspark subpackage a worker has imported, which is why
+`pythonInitTime` grows across successive queries.  The package's daemon
+re-reads an archive only when its mtime or size changed.  It has to be the
+daemon module: `pyspark/daemon.py` ignores a `spark.python.worker.module`
+whose name does not start with `pyspark`.  The daemon imports
+`ts2g2_spark`, which a `local[N]` session's workers find on the path of
+the process that built the session (run from the repository root, or with
+the package installed).
+
+The spark-submit jobs under `jobs/` build their own session and keep
+`pyspark.daemon`: a `--py-files` zip reaches a worker's `sys.path` only per
+task, after the daemon has started, so the daemon could not import
+`ts2g2_spark` from it.
 """
 
 from __future__ import annotations
@@ -71,6 +90,8 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
+        # see the module docstring
+        .config("spark.python.daemon.module", "ts2g2_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
