@@ -803,14 +803,11 @@ group by t.user_id, t.src_pattern, t.dst_pattern
 
 def q_qg_edges_q4(spark, sf_dir):
     """Quantile graph Q=4 phi=1 per user (G8,
-    to_graph/strategies.py:400-461), Catalyst-relational path."""
+    to_graph/strategies.py:400-461): the map-only kernel over the JVM
+    series pack."""
     from ts2g2_spark.operators import graphs
 
-    ev = _events(spark, sf_dir)
-    return graphs.qg_edges_relational(
-        ev, "user_id", 4, 1, ts_col="ts", val_col="value",
-        order_col="event_id",
-    ).select(
+    return graphs.qg_edges(_event_series(spark, sf_dir), 4, 1).select(
         F.col("series_key").cast("long").alias("user_id"),
         "src", "dst", "weight")
 
@@ -3409,18 +3406,15 @@ def q_generate_walks_hashed(spark, sf_dir):
     gives the generation family a value-checked driver row; the
     Mersenne-Twister visitors (generate_walks) keep their seeded
     bit-parity pytest suites and rows-only slots below the prefix.
-    8 walks x 16 steps per series, halting on dead-end nodes.
-    Runs the FUSED kernel (hash_walks_fused: one applyInPandas pass,
-    same draw schedule) — the relational n_steps-join loop replays
-    the identical rows (pinned in tests/test_generate.py) but pays
-    O(n_steps^2) nested-lineage join evaluations per action."""
+    8 walks x 16 steps per series, halting on dead-end nodes, over the
+    integer transition counts of the QG kernel (qg_edges counts=True);
+    the walks run as one applyInPandas pass per series."""
     from ts2g2_spark.operators import generate, graphs
 
-    ev = _events(spark, sf_dir).where(F.col("user_id") < 50)
-    edges = graphs.qg_edges_relational(
-        ev, "user_id", 4, 1, ts_col="ts", val_col="value",
-        order_col="event_id", normalize=False)
-    return generate.hash_walks_fused(
+    series = _event_series(spark, sf_dir).where(
+        F.col("series_key").cast("long") < 50)
+    edges = graphs.qg_edges(series, 4, 1, counts=True)
+    return generate.hash_walks(
         edges, n_walks=8, n_steps=16, run_seed=42
     ).select(F.col("series_key").cast("long").alias("user_id"),
              "walk_id", "step", "node")
@@ -3459,8 +3453,17 @@ cnt as (
 _H64 = ("cast(cast(concat('0x', substr(md5({expr}), 1, 15)) as bigint)"
         " as bigint)")
 
-GENERATE_WALKS_HASHED_SQL = f"""
-with recursive {_QG_WALK_BINS},
+def _hashed_walks_sql(edges_ctes: str, n_walks: int = 8, n_steps: int = 16,
+                      run_seed: int = 42) -> str:
+    """Recursive-CTE replay of generate.hash_walks over the integer
+    transition graph `cnt(user_id, src, dst, w)` that `edges_ctes` (CTE
+    text placed after `with recursive`) defines."""
+    step_u = _H64.format(expr=f"'step|{run_seed}|' || w.user_id::varchar"
+                              " || '|' || w.walk_id::varchar || '|' ||"
+                              " (w.step + 1)::varchar || '|' ||"
+                              " w.node::varchar")
+    return f"""
+with recursive {edges_ctes},
 cum as (
   select user_id, src, dst, w,
          sum(w) over (partition by user_id, src
@@ -3480,9 +3483,9 @@ nodes as (
 starts as (
   select n.user_id, w.walk_id, 0 as step, n.node
   from (select distinct user_id, nn from nodes) k
-  cross join (select unnest(range(8)) as walk_id) w
+  cross join (select unnest(range({n_walks})) as walk_id) w
   join nodes n on n.user_id = k.user_id
-   and n.idx = {_H64.format(expr="'start|42|' || k.user_id::varchar"
+   and n.idx = {_H64.format(expr=f"'start|{run_seed}|' || k.user_id::varchar"
                                  " || '|' || w.walk_id::varchar")} % k.nn
 ),
 walk(user_id, walk_id, step, node) as (
@@ -3491,18 +3494,15 @@ walk(user_id, walk_id, step, node) as (
   select w.user_id, w.walk_id, w.step + 1, c.dst
   from walk w
   join cum2 c on c.user_id = w.user_id and c.src = w.node
-   and ({_H64.format(expr="'step|42|' || w.user_id::varchar || '|' ||"
-                          " w.walk_id::varchar || '|' ||"
-                          " (w.step + 1)::varchar || '|' ||"
-                          " w.node::varchar")} % c.tw) >= c.lo
-   and ({_H64.format(expr="'step|42|' || w.user_id::varchar || '|' ||"
-                          " w.walk_id::varchar || '|' ||"
-                          " (w.step + 1)::varchar || '|' ||"
-                          " w.node::varchar")} % c.tw) < c.hi
-  where w.step < 16
+   and ({step_u} % c.tw) >= c.lo
+   and ({step_u} % c.tw) < c.hi
+  where w.step < {n_steps}
 )
 select user_id, walk_id, step, node from walk
 """
+
+
+GENERATE_WALKS_HASHED_SQL = _hashed_walks_sql(_QG_WALK_BINS)
 
 
 def _hvg_walks(spark, sf_dir):
@@ -6896,9 +6896,7 @@ def q_graph_summary_hvg(spark, sf_dir):
     callers after to_graph (core/model.py:433 materializes the whole
     graph object to read one metric).  Physical strategy: the FUSED
     map-only kernel (HVG build + summary inside one Arrow batch, zero
-    shuffle) — the scale path for millions of small per-series graphs;
-    graphmetrics.graph_summary is the relational twin for one huge
-    graph, pinned bit-identical by tests/test_graphmetrics_fused.py."""
+    shuffle) — the scale path for millions of small per-series graphs."""
     from ts2g2_spark.operators import graphmetrics
 
     return graphmetrics.graph_summary_from_series(
@@ -6911,9 +6909,7 @@ def q_graph_summary_hvg(spark, sf_dir):
 def q_clustering_hvg(spark, sf_dir):
     """Per-node triangle counts + local clustering coefficient of the
     HVG.  Fused map-only kernel (dense-adjacency matmul per series
-    graph, zero shuffle); the index-ordered wedge join
-    (graphmetrics.clustering_coefficients) is the relational twin for
-    one huge graph, pinned bit-identical by parity tests."""
+    graph, zero shuffle)."""
     from ts2g2_spark.operators import graphmetrics
 
     return graphmetrics.clustering_from_series(
@@ -6928,9 +6924,7 @@ def q_pagerank_hvg(spark, sf_dir):
     rounded HALF_UP to 9 dp each round so the unrolled SQL oracle
     replays the identical trajectory.  Fused map-only kernel (power
     iteration per series graph inside the Arrow batch that built it,
-    zero shuffle, no per-iteration plans); graphmetrics.pagerank is the
-    relational twin for one huge graph, pinned bit-identical by parity
-    tests at sf0.01 and hash-identical at sf0.1 (6.6x faster warm)."""
+    zero shuffle, no per-iteration plans)."""
     from ts2g2_spark.operators import graphmetrics
 
     return graphmetrics.pagerank_from_series(
@@ -7054,8 +7048,7 @@ PAGERANK_SQL = _pagerank_sql(iters=5, damping=0.85, dp=9)
 def q_graph_mixing_hvg(spark, sf_dir):
     """Degree assortativity + global transitivity per HVG series graph.
     Fused map-only kernel (mixing computed inside the Arrow batch that
-    built the graph); graphmetrics.graph_mixing is the relational twin,
-    pinned by parity tests.  Both metrics reduce to exact integer-sum
+    built the graph).  Both metrics reduce to exact integer-sum
     rationals (the symmetrized Pearson's sqrt cancels), so the values
     are bit-identical across engines before the 6dp quantization."""
     from ts2g2_spark.operators import graphmetrics
@@ -7380,8 +7373,7 @@ def q_lpa_communities_hvg(spark, sf_dir):
     the oracle unrolls the identical four label updates as plain CTEs —
     no rounding contract at all.  Same 1-in-5 series sample and shared
     edge CTEs as betweenness/path-metrics (one visibility-condition
-    definition).  Parity: relational lpa_communities == fused kernel,
-    pytest-pinned."""
+    definition)."""
     from ts2g2_spark.operators import graphmetrics
 
     series = _event_series(spark, sf_dir).where(
@@ -7437,8 +7429,7 @@ def q_wl_fingerprints_hvg(spark, sf_dir):
     structurally identical series graphs across a corpus.  All-integer
     /string ops, RNG-free, no rounding contract; the oracle unrolls the
     identical 3 rounds as chained CTEs over the shared sampled-HVG edge
-    layer.  Runs as the fused map-only kernel (zero shuffle); parity
-    vs the relational wl_fingerprints is pytest-pinned."""
+    layer.  Runs as the fused map-only kernel (zero shuffle)."""
     from ts2g2_spark.operators import graphmetrics
 
     series = _event_series(spark, sf_dir).where(
@@ -7491,26 +7482,17 @@ WL_HVG_SQL = _wl_hvg_sql(3)
 
 def q_link_prediction_hvg(spark, sf_dir):
     """Link-prediction scores per sampled HVG series graph
-    (graphmetrics.link_prediction, r5; Liben-Nowell & Kleinberg 2003):
-    common-neighbor count, Jaccard and Adamic-Adar for every non-edge
-    pair sharing a hub — the "which link forms next" ranking, run
-    relationally (one wedge self-join + one hash agg + an anti-join).
-    cn/degrees are exact integers, jaccard one rounded IEEE division,
-    and Adamic-Adar an explicit sequential fold over the SORTED hub
-    degree list (sum-over-doubles is never oracle-safe; the sort is
-    total on the folded values).  Same shared 1-in-5 HVG sampling and
-    visibility condition as LPA/BFS/Brandes.
-
-    r5: runs the FUSED many-small-graphs strategy
-    (graphmetrics.link_prediction_from_series — HVG build + scoring in
-    one Arrow pass, zero shuffles, no edge-frame cache), bit-identical
-    to the relational `link_prediction` by the fused parity suite
-    (sequential ascending-degree fold, JVM-side rounding); the oracle
-    SQL still replays the RELATIONAL algebra, so the value hash pins
-    both strategies at once.  Measured at sf0.1 on the same quiet
-    host: 16.3s end to end relational (4.8s edge build + 13.5s for the
-    8-exchange scoring plan, overhead-bound on thousands of tiny
-    per-series graphs) -> 8.2s fused."""
+    (graphmetrics.link_prediction_from_series, r5; Liben-Nowell &
+    Kleinberg 2003): common-neighbor count, Jaccard and Adamic-Adar for
+    every non-edge pair sharing a hub — the "which link forms next"
+    ranking, run as the fused map-only kernel (HVG build + scoring in
+    one Arrow pass, zero shuffles).  cn/degrees are exact integers,
+    jaccard one rounded IEEE division, and Adamic-Adar an explicit
+    sequential fold over the SORTED hub degree list (sum-over-doubles is
+    never oracle-safe; the sort is total on the folded values), rounded
+    JVM-side.  The oracle replays it as a wedge self-join + hash agg +
+    anti-join.  Same shared 1-in-5 HVG sampling and visibility condition
+    as LPA/BFS/Brandes."""
     from ts2g2_spark.operators import graphmetrics
 
     series = _event_series(spark, sf_dir).where(
@@ -7568,7 +7550,7 @@ def q_lpa_modularity_hvg(spark, sf_dir):
     one exact-integer rational (4m*sum_ec - sum deg_c^2)/4m^2 — both
     division operands exact int64 — so the only float op is a single
     bit-identical IEEE divide, then the floor(x*1e9+0.5)/1e9 quantize
-    replayed verbatim by the oracle (graph_mixing posture).  Shares the
+    replayed verbatim by the oracle (graph_mixing_hvg posture).  Shares the
     sampled HVG edge layer and the unrolled LPA label CTEs with
     lpa_communities_hvg."""
     from ts2g2_spark.operators import graphmetrics

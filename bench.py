@@ -132,7 +132,11 @@ def main() -> None:
                         "warmup_query (plan-cold, session-warm); "
                         "warmup_query itself is timed fully warm; "
                         "caches cleared between queries (r5) so no "
-                        "query free-rides an earlier query's cache"),
+                        "query free-rides an earlier query's cache; "
+                        "rollup_tiers_tokens (and rollup_points_per_sec) "
+                        "is timed WARM: its second run, after one untimed "
+                        "run of the same tier jobs, unlike the plan-cold "
+                        "queries"),
     }
     # full detail: stdout line 1 (may scroll out of the driver's tail) and
     # a file next to this script, for offline per-query diffing

@@ -104,6 +104,45 @@ def test_learn_and_apply_match_naive(spark):
         assert r.n_tok == len(r.tokens)
 
 
+def test_learn_matches_naive_with_negative_ids(spark):
+    """tokens is array<int>: negative ids must survive the int64 pair-key
+    packing of the counting kernel (a negative tok_b used to corrupt
+    the key's high half)."""
+    rng = np.random.default_rng(13)
+    rows = [("d%03d" % i,
+             [int(x) for x in rng.integers(-4, 3, size=rng.integers(2, 25))])
+            for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
+    first = bpe.pair_counts(df).orderBy(
+        F.desc("cnt"), "tok_a", "tok_b").first()
+    merges = bpe.learn_bpe(df, n_merges=5, new_id_start=100)
+    got = [(r.rank, r.tok_a, r.tok_b, r.new_id, r.pair_count)
+           for r in merges.orderBy("rank").collect()]
+    want, _ = _naive_learn([t for _, t in rows], 5, 100)
+    assert got == want
+    assert got[0][1:3] == (first.tok_a, first.tok_b)
+    assert any(a < 0 or b < 0 for _, a, b, _, _ in got)
+
+
+@pytest.mark.parametrize("every", [1, 2])
+def test_learn_materialize_every_fold_matches_unfolded(spark, every):
+    """Folding the merge prefix into a checkpointed working set every
+    `every` merges learns the same table as the run that never folds."""
+    rng = np.random.default_rng(17)
+    rows = [("d%03d" % i,
+             [int(x) for x in rng.integers(0, 6, size=rng.integers(0, 30))])
+            for i in range(50)]
+    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
+
+    def learn(**kw):
+        return [tuple(r) for r in bpe.learn_bpe(
+            df, n_merges=5, new_id_start=100, **kw).orderBy("rank").collect()]
+
+    unfolded = learn()
+    assert len(unfolded) == 5
+    assert learn(materialize_every=every) == unfolded
+
+
 def test_learn_early_stop_and_min_count(spark):
     df = spark.createDataFrame(
         [("a", [1, 2]), ("b", [3, 4])], "doc_id string, tokens array<int>")

@@ -399,36 +399,55 @@ def test_generate_sliding_spark(spark):
     assert out[0].seq == out2[0].seq  # seeded determinism
 
 
+# two series: s1 a 3-node weighted cycle with a dead-end spur, s2 a 2-node
+# back-and-forth — integer weights, the hash_walks input contract
+# (graphs.qg_edges(counts=True) shape)
+WALK_EDGES = [
+    ("s1", 0, 1, 3), ("s1", 0, 2, 1), ("s1", 1, 2, 2),
+    ("s1", 2, 0, 5), ("s1", 1, 9, 1),  # 9 has no out-edges
+    ("s2", 0, 1, 1), ("s2", 1, 0, 4),
+]
+
+
 def _walk_edges(spark):
-    # two series: s1 a 3-node weighted cycle with a dead-end spur,
-    # s2 a 2-node back-and-forth — integer weights, the hash_walks
-    # input contract (qg_edges_relational(normalize=False) shape)
-    rows = [
-        ("s1", 0, 1, 3), ("s1", 0, 2, 1), ("s1", 1, 2, 2),
-        ("s1", 2, 0, 5), ("s1", 1, 9, 1),  # 9 has no out-edges
-        ("s2", 0, 1, 1), ("s2", 1, 0, 4),
-    ]
     return spark.createDataFrame(
-        rows, "series_key string, src long, dst long, w long")
+        WALK_EDGES, "series_key string, src long, dst long, w long")
 
 
-def test_hash_walks_fused_matches_relational(spark):
-    """The fused applyInPandas kernel and the relational n_steps-join
-    loop must emit IDENTICAL rows: same md5 draw schedule, same int64
-    cumulative-interval choice, same dead-end halting."""
+def test_hash_walks_matches_recursive_cte_oracle(spark):
+    """hash_walks emits exactly the rows of the contract's recursive-CTE
+    walk SQL run in DuckDB on the same edges: same md5 draw schedule,
+    same int64 cumulative-interval choice, same dead-end halting."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
     from ts2g2_spark.operators import generate
 
-    e = _walk_edges(spark)
-    rel = sorted(map(tuple, generate.hash_walks(
-        e, n_walks=4, n_steps=6, run_seed=11).collect()))
-    fus = sorted(map(tuple, generate.hash_walks_fused(
-        e, n_walks=4, n_steps=6, run_seed=11).collect()))
-    assert rel == fus
-    assert len(fus) > 0
+    con = duckdb.connect()
+    con.register("walk_edges", pd.DataFrame(
+        WALK_EDGES, columns=["series_key", "src", "dst", "w"]))
+    edges_cte = ("cnt as (select series_key as user_id, src, dst, w"
+                 " from walk_edges)")
+
+    def oracle(run_seed):
+        sql = entry._hashed_walks_sql(edges_cte, n_walks=4, n_steps=6,
+                                      run_seed=run_seed)
+        return sorted(map(tuple, con.execute(sql).fetchall()))
+
+    def spark_rows(run_seed):
+        return sorted(map(tuple, generate.hash_walks(
+            _walk_edges(spark), n_walks=4, n_steps=6,
+            run_seed=run_seed).collect()))
+
+    got = spark_rows(11)
+    assert got == oracle(11)
+    assert {r[0] for r in got} == {"s1", "s2"}
+    # some walk reached the dead-end spur and stopped early
+    assert 9 in {r[3] for r in got}
+    assert len(got) < 2 * 4 * 7
     # seed sensitivity: a different run_seed changes some draw
-    fus2 = sorted(map(tuple, generate.hash_walks_fused(
-        e, n_walks=4, n_steps=6, run_seed=12).collect()))
-    assert fus2 != fus
+    assert spark_rows(12) == oracle(12) != got
 
 
 def test_hash_walks_fused_dead_end_halts(spark):
@@ -440,7 +459,7 @@ def test_hash_walks_fused_dead_end_halts(spark):
     e = spark.createDataFrame(
         [("d", 0, 1, 1), ("d", 1, 2, 1)],
         "series_key string, src long, dst long, w long")
-    out = generate.hash_walks_fused(
+    out = generate.hash_walks(
         e, n_walks=8, n_steps=16, run_seed=5).collect()
     per_walk = {}
     for r in out:

@@ -8,7 +8,8 @@ reference checkout.
 (b) Hypothesis properties at n <= 40: the HVG/NVG kernels against O(n^3)
     brute force written from the published predicates (strict >, `limit`
     skips the first intermediates), and the OPG/QG kernels against brute
-    force from their definitions.
+    force from their definitions, including QG's integer transition
+    counts.
 """
 
 from __future__ import annotations
@@ -124,6 +125,10 @@ def test_qg_emitter_matches_kernel(frame, Q, phi):
     got = _got(graphs.qg_edges(frame, Q, phi))
     assert got == _expected_edges(lambda y: kernels.qg_edges(y, Q, phi))
     assert len(got) > 0
+    counts = graphs.qg_edges(frame, Q, phi, counts=True)
+    assert counts.columns == ["series_key", "src", "dst", "w"]
+    assert _got(counts) == _expected_edges(
+        lambda y: kernels.qg_transitions(y, Q, phi))
 
 
 def test_proximity_emitter_matches_kernel(frame):
@@ -210,9 +215,10 @@ def _brute_opg(y, w, tau):
 
 def _brute_qg(y, Q, phi):
     """Bin of y_t = #(quantile edges < y_t) - 1, the first edge lowered by
-    1e-9; weight = transition count / transitions out of the same bin."""
+    1e-9; returns (transition counts, weights) with weight = count /
+    transitions out of the same bin."""
     if len(y) <= phi:
-        return {}
+        return {}, {}
     edges = np.quantile(np.asarray(y, np.float64), np.linspace(0, 1, Q + 1))
     edges[0] -= 1e-9
     q = [sum(1 for b in edges if b < v) - 1 for v in y]
@@ -220,7 +226,8 @@ def _brute_qg(y, Q, phi):
     out_of = Counter()
     for (s, _), c in counts.items():
         out_of[s] += c
-    return {k: c / float(out_of[k[0]]) for k, c in counts.items()}
+    return dict(counts), {k: c / float(out_of[k[0]])
+                          for k, c in counts.items()}
 
 
 values = hst.lists(
@@ -257,6 +264,8 @@ def test_opg_kernel_matches_brute_force(y, w, tau):
 @settings(max_examples=150, deadline=None)
 @given(y=values, Q=hst.integers(2, 5), phi=hst.integers(1, 3))
 def test_qg_kernel_matches_brute_force(y, Q, phi):
+    counts, weights = _brute_qg(y, Q, phi)
     e, wt = kernels.qg_edges(np.asarray(y, np.float64), Q, phi)
-    got = {tuple(p): x for p, x in zip(e.tolist(), wt.tolist())}
-    assert got == _brute_qg(y, Q, phi)
+    assert {tuple(p): x for p, x in zip(e.tolist(), wt.tolist())} == weights
+    e, c = kernels.qg_transitions(np.asarray(y, np.float64), Q, phi)
+    assert {tuple(p): x for p, x in zip(e.tolist(), c.tolist())} == counts

@@ -1,6 +1,6 @@
-"""Spark-level graph operators: QG kernel path vs relational path, reference
-contract; sliding-window off-by-one; histogram.  (OPG is pinned against
-brute force in test_graph_emitters.py.)"""
+"""Spark-level graph operators: reference contract; sliding-window
+off-by-one; histogram.  (OPG and QG are pinned against brute force in
+test_graph_emitters.py.)"""
 
 from __future__ import annotations
 
@@ -68,20 +68,6 @@ def test_visibility_spark_matches_kernel(spark, series_df, reference):
             ref = ref_visibility_graph(reference, list(y), kind)
             got = {(int(r.src), int(r.dst)) for r in g.itertuples()}
             assert got == set(ref), (key, kind)
-
-
-def test_qg_kernel_vs_relational(spark, series_df, points_df):
-    for Q, phi in [(4, 1), (3, 2)]:
-        k = graphs.qg_edges(series_df, Q, phi).toPandas()
-        r = graphs.qg_edges_relational(
-            points_df, "series_key", Q, phi, order_col="idx").toPandas()
-        km = {(t.series_key, t.src, t.dst): t.weight for t in k.itertuples()}
-        rm = {(t.series_key, t.src, t.dst): t.weight for t in r.itertuples()}
-        assert km.keys() == rm.keys()
-        for key in km:
-            # percentile() (JVM) and np.quantile agree on the estimator;
-            # weights are ratios of identical ints -> exact
-            assert km[key] == pytest.approx(rm[key], rel=0, abs=0), key
 
 
 def test_proximity_spark(spark, series_df):

@@ -1,6 +1,9 @@
-"""Graph-metric operators (degrees / summary / triangles / clustering /
-PageRank) vs networkx and a numpy power-iteration model with the same
-per-iteration rounding contract."""
+"""Graph-metric operators vs networkx and numpy models: the relational
+degree / degree-exponent operators on a noisy edge frame, and the
+per-series Spark ops (summary / clustering / PageRank / link prediction)
+on every series' visibility graph.  GRAPHS, `noisy_edges` and
+`_pagerank_model` are shared with the per-series metric kernel tests
+(test_graphmetrics_fused)."""
 
 from __future__ import annotations
 
@@ -9,24 +12,26 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from ts2g2_spark.operators import kernels as K
 from ts2g2_spark.operators.graphmetrics import (
-    clustering_coefficients, degrees, graph_summary, pagerank,
-    triangle_counts,
+    clustering_from_series, degrees, graph_summary_from_series,
+    link_prediction_from_series, pagerank_from_series,
 )
 
 
+def noisy_edges(edges) -> np.ndarray:
+    """(m, 2) int64 edge array with every edge also reversed and one
+    self-loop: the noise the operators must collapse (matching nx.Graph
+    insert semantics)."""
+    e = np.asarray(edges, np.int64).reshape(-1, 2)
+    return np.concatenate([e, e[:, ::-1], e[:1, :1].repeat(2, axis=1)])
+
+
 def _edge_df(spark, graphs):
-    """graphs: {series_key: iterable of (u, v)} -> edge frame, with noisy
-    duplicates / reversed duplicates / self-loops the operators must
-    collapse (matching nx.Graph insert semantics)."""
-    rows = []
-    for key, edges in graphs.items():
-        for u, v in edges:
-            rows.append((key, u, v, 1.0))
-            rows.append((key, v, u, 1.0))  # reversed duplicate
-        if edges:
-            u0 = edges[0][0]
-            rows.append((key, u0, u0, 1.0))  # self-loop (dropped)
+    """graphs: {series_key: iterable of (u, v)} -> noisy edge frame."""
+    rows = [(key, int(u), int(v), 1.0)
+            for key, edges in graphs.items()
+            for u, v in noisy_edges(edges).tolist()]
     return spark.createDataFrame(
         pd.DataFrame(rows, columns=["series_key", "src", "dst", "weight"])
     )
@@ -60,62 +65,40 @@ def edge_df(spark):
     return _edge_df(spark, GRAPHS).cache()
 
 
-def test_degrees_match_networkx(spark, edge_df):
-    got = {
-        (r.series_key, r.node): r.degree
-        for r in degrees(edge_df).collect()
-    }
-    for key, g in _nx(GRAPHS).items():
-        for node, deg in g.degree():
-            assert got[(key, node)] == deg
-    assert len(got) == sum(g.number_of_nodes() for g in _nx(GRAPHS).values())
+# series for the per-series Spark ops: ties, a 2-point series and noise
+SERIES = {
+    "saw": [1.0, 5.0, 2.0, 6.0, 1.0, 7.0, 3.0, 5.0, 2.0],
+    "steps": [1.0, 1.0, 2.0, 2.0, 1.0, 3.0, 3.0, 1.0, 2.0, 4.0],
+    "tiny": [2.0, 1.0],
+    "noise": np.random.default_rng(5).normal(size=40).tolist(),
+}
+KIND = "natural"
 
 
-def test_summary_matches_networkx(spark, edge_df):
-    got = {r.series_key: r for r in graph_summary(edge_df).collect()}
-    for key, g in _nx(GRAPHS).items():
-        r = got[key]
-        assert r.n_nodes == g.number_of_nodes()
-        assert r.n_edges == g.number_of_edges()
-        assert r.density == pytest.approx(nx.density(g), abs=1e-9)
-        degs = [d for _, d in g.degree()]
-        assert r.max_degree == max(degs)
-        assert r.avg_degree == pytest.approx(np.mean(degs), abs=1e-9)
+@pytest.fixture(scope="module")
+def series_df(spark):
+    return spark.createDataFrame(
+        list(SERIES.items()), "series_key string, values array<double>"
+    ).cache()
 
 
-def test_triangles_match_networkx(spark, edge_df):
-    got = {
-        (r.series_key, r.node): r.triangles
-        for r in triangle_counts(edge_df).collect()
-    }
-    for key, g in _nx(GRAPHS).items():
-        for node, t in nx.triangles(g).items():
-            assert got.get((key, node), 0) == t, (key, node)
-    # sparse form: zero-triangle nodes are absent
-    assert all(t > 0 for t in got.values())
-
-
-def test_clustering_matches_networkx(spark, edge_df):
-    got = {
-        (r.series_key, r.node): r
-        for r in clustering_coefficients(edge_df).collect()
-    }
-    for key, g in _nx(GRAPHS).items():
-        cc = nx.clustering(g)
-        tri = nx.triangles(g)
-        for node in g.nodes():
-            r = got[(key, node)]
-            assert r.lcc == pytest.approx(cc[node], abs=1e-8)
-            assert r.triangles == tri[node]
-            assert r.degree == g.degree(node)
+def _series_nx():
+    """{series_key: nx.Graph of the series' visibility graph}."""
+    out = {}
+    for key, values in SERIES.items():
+        g = nx.Graph()
+        g.add_edges_from(
+            K.visibility_graph(np.asarray(values), kind=KIND)[0].tolist())
+        out[key] = g
+    return out
 
 
 def _pagerank_model(g: nx.Graph, iters: int, d: float, dp: int):
-    """The operator's documented contract: power iteration with
-    per-iteration decimal rounding (np.round half-even matches both
-    Spark's ROUND HALF_UP only at non-boundary values — boundary values
-    are astronomically unlikely for irrational rank sums, and the test
-    compares with 1e-9 tolerance anyway)."""
+    """The documented PageRank contract: power iteration with
+    per-iteration decimal rounding (np.round half-even matches Spark's
+    ROUND HALF_UP only at non-boundary values — boundary values are
+    astronomically unlikely for irrational rank sums, and the tests
+    compare with 2e-9 tolerance anyway)."""
     nodes = sorted(g.nodes())
     n = len(nodes)
     idx = {v: i for i, v in enumerate(nodes)}
@@ -130,11 +113,64 @@ def _pagerank_model(g: nx.Graph, iters: int, d: float, dp: int):
     return {v: r[idx[v]] for v in nodes}
 
 
-def test_pagerank_matches_model_and_sums_to_one(spark, edge_df):
-    got = {}
-    for r in pagerank(edge_df, iters=8, damping=0.85).collect():
-        got[(r.series_key, r.node)] = r.rank
+def test_degrees_match_networkx(spark, edge_df):
+    got = {
+        (r.series_key, r.node): r.degree
+        for r in degrees(edge_df).collect()
+    }
     for key, g in _nx(GRAPHS).items():
+        for node, deg in g.degree():
+            assert got[(key, node)] == deg
+    assert len(got) == sum(g.number_of_nodes() for g in _nx(GRAPHS).values())
+
+
+def test_summary_matches_networkx(series_df):
+    got = {r.series_key: r for r in
+           graph_summary_from_series(series_df, kind=KIND).collect()}
+    assert set(got) == set(SERIES)
+    for key, g in _series_nx().items():
+        r = got[key]
+        assert r.n_nodes == g.number_of_nodes()
+        assert r.n_edges == g.number_of_edges()
+        assert r.density == pytest.approx(nx.density(g), abs=1e-9)
+        degs = [d for _, d in g.degree()]
+        assert r.max_degree == max(degs)
+        assert r.avg_degree == pytest.approx(np.mean(degs), abs=1e-9)
+
+
+def test_triangles_match_networkx(series_df):
+    got = {
+        (r.series_key, r.node): r.triangles
+        for r in clustering_from_series(series_df, kind=KIND).collect()
+    }
+    want = {(key, node): t for key, g in _series_nx().items()
+            for node, t in nx.triangles(g).items()}
+    assert got == want
+    assert sum(want.values()) > 0
+
+
+def test_clustering_matches_networkx(series_df):
+    got = {
+        (r.series_key, r.node): r
+        for r in clustering_from_series(series_df, kind=KIND).collect()
+    }
+    graphs = _series_nx()
+    assert len(got) == sum(g.number_of_nodes() for g in graphs.values())
+    for key, g in graphs.items():
+        cc = nx.clustering(g)
+        for node in g.nodes():
+            r = got[(key, node)]
+            assert r.lcc == pytest.approx(cc[node], abs=1e-8)
+            assert r.degree == g.degree(node)
+
+
+def test_pagerank_matches_model_and_sums_to_one(series_df):
+    got = {
+        (r.series_key, r.node): r.rank
+        for r in pagerank_from_series(
+            series_df, kind=KIND, iters=8, damping=0.85).collect()
+    }
+    for key, g in _series_nx().items():
         model = _pagerank_model(g, iters=8, d=0.85, dp=9)
         for node, exp in model.items():
             assert got[(key, node)] == pytest.approx(exp, abs=2e-9), (
@@ -143,19 +179,17 @@ def test_pagerank_matches_model_and_sums_to_one(spark, edge_df):
         assert total == pytest.approx(1.0, abs=1e-5)
 
 
-def test_pagerank_close_to_converged_fixpoint(spark, edge_df):
-    """More iterations should approach the converged PageRank fixpoint
-    (the unrounded power-iteration limit; nx.pagerank needs scipy,
-    absent here — the dp=15 model is the same algorithm run to
-    convergence).  Tolerance follows the geometric convergence rate
-    (d^40 = 0.85^40 ~ 1.5e-3).  Also exercises the >=checkpoint_every
-    lineage-cut path (40 iterations would exhaust task memory as one
-    plan)."""
+def test_pagerank_close_to_converged_fixpoint(series_df):
+    """More iterations approach the converged PageRank fixpoint (the
+    unrounded power-iteration limit; nx.pagerank needs scipy, absent
+    here — the dp=15 model is the same algorithm run to convergence).
+    Tolerance follows the geometric convergence rate (0.85^40 ~ 1.5e-3)."""
     got = {
         (r.series_key, r.node): r.rank
-        for r in pagerank(edge_df, iters=40, damping=0.85).collect()
+        for r in pagerank_from_series(
+            series_df, kind=KIND, iters=40, damping=0.85).collect()
     }
-    for key, g in _nx(GRAPHS).items():
+    for key, g in _series_nx().items():
         ref = _pagerank_model(g, iters=200, d=0.85, dp=15)
         for node, exp in ref.items():
             assert got[(key, node)] == pytest.approx(exp, abs=2e-3)
@@ -196,14 +230,12 @@ def test_degree_exponent_matches_bruteforce(spark):
         1.0 + 2.0 / (2.0 * np.log(2.0)), abs=2e-6)
 
 
-def test_link_prediction_matches_networkx(spark, edge_df):
-    from ts2g2_spark.operators.graphmetrics import link_prediction
-
-    out = link_prediction(edge_df)
+def test_link_prediction_matches_networkx(series_df):
     got = {(r.series_key, r.u, r.v): (r.cn, r.jaccard, r.adamic_adar)
-           for r in out.collect()}
+           for r in link_prediction_from_series(
+               series_df, kind=KIND).collect()}
     want = {}
-    for key, g in _nx(GRAPHS).items():
+    for key, g in _series_nx().items():
         # every non-edge pair with >= 1 common neighbor
         pairs = [(u, v) for u in g for v in g
                  if u < v and not g.has_edge(u, v)
@@ -216,6 +248,7 @@ def test_link_prediction_matches_networkx(spark, edge_df):
             want[(key, u, v)]["cn"] = len(
                 list(nx.common_neighbors(g, u, v)))
     assert set(got) == set(want)
+    assert len(want) > 0
     for k, (cn, j, a) in got.items():
         assert cn == want[k]["cn"]
         assert j == pytest.approx(want[k]["j"], abs=1e-6)
@@ -223,20 +256,20 @@ def test_link_prediction_matches_networkx(spark, edge_df):
 
 
 def test_link_prediction_edges(spark):
-    from ts2g2_spark.operators.graphmetrics import link_prediction
+    def run(series):
+        return link_prediction_from_series(spark.createDataFrame(
+            list(series.items()), "series_key string, values array<double>"),
+            kind="horizontal").collect()
 
     # a single edge: no wedge, no candidates
-    one = _edge_df(spark, {"e": [(0, 1)]})
-    assert link_prediction(one).count() == 0
-    # path 0-1-2: exactly one prediction (0,2) through hub 1 (deg 2)
-    path = _edge_df(spark, {"p": [(0, 1), (1, 2)]})
-    rows = link_prediction(path).collect()
+    assert run({"e": [2.0, 1.0]}) == []
+    # a peak blocks 0-2, so the graph is the path 0-1-2: exactly one
+    # prediction (0,2) through hub 1 (deg 2)
+    rows = run({"p": [1.0, 3.0, 2.0]})
     assert len(rows) == 1
     r = rows[0]
-    assert (r.u, r.v, r.cn) == (0, 2, 1)
+    assert (r.series_key, r.u, r.v, r.cn) == ("p", 0, 2, 1)
     assert r.jaccard == 1.0           # cn=1, du=dv=1, union=1
     assert r.adamic_adar == round(1.0 / np.log(2.0), 6)
     # empty frame
-    empty = spark.createDataFrame(
-        [], "series_key string, src long, dst long, weight double")
-    assert link_prediction(empty).count() == 0
+    assert run({}) == []

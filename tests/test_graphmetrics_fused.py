@@ -1,14 +1,18 @@
-"""Fused map-only graph-metric kernels vs the relational twins.
+"""Per-series graph metrics: the kernels in operators/kernels.py vs
+networkx and brute-force references in-process, and every
+graphmetrics `*_from_series` Spark op vs its kernel run per series.
 
-The fused path (kernels.graph_*_kernel inside one mapInPandas over the
-series frame) must be BIT-IDENTICAL to the relational operators in
-operators/graphmetrics.py — same node sets, same integer counts, and the
-same HALF_UP per-iteration rounding trajectory for PageRank.  Also pins
+The kernel inputs are test_graphmetrics.GRAPHS with reversed duplicates
+and a self-loop added (`noisy_edges`), which the kernels must collapse.
+The Spark frame holds an empty series, 1- and 2-point series and a null
+`values` row, read in several Arrow batches.  Also pins
 kernels.round_half_up against Spark's own round() on adversarial dyadic
 values (np.round would half-even these the other way).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 import networkx as nx
 import numpy as np
@@ -16,11 +20,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ts2g2_spark.operators import graphs
-from ts2g2_spark.operators.graphmetrics import (
-    clustering_coefficients, clustering_from_series, graph_summary,
-    graph_summary_from_series, pagerank, pagerank_from_series,
-)
+from tests.test_graphmetrics import GRAPHS, _pagerank_model, noisy_edges
+from ts2g2_spark.functions.hashing import h64_py
+from ts2g2_spark.operators import graphmetrics as gm
+from ts2g2_spark.operators import kernels as K
 from ts2g2_spark.operators.kernels import (
     graph_clustering_kernel, graph_pagerank_kernel, graph_summary_kernel,
     round_half_up,
@@ -32,79 +35,129 @@ SERIES = {
     "saw": [1.0, 5.0, 2.0, 6.0, 1.0, 7.0, 3.0, 5.0, 2.0],
     "tiny": [2.0, 1.0],
     "one": [3.0],
+    "empty": [],
+    "null": None,
     "rand": np.random.default_rng(11).normal(size=60).tolist(),
     "steps": [1.0, 1.0, 2.0, 2.0, 1.0, 3.0, 3.0, 1.0, 2.0, 4.0],
+    "ints": [float(x) for x in np.random.default_rng(23).integers(0, 9, 40)],
 }
+BATCH_ROWS = 3
 
 
 @pytest.fixture(scope="module")
 def series_df(spark):
-    pdf = pd.DataFrame(
-        {"series_key": list(SERIES), "values": list(SERIES.values())}
-    )
-    return spark.createDataFrame(pdf).cache()
+    """SERIES in one partition, read in BATCH_ROWS-row Arrow batches while
+    the module runs."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(BATCH_ROWS))
+    try:
+        yield spark.createDataFrame(
+            list(SERIES.items()), "series_key string, values array<double>"
+        ).coalesce(1).cache()
+    finally:
+        spark.conf.set(key, old)
 
 
-def _sorted_pdf(df, keys):
-    return df.orderBy(*keys).toPandas().reset_index(drop=True)
+def _graphs(kind="horizontal"):
+    """(key, visibility edge array) of every non-null series."""
+    return [(k, K.visibility_graph(np.asarray(v, float), kind=kind)[0])
+            for k, v in SERIES.items() if v is not None]
 
 
-@pytest.mark.parametrize("kind", ["horizontal", "natural"])
-def test_fused_summary_bitequal_relational(spark, series_df, kind):
-    edges = graphs.visibility_edges(series_df, kind=kind)
-    rel = _sorted_pdf(graph_summary(edges), ["series_key"])
-    fus = _sorted_pdf(
-        graph_summary_from_series(series_df, kind=kind), ["series_key"]
-    )
-    pd.testing.assert_frame_equal(rel, fus[rel.columns.tolist()])
+# ------------------------------------------- (b) Spark op == kernel per series
+def _cols(*cols):
+    return list(zip(*(np.asarray(c).tolist() for c in cols)))
 
 
-@pytest.mark.parametrize("kind", ["horizontal", "natural"])
-def test_fused_clustering_bitequal_relational(spark, series_df, kind):
-    edges = graphs.visibility_edges(series_df, kind=kind)
-    rel = _sorted_pdf(
-        clustering_coefficients(edges), ["series_key", "node"]
-    )
-    fus = _sorted_pdf(
-        clustering_from_series(series_df, kind=kind),
-        ["series_key", "node"],
-    )
-    pd.testing.assert_frame_equal(rel, fus[rel.columns.tolist()])
+def _wl(e):
+    nodes, lab = K.graph_wl_kernel(e, n_iter=3)
+    fp = h64_py(",".join(map(str, np.sort(lab))))
+    return [(len(nodes), fp)] if len(nodes) else []
 
 
-def test_fused_pagerank_bitequal_relational(spark, series_df):
-    edges = graphs.visibility_edges(series_df, kind="horizontal")
-    kw = dict(iters=5, damping=0.85, round_dp=9)
-    rel = _sorted_pdf(pagerank(edges, **kw), ["series_key", "node"])
-    fus = _sorted_pdf(
-        pagerank_from_series(series_df, kind="horizontal", **kw),
-        ["series_key", "node"],
-    )
-    # exact float equality — identical rounding trajectory, no tolerance
-    pd.testing.assert_frame_equal(rel, fus[rel.columns.tolist()])
+def _lp(e, **kw):
+    u, v, cn, j, a = K.link_prediction_kernel(e, **kw)
+    return _cols(u, v, cn, round_half_up(j, 6), round_half_up(a, 6))
 
 
-# ------------------------------------------------------- kernel vs networkx
-GRAPHS = {
-    "tri": [(0, 1), (1, 2), (0, 2)],
-    "k4": [(a, b) for a in range(4) for b in range(a + 1, 4)],
-    "star": [(0, i) for i in range(1, 6)],
-    "rand": [
-        (int(u), int(v))
-        for u, v in np.random.default_rng(7).integers(0, 30, (120, 2))
-        if u != v
-    ],
+# op -> (graphmetrics call on the series frame, expected rows of one
+# series' edge array, without series_key)
+OPS = {
+    "summary": (
+        gm.graph_summary_from_series,
+        lambda e: [tuple(s.values())]
+        if (s := graph_summary_kernel(e))["n_nodes"] else []),
+    "clustering": (
+        gm.clustering_from_series,
+        lambda e: _cols(*graph_clustering_kernel(e))),
+    "mixing": (
+        gm.mixing_from_series,
+        lambda e: [] if (m := K.graph_mixing_kernel(e)) is None else [m]),
+    "betweenness": (
+        gm.betweenness_from_series,
+        lambda e: _cols(*K.graph_betweenness_kernel(e))),
+    "path_metrics": (
+        gm.path_metrics_from_series,
+        lambda e: [] if (m := K.graph_path_metrics_kernel(e)) is None
+        else [tuple(m.values())]),
+    "kcore": (
+        gm.kcore_from_series, lambda e: _cols(*K.graph_kcore_kernel(e))),
+    "pagerank": (
+        lambda df, kind: gm.pagerank_from_series(df, kind=kind, iters=5),
+        lambda e: _cols(*graph_pagerank_kernel(e, iters=5))),
+    "lpa": (
+        gm.lpa_from_series, lambda e: _cols(*K.graph_lpa_kernel(e))),
+    "lpa_modularity": (
+        gm.lpa_modularity_from_series,
+        lambda e: [m] if (m := K.graph_modularity_kernel(e))[0] else []),
+    "wl": (gm.wl_from_series, _wl),
+    "link_prediction": (gm.link_prediction_from_series, _lp),
+    "link_prediction_cn2": (
+        lambda df, kind: gm.link_prediction_from_series(
+            df, kind=kind, min_cn=2),
+        lambda e: _lp(e, min_cn=2)),
+    "link_prediction_cap3": (
+        lambda df, kind: gm.link_prediction_from_series(
+            df, kind=kind, max_hub_degree=3),
+        lambda e: _lp(e, max_hub_degree=3)),
 }
 
 
+@pytest.mark.parametrize("kind", ["horizontal", "natural"])
+@pytest.mark.parametrize("op", sorted(OPS))
+def test_from_series_matches_kernel(series_df, op, kind):
+    """Spark rows == the kernel run per series in-process: no row for the
+    null, empty and 1-point series, nor for any edgeless graph."""
+    call, expect = OPS[op]
+    got = Counter(tuple(r) for r in call(series_df, kind=kind).collect())
+    want = Counter((k, *row) for k, e in _graphs(kind) for row in expect(e))
+    assert got == want
+    assert len(got) > 0
+    assert not {"null", "empty", "one"} & {k for k, *_ in got}
+
+
+@pytest.mark.parametrize("call", [
+    lambda df: gm.lpa_from_series(df, n_iter=0),
+    lambda df: gm.lpa_modularity_from_series(df, n_iter=0),
+    lambda df: gm.wl_from_series(df, n_iter=0),
+    lambda df: gm.link_prediction_from_series(df, min_cn=0),
+], ids=["lpa", "lpa_modularity", "wl", "link_prediction"])
+def test_from_series_rejects_bad_parameters(series_df, call):
+    with pytest.raises(ValueError):
+        call(series_df)
+
+
+# ------------------------------------------------------- kernel vs networkx
 @pytest.mark.parametrize("name", sorted(GRAPHS))
 def test_clustering_kernel_matches_networkx(name):
-    e = np.array(GRAPHS[name], dtype=np.int64)
-    nodes, degree, tri, lcc = graph_clustering_kernel(e)
+    nodes, degree, tri, lcc = graph_clustering_kernel(
+        noisy_edges(GRAPHS[name]))
     g = nx.Graph()
     g.add_edges_from(GRAPHS[name])
     nxt = nx.triangles(g)
     nxc = nx.clustering(g)
+    assert sorted(nodes.tolist()) == sorted(g.nodes())
     for n, d, t, c in zip(nodes, degree, tri, lcc):
         assert d == g.degree[int(n)]
         assert t == nxt[int(n)]
@@ -160,34 +213,49 @@ def test_clustering_kernel_sparse_path_matches_dense(name, monkeypatch):
 
 
 def test_pagerank_kernel_sums_to_one_and_matches_dense_model():
-    # independent dense power-iteration reference (no rounding), run to
-    # convergence — the kernel's rounded trajectory must land within
-    # round-off of the fixpoint and agree on the top-5 ranking
-    e = np.array(GRAPHS["rand"], dtype=np.int64)
-    nodes, rank = graph_pagerank_kernel(e, iters=40, damping=0.85)
-    assert rank.sum() == pytest.approx(1.0, abs=1e-5)
-    idx = {int(n): i for i, n in enumerate(nodes)}
-    n = len(nodes)
-    A = np.zeros((n, n))
-    for u, v in {(min(a, b), max(a, b)) for a, b in GRAPHS["rand"]}:
-        A[idx[u], idx[v]] = A[idx[v], idx[u]] = 1.0
-    P = A / A.sum(axis=1, keepdims=True)
-    r = np.full(n, 1.0 / n)
-    for _ in range(500):
-        r = 0.15 / n + 0.85 * (P.T @ r)
-    assert np.allclose(rank, r, atol=1e-6)
-    assert set(np.argsort(-rank)[:5]) == set(np.argsort(-r)[:5])
+    """Per graph: 8 rounded iterations follow the per-iteration-rounded
+    model and sum to 1; 40 iterations land near the converged fixpoint
+    (an independent dense power iteration without rounding, run to
+    convergence; tolerance d^40 = 0.85^40 ~ 1.5e-3), and on the largest
+    graph within round-off of it with the same top-5 ranking."""
+    for name, edges in GRAPHS.items():
+        e = noisy_edges(edges)
+        g = nx.Graph()
+        g.add_edges_from(edges)
+        nodes, rank = graph_pagerank_kernel(e, iters=8, damping=0.85)
+        model = _pagerank_model(g, iters=8, d=0.85, dp=9)
+        assert nodes.tolist() == sorted(model), name
+        assert rank == pytest.approx([model[v] for v in model], abs=2e-9)
+        assert rank.sum() == pytest.approx(1.0, abs=1e-5)
+
+        nodes, rank = graph_pagerank_kernel(e, iters=40, damping=0.85)
+        assert rank.sum() == pytest.approx(1.0, abs=1e-5)
+        idx = {int(n): i for i, n in enumerate(nodes)}
+        n = len(nodes)
+        A = np.zeros((n, n))
+        for u, v in g.edges():
+            A[idx[u], idx[v]] = A[idx[v], idx[u]] = 1.0
+        P = A / A.sum(axis=1, keepdims=True)
+        r = np.full(n, 1.0 / n)
+        for _ in range(500):
+            r = 0.15 / n + 0.85 * (P.T @ r)
+        assert np.allclose(rank, r, atol=2e-3), name
+        if name == "rand":
+            assert np.allclose(rank, r, atol=1e-6)
+            assert set(np.argsort(-rank)[:5]) == set(np.argsort(-r)[:5])
 
 
 def test_summary_kernel_matches_networkx():
     for name, edges in GRAPHS.items():
-        s = graph_summary_kernel(np.array(edges, dtype=np.int64))
+        s = graph_summary_kernel(noisy_edges(edges))
         g = nx.Graph()
         g.add_edges_from(edges)
+        degs = [d for _, d in g.degree]
         assert s["n_nodes"] == g.number_of_nodes()
         assert s["n_edges"] == g.number_of_edges()
-        assert s["max_degree"] == max(d for _, d in g.degree)
+        assert s["max_degree"] == max(degs)
         assert s["density"] == pytest.approx(nx.density(g), abs=1e-9)
+        assert s["avg_degree"] == pytest.approx(np.mean(degs), abs=1e-9)
 
 
 def test_empty_and_selfloop_edges():
@@ -240,19 +308,6 @@ def test_round_half_up_negative_and_bulk_agreement():
 
 # ------------------------------------------------------------- mixing
 
-@pytest.mark.parametrize("kind", ["horizontal", "natural"])
-def test_fused_mixing_equals_relational(spark, series_df, kind):
-    from ts2g2_spark.operators.graphmetrics import (
-        graph_mixing, mixing_from_series,
-    )
-
-    edges = graphs.visibility_edges(series_df, kind=kind)
-    rel = _sorted_pdf(graph_mixing(edges), ["series_key"])
-    fus = _sorted_pdf(
-        mixing_from_series(series_df, kind=kind), ["series_key"])
-    pd.testing.assert_frame_equal(rel, fus[rel.columns.tolist()])
-
-
 def test_mixing_matches_networkx(spark, series_df):
     """assortativity == nx.degree_assortativity_coefficient and
     transitivity == nx.transitivity at the 6dp contract rounding, per
@@ -261,11 +316,8 @@ def test_mixing_matches_networkx(spark, series_df):
 
     got = {r.series_key: r for r in mixing_from_series(
         series_df, kind="horizontal").collect()}
-    from ts2g2_spark.operators.kernels import visibility_graph
 
-    for key, vals in SERIES.items():
-        e, _ = visibility_graph(np.asarray(vals, float),
-                                kind="horizontal")
+    for key, e in _graphs():
         if len(e) == 0:
             assert key not in got
             continue
@@ -291,11 +343,9 @@ def test_betweenness_matches_networkx(spark, series_df):
     (normalized) at the 9dp rounding, for every series graph including
     the 2-node degenerate one."""
     from ts2g2_spark.operators.graphmetrics import betweenness_from_series
-    from ts2g2_spark.operators.kernels import visibility_graph
 
     got = betweenness_from_series(series_df, kind="horizontal").toPandas()
-    for key, vals in SERIES.items():
-        e, _ = visibility_graph(np.asarray(vals, float), kind="horizontal")
+    for key, e in _graphs():
         sub = got[got.series_key == key].set_index("node")
         if len(e) == 0:
             assert sub.empty
@@ -325,13 +375,10 @@ def test_betweenness_path_graph_exact(spark):
 
 def test_path_metrics_match_networkx(spark, series_df):
     from ts2g2_spark.operators.graphmetrics import path_metrics_from_series
-    from ts2g2_spark.operators.kernels import visibility_graph
 
     got = {r.series_key: r for r in path_metrics_from_series(
         series_df, kind="horizontal").collect()}
-    for key, vals in SERIES.items():
-        e, _ = visibility_graph(np.asarray(vals, float),
-                                kind="horizontal")
+    for key, e in _graphs():
         if len(e) == 0:
             assert key not in got
             continue
@@ -362,11 +409,9 @@ def test_kcore_matches_networkx(spark, series_df):
     """Simultaneous-peel core numbers == nx.core_number for every
     series graph — exact integers, no tolerance."""
     from ts2g2_spark.operators.graphmetrics import kcore_from_series
-    from ts2g2_spark.operators.kernels import visibility_graph
 
     got = kcore_from_series(series_df, kind="horizontal").toPandas()
-    for key, vals in SERIES.items():
-        e, _ = visibility_graph(np.asarray(vals, float), kind="horizontal")
+    for key, e in _graphs():
         sub = got[got.series_key == key].set_index("node")["core"]
         if len(e) == 0:
             assert sub.empty
@@ -436,37 +481,6 @@ def test_lpa_kernel_random_graphs():
         graph_lpa_kernel(np.array([[0, 1]]), n_iter=0)
 
 
-def test_lpa_relational_matches_fused(spark):
-    from ts2g2_spark.operators import graphmetrics
-    from ts2g2_spark.operators.kernels import visibility_graph
-
-    rng = np.random.default_rng(23)
-    series_rows = [
-        (str(k), [float(x) for x in rng.integers(0, 9, 40)])
-        for k in range(5)
-    ]
-    sdf = spark.createDataFrame(
-        series_rows, "series_key string, values array<double>")
-    fused = {
-        (r.series_key, r.node): r.community
-        for r in graphmetrics.lpa_from_series(
-            sdf, kind="horizontal", n_iter=4).collect()
-    }
-    edge_rows = []
-    for key, vals in series_rows:
-        e, _ = visibility_graph(np.asarray(vals, float), kind="horizontal")
-        edge_rows += [(key, int(a), int(b)) for a, b in e]
-    edf = spark.createDataFrame(
-        edge_rows, "series_key string, src long, dst long")
-    rel = {
-        (r.series_key, r.node): r.community
-        for r in graphmetrics.lpa_communities(edf, n_iter=4).collect()
-    }
-    assert fused == rel
-    with pytest.raises(ValueError):
-        graphmetrics.lpa_communities(edf, n_iter=0)
-
-
 def test_lpa_labels_two_cliques():
     """Two triangles joined by one bridge edge resolve to exactly the
     two clique communities (the label VALUES are schedule artifacts —
@@ -504,36 +518,6 @@ def test_modularity_kernel_vs_networkx():
         assert n_comm == len(part)
     # edgeless
     assert graph_modularity_kernel(np.empty((0, 2), np.int64)) == (0, 0.0)
-
-
-def test_modularity_relational_matches_fused(spark):
-    from ts2g2_spark.operators import graphmetrics
-    from ts2g2_spark.operators.kernels import visibility_graph
-
-    rng = np.random.default_rng(37)
-    series_rows = [
-        (str(k), [float(x) for x in rng.integers(0, 9, 35)])
-        for k in range(4)
-    ]
-    sdf = spark.createDataFrame(
-        series_rows, "series_key string, values array<double>")
-    fused = {
-        r.series_key: (r.n_communities, r.modularity)
-        for r in graphmetrics.lpa_modularity_from_series(
-            sdf, n_iter=4).collect()
-    }
-    edge_rows = []
-    for key, vals in series_rows:
-        e, _ = visibility_graph(np.asarray(vals, float), kind="horizontal")
-        edge_rows += [(key, int(a), int(b)) for a, b in e]
-    edf = spark.createDataFrame(
-        edge_rows, "series_key string, src long, dst long")
-    comm = graphmetrics.lpa_communities(edf, n_iter=4)
-    rel = {
-        r.series_key: (r.n_communities, r.modularity)
-        for r in graphmetrics.modularity(edf, comm).collect()
-    }
-    assert fused == rel
 
 
 # ------------------------------------------------------------------ WL
@@ -600,79 +584,30 @@ def test_wl_fingerprint_invariance_and_power():
     assert _fp_of(c6) == _fp_of(two_c3)
 
 
-def test_wl_relational_matches_fused(spark):
-    from ts2g2_spark.operators import graphmetrics
-    from ts2g2_spark.operators.kernels import visibility_graph
-
-    rng = np.random.default_rng(37)
-    series_rows = [
-        (str(k), [float(x) for x in rng.integers(0, 9, 40)])
-        for k in range(5)
-    ]
-    sdf = spark.createDataFrame(
-        series_rows, "series_key string, values array<double>")
-    fused = {
-        r.series_key: (r.n_nodes, r.wl_fp)
-        for r in graphmetrics.wl_from_series(
-            sdf, kind="horizontal", n_iter=3).collect()
-    }
-    edge_rows = []
-    for key, vals in series_rows:
-        e, _ = visibility_graph(np.asarray(vals, float), kind="horizontal")
-        edge_rows += [(key, int(a), int(b)) for a, b in e]
-    edf = spark.createDataFrame(
-        edge_rows, "series_key string, src long, dst long")
-    rel = {
-        r.series_key: (r.n_nodes, r.wl_fp)
-        for r in graphmetrics.wl_fingerprints(edf, n_iter=3).collect()
-    }
-    assert fused == rel
-    with pytest.raises(ValueError):
-        graphmetrics.wl_labels(edf, n_iter=0)
-
-
-@pytest.mark.parametrize("kind", ["horizontal", "natural"])
-@pytest.mark.parametrize("min_cn", [1, 2])
-def test_fused_link_prediction_bitequal_relational(
-    spark, series_df, kind, min_cn
-):
-    from ts2g2_spark.operators.graphmetrics import (
-        link_prediction, link_prediction_from_series,
-    )
-
-    edges = graphs.visibility_edges(series_df, kind=kind)
-    rel = _sorted_pdf(
-        link_prediction(edges, min_cn=min_cn), ["series_key", "u", "v"])
-    fus = _sorted_pdf(
-        link_prediction_from_series(series_df, kind=kind, min_cn=min_cn),
-        ["series_key", "u", "v"])
-    assert len(rel), "fixture must produce candidate pairs"
-    pd.testing.assert_frame_equal(rel, fus[rel.columns.tolist()])
-
-
 def test_link_prediction_kernel_matches_networkx():
     from ts2g2_spark.operators.kernels import link_prediction_kernel
 
-    g = nx.Graph()
-    g.add_edges_from([(0, 1), (1, 2), (2, 3), (0, 2), (1, 3), (3, 4),
-                      (4, 5), (2, 5)])
-    e = np.array(g.edges(), dtype=np.int64)
-    u, v, cn, jacc, aa = link_prediction_kernel(e, min_cn=1)
-    got = {(int(a), int(b)): (int(c), float(j), float(s))
-           for a, b, c, j, s in zip(u, v, cn, jacc, aa)}
-    nonedges = list(nx.non_edges(g))
-    want_j = {tuple(sorted((a, b))): p
-              for a, b, p in nx.jaccard_coefficient(g, nonedges)}
-    want_a = {tuple(sorted((a, b))): p
-              for a, b, p in nx.adamic_adar_index(g, nonedges)}
-    want_c = {tuple(sorted((a, b))): len(list(
-        nx.common_neighbors(g, a, b))) for a, b in nonedges}
-    want = {k: v for k, v in want_c.items() if v >= 1}
-    assert set(got) == set(want)
-    for k, (c, j, s) in got.items():
-        assert c == want_c[k]
-        assert j == pytest.approx(want_j[k], abs=1e-12)
-        assert s == pytest.approx(want_a[k], abs=1e-12)
+    small = [(0, 1), (1, 2), (2, 3), (0, 2), (1, 3), (3, 4), (4, 5), (2, 5)]
+    for edges in [small, *GRAPHS.values()]:
+        g = nx.Graph()
+        g.add_edges_from(edges)
+        u, v, cn, jacc, aa = link_prediction_kernel(noisy_edges(edges),
+                                                    min_cn=1)
+        got = {(int(a), int(b)): (int(c), float(j), float(s))
+               for a, b, c, j, s in zip(u, v, cn, jacc, aa)}
+        nonedges = list(nx.non_edges(g))
+        want_j = {tuple(sorted((a, b))): p
+                  for a, b, p in nx.jaccard_coefficient(g, nonedges)}
+        want_a = {tuple(sorted((a, b))): p
+                  for a, b, p in nx.adamic_adar_index(g, nonedges)}
+        want_c = {tuple(sorted((a, b))): len(list(
+            nx.common_neighbors(g, a, b))) for a, b in nonedges}
+        want = {k: v for k, v in want_c.items() if v >= 1}
+        assert set(got) == set(want)
+        for k, (c, j, s) in got.items():
+            assert c == want_c[k]
+            assert j == pytest.approx(want_j[k], abs=1e-12)
+            assert s == pytest.approx(want_a[k], abs=1e-12)
 
 
 def test_link_prediction_kernel_empty_and_min_cn():
@@ -681,6 +616,13 @@ def test_link_prediction_kernel_empty_and_min_cn():
     u, v, cn, jacc, aa = link_prediction_kernel(
         np.empty((0, 2), dtype=np.int64))
     assert len(u) == 0 and len(jacc) == 0
+    # a single edge: no wedge, no candidates
+    assert len(link_prediction_kernel(np.array([[0, 1]]))[0]) == 0
+    # path 0-1-2: exactly one prediction (0,2) through hub 1 (deg 2)
+    u, v, cn, jacc, aa = link_prediction_kernel(np.array([[0, 1], [1, 2]]))
+    assert (u.tolist(), v.tolist(), cn.tolist()) == ([0], [2], [1])
+    assert jacc.tolist() == [1.0]  # cn=1, du=dv=1, union=1
+    assert aa.tolist() == [1.0 / np.log(2.0)]
     # a path graph: every candidate pair has exactly 1 common neighbor
     path = np.array([(i, i + 1) for i in range(5)], dtype=np.int64)
     u1, *_ = link_prediction_kernel(path, min_cn=1)
@@ -691,32 +633,21 @@ def test_link_prediction_kernel_empty_and_min_cn():
 
 
 @pytest.mark.parametrize("cap", [2, 3, 5])
-def test_link_prediction_hub_cap_bitequal_both_strategies(
-    spark, series_df, cap
-):
-    """Under max_hub_degree both strategies stay bit-identical, and the
-    capped candidate set is a subset of the exact one with cn bounded
-    by the exact cn (wedges only removed, never added)."""
-    from ts2g2_spark.operators.graphmetrics import (
-        link_prediction, link_prediction_from_series,
-    )
-
-    edges = graphs.visibility_edges(series_df, kind="horizontal")
-    rel = _sorted_pdf(
-        link_prediction(edges, min_cn=1, max_hub_degree=cap),
-        ["series_key", "u", "v"])
-    fus = _sorted_pdf(
-        link_prediction_from_series(
-            series_df, kind="horizontal", min_cn=1, max_hub_degree=cap),
-        ["series_key", "u", "v"])
-    pd.testing.assert_frame_equal(rel, fus[rel.columns.tolist()])
-    exact = _sorted_pdf(
-        link_prediction(edges, min_cn=1), ["series_key", "u", "v"])
-    ex = {(r.series_key, r.u, r.v): r.cn for r in exact.itertuples()}
-    for r in rel.itertuples():
-        assert (r.series_key, r.u, r.v) in ex
-        assert r.cn <= ex[(r.series_key, r.u, r.v)]
-    assert len(rel) <= len(exact)
+def test_link_prediction_hub_cap_bitequal_both_strategies(series_df, cap):
+    """Under max_hub_degree the Spark op and the kernel run per series
+    stay bit-identical, and the capped candidate set is a subset of the
+    exact one with cn bounded by the exact cn (wedges only removed, never
+    added)."""
+    capped = Counter(tuple(r) for r in gm.link_prediction_from_series(
+        series_df, kind="horizontal", max_hub_degree=cap).collect())
+    assert capped == Counter(
+        (k, *row) for k, e in _graphs() for row in _lp(e, max_hub_degree=cap))
+    exact = {(k, u, v): cn for k, u, v, cn, *_ in
+             gm.link_prediction_from_series(
+                 series_df, kind="horizontal").collect()}
+    for k, u, v, cn, *_ in capped:
+        assert cn <= exact[(k, u, v)], (cap, k, u, v)
+    assert len(capped) <= len(exact)
 
 
 def test_link_prediction_kernel_hub_cap_star():
@@ -736,28 +667,24 @@ def test_link_prediction_kernel_hub_cap_star():
         link_prediction_kernel(star, min_cn=1, max_hub_degree=0)
 
 
-def test_link_prediction_hub_cap_nontrivial_survivors(spark):
-    """A cap that demonstrably KEEPS some candidates (cap=8 on a
-    50-point random HVG keeps ~30 of ~1500) — guards against the cap
-    parity tests passing trivially on all-empty frames."""
-    from ts2g2_spark.operators.graphmetrics import (
-        link_prediction, link_prediction_from_series,
-    )
+def test_link_prediction_hub_cap_nontrivial_survivors():
+    """Capped candidates are a subset of the exact ones with cn bounded by
+    the exact cn (wedges are only removed, never added), and a cap that
+    demonstrably KEEPS some candidates (cap=8 on a 50-point random HVG
+    keeps ~30 of ~1500) guards against the property holding trivially
+    on all-empty output."""
+    from ts2g2_spark.operators.kernels import link_prediction_kernel
 
     rng = np.random.default_rng(3)
-    pdf = pd.DataFrame({
-        "series_key": ["r1", "r2"],
-        "values": [rng.normal(size=50).tolist(),
-                   rng.normal(size=40).tolist()],
-    })
-    df = spark.createDataFrame(pdf)
-    edges = graphs.visibility_edges(df, kind="horizontal")
-    rel = _sorted_pdf(
-        link_prediction(edges, min_cn=1, max_hub_degree=8),
-        ["series_key", "u", "v"])
-    fus = _sorted_pdf(
-        link_prediction_from_series(df, min_cn=1, max_hub_degree=8),
-        ["series_key", "u", "v"])
-    n_exact = link_prediction(edges, min_cn=1).count()
-    assert 0 < len(rel) < n_exact
-    pd.testing.assert_frame_equal(rel, fus[rel.columns.tolist()])
+    kept, total = 0, 0
+    for n in (50, 40):
+        e, _ = K.visibility_graph(rng.normal(size=n), kind="horizontal")
+        u, v, cn, *_ = link_prediction_kernel(e)
+        exact = dict(zip(zip(u.tolist(), v.tolist()), cn.tolist()))
+        total += len(exact)
+        for cap in (2, 3, 5, 8):
+            u, v, cn, *_ = link_prediction_kernel(e, max_hub_degree=cap)
+            for key, c in zip(zip(u.tolist(), v.tolist()), cn.tolist()):
+                assert c <= exact[key], (n, cap, key)
+        kept += len(u)  # cap 8
+    assert 0 < kept < total

@@ -149,13 +149,17 @@ def _pair_counts_after_merges_kernel(merges: Sequence[tuple[int, int, int]],
             mask = row[:-1] == row[1:]
             if not mask.any():
                 continue
-            # pack (a, b) into one int64 key: ids are int32-bounded and
-            # non-negative in this table shape, so a<<32 | b is exact
-            key = (flat[:-1][mask] << np.int64(32)) | flat[1:][mask]
+            # pack the int32 pair (a, b) into one int64 key: a in the high
+            # half, b's 32-bit pattern in the low half (masked, so a
+            # negative b cannot set the high bits); unpacking reads the
+            # low half back through int32
+            low32 = np.int64(0xFFFFFFFF)
+            key = ((flat[:-1][mask] << np.int64(32))
+                   | (flat[1:][mask] & low32))
             uniq, cnt = np.unique(key, return_counts=True)
             yield pd.DataFrame({
                 "tok_a": (uniq >> np.int64(32)).astype(np.int64),
-                "tok_b": (uniq & np.int64(0xFFFFFFFF)).astype(np.int64),
+                "tok_b": (uniq & low32).astype(np.int32).astype(np.int64),
                 "cnt": cnt.astype(np.int64),
             })
     return kern

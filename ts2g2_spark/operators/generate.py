@@ -254,31 +254,43 @@ def generate_ordinal_sequences(
 
 
 # ------------------------------------------- hash-replayable walks (R2/R7)
-def hash_walks_fused(
+def hash_walks(
     edges: DataFrame,
     n_walks: int = 8,
     n_steps: int = 16,
     run_seed: int = 42,
 ) -> DataFrame:
-    """Fused Arrow twin of `hash_walks`: identical rows (same md5 draw
-    schedule, same int64 interval arithmetic), computed in ONE
-    applyInPandas pass over per-series edge groups instead of n_steps
-    chained joins.
+    """Deterministic REPLAYABLE weighted random walks over per-series
+    transition graphs — the oracle-checkable counterpart of the
+    seeded-RNG visitors (ref model.py random walk loop; semantics:
+    weighted node choice proportional to edge weight, halt on dead ends
+    or after n_steps).
 
-    Why it exists: the relational loop unions n_steps+1 step frames
-    whose lineages nest (step t replays joins 1..t inside one action —
-    O(n_steps^2) join executions), which is correct and shuffle-free
-    but pays ~n_steps^2/2 broadcast-join evaluations of plan overhead
-    per run.  Per-series transition graphs are tiny by construction
-    (Q^2 edges for a quantile graph), so fusing the whole walk into a
-    per-series kernel costs one shuffle on series_key and a few
-    thousand md5 calls — the 100-TB posture is unchanged
-    (embarrassingly parallel across series, no driver state, no
-    broadcast) and the ANSI-SQL oracle still replays every row.
+    Where `generate_sequences` replays the reference's Mersenne-Twister
+    RNG bit-exactly (and therefore can never have an ANSI-SQL oracle),
+    this variant derives EVERY random draw from the portable md5 hash
+    (functions.hashing.h64) of (run_seed, series_key, walk_id, step,
+    node) and does ALL weight arithmetic in int64:
 
-    Kept alongside the relational loop (`hash_walks`), which remains
-    the pure-Catalyst reference: tests pin frame equality between the
-    two and the recursive-CTE oracle."""
+      start node : node whose dense rank == h64('start|..') % n_nodes
+      next node  : out-edge whose cumulative-weight interval
+                   [lo, hi) (dst order) contains h64('step|..') %
+                   total_w(node)
+
+    so a recursive-CTE oracle reproduces every row exactly — no float,
+    no RNG state, no rounding contract.
+
+    edges: (series_key, src long, dst long, w long) with INTEGER
+    weights (e.g. graphs.qg_edges(counts=True) transition counts).
+    Returns the long frame (series_key, walk_id, step, node), step 0 =
+    start.
+
+    One applyInPandas pass over per-series edge groups: one shuffle on
+    series_key, then each series' walks run in one kernel call.
+    Per-series transition graphs are tiny by construction (Q^2 edges for
+    a quantile graph), so a series costs a few thousand md5 calls; walk
+    state is never collected and the work is embarrassingly parallel
+    across series."""
     from ts2g2_spark.functions.hashing import h64_py
 
     sk_type = edges.schema["series_key"].dataType.simpleString()
@@ -293,8 +305,7 @@ def hash_walks_fused(
         ws = g["w"].to_numpy(np.int64)
         nodes = np.unique(np.concatenate([srcs, dsts]))
         nn = len(nodes)
-        # per-src cumulative [lo, hi) intervals in dst order — the same
-        # windowed cumsum the relational loop builds
+        # per-src cumulative [lo, hi) intervals in dst order
         out_edges: dict[int, tuple] = {}
         for s in np.unique(srcs):
             m = srcs == s
@@ -308,7 +319,7 @@ def hash_walks_fused(
             rows.append((sk, wid, 0, node))
             for t in range(1, n_steps + 1):
                 oe = out_edges.get(node)
-                if oe is None:  # dead end: the relational join drops too
+                if oe is None:  # dead end: the walk halts
                     break
                 d, hi, tw = oe
                 u = h64_py(
@@ -320,109 +331,3 @@ def hash_walks_fused(
 
     return edges.groupBy("series_key").applyInPandas(kern, schema=schema)
 
-
-def hash_walks(
-    edges: DataFrame,
-    n_walks: int = 8,
-    n_steps: int = 16,
-    run_seed: int = 42,
-    broadcast_edges: bool = True,
-) -> DataFrame:
-    """Deterministic REPLAYABLE weighted random walks over per-series
-    transition graphs — the oracle-checkable twin of the seeded-RNG
-    visitors (ref model.py random walk loop; semantics: weighted node
-    choice proportional to edge weight, halt on dead ends or after
-    n_steps).
-
-    Where `generate_sequences` replays the reference's Mersenne-Twister
-    RNG bit-exactly (and therefore can never have an ANSI-SQL oracle),
-    this variant derives EVERY random draw from the portable md5 hash
-    (functions.hashing.h64) of (run_seed, series_key, walk_id, step,
-    node) and does ALL weight arithmetic in int64:
-
-      start node : node whose dense rank == h64('start|..') % n_nodes
-      next node  : out-edge whose cumulative-weight interval
-                   [lo, hi) contains h64('step|..') % total_w(node)
-
-    so a recursive-CTE oracle reproduces every row exactly — no float,
-    no RNG state, no rounding contract.
-
-    edges: (series_key, src long, dst long, w long) with INTEGER
-    weights (e.g. qg_edges_relational(normalize=False) transition
-    counts).  Returns the long frame (series_key, walk_id, step, node),
-    step 0 = start.
-
-    Scale shape: the cumulative-weight edge frame and the node-index
-    frame are built with one window pass each, then the walk loop is
-    n_steps BROADCAST hash joins — zero shuffles per step when
-    broadcast_edges=True (per-series graphs are small: Q^2 edges for a
-    quantile graph; set False for giant graphs to fall back to
-    shuffle equi-joins on (series_key, node)).  Walk state rows are
-    never collected; fan-out is (n_series x n_walks) rows per step,
-    embarrassingly parallel at any corpus size."""
-    from ts2g2_spark.functions.hashing import h64
-
-    W = __import__("pyspark.sql.window", fromlist=["Window"]).Window
-    mb = F.broadcast if broadcast_edges else (lambda df: df)
-
-    srcw = W.partitionBy("series_key", "src")
-    cum = edges.select(
-        "series_key", "src", "dst", F.col("w").cast("long").alias("w"),
-        F.sum("w").over(srcw.orderBy("dst").rowsBetween(
-            W.unboundedPreceding, W.currentRow)).alias("hi"),
-        F.sum("w").over(srcw).alias("tw"),
-    ).withColumn("lo", F.col("hi") - F.col("w"))
-
-    nodes = (
-        edges.select("series_key", F.col("src").alias("node"))
-        .unionByName(edges.select("series_key", F.col("dst").alias("node")))
-        .distinct()
-        .select(
-            "series_key", "node",
-            (F.row_number().over(
-                W.partitionBy("series_key").orderBy("node")) - 1)
-            .alias("idx"),
-            F.count(F.lit(1)).over(W.partitionBy("series_key"))
-            .alias("nn"),
-        )
-    )
-
-    walk_ids = edges.sparkSession.range(n_walks).select(
-        F.col("id").cast("long").alias("walk_id"))
-    starts = (
-        nodes.select("series_key", "nn").distinct()
-        .crossJoin(mb(walk_ids))
-        .withColumn(
-            "idx",
-            h64(F.concat_ws(
-                "|", F.lit("start"), F.lit(str(run_seed)),
-                F.col("series_key"), F.col("walk_id"))) % F.col("nn"))
-        .join(nodes, ["series_key", "idx", "nn"])
-        .select("series_key", "walk_id", F.lit(0).alias("step"), "node")
-    )
-
-    cumb = mb(cum)
-    out = [starts]
-    state = starts
-    for t in range(1, n_steps + 1):
-        u = h64(F.concat_ws(
-            "|", F.lit("step"), F.lit(str(run_seed)),
-            F.col("series_key"), F.col("walk_id"),
-            F.lit(str(t)), F.col("node")))
-        nxt = (
-            state.withColumn("u", u)
-            .join(cumb.withColumnRenamed("series_key", "sk"),
-                  (F.col("series_key") == F.col("sk"))
-                  & (F.col("node") == F.col("src"))
-                  & ((F.col("u") % F.col("tw")) >= F.col("lo"))
-                  & ((F.col("u") % F.col("tw")) < F.col("hi")))
-            .select("series_key", "walk_id",
-                    F.lit(t).alias("step"),
-                    F.col("dst").alias("node"))
-        )
-        out.append(nxt)
-        state = nxt
-    res = out[0]
-    for f in out[1:]:
-        res = res.unionByName(f)
-    return res

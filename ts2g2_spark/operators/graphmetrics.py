@@ -1,41 +1,38 @@
-"""Graph-metric operators over ts2g2 edge frames (degree statistics,
-triangle counting / local clustering, fixed-iteration PageRank).
+"""Graph-metric operators over ts2g2 per-series graphs.
 
 The reference materializes every series graph as an in-memory networkx
 object and leaves metric extraction to the caller (core/model.py:433 is
-the only built-in: eigenvector centrality).  These operators provide the
-standard graph summaries RELATIONALLY over the (series_key, src, dst)
-edge frame the visibility/ordinal/quantile strategies emit, so metrics
-for millions of per-series graphs run as a handful of equi-keyed joins
-and partial aggregates — no per-graph object materialization:
+the only built-in: eigenvector centrality).  ts2g2's unit of work is the
+per-series segment, so a graph metric is row-local: the `*_from_series`
+operators build each series' visibility graph AND run the metric on it
+inside the Arrow batch that holds the series, with zero shuffles, through
+the one emitter of operators/graphs.py (`graphs._map_series`).  The
+numeric semantics (canonical undirected edge set, HALF_UP / IEEE-floor
+rounding contracts, fixed iteration schedules) live in the
+`kernels.graph_*_kernel` functions; the contract's DuckDB oracles replay
+them.
 
-  * `degrees` / `graph_summary` — one shuffle on (series_key, node),
-    then a per-series aggregate.
-  * `triangle_counts` / `clustering_coefficients` — the classic
-    index-ordered wedge join: edges canonicalized to a < b, wedges
-    (a<b<c) built by one self-equi-join on the middle node, closed by a
-    second equi-join.  Each triangle is generated exactly once; the
-    wedge fan-out per middle node is (#lower neighbors x #higher
-    neighbors), bounded by the per-series segment length for ts2g2
-    graphs (degree-ordered orientation is the drop-in fix if a caller
-    feeds one huge skewed graph).
-  * `pagerank` — relational power iteration with a FIXED iteration
-    count; per-iteration ranks are rounded to `round_dp` decimals so the
-    result is a deterministic cross-engine contract (the SQL oracle
-    replays the identical unrolled iterations; order-dependent float
-    summation differences die at each rounding step instead of
-    accumulating).
+Three relational operators stay for edge frames that already exist:
+`canonical_edges`, `degrees` and `degree_exponent` (one aggregate over
+the degree frame).
 
-All operators treat the edge frame as UNDIRECTED and ignore self-loops
-and duplicate/reversed duplicates (canonicalize + distinct first), which
-matches how the reference's strategies populate nx.Graph (parallel edge
-inserts collapse, to_graph/strategies.py:541).
+All operators treat the graph as UNDIRECTED and ignore self-loops and
+duplicate/reversed duplicates, which matches how the reference's
+strategies populate nx.Graph (parallel edge inserts collapse,
+to_graph/strategies.py:541).  A series whose graph has no edges yields no
+rows, and so does a null `values` row.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable, Sequence
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ts2g2_spark.operators import graphs, kernels
 
 
 def canonical_edges(edges: DataFrame) -> DataFrame:
@@ -65,159 +62,6 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def graph_summary(edges: DataFrame) -> DataFrame:
-    """Per-series graph summary: node/edge counts, density, degree
-    stats.  Built from the `degrees` shuffle plus one tiny per-series
-    aggregate (n_edges = sum(degree)/2 — rides the same pass instead of
-    re-scanning the edge frame)."""
-    d = degrees(edges)
-    n = F.count(F.lit(1)).cast("long")
-    m = (F.sum("degree") / 2).cast("long")
-    return d.groupBy("series_key").agg(
-        n.alias("n_nodes"),
-        m.alias("n_edges"),
-        F.round(
-            F.when(n > 1, (2.0 * m) / (n * (n - F.lit(1)))).otherwise(0.0),
-            9,
-        ).alias("density"),
-        F.max("degree").alias("max_degree"),
-        # sum(degree)/n instead of avg(): the division operands are exact
-        # integers, so both engines produce the identical double
-        F.round(F.sum("degree") / n, 9).alias("avg_degree"),
-    )
-
-
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """Per-node triangle participation counts: (series_key, node,
-    triangles).  Nodes in no triangle are absent (join back via
-    `clustering_coefficients` for the dense form).
-
-    Wedge join on the middle node under the a<b<c total order, closed by
-    an equi-join on the (low, high) endpoints — every triangle appears
-    exactly once, and both joins are plain equi-joins the optimizer can
-    shuffle-hash.  No graph object, no adjacency matrix."""
-    e = canonical_edges(edges)
-    e2 = e.select(
-        "series_key", F.col("a").alias("b"), F.col("b").alias("c")
-    )
-    e3 = e.select(
-        F.col("series_key").alias("k3"),
-        F.col("a").alias("ca"),
-        F.col("b").alias("cb"),
-    )
-    tri = (
-        e.join(e2, ["series_key", "b"])
-        .join(
-            e3,
-            (F.col("k3") == F.col("series_key"))
-            & (F.col("ca") == F.col("a"))
-            & (F.col("cb") == F.col("c")),
-        )
-        .select("series_key", "a", "b", "c")
-    )
-    corners = (
-        tri.select("series_key", F.col("a").alias("node"))
-        .unionByName(tri.select("series_key", F.col("b").alias("node")))
-        .unionByName(tri.select("series_key", F.col("c").alias("node")))
-    )
-    return corners.groupBy("series_key", "node").agg(
-        F.count(F.lit(1)).alias("triangles")
-    )
-
-
-def clustering_coefficients(edges: DataFrame) -> DataFrame:
-    """Local clustering coefficient per node: (series_key, node, degree,
-    triangles, lcc) with lcc = 2T / (d (d-1)), 0.0 for degree < 2
-    (networkx convention).  Left join of the triangle counts onto the
-    degree frame — both sides already keyed on (series_key, node), and
-    the triangle side is the smaller one."""
-    d = degrees(edges)
-    t = triangle_counts(edges)
-    tri = F.coalesce(F.col("triangles"), F.lit(0)).alias("triangles")
-    deg = F.col("degree")
-    return d.join(t, ["series_key", "node"], "left").select(
-        "series_key",
-        "node",
-        "degree",
-        tri,
-        F.round(
-            F.when(
-                deg > 1,
-                2.0 * F.coalesce(F.col("triangles"), F.lit(0))
-                / (deg * (deg - F.lit(1))),
-            ).otherwise(0.0),
-            9,
-        ).alias("lcc"),
-    )
-
-
-def graph_mixing(edges: DataFrame, round_dp: int = 6) -> DataFrame:
-    """Per-series degree assortativity + global transitivity:
-    (series_key, assortativity, transitivity).
-
-    assortativity = Pearson corr of the degree pairs at either end of
-    every edge, both orientations (the joint-degree-distribution
-    convention networkx uses); NULL when undefined (constant degrees).
-    Because the orientation-symmetrized pair set has identical x and y
-    marginals, Pearson reduces to the EXACT rational
-
-        (n*sum(du*dv) - sum(du)^2) / (n*sum(du^2) - sum(du)^2)
-
-    over integer sums — no sqrt, no float accumulation, one double
-    division — so the value is bit-identical across engines (integer
-    sums stay exact below 2^53; fine for per-series segment graphs,
-    re-derive in int128/decimal for one genuinely huge graph).
-    transitivity = 3*triangles / wedges with wedges = sum C(d_v, 2);
-    NULL when the graph has no wedge; also an exact integer ratio.
-    Both quantized with the IEEE floor(x*10^dp + 0.5)/10^dp formula.
-
-    Physical shape: the degree frame joins the symmetrized edge list
-    twice (equi-joins on (series, node) — both sides partial-agg'd
-    small), plus the triangle pipeline reused from
-    `clustering_coefficients`; everything keys on the series."""
-    e = canonical_edges(edges)
-    d = degrees(edges)
-    sym = e.select(
-        "series_key", F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionByName(
-        e.select("series_key", F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    du = d.select("series_key", F.col("node").alias("u"),
-                  F.col("degree").alias("du"))
-    dv = d.select("series_key", F.col("node").alias("v"),
-                  F.col("degree").alias("dv"))
-    ac = (
-        sym.join(du, ["series_key", "u"]).join(dv, ["series_key", "v"])
-        .groupBy("series_key").agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("du").alias("_sx"),
-            F.sum(F.col("du") * F.col("dv")).alias("_sxy"),
-            F.sum(F.col("du") * F.col("du")).alias("_sxx"),
-        )
-    )
-    cc = clustering_coefficients(edges)
-    tw = cc.groupBy("series_key").agg(
-        F.sum("triangles").alias("_t3"),
-        F.sum(F.col("degree") * (F.col("degree") - 1) / 2).alias("_w"),
-    )
-    scale = 10.0 ** round_dp
-
-    def quant(x):
-        return F.floor(x * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
-
-    num = F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sx")
-    den = F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    return ac.join(tw, "series_key").select(
-        "series_key",
-        (F.when(den > 0,
-                quant(num.cast("double") / den.cast("double")))
-         + F.lit(0.0)).alias("assortativity"),
-        (F.when(F.col("_w") > 0,
-                quant(F.col("_t3") / F.col("_w")))
-         + F.lit(0.0)).alias("transitivity"),
-    )
-
-
 def degree_exponent(edges: DataFrame, round_dp: int = 6) -> DataFrame:
     """Power-law exponent of each series graph's degree distribution —
     the visibility-graph literature's one-number chaos/noise
@@ -233,9 +77,8 @@ def degree_exponent(edges: DataFrame, round_dp: int = 6) -> DataFrame:
     sum accumulates in engine order, the rounded value is the contract
     (the acf/corr discipline).
 
-    Output: (series_key, n_nodes, dmin, alpha).  Purely relational —
-    one aggregate over the shared `degrees` frame, no kernel twin
-    needed (the per-series result is a scalar of that frame)."""
+    Output: (series_key, n_nodes, dmin, alpha).  One aggregate over the
+    shared `degrees` frame (the per-series result is a scalar of it)."""
     d = degrees(edges)
     n = F.count(F.lit(1))
     return d.groupBy("series_key").agg(
@@ -248,278 +91,140 @@ def degree_exponent(edges: DataFrame, round_dp: int = 6) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 8,
-    damping: float = 0.85,
-    round_dp: int = 9,
-    checkpoint_every: int = 2,
+# ---------------------------------------------------------------------------
+# Per-series metrics: visibility graph + metric in one map-only pass
+# ---------------------------------------------------------------------------
+_TYPES = {"long": (np.int64, pa.int64()),
+          "double": (np.float64, pa.float64()),
+          "boolean": (np.bool_, pa.bool_())}
+
+
+def _per_series(
+    series_df: DataFrame,
+    kind: str,
+    limit: int,
+    cols: Sequence[tuple[str, str]],
+    metric: Callable[[np.ndarray], Sequence],
 ) -> DataFrame:
-    """Fixed-iteration PageRank per series graph: (series_key, node,
-    rank).  Relational power iteration —
+    """visibility_edges(kind, limit) |> metric per series, map-only.
 
-        r_{k+1}(v) = round((1-d)/n + d * sum_{u~v} r_k(u)/deg(u), dp)
+    metric(edges) returns one sequence per (name, type) of `cols`, all of
+    the series' output-row count (zero-length for none).  A None in a
+    double column becomes null."""
+    dtypes = [_TYPES[t] for _, t in cols]
+    schema = ", ".join(
+        ["series_key string"] + [f"{n} {t}" for n, t in cols])
 
-    over the symmetrized edge list.  Each iteration is one shuffle-join
-    of the rank frame against the (cached) adjacency plus one partial
-    aggregate on the destination key; lineage depth grows linearly in
-    `iters` (a fixed small constant), and the adjacency/degree frames
-    are cached because every iteration re-reads them.  Undirected graphs
-    whose nodes all come from edges have deg >= 1, so there is no
-    dangling-mass term.
+    def kernel(y: np.ndarray) -> tuple[np.ndarray, ...]:
+        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
+        return tuple(np.asarray(c, dt) for c, (dt, _) in
+                     zip(metric(e), dtypes))
 
-    DETERMINISM CONTRACT: ranks are rounded to `round_dp` decimals at
-    EVERY iteration (not just the last), so order-dependent float
-    summation differences between engines cannot accumulate — the SQL
-    oracle unrolls the same iterations with the same per-iteration
-    rounding and hash-matches.  EAGER API for iters >=
-    `checkpoint_every` (like `dedup.connected_components`): the rank
-    frame localCheckpoints every `checkpoint_every` iterations, so
-    construction runs jobs then.  Truncating aggressively is a measured
-    4.8x win (8.0s -> 1.65s on the sf0.1 HVG, bit-identical output,
-    interleaved median-of-ratios): the all-lazy multi-iteration plan's
-    cost is Catalyst planning + AQE replanning, superlinear in lineage
-    depth, not the 57k-row data.  Set checkpoint_every > iters to get
-    a fully lazy single plan (e.g. to inspect it)."""
-    e = canonical_edges(edges)
-    if iters >= checkpoint_every:
-        # materialize the (small) canonical edge frame so the iteration
-        # checkpoints replay against stored bytes, not the caller's
-        # upstream lineage (e.g. a visibility kernel) -- the measured
-        # win below assumes this
-        e = e.localCheckpoint(eager=True)
-    sym = (
-        e.select("series_key", F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(
-            e.select(
-                "series_key", F.col("b").alias("u"), F.col("a").alias("v")
-            )
-        )
-    )
-    deg = sym.groupBy("series_key", F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
-    nn = deg.groupBy("series_key").agg(F.count(F.lit(1)).alias("n"))
-    nodes = deg.join(nn, "series_key").cache()
-    adj = sym.cache()
+    def build(parts: list) -> dict[str, pa.Array]:
+        return {
+            n: pa.array(np.concatenate([p[i] for p in parts]), t,
+                        from_pandas=True)
+            for i, ((n, _), (_, t)) in enumerate(zip(cols, dtypes))
+        }
 
-    ranks = nodes.select(
-        "series_key",
-        "node",
-        F.round(1.0 / F.col("n"), round_dp).alias("rank"),
-    )
-    for it in range(iters):
-        if it and it % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-        contrib = (
-            adj.join(
-                ranks.join(
-                    nodes.select("series_key", "node", "degree"),
-                    ["series_key", "node"],
-                ).select(
-                    "series_key",
-                    F.col("node").alias("u"),
-                    (F.col("rank") / F.col("degree")).alias("share"),
-                ),
-                ["series_key", "u"],
-            )
-            .groupBy("series_key", F.col("v").alias("node"))
-            .agg(F.sum("share").alias("inflow"))
-        )
-        ranks = contrib.join(nn, "series_key").select(
-            "series_key",
-            "node",
-            F.round(
-                (1.0 - damping) / F.col("n") + damping * F.col("inflow"),
-                round_dp,
-            ).alias("rank"),
-        )
-    return ranks
+    return graphs._map_series(series_df, schema, kernel, build)
 
 
-# ---------------------------------------------------------------------------
-# Fused map-only twins (series frame -> metrics, zero shuffle)
-# ---------------------------------------------------------------------------
-# ts2g2's unit of work is the per-series segment, so graph metrics over
-# visibility graphs are embarrassingly row-local: build the edge array AND
-# run the metric inside the same Arrow batch that holds the series.  These
-# are the 100 TB path for millions of small graphs (the relational twins
-# above remain the one-huge-graph path and the SQL-oracle cross-check);
-# parity tests pin the two strategies bit-identical, including the
-# per-iteration HALF_UP rounding contract (kernels.round_half_up).
-
-def _fused(series_df, build_rows, schema):
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def kern(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-
-        for pdf in batches:
-            frames = []
-            for r in pdf.itertuples(index=False):
-                y = np.asarray(r.values, np.float64)
-                frames.append(build_rows(r.series_key, y))
-            frames = [f for f in frames if f is not None]
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return series_df.mapInPandas(kern, schema=schema)
+def _row(values: Iterable) -> list[list]:
+    """One output row as one-element columns."""
+    return [[v] for v in values]
 
 
 def graph_summary_from_series(
     series_df, kind: str = "horizontal", limit: int = 0
 ):
-    """Fused twin of visibility_edges(kind) |> graph_summary: one summary
-    row per series, map-only."""
-    import pandas as pd
+    """visibility_edges(kind) |> per-series summary: (series_key,
+    n_nodes, n_edges, density, max_degree, avg_degree), one row per
+    series with at least one edge (nodes come from edges)."""
+    cols = [("n_nodes", "long"), ("n_edges", "long"), ("density", "double"),
+            ("max_degree", "long"), ("avg_degree", "double")]
 
-    from ts2g2_spark.operators import kernels
-
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
+    def metric(e):
         s = kernels.graph_summary_kernel(e)
-        if s["n_nodes"] == 0:
-            # edgeless series: the relational twin derives nodes from
-            # edges, so it emits no row — match that contract exactly
-            return None
-        return pd.DataFrame([{"series_key": key, **s}])
+        return _row(s[n] for n, _ in cols) if s["n_nodes"] else [[]] * 5
 
-    return _fused(
-        series_df,
-        build,
-        "series_key string, n_nodes long, n_edges long, density double,"
-        " max_degree long, avg_degree double",
-    )
+    return _per_series(series_df, kind, limit, cols, metric)
 
 
 def clustering_from_series(
     series_df, kind: str = "horizontal", limit: int = 0
 ):
-    """Fused twin of visibility_edges(kind) |> clustering_coefficients."""
-    import pandas as pd
-
-    from ts2g2_spark.operators import kernels
-
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
-        nodes, degree, tri, lcc = kernels.graph_clustering_kernel(e)
-        if len(nodes) == 0:
-            return None
-        return pd.DataFrame(
-            {"series_key": key, "node": nodes, "degree": degree,
-             "triangles": tri, "lcc": lcc}
-        )
-
-    return _fused(
-        series_df,
-        build,
-        "series_key string, node long, degree long, triangles long,"
-        " lcc double",
-    )
+    """visibility_edges(kind) |> local clustering: (series_key, node,
+    degree, triangles, lcc) per node, lcc = 2T / (d (d-1)) rounded HALF_UP
+    to 9 dp, 0.0 for degree < 2 (networkx convention)."""
+    return _per_series(
+        series_df, kind, limit,
+        [("node", "long"), ("degree", "long"), ("triangles", "long"),
+         ("lcc", "double")],
+        kernels.graph_clustering_kernel)
 
 
 def mixing_from_series(
     series_df, kind: str = "horizontal", limit: int = 0,
     round_dp: int = 6,
 ):
-    """Fused twin of visibility_edges(kind) |> graph_mixing: one
-    (assortativity, transitivity) row per series, map-only."""
-    import pandas as pd
+    """visibility_edges(kind) |> degree assortativity + global
+    transitivity: one (series_key, assortativity, transitivity) row per
+    series with an edge; each is null where undefined (constant degrees,
+    no wedge).  Exact integer-sum rationals, quantized with
+    floor(x*10^dp + 0.5)/10^dp (kernels.graph_mixing_kernel)."""
 
-    from ts2g2_spark.operators import kernels
-
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
+    def metric(e):
         m = kernels.graph_mixing_kernel(e, round_dp=round_dp)
-        if m is None:
-            return None
-        return pd.DataFrame([{
-            "series_key": key, "assortativity": m[0], "transitivity": m[1],
-        }])
+        return [[], []] if m is None else _row(m)
 
-    return _fused(
-        series_df, build,
-        "series_key string, assortativity double, transitivity double",
-    )
+    return _per_series(
+        series_df, kind, limit,
+        [("assortativity", "double"), ("transitivity", "double")], metric)
 
 
 def betweenness_from_series(
     series_df, kind: str = "horizontal", limit: int = 0,
     normalized: bool = True, round_dp: int = 9,
 ):
-    """Fused visibility_edges(kind) |> Brandes betweenness centrality,
-    map-only.  No relational twin exists — per-source shortest-path
-    counting is inherently iterative, so this is a kernel-only metric
-    (parity pinned against networkx instead of a SQL oracle)."""
-    import pandas as pd
-
-    from ts2g2_spark.operators import kernels
-
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
-        nodes, bc = kernels.graph_betweenness_kernel(
-            e, normalized=normalized, round_dp=round_dp)
-        if len(nodes) == 0:
-            return None
-        return pd.DataFrame(
-            {"series_key": key, "node": nodes, "betweenness": bc})
-
-    return _fused(
-        series_df, build,
-        "series_key string, node long, betweenness double",
-    )
+    """visibility_edges(kind) |> Brandes betweenness centrality:
+    (series_key, node, betweenness).  Per-source shortest-path counting
+    is inherently iterative, so this metric has no SQL-expressible form
+    beyond the oracle's unrolled BFS; parity is pinned against networkx."""
+    return _per_series(
+        series_df, kind, limit,
+        [("node", "long"), ("betweenness", "double")],
+        lambda e: kernels.graph_betweenness_kernel(
+            e, normalized=normalized, round_dp=round_dp))
 
 
 def path_metrics_from_series(
     series_df, kind: str = "horizontal", limit: int = 0,
 ):
-    """Fused visibility_edges(kind) |> shortest-path summary
-    (diameter, radius, average shortest path length), map-only.
-    Kernel-only like betweenness — all-pairs BFS has no ANSI-SQL twin;
-    parity pins against networkx."""
-    import pandas as pd
+    """visibility_edges(kind) |> shortest-path summary: (series_key,
+    n_nodes, diameter, radius, avg_spl, connected), one row per series
+    with an edge (kernels.graph_path_metrics_kernel; parity pinned
+    against networkx)."""
+    cols = [("n_nodes", "long"), ("diameter", "long"), ("radius", "long"),
+            ("avg_spl", "double"), ("connected", "boolean")]
 
-    from ts2g2_spark.operators import kernels
-
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
+    def metric(e):
         m = kernels.graph_path_metrics_kernel(e)
-        if m is None:
-            return None
-        return pd.DataFrame([{"series_key": key, **m}])
+        return [[]] * 5 if m is None else _row(m[n] for n, _ in cols)
 
-    return _fused(
-        series_df, build,
-        "series_key string, n_nodes long, diameter long, radius long,"
-        " avg_spl double, connected boolean",
-    )
+    return _per_series(series_df, kind, limit, cols, metric)
 
 
 def kcore_from_series(
     series_df, kind: str = "horizontal", limit: int = 0,
 ):
-    """Fused visibility_edges(kind) |> k-core decomposition, map-only:
-    (series_key, node, core) with core = the node's core number.  Pure
-    integer peel (kernels.graph_kcore_kernel) — deterministic and
-    SQL-replayable, parity-pinned against networkx core_number."""
-    import pandas as pd
-
-    from ts2g2_spark.operators import kernels
-
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
-        nodes, core = kernels.graph_kcore_kernel(e)
-        if len(nodes) == 0:
-            return None
-        return pd.DataFrame(
-            {"series_key": key, "node": nodes, "core": core})
-
-    return _fused(
-        series_df, build,
-        "series_key string, node long, core long",
-    )
+    """visibility_edges(kind) |> k-core decomposition: (series_key, node,
+    core) with core = the node's core number.  Pure integer peel
+    (kernels.graph_kcore_kernel) — deterministic and SQL-replayable,
+    parity-pinned against networkx core_number."""
+    return _per_series(
+        series_df, kind, limit, [("node", "long"), ("core", "long")],
+        kernels.graph_kcore_kernel)
 
 
 def pagerank_from_series(
@@ -530,346 +235,77 @@ def pagerank_from_series(
     damping: float = 0.85,
     round_dp: int = 9,
 ):
-    """Fused twin of visibility_edges(kind) |> pagerank: identical
-    per-iteration rounding trajectory, zero shuffle, no iteration plans."""
-    import pandas as pd
-
-    from ts2g2_spark.operators import kernels
-
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
-        nodes, rank = kernels.graph_pagerank_kernel(
-            e, iters=iters, damping=damping, round_dp=round_dp
-        )
-        if len(nodes) == 0:
-            return None
-        return pd.DataFrame(
-            {"series_key": key, "node": nodes, "rank": rank}
-        )
-
-    return _fused(
-        series_df, build, "series_key string, node long, rank double"
-    )
-
-
-def lpa_communities(edges: DataFrame, n_iter: int = 4) -> DataFrame:
-    """Deterministic synchronous label propagation over the (series_key,
-    src, dst) edge frame: (series_key, node, community) after exactly
-    n_iter rounds.  Labels start as node ids; every round each node
-    adopts the most frequent label among its neighbors' PREVIOUS
-    labels, ties to the smallest label — all-integer counting, no RNG,
-    so the fixed schedule replays identically in any engine (the
-    pagerank fixed-iteration contract, without even a rounding step).
-
-    Plan shape: one symmetric-adjacency frame, then per round one
-    equi-join on (series_key, neighbor) + one partial-agg'd count + one
-    bounded window (each (series_key, node) partition holds at most
-    that node's distinct-neighbor-label rows).  For millions of small
-    per-series graphs prefer the fused `lpa_from_series` (zero
-    shuffle); this relational form is the one-huge-graph path."""
-    from pyspark.sql.window import Window
-
-    if n_iter < 1:
-        raise ValueError(f"lpa_communities: need n_iter >= 1, got {n_iter}")
-    e = canonical_edges(edges)
-    adj = e.select(
-        "series_key", F.col("a").alias("node"), F.col("b").alias("nb")
-    ).unionByName(
-        e.select(
-            "series_key", F.col("b").alias("node"), F.col("a").alias("nb"))
-    )
-    labels = adj.select("series_key", "node").distinct() \
-        .withColumn("lab", F.col("node"))
-    w = Window.partitionBy("series_key", "node") \
-        .orderBy(F.desc("cnt"), F.asc("lab"))
-    for _ in range(n_iter):
-        nbr = adj.join(
-            labels.select(
-                "series_key", F.col("node").alias("nb"), "lab"),
-            ["series_key", "nb"])
-        cnt = nbr.groupBy("series_key", "node", "lab") \
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        labels = cnt.withColumn("_r", F.row_number().over(w)) \
-            .where(F.col("_r") == 1).select("series_key", "node", "lab")
-    return labels.withColumnRenamed("lab", "community")
+    """visibility_edges(kind) |> fixed-iteration PageRank: (series_key,
+    node, rank).  Ranks are rounded HALF_UP to `round_dp` at EVERY
+    iteration, so order-dependent float summation differences cannot
+    accumulate and the unrolled SQL oracle replays the identical
+    trajectory (kernels.graph_pagerank_kernel)."""
+    return _per_series(
+        series_df, kind, limit, [("node", "long"), ("rank", "double")],
+        lambda e: kernels.graph_pagerank_kernel(
+            e, iters=iters, damping=damping, round_dp=round_dp))
 
 
 def lpa_from_series(
     series_df, kind: str = "horizontal", limit: int = 0, n_iter: int = 4,
 ):
-    """Fused visibility_edges(kind) |> lpa_communities, map-only:
-    (series_key, node, community).  Parity-pinned against the
-    relational twin (identical deterministic schedule)."""
-    import pandas as pd
-
-    from ts2g2_spark.operators import kernels
-
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
-        nodes, comm = kernels.graph_lpa_kernel(e, n_iter=n_iter)
-        if len(nodes) == 0:
-            return None
-        return pd.DataFrame(
-            {"series_key": key, "node": nodes, "community": comm})
-
-    return _fused(
-        series_df, build,
-        "series_key string, node long, community long",
-    )
-
-
-def modularity(
-    edges: DataFrame, communities: DataFrame, round_dp: int = 9,
-) -> DataFrame:
-    """Newman modularity of a given partition, per series: (series_key,
-    n_communities, modularity).  `communities` is (series_key, node,
-    community) — e.g. lpa_communities' output.  Q = sum_c e_c/m -
-    (deg_c/2m)^2 evaluated as ONE exact-integer rational
-    (4m*sum_ec - sum deg_c^2) / 4m^2: both sides of the single IEEE
-    division are exact int64, so the value is bit-identical in any
-    engine before the quantize (the graph_mixing posture).  Plan: two
-    equi-joins labeling the edge endpoints + per-series partial aggs —
-    no window, no iteration."""
-    e = canonical_edges(edges)
-    lab = communities.select("series_key", "node", "community")
-    ej = (
-        e.join(
-            lab.select(
-                "series_key", F.col("node").alias("a"),
-                F.col("community").alias("_ca")),
-            ["series_key", "a"])
-        .join(
-            lab.select(
-                "series_key", F.col("node").alias("b"),
-                F.col("community").alias("_cb")),
-            ["series_key", "b"])
-    )
-    em = ej.groupBy("series_key").agg(
-        F.count(F.lit(1)).alias("_m"),
-        F.sum((F.col("_ca") == F.col("_cb")).cast("long")).alias("_ec"),
-    )
-    degc = degrees(edges).join(lab, ["series_key", "node"]).groupBy(
-        "series_key", "community"
-    ).agg(F.sum("degree").alias("_dc"))
-    stats = degc.groupBy("series_key").agg(
-        F.count(F.lit(1)).alias("n_communities"),
-        F.sum(F.col("_dc") * F.col("_dc")).alias("_dc2"),
-    )
-    num = (4 * F.col("_m") * F.col("_ec") - F.col("_dc2")).cast("double")
-    den = (4 * F.col("_m") * F.col("_m")).cast("double")
-    scale = float(10.0 ** round_dp)
-    return em.join(stats, "series_key").select(
-        "series_key", "n_communities",
-        (F.floor(num / den * F.lit(scale) + F.lit(0.5)) / F.lit(scale))
-        .alias("modularity"),
-    )
+    """visibility_edges(kind) |> deterministic synchronous label
+    propagation: (series_key, node, community) after exactly n_iter
+    rounds, ties to the smallest label (kernels.graph_lpa_kernel)."""
+    if n_iter < 1:
+        raise ValueError(f"lpa_from_series: need n_iter >= 1, got {n_iter}")
+    return _per_series(
+        series_df, kind, limit, [("node", "long"), ("community", "long")],
+        lambda e: kernels.graph_lpa_kernel(e, n_iter=n_iter))
 
 
 def lpa_modularity_from_series(
     series_df, kind: str = "horizontal", limit: int = 0,
     n_iter: int = 4, round_dp: int = 9,
 ):
-    """Fused visibility_edges(kind) |> LPA |> modularity, map-only: one
-    (series_key, n_communities, modularity) row per series.
-    Parity-pinned against lpa_communities + modularity (relational)."""
-    import pandas as pd
+    """visibility_edges(kind) |> LPA |> Newman modularity of that
+    partition: one (series_key, n_communities, modularity) row per series
+    with an edge.  Q is one exact-integer rational, quantized to
+    `round_dp` (kernels.graph_modularity_kernel)."""
+    if n_iter < 1:
+        raise ValueError(
+            f"lpa_modularity_from_series: need n_iter >= 1, got {n_iter}")
 
-    from ts2g2_spark.operators import kernels
-
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
+    def metric(e):
         n_comm, q = kernels.graph_modularity_kernel(
             e, n_iter=n_iter, round_dp=round_dp)
-        if n_comm == 0:
-            return None
-        return pd.DataFrame(
-            [{"series_key": key, "n_communities": n_comm,
-              "modularity": q}])
+        return _row((n_comm, q)) if n_comm else [[], []]
 
-    return _fused(
-        series_df, build,
-        "series_key string, n_communities long, modularity double",
-    )
-
-
-def link_prediction(
-    edges: DataFrame, min_cn: int = 1, round_dp: int = 6,
-    max_hub_degree: int | None = None,
-) -> DataFrame:
-    """Classic link-prediction scores for every NON-edge pair sharing
-    at least one common neighbor, per series graph: common-neighbor
-    count, Jaccard coefficient, and Adamic-Adar (Liben-Nowell &
-    Kleinberg 2003).  Output (series_key, u, v, cn, jaccard,
-    adamic_adar) with u < v.
-
-    Plan shape: one wedge enumeration (the symmetric adjacency joined
-    to itself on the hub node — sum-of-deg² work, the triangle-count
-    budget) feeding a single hash aggregate per candidate pair, a
-    LEFT ANTI join against the edge set (predictions are for pairs NOT
-    yet linked), and one broadcast-scale degree join for Jaccard.
-
-    Cross-engine determinism: cn and the degree terms are exact
-    integers; jaccard = cn / (deg_u + deg_v - cn) is ONE IEEE
-    division, rounded; Adamic-Adar sums 1/ln(deg_z) over common
-    neighbors via an explicit SEQUENTIAL fold over the SORTED hub
-    degree list — groupBy sum over doubles is partition-order
-    nondeterministic and never oracle-safe (the PQ/ADC contract), the
-    sorted fold replays bit-identically as a DuckDB list_reduce (the
-    sort is total on the values themselves: equal degrees contribute
-    equal terms, so tie order cannot change any partial sum).
-    deg_z >= 2 by construction (the hub has both u and v), so
-    ln(deg_z) > 0 always.
-
-    `min_cn` prunes weak candidates right at the aggregate (a pair
-    with one shared hub on a dense graph is noise); the filter sits on
-    an exact integer so it never perturbs the surviving scores.
-
-    `max_hub_degree` caps the sum-deg^2 wedge budget (the LSH
-    hot-bucket-cap posture, see SCALE.md): hubs above the cap emit NO
-    wedges — on high-entropy series one k-degree hub is k^2/2 candidate
-    rows — while du/dv stay true degrees.  Bit-equal to the fused
-    kernel's cap by the parity suite.  None (default) = exact."""
-    if min_cn < 1:
-        raise ValueError(
-            f"link_prediction: need min_cn >= 1, got {min_cn=}")
-    if max_hub_degree is not None and max_hub_degree < 1:
-        raise ValueError("link_prediction: need max_hub_degree >= 1, "
-                         f"got {max_hub_degree=}")
-    e = canonical_edges(edges)
-    adj = e.select(
-        "series_key", F.col("a").alias("node"), F.col("b").alias("nb")
-    ).unionByName(
-        e.select(
-            "series_key", F.col("b").alias("node"),
-            F.col("a").alias("nb"))
-    )
-    deg = adj.groupBy("series_key", "node").agg(
-        F.count(F.lit(1)).alias("degree"))
-    hub = adj.join(deg, ["series_key", "node"]).select(
-        "series_key", F.col("node").alias("z"), "nb",
-        F.col("degree").alias("dz"))
-    if max_hub_degree is not None:
-        hub = hub.where(F.col("dz") <= max_hub_degree)
-    left = hub.select("series_key", "z", "dz", F.col("nb").alias("u"))
-    right = hub.select("series_key", "z", F.col("nb").alias("v"))
-    wedges = left.join(right, ["series_key", "z"]).where(
-        F.col("u") < F.col("v"))
-    cand = (
-        wedges.groupBy("series_key", "u", "v")
-        .agg(
-            F.count(F.lit(1)).alias("cn"),
-            F.array_sort(F.collect_list("dz")).alias("_hubs"),
-        )
-        .where(F.col("cn") >= min_cn)
-    )
-    non_edges = cand.join(
-        e.select("series_key", F.col("a").alias("u"),
-                 F.col("b").alias("v")),
-        ["series_key", "u", "v"], "left_anti")
-    du = deg.select("series_key", F.col("node").alias("u"),
-                    F.col("degree").alias("_du"))
-    dv = deg.select("series_key", F.col("node").alias("v"),
-                    F.col("degree").alias("_dv"))
-    scored = non_edges.join(du, ["series_key", "u"]).join(
-        dv, ["series_key", "v"])
-    union_sz = F.col("_du") + F.col("_dv") - F.col("cn")
-    aa = F.aggregate(
-        "_hubs", F.lit(0.0),
-        lambda acc, x: acc + F.lit(1.0) / F.log(x.cast("double")))
-    return scored.select(
-        "series_key", "u", "v", "cn",
-        F.round(F.col("cn").cast("double") / union_sz, round_dp)
-        .alias("jaccard"),
-        F.round(aa, round_dp).alias("adamic_adar"),
-    )
-
-
-def wl_labels(edges: DataFrame, n_iter: int = 3) -> DataFrame:
-    """Weisfeiler-Lehman color refinement (1-WL) over the (series_key,
-    src, dst) edge frame: (series_key, node, lab) after exactly n_iter
-    rounds.  Labels start as integer degrees; each round every node's
-    new label is h64("own|sorted,neighbor,labels") — md5-derived, so
-    the refinement replays bit-identically in any engine (the lpa
-    fixed-schedule posture, labels carried as strings-of-integers).
-
-    Plan shape per round: one equi-join on (series_key, neighbor), one
-    hash agg collecting the bounded neighbor-label list, one join back
-    for the own label.  For millions of small per-series graphs prefer
-    the fused `wl_from_series` (zero shuffle)."""
-    from ts2g2_spark.functions.hashing import h64
-
-    if n_iter < 1:
-        raise ValueError(f"wl_labels: need n_iter >= 1, got {n_iter}")
-    e = canonical_edges(edges)
-    adj = e.select(
-        "series_key", F.col("a").alias("node"), F.col("b").alias("nb")
-    ).unionByName(
-        e.select(
-            "series_key", F.col("b").alias("node"), F.col("a").alias("nb"))
-    )
-    labels = adj.groupBy("series_key", "node").agg(
-        F.count(F.lit(1)).cast("long").alias("lab"))
-    for _ in range(n_iter):
-        sig = adj.join(
-            labels.select(
-                "series_key", F.col("node").alias("nb"), "lab"),
-            ["series_key", "nb"],
-        ).groupBy("series_key", "node").agg(
-            F.array_join(F.array_sort(F.collect_list("lab")), ",")
-            .alias("sig"))
-        labels = sig.join(labels, ["series_key", "node"]).select(
-            "series_key", "node",
-            h64(F.concat_ws("|", F.col("lab"), F.col("sig"))).alias("lab"))
-    return labels
-
-
-def wl_fingerprints(edges: DataFrame, n_iter: int = 3) -> DataFrame:
-    """Per-graph Weisfeiler-Lehman fingerprint: (series_key, n_nodes,
-    wl_fp) where wl_fp = h64 of the sorted final WL label multiset.
-    Equal fingerprints <=> 1-WL-indistinguishable graphs (a strictly
-    stronger invariant than the degree-sequence/edge-set hashes of
-    functions/hashing — it separates most non-isomorphic graph pairs),
-    so grouping by wl_fp deduplicates structurally identical series
-    graphs across a corpus; ref graph hashing surface
-    (core/model.py hash_graph) extended beyond exact edge identity.
-    One bounded hash agg over the label frame."""
-    from ts2g2_spark.functions.hashing import h64
-
-    labs = wl_labels(edges, n_iter=n_iter)
-    return labs.groupBy("series_key").agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-        h64(F.array_join(F.array_sort(F.collect_list("lab")), ","))
-        .alias("wl_fp"),
-    )
+    return _per_series(
+        series_df, kind, limit,
+        [("n_communities", "long"), ("modularity", "double")], metric)
 
 
 def wl_from_series(
     series_df, kind: str = "horizontal", limit: int = 0, n_iter: int = 3,
 ):
-    """Fused visibility_edges(kind) |> wl_fingerprints, map-only:
-    (series_key, n_nodes, wl_fp) with zero shuffles — the per-series
-    fingerprint path for millions of small graphs.  Parity-pinned
-    against the relational twin (identical labels by construction:
-    both hash the same md5 strings)."""
-    import numpy as np
-    import pandas as pd
-
+    """visibility_edges(kind) |> Weisfeiler-Lehman fingerprint:
+    (series_key, n_nodes, wl_fp) with wl_fp = h64 of the sorted final
+    1-WL label multiset (kernels.graph_wl_kernel).  Equal fingerprints
+    <=> 1-WL-indistinguishable graphs (a strictly stronger invariant than
+    the degree-sequence/edge-set hashes of functions/hashing), so
+    grouping by wl_fp deduplicates structurally identical series graphs
+    across a corpus."""
     from ts2g2_spark.functions.hashing import h64_py
-    from ts2g2_spark.operators import kernels
 
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
+    if n_iter < 1:
+        raise ValueError(f"wl_from_series: need n_iter >= 1, got {n_iter}")
+
+    def metric(e):
         nodes, lab = kernels.graph_wl_kernel(e, n_iter=n_iter)
         if len(nodes) == 0:
-            return None
-        fp = h64_py(",".join(str(x) for x in np.sort(lab)))
-        return pd.DataFrame(
-            {"series_key": [key], "n_nodes": [len(nodes)], "wl_fp": [fp]})
+            return [[], []]
+        return _row((len(nodes),
+                     h64_py(",".join(str(x) for x in np.sort(lab)))))
 
-    return _fused(
-        series_df, build,
-        "series_key string, n_nodes long, wl_fp long",
-    )
+    return _per_series(
+        series_df, kind, limit, [("n_nodes", "long"), ("wl_fp", "long")],
+        metric)
 
 
 def link_prediction_from_series(
@@ -877,38 +313,25 @@ def link_prediction_from_series(
     min_cn: int = 1, round_dp: int = 6,
     max_hub_degree: int | None = None,
 ):
-    """Fused visibility_edges(kind) |> link_prediction, map-only — the
-    many-small-graphs strategy (one Arrow pass, zero shuffles; the
-    relational `link_prediction` stays the one-huge-graph path and the
-    SQL-oracle cross-check).  Bit-identical to the relational twin by
-    construction: `kernels.link_prediction_kernel` emits raw IEEE
-    doubles with the same operand order (one jaccard division; a
-    sequential ascending-degree Adamic-Adar fold matching
-    array_sort |> aggregate), and the rounding contract is applied
-    JVM-side here by the same F.round the relational path uses —
-    pinned by the parity suite (test_graphmetrics_fused)."""
-    import pandas as pd
-
-    from ts2g2_spark.operators import kernels
-
+    """visibility_edges(kind) |> link-prediction scores (Liben-Nowell &
+    Kleinberg 2003): (series_key, u, v, cn, jaccard, adamic_adar) for
+    every NON-edge pair u < v sharing >= `min_cn` hubs.
+    `kernels.link_prediction_kernel` emits raw IEEE doubles (one jaccard
+    division; a sequential ascending-degree Adamic-Adar fold, the
+    oracle's list_reduce order), and the HALF_UP rounding contract is
+    applied JVM-side by F.round.  `max_hub_degree` caps the sum-deg^2
+    wedge budget: hubs above it emit no wedges while du/dv stay true
+    degrees.  None (default) = exact."""
     if min_cn < 1:
         raise ValueError(
             f"link_prediction_from_series: need min_cn >= 1, got {min_cn=}")
 
-    def build(key, y):
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
-        u, v, cn, jacc, aa = kernels.link_prediction_kernel(
-            e, min_cn, max_hub_degree=max_hub_degree)
-        if len(u) == 0:
-            return None
-        return pd.DataFrame({"series_key": key, "u": u, "v": v, "cn": cn,
-                             "_jacc": jacc, "_aa": aa})
-
-    raw = _fused(
-        series_df, build,
-        "series_key string, u long, v long, cn long,"
-        " _jacc double, _aa double",
-    )
+    raw = _per_series(
+        series_df, kind, limit,
+        [("u", "long"), ("v", "long"), ("cn", "long"), ("_jacc", "double"),
+         ("_aa", "double")],
+        lambda e: kernels.link_prediction_kernel(
+            e, min_cn, max_hub_degree=max_hub_degree))
     return raw.select(
         "series_key", "u", "v", "cn",
         F.round("_jacc", round_dp).alias("jaccard"),

@@ -9,11 +9,9 @@ ZERO shuffle, sharing one emitter (`_map_series`): it reads a batch's
 batch column-wise (series_key gathered with `take`, numeric columns with
 `pa.array`) — no pandas and no per-edge Python objects.  Edges come out as
 rows keyed by series_key; adjacency is data, never a driver-side object
-(SURVEY §1.2).  A null `values` row yields no output rows.
-
-OPG/QG run as these kernels.  `qg_edges_relational` (lead()-window +
-hash-aggregate over a row-per-point table) stays for inputs that arrive as
-rows and for the integer transition counts `generate.hash_walks` needs.
+(SURVEY §1.2).  A null `values` row yields no output rows.  A table that
+arrives as one row per point becomes a series frame with
+`series_from_points` (one groupBy).
 """
 
 from __future__ import annotations
@@ -24,7 +22,6 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ts2g2_spark.operators import kernels
 
@@ -271,72 +268,30 @@ def opg_edges_multivariate(df: DataFrame, w: int, tau: int) -> DataFrame:
 
 
 # ------------------------------------------------- quantile graph (G8/G9)
-def qg_edges(df: DataFrame, Q: int, phi: int = 1) -> DataFrame:
-    """Quantile-graph transition edges per series (kernel path)."""
-
-    def kernel(y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        return kernels.qg_edges(y, Q, phi)
-
-    return _map_series(df, EDGE_SCHEMA, kernel, _edge_columns)
-
-
-def qg_edges_relational(
-    points: DataFrame,
-    key_col: str,
-    Q: int,
-    phi: int = 1,
-    ts_col: str = "ts",
-    val_col: str = "value",
-    order_col: str | None = None,
-    normalize: bool = True,
+def qg_edges(
+    df: DataFrame, Q: int, phi: int = 1, counts: bool = False
 ) -> DataFrame:
-    """Catalyst-native quantile graph over row-per-point tables.
+    """Quantile-graph transition edges per series (G8): (series_key, src,
+    dst, weight) with weight = count / transitions out of src.
 
-    Exact per-series quantiles via percentile() window (linear
-    interpolation — the same estimator as np.quantile, ref
-    to_graph/strategies.py:409-411 incl. the bins[0] -= 1e-9 epsilon),
-    digitize(right=True)-1 as size(filter(bins, b -> b < value)) - 1,
-    transitions via lead(phi), per-source normalization via window sum.
+    counts=True returns the raw integer transition counts as `w` (long)
+    instead of `weight` — the exact integer form `generate.hash_walks`
+    needs for its modular weighted choice (integer arithmetic end to end,
+    no float weight on the walk path)."""
+    if not counts:
+        return _map_series(df, EDGE_SCHEMA,
+                           lambda y: kernels.qg_edges(y, Q, phi),
+                           _edge_columns)
 
-    normalize=False returns the raw integer transition counts as `w`
-    (long) instead of the per-source probability `weight` — the exact
-    integer form generate.hash_walks needs for its modular weighted
-    choice (integer arithmetic end to end, no float weight on the
-    walk path)."""
-    okeys = [F.col(ts_col)] + ([F.col(order_col)] if order_col else [])
-    pwin = Window.partitionBy(key_col)
-    qs = [i / Q for i in range(Q + 1)]
-    bins = F.percentile(F.col(val_col), F.array(*[F.lit(q) for q in qs])).over(pwin)
-    binned = points.select(
-        F.col(key_col).cast("string").alias("series_key"),
-        *okeys,
-        F.col(val_col).alias("v"),
-        bins.alias("bins0"),
-    ).withColumn(
-        "bins",
-        F.concat(F.array(F.element_at("bins0", 1) - F.lit(1e-9)),
-                 F.slice("bins0", 2, Q)),
-    ).withColumn(
-        "q",
-        F.size(F.filter("bins", lambda b: b < F.col("v"))) - F.lit(1),
-    )
-    owin = Window.partitionBy("series_key").orderBy(*okeys)
-    trans = binned.select(
-        "series_key",
-        F.col("q").alias("src"),
-        F.lead("q", phi).over(owin).alias("dst"),
-    ).where(F.col("dst").isNotNull())
-    counted = trans.groupBy("series_key", "src", "dst").count()
-    if not normalize:
-        return counted.select(
-            "series_key", F.col("src").cast("long"),
-            F.col("dst").cast("long"), F.col("count").alias("w"),
-        )
-    norm = Window.partitionBy("series_key", "src")
-    return counted.select(
-        "series_key", F.col("src").cast("long"), F.col("dst").cast("long"),
-        (F.col("count") / F.sum("count").over(norm)).alias("weight"),
-    )
+    def build(parts: list) -> dict[str, pa.Array]:
+        e = np.concatenate([p[0] for p in parts]).reshape(-1, 2)
+        return {"src": pa.array(e[:, 0], pa.int64()),
+                "dst": pa.array(e[:, 1], pa.int64()),
+                "w": pa.array(np.concatenate([p[1] for p in parts]),
+                              pa.int64())}
+
+    return _map_series(df, "series_key string, src long, dst long, w long",
+                       lambda y: kernels.qg_transitions(y, Q, phi), build)
 
 
 # ------------------------------------------------- proximity (G11-G15)

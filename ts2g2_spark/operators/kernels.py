@@ -448,19 +448,25 @@ def quantile_bins_indices(
     return bins, idx
 
 
+def qg_transitions(
+    y: np.ndarray, Q: int, phi: int = 1
+) -> tuple[np.ndarray, np.ndarray]:
+    """Quantile-graph transitions bin(y_t) -> bin(y_{t+phi}) with their
+    integer counts.  Returns (edges[m,2] int64 sorted, counts[m] int64)."""
+    if len(y) <= phi:  # no transition (and np.quantile rejects [])
+        return np.empty((0, 2), dtype=np.int64), np.empty(0, dtype=np.int64)
+    _, idx = quantile_bins_indices(y, Q)
+    pairs = np.stack([idx[:-phi], idx[phi:]], axis=1)
+    return np.unique(pairs, axis=0, return_counts=True)
+
+
 def qg_edges(
     y: np.ndarray, Q: int, phi: int = 1
 ) -> tuple[np.ndarray, np.ndarray]:
     """Quantile-graph transition edges with per-source normalization
     (strategies.py:437-459).  Returns (edges[m,2] int64, weights[m]).
     Nodes 0..Q-1 always exist; only edges are returned here."""
-    if len(y) <= phi:  # no transition (and np.quantile rejects [])
-        return np.empty((0, 2), dtype=np.int64), np.empty(0)
-    _, idx = quantile_bins_indices(y, Q)
-    src = idx[:-phi]
-    dst = idx[phi:]
-    pairs = np.stack([src, dst], axis=1)
-    uniq, counts = np.unique(pairs, axis=0, return_counts=True)
+    uniq, counts = qg_transitions(y, Q, phi)
     # normalize per source node over its successors (sums of integer
     # counts: exact in float64)
     _, src_of = np.unique(uniq[:, 0], return_inverse=True)
@@ -618,14 +624,13 @@ def proximity_annn_edges(
 
 
 # ---------------------------------------------------------------------------
-# Per-graph metric kernels (grouped twins of operators/graphmetrics.py)
+# Per-graph metric kernels (run by operators/graphmetrics.py)
 # ---------------------------------------------------------------------------
-# ts2g2 emits millions of SMALL per-series graphs (one per segment), so the
-# scale-right physical strategy for graph metrics is map-only: run the whole
-# metric on each series' edge array inside the same Arrow batch that built
-# it, zero shuffles.  The relational twins in operators/graphmetrics.py stay
-# as the one-huge-graph path and the SQL-oracle cross-check; these kernels
-# must reproduce their output BIT-IDENTICALLY (same rounding contract).
+# ts2g2 emits millions of SMALL per-series graphs (one per segment), so graph
+# metrics run map-only: the whole metric on each series' edge array inside
+# the same Arrow batch that built it, zero shuffles.  Every float result
+# follows a rounding contract (round_half_up or quantize_ieee) that the
+# contract's DuckDB oracles replay.
 
 def round_half_up(x: np.ndarray, dp: int) -> np.ndarray:
     """Vectorized twin of Spark's ``round(double, dp)`` (HALF_UP on the
@@ -689,8 +694,8 @@ def _canonical_edge_arrays(
 
 
 def graph_summary_kernel(edges: np.ndarray) -> dict:
-    """Per-graph summary over one edge array; float fields rounded like
-    the relational twin (graphmetrics.graph_summary)."""
+    """Per-graph summary over one edge array: node/edge counts, density,
+    degree stats; the float fields rounded HALF_UP to 9 dp."""
     a, _b, nodes, degree = _canonical_edge_arrays(edges)
     n = len(nodes)
     m = len(a)
@@ -715,8 +720,8 @@ def graph_clustering_kernel(
     """Local clustering per node of one small graph: (nodes, degree,
     triangles, lcc).  Dense boolean-adjacency matmul for n <= 4096 (the
     ts2g2 per-segment regime), sorted-neighbor intersection above.
-    lcc = round(2T / (d (d-1)), 9), 0.0 for degree < 2 — identical to
-    graphmetrics.clustering_coefficients."""
+    lcc = round(2T / (d (d-1)), 9) HALF_UP, 0.0 for degree < 2 (the
+    networkx convention)."""
     a, b, nodes, degree = _canonical_edge_arrays(edges)
     n = len(nodes)
     if n == 0:
@@ -786,8 +791,7 @@ def graph_mixing_kernel(
     marginals coincide under symmetrization, so the sqrt cancels;
     transitivity = 3*triangles / wedges = sum_v tri(v) / sum_v C(d_v,2).
     Degenerate cases are None: constant degrees, no wedges.  Quantized
-    with floor(x*10^dp + 0.5)/10^dp like graphmetrics.graph_mixing, the
-    relational twin."""
+    with floor(x*10^dp + 0.5)/10^dp (quantize_ieee)."""
     a, b, nodes, degree = _canonical_edge_arrays(edges)
     n = len(nodes)
     if n == 0:
@@ -997,8 +1001,8 @@ def graph_modularity_kernel(
     Q = sum_c e_c/m - (deg_c/2m)^2 computed as ONE exact-integer
     rational (4m*sum_ec - sum deg_c^2) / 4m^2 — both operands are exact
     int64 well under 2^53, so the single IEEE division is bit-identical
-    in every engine, then quantize_ieee(round_dp) (the graph_mixing
-    posture).  Returns (0, nan-free 0.0) for an edgeless graph."""
+    in every engine, then quantize_ieee(round_dp) (the
+    graph_mixing_kernel posture).  Returns (0, nan-free 0.0) for an edgeless graph."""
     a, b, nodes, degree = _canonical_edge_arrays(edges)
     m = len(a)
     if m == 0:
@@ -1078,8 +1082,7 @@ def graph_pagerank_kernel(
     round_dp: int = 9,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Fixed-iteration PageRank on one small undirected graph: (nodes,
-    ranks).  Identical trajectory to graphmetrics.pagerank: ranks are
-    rounded HALF_UP to round_dp at EVERY iteration (including the
+    ranks).  Ranks are rounded HALF_UP to round_dp at EVERY iteration (including the
     uniform init), shares rank/degree unrounded, no dangling term
     (every node has degree >= 1 by construction)."""
     a, b, nodes, degree = _canonical_edge_arrays(edges)
@@ -1112,7 +1115,7 @@ def graph_wl_kernel(
     == sorted integer join; the '|' separator disambiguates the own
     label from the neighbor list).  Two graphs that 1-WL distinguishes
     get different label multisets; hash the sorted multiset for a
-    graph fingerprint (see graphmetrics.wl_fingerprints)."""
+    graph fingerprint (see graphmetrics.wl_from_series)."""
     from ts2g2_spark.functions.hashing import h64_py
 
     if n_iter < 1:
@@ -1146,15 +1149,13 @@ def link_prediction_kernel(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Common-neighbor / Jaccard / Adamic-Adar scores for every
     NON-edge pair sharing >= min_cn hubs, over one small graph's edge
-    array — the in-kernel twin of `graphmetrics.link_prediction`
-    (Liben-Nowell & Kleinberg 2003) with identical numeric semantics:
-    cn and the degree terms are exact integers, jaccard is ONE IEEE
-    double division, and Adamic-Adar is a SEQUENTIAL fold of
-    1/ln(deg_z) over the hub degree list sorted ASCENDING — the same
-    operand order as the relational twin's
-    array_sort(collect_list(dz)) |> aggregate fold, so the two
-    strategies (and the DuckDB list_reduce oracle) are bit-identical
-    before rounding.  Returns RAW unrounded doubles; the caller applies
+    array (Liben-Nowell & Kleinberg 2003): cn and the degree terms are
+    exact integers, jaccard is ONE IEEE double division, and
+    Adamic-Adar is a SEQUENTIAL fold of 1/ln(deg_z) over the hub degree
+    list sorted ASCENDING — the operand order of the DuckDB
+    list_reduce oracle, so both are bit-identical before rounding (the
+    sort is total on the folded values: equal degrees contribute equal
+    terms).  Returns RAW unrounded doubles; the caller applies
     the repo's rounding contract JVM-side (F.round, HALF_UP).
 
     Fully vectorized: wedge enumeration is a rank-expansion over the
@@ -1169,8 +1170,7 @@ def link_prediction_kernel(
     high-entropy series (SCALE.md measured 305-point raw token streams
     at ~59k candidates/series) that budget, not the edge count, is the
     cost.  cn/jaccard/aa then count only wedges through kept hubs,
-    while du/dv stay TRUE degrees — identical semantics in the
-    relational twin's `where dz <= cap`.  None (default) = exact."""
+    while du/dv stay TRUE degrees.  None (default) = exact."""
     if min_cn < 1:
         raise ValueError(
             f"link_prediction_kernel: need min_cn >= 1, got {min_cn=}")
@@ -1221,7 +1221,7 @@ def link_prediction_kernel(
     uniq, cn = np.unique(key_s, return_counts=True)
     # sequential ascending fold, vectorized across pairs: one pass per
     # rank position adds each pair's k-th smallest 1/ln(dz) term — the
-    # exact per-pair operand order of the relational fold
+    # exact per-pair operand order of the oracle's fold
     seg_id = np.repeat(np.arange(uniq.shape[0], dtype=np.int64), cn)
     pos = np.arange(key_s.shape[0], dtype=np.int64) - np.repeat(
         np.cumsum(cn) - cn, cn)
