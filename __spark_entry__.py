@@ -859,6 +859,8 @@ def q_qg_mean_jump(spark, sf_dir):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
+                if r.values is None:
+                    continue  # a null series yields no row
                 y = np.asarray(r.values, dtype=np.float64)
                 for phi in (1, 2):
                     e, w = kernels.qg_edges(y, 4, phi)

@@ -14,7 +14,14 @@
 Stages (each committed + lineage'd before the next; re-submitting after
 a failure resumes from the last committed stage): clean ->
 decontaminated -> near_dedup -> splits -> packed.  Prints one JSON line
-with the stage log and the per-(source, lang, split) datamix."""
+with the stage log and the per-(source, lang, split) datamix.
+
+The job sets `session.FOOTER_STATS_CONF` at runtime, so its tables write
+timestamps as TIMESTAMP_MICROS, with parquet statistics, like every table
+of a `get_spark` session.  Without it Spark writes INT96 timestamps, which
+carry none: the tables are the same, but a footer-statistics decision over
+them (such as the rollup job's retention) rewrites every file, which is
+correct but slower."""
 
 from __future__ import annotations
 
@@ -44,8 +51,11 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from ts2g2_spark.plans.corpus import CorpusPipeline
+    from ts2g2_spark.session import FOOTER_STATS_CONF
 
     spark = SparkSession.builder.appName("ts2g2_corpus").getOrCreate()
+    for k, v in FOOTER_STATS_CONF.items():
+        spark.conf.set(k, v)
     pipe = CorpusPipeline(
         spark, args.catalog, run_id=args.run_id,
         min_words=args.min_words, lang=args.lang,

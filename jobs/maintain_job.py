@@ -25,6 +25,13 @@ double-counting.
 One --table is bound to one --checkpoint lineage for its lifetime.
 Serve the result via streaming/ingest.read_tier_snapshot (+
 plans/rollup.finalize_state), or tier it up with rollup_tier_up.
+
+The job sets `session.FOOTER_STATS_CONF` at runtime, so the snapshot
+versions write `bucket_ts` as TIMESTAMP_MICROS, with parquet statistics,
+like every table of a `get_spark` session.  Without it Spark writes INT96
+timestamps, which carry none: the snapshots are the same, but a
+footer-statistics decision over them (such as the rollup job's retention)
+rewrites every file, which is correct but slower.
 """
 
 from __future__ import annotations
@@ -55,10 +62,13 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ts2g2_spark.session import FOOTER_STATS_CONF
     from ts2g2_spark.streaming import ingest
 
     spark = SparkSession.builder.appName("tsg-tier-maintenance") \
         .getOrCreate()
+    for k, v in FOOTER_STATS_CONF.items():
+        spark.conf.set(k, v)
     ingest.run_tier_maintenance(
         ingest.stream_points(spark, args.input),
         args.table, args.checkpoint,

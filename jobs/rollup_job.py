@@ -17,7 +17,12 @@ The job is resume-safe: re-submitting after a failure skips every stage
 whose manifest already committed for the same input fingerprint
 (plans/pipeline.py).  All cluster sizing (executors, memory, shuffle
 partitions) comes from spark-submit conf; the session here is getOrCreate
-so nothing is overridden.
+so nothing is overridden, except that the job sets
+`session.FOOTER_STATS_CONF` (timestamps written as TIMESTAMP_MICROS) at
+runtime.  Retention decides which tiers to rewrite from the `bucket_ts`
+statistics in the tier files' footers, and Spark's default INT96
+timestamps carry none: without the setting every tier is rewritten on
+every retention run, which is correct but slower.
 """
 
 from __future__ import annotations
@@ -47,8 +52,11 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from ts2g2_spark.plans.pipeline import RollupPipeline
+    from ts2g2_spark.session import FOOTER_STATS_CONF
 
     spark = SparkSession.builder.appName("ts2g2_rollup").getOrCreate()
+    for k, v in FOOTER_STATS_CONF.items():
+        spark.conf.set(k, v)
     pipe = RollupPipeline(
         spark, args.catalog, run_id=args.run_id,
         salt_buckets=args.salt_buckets, gapfill=not args.no_gapfill,

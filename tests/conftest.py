@@ -218,6 +218,26 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """count_jobs(fn) -> (fn(), the number of Spark jobs fn started),
+    counted by job group through the status tracker."""
+    sc = spark.sparkContext
+    seq = iter(range(1 << 30))
+
+    def run(fn):
+        group = f"count_jobs-{id(fn)}-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def reference():
     """Imports from the reference repo (oracle). Module-shaped namespace.

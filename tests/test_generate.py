@@ -471,3 +471,41 @@ def test_hash_walks_fused_dead_end_halts(spark):
         last = max(rows, key=lambda r: r.step)
         if len(rows) < 3:
             assert last.node == 2  # halted only because it hit the sink
+
+
+def _series_builders():
+    import __spark_entry__ as entry
+    from ts2g2_spark.operators import generate
+
+    def qg_mean_jump(series):
+        # the contract builder reads its series through _event_series
+        orig = entry._event_series
+        entry._event_series = lambda spark, sf_dir: series
+        try:
+            return entry.q_qg_mean_jump(series.sparkSession, None)
+        finally:
+            entry._event_series = orig
+
+    return {
+        "quantile": lambda s: generate.generate_quantile_sequences(
+            s, Q=4, ts_length=12),
+        "ordinal": lambda s: generate.generate_ordinal_sequences(
+            s, w=3, tau=1, hist_bins=4, ts_length=12),
+        "qg_mean_jump": qg_mean_jump,
+    }
+
+
+@pytest.mark.parametrize("builder", ["quantile", "ordinal", "qg_mean_jump"])
+def test_null_series_row_yields_no_row(spark, builder):
+    """A null `values` row among others in one Arrow batch yields no
+    output row, and the other rows are those of the frame without it."""
+    rng = np.random.default_rng(3)
+    rows = [("1", rng.normal(size=20).tolist()), ("2", None),
+            ("3", rng.normal(size=15).tolist())]
+    schema = "series_key string, values array<double>"
+    build = _series_builders()[builder]
+    got = build(spark.createDataFrame(rows, schema).coalesce(1)).collect()
+    want = build(spark.createDataFrame(
+        [r for r in rows if r[1] is not None], schema).coalesce(1)).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert {str(r[0]) for r in got} == {"1", "3"}

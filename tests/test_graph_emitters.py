@@ -9,7 +9,8 @@ reference checkout.
     brute force written from the published predicates (strict >, `limit`
     skips the first intermediates), and the OPG/QG kernels against brute
     force from their definitions, including QG's integer transition
-    counts.
+    counts, and the OPG kernel's lexsort against the np.unique(axis=0)
+    rows it replaces, in both pattern modes.
 """
 
 from __future__ import annotations
@@ -259,6 +260,24 @@ def test_opg_kernel_matches_brute_force(y, w, tau):
     got = {(tuple(a), tuple(b)): x
            for a, b, x in zip(s.tolist(), d.tolist(), wt.tolist())}
     assert got == _brute_opg(y, w, tau)
+
+
+@settings(max_examples=150, deadline=None)
+@given(y=values, w=hst.integers(2, 4), tau=hst.integers(1, 3),
+       use_q=hst.booleans(), Q=hst.integers(2, 5))
+def test_opg_kernel_matches_unique_rows(y, w, tau, use_q, Q):
+    """The lexsort in opg_edges yields the rows of np.unique(axis=0): the
+    same transitions, in the same order, with the same weights."""
+    pats = kernels.ordinal_patterns(np.asarray(y, np.float64), w, tau,
+                                    use_quantiles=use_q, Q=Q)
+    s, d, wt = kernels.opg_edges(pats)
+    if len(pats) < 2:
+        assert len(s) == len(d) == len(wt) == 0
+        return
+    uniq, counts = np.unique(np.concatenate([pats[:-1], pats[1:]], axis=1),
+                             axis=0, return_counts=True)
+    assert np.array_equal(s, uniq[:, :w]) and np.array_equal(d, uniq[:, w:])
+    assert np.array_equal(wt, counts / float(len(pats)))
 
 
 @settings(max_examples=150, deadline=None)

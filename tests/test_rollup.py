@@ -330,6 +330,97 @@ def test_retention_leaves_unexpired_tiers_untouched(spark, input_df,
     assert kept["rollup_1h"].count() == n_1h
 
 
+RETAIN_NOW = 1704067200 + 100_000
+RETAIN = {"1m": 99_880, "1h": 10**9, "1d": 10**9}  # only 1m expires rows
+
+
+def _rows(df):
+    return sorted(df.collect())
+
+
+def _expected_retention(tables, now, horizons):
+    return {t: [r for r in rows
+                if r.bucket_ts.timestamp() >= now - horizons[t.split("_")[1]]]
+            for t, rows in tables.items()}
+
+
+def test_rollup_job_spark_job_floor(spark, input_df, tmp_path, count_jobs):
+    """run + retention start only the jobs that move data: two per stage
+    (the shuffle map stage and the write) and the 1m rewrite.  Reading a
+    committed table starts none (the schema comes from a footer)."""
+    p = RollupPipeline(spark, str(tmp_path / "cat"), run_id="r1")
+    _, jobs = count_jobs(lambda: (p.run(input_df, "x"),
+                                  p.retention(RETAIN_NOW, RETAIN)))
+    assert jobs <= 9
+    for name in ("rollup_1m", "rollup_1h", "rollup_1d", "chunks"):
+        df, jobs = count_jobs(lambda: p.cat.read(name))
+        assert jobs == 0
+        assert df.schema == spark.read.parquet(
+            p.cat.table_path(name)).schema
+
+
+def test_retention_without_footer_statistics(spark, input_df, tmp_path):
+    """Tier files written with INT96 timestamps carry no bucket_ts
+    statistics: retention rewrites every tier and still keeps exactly the
+    rows inside each horizon."""
+    key = "spark.sql.parquet.outputTimestampType"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        p = RollupPipeline(spark, str(tmp_path / "cat"), run_id="r1")
+        p.run(input_df, "x")
+    finally:
+        spark.conf.set(key, old)
+    tiers = ("rollup_1m", "rollup_1h", "rollup_1d")
+    before = {t: _rows(p.cat.read(t)) for t in tiers}
+    files = {t: _part_files(p.cat.table_path(t)) for t in tiers}
+    assert not any(p.cat.all_at_or_after(t, "bucket_ts", 0) for t in tiers)
+    kept = p.retention(RETAIN_NOW, RETAIN)
+    want = _expected_retention(before, RETAIN_NOW, RETAIN)
+    for t in tiers:
+        assert _part_files(p.cat.table_path(t)) != files[t]  # rewritten
+        assert _rows(kept[t]) == _rows(p.cat.read(t)) == want[t]
+    assert 0 < len(want["rollup_1m"]) < len(before["rollup_1m"])
+    assert want["rollup_1h"] == before["rollup_1h"]
+
+
+@pytest.mark.parametrize("crash_at", [1, 2])
+def test_catalog_write_crash_keeps_previous_table(spark, input_df, tmp_path,
+                                                  monkeypatch, crash_at):
+    """A crash after the sibling write, before (1) or between (2) the
+    renames that swap it in, leaves the previous table readable and
+    unchanged; the re-run swaps in the right table and leaves no
+    sibling behind."""
+    root = str(tmp_path / "cat")
+    p = RollupPipeline(spark, root, run_id="r1")
+    p.run(input_df, "x")
+    before = _rows(p.cat.read("rollup_1m"))
+    rename, calls = os.rename, []
+
+    def crashing_rename(src, dst):
+        if os.path.basename(str(src)).startswith(".rollup_1m") or \
+                os.path.basename(str(src)) == "rollup_1m":
+            calls.append(src)
+            if len(calls) == crash_at:
+                raise RuntimeError("injected crash")
+        return rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    with pytest.raises(RuntimeError, match="injected"):
+        p.retention(RETAIN_NOW, RETAIN)
+    monkeypatch.setattr(os, "rename", rename)
+    p2 = RollupPipeline(spark, root, run_id="r2")
+    assert _rows(p2.cat.read("rollup_1m")) == before
+    out = p2.run(input_df, "x")  # resumes: every stage committed
+    assert all(s["skipped"] for s in p2.stage_log)
+    assert _rows(out["rollup_1m"]) == before
+    kept = p2.retention(RETAIN_NOW, RETAIN)
+    want = _expected_retention({"rollup_1m": before}, RETAIN_NOW, RETAIN)
+    assert _rows(kept["rollup_1m"]) == want["rollup_1m"]
+    assert 0 < len(want["rollup_1m"]) < len(before)
+    assert not [d for d in os.listdir(root) if d.startswith(".rollup_")]
+
+
 def test_gapfill_linear_interpolates_endpoints(spark):
     """fill='linear': interior buckets sit exactly on the line between
     the gap's endpoints; non-gap rows pass through untouched."""

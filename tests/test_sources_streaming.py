@@ -579,6 +579,33 @@ def test_incremental_fold_writes_only_touched_partitions(spark, tmp_path):
         assert (got[c] == want[c]).all(), c
 
 
+def test_tier_snapshot_reads_start_no_job(spark, tmp_path, count_jobs):
+    """The snapshot read takes its schema from a footer: it equals the
+    schema-inference read (with `_pb` an int partition column) on schema
+    and rows, and building it starts no Spark job.  The second fold reads
+    the first version the same way."""
+    import json
+
+    tbl = str(tmp_path / "tier")
+    os.makedirs(tbl)
+    fold = ingest.incremental_tier_fold(spark, tbl)
+    for batch_id, (lo, hi) in enumerate([(0, 300), (200, 400)]):
+        fold(spark.range(lo, hi).select(
+            F.concat(F.lit("d"), (F.col("id") % 5)).alias("doc_id"),
+            F.lit("s0").alias("source"),
+            F.timestamp_seconds(1704067200 + F.col("id") * 7).alias("ts"),
+            (F.col("id") % 10).cast("double").alias("value")), batch_id)
+    snap, jobs = count_jobs(lambda: ingest.read_tier_snapshot(spark, tbl))
+    assert jobs == 0
+    with open(os.path.join(tbl, "_LATEST")) as f:
+        version = json.load(f)["version"]
+    inferred = spark.read.parquet(os.path.join(tbl, version))
+    assert snap.schema == inferred.schema
+    assert snap.schema["_pb"].dataType.simpleString() == "int"
+    rows = sorted(map(tuple, snap.collect()))
+    assert rows == sorted(map(tuple, inferred.collect())) and rows
+
+
 def test_incremental_fold_layout_guard(spark, tmp_path):
     """Re-folding with a different n_parts (or an old-format pointer
     missing the layout) re-buckets series and would double-count — the

@@ -179,6 +179,8 @@ def generate_quantile_sequences(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
+                if r.values is None:
+                    continue  # a null series yields no row
                 y = np.asarray(r.values, np.float64)
                 bins, idx = K.quantile_bins_indices(y, Q)
                 q_values: list[list[float]] = [[] for _ in range(Q)]
@@ -226,6 +228,8 @@ def generate_ordinal_sequences(
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
+                if r.values is None:
+                    continue  # a null series yields no row
                 y = np.asarray(r.values, np.float64)
                 pats = K.ordinal_patterns(y, w, tau)
                 uniq = list(dict.fromkeys(map(tuple, pats.tolist())))

@@ -423,10 +423,17 @@ def opg_edges(patterns: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]
         w = patterns.shape[1] if patterns.ndim == 2 else 0
         e = np.empty((0, w), dtype=np.int64)
         return e, e, np.empty(0)
-    a = patterns[:-1]
-    b = patterns[1:]
-    pairs = np.concatenate([a, b], axis=1)
-    uniq, counts = np.unique(pairs, axis=0, return_counts=True)
+    pairs = np.concatenate([patterns[:-1], patterns[1:]], axis=1)
+    # the rows and counts of np.unique(pairs, axis=0), from an integer
+    # lexsort over the 2w columns (np.unique sorts them as void records,
+    # ~8x slower)
+    s = pairs[np.lexsort(pairs.T[::-1])]
+    new = np.empty(len(s), dtype=bool)
+    new[0] = True
+    np.any(s[1:] != s[:-1], axis=1, out=new[1:])
+    starts = np.flatnonzero(new)
+    uniq = s[starts]
+    counts = np.diff(starts, append=len(s))
     w = patterns.shape[1]
     return uniq[:, :w], uniq[:, w:], counts / float(npat)
 

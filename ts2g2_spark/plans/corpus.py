@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ts2g2_spark.operators import dedup
 from ts2g2_spark.operators import sampling
 from ts2g2_spark.operators import text as text_ops
+from ts2g2_spark.plans.lineage import read_lineage
 from ts2g2_spark.plans.pipeline import StagedPipeline, _fingerprint
 
 
@@ -244,8 +245,8 @@ class CorpusPipeline(StagedPipeline):
             lambda: sampling.pack_sequences(
                 out["splits"].where(F.col("split") == "train"),
                 budget=self.pack_budget, n_buckets=self.pack_buckets))
-        out["lineage"] = self.spark.read.parquet(
-            self.cat.table_path("lineage"))
+        out["lineage"] = read_lineage(self.spark,
+                                      self.cat.table_path("lineage"))
         return out
 
     def datamix(self) -> DataFrame:

@@ -27,6 +27,9 @@ import uuid
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+
+from ts2g2_spark.catalog import data_files
 
 LINEAGE_SCHEMA = pa.schema([  # required columns, as Spark wrote them
     pa.field(name, typ, nullable=False) for name, typ in (
@@ -38,6 +41,12 @@ LINEAGE_SCHEMA = pa.schema([  # required columns, as Spark wrote them
         ("fingerprint", pa.string()),
         ("recorded_at", pa.float64()),
     )])
+# the same columns as Spark DDL: the lineage files are written by pyarrow,
+# so their footers carry no Spark schema to read
+LINEAGE_DDL = ", ".join(
+    f"{f.name} " + {pa.string(): "string", pa.int32(): "int",
+                    pa.int64(): "bigint", pa.float64(): "double"}[f.type]
+    for f in LINEAGE_SCHEMA)
 _PART = re.compile(r"part-(\d+)")
 
 
@@ -47,14 +56,11 @@ def partition_metrics(table_dir: str, run_id: str, stage: str,
     per writing task, with the rows of its files read from their
     footers."""
     rows: dict[int, int] = {}
-    for d, subdirs, files in os.walk(table_dir):
-        subdirs[:] = [s for s in subdirs if s[0] not in "._"]
-        for f in files:
-            m = _PART.match(f)
-            if m:
-                pid = int(m.group(1))
-                rows[pid] = (rows.get(pid, 0)
-                             + pq.read_metadata(os.path.join(d, f)).num_rows)
+    for f in data_files(table_dir):
+        m = _PART.match(os.path.basename(f))
+        if m:
+            pid = int(m.group(1))
+            rows[pid] = rows.get(pid, 0) + pq.read_metadata(f).num_rows
     pids = sorted(rows)
     n = len(pids)
     return pa.table([
@@ -75,6 +81,11 @@ def write_lineage(lineage_dir: str, run_id: str, stage: str,
     tmp = os.path.join(lineage_dir, f".{uuid.uuid4().hex}.tmp")
     pq.write_table(lin, tmp)
     os.replace(tmp, path)
+
+
+def read_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame:
+    """The lineage table, read with its fixed schema (no inference job)."""
+    return spark.read.schema(LINEAGE_DDL).parquet(lineage_dir)
 
 
 def partition_skew(rows: np.ndarray) -> float | None:

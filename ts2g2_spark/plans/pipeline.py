@@ -16,12 +16,21 @@ Each stage is one Spark write.  Its lineage rows (rows per writing task)
 come from the parquet footers of the files it wrote and are written by
 the pipeline process as one small file per (run_id, stage) -- no second
 Spark job; its `stage_log` entry carries the row total and the partition
-skew (max/median of those counts).
+skew (max/median of those counts).  Reading a committed table back starts
+no Spark job either: `Catalog.read` takes the schema from a data file's
+footer, and the lineage table is read with its fixed schema.
 
 Resume: a stage whose manifest matches the input fingerprint is skipped and
 its table is read back instead of recomputed; re-running a killed job
-produces identical tables with no duplicates (overwrite + atomic manifest;
+produces identical tables with no duplicates (table swap + atomic manifest;
 a stage re-run under the same run_id replaces its lineage file).
+
+Retention is decided from the tier files' footers, not by a Spark
+aggregate: a tier is rewritten unless the per-row-group statistics of
+`bucket_ts` prove that no row is null or older than the tier's cutoff
+(files without those statistics, such as INT96 timestamps, are always
+rewritten).  The rewrite reads the live table and `Catalog.write` swaps
+the result in, so there is no checkpoint.
 """
 
 from __future__ import annotations
@@ -30,13 +39,12 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ts2g2_spark.catalog import Catalog
 from ts2g2_spark.plans import chunks as chunks_mod
 from ts2g2_spark.plans import rollup as rollup_mod
 from ts2g2_spark.plans.lineage import (
-    partition_metrics, partition_skew, write_lineage)
+    partition_metrics, partition_skew, read_lineage, write_lineage)
 from ts2g2_spark.plans.points import salted_repartition
 
 
@@ -127,31 +135,24 @@ class RollupPipeline(StagedPipeline):
             lambda: chunks_mod.compress_chunks(
                 salted, step_seconds=self.step_seconds,
                 positions_col=self.positions_col))
-        out["lineage"] = self.spark.read.parquet(
-            self.cat.table_path("lineage"))
+        out["lineage"] = read_lineage(self.spark,
+                                      self.cat.table_path("lineage"))
         return out
 
     def retention(self, now_epoch: int,
                   horizons: dict[str, int] = rollup_mod.DEFAULT_RETENTION,
                   ) -> dict[str, DataFrame]:
         """Apply tier-scoped retention, rewriting each tier table filtered
-        by its horizon (with Iceberg: a partition-predicate DELETE).  One
-        aggregate per tier decides first: a tier whose oldest bucket is
-        inside the horizon and has no null bucket_ts (the rows the filter
-        would drop) is left untouched."""
+        by its horizon (with Iceberg: a partition-predicate DELETE).  The
+        footers decide first (see the module docstring): a tier whose
+        `bucket_ts` statistics prove every row non-null and inside the
+        horizon is left untouched."""
         out = {}
         for tier in ("1m", "1h", "1d"):
             name = f"rollup_{tier}"
-            df = self.cat.read(name)
-            oldest, nulls = df.agg(
-                F.min(F.unix_timestamp("bucket_ts")),
-                F.count(F.lit(1)) - F.count("bucket_ts")).first()
             cutoff = now_epoch - horizons[tier]
-            if nulls or (oldest is not None and oldest < cutoff):
-                kept = rollup_mod.apply_retention(
-                    df, tier, now_epoch, horizons)
-                # the checkpoint cuts the read of the table being overwritten
-                self.cat.write(kept.localCheckpoint(), name)
-                df = self.cat.read(name)
-            out[name] = df
+            if not self.cat.all_at_or_after(name, "bucket_ts", cutoff):
+                self.cat.write(rollup_mod.apply_retention(
+                    self.cat.read(name), tier, now_epoch, horizons), name)
+            out[name] = self.cat.read(name)
         return out

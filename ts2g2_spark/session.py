@@ -23,7 +23,14 @@ the package installed).
 The spark-submit jobs under `jobs/` build their own session and keep
 `pyspark.daemon`: a `--py-files` zip reaches a worker's `sys.path` only per
 task, after the daemon has started, so the daemon could not import
-`ts2g2_spark` from it.
+`ts2g2_spark` from it.  They do set `FOOTER_STATS_CONF` at runtime.
+
+`FOOTER_STATS_CONF` makes Spark write timestamps as TIMESTAMP_MICROS
+instead of INT96.  INT96 columns carry no parquet statistics, and the
+rollup pipeline's retention decides from the `bucket_ts` minimum and null
+count in the tier files' footers (`catalog.Catalog.all_at_or_after`).
+Without it every tier is rewritten on every retention run: correct, but
+slower.
 """
 
 from __future__ import annotations
@@ -33,6 +40,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+FOOTER_STATS_CONF = {"spark.sql.parquet.outputTimestampType":
+                     "TIMESTAMP_MICROS"}
 
 
 def get_spark(
@@ -93,6 +102,6 @@ def get_spark(
         # see the module docstring
         .config("spark.python.daemon.module", "ts2g2_spark.pydaemon")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**FOOTER_STATS_CONF, **(extra_conf or {})}.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ts2g2_spark.catalog import footer_schema
+
 POINTS_SCHEMA = ("doc_id string, source string, ts timestamp, value double")
 
 
@@ -393,7 +395,7 @@ def incremental_tier_fold(
                 # _pb is a physical partition column — this filter
                 # prunes to the touched directories, never scanning
                 # the rest
-                state = spark.read.parquet(prev_dir).where(
+                state = _read_version(spark, prev_dir).where(
                     F.col("_pb").isin(touched))
                 merged = rollup_mod.merge_tier_states(
                     state, delta, series_cols=series_cols)
@@ -457,7 +459,14 @@ def read_tier_snapshot(spark: SparkSession, table_root: str) -> DataFrame:
 
     with open(os.path.join(table_root, "_LATEST")) as f:
         version = json.load(f)["version"]
-    return spark.read.parquet(os.path.join(table_root, version))
+    return _read_version(spark, os.path.join(table_root, version))
+
+
+def _read_version(spark: SparkSession, version_dir: str) -> DataFrame:
+    """One version directory of a folded tier table, with the data schema
+    from a footer (no inference job); Spark still infers the `_pb`
+    partition column (int) from the directory names."""
+    return spark.read.schema(footer_schema(version_dir)).parquet(version_dir)
 
 
 def run_tier_maintenance(
