@@ -6,11 +6,15 @@ repeatedly, or swap the trigger in run_tier_maintenance for a
 continuous service.  Folds a stream of point rows into a mergeable
 tier table that absorbs arbitrarily late data
 (streaming/ingest.incremental_tier_fold): each micro-batch
-re-aggregates only the (series, bucket) groups it names, commits a new
-snapshot version, and atomically advances the `_LATEST` pointer — the
-at-least-once foreachBatch becomes exactly-once on the table, and a
-restarted checkpoint lineage is refused loudly instead of
-double-counting.
+re-aggregates only the (series, bucket) groups it names, writes the
+next version directory and publishes it by atomically replacing the
+table's `_LATEST` pointer (catalog.publish, the one commit protocol of
+every table the package writes).  The pointer records the last applied
+batch, so the at-least-once foreachBatch becomes exactly-once on the
+table, and a restarted checkpoint lineage is refused loudly instead of
+double-counting.  After each publish only the live version and the one
+before it stay on disk: a reader planned over a snapshot can run until
+the second fold after it.
 
     bash scripts/package.sh     # builds dist/ts2g2_spark.zip
     spark-submit \
@@ -20,7 +24,7 @@ double-counting.
         --input /path/of/point_parquet_stream \
         --table /path/to/tier_table_root \
         --checkpoint /path/to/stream_checkpoint \
-        [--tier 1m] [--okey-col event_id] [--keep-versions 2]
+        [--tier 1m] [--okey-col event_id]
 
 One --table is bound to one --checkpoint lineage for its lifetime.
 Serve the result via streaming/ingest.read_tier_snapshot (+
@@ -54,7 +58,6 @@ def main() -> None:
     ap.add_argument("--okey-col", default=None,
                     help="unique-per-point order column for exact "
                          "first/last (defaults to the raw timestamp)")
-    ap.add_argument("--keep-versions", type=int, default=2)
     ap.add_argument("--n-parts", type=int, default=16,
                     help="series-hash partition count — size so a "
                          "typical batch touches a small fraction")
@@ -72,8 +75,7 @@ def main() -> None:
     ingest.run_tier_maintenance(
         ingest.stream_points(spark, args.input),
         args.table, args.checkpoint,
-        tier=args.tier, okey_col=args.okey_col,
-        keep_versions=args.keep_versions, n_parts=args.n_parts)
+        tier=args.tier, okey_col=args.okey_col, n_parts=args.n_parts)
     try:
         rows = ingest.read_tier_snapshot(spark, args.table).count()
     except FileNotFoundError:

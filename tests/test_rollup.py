@@ -384,32 +384,55 @@ def test_retention_without_footer_statistics(spark, input_df, tmp_path):
     assert want["rollup_1h"] == before["rollup_1h"]
 
 
+def _versions(table_dir):
+    return sorted(d for d in os.listdir(table_dir) if d.startswith("v"))
+
+
+def _live(table_dir):
+    import json
+
+    with open(os.path.join(table_dir, "_LATEST")) as f:
+        return json.load(f)["version"]
+
+
 @pytest.mark.parametrize("crash_at", [1, 2])
 def test_catalog_write_crash_keeps_previous_table(spark, input_df, tmp_path,
                                                   monkeypatch, crash_at):
-    """A crash after the sibling write, before (1) or between (2) the
-    renames that swap it in, leaves the previous table readable and
-    unchanged; the re-run swaps in the right table and leaves no
-    sibling behind."""
+    """A crash during the Spark write of the next version (1) or at the
+    `os.replace` that publishes it onto `_LATEST` (2) leaves the previous
+    version live and unchanged; the re-run publishes the right table and
+    leaves no unpublished version behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     root = str(tmp_path / "cat")
+    table = os.path.join(root, "rollup_1m")
     p = RollupPipeline(spark, root, run_id="r1")
     p.run(input_df, "x")
     before = _rows(p.cat.read("rollup_1m"))
-    rename, calls = os.rename, []
+    v_before = _live(table)
+    parquet, replace = DataFrameWriter.parquet, os.replace
 
-    def crashing_rename(src, dst):
-        if os.path.basename(str(src)).startswith(".rollup_1m") or \
-                os.path.basename(str(src)) == "rollup_1m":
-            calls.append(src)
-            if len(calls) == crash_at:
-                raise RuntimeError("injected crash")
-        return rename(src, dst)
+    def crashing_parquet(self, path, *a, **k):
+        # the files land, the writer dies before anything publishes them
+        parquet(self, path, *a, **k)
+        if path.startswith(table):
+            raise RuntimeError("injected crash")
 
-    monkeypatch.setattr(os, "rename", crashing_rename)
+    def crashing_replace(src, dst):
+        if dst == os.path.join(table, "_LATEST"):
+            raise RuntimeError("injected crash")
+        return replace(src, dst)
+
+    if crash_at == 1:
+        monkeypatch.setattr(DataFrameWriter, "parquet", crashing_parquet)
+    else:
+        monkeypatch.setattr(os, "replace", crashing_replace)
     with pytest.raises(RuntimeError, match="injected"):
         p.retention(RETAIN_NOW, RETAIN)
-    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.undo()
+    assert _versions(table) == sorted([v_before, "v1"])  # v1 unpublished
     p2 = RollupPipeline(spark, root, run_id="r2")
+    assert _live(table) == v_before
     assert _rows(p2.cat.read("rollup_1m")) == before
     out = p2.run(input_df, "x")  # resumes: every stage committed
     assert all(s["skipped"] for s in p2.stage_log)
@@ -418,7 +441,40 @@ def test_catalog_write_crash_keeps_previous_table(spark, input_df, tmp_path,
     want = _expected_retention({"rollup_1m": before}, RETAIN_NOW, RETAIN)
     assert _rows(kept["rollup_1m"]) == want["rollup_1m"]
     assert 0 < len(want["rollup_1m"]) < len(before)
-    assert not [d for d in os.listdir(root) if d.startswith(".rollup_")]
+    # left on disk: the published v1 and the version it replaced
+    assert _live(table) == "v1"
+    assert _versions(table) == sorted([v_before, "v1"])
+    assert [f for f in os.listdir(table) if not f.startswith("v")] \
+        == ["_LATEST"]
+
+
+def test_reader_keeps_previous_version_across_rewrite(spark, input_df,
+                                                      tmp_path):
+    """A frame planned over a tier before retention rewrites it still
+    collects the original rows after the new version is published."""
+    p = RollupPipeline(spark, str(tmp_path / "cat"), run_id="r1")
+    p.run(input_df, "x")
+    old = p.cat.read("rollup_1m")
+    want = _rows(p.cat.read("rollup_1m"))
+    kept = p.retention(RETAIN_NOW, RETAIN)
+    assert len(_rows(kept["rollup_1m"])) < len(want)  # a new version
+    assert _rows(old) == want
+
+
+def test_catalog_keeps_live_and_previous_version(spark, tmp_path):
+    """After repeated publishes only the live version and the one it
+    replaced stay on disk, and a read returns the live one."""
+    from ts2g2_spark.catalog import Catalog
+
+    cat = Catalog(str(tmp_path), spark)
+    table = os.path.join(str(tmp_path), "t")
+    for k in range(4):
+        path = cat.write(spark.range(k + 1), "t")
+        assert path == os.path.join(table, f"v{k}") == cat.table_path("t")
+        assert _versions(table) == [f"v{j}" for j in range(max(0, k - 1),
+                                                          k + 1)]
+    assert _live(table) == "v3"
+    assert sorted(r.id for r in cat.read("t").collect()) == [0, 1, 2, 3]
 
 
 def test_gapfill_linear_interpolates_endpoints(spark):
@@ -741,64 +797,3 @@ def test_refresh_tier_plan_broadcasts_key_split(spark, input_df):
     assert "LeftAnti" in plan
     assert "LeftSemi" in plan
     assert "BroadcastHashJoin" in plan
-
-
-def test_bucketed_tier_join_is_exchange_free(spark, tmp_path):
-    """Tiers written bucketed on the series key join against a
-    same-bucketed dim with NO Exchange on either side; the identical
-    frames read back as plain parquet paths (bucket spec lost) shuffle
-    both sides — same rows either way."""
-    from pyspark.sql import functions as F
-
-    from ts2g2_spark.catalog import Catalog
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    tier = rollup_mod.rollup_points(
-        ev, "1m", series_cols=["user_id"], order_col="event_id")
-    dim = ev.groupBy("user_id").agg(F.min("ts").alias("first_seen"))
-    cat = Catalog(str(tmp_path), spark)
-    cat.write_bucketed(tier, "tier_1m_b", ["user_id"], 8,
-                       sort_cols=["user_id"])
-    cat.write_bucketed(dim, "user_dim_b", ["user_id"], 8,
-                       sort_cols=["user_id"])
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = cat.read_bucketed("tier_1m_b").join(
-            cat.read_bucketed("user_dim_b"), "user_id")
-        n = j.count()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert "SortMergeJoin" in plan
-        # bucketed groupBy on the bucket key also skips the exchange
-        g = cat.read_bucketed("tier_1m_b").groupBy("user_id").agg(
-            F.sum("cnt").alias("c"))
-        g.count()
-        gplan = g._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in gplan
-        # contrast: path reads lose the bucket spec -> shuffle comes back
-        t2 = spark.read.parquet(str(tmp_path / "tier_1m_b"))
-        d2 = spark.read.parquet(str(tmp_path / "user_dim_b"))
-        j2 = t2.join(d2, "user_id")
-        assert j2.count() == n
-        plan2 = j2._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan2
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_bucketed_table_names_are_sanitized(spark, tmp_path):
-    """Names legal as path segments elsewhere in Catalog (hyphens,
-    dots) must work for bucketed tables too — identifiers are data,
-    never SQL text."""
-    from ts2g2_spark.catalog import Catalog
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    dim = ev.groupBy("user_id").count()
-    cat = Catalog(str(tmp_path), spark)
-    cat.write_bucketed(dim, "tier-1m.dim", ["user_id"], 4)
-    got = cat.read_bucketed("tier-1m.dim")
-    assert got.count() == dim.count()
-    # same sanitized prefix, different raw names -> distinct tables
-    cat.write_bucketed(dim.limit(3), "tier_1m.dim", ["user_id"], 4)
-    assert cat.read_bucketed("tier_1m.dim").count() == 3
-    assert cat.read_bucketed("tier-1m.dim").count() == dim.count()

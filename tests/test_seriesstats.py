@@ -278,34 +278,6 @@ def test_ewma_first_point_and_validation(spark):
         ewma_weights(alpha=1e-4)
 
 
-def test_ewma_kernel_impl_bit_parity(spark):
-    from ts2g2_spark.operators.seriesstats import ewma
-
-    # the kernel strategy is spec'd BIT-identical to the window one
-    # (same left-fold op order per element) — exceptAll, not approx
-    pdf = _events(seed=43)
-    for alpha in (0.3, 0.12):
-        a = ewma(spark.createDataFrame(pdf), alpha=alpha,
-                 order_col="event_id", impl="window")
-        b = ewma(spark.createDataFrame(pdf), alpha=alpha,
-                 order_col="event_id", impl="kernel")
-        # names + types (nullability flags legitimately differ:
-        # row_number is provably non-null, the exploded kernel isn't)
-        assert [(f.name, f.dataType) for f in a.schema] \
-            == [(f.name, f.dataType) for f in b.schema]
-        assert a.exceptAll(b).count() == 0
-        assert b.exceptAll(a).count() == 0
-    # short-series edge: fewer points than K lags
-    tiny = pdf.groupby("user_id").head(3)
-    a = ewma(spark.createDataFrame(tiny), alpha=0.3,
-             order_col="event_id", impl="window")
-    b = ewma(spark.createDataFrame(tiny), alpha=0.3,
-             order_col="event_id", impl="kernel")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    with pytest.raises(ValueError, match="impl"):
-        ewma(None, alpha=0.3, impl="arrow")
-
-
 def test_ewma_weights_prefix_is_left_fold():
     from ts2g2_spark.operators.seriesstats import ewma_weights
 

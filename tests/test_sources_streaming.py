@@ -31,47 +31,6 @@ def test_series_from_array(spark):
     assert df.collect()[0].values == [1.0, 2.0, 3.0]
 
 
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    def mk_points(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("d"), (F.col("id") % 3)).alias("doc_id"),
-            F.lit("src_00").alias("source"),
-            F.timestamp_seconds(1704067200 + F.col("id") * 7).alias("ts"),
-            (F.col("id") % 10).cast("double").alias("value"),
-        )
-
-    # append-mode + watermark: a window emits ONLY once the watermark
-    # (max event time - delay) passes its end — so the first drain of a
-    # 58-minute batch under a 1-hour watermark emits nothing yet.  That is
-    # the streaming contract, not a bug: completeness is
-    # watermark-bounded.
-    mk_points(0, 500).write.mode("append").parquet(in_dir)
-    tier = ingest.streaming_rollup_1m(
-        ingest.stream_points(spark, in_dir))
-    ingest.run_available_now(tier, out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 0
-
-    # second batch ~27h later pushes the watermark far past every batch-1
-    # window; the next drain must emit ALL batch-1 buckets exactly once,
-    # matching the batch rollup bit-for-bit
-    mk_points(100000, 100200).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_rollup_1m(ingest.stream_points(spark, in_dir)),
-        out_dir, ckpt)
-    got2 = spark.read.parquet(out_dir)
-    want1 = R.rollup_points(mk_points(0, 500), "1m").drop("first", "last")
-    cols = ["doc_id", "bucket_ts", "cnt", "sum", "min", "max"]
-    assert got2.count() == want1.count()
-    assert got2.select(*cols).exceptAll(want1.select(*cols)).count() == 0
-    assert want1.select(*cols).exceptAll(got2.select(*cols)).count() == 0
-
-
 # ------------------------------------------------------------- S2 .ts
 def test_read_ts_fixture(spark):
     from ts2g2_spark.sources import io
@@ -105,45 +64,6 @@ def test_read_ts_no_label(spark, tmp_path):
             io.read_ts(spark, str(p)).collect()}
     assert rows[(0, "dim_1")].values == [3.0, 4.0]
     assert rows[(1, "dim_0")].label is None
-
-
-def test_streaming_stateful_rollup_matches_batch(spark, tmp_path):
-    """applyInPandasWithState tier: finalized buckets (emitted on
-    event-time timeout) match the batch rollup INCLUDING first/last."""
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    def mk_points(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("d"), (F.col("id") % 3)).alias("doc_id"),
-            F.lit("src_00").alias("source"),
-            F.timestamp_seconds(1704067200 + F.col("id") * 7).alias("ts"),
-            (F.col("id") % 10).cast("double").alias("value"),
-        )
-
-    mk_points(0, 500).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_rollup_1m_stateful(
-            ingest.stream_points(spark, in_dir)),
-        out_dir, ckpt)
-    # first drain: watermark has not passed any bucket end yet
-    assert spark.read.parquet(out_dir).count() == 0
-
-    # a much-later batch pushes the watermark past every batch-1 bucket:
-    # the timeout fires and emits each finalized bucket exactly once
-    mk_points(100000, 100200).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_rollup_1m_stateful(
-            ingest.stream_points(spark, in_dir)),
-        out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
-    want = R.rollup_points(mk_points(0, 500), "1m")
-    cols = ["doc_id", "bucket_ts", "cnt", "sum", "min", "max",
-            "first", "last"]
-    assert got.count() == want.count()
-    assert got.select(*cols).exceptAll(want.select(*cols)).count() == 0
 
 
 # ------------------------------------------------------------- S3 XML
@@ -198,46 +118,6 @@ def test_stream_dedup(spark, tmp_path):
         ingest.stream_dedup(ingest.stream_points(spark, in_dir)),
         out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == 50
-
-
-def test_streaming_tier_composes_with_tier_up(spark, tmp_path):
-    """The docstring claim 'rollup_tier_up composes on top' made
-    evidence: 1h tier derived from the STREAMED stateful 1m tier equals
-    the 1h tier computed from raw in batch (including first/last)."""
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    def mk_points(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("d"), (F.col("id") % 3)).alias("doc_id"),
-            F.lit("src_00").alias("source"),
-            F.timestamp_seconds(1704067200 + F.col("id") * 11).alias("ts"),
-            (F.col("id") % 9).cast("double").alias("value"),
-        )
-
-    mk_points(0, 400).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_rollup_1m_stateful(
-            ingest.stream_points(spark, in_dir)),
-        out_dir, ckpt)
-    # push the watermark far past batch 1 so its buckets finalize
-    mk_points(100000, 100100).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_rollup_1m_stateful(
-            ingest.stream_points(spark, in_dir)),
-        out_dir, ckpt)
-
-    streamed_1m = spark.read.parquet(out_dir)
-    got_1h = R.rollup_tier_up(streamed_1m, "1h")
-    want_1h = R.rollup_tier_up(
-        R.rollup_points(mk_points(0, 400), "1m"), "1h")
-    cols = ["doc_id", "bucket_ts", "cnt", "sum", "min", "max",
-            "first", "last"]
-    assert got_1h.count() == want_1h.count()
-    assert got_1h.select(*cols).exceptAll(
-        want_1h.select(*cols)).count() == 0
 
 
 # ------------------------------------------------- streaming corpus clean
@@ -450,8 +330,8 @@ def test_incremental_tier_fold_matches_batch_and_is_idempotent(
     """Three out-of-order micro-batches folded through the mergeable
     tier table equal the batch rollup over all points bit-for-bit —
     INCLUDING a batch that lands entirely inside already-finalized
-    buckets (arbitrary lateness, the case the watermarked tiers
-    cannot absorb).  Replaying a batch_id is a no-op (at-least-once
+    buckets (arbitrary lateness, which a watermarked aggregate would
+    drop) — and so does its tier-up to 1h.  Replaying a batch_id is a no-op (at-least-once
     foreachBatch made exactly-once)."""
     in_dir = str(tmp_path / "in")
     tbl = str(tmp_path / "tier")
@@ -488,6 +368,17 @@ def test_incremental_tier_fold_matches_batch_and_is_idempotent(
     assert len(got) == len(want) and len(got) > 0
     for c in want.columns:
         assert (got[c] == want[c]).all(), c
+    # the streamed tier composes with tier-up: its 1h tier equals the
+    # 1h tier of the batch 1m tier (first/last included)
+    got_1h = R.rollup_tier_up(R.finalize_state(
+        ingest.read_tier_snapshot(spark, tbl)), "1h").toPandas()
+    want_1h = R.rollup_tier_up(
+        R.rollup_points(allpts, "1m"), "1h").toPandas()
+    for df in (got_1h, want_1h):
+        df.sort_values(keys, inplace=True, ignore_index=True)
+    assert len(got_1h) == len(want_1h) > 1
+    for c in want_1h.columns:
+        assert (got_1h[c] == want_1h[c]).all(), c
 
     # idempotent replay: re-applying the LAST batch_id changes nothing
     import json

@@ -9,23 +9,25 @@ renames it atomically; a stage is committed iff its manifest file exists
 and matches the input fingerprint, which gives idempotent resume (north
 rule: resumable from the last committed checkpoint).
 
-`write` never writes into the live table directory.  Spark writes the
-new table into the dot-prefixed sibling `.<name>.tmp` (Spark readers skip
-it); then the live directory is renamed to `.<name>.old`, the new one is
-renamed into place and the old one is removed.  So a table can be
-rewritten from a frame that reads it (retention needs no checkpoint), and
-what a crash leaves is:
-- during the Spark write: the live table unchanged, plus a partial
-  `.<name>.tmp` that the next write of the table removes;
-- between the two renames: no live directory, and the previous table
-  whole in `.<name>.old`; the next `read` or `write` of the table moves
-  it back;
-- after the swap: the new table live, and possibly a `.<name>.old` that
-  the next write removes.
-The catalog has one writer.  A reader that planned a frame over the old
-files before the swap fails when the old directory is removed.  Versioned
-table directories, with the manifest naming the committed version, are
-open work (ROADMAP item 5).
+Every committed table has one format: version directories `<table>/v<k>/`
+and a `<table>/_LATEST` JSON pointer, `{"version": "v<k>", ...}`, that
+names the live one.  The pointer is the table's manifest; a writer may add
+its own keys to it (the tier fold records its last batch and its layout).
+A write goes into a version directory no reader resolves to, then
+`publish` writes the new pointer under a temporary name and `os.replace`s
+it onto `_LATEST`; that replace is the commit.  After it, the versions
+other than the live one and the one it replaced are removed.  So:
+- a table can be rewritten from a frame that reads it (retention needs
+  no checkpoint);
+- a frame planned over the previous version keeps reading it until the
+  next publish;
+- a crash during the write or before the replace leaves the previous
+  version live and an unnamed version directory, which the next write of
+  that version clears and the next publish removes.
+`publish` is the only writer of `_LATEST`; the catalog's `write` and the
+streaming tier fold (`streaming.ingest.incremental_tier_fold`) both commit
+through it, and `read_table` is the one reader.  The catalog has one
+writer per table.
 
 Reads take the table schema from one data file's footer (`footer_schema`)
 instead of Spark's schema inference, which runs a Spark job per read, and
@@ -40,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -51,6 +54,8 @@ from pyspark.sql.types import StructType
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 _TS_UNITS = {"milliseconds": 10**3, "microseconds": 10**6,
              "nanoseconds": 10**9}
+_POINTER = "_LATEST"
+_VERSION = re.compile(r"v\d+")
 
 
 def _visible(name: str) -> bool:
@@ -103,6 +108,60 @@ def _lower_bound_holds(f: str, column: str, bound: int) -> bool:
     return True
 
 
+def read_pointer(table_dir: str) -> dict | None:
+    """The `_LATEST` pointer of the table at `table_dir`, or None when no
+    version was ever published there.  A pointer that does not parse
+    raises: `publish` only ever replaces it whole."""
+    try:
+        with open(os.path.join(table_dir, _POINTER)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def live_path(table_dir: str) -> str:
+    """The live version directory of the table at `table_dir`;
+    `table_dir` itself when it has no pointer (the lineage table)."""
+    ptr = read_pointer(table_dir)
+    return os.path.join(table_dir, ptr["version"]) if ptr else table_dir
+
+
+def version_dir(table_dir: str, version: str) -> str:
+    """The path to write `version` of the table into, emptied first:
+    anything there is what a crashed writer left, never published."""
+    path = os.path.join(table_dir, version)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def publish(table_dir: str, version: str, **meta) -> None:
+    """Make the written `version` the table's live one: the new pointer
+    (`version` plus `meta`) is written under a temporary name and
+    `os.replace`d onto `_LATEST`.  Then every version directory except
+    the live one and the one it replaced is removed, with any pointer
+    file a crash left behind."""
+    prev = read_pointer(table_dir)
+    ptr = os.path.join(table_dir, _POINTER)
+    tmp = f"{ptr}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        json.dump({"version": version, **meta}, f)
+    os.replace(tmp, ptr)  # atomic on POSIX — the table commit
+    keep = {version, prev["version"] if prev else None}
+    for d in os.listdir(table_dir):
+        path = os.path.join(table_dir, d)
+        if _VERSION.fullmatch(d) and d not in keep:
+            shutil.rmtree(path, ignore_errors=True)
+        elif d.startswith(f"{_POINTER}."):
+            os.remove(path)
+
+
+def read_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The live version of the table at `table_dir`, with the schema from
+    a footer (no inference job)."""
+    path = live_path(table_dir)
+    return spark.read.schema(footer_schema(path)).parquet(path)
+
+
 class Catalog:
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
@@ -135,40 +194,24 @@ class Catalog:
 
     # -- tables -------------------------------------------------------
     def table_path(self, name: str) -> str:
-        return os.path.join(self.root, name)
+        """The live version directory of table `name` (see
+        `live_path`)."""
+        return live_path(os.path.join(self.root, name))
 
-    def _settled_path(self, name: str) -> str:
-        """The table's path, after moving back a previous table that a
-        crash between `write`'s two renames left aside."""
-        path = self.table_path(name)
-        old = os.path.join(self.root, f".{name}.old")
-        if not os.path.exists(path) and os.path.exists(old):
-            os.rename(old, path)
-        return path
-
-    def write(self, df: DataFrame, name: str,
-              partition_by: list[str] | None = None) -> str:
-        """Write `df` as table `name`, replacing the table only once the
-        new one is whole (see the module docstring); `df` may read the
-        table it replaces."""
-        path = self._settled_path(name)
-        tmp = os.path.join(self.root, f".{name}.tmp")
-        old = os.path.join(self.root, f".{name}.old")
-        for stale in (tmp, old):
-            shutil.rmtree(stale, ignore_errors=True)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
+    def write(self, df: DataFrame, name: str) -> str:
+        """Write `df` as the next version of table `name` and publish it
+        (see the module docstring); `df` may read the table it replaces.
+        Returns the new version's directory."""
+        table = os.path.join(self.root, name)
+        cur = read_pointer(table)
+        version = f"v{int(cur['version'][1:]) + 1 if cur else 0}"
+        path = version_dir(table, version)
+        df.write.mode("overwrite").parquet(path)
+        publish(table, version)
         return path
 
     def read(self, name: str) -> DataFrame:
-        path = self._settled_path(name)
-        return self.spark.read.schema(footer_schema(path)).parquet(path)
+        return read_table(self.spark, os.path.join(self.root, name))
 
     def all_at_or_after(self, name: str, column: str, epoch_s: int) -> bool:
         """True iff the footers of table `name` prove that every row has
@@ -176,51 +219,4 @@ class Catalog:
         job).  A row group without statistics for the column proves
         nothing, so it answers False; an empty table answers True."""
         return all(_lower_bound_holds(f, column, epoch_s)
-                   for f in data_files(self._settled_path(name)))
-
-    # -- bucketed tables ----------------------------------------------
-    def _table_ident(self, name: str) -> str:
-        import hashlib
-        import re
-
-        # session-catalog identifier scoped to this catalog root, so two
-        # Catalogs in one SparkSession never collide; the name is
-        # sanitized to identifier characters (every other Catalog method
-        # treats it as a path segment, where '-' and '.' are legal) and
-        # the suffix hashes root AND raw name so sanitization collisions
-        # ('a-b' vs 'a.b') still map to distinct tables
-        suffix = hashlib.md5(f"{self.root}\0{name}".encode()).hexdigest()[:8]
-        safe = re.sub(r"[^A-Za-z0-9_]", "_", name)
-        return f"{safe}_{suffix}"
-
-    def write_bucketed(self, df: DataFrame, name: str,
-                       bucket_cols: list[str], num_buckets: int,
-                       sort_cols: list[str] | None = None) -> str:
-        """Write a table hash-bucketed on `bucket_cols` (optionally
-        sorted within buckets).  Every later join or aggregation keyed on
-        the bucket columns against a table with the SAME bucket count
-        reads co-located buckets and plans with NO Exchange on either
-        side — the tier⋈dim / tier⋈tier serving joins become map-side.
-        At 10^12-series scale this removes the recurring shuffle of the
-        materialized tiers on every downstream query; the one-time
-        bucketing cost is paid at write.  (With Iceberg, the same seam is
-        a bucket(N, col) partition transform.)
-
-        Returns the session-catalog identifier to pass to
-        `read_bucketed`."""
-        ident = self._table_ident(name)
-        # backtick-quoted: identifiers are data here, never SQL text
-        self.spark.sql(f"DROP TABLE IF EXISTS `{ident}`")
-        w = (df.write.mode("overwrite").format("parquet")
-             .option("path", self.table_path(name))
-             .bucketBy(num_buckets, *bucket_cols))
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.saveAsTable(ident)
-        return ident
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        """Read a bucketed table back THROUGH the session catalog — a
-        plain path read (`spark.read.parquet`) loses the bucket spec and
-        reintroduces the shuffle."""
-        return self.spark.table(self._table_ident(name))
+                   for f in data_files(self.table_path(name)))

@@ -218,7 +218,6 @@ def ewma(
     val_col: str = "value",
     order_col: str | None = None,
     round_dp: int = 9,
-    impl: str = "window",
 ) -> DataFrame:
     """Exponentially-weighted moving average per series (the pandas
     `ewm(alpha, adjust=True).mean()` contract), computed as a TRUNCATED
@@ -236,38 +235,20 @@ def ewma(
 
     Output: series cols + pos, ts, value, ewma (rounded to `round_dp`).
 
-    Two physical strategies, bit-identical outputs (pinned by
-    tests/test_seriesstats.py parity):
-
-    - impl="window" (default): ONE ordered window pass on the series
-      key evaluates all K+1 lag frames together (sort-based window
-      operator, O(K) state per task); no joins, no second exchange.
-      Safe for UNBOUNDED series length — nothing materializes a whole
-      series.  Cost: the widest expression tree in the repo (~85 terms
-      at alpha=0.3), all evaluated per row JVM-side.
-    - impl="kernel": collect each series into one Arrow batch and run
-      the same left-fold as K vectorized numpy shifted multiply-adds
-      (identical op order per element, so identical doubles), rounding
-      JVM-side on the way out.  Measured: ~even with the window at
-      K~85 (alpha=0.3) warm, 2.5x faster at K~234 (alpha=0.12) — the
-      kernel's cost barely grows with K while the window's is linear in
-      it.  Bounded by the theil_sen contract: one series must fit in
-      one task (fine under retention-bounded tiers; do not use on raw
-      unbounded streams).
+    One ordered window pass on the series key evaluates all K+1 lag
+    frames together (sort-based window operator, O(K) state per task);
+    no joins, no second exchange.  Safe for UNBOUNDED series length —
+    nothing materializes a whole series.  Cost: the widest expression
+    tree in the repo (~85 terms at alpha=0.3), all evaluated per row
+    JVM-side.
 
     K is ~84 at alpha=0.3 and grows as log(tol)/log(1-alpha) — bounded,
     and independent of series length.  Assumes non-null values
     (lag-null means "before the series start"); NULL inputs would be
     treated as 0 in the numerator but still counted by the
-    position-based normalizer (the kernel path would propagate NaN
-    instead — another reason the contract excludes them).
+    position-based normalizer.
     """
-    if impl not in ("window", "kernel"):
-        raise ValueError(f"ewma: impl must be window|kernel, got {impl}")
     weights, prefix = ewma_weights(alpha)
-    if impl == "kernel":
-        return _ewma_kernel(points, weights, prefix, series_cols,
-                            ts_col, val_col, order_col, round_dp)
     scols, wo, _ = _series_windows(series_cols, ts_col, order_col)
     v = F.col(val_col).cast("double")
     pos = F.row_number().over(wo) - 1
@@ -311,81 +292,6 @@ def _collect_raw_series(points, series_cols, ts_col, val_col, order_col):
     ).select(*scols, F.col("_s._us").alias("_uss"),
              F.col("_s._v").alias("_vs"))
     return grouped, [grouped.schema[c] for c in series_cols]
-
-
-def _ewma_kernel(points, weights, prefix, series_cols, ts_col, val_col,
-                 order_col, round_dp):
-    """The impl="kernel" strategy of `ewma`: per-series Arrow batches,
-    the SAME truncated left-fold as numpy shifted multiply-adds.  For
-    every position t the additions run in ascending-j order over the
-    full zero-padded arrays — exactly `num + coalesce(lag(v,j),0)*w_j`
-    — so each partial sum is the bit-identical double the window
-    expression computes, and the shared F.round lands on the same grid.
-    Timestamps travel as unix_micros longs (the Arrow session-local
-    naive-datetime contract) and rebuild relationally on the way out.
-    """
-    from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                                   LongType, StructField, StructType)
-
-    scols = [F.col(c) for c in series_cols]
-    grouped, key_fields = _collect_raw_series(
-        points, series_cols, ts_col, val_col, order_col)
-    out_schema = StructType(key_fields + [
-        # int32 pos: bit-parity with the window impl's row_number()
-        StructField("pos", ArrayType(IntegerType())),
-        StructField("us", ArrayType(LongType())),
-        StructField("value", ArrayType(DoubleType())),
-        StructField("raw", ArrayType(DoubleType())),
-    ])
-    names = list(series_cols)
-    w_arr = list(weights)
-    p_arr = list(prefix)
-
-    def kern(batches):
-        import numpy as np
-        import pandas as pd
-
-        w = np.asarray(w_arr, dtype=np.float64)
-        pref = np.asarray(p_arr, dtype=np.float64)
-        for pdf in batches:
-            rows = []
-            for k in range(len(pdf)):
-                x = np.asarray(pdf["_vs"].iat[k], dtype=np.float64)
-                us = np.asarray(pdf["_uss"].iat[k], dtype=np.int64)
-                n = len(x)
-                num = x * w[0]
-                shifted = np.empty_like(x)
-                for j in range(1, min(len(w), n)):
-                    shifted[:j] = 0.0
-                    shifted[j:] = x[:n - j]
-                    # num + w_j*shifted, full array: positions t < j add
-                    # w_j*0.0 exactly like the window's coalesce branch
-                    num = num + w[j] * shifted
-                if n >= len(w):
-                    den = pref[np.minimum(np.arange(n), len(w) - 1)]
-                else:
-                    den = pref[:n]
-                rows.append((*[pdf[c].iat[k] for c in names],
-                             np.arange(n, dtype=np.int32), us, x,
-                             num / den))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[*names, "pos", "us", "value", "raw"])
-
-    arrays = grouped.mapInPandas(kern, schema=out_schema)
-    exploded = arrays.select(
-        *scols, F.arrays_zip("pos", "us", "value", "raw").alias("_z")
-    ).select(*scols, F.explode("_z").alias("_e"))
-    # rebuild ts with the INPUT's timestamp flavor (the window impl
-    # passes it through untouched — schema parity is part of the spec)
-    ts_type = points.schema[ts_col].dataType.simpleString()
-    return exploded.select(
-        *scols,
-        F.col("_e.pos").alias("pos"),
-        F.timestamp_micros(F.col("_e.us")).cast(ts_type).alias(ts_col),
-        F.col("_e.value").alias("value"),
-        F.round(F.col("_e.raw"), round_dp).alias("ewma"),
-    )
 
 
 def _array_median(arr):

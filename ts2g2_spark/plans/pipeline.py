@@ -20,17 +20,22 @@ skew (max/median of those counts).  Reading a committed table back starts
 no Spark job either: `Catalog.read` takes the schema from a data file's
 footer, and the lineage table is read with its fixed schema.
 
+Each stage's table is committed as a new version behind the table's
+`_LATEST` pointer (`catalog.Catalog.write`), then the stage's manifest.
 Resume: a stage whose manifest matches the input fingerprint is skipped and
-its table is read back instead of recomputed; re-running a killed job
-produces identical tables with no duplicates (table swap + atomic manifest;
-a stage re-run under the same run_id replaces its lineage file).
+its table's live version is read back instead of recomputed; re-running a
+killed job produces identical tables with no duplicates (a version is live
+only once published, and a stage re-run under the same run_id replaces its
+lineage file).
 
 Retention is decided from the tier files' footers, not by a Spark
 aggregate: a tier is rewritten unless the per-row-group statistics of
 `bucket_ts` prove that no row is null or older than the tier's cutoff
 (files without those statistics, such as INT96 timestamps, are always
-rewritten).  The rewrite reads the live table and `Catalog.write` swaps
-the result in, so there is no checkpoint.
+rewritten).  The rewrite reads the live version and `Catalog.write`
+publishes the result as the next one, so there is no checkpoint, and a
+frame read from the tier before the rewrite still reads the previous
+version.
 """
 
 from __future__ import annotations
@@ -69,14 +74,13 @@ class StagedPipeline:
         self.stage_log: list[dict] = []
 
     def _run_stage(self, stage: str, fingerprint: str, build,
-                   partition_by: list[str] | None = None,
                    force: bool = False) -> DataFrame:
         if not force and self.cat.committed(stage, fingerprint):
             self.stage_log.append({"stage": stage, "skipped": True})
             return self.cat.read(stage)
         t0 = time.time()
         df = build()
-        self.cat.write(df, stage, partition_by=partition_by)
+        self.cat.write(df, stage)
         wall_ms = (time.time() - t0) * 1000
         lin = partition_metrics(self.cat.table_path(stage), self.run_id,
                                 stage, fingerprint, wall_ms)
@@ -116,8 +120,7 @@ class RollupPipeline(StagedPipeline):
             "rollup_1m", fp,
             lambda: rollup_mod.rollup_from_tokens(
                 salted, tier="1m", step_seconds=self.step_seconds,
-                gapfill=self.gapfill, positions_col=self.positions_col),
-            partition_by=None)
+                gapfill=self.gapfill, positions_col=self.positions_col))
         if stop_after == "rollup_1m":
             return out
         out["rollup_1h"] = self._run_stage(

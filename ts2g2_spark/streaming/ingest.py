@@ -2,26 +2,26 @@
 
 The reference has no streaming at all (its `TimeseriesStream` is a naming
 artifact — core/model.py:109-118 deep-copies a whole in-memory array).
-The engine keeps the 1m tier buildable as a STREAM: file-source ->
-watermark -> windowed aggregate -> availableNow batch trigger, so the same
-continuous-aggregate tables can be fed incrementally on a cluster (late
-data bounded by the watermark) while v1 production runs use the batch
-pipeline (plans/pipeline.py).
+The engine keeps the 1m tier maintainable from a STREAM with one
+strategy, `incremental_tier_fold`: a foreachBatch fold of each
+micro-batch into a mergeable tier table, with no watermark, so data of
+any lateness folds in and first/last stay exact (`run_tier_maintenance`
+drains a stream through it; `jobs/maintain_job.py` is its spark-submit
+entry point).  The table is committed through `catalog.publish`, the
+same versioned `_LATEST` protocol as every catalog table, and
+`read_tier_snapshot` reads its live version.  v1 production runs build
+the tiers in batch (plans/pipeline.py); the two paths agree bit-for-bit
+(pinned by test).
 
-Two streaming tiers:
-  * streaming_rollup_1m — built-in watermarked windowed aggregate
-    (cnt/sum/min/max; Spark's streaming agg cannot express min_by/max_by
-    over an event-order key).
-  * streaming_rollup_1m_stateful — applyInPandasWithState custom stateful
-    operator carrying first/last as well: per-(series, bucket) state holds
-    the running aggregates plus the order-extreme (ts, value) pairs, and
-    the finalized row emits on EVENT-TIME TIMEOUT once the watermark
-    passes the bucket end — full batch-tier fidelity from a stream.
+The other functions here are streaming twins of batch operators
+(sessionize, dedup, distinct/histogram tiers, threshold alerts, HLL and
+HDR sketches) over file-source streams.
 """
 
 from __future__ import annotations
 
 import math
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ts2g2_spark.catalog import footer_schema
+from ts2g2_spark import catalog
 
 POINTS_SCHEMA = ("doc_id string, source string, ts timestamp, value double")
 
@@ -45,114 +45,6 @@ def stream_points(
         .option("maxFilesPerTrigger", max_files)
         .parquet(input_dir)
     )
-
-
-def streaming_rollup_1m(
-    points: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming 1m tier: watermarked tumbling-window aggregate.  Output
-    schema matches the batch tier (minus first/last, see module note) so
-    `rollup_tier_up` composes on top."""
-    return (
-        points.withWatermark("ts", watermark)
-        .groupBy("doc_id", "source", F.window("ts", "1 minute"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("value").alias("sum"),
-            F.min("value").alias("min"),
-            F.max("value").alias("max"),
-        )
-        .select(
-            "doc_id", "source",
-            F.col("window.start").alias("bucket_ts"),
-            "cnt", "sum", "min", "max",
-            F.lit(False).alias("gapfilled"),
-        )
-    )
-
-
-_STATE_SCHEMA = (
-    "cnt long, sum double, min double, max double, "
-    "first_ts long, first double, last_ts long, last double"
-)
-_STATEFUL_OUT_SCHEMA = (
-    "doc_id string, source string, bucket_ts timestamp, cnt long, "
-    "sum double, min double, max double, first double, last double, "
-    "gapfilled boolean"
-)
-
-
-def streaming_rollup_1m_stateful(
-    points: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming 1m tier INCLUDING first/last: an applyInPandasWithState
-    custom stateful operator (the engine's SURVEY §2.7 streaming seam at
-    full batch fidelity).
-
-    Mechanics: keys = (doc_id, source, bucket_ts); the state row carries
-    cnt/sum/min/max plus (first_ts, first, last_ts, last) where the order
-    key is the event timestamp — exactly the batch tier's
-    min_by/max_by(value, ts) semantics (plans/rollup.py:230-240).  Each
-    update is vectorized over the Arrow batch (idxmin/idxmax, no per-row
-    Python).  The finalized row emits ONCE, on event-time timeout, when
-    the watermark passes the bucket end — so downstream tier-ups read
-    append-only finalized buckets, the same contract as the windowed
-    variant.  State size is O(live buckets), bounded by the watermark."""
-    bucketed = (
-        points.withWatermark("ts", watermark)
-        .withColumn("bucket_ts", F.date_trunc("minute", "ts"))
-    )
-
-    def fn(key, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            cnt, s, mn, mx, fts, fv, lts, lv = state.get
-            state.remove()
-            yield pd.DataFrame([{
-                "doc_id": key[0], "source": key[1], "bucket_ts": key[2],
-                "cnt": cnt, "sum": s, "min": mn, "max": mx,
-                "first": fv, "last": lv, "gapfilled": False,
-            }])
-            return
-        if state.exists:
-            cnt, s, mn, mx, fts, fv, lts, lv = state.get
-        else:
-            cnt, s, mn, mx = 0, 0.0, None, None
-            fts = fv = lts = lv = None
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ts_ns = pdf["ts"].astype("int64")
-            v = pdf["value"]
-            cnt += len(pdf)
-            s += float(v.sum())
-            bmin, bmax = float(v.min()), float(v.max())
-            mn = bmin if mn is None else min(mn, bmin)
-            mx = bmax if mx is None else max(mx, bmax)
-            i_f, i_l = int(ts_ns.idxmin()), int(ts_ns.idxmax())
-            if fts is None or int(ts_ns.loc[i_f]) < fts:
-                fts, fv = int(ts_ns.loc[i_f]), float(v.loc[i_f])
-            if lts is None or int(ts_ns.loc[i_l]) > lts:
-                lts, lv = int(ts_ns.loc[i_l]), float(v.loc[i_l])
-        state.update((cnt, s, mn, mx, fts, fv, lts, lv))
-        import datetime as dt
-
-        k = key[2]
-        if isinstance(k, dt.datetime) and k.tzinfo is None:
-            # session time is UTC; a naive datetime's .timestamp() would
-            # re-interpret it in the worker's local zone
-            k = k.replace(tzinfo=dt.timezone.utc)
-        bucket_end_ms = int(k.timestamp() * 1000) + 60_000
-        # the timeout must sit strictly beyond the current watermark
-        state.setTimeoutTimestamp(
-            max(bucket_end_ms, state.getCurrentWatermarkMs() + 1))
-        return
-        yield  # pragma: no cover — makes fn a generator on the emit path
-
-    return bucketed.groupBy("doc_id", "source", "bucket_ts") \
-        .applyInPandasWithState(
-            fn, _STATEFUL_OUT_SCHEMA, _STATE_SCHEMA, "append",
-            GroupStateTimeout.EventTimeTimeout)
 
 
 EVENTS_SCHEMA = ("event_id bigint, ts timestamp, user_id bigint, "
@@ -249,7 +141,7 @@ def streaming_distinct_1m(
     coarser tiers directly on a live stream's output.
 
     Append mode emits one final row per window once the watermark
-    passes its end (same completeness contract as streaming_rollup_1m);
+    passes its end (the append-mode completeness contract);
     because sketch union is associative and order-insensitive in
     estimate, the emitted state is exactly what a tier catalog stores.
     """
@@ -294,7 +186,6 @@ def incremental_tier_fold(
     ts_col: str = "ts",
     val_col: str = "value",
     okey_col: str | None = None,
-    keep_versions: int = 2,
     n_parts: int = 16,
 ):
     """foreachBatch fold that maintains a MERGEABLE tier table from a
@@ -314,18 +205,12 @@ def incremental_tier_fold(
     write I/O is O(touched partitions), not O(tier).  Size `n_parts`
     so a typical late batch touches a small fraction of partitions.
 
-    This is the third streaming-tier strategy, complementary to the
-    watermarked append-only tiers above: those finalize each bucket once
-    (state inside the streaming engine, bounded by the watermark and
-    deaf to later data); this one keeps buckets forever-updatable with
-    state in the TABLE itself.
-
-    Commit protocol (the Iceberg-snapshot seam in miniature, same idea
-    as catalog.Catalog): each applied batch writes a new `v{batch_id}`
-    directory, then atomically replaces the `_LATEST` pointer file
-    (JSON: version + batch_id).  foreachBatch is AT-LEAST-ONCE, so the
-    fold is made idempotent by recording the last applied batch_id in
-    the pointer: redelivery of the LAST batch (a crash between the
+    Commit protocol: every catalog table's (see the `catalog` module
+    docstring).  Each applied batch writes version `v{batch_id}` and
+    `catalog.publish`es it, with the batch_id and the table layout in
+    the `_LATEST` pointer.
+    foreachBatch is AT-LEAST-ONCE, so the fold is made idempotent by
+    that batch_id: redelivery of the LAST batch (a crash between the
     table commit and the streaming checkpoint advancing — the only
     batch the engine can redeliver within one checkpoint lineage) is
     skipped, and a batch_id going BACKWARDS raises instead of silently
@@ -333,25 +218,11 @@ def incremental_tier_fold(
     deleted/recreated, the source will redeliver EVERYTHING, and the
     only correct resumption is a fresh `table_root` (or restoring the
     matching checkpoint).  One table_root is bound to one checkpoint
-    lineage.  Old versions beyond `keep_versions` are removed after
-    commit."""
-    import json
-    import os
-    import shutil
-
+    lineage."""
     from ts2g2_spark.plans import rollup as rollup_mod
 
-    ptr = os.path.join(table_root, "_LATEST")
-
-    def _read_ptr() -> dict | None:
-        try:
-            with open(ptr) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return None
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cur = _read_ptr()
+        cur = catalog.read_pointer(table_root)
         if cur is not None and batch_id == cur["batch_id"]:
             return  # redelivered last batch — already folded in
         if cur is not None and batch_id < cur["batch_id"]:
@@ -389,25 +260,22 @@ def incremental_tier_fold(
             if not touched:
                 return  # empty batch: nothing to fold, no version burned
             version = f"v{batch_id}"
-            out_dir = os.path.join(table_root, version)
             if cur is not None:
                 prev_dir = os.path.join(table_root, cur["version"])
                 # _pb is a physical partition column — this filter
                 # prunes to the touched directories, never scanning
                 # the rest
-                state = _read_version(spark, prev_dir).where(
+                state = catalog.read_table(spark, table_root).where(
                     F.col("_pb").isin(touched))
                 merged = rollup_mod.merge_tier_states(
                     state, delta, series_cols=series_cols)
             else:
                 prev_dir = None
                 merged = delta
-            # a crash between this write / the hardlink carry and the
-            # _LATEST commit leaves a partial version dir; under
-            # partitionOverwriteMode=dynamic mode('overwrite') would NOT
-            # wipe it and the redelivered hardlink carry would hit
-            # FileExistsError — always start redelivery from a clean dir
-            shutil.rmtree(out_dir, ignore_errors=True)
+            # emptied first: under partitionOverwriteMode=dynamic,
+            # mode('overwrite') would not wipe a partial version a crash
+            # left, and the hardlink carry would hit FileExistsError
+            out_dir = catalog.version_dir(table_root, version)
             merged.withColumn("_pb", pb).write.mode("overwrite") \
                 .partitionBy("_pb").parquet(out_dir)
         finally:
@@ -425,19 +293,7 @@ def incremental_tier_fold(
                     fp = os.path.join(src, fn)
                     if os.path.isfile(fp):
                         os.link(fp, os.path.join(dst, fn))
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "batch_id": batch_id,
-                       **layout}, f)
-        os.replace(tmp, ptr)  # atomic snapshot commit
-        live = {version} | ({cur["version"]} if cur else set())
-        versions = sorted(
-            (d for d in os.listdir(table_root)
-             if d.startswith("v") and d not in live),
-            key=lambda d: int(d[1:]))
-        for old in versions[:max(0, len(versions) - (keep_versions - 2))]:
-            shutil.rmtree(os.path.join(table_root, old),
-                          ignore_errors=True)
+        catalog.publish(table_root, version, batch_id=batch_id, **layout)
 
     return fold
 
@@ -445,28 +301,14 @@ def incremental_tier_fold(
 def read_tier_snapshot(spark: SparkSession, table_root: str) -> DataFrame:
     """Read the last committed tier snapshot (the `_LATEST` pointer's
     version directory) as a mergeable state frame (plus the `_pb`
-    series-hash partition column); compose with
-    plans.rollup.finalize_state for the serving shape (it projects the
-    partition column away).
+    series-hash partition column, which Spark infers, as an int, from
+    the directory names); compose with plans.rollup.finalize_state for
+    the serving shape (it projects the partition column away).
 
-    The frame is LAZY over the version directory, and the maintenance
-    fold garbage-collects versions beyond `keep_versions` after each
-    commit — materialize (an action, cache, or write) before the
-    stream can cycle `keep_versions` more batches, or raise
-    keep_versions to widen the read grace window."""
-    import json
-    import os
-
-    with open(os.path.join(table_root, "_LATEST")) as f:
-        version = json.load(f)["version"]
-    return _read_version(spark, os.path.join(table_root, version))
-
-
-def _read_version(spark: SparkSession, version_dir: str) -> DataFrame:
-    """One version directory of a folded tier table, with the data schema
-    from a footer (no inference job); Spark still infers the `_pb`
-    partition column (int) from the directory names."""
-    return spark.read.schema(footer_schema(version_dir)).parquet(version_dir)
+    The frame is LAZY over the version directory, which stays on disk
+    until the second fold after it publishes — materialize it (an
+    action, cache, or write) before then."""
+    return catalog.read_table(spark, table_root)
 
 
 def run_tier_maintenance(
