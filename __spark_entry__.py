@@ -1,9 +1,18 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 `entry(spark)` runs the flagship rollup pipeline on sf0.001.
-`queries()` exposes one entry per implemented operator family from
-SURVEY.md §2 (+ the engine-native training-data ops); `oracle_sql()` gives
-the DuckDB-equivalent ANSI SQL for every SQL-expressible one.
+
+`REGISTRY` (at the end of this file) is the one place a contract query is
+declared: an ordered table of `Query(name, builder, oracle, reason)` rows,
+one per implemented operator family from SURVEY.md §2 (+ the
+engine-native training-data ops).  Each row carries either the
+DuckDB-equivalent ANSI SQL that pins the builder's values (`oracle`) or
+the reason the query is checked for rows only (`reason`), never both; a
+repeated name or a row with neither raises at import.  `queries()`,
+`oracle_sql()` and `rows_only()` are derived from it.  Row order is part
+of the contract: the driver's correctness harness samples the first 50
+rows, so the ORDERING CONTRACT comment on the table says what the prefix
+must hold.
 
 Cross-engine determinism rules used throughout:
   * every float aggregate that is ORDER-SENSITIVE across engines is either
@@ -17,6 +26,7 @@ Cross-engine determinism rules used throughout:
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +46,27 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+def _emb_vec() -> F.Column:
+    return F.expr("transform(embedding, x -> cast(x as double))")
+
+
+def _emb_double(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """vec_id and the embedding as double[]."""
+    return _emb(spark, sf_dir).select("vec_id",
+                                      _emb_vec().alias("embedding"))
+
+
+def _ann_eval(spark: SparkSession, sf_dir: str):
+    """The ANN recall-eval inputs: the double embeddings, the query ids
+    (vec_id < 50) and their exact cosine top-5 ground truth."""
+    from ts2g2_spark.operators import similarity
+
+    emb = _emb_double(spark, sf_dir)
+    queries = emb.where(F.col("vec_id") < 50)
+    return (emb, queries.select("vec_id"),
+            similarity.cosine_topk(emb, queries, k=5))
+
+
 def _okey() -> F.Column:
     return (F.unix_micros(F.col("ts").cast("timestamp")) - F.lit(BASE_US)
             ) * F.lit(100000) + F.col("event_id")
@@ -43,32 +74,63 @@ def _okey() -> F.Column:
 
 _OKEY_SQL = "(epoch_us(ts) - 1704067200000000) * 100000 + event_id"
 
+# the engine's word split as DuckDB SQL: lower-case, drop everything but
+# [a-z0-9] and whitespace, collapse whitespace runs, split on ' '
+_NORM_TEXT_SQL = (r"trim(regexp_replace(regexp_replace(lower(text), "
+                  r"'[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g'))")
+_WORDS_SQL = (f"list_filter(string_split({_NORM_TEXT_SQL}, ' '), "
+              "x -> x != '')")
+
+
+def _words_cte(cols: str = "doc_id") -> str:
+    """`w`: the documents' `cols` and their word list `ws`."""
+    select = f"{cols}, {_WORDS_SQL}" if cols else _WORDS_SQL
+    return f"w as (\n  select {select} as ws\n  from documents\n)"
+
 
 # ---------------------------------------------------------------- rollups
 _TRUNC = {60: "minute", 3600: "hour", 86400: "day"}
 
 
-def _rollup_events(spark, sf_dir, tier_s: int) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    bucket = F.date_trunc(_TRUNC[tier_s], "ts").alias("bucket_ts")
-    return (
-        ev.groupBy("user_id", bucket)
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.round(F.sum("value"), 6).alias("sum_val"),
-            F.min("value").alias("min_val"),
-            F.max("value").alias("max_val"),
-            F.min_by("value", _okey()).alias("first_val"),
-            F.max_by("value", _okey()).alias("last_val"),
-        )
-    )
+_USER = ("user_id",)
+# engine tier column -> the contract's serving column
+_SERVING = {"sum": "sum_val", "min": "min_val", "max": "max_val",
+            "first": "first_val", "last": "last_val"}
+
+
+def _events_1m(spark, sf_dir) -> DataFrame:
+    """The per-user 1m tier of the events table, built by the engine:
+    `plans.rollup.rollup_state` -> `finalize_state` (first/last picked by
+    the unique `_okey`)."""
+    from ts2g2_spark.plans import rollup
+
+    state = rollup.rollup_state(
+        _events(spark, sf_dir), "1m", series_cols=_USER, ts_col="ts",
+        val_col="value", okey=_okey())
+    return rollup.finalize_state(state, series_cols=_USER)
+
+
+def _serving_row(tier: DataFrame, *extra) -> DataFrame:
+    """An engine tier in the contract's row shape (`*_val` columns)."""
+    return tier.select("user_id", "bucket_ts", "cnt", *[
+        F.col(c).alias(name) for c, name in _SERVING.items()], *extra)
+
+
+def _rounded(tier: DataFrame) -> DataFrame:
+    """The tier with its sum rounded to 6 decimals, as both engines
+    report it."""
+    return tier.withColumn("sum", F.round("sum", 6))
+
+
+def _rollup_events(spark, sf_dir) -> DataFrame:
+    return _serving_row(_rounded(_events_1m(spark, sf_dir)))
 
 
 def q_rollup_1m(spark, sf_dir):
-    return _rollup_events(spark, sf_dir, 60)
+    return _rollup_events(spark, sf_dir)
 
 
-def _rollup_sql(tier_s: int) -> str:
+def _rollup_sql(tier_s: int, where: str = "") -> str:
     unit = _TRUNC[tier_s]
     return f"""
     select user_id,
@@ -79,93 +141,34 @@ def _rollup_sql(tier_s: int) -> str:
            max(value) as max_val,
            arg_min(value, {_OKEY_SQL}) as first_val,
            arg_max(value, {_OKEY_SQL}) as last_val
-    from events group by 1, 2
+    from events {where}
+    group by 1, 2
     """
-
-
-def q_rollup_1h_tiered(spark, sf_dir):
-    """1h tier derived from the 1m tier (continuous-aggregate path); the
-    oracle recomputes from raw — equality proves tier-from-tier exactness.
-    ts2g2 has no rollup path (engine-native, SURVEY §2.7)."""
-    ev = _events(spark, sf_dir)
-    m_bucket = F.date_trunc("minute", "ts").alias("bucket_ts")
-    m1 = ev.groupBy("user_id", m_bucket).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("value").alias("s"),
-        F.min("value").alias("min_val"),
-        F.max("value").alias("max_val"),
-        F.min_by("value", _okey()).alias("first_val"),
-        F.max_by("value", _okey()).alias("last_val"),
-    )
-    h_bucket = F.date_trunc("hour", "bucket_ts").alias("bucket_ts")
-    return m1.groupBy("user_id", h_bucket).agg(
-        F.sum("cnt").alias("cnt"),
-        F.round(F.sum("s"), 6).alias("sum_val"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
-        F.min_by("first_val", F.col("bucket_ts")).alias("first_val"),
-        F.max_by("last_val", F.col("bucket_ts")).alias("last_val"),
-    )
-
-
-def q_rollup_1d_tiered(spark, sf_dir):
-    """1d tier derived from an intermediate 1h tier (two-level continuous
-    aggregate); oracle recomputes from raw."""
-    ev = _events(spark, sf_dir)
-    h_bucket = F.date_trunc("hour", "ts").alias("bucket_ts")
-    h1 = ev.groupBy("user_id", h_bucket).agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum("value").alias("s"),
-        F.min("value").alias("min_val"),
-        F.max("value").alias("max_val"),
-        F.min_by("value", _okey()).alias("first_val"),
-        F.max_by("value", _okey()).alias("last_val"),
-    )
-    d_bucket = F.date_trunc("day", "bucket_ts").alias("bucket_ts")
-    return h1.groupBy("user_id", d_bucket).agg(
-        F.sum("cnt").alias("cnt"),
-        F.round(F.sum("s"), 6).alias("sum_val"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
-        F.min_by("first_val", F.col("bucket_ts")).alias("first_val"),
-        F.max_by("last_val", F.col("bucket_ts")).alias("last_val"),
-    )
 
 
 def q_rollup_tiers_up(spark, sf_dir):
     """1h AND 1d continuous-aggregate tiers in one tagged union (round 3:
     both parameterizations stay driver-hash-verified inside one contract
-    slot of the 50-query prefix).  Each tier is derived tier-from-tier
-    (1m->1h, 1h->1d); the oracle recomputes from raw — equality proves
-    tier-from-tier exactness."""
-    h = q_rollup_1h_tiered(spark, sf_dir).select(
-        F.lit("1h").alias("tier"), "*")
-    d = q_rollup_1d_tiered(spark, sf_dir).select(
-        F.lit("1d").alias("tier"), "*")
-    return h.unionByName(d)
+    slot of the 50-query prefix).  The engine derives each tier from the
+    one below it (`plans.rollup.rollup_tier_up`, 1m->1h->1d); the oracle
+    recomputes from raw — equality proves tier-from-tier exactness.
+    ts2g2 has no rollup path (engine-native, SURVEY §2.7)."""
+    from ts2g2_spark.plans import rollup
+
+    h1 = rollup.rollup_tier_up(_events_1m(spark, sf_dir), "1h",
+                               series_cols=_USER)
+    d1 = rollup.rollup_tier_up(h1, "1d", series_cols=_USER)
+
+    def tagged(tier, tag):
+        return _serving_row(_rounded(tier)).select(
+            F.lit(tag).alias("tier"), "*")
+
+    return tagged(h1, "1h").unionByName(tagged(d1, "1d"))
 
 
-ROLLUP_TIERS_UP_SQL = f"""
-select '1h' as tier, user_id,
-       date_trunc('hour', ts) as bucket_ts,
-       count(*) as cnt,
-       round(sum(value), 6) as sum_val,
-       min(value) as min_val,
-       max(value) as max_val,
-       arg_min(value, {_OKEY_SQL}) as first_val,
-       arg_max(value, {_OKEY_SQL}) as last_val
-from events group by 2, 3
-union all
-select '1d' as tier, user_id,
-       date_trunc('day', ts) as bucket_ts,
-       count(*) as cnt,
-       round(sum(value), 6) as sum_val,
-       min(value) as min_val,
-       max(value) as max_val,
-       arg_min(value, {_OKEY_SQL}) as first_val,
-       arg_max(value, {_OKEY_SQL}) as last_val
-from events group by 2, 3
-"""
+ROLLUP_TIERS_UP_SQL = "\nunion all\n".join(
+    f"select '{tag}' as tier, * from ({_rollup_sql(tier_s)})"
+    for tag, tier_s in (("1h", 3600), ("1d", 86400)))
 
 
 def q_tier_refresh_late(spark, sf_dir):
@@ -184,20 +187,13 @@ def q_tier_refresh_late(spark, sf_dir):
     ev = _events(spark, sf_dir)
     is_late = F.pmod(F.col("event_id"), F.lit(20)) == 7
     state = rollup.rollup_state(
-        ev.where(~is_late), "1m", series_cols=("user_id",),
+        ev.where(~is_late), "1m", series_cols=_USER,
         ts_col="ts", val_col="value", okey=_okey())
     refreshed = rollup.refresh_tier(
-        state, ev.where(is_late), "1m", series_cols=("user_id",),
+        state, ev.where(is_late), "1m", series_cols=_USER,
         ts_col="ts", val_col="value", okey=_okey())
-    out = rollup.finalize_state(refreshed, series_cols=("user_id",))
-    return out.select(
-        "user_id", "bucket_ts", "cnt",
-        F.round("sum", 6).alias("sum_val"),
-        F.col("min").alias("min_val"),
-        F.col("max").alias("max_val"),
-        F.col("first").alias("first_val"),
-        F.col("last").alias("last_val"),
-    )
+    return _serving_row(_rounded(
+        rollup.finalize_state(refreshed, series_cols=_USER)))
 
 
 def q_theil_sen_trend(spark, sf_dir):
@@ -545,30 +541,14 @@ from events group by 1, 2
 
 def q_gapfill_1h(spark, sf_dir):
     """Dense hourly spine per user between its first and last hour;
-    gapfilled marks hours with no events (engine-native op, SURVEY §2.7)."""
-    ev = _events(spark, sf_dir)
-    hourly = ev.groupBy(
-        "user_id",
-        F.date_trunc("hour", "ts").alias("bucket_ts"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    spine = (
-        hourly.groupBy("user_id")
-        .agg(F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi"))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 hour"))
-            ).alias("bucket_ts"),
-        )
-    )
-    return (
-        spine.join(hourly, ["user_id", "bucket_ts"], "left")
-        .select(
-            "user_id", "bucket_ts",
-            F.coalesce("cnt", F.lit(0)).alias("cnt"),
-            F.col("cnt").isNull().alias("gapfilled"),
-        )
-    )
+    gapfilled marks hours with no events (engine-native op, SURVEY §2.7):
+    `plans.rollup.gapfill` over the engine's 1h tier (1m tier tiered up)."""
+    from ts2g2_spark.plans import rollup
+
+    h1 = rollup.rollup_tier_up(_events_1m(spark, sf_dir), "1h",
+                               series_cols=_USER)
+    return rollup.gapfill(h1, "1h", series_cols=_USER).select(
+        "user_id", "bucket_ts", "cnt", "gapfilled")
 
 
 GAPFILL_SQL = """
@@ -593,7 +573,7 @@ def q_retention_1m_recent(spark, sf_dir):
     """Retention predicate on the 1m tier: keep only the final 7 days of
     each dataset (cutoff = max bucket - 7d).  The filter compiles to a
     partition/file prune on date-partitioned storage."""
-    m1 = _rollup_events(spark, sf_dir, 60).select(
+    m1 = _rollup_events(spark, sf_dir).select(
         "user_id", "bucket_ts", "cnt")
     mx = m1.agg(F.max("bucket_ts").alias("mx"))
     return m1.join(F.broadcast(mx)).where(
@@ -682,15 +662,52 @@ def _event_series(spark, sf_dir):
         ev, "user_id", ts_col="ts", val_col="value", order_col="event_id")
 
 
-_PTS_CTE = """
-pts as (
+def _pts_cte(where: str = "", max_pos: int | None = None) -> str:
+    """`pts`: each user's events (optionally filtered by `where`) numbered
+    pos = 0, 1, ... in (ts, event_id) order, value as v; `max_pos` keeps
+    only the first max_pos points of each user."""
+    cond = f"\n  where {where}" if where else ""
+    keep = f"\n  qualify pos < {max_pos}" if max_pos else ""
+    return f"""pts as (
   select user_id,
          row_number() over (partition by user_id order by ts, event_id) - 1
            as pos,
          value as v
-  from events
-)
-"""
+  from events{cond}{keep}
+)"""
+
+
+_PTS_CTE = _pts_cte()
+# a point m strictly between a and b hides b from a (HVG / NVG)
+_HVG_BLOCKS = "m.v > greatest(a.v, b.v)"
+_NVG_BLOCKS = """m.v > ((b.v - a.v) / (b.pos - a.pos)) * m.pos
+              + (b.v - ((b.v - a.v) / (b.pos - a.pos)) * b.pos)"""
+
+
+def _visible_sql(cols: str = "a.user_id, a.pos as src, b.pos as dst",
+                 blocks: str = _HVG_BLOCKS, skip: int = 0) -> str:
+    """The visibility edges (a, b) of each user's `pts`: no point after
+    the first `skip` intermediates blocks the view."""
+    after = f"a.pos + {skip}" if skip else "a.pos"
+    return f"""select {cols}
+from pts a join pts b
+  on a.user_id = b.user_id and b.pos > a.pos
+where not exists (
+  select 1 from pts m
+  where m.user_id = a.user_id and m.pos > {after} and m.pos < b.pos
+    and {blocks}
+)"""
+
+
+# the HVG edge list and its symmetric adjacency, over `pts`
+_HVG_ADJ_CTES = f"""hvg as materialized (
+{_visible_sql()}
+),
+adj as materialized (
+  select user_id, src as node, dst as nb from hvg
+  union all
+  select user_id, dst as node, src as nb from hvg
+)"""
 
 
 def q_hvg_edges(spark, sf_dir):
@@ -714,23 +731,9 @@ def q_hvg_edges(spark, sf_dir):
 
 HVG_SQL = f"""
 with {_PTS_CTE}
-select a.user_id, a.pos as src, b.pos as dst, 0 as lim
-from pts a join pts b
-  on a.user_id = b.user_id and b.pos > a.pos
-where not exists (
-  select 1 from pts m
-  where m.user_id = a.user_id and m.pos > a.pos and m.pos < b.pos
-    and m.v > greatest(a.v, b.v)
-)
+{_visible_sql("a.user_id, a.pos as src, b.pos as dst, 0 as lim")}
 union all
-select a.user_id, a.pos as src, b.pos as dst, 2 as lim
-from pts a join pts b
-  on a.user_id = b.user_id and b.pos > a.pos
-where not exists (
-  select 1 from pts m
-  where m.user_id = a.user_id and m.pos > a.pos + 2 and m.pos < b.pos
-    and m.v > greatest(a.v, b.v)
-)
+{_visible_sql("a.user_id, a.pos as src, b.pos as dst, 2 as lim", skip=2)}
 """
 
 
@@ -746,15 +749,7 @@ def q_nvg_edges(spark, sf_dir):
 
 NVG_SQL = f"""
 with {_PTS_CTE}
-select a.user_id, a.pos as src, b.pos as dst
-from pts a join pts b
-  on a.user_id = b.user_id and b.pos > a.pos
-where not exists (
-  select 1 from pts m
-  where m.user_id = a.user_id and m.pos > a.pos and m.pos < b.pos
-    and m.v > ((b.v - a.v) / (b.pos - a.pos)) * m.pos
-              + (b.v - ((b.v - a.v) / (b.pos - a.pos)) * b.pos)
-)
+{_visible_sql(blocks=_NVG_BLOCKS)}
 """
 
 
@@ -812,9 +807,8 @@ def q_qg_edges_q4(spark, sf_dir):
         "src", "dst", "weight")
 
 
-QG_SQL = f"""
-with {_PTS_CTE},
-b as (
+# each point's quantile bin q (Q=4) within its user's `pts`
+_QG_BIN_CTES = """b as (
   select user_id, quantile_cont(v, [0.0, 0.25, 0.5, 0.75, 1.0]) qb
   from pts group by 1
 ),
@@ -824,7 +818,11 @@ binned as (
                list_prepend(b.qb[1] - 1e-9, b.qb[2:5]),
                x -> x < p.v)) - 1 as q
   from pts p join b on p.user_id = b.user_id
-),
+)"""
+
+QG_SQL = f"""
+with {_PTS_CTE},
+{_QG_BIN_CTES},
 trans as (
   select user_id, q as src,
          lead(q) over (partition by user_id order by pos) as dst
@@ -877,17 +875,7 @@ def q_qg_mean_jump(spark, sf_dir):
 
 QG_JUMP_SQL = f"""
 with {_PTS_CTE},
-b as (
-  select user_id, quantile_cont(v, [0.0, 0.25, 0.5, 0.75, 1.0]) qb
-  from pts group by 1
-),
-binned as (
-  select p.user_id, p.pos,
-         len(list_filter(
-               list_prepend(b.qb[1] - 1e-9, b.qb[2:5]),
-               x -> x < p.v)) - 1 as q
-  from pts p join b on p.user_id = b.user_id
-),
+{_QG_BIN_CTES},
 phis as (select unnest([1, 2]) as phi),
 trans as (
   select binned.user_id, phis.phi, q as src,
@@ -1061,11 +1049,8 @@ def q_fingerprints(spark, sf_dir):
     return text_ops.fingerprints(_docs(spark, sf_dir))
 
 
-FINGERPRINT_SQL = r"""
-select doc_id,
-       md5(trim(regexp_replace(
-             regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
-             '\s+', ' ', 'g'))) as fingerprint
+FINGERPRINT_SQL = f"""
+select doc_id, md5({_NORM_TEXT_SQL}) as fingerprint
 from documents
 """
 
@@ -1076,14 +1061,12 @@ def q_token_counts(spark, sf_dir):
     return text_ops.token_counts(_docs(spark, sf_dir))
 
 
-TOKEN_COUNTS_SQL = r"""
+TOKEN_COUNTS_SQL = rf"""
 select doc_id,
        len(regexp_split_to_array(trim(text), '\s+'))::BIGINT as n_ws_tokens,
        len(regexp_extract_all(text, '([A-Za-z]+|[0-9]|[^A-Za-z0-9\s])', 1))
          ::BIGINT as n_bpe_ish,
-       length(trim(regexp_replace(
-                regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
-                '\s+', ' ', 'g')))::BIGINT as n_chars_norm
+       length({_NORM_TEXT_SQL})::BIGINT as n_chars_norm
 from documents
 """
 
@@ -1153,12 +1136,11 @@ def q_ngram_jaccard(spark, sf_dir):
     ).select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-NGRAM_JACCARD_SQL = r"""
-with w as (
+# word-3-gram shingle sets (sh), their sizes (sz) and pairwise
+# intersection counts (inter)
+_JACCARD_CTES = rf"""w as (
   select doc_id,
-         string_split(trim(regexp_replace(
-             regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
-             '\s+', ' ', 'g')), ' ') ws
+         string_split({_NORM_TEXT_SQL}, ' ') ws
   from documents
 ),
 sh as (
@@ -1172,7 +1154,10 @@ inter as (
   select a.doc_id doc_a, b.doc_id doc_b, count(*) i
   from sh a join sh b on a.sh = b.sh and a.doc_id < b.doc_id
   group by 1, 2
-)
+)"""
+
+NGRAM_JACCARD_SQL = f"""
+with {_JACCARD_CTES}
 select doc_a, doc_b,
        round(i / (sa.n + sb.n - i), 6) as jaccard
 from inter
@@ -1201,26 +1186,8 @@ def q_dedup_components(spark, sf_dir):
     return dedup.connected_components(pairs)
 
 
-DEDUP_COMPONENTS_SQL = r"""
-with recursive w as (
-  select doc_id,
-         string_split(trim(regexp_replace(
-             regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
-             '\s+', ' ', 'g')), ' ') ws
-  from documents
-),
-sh as (
-  select distinct doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] sh
-  from w, lateral unnest(generate_series(1, greatest(len(ws) - 2, 0)))
-    as t(i)
-  where length(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) > 0
-),
-sz as (select doc_id, count(*) n from sh group by 1),
-inter as (
-  select a.doc_id doc_a, b.doc_id doc_b, count(*) i
-  from sh a join sh b on a.sh = b.sh and a.doc_id < b.doc_id
-  group by 1, 2
-),
+DEDUP_COMPONENTS_SQL = f"""
+with recursive {_JACCARD_CTES},
 pairs as (
   select doc_a, doc_b
   from inter
@@ -1423,13 +1390,7 @@ join sz sa on c.doc_a = sa.doc_id
 join sz sb on c.doc_b = sb.doc_id
 where t.i / (sa.n + sb.n - t.i) >= {threshold}"""
     return rf"""
-with w as (
-  select doc_id,
-         list_filter(string_split(trim(regexp_replace(
-             regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
-             '\s+', ' ', 'g')), ' '), x -> x != '') as ws
-  from documents
-),
+with {_words_cte("doc_id")},
 whv as (
   select doc_id,
          list_transform(ws,
@@ -1446,6 +1407,20 @@ sigs as (select doc_id, {mins} from sh0 group by doc_id),
 banded as ({band_selects}),
 {cands}
 {tail}"""
+
+
+# the engine default cap (4096) is replayed in the oracle too, so the
+# contract cannot silently diverge at a scale factor whose boilerplate
+# families exceed the cap (no tested sf does today — the hashes are
+# unchanged — but the equality must hold by construction, not by data luck)
+MINHASH_LSH_SQL = _minhash_sql(max_bucket_size=4096)
+
+# full recompute restricted to pairs touching the new batch — the
+# incremental generator's defining equality
+INCREMENTAL_DEDUP_SQL = (
+    "select doc_a, doc_b, jaccard from ("
+    + MINHASH_LSH_SQL
+    + ") where doc_a % 10 = 9 or doc_b % 10 = 9")
 
 
 def q_simhash_near(spark, sf_dir):
@@ -1572,6 +1547,9 @@ clean as (
 """
 
 
+CORPUS_CLEAN_SQL = _clean_sql("select doc_id, source, n_words from clean")
+
+
 def q_datamix_report(spark, sf_dir):
     """Dataset-card aggregate over the cleaned corpus: docs and
     whitespace tokens per (source, lang) — token counts ride the same
@@ -1582,6 +1560,14 @@ def q_datamix_report(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n_docs"),
              F.sum("n_ws_tokens").alias("total_tokens"))
     )
+
+
+DATAMIX_REPORT_SQL = _clean_sql(
+    "select c.source, c.lang, count(*) as n_docs, "
+    "cast(sum(len(regexp_split_to_array(trim(d.text), '\\s+')))"
+    " as bigint) as total_tokens "
+    "from clean c join documents d on c.doc_id = d.doc_id "
+    "group by 1, 2")
 
 
 # ------------------------------------------------ deterministic sampling
@@ -1669,11 +1655,7 @@ def q_ann_cosine_top5(spark, sf_dir):
     """Exact brute-force cosine top-5 for queries vec_id < 5."""
     from ts2g2_spark.operators import similarity
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias(
-            "embedding"),
-    )
+    emb = _emb_double(spark, sf_dir)
     q = emb.where(F.col("vec_id") < 5)
     return similarity.cosine_topk(emb, q, k=5).select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"),
@@ -1705,11 +1687,7 @@ def q_ann_lsh_top5(spark, sf_dir):
     by design, recall measured in tests against brute force)."""
     from ts2g2_spark.operators import similarity
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias(
-            "embedding"),
-    )
+    emb = _emb_double(spark, sf_dir)
     q = emb.where(F.col("vec_id") < 5)
     return similarity.lsh_bucket_topk(emb, q, k=5)
 
@@ -1718,11 +1696,7 @@ def q_ann_ivf_top5(spark, sf_dir):
     """IVF approximate top-5 (scale path; no oracle)."""
     from ts2g2_spark.operators import similarity
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias(
-            "embedding"),
-    )
+    emb = _emb_double(spark, sf_dir)
     q = emb.where(F.col("vec_id") < 5)
     return similarity.ivf_topk(emb, q, k=5, n_lists=8, nprobe=3)
 
@@ -1764,24 +1738,34 @@ def q_semantic_dedup(spark, sf_dir):
         emb, eps=0.6, n_lists=8, seed_hash="md5", lloyd=False)
 
 
-SEMANTIC_DEDUP_SQL = """
-with e as materialized (
+_H64_VEC_ID = ("cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))\n"
+               "           as bigint), vec_id")
+
+
+def _md5_seeds_cte(name: str, cols: str, idx: str, src: str,
+                   k: int) -> str:
+    """`name`: the first k rows of `src` in md5-h64(vec_id) order (the
+    engine's md5 seed order), numbered `idx` = 0..k-1."""
+    return f"""{name} as materialized (
+  select {cols}, row_number() over (
+      order by {_H64_VEC_ID}
+    ) - 1 as {idx}
+  from {src}
+  order by {_H64_VEC_ID}
+  limit {k}
+)"""
+
+
+# The md5-seeded IVF lists (no Lloyd) and each vector's nearest list,
+# shared by semantic_dedup and the IVF recall oracles.  Assignment ranks
+# on the SQUARED distance sum (the engine kernel's direct form):
+# list_distance's sqrt can collapse two distinct d^2 into equal doubles
+# and flip the (dist, list_id) tiebreak vs the engine argmin.
+_IVF_ASSIGN_CTES = f"""e as materialized (
   select vec_id, embedding::DOUBLE[] v from embeddings
 ),
-seeds as materialized (
-  select v as c, row_number() over (
-      order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-               as bigint), vec_id
-    ) - 1 as list_id
-  from e
-  order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-           as bigint), vec_id
-  limit 8
-),
+{_md5_seeds_cte("seeds", "v as c", "list_id", "e", 8)},
 asg as materialized (
-  -- rank on the SQUARED distance sum (the engine kernel's direct form):
-  -- list_distance's sqrt can collapse two distinct d^2 into equal
-  -- doubles and flip the (dist, list_id) tiebreak vs the engine argmin
   select vec_id, v, list_id::INT as list_id from (
     select e.vec_id, e.v, s.list_id,
            row_number() over (
@@ -1792,7 +1776,10 @@ asg as materialized (
                s.list_id) as rn
     from e cross join seeds s
   ) where rn = 1
-),
+)"""
+
+SEMANTIC_DEDUP_SQL = f"""
+with {_IVF_ASSIGN_CTES},
 dup as (
   select a.vec_id as id_b, min(b.vec_id) as dup_of
   from asg a join asg b on a.list_id = b.list_id and b.vec_id < a.vec_id
@@ -1801,6 +1788,37 @@ dup as (
 )
 select a.vec_id, a.list_id, (d.dup_of is null) as keep, d.dup_of
 from asg a left join dup d on d.id_b = a.vec_id
+"""
+
+
+def _exact_top5_cte(queries: str, qid: str = "vec_id") -> str:
+    """`exact`: the brute-force cosine top-5 over `e` of each row of
+    `queries` (id column `qid`, vector v) — the ANN recall ground
+    truth."""
+    return f"""exact as (
+  select query_id, neighbor_id from (
+    select q0.{qid} as query_id, c.vec_id as neighbor_id,
+           row_number() over (partition by q0.{qid}
+                              order by list_cosine_similarity(q0.v, c.v)
+                                       desc, c.vec_id asc) as rank
+    from {queries} q0
+    cross join e c
+    where c.vec_id != q0.{qid}
+  ) where rank <= 5
+)"""
+
+
+# per-query recall of the `approx` top-5 against `exact`
+_RECALL_SQL = """
+select x.query_id, count(*)::BIGINT as n_exact,
+       coalesce(sum(case when a.neighbor_id is not null then 1 end), 0)
+         ::BIGINT as n_hits,
+       round(coalesce(sum(case when a.neighbor_id is not null then 1 end),
+                      0)::DOUBLE / count(*)::DOUBLE, 6) as recall
+from exact x
+left join approx a
+  on a.query_id = x.query_id and a.neighbor_id = x.neighbor_id
+group by 1
 """
 
 
@@ -1815,55 +1833,15 @@ def q_ivf_recall_top5(spark, sf_dir):
     recall values themselves quantify the nprobe=1 trade."""
     from ts2g2_spark.operators import similarity
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias(
-            "embedding"))
-    qids = emb.where(F.col("vec_id") < 50).select("vec_id")
+    emb, qids, exact = _ann_eval(spark, sf_dir)
     approx = similarity.ivf_cluster_topk(emb, qids, k=5, n_lists=8)
-    exact = similarity.cosine_topk(
-        emb, emb.where(F.col("vec_id") < 50), k=5)
     return similarity.recall_at_k(approx, exact)
 
 
-_IVF_CONTRACT_CTES = """
-with e as materialized (
-  select vec_id, embedding::DOUBLE[] v from embeddings
-),
-seeds as materialized (
-  select v as c, row_number() over (
-      order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-               as bigint), vec_id
-    ) - 1 as list_id
-  from e
-  order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-           as bigint), vec_id
-  limit 8
-),
-asg as materialized (
-  select vec_id, v, list_id::INT as list_id from (
-    select e.vec_id, e.v, s.list_id,
-           row_number() over (
-             partition by e.vec_id
-             order by list_sum(list_transform(
-               generate_series(1, len(e.v)),
-               i -> (e.v[i] - s.c[i]) * (e.v[i] - s.c[i]))),
-               s.list_id) as rn
-    from e cross join seeds s
-  ) where rn = 1
-),
+_IVF_CONTRACT_CTES = f"""
+with {_IVF_ASSIGN_CTES},
 qv as materialized (select * from e where vec_id < 50),
-exact as (
-  select query_id, neighbor_id from (
-    select q0.vec_id as query_id, c.vec_id as neighbor_id,
-           row_number() over (partition by q0.vec_id
-                              order by list_cosine_similarity(q0.v, c.v)
-                                       desc, c.vec_id asc) as rank
-    from qv q0
-    cross join e c
-    where c.vec_id != q0.vec_id
-  ) where rank <= 5
-)"""
+{_exact_top5_cte("qv")}"""
 """Shared oracle machinery for the contract-mode IVF recall queries
 (ivf_recall_top5, ivf_recall_nprobe): md5-h64-ordered seed selection,
 direct-form nearest-list assignment, the vec_id < 50 query set, and the
@@ -1885,16 +1863,7 @@ approx as (
     where c.vec_id != q.vec_id
   ) where rank <= 5
 )
-select x.query_id, count(*)::BIGINT as n_exact,
-       coalesce(sum(case when a.neighbor_id is not null then 1 end), 0)
-         ::BIGINT as n_hits,
-       round(coalesce(sum(case when a.neighbor_id is not null then 1 end),
-                      0)::DOUBLE / count(*)::DOUBLE, 6) as recall
-from exact x
-left join approx a
-  on a.query_id = x.query_id and a.neighbor_id = x.neighbor_id
-group by 1
-"""
+""" + _RECALL_SQL
 
 
 def q_ivf_recall_nprobe(spark, sf_dir):
@@ -1912,13 +1881,7 @@ def q_ivf_recall_nprobe(spark, sf_dir):
     one recall join instead of three."""
     from ts2g2_spark.operators import similarity
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias(
-            "embedding"))
-    qids = emb.where(F.col("vec_id") < 50).select("vec_id")
-    exact = similarity.cosine_topk(
-        emb, emb.where(F.col("vec_id") < 50), k=5)
+    emb, qids, exact = _ann_eval(spark, sf_dir)
     curve = similarity.ivf_recall_curve(emb, qids, k=5, n_lists=8,
                                         nprobes=(1, 2, 4))
     return similarity.recall_at_k(
@@ -1969,9 +1932,7 @@ group by 1, 2
 
 def q_embedding_norms(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    sq = F.aggregate(
-        F.expr("transform(embedding, x -> cast(x as double))"),
-        F.lit(0.0), lambda acc, x: acc + x * x)
+    sq = F.aggregate(_emb_vec(), F.lit(0.0), lambda acc, x: acc + x * x)
     return emb.select(
         "vec_id", "label", F.round(F.sqrt(sq), 6).alias("l2_norm"))
 
@@ -1990,9 +1951,7 @@ def q_centroid_by_label(spark, sf_dir):
     return (
         emb.select(
             "label",
-            F.posexplode(
-                F.expr("transform(embedding, x -> cast(x as double))")
-            ).alias("dim", "x"),
+            F.posexplode(_emb_vec()).alias("dim", "x"),
         )
         .groupBy("label", "dim")
         .agg(F.round(F.avg("x"), 6).alias("centroid"))
@@ -2120,8 +2079,7 @@ def q_embedding_rank(spark, sf_dir):
 
     emb = _emb(spark, sf_dir).select(
         F.col("vec_id").alias("id"), F.lit("m").alias("method"),
-        F.expr("transform(embedding, x -> cast(x as double))")
-        .alias("vector"))
+        _emb_vec().alias("vector"))
     return analytics.embedding_ranking(emb).select(
         "id", F.round("distance", 9).alias("distance"), "rank")
 
@@ -2142,24 +2100,31 @@ from d
 """
 
 
-def q_kendall_tau(spark, sf_dir):
-    """E4 Kendall tau between the cosine-base ranking and an L2-norm
-    ranking of the same embeddings (exact O(n^2) pair aggregate)."""
+def _tau_rankings(spark, sf_dir):
+    """The two rankings of embeddings vec_id < 300 that the Kendall tau
+    queries compare: cosine distance to the base vector, and L2 norm."""
     from pyspark.sql.window import Window
 
     from ts2g2_spark.operators import analytics
 
     emb = _emb(spark, sf_dir).where(F.col("vec_id") < 300).select(
         F.col("vec_id").alias("id"), F.lit("m").alias("method"),
-        F.expr("transform(embedding, x -> cast(x as double))")
-        .alias("vector"))
+        _emb_vec().alias("vector"))
     rank_a = analytics.embedding_ranking(emb)
     norm = F.sqrt(F.aggregate("vector", F.lit(0.0),
                               lambda a, x: a + x * x))
     rank_b = emb.select(
         "id", norm.alias("n")).withColumn(
         "rank", F.row_number().over(Window.orderBy("n", "id")))
-    return analytics.kendall_tau(rank_a, rank_b).select(
+    return rank_a, rank_b
+
+
+def q_kendall_tau(spark, sf_dir):
+    """E4 Kendall tau between the cosine-base ranking and an L2-norm
+    ranking of the same embeddings (exact O(n^2) pair aggregate)."""
+    from ts2g2_spark.operators import analytics
+
+    return analytics.kendall_tau(*_tau_rankings(spark, sf_dir)).select(
         F.round("tau", 9).alias("tau"))
 
 
@@ -2196,21 +2161,9 @@ def q_kendall_tau_fast(spark, sf_dir):
     produce the IDENTICAL tau as the O(n^2) pair join (same integer
     concordant-discordant difference), so it shares the pair-join
     oracle."""
-    from pyspark.sql.window import Window
-
     from ts2g2_spark.operators import analytics
 
-    emb = _emb(spark, sf_dir).where(F.col("vec_id") < 300).select(
-        F.col("vec_id").alias("id"), F.lit("m").alias("method"),
-        F.expr("transform(embedding, x -> cast(x as double))")
-        .alias("vector"))
-    rank_a = analytics.embedding_ranking(emb)
-    norm = F.sqrt(F.aggregate("vector", F.lit(0.0),
-                              lambda a, x: a + x * x))
-    rank_b = emb.select(
-        "id", norm.alias("n")).withColumn(
-        "rank", F.row_number().over(Window.orderBy("n", "id")))
-    return analytics.kendall_tau_fast(rank_a, rank_b).select(
+    return analytics.kendall_tau_fast(*_tau_rankings(spark, sf_dir)).select(
         F.round("tau", 9).alias("tau"))
 
 
@@ -2255,28 +2208,9 @@ def q_eigencentrality_power_hvg(spark, sf_dir):
              "node", "centrality")
 
 
-EIGENCENTRALITY_POWER_SQL = """
-with recursive pts as (
-  select user_id,
-         row_number() over (partition by user_id
-                            order by ts, event_id) - 1 as pos,
-         value as v
-  from events where user_id < 20
-),
-p as (select * from pts where pos < 64),
-hvg as materialized (
-  select a.user_id, a.pos as src, b.pos as dst
-  from p a join p b on a.user_id = b.user_id and b.pos > a.pos
-  where not exists (
-    select 1 from p m
-    where m.user_id = a.user_id and m.pos > a.pos and m.pos < b.pos
-      and m.v > greatest(a.v, b.v))
-),
-adj as materialized (
-  select user_id, src as node, dst as nb from hvg
-  union all
-  select user_id, dst as node, src as nb from hvg
-),
+EIGENCENTRALITY_POWER_SQL = f"""
+with recursive {_pts_cte("user_id < 20", max_pos=64)},
+{_HVG_ADJ_CTES},
 nodes as (select distinct user_id, node from adj),
 power as (
   select user_id, node, 0 as it, 1.0::DOUBLE as x from nodes
@@ -2495,15 +2429,8 @@ def q_proximity_knn(spark, sf_dir):
              F.round("weight", 6).alias("weight"))
 
 
-PROXIMITY_KNN_SQL = """
-with pts as (
-  select user_id,
-         row_number() over (partition by user_id
-                            order by ts, event_id) - 1 as pos,
-         value as v
-  from events where user_id < 10
-  qualify pos < 100
-),
+PROXIMITY_KNN_SQL = f"""
+with {_pts_cte("user_id < 10", max_pos=100)},
 d as (
   select a.user_id, a.pos as i, b.pos as j,
          sqrt((a.v - b.v) * (a.v - b.v)) as dist
@@ -2538,18 +2465,9 @@ def q_nvg_angle(spark, sf_dir):
 
 NVG_ANGLE_SQL = f"""
 with {_PTS_CTE},
-vis as (
-  select a.user_id, a.pos as src, b.pos as dst,
-         abs(atan((b.v - a.v) / (b.pos - a.pos))) as ang
-  from pts a join pts b
-    on a.user_id = b.user_id and b.pos > a.pos
-  where not exists (
-    select 1 from pts m
-    where m.user_id = a.user_id and m.pos > a.pos and m.pos < b.pos
-      and m.v > ((b.v - a.v) / (b.pos - a.pos)) * m.pos
-                + (b.v - ((b.v - a.v) / (b.pos - a.pos)) * b.pos)
-  )
-),
+vis as ({_visible_sql(
+    "a.user_id, a.pos as src, b.pos as dst, "
+    "abs(atan((b.v - a.v) / (b.pos - a.pos))) as ang", _NVG_BLOCKS)}),
 mx as (select user_id, max(pos) as mp from pts group by 1)
 select user_id, src, dst from vis where ang >= 0.6
 union
@@ -2573,16 +2491,9 @@ def q_nvg_weighted(spark, sf_dir):
 
 NVG_WEIGHTED_SQL = f"""
 with {_PTS_CTE}
-select a.user_id, a.pos as src, b.pos as dst,
-       round(abs(atan((b.v - a.v) / (b.pos - a.pos))), 9) as weight
-from pts a join pts b
-  on a.user_id = b.user_id and b.pos > a.pos
-where not exists (
-  select 1 from pts m
-  where m.user_id = a.user_id and m.pos > a.pos and m.pos < b.pos
-    and m.v > ((b.v - a.v) / (b.pos - a.pos)) * m.pos
-              + (b.v - ((b.v - a.v) / (b.pos - a.pos)) * b.pos)
-)
+{_visible_sql("a.user_id, a.pos as src, b.pos as dst, "
+              "round(abs(atan((b.v - a.v) / (b.pos - a.pos))), 9) as weight",
+              _NVG_BLOCKS)}
 """
 
 
@@ -2659,15 +2570,8 @@ def q_proximity_cycle(spark, sf_dir):
              F.round("weight", 6).alias("weight"))
 
 
-PROXIMITY_CYCLE_SQL = """
-with pts as (
-  select user_id,
-         row_number() over (partition by user_id
-                            order by ts, event_id) - 1 as pos,
-         value as v
-  from events where user_id < 10
-  qualify pos < 100
-),
+PROXIMITY_CYCLE_SQL = f"""
+with {_pts_cte("user_id < 10", max_pos=100)},
 n as (select user_id, max(pos) + 1 as npts from pts group by 1),
 segm as (
   select p.user_id, i.i as seg, p.pos - i.i as k, p.v
@@ -2707,15 +2611,8 @@ def q_proximity_annn(spark, sf_dir):
              F.round("weight", 6).alias("weight"))
 
 
-PROXIMITY_ANNN_SQL = """
-with pts as (
-  select user_id,
-         row_number() over (partition by user_id
-                            order by ts, event_id) - 1 as pos,
-         value as v
-  from events where user_id < 10
-  qualify pos < 100
-),
+PROXIMITY_ANNN_SQL = f"""
+with {_pts_cte("user_id < 10", max_pos=100)},
 d as (
   select a.user_id, a.pos as i, b.pos as j,
          sqrt((a.v - b.v) * (a.v - b.v)) as dist
@@ -2803,6 +2700,18 @@ group by t.user_id, t.src_pattern, t.dst_pattern
 
 
 # -------------------------------------- linking L3/L6/L7/L10/L11/L12
+def _daily_series(spark, sf_dir) -> DataFrame:
+    """Each user < 20 with its daily value sums (6 dp) in day order."""
+    ev = _events(spark, sf_dir).where(F.col("user_id") < 20)
+    daily = ev.groupBy(
+        "user_id", F.date_trunc("day", "ts").alias("day")
+    ).agg(F.round(F.sum("value"), 6).alias("val"))
+    packed = F.array_sort(
+        F.collect_list(F.struct("day", F.col("val").alias("v"))))
+    return daily.groupBy("user_id").agg(
+        F.transform(packed, lambda s: s["v"]).alias("values"))
+
+
 def q_link_correlation(spark, sf_dir):
     """L3 all-pairs Pearson correlation linking (ref
     strategy_linking_multi_graphs.py:41-77): one node per user carrying
@@ -2810,15 +2719,7 @@ def q_link_correlation(spark, sf_dir):
     prefix length, NaN -> 0."""
     from ts2g2_spark.operators import linking
 
-    ev = _events(spark, sf_dir).where(F.col("user_id") < 20)
-    daily = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.round(F.sum("value"), 6).alias("val"))
-    packed = F.array_sort(
-        F.collect_list(F.struct("day", F.col("val").alias("v"))))
-    nodes = daily.groupBy("user_id").agg(
-        F.transform(packed, lambda s: s["v"]).alias("values")
-    ).select(
+    nodes = _daily_series(spark, sf_dir).select(
         F.lit("g").alias("graph_key"),
         F.col("user_id").cast("string").alias("node_id"),
         F.col("user_id").cast("long").alias("ord"),
@@ -2836,15 +2737,8 @@ def q_link_xcorr(spark, sf_dir):
     daily-sum node frame as link_correlation."""
     from ts2g2_spark.operators import linking
 
-    ev = _events(spark, sf_dir).where(F.col("user_id") < 20)
-    daily = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).agg(F.round(F.sum("value"), 6).alias("val"))
-    packed = F.array_sort(
-        F.collect_list(F.struct("day", F.col("val").alias("v"))))
-    nodes = daily.groupBy("user_id").agg(
-        F.transform(packed, lambda s: s["v"]).alias("values")
-    ).select(F.col("user_id").cast("string").alias("node_id"), "values")
+    nodes = _daily_series(spark, sf_dir).select(
+        F.col("user_id").cast("string").alias("node_id"), "values")
     return linking.link_cross_correlation(nodes, max_lag=3)
 
 
@@ -2917,14 +2811,11 @@ from pairs
 """
 
 
-def q_link_positional_correlation(spark, sf_dir):
-    """L6 positional correlation (ref
-    strategy_linking_multi_graphs.py:180-240): equal-insertion-order daily
-    nodes across users, weighted by Pearson of their hourly-sum series
-    (positionally aligned over the common length)."""
+def _day_hour_nodes(spark, sf_dir) -> DataFrame:
+    """One linking node per (user < 6, day): the day's hourly value sums
+    in hour order, `ord` = the day's rank among the user's days, `grp` =
+    the date."""
     from pyspark.sql.window import Window
-
-    from ts2g2_spark.operators import linking
 
     ev = _events(spark, sf_dir).where(F.col("user_id") < 6)
     hourly = ev.groupBy(
@@ -2936,19 +2827,34 @@ def q_link_positional_correlation(spark, sf_dir):
     per_day = hourly.groupBy("user_id", "day").agg(
         F.transform(packed, lambda s: s["v"]).alias("values"))
     w = Window.partitionBy("user_id").orderBy("day")
-    nodes = per_day.select(
+    return per_day.select(
         F.col("user_id").cast("string").alias("graph_key"),
         F.concat_ws(":", F.col("user_id"),
                     F.date_format("day", "yyyy-MM-dd")).alias("node_id"),
         (F.row_number().over(w) - 1).cast("long").alias("ord"),
         F.lit(0.0).alias("value"),
         "values",
+        F.date_format("day", "yyyy-MM-dd").alias("grp"),
     )
+
+
+def q_link_positional_correlation(spark, sf_dir):
+    """L6 positional correlation (ref
+    strategy_linking_multi_graphs.py:180-240): equal-insertion-order daily
+    nodes across users, weighted by Pearson of their hourly-sum series
+    (positionally aligned over the common length)."""
+    from ts2g2_spark.operators import linking
+
+    nodes = _day_hour_nodes(spark, sf_dir).drop("grp")
     return linking.link_positional_correlation(nodes).select(
         "src", "dst", F.round("weight", 6).alias("weight"))
 
 
-LINK_POSCORR_SQL = """
+def _day_hour_corr_sql(same: str) -> str:
+    """Day nodes of users < 6 (the date `d`, its rank `ord` among the
+    user's days) paired when their `same` column is equal, weighted by
+    Pearson of their hourly sums aligned by hour rank."""
+    return f"""
 with hourly as (
   select user_id, date_trunc('day', ts) as d, date_trunc('hour', ts) as h,
          round(sum(value), 6) as hv
@@ -2969,7 +2875,7 @@ hnum as (
 pairs as (
   select na.node_id as sa, nb.node_id as sb, corr(ha.hv, hb.hv) as c
   from nodes na join nodes nb
-    on na.ord = nb.ord and na.node_id < nb.node_id
+    on na.{same} = nb.{same} and na.node_id < nb.node_id
   join hnum ha on ha.user_id = na.user_id and ha.d = na.d
   join hnum hb on hb.user_id = nb.user_id and hb.d = nb.d
                   and hb.rn = ha.rn
@@ -2977,6 +2883,9 @@ pairs as (
 )
 select sa as src, sb as dst, round(coalesce(c, 0), 6) as weight from pairs
 """
+
+
+LINK_POSCORR_SQL = _day_hour_corr_sql("ord")
 
 
 def q_link_spearman(spark, sf_dir):
@@ -3053,61 +2962,14 @@ def q_link_correlation_grouped(spark, sf_dir):
     strategy_linking_multi_graphs.py:80-118): daily nodes pair only
     WITHIN the same calendar day (the group), weighted by Pearson of
     their hourly series."""
-    from pyspark.sql.window import Window
-
     from ts2g2_spark.operators import linking
 
-    ev = _events(spark, sf_dir).where(F.col("user_id") < 6)
-    hourly = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").alias("day"),
-        F.date_trunc("hour", "ts").alias("hour"),
-    ).agg(F.round(F.sum("value"), 6).alias("hv"))
-    packed = F.array_sort(
-        F.collect_list(F.struct("hour", F.col("hv").alias("v"))))
-    per_day = hourly.groupBy("user_id", "day").agg(
-        F.transform(packed, lambda s: s["v"]).alias("values"))
-    w = Window.partitionBy("user_id").orderBy("day")
-    nodes = per_day.select(
-        F.col("user_id").cast("string").alias("graph_key"),
-        F.concat_ws(":", F.col("user_id"),
-                    F.date_format("day", "yyyy-MM-dd")).alias("node_id"),
-        (F.row_number().over(w) - 1).cast("long").alias("ord"),
-        F.lit(0.0).alias("value"),
-        "values",
-        F.date_format("day", "yyyy-MM-dd").alias("grp"),
-    )
+    nodes = _day_hour_nodes(spark, sf_dir)
     return linking.link_correlation(nodes, group_col="grp").select(
         "src", "dst", F.round("weight", 6).alias("weight"))
 
 
-LINK_CORR_GROUPED_SQL = """
-with hourly as (
-  select user_id, date_trunc('day', ts) as d, date_trunc('hour', ts) as h,
-         round(sum(value), 6) as hv
-  from events where user_id < 6 group by 1, 2, 3
-),
-nodes as (
-  select user_id, d,
-         user_id || ':' || strftime(d, '%Y-%m-%d') as node_id
-  from (select distinct user_id, d from hourly)
-),
-hnum as (
-  select user_id, d,
-         row_number() over (partition by user_id, d order by h) - 1 as rn,
-         hv
-  from hourly
-),
-pairs as (
-  select na.node_id as sa, nb.node_id as sb, corr(ha.hv, hb.hv) as c
-  from nodes na join nodes nb
-    on na.d = nb.d and na.node_id < nb.node_id
-  join hnum ha on ha.user_id = na.user_id and ha.d = na.d
-  join hnum hb on hb.user_id = nb.user_id and hb.d = nb.d
-                  and hb.rn = ha.rn
-  group by 1, 2
-)
-select sa as src, sb as dst, round(coalesce(c, 0), 6) as weight from pairs
-"""
+LINK_CORR_GROUPED_SQL = _day_hour_corr_sql("d")
 
 
 def q_link_window_chain(spark, sf_dir):
@@ -3264,15 +3126,8 @@ def q_combine_subgraphs(spark, sf_dir):
     return e.select("src", "dst")
 
 
-COMBINE_SUBGRAPHS_SQL = """
-with pts as (
-  select user_id,
-         row_number() over (partition by user_id
-                            order by ts, event_id) - 1 as pos,
-         value as v
-  from events where user_id < 20
-  qualify pos < 120
-),
+COMBINE_SUBGRAPHS_SQL = f"""
+with {_pts_cte("user_id < 20", max_pos=120)},
 nn as (select user_id, max(pos) + 1 as c from pts group by 1),
 starts as (
   select user_id, unnest(generate_series(0, c - 6 - 1, 6)) as s
@@ -3422,25 +3277,9 @@ def q_generate_walks_hashed(spark, sf_dir):
              "walk_id", "step", "node")
 
 
-_QG_WALK_BINS = """
-pts as (
-  select user_id,
-         row_number() over (partition by user_id order by ts, event_id) - 1
-           as pos,
-         value as v
-  from events where user_id < 50
-),
-b as (
-  select user_id, quantile_cont(v, [0.0, 0.25, 0.5, 0.75, 1.0]) qb
-  from pts group by 1
-),
-binned as (
-  select p.user_id, p.pos,
-         len(list_filter(
-               list_prepend(b.qb[1] - 1e-9, b.qb[2:5]),
-               x -> x < p.v)) - 1 as q
-  from pts p join b on p.user_id = b.user_id
-),
+_QG_WALK_BINS = f"""
+{_pts_cte("user_id < 50")},
+{_QG_BIN_CTES},
 trans as (
   select user_id, q as src,
          lead(q) over (partition by user_id order by pos) as dst
@@ -4024,14 +3863,12 @@ def q_contamination(spark, sf_dir):
         _docs(spark, sf_dir), n_words=3, bench_fraction=0.05)
 
 
-CONTAMINATION_SQL = r"""
+CONTAMINATION_SQL = rf"""
 with b as (
   select doc_id,
          cast(concat('0x', substr(md5('bench:' || doc_id), 1, 15))
               as bigint) % 1000000 < 50000 as is_bench,
-         string_split(trim(regexp_replace(
-             regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
-             '\s+', ' ', 'g')), ' ') ws
+         string_split({_NORM_TEXT_SQL}, ' ') ws
   from documents
 ),
 sh as (
@@ -4195,6 +4032,16 @@ from events e asof left join h
 """
 
 
+def _gapfill_1m(spark, sf_dir, fill: str) -> DataFrame:
+    """`plans.rollup.gapfill` over the engine's 1m tier of users 0-2,
+    with the sums rounded to 6 decimals before the fill."""
+    from ts2g2_spark.plans import rollup
+
+    tier = _rounded(_events_1m(spark, sf_dir).where(F.col("user_id") < 3))
+    return _serving_row(rollup.gapfill(tier, "1m", series_cols=_USER,
+                                       fill=fill), "gapfilled")
+
+
 def q_gapfill_1m_linear(spark, sf_dir):
     """Linear-interpolation gap-fill of the per-user 1m tier via
     plans.rollup.gapfill(fill='linear'): interior gaps get value columns
@@ -4206,39 +4053,11 @@ def q_gapfill_1m_linear(spark, sf_dir):
     a month, so the full-population 1m spine is 6.3M nearly-all-gap rows
     — noise for a correctness gate (the full run is exercised at bench
     scale instead)."""
-    from ts2g2_spark.plans import rollup
-
-    tier = _rollup_events(spark, sf_dir, 60).where(
-        F.col("user_id") < 3
-    ).select(
-        "user_id", "bucket_ts",
-        F.col("cnt"), F.col("sum_val").alias("sum"),
-        F.col("min_val").alias("min"), F.col("max_val").alias("max"),
-        F.col("first_val").alias("first"), F.col("last_val").alias("last"),
-        F.lit(False).alias("gapfilled"),
-    )
-    out = rollup.gapfill(tier, "1m", series_cols=["user_id"],
-                         fill="linear")
-    return out.select(
-        "user_id", "bucket_ts", "cnt",
-        F.col("sum").alias("sum_val"), F.col("min").alias("min_val"),
-        F.col("max").alias("max_val"), F.col("first").alias("first_val"),
-        F.col("last").alias("last_val"), "gapfilled",
-    )
+    return _gapfill_1m(spark, sf_dir, "linear")
 
 
 GAPFILL_LINEAR_SQL = f"""
-with m1 as (
-  select user_id,
-         date_trunc('minute', ts) as bucket_ts,
-         count(*) as cnt,
-         round(sum(value), 6) as sum_val,
-         min(value) as min_val,
-         max(value) as max_val,
-         arg_min(value, {_OKEY_SQL}) as first_val,
-         arg_max(value, {_OKEY_SQL}) as last_val
-  from events where user_id < 3 group by 1, 2
-), led as (
+with m1 as ({_rollup_sql(60, "where user_id < 3")}), led as (
   select *,
          lead(bucket_ts) over w as nxt,
          lead(sum_val) over w as n_sum,
@@ -4285,39 +4104,11 @@ def q_gapfill_1m_locf(spark, sf_dir):
     Carried values are the tier's own rounded aggregates, so both
     engines carry bit-identical doubles.  Scoped to users 0-2 for the
     same spine-size reason as gapfill_1m_linear."""
-    from ts2g2_spark.plans import rollup
-
-    tier = _rollup_events(spark, sf_dir, 60).where(
-        F.col("user_id") < 3
-    ).select(
-        "user_id", "bucket_ts",
-        F.col("cnt"), F.col("sum_val").alias("sum"),
-        F.col("min_val").alias("min"), F.col("max_val").alias("max"),
-        F.col("first_val").alias("first"), F.col("last_val").alias("last"),
-        F.lit(False).alias("gapfilled"),
-    )
-    out = rollup.gapfill(tier, "1m", series_cols=["user_id"],
-                         fill="locf")
-    return out.select(
-        "user_id", "bucket_ts", "cnt",
-        F.col("sum").alias("sum_val"), F.col("min").alias("min_val"),
-        F.col("max").alias("max_val"), F.col("first").alias("first_val"),
-        F.col("last").alias("last_val"), "gapfilled",
-    )
+    return _gapfill_1m(spark, sf_dir, "locf")
 
 
 GAPFILL_LOCF_SQL = f"""
-with m1 as (
-  select user_id,
-         date_trunc('minute', ts) as bucket_ts,
-         count(*) as cnt,
-         round(sum(value), 6) as sum_val,
-         min(value) as min_val,
-         max(value) as max_val,
-         arg_min(value, {_OKEY_SQL}) as first_val,
-         arg_max(value, {_OKEY_SQL}) as last_val
-  from events where user_id < 3 group by 1, 2
-), led as (
+with m1 as ({_rollup_sql(60, "where user_id < 3")}), led as (
   select user_id, bucket_ts,
          lead(bucket_ts) over (partition by user_id
                                order by bucket_ts) as nxt
@@ -4365,14 +4156,8 @@ def q_lm_perplexity(spark, sf_dir):
         F.round("ppl", 6).alias("ppl"))
 
 
-LM_PERPLEXITY_SQL = r"""
-with w as (
-  select doc_id,
-         list_filter(string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')), ' '),
-             x -> x != '') as ws
-  from documents
-), bg0 as (
+LM_PERPLEXITY_SQL = rf"""
+with {_words_cte("doc_id")}, bg0 as (
   select doc_id, unnest(ws) as w1,
          ws[generate_subscripts(ws, 1) + 1] as w2
   from w where len(ws) >= 2
@@ -4409,14 +4194,8 @@ def q_tfidf_top_terms(spark, sf_dir):
     return out.withColumn("tfidf", F.round("tfidf", 6))
 
 
-TFIDF_SQL = r"""
-with w as (
-  select doc_id, source,
-         list_filter(string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')), ' '),
-             x -> x != '') as ws
-  from documents
-), stream as (
+TFIDF_SQL = rf"""
+with {_words_cte("doc_id, source")}, stream as (
   select doc_id, source, unnest(ws) as term from w
 ), tf as (
   select source, term, count(*) as tf from stream group by 1, 2
@@ -4480,13 +4259,7 @@ def _bm25_sql(terms: list[str], k: int = 10, k1: float = 1.2,
         score = f"({score} + {p})"
     hits = " + ".join(f"cast(tf{i} > 0 as int)" for i in range(len(terms)))
     return rf"""
-with w as (
-  select doc_id,
-         list_filter(string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')), ' '),
-             x -> x != '') as ws
-  from documents
-), lens as (
+with {_words_cte("doc_id")}, lens as (
   select doc_id, len(ws) as dl from w
 ), s as (
   select doc_id, term
@@ -4851,14 +4624,8 @@ def q_heaps_law(spark, sf_dir):
     return corpusstats.heaps_law(_docs(spark, sf_dir))
 
 
-HEAPS_SQL = r"""
-with w as (
-  select doc_id,
-         list_filter(string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')), ' '),
-             x -> x != '') as ws
-  from documents
-), toks as (
+HEAPS_SQL = rf"""
+with {_words_cte("doc_id")}, toks as (
   select doc_id, len(ws) as toks from w
 ), firsts as (
   select first_doc as doc_id, count(*) as nw
@@ -5077,6 +4844,38 @@ from r
 """
 
 
+def _line_dedup_sql(max_df: int, joiner: str) -> str:
+    """The dedup tail over a `l` (doc_id, g, line) CTE: lines found in
+    more than `max_df` docs are dropped, the rest rejoined with `joiner`
+    in g order.  The 60-bit h64 line key (md5 prefix) is the engine's,
+    so a hash collision strips the same lines in both engines, like the
+    span oracle's md5-derived word hashes."""
+    return f"""
+lh as materialized (
+  select doc_id, g, line,
+         cast(concat('0x', substr(md5(lower(trim(line))), 1, 15))
+              as bigint) as k,
+         trim(line) = '' as blank
+  from l
+),
+hot as (
+  select k from lh where not blank
+  group by 1 having count(distinct doc_id) > {max_df}
+),
+f as (
+  select lh.doc_id, lh.g, lh.line,
+         (h.k is not null and not lh.blank) as rm
+  from lh left join hot h using (k)
+)
+select doc_id,
+       coalesce(string_agg(case when not rm then line end,
+                           {joiner} order by g), '') as text,
+       count(*)::BIGINT as n_lines,
+       sum(rm::INT)::BIGINT as n_removed
+from f group by doc_id
+"""
+
+
 LINE_DEDUP_SQL = r"""
 with w as materialized (
   select doc_id, regexp_split_to_array(trim(text), '\s+') ws
@@ -5087,32 +4886,7 @@ l as materialized (
   from w, lateral (
     select unnest(generate_series(0, (len(ws) - 1) // 8)) as g) t
 ),
-lh as materialized (
-  -- replay the engine's 60-bit h64 line key (md5 prefix) so a hash
-  -- collision strips the same lines in both engines, like the span
-  -- oracle's md5-derived word hashes
-  select doc_id, g, line,
-         cast(concat('0x', substr(md5(lower(trim(line))), 1, 15))
-              as bigint) as k,
-         trim(line) = '' as blank
-  from l
-),
-hot as (
-  select k from lh where not blank
-  group by 1 having count(distinct doc_id) > 2
-),
-f as (
-  select lh.doc_id, lh.g, lh.line,
-         (h.k is not null and not lh.blank) as rm
-  from lh left join hot h using (k)
-)
-select doc_id,
-       coalesce(string_agg(case when not rm then line end,
-                           chr(10) order by g), '') as text,
-       count(*)::BIGINT as n_lines,
-       sum(rm::INT)::BIGINT as n_removed
-from f group by doc_id
-"""
+""" + _line_dedup_sql(max_df=2, joiner="chr(10)")
 
 
 def q_paragraph_dedup(spark, sf_dir):
@@ -5160,29 +4934,7 @@ l as materialized (
   from w, lateral (
     select unnest(generate_series(0, (len(ws) - 1) // 16)) as g) t
 ),
-lh as materialized (
-  select doc_id, g, line,
-         cast(concat('0x', substr(md5(lower(trim(line))), 1, 15))
-              as bigint) as k,
-         trim(line) = '' as blank
-  from l
-),
-hot as (
-  select k from lh where not blank
-  group by 1 having count(distinct doc_id) > 1
-),
-f as (
-  select lh.doc_id, lh.g, lh.line,
-         (h.k is not null and not lh.blank) as rm
-  from lh left join hot h using (k)
-)
-select doc_id,
-       coalesce(string_agg(case when not rm then line end,
-                           chr(10) || chr(10) order by g), '') as text,
-       count(*)::BIGINT as n_lines,
-       sum(rm::INT)::BIGINT as n_removed
-from f group by doc_id
-"""
+""" + _line_dedup_sql(max_df=1, joiner="chr(10) || chr(10)")
 
 
 def _duplicated_spans_sql(n_words: int = 10, min_count: int = 2) -> str:
@@ -5196,13 +4948,7 @@ def _duplicated_spans_sql(n_words: int = 10, min_count: int = 2) -> str:
         combiner = f"xor(wh[i + {k}] << {n_words - 1 - k}, {combiner})"
     combiner = f"({combiner}) & 18446744073709551615"
     return rf"""
-with w as (
-  select doc_id,
-         list_filter(string_split(trim(regexp_replace(
-             regexp_replace(lower(text), '[^a-z0-9\s]', '', 'g'),
-             '\s+', ' ', 'g')), ' '), x -> x != '') as ws
-  from documents
-),
+with {_words_cte("doc_id")},
 whv as (
   select doc_id,
          list_transform(ws,
@@ -5338,8 +5084,9 @@ def q_sax_w8_a4(spark, sf_dir):
         order_col="event_id", seg_len=8, alphabet=4)
 
 
-SAX_SQL = """
-with o as (
+# each user's z-normalized points in 8-point segments, and the 4-letter
+# SAX symbol of a segment's mean (N(0,1) quartile breakpoints)
+_SAX_Z_CTES = """with o as (
   select user_id, value,
          row_number() over (partition by user_id
                             order by ts, event_id) rn,
@@ -5351,13 +5098,17 @@ z as (
   select user_id, (rn - 1) // 8 as seg,
          case when sd > 0 then (value - m) / sd else 0.0 end as z
   from o
-)
-select user_id, seg, count(*)::BIGINT as n_pts,
-       round(avg(z), 6) as paa,
-       case when avg(z) < -0.6744897501960817 then 'a'
+)"""
+_SAX_SYMBOL = """case when avg(z) < -0.6744897501960817 then 'a'
             when avg(z) < 0.0 then 'b'
             when avg(z) < 0.6744897501960817 then 'c'
-            else 'd' end as symbol
+            else 'd' end"""
+
+SAX_SQL = f"""
+{_SAX_Z_CTES}
+select user_id, seg, count(*)::BIGINT as n_pts,
+       round(avg(z), 6) as paa,
+       {_SAX_SYMBOL} as symbol
 from z group by user_id, seg
 """
 
@@ -5581,14 +5332,8 @@ def q_vocab_stats(spark, sf_dir):
     return vocab_stats(_docs(spark, sf_dir), top_r=100)
 
 
-VOCAB_STATS_SQL = r"""
-with w as (
-  select source,
-         list_filter(string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')), ' '),
-             x -> x != '') as ws
-  from documents
-),
+VOCAB_STATS_SQL = rf"""
+with {_words_cte("source")},
 stream as (select source, unnest(ws) as word from w),
 tf as (
   select source, word, count(*)::BIGINT as tf
@@ -5630,14 +5375,8 @@ def q_source_divergence(spark, sf_dir):
     return source_divergence(_docs(spark, sf_dir))
 
 
-SOURCE_DIVERGENCE_SQL = r"""
-with w as (
-  select source,
-         list_filter(string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')), ' '),
-             x -> x != '') as ws
-  from documents
-),
+SOURCE_DIVERGENCE_SQL = rf"""
+with {_words_cte("source")},
 stream as (select source, unnest(ws) as word from w),
 tf as (
   select source, word, count(*)::BIGINT as c_sw
@@ -6854,26 +6593,10 @@ def q_sax_motifs_w4(spark, sf_dir):
                       order_col="event_id")
 
 
-SAX_MOTIFS_SQL = """
-with o as (
-  select user_id, value,
-         row_number() over (partition by user_id
-                            order by ts, event_id) rn,
-         avg(value) over (partition by user_id) m,
-         stddev_samp(value) over (partition by user_id) sd
-  from events
-),
-z as (
-  select user_id, (rn - 1) // 8 as seg,
-         case when sd > 0 then (value - m) / sd else 0.0 end as z
-  from o
-),
+SAX_MOTIFS_SQL = f"""
+{_SAX_Z_CTES},
 sym as (
-  select user_id, seg,
-         case when avg(z) < -0.6744897501960817 then 'a'
-              when avg(z) < 0.0 then 'b'
-              when avg(z) < 0.6744897501960817 then 'c'
-              else 'd' end as symbol
+  select user_id, seg, {_SAX_SYMBOL} as symbol
   from z group by user_id, seg
 ),
 words as (
@@ -6943,16 +6666,7 @@ def q_pagerank_hvg(spark, sf_dir):
 # several times.
 _HVG_METRIC_CTES = f"""
 with {_PTS_CTE},
-hvg as materialized (
-  select a.user_id, a.pos as src, b.pos as dst
-  from pts a join pts b
-    on a.user_id = b.user_id and b.pos > a.pos
-  where not exists (
-    select 1 from pts m
-    where m.user_id = a.user_id and m.pos > a.pos and m.pos < b.pos
-      and m.v > greatest(a.v, b.v)
-  )
-),
+hvg as materialized ({_visible_sql()}),
 deg as materialized (
   select user_id, node, count(*)::BIGINT as degree
   from (
@@ -6978,9 +6692,8 @@ select user_id,
 from deg group by user_id
 """
 
-CLUSTERING_SQL = f"""
-{_HVG_METRIC_CTES},
-tri as materialized (
+# the HVG's triangles and each node's triangle count
+_HVG_TRIANGLE_CTES = """tri as materialized (
   select e1.user_id, e1.src as a, e1.dst as b, e2.dst as c
   from hvg e1
   join hvg e2 on e2.user_id = e1.user_id and e2.src = e1.dst
@@ -6995,7 +6708,11 @@ tcnt as (
     union all select user_id, c as node from tri
   ) corners
   group by user_id, node
-)
+)"""
+
+CLUSTERING_SQL = f"""
+{_HVG_METRIC_CTES},
+{_HVG_TRIANGLE_CTES}
 select d.user_id, d.node, d.degree,
        coalesce(t.triangles, 0)::BIGINT as triangles,
        round(case when d.degree > 1
@@ -7085,21 +6802,8 @@ def q_kcore_hvg(spark, sf_dir):
 
 
 KCORE_HVG_SQL = f"""
-with recursive {_PTS_CTE},
-p as (select * from pts where pos < 120),
-hvg as materialized (
-  select a.user_id, a.pos as src, b.pos as dst
-  from p a join p b on a.user_id = b.user_id and b.pos > a.pos
-  where not exists (
-    select 1 from p m
-    where m.user_id = a.user_id and m.pos > a.pos and m.pos < b.pos
-      and m.v > greatest(a.v, b.v))
-),
-adj as materialized (
-  select user_id, src as node, dst as nb from hvg
-  union all
-  select user_id, dst as node, src as nb from hvg
-),
+with recursive {_pts_cte(max_pos=120)},
+{_HVG_ADJ_CTES},
 peel as (
   select user_id, node, 1 as k, false as done, 0::BIGINT as core
   from (select distinct user_id, node from adj)
@@ -7162,21 +6866,8 @@ def q_betweenness_hvg(spark, sf_dir):
         "node", "betweenness")
 
 
-_SAMPLED_HVG_EDGE_CTES = f"""with recursive {_PTS_CTE},
-p as (select * from pts where user_id % 5 = 0),
-hvg as materialized (
-  select a.user_id, a.pos as src, b.pos as dst
-  from p a join p b on a.user_id = b.user_id and b.pos > a.pos
-  where not exists (
-    select 1 from p m
-    where m.user_id = a.user_id and m.pos > a.pos and m.pos < b.pos
-      and m.v > greatest(a.v, b.v))
-),
-adj as materialized (
-  select user_id, src as node, dst as nb from hvg
-  union all
-  select user_id, dst as node, src as nb from hvg
-),
+_SAMPLED_HVG_EDGE_CTES = f"""with recursive {_pts_cte("user_id % 5 = 0")},
+{_HVG_ADJ_CTES},
 nodes as materialized (select distinct user_id, node from adj),
 nn as materialized (select user_id, count(*) as n from nodes group by 1)"""
 """The 1-in-5-sampled HVG edge layer (edges, symmetric adjacency, node
@@ -7314,22 +7005,7 @@ group by e.user_id, t.n
 
 GRAPH_MIXING_SQL = f"""
 {_HVG_METRIC_CTES},
-tri as materialized (
-  select e1.user_id, e1.src as a, e1.dst as b, e2.dst as c
-  from hvg e1
-  join hvg e2 on e2.user_id = e1.user_id and e2.src = e1.dst
-  join hvg e3 on e3.user_id = e1.user_id
-             and e3.src = e1.src and e3.dst = e2.dst
-),
-tcnt as (
-  select user_id, node, count(*)::BIGINT as triangles
-  from (
-    select user_id, a as node from tri
-    union all select user_id, b as node from tri
-    union all select user_id, c as node from tri
-  ) corners
-  group by user_id, node
-),
+{_HVG_TRIANGLE_CTES},
 tw as (
   select d.user_id,
          sum(coalesce(t.triangles, 0)) as t3,
@@ -7636,20 +7312,14 @@ def q_int8_recall_top5(spark, sf_dir):
     pin the hash."""
     from ts2g2_spark.operators import similarity
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias(
-            "embedding"))
-    qids = emb.where(F.col("vec_id") < 50).select("vec_id")
-    exact = similarity.cosine_topk(
-        emb, emb.where(F.col("vec_id") < 50), k=5)
+    emb, qids, exact = _ann_eval(spark, sf_dir)
     approx = similarity.quantized_cosine_topk(
         similarity.quantize_embeddings(emb), qids, k=5)
     return similarity.recall_at_k(approx, exact).select(
         "query_id", "n_exact", "n_hits", "recall")
 
 
-INT8_RECALL_SQL = """
+INT8_RECALL_SQL = f"""
 with e as (
   select vec_id, embedding::DOUBLE[] as v from embeddings
 ),
@@ -7672,17 +7342,7 @@ n2 as (
   select vec_id, qv, list_dot_product(qv, qv) as nn from q8
   where list_dot_product(qv, qv) > 0
 ),
-exact as (
-  select query_id, neighbor_id from (
-    select q0.vec_id as query_id, c.vec_id as neighbor_id,
-           row_number() over (partition by q0.vec_id
-                              order by list_cosine_similarity(q0.v, c.v)
-                                       desc, c.vec_id asc) as rank
-    from (select * from e where vec_id < 50) q0
-    cross join e c
-    where c.vec_id != q0.vec_id
-  ) where rank <= 5
-),
+{_exact_top5_cte("(select * from e where vec_id < 50)")},
 approx as (
   select query_id, neighbor_id from (
     select q.vec_id as query_id, c.vec_id as neighbor_id,
@@ -7696,16 +7356,7 @@ approx as (
     where c.vec_id != q.vec_id
   ) where rank <= 5
 )
-select x.query_id, count(*)::BIGINT as n_exact,
-       coalesce(sum(case when a.neighbor_id is not null then 1 end), 0)
-         ::BIGINT as n_hits,
-       round(coalesce(sum(case when a.neighbor_id is not null then 1 end),
-                      0)::DOUBLE / count(*)::DOUBLE, 6) as recall
-from exact x
-left join approx a
-  on a.query_id = x.query_id and a.neighbor_id = x.neighbor_id
-group by 1
-"""
+""" + _RECALL_SQL
 
 
 def q_pq_recall_top5(spark, sf_dir):
@@ -7721,32 +7372,17 @@ def q_pq_recall_top5(spark, sf_dir):
     rows-only ann_lsh/ivf)."""
     from ts2g2_spark.operators import similarity
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias(
-            "embedding"))
-    qids = emb.where(F.col("vec_id") < 50).select("vec_id")
-    exact = similarity.cosine_topk(
-        emb, emb.where(F.col("vec_id") < 50), k=5)
+    emb, qids, exact = _ann_eval(spark, sf_dir)
     approx = similarity.pq_topk(emb, qids, dim=64, k=5, m=8, ks=16)
     return similarity.recall_at_k(approx, exact).select(
         "query_id", "n_exact", "n_hits", "recall")
 
 
-PQ_RECALL_SQL = """
+PQ_RECALL_SQL = f"""
 with e as materialized (
   select vec_id, embedding::DOUBLE[] as v from embeddings
 ),
-seeds as materialized (
-  select v as sv, row_number() over (
-      order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-               as bigint), vec_id
-    ) - 1 as j
-  from e
-  order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-           as bigint), vec_id
-  limit 16
-),
+{_md5_seeds_cte("seeds", "v as sv", "j", "e", 16)},
 cb as materialized (
   select ss.s, seeds.j,
          list_transform(generate_series(1, 8),
@@ -7809,27 +7445,8 @@ approx as (
     where rnorm2 > 0 and neighbor_id != query_id
   ) where rank <= 5
 ),
-exact as (
-  select query_id, neighbor_id from (
-    select q0.query_id, c.vec_id as neighbor_id,
-           row_number() over (partition by q0.query_id
-                              order by list_cosine_similarity(q0.v, c.v)
-                                       desc, c.vec_id asc) as rank
-    from qv q0
-    cross join e c
-    where c.vec_id != q0.query_id
-  ) where rank <= 5
-)
-select x.query_id, count(*)::BIGINT as n_exact,
-       coalesce(sum(case when a.neighbor_id is not null then 1 end), 0)
-         ::BIGINT as n_hits,
-       round(coalesce(sum(case when a.neighbor_id is not null then 1 end),
-                      0)::DOUBLE / count(*)::DOUBLE, 6) as recall
-from exact x
-left join approx a
-  on a.query_id = x.query_id and a.neighbor_id = x.neighbor_id
-group by 1
-"""
+{_exact_top5_cte("qv", "query_id")}
+""" + _RECALL_SQL
 
 
 def q_ivfpq_recall_top5(spark, sf_dir):
@@ -7846,33 +7463,18 @@ def q_ivfpq_recall_top5(spark, sf_dir):
     favorable case."""
     from ts2g2_spark.operators import similarity
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias(
-            "embedding"))
-    qids = emb.where(F.col("vec_id") < 50).select("vec_id")
-    exact = similarity.cosine_topk(
-        emb, emb.where(F.col("vec_id") < 50), k=5)
+    emb, qids, exact = _ann_eval(spark, sf_dir)
     approx = similarity.ivfpq_topk(emb, qids, dim=64, k=5, n_lists=8,
                                    nprobe=2, m=8, ks=16)
     return similarity.recall_at_k(approx, exact).select(
         "query_id", "n_exact", "n_hits", "recall")
 
 
-IVFPQ_RECALL_SQL = """
+IVFPQ_RECALL_SQL = f"""
 with e as materialized (
   select vec_id, embedding::DOUBLE[] as v from embeddings
 ),
-cseeds as materialized (
-  select v as c, row_number() over (
-      order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-               as bigint), vec_id
-    ) - 1 as list_id
-  from e
-  order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-           as bigint), vec_id
-  limit 8
-),
+{_md5_seeds_cte("cseeds", "v as c", "list_id", "e", 8)},
 ccb as materialized (
   select list_id, c,
          list_reduce(list_prepend(0.0, list_transform(c, x -> x * x)),
@@ -7896,16 +7498,7 @@ res as materialized (
                         i -> e.v[i] - ccb.c[i]) as rv
   from e join casg a using (vec_id) join ccb using (list_id)
 ),
-rseeds as materialized (
-  select rv as sv, row_number() over (
-      order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-               as bigint), vec_id
-    ) - 1 as j
-  from res
-  order by cast(concat('0x', substr(md5(vec_id::VARCHAR), 1, 15))
-           as bigint), vec_id
-  limit 16
-),
+{_md5_seeds_cte("rseeds", "rv as sv", "j", "res", 16)},
 rcb as materialized (
   select ss.s, rseeds.j,
          list_transform(generate_series(1, 8),
@@ -7997,27 +7590,8 @@ approx as (
     where rnorm2 > 0 and neighbor_id != query_id
   ) where rank <= 5
 ),
-exact as (
-  select query_id, neighbor_id from (
-    select q0.query_id, c.vec_id as neighbor_id,
-           row_number() over (partition by q0.query_id
-                              order by list_cosine_similarity(q0.v, c.v)
-                                       desc, c.vec_id asc) as rank
-    from qv q0
-    cross join e c
-    where c.vec_id != q0.query_id
-  ) where rank <= 5
-)
-select x.query_id, count(*)::BIGINT as n_exact,
-       coalesce(sum(case when a.neighbor_id is not null then 1 end), 0)
-         ::BIGINT as n_hits,
-       round(coalesce(sum(case when a.neighbor_id is not null then 1 end),
-                      0)::DOUBLE / count(*)::DOUBLE, 6) as recall
-from exact x
-left join approx a
-  on a.query_id = x.query_id and a.neighbor_id = x.neighbor_id
-group by 1
-"""
+{_exact_top5_cte("qv", "query_id")}
+""" + _RECALL_SQL
 
 
 def q_normalize_unicode(spark, sf_dir):
@@ -8308,13 +7882,8 @@ def q_cms_hot_words(spark, sf_dir):
     return exact.join(est, "word").select("word", "exact_cnt", "est_cnt")
 
 
-CMS_HOT_WORDS_SQL = r"""
-with w as (
-  select list_filter(string_split(trim(regexp_replace(regexp_replace(
-             lower(text), '[^a-z0-9\s]', '', 'g'), '\s+', ' ', 'g')), ' '),
-             x -> x != '') as ws
-  from documents
-),
+CMS_HOT_WORDS_SQL = rf"""
+with {_words_cte("")},
 stream as (select unnest(ws) as word from w),
 salts as (select unnest([0, 1, 2, 3]) as i),
 cells as (
@@ -9120,10 +8689,7 @@ def q_mrl_recall(spark, sf_dir):
     hash."""
     from ts2g2_spark.operators import similarity
 
-    emb = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias(
-            "embedding"))
+    emb = _emb_double(spark, sf_dir)
     q = emb.where(F.col("vec_id") < 20)
     return similarity.mrl_recall(emb, q, dims=(8, 16, 32), k=5)
 
@@ -9393,452 +8959,293 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _with_confs(fn) for name, fn in _RAW_QUERIES.items()}
+class Query(NamedTuple):
+    """One contract query: its builder and either the DuckDB oracle SQL
+    that pins its values or the reason it is checked for rows only."""
 
+    name: str
+    builder: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+    reason: str | None = None
+
+
+_SEEDED_WALKS = ("seeded stochastic walks; bit-parity with the seeded "
+                 "reference is pinned in tests/test_generate.py")
+_SEEDED_HVG_WALKS = ("seeded random walks over per-user HVGs; parity and "
+                     "ranking semantics are pinned in tests/test_analytics.py")
+_APPROXIMATE = ("approximate by design; recall against brute force is "
+                "bounded in tests/test_similarity.py")
 
 # ORDERING CONTRACT (round 3): the driver's correctness harness samples a
-# 50-query PREFIX of this dict (CORRECTNESS_r02 checked exactly the first
-# 50 of 68).  The prefix therefore carries one oracled (or declared
-# rows-only) representative of EVERY SURVEY §2 operator ID and every
-# training-data operator family; demo/variant queries whose family is
-# already represented (tpch, sessionize, daily_counts, sample_10pct,
-# stratified_sample, kendall_tau-naive, embedding_norms,
-# centroid_by_label) sit below the prefix, keeping their oracles for
-# pytest and any wider future sample.
-_RAW_QUERIES = {
-        # -- rollup / retention engine (§2.7 + north rule) -------- 7
-        "rollup_1m": q_rollup_1m,
-        "tokens_rollup_1m": q_tokens_rollup_1m,  # input_hint shape
-        "rollup_tiers_up": q_rollup_tiers_up,  # 1h + 1d tagged union
-        "rollup_1m_quantiles": q_rollup_1m_quantiles,
-        "gapfill_1h": q_gapfill_1h,
-        "retention_1m_recent": q_retention_1m_recent,
-        "codec_roundtrip": q_codec_roundtrip,
-        # -- graph construction G1-G9 + P5 ----------------------- 9
-        "hvg_edges": q_hvg_edges,  # base + limit=2, tagged union
-        "nvg_edges": q_nvg_edges,
-        "nvg_angle": q_nvg_angle,
-        "nvg_weighted": q_nvg_weighted,
-        "opg_edges_w3": q_opg_edges_w3,
-        "opg_multivariate_w3": q_opg_multivariate_w3,
-        "qg_edges_q4": q_qg_edges_q4,
-        "qg_mean_jump": q_qg_mean_jump,
-        "histogram_10": q_histogram_10,
-        # -- proximity networks G11-G15 -------------------------- 4
-        "proximity_eps": q_proximity_eps,
-        "proximity_cycle": q_proximity_cycle,
-        "proximity_annn": q_proximity_annn,
-        "proximity_knn": q_proximity_knn,
-        # -- multi-graph linking L1-L12 -------------------------- 11
-        "link_seasonality_7": q_link_seasonality_7,
-        "link_value_range": q_link_value_range,
-        "link_cooccurrence": q_link_cooccurrence,
-        "link_correlation": q_link_correlation,
-        "link_positional_correlation": q_link_positional_correlation,
-        "link_correlation_grouped": q_link_correlation_grouped,
-        "link_window_chain": q_link_window_chain,
-        "manual_edge": q_manual_edge,
-        "combine_nodes": q_combine_nodes,
-        "combine_subgraphs": q_combine_subgraphs,
-        "link_dtw": q_link_dtw,  # oracled r4: recursive-CTE DP replay
-        # -- analytics E1/E4 + generation R2-R5 ------------------ 4
-        "embedding_rank": q_embedding_rank,
-        "kendall_tau_fast": q_kendall_tau_fast,
-        # r5: the prefix's E1 and generation representatives are the
-        # ORACLED variants (bit-exact power method / md5 hash walks);
-        # the eigensolver and seeded-MT twins keep their slots below.
-        "eigencentrality_power_hvg": q_eigencentrality_power_hvg,
-        "generate_walks_hashed": q_generate_walks_hashed,
-        # -- text / dedup / datamix families --------------------- 11
-        "dedup_exact": q_dedup_exact,
-        "fingerprints": q_fingerprints,
-        "token_counts": q_token_counts,
-        "quality_scores": q_quality_scores,
-        "lang_id": q_lang_id,
-        "ngram_jaccard": q_ngram_jaccard,
-        "dedup_components": q_dedup_components,
-        "corpus_clean": q_corpus_clean,
-        "datamix_report": q_datamix_report,
-        "minhash_lsh_candidates": q_minhash_lsh_candidates,
-        "simhash_near": q_simhash_near,
-        # -- sampling / multimodal / embeddings ------------------ 4
-        "split_assignment": q_split_assignment,
-        "media_dedup": q_media_dedup,
-        "emb_cosine_dup": q_emb_cosine_dup,
-        "ann_cosine_top5": q_ann_cosine_top5,
-        # ==== end of the 50-query driver prefix =================
-        "stratified_sample": q_stratified_sample,
-        "sample_10pct": q_sample_10pct,
-        "sessionize_30m": q_sessionize_30m,
-        "daily_counts": q_daily_counts,
-        "tpch_q1": q_tpch_q1,
-        "tpch_q3_top10": q_tpch_q3_top10,
-        "kendall_tau": q_kendall_tau,
-        "embedding_norms": q_embedding_norms,
-        "centroid_by_label": q_centroid_by_label,
-        "media_features": q_media_features,
-        "walk_corpus": q_walk_corpus,
-        "walk_embedding_rank": q_walk_embedding_rank,
-        "walk_pmi_rank": q_walk_pmi_rank,  # rows-only: seeded walks
-        "generate_plain": q_generate_plain,
-        "generate_sliding": q_generate_sliding,
-        "generate_ordinal": q_generate_ordinal,
-        "generate_sequences": q_generate_sequences,
-        "ann_lsh_top5": q_ann_lsh_top5,
-        "ann_ivf_top5": q_ann_ivf_top5,
-        # round-3 additions (oracled; below the prefix so the driver's
-        # 50-query sample window is byte-stable across rounds)
-        "repetition_signals": q_repetition_signals,
-        "entropy_signals": q_entropy_signals,
-        "link_xcorr": q_link_xcorr,
-        "link_spearman": q_link_spearman,
-        "pii_counts": q_pii_counts,
-        "logodds_quality": q_logodds_quality,
-        "dsir_weights": q_dsir_weights,
-        "collocations_top20": q_collocations_top20,
-        "top_2grams": q_top_2grams,
-        "contamination": q_contamination,
-        "pack_sequences": q_pack_sequences,
-        "datamix_rebalance": q_datamix_rebalance,
-        "datamix_apply": q_datamix_apply,
-        # round-3 session-3 additions (oracled; below the prefix)
-        "asof_enrich": q_asof_enrich,
-        "gapfill_1m_linear": q_gapfill_1m_linear,
-        "lm_perplexity": q_lm_perplexity,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "duplicated_spans": q_duplicated_spans,
-        "line_dedup": q_line_dedup,
-        "gopher_quality": q_gopher_quality,
-        "semantic_dedup": q_semantic_dedup,
-        "m4_1h": q_m4_1h,
-        "rolling_zscore": q_rolling_zscore,
-        "sax_w8_a4": q_sax_w8_a4,
-        "acf_4": q_acf_4,
-        "cusum_changepoint": q_cusum_changepoint,
-        "series_profile": q_series_profile,
-        "matrix_profile_m16": q_matrix_profile_m16,
-        "periodogram": q_periodogram,
-        "vocab_stats": q_vocab_stats,
-        "source_divergence": q_source_divergence,
-        "corpus_length_profile": q_corpus_length_profile,
-        "event_transitions": q_event_transitions,
-        "funnel_vcp": q_funnel_vcp,
-        "cohort_retention": q_cohort_retention,
-        # round-3 session-4 additions (oracled; below the prefix)
-        "graph_summary_hvg": q_graph_summary_hvg,
-        "clustering_hvg": q_clustering_hvg,
-        "kcore_hvg": q_kcore_hvg,
-        "pagerank_hvg": q_pagerank_hvg,
-        "seasonal_decompose_24": q_seasonal_decompose_24,
-        "session_stats_6h": q_session_stats_6h,
-        "lttb_48": q_lttb_48,
-        "ewma_03": q_ewma_03,
-        "hampel_3": q_hampel_3,
-        "interval_join_sessions": q_interval_join_sessions,
-        "twa_1h": q_twa_1h,
-        "winsorized_1h": q_winsorized_1h,
-        "state_durations": q_state_durations,
-        "counter_rate_1h": q_counter_rate_1h,
-        "sax_motifs_w4": q_sax_motifs_w4,
-        "serve_range_stitched": q_serve_range_stitched,
-        "distinct_users_1h": q_distinct_users_1h,
-        "value_quantiles_1h": q_value_quantiles_1h,
-        "serve_quantiles_range": q_serve_quantiles_range,
-        "top_tokens_1h": q_top_tokens_1h,
-        "chunk_docs": q_chunk_docs,
-        "dict_encode_docs": q_dict_encode,
-        "forecast_24h": q_forecast_24h,
-        "anomaly_stl_24": q_anomaly_stl_24,
-        "threshold_alerts": q_threshold_alerts,
-        "heartbeat_gaps": q_heartbeat_gaps,
-        "tier_refresh_late": q_tier_refresh_late,
-        "holt_forecast_12": q_holt_forecast_12,
-        "holt_winters_24": q_holt_winters_24,
-        "theil_sen_trend": q_theil_sen_trend,
-        "graph_mixing_hvg": q_graph_mixing_hvg,
-        "mann_kendall": q_mann_kendall,
-        "betweenness_hvg": q_betweenness_hvg,
-        "psi_drift": q_psi_drift,
-        "tokens_refresh_late": q_tokens_refresh_late,
-        "burst_hourly": q_burst_hourly,
-        "source_cap_25": q_source_cap_25,
-        "seasonal_strength_24": q_seasonal_strength_24,
-        "dominant_period": q_dominant_period,
-        "degree_exponent_hvg": q_degree_exponent_hvg,
-        "path_metrics_hvg": q_path_metrics_hvg,
-        "gapfill_1m_locf": q_gapfill_1m_locf,
-        "bm25_top10": q_bm25_top10,
-        "heaps_law": q_heaps_law,
-        "dedup_survivors": q_dedup_survivors,
-        "slo_burn_alerts": q_slo_burn_alerts,
-        "ar2_forecast_12": q_ar2_forecast_12,
-        "ks_drift": q_ks_drift,
-        "paragraph_dedup": q_paragraph_dedup,
-        "ivf_recall_top5": q_ivf_recall_top5,
-        "pelt_daily": q_pelt_daily,
-        "rolling_p95_1h": q_rolling_p95_1h,
-        "incremental_dedup": q_incremental_dedup,
-        "lsh_hot_capped": q_lsh_hot_capped,
-        "media_features_real": q_media_features_real,
-        "ivf_recall_nprobe": q_ivf_recall_nprobe,
-        "pii_redact": q_pii_redact,
-        "int8_recall_top5": q_int8_recall_top5,
-        "normalize_unicode": q_normalize_unicode,
-        "domain_stats": q_domain_stats,
-        "pq_recall_top5": q_pq_recall_top5,
-        "ivfpq_recall_top5": q_ivfpq_recall_top5,
-        "hll_users_by_type": q_hll_users_by_type,
-        "hll_users_daily_merged": q_hll_users_daily_merged,
-        "weighted_sample_10": q_weighted_sample_10,
-        "hll_overlap_click_purchase": q_hll_overlap_click_purchase,
-        "cms_hot_words": q_cms_hot_words,
-        "bloom_prune_orders": q_bloom_prune_orders,
-        "lpa_communities_hvg": q_lpa_communities_hvg,
-        "wl_fingerprints_hvg": q_wl_fingerprints_hvg,
-        "lpa_modularity_hvg": q_lpa_modularity_hvg,
-        "kmv_users_by_type": q_kmv_users_by_type,
-        "kmv_users_daily_merged": q_kmv_users_daily_merged,
-        "url_canonical_dedup": q_url_canonical_dedup,
-        "span_corruption_docs": q_span_corruption,
-        "tpch_q6": q_tpch_q6,
-        "mrl_recall_top5": q_mrl_recall,
-        "bpe_merges_k8": q_bpe_merges_k8,
-        "bpe_apply_k8": q_bpe_apply_k8,
-        "quality_auc": q_quality_auc,
-        "hdr_value_quantiles": q_hdr_value_quantiles,
-        "hdr_quantiles_daily_merged": q_hdr_quantiles_daily_merged,
-        "props_key_census": q_props_key_census,
-        "props_k_rollup": q_props_k_rollup,
-        "quality_top25_by_source": q_quality_top25,
-        "link_prediction_hvg": q_link_prediction_hvg,
-        "mase_hourly24": q_mase_hourly24,
-        "predict_linear_1h": q_predict_linear_1h,
-        # rows-only twins whose ORACLED variants hold the prefix slots
-        # (r5): eigh eigensolver and seeded-Mersenne-Twister visitors,
-        # parity-pinned in tests/test_analytics.py / test_generate.py.
-        "eigencentrality_hvg": q_eigencentrality_hvg,  # rows-only
-        "generate_walks": q_generate_walks,  # rows-only: seeded RNG
-        "vocab_coverage_20": q_vocab_coverage20,
-        "user_growth_daily": q_user_growth_daily,
-    }
+# 50-query PREFIX of this table (CORRECTNESS_r02 checked exactly the first
+# 50 of 68).  The prefix therefore carries one oracled representative of
+# EVERY SURVEY §2 operator ID and every training-data operator family;
+# demo/variant queries whose family is already represented (tpch,
+# sessionize, daily_counts, sample_10pct, stratified_sample,
+# kendall_tau-naive, embedding_norms, centroid_by_label) sit below the
+# prefix, keeping their oracles for pytest and any wider future sample.
+REGISTRY: tuple[Query, ...] = (
+    # -- rollup / retention engine (§2.7 + north rule) -------- 7
+    Query("rollup_1m", q_rollup_1m, _rollup_sql(60)),
+    Query("tokens_rollup_1m", q_tokens_rollup_1m, TOKENS_ROLLUP_SQL),
+    Query("rollup_tiers_up", q_rollup_tiers_up, ROLLUP_TIERS_UP_SQL),
+    Query("rollup_1m_quantiles", q_rollup_1m_quantiles, ROLLUP_QUANTILES_SQL),
+    Query("gapfill_1h", q_gapfill_1h, GAPFILL_SQL),
+    Query("retention_1m_recent", q_retention_1m_recent, RETENTION_SQL),
+    Query("codec_roundtrip", q_codec_roundtrip, CODEC_SQL),
+    # -- graph construction G1-G9 + P5 ----------------------- 9
+    Query("hvg_edges", q_hvg_edges, HVG_SQL),  # base + limit=2, tagged union
+    Query("nvg_edges", q_nvg_edges, NVG_SQL),
+    Query("nvg_angle", q_nvg_angle, NVG_ANGLE_SQL),
+    Query("nvg_weighted", q_nvg_weighted, NVG_WEIGHTED_SQL),
+    Query("opg_edges_w3", q_opg_edges_w3, OPG_SQL),
+    Query("opg_multivariate_w3", q_opg_multivariate_w3, OPG_MV_SQL),
+    Query("qg_edges_q4", q_qg_edges_q4, QG_SQL),
+    Query("qg_mean_jump", q_qg_mean_jump, QG_JUMP_SQL),
+    Query("histogram_10", q_histogram_10, HISTOGRAM_SQL),
+    # -- proximity networks G11-G15 -------------------------- 4
+    Query("proximity_eps", q_proximity_eps, PROXIMITY_EPS_SQL),
+    Query("proximity_cycle", q_proximity_cycle, PROXIMITY_CYCLE_SQL),
+    Query("proximity_annn", q_proximity_annn, PROXIMITY_ANNN_SQL),
+    Query("proximity_knn", q_proximity_knn, PROXIMITY_KNN_SQL),
+    # -- multi-graph linking L1-L12 -------------------------- 11
+    Query("link_seasonality_7", q_link_seasonality_7, LINK_SEASONALITY_SQL),
+    Query("link_value_range", q_link_value_range, LINK_VALUE_RANGE_SQL),
+    Query("link_cooccurrence", q_link_cooccurrence, LINK_COOCCURRENCE_SQL),
+    Query("link_correlation", q_link_correlation, LINK_CORRELATION_SQL),
+    Query("link_positional_correlation", q_link_positional_correlation,
+          LINK_POSCORR_SQL),
+    Query("link_correlation_grouped", q_link_correlation_grouped,
+          LINK_CORR_GROUPED_SQL),
+    Query("link_window_chain", q_link_window_chain, LINK_WINDOW_CHAIN_SQL),
+    Query("manual_edge", q_manual_edge, MANUAL_EDGE_SQL),
+    Query("combine_nodes", q_combine_nodes, COMBINE_NODES_SQL),
+    Query("combine_subgraphs", q_combine_subgraphs, COMBINE_SUBGRAPHS_SQL),
+    Query("link_dtw", q_link_dtw, LINK_DTW_SQL),
+    # -- analytics E1/E4 + generation R2-R5 ------------------ 4
+    Query("embedding_rank", q_embedding_rank, EMBEDDING_RANK_SQL),
+    Query("kendall_tau_fast", q_kendall_tau_fast, KENDALL_TAU_SQL),
+    # r5: the prefix's E1 and generation representatives are the
+    # ORACLED variants (bit-exact power method / md5 hash walks);
+    # the eigensolver and seeded-MT twins keep their slots below.
+    Query("eigencentrality_power_hvg", q_eigencentrality_power_hvg,
+          EIGENCENTRALITY_POWER_SQL),
+    Query("generate_walks_hashed", q_generate_walks_hashed,
+          GENERATE_WALKS_HASHED_SQL),
+    # -- text / dedup / datamix families --------------------- 11
+    Query("dedup_exact", q_dedup_exact, DEDUP_EXACT_SQL),
+    Query("fingerprints", q_fingerprints, FINGERPRINT_SQL),
+    Query("token_counts", q_token_counts, TOKEN_COUNTS_SQL),
+    Query("quality_scores", q_quality_scores, QUALITY_SQL),
+    Query("lang_id", q_lang_id, _lang_sql()),
+    Query("ngram_jaccard", q_ngram_jaccard, NGRAM_JACCARD_SQL),
+    Query("dedup_components", q_dedup_components, DEDUP_COMPONENTS_SQL),
+    Query("corpus_clean", q_corpus_clean, CORPUS_CLEAN_SQL),
+    Query("datamix_report", q_datamix_report, DATAMIX_REPORT_SQL),
+    Query("minhash_lsh_candidates", q_minhash_lsh_candidates, MINHASH_LSH_SQL),
+    Query("simhash_near", q_simhash_near, SIMHASH_SQL),
+    # -- sampling / multimodal / embeddings ------------------ 4
+    Query("split_assignment", q_split_assignment, SPLIT_SQL),
+    Query("media_dedup", q_media_dedup, MEDIA_DEDUP_SQL),
+    Query("emb_cosine_dup", q_emb_cosine_dup, EMB_COSINE_DUP_SQL),
+    Query("ann_cosine_top5", q_ann_cosine_top5, ANN_SQL),
+    # ==== end of the 50-query driver prefix =================
+    Query("stratified_sample", q_stratified_sample, STRATIFIED_SQL),
+    Query("sample_10pct", q_sample_10pct, SAMPLE_SQL),
+    Query("sessionize_30m", q_sessionize_30m, SESSION_SQL),
+    Query("daily_counts", q_daily_counts, DAILY_SQL),
+    Query("tpch_q1", q_tpch_q1, TPCH_Q1_SQL),
+    Query("tpch_q3_top10", q_tpch_q3_top10, TPCH_Q3_SQL),
+    Query("kendall_tau", q_kendall_tau, KENDALL_TAU_SQL),
+    Query("embedding_norms", q_embedding_norms, NORM_SQL),
+    Query("centroid_by_label", q_centroid_by_label, CENTROID_SQL),
+    Query("media_features", q_media_features, None,
+          "deterministic fake decoder over binary media; the schema and "
+          "batching are pinned in tests/test_multimodal.py"),
+    Query("walk_corpus", q_walk_corpus, None, _SEEDED_HVG_WALKS),
+    Query("walk_embedding_rank", q_walk_embedding_rank, None,
+          _SEEDED_HVG_WALKS),
+    Query("walk_pmi_rank", q_walk_pmi_rank, None,
+          "seeded random walks and an eigensolver; the embedding is pinned "
+          "against an independent numpy model in tests/test_analytics.py"),
+    Query("generate_plain", q_generate_plain, None, _SEEDED_WALKS),
+    Query("generate_sliding", q_generate_sliding, None, _SEEDED_WALKS),
+    Query("generate_ordinal", q_generate_ordinal, None, _SEEDED_WALKS),
+    Query("generate_sequences", q_generate_sequences, None, _SEEDED_WALKS),
+    Query("ann_lsh_top5", q_ann_lsh_top5, None, _APPROXIMATE),
+    Query("ann_ivf_top5", q_ann_ivf_top5, None, _APPROXIMATE),
+    # round-3 additions (oracled; below the prefix so the driver's
+    # 50-query sample window is byte-stable across rounds)
+    Query("repetition_signals", q_repetition_signals, REPETITION_SQL),
+    Query("entropy_signals", q_entropy_signals, ENTROPY_SQL),
+    Query("link_xcorr", q_link_xcorr, LINK_XCORR_SQL),
+    Query("link_spearman", q_link_spearman, LINK_SPEARMAN_SQL),
+    Query("pii_counts", q_pii_counts, _pii_sql()),
+    Query("logodds_quality", q_logodds_quality, LOGODDS_SQL),
+    Query("dsir_weights", q_dsir_weights, DSIR_WEIGHTS_SQL),
+    Query("collocations_top20", q_collocations_top20, COLLOCATIONS_SQL),
+    Query("top_2grams", q_top_2grams, TOP_2GRAMS_SQL),
+    Query("contamination", q_contamination, CONTAMINATION_SQL),
+    Query("pack_sequences", q_pack_sequences, PACK_SEQUENCES_SQL),
+    Query("datamix_rebalance", q_datamix_rebalance, DATAMIX_REBALANCE_SQL),
+    Query("datamix_apply", q_datamix_apply, DATAMIX_APPLY_SQL),
+    # round-3 session-3 additions (oracled; below the prefix)
+    Query("asof_enrich", q_asof_enrich, ASOF_ENRICH_SQL),
+    Query("gapfill_1m_linear", q_gapfill_1m_linear, GAPFILL_LINEAR_SQL),
+    Query("lm_perplexity", q_lm_perplexity, LM_PERPLEXITY_SQL),
+    Query("tfidf_top_terms", q_tfidf_top_terms, TFIDF_SQL),
+    Query("duplicated_spans", q_duplicated_spans, _duplicated_spans_sql()),
+    Query("line_dedup", q_line_dedup, LINE_DEDUP_SQL),
+    Query("gopher_quality", q_gopher_quality, GOPHER_QUALITY_SQL),
+    Query("semantic_dedup", q_semantic_dedup, SEMANTIC_DEDUP_SQL),
+    Query("m4_1h", q_m4_1h, M4_SQL),
+    Query("rolling_zscore", q_rolling_zscore, ZSCORE_SQL),
+    Query("sax_w8_a4", q_sax_w8_a4, SAX_SQL),
+    Query("acf_4", q_acf_4, ACF_SQL),
+    Query("cusum_changepoint", q_cusum_changepoint, CUSUM_SQL),
+    Query("series_profile", q_series_profile, SERIES_PROFILE_SQL),
+    Query("matrix_profile_m16", q_matrix_profile_m16, None,
+          "BLAS pairwise summation has no bit-exact SQL replay; brute-force "
+          "numpy parity is pinned in tests/test_seriesstats.py"),
+    Query("periodogram", q_periodogram, PERIODOGRAM_SQL),
+    Query("vocab_stats", q_vocab_stats, VOCAB_STATS_SQL),
+    Query("source_divergence", q_source_divergence, SOURCE_DIVERGENCE_SQL),
+    Query("corpus_length_profile", q_corpus_length_profile,
+          LENGTH_PROFILE_SQL),
+    Query("event_transitions", q_event_transitions, TRANSITIONS_SQL),
+    Query("funnel_vcp", q_funnel_vcp, FUNNEL_SQL),
+    Query("cohort_retention", q_cohort_retention, COHORT_SQL),
+    # round-3 session-4 additions (oracled; below the prefix)
+    Query("graph_summary_hvg", q_graph_summary_hvg, GRAPH_SUMMARY_SQL),
+    Query("clustering_hvg", q_clustering_hvg, CLUSTERING_SQL),
+    Query("kcore_hvg", q_kcore_hvg, KCORE_HVG_SQL),
+    Query("pagerank_hvg", q_pagerank_hvg, PAGERANK_SQL),
+    Query("seasonal_decompose_24", q_seasonal_decompose_24,
+          SEASONAL_DECOMP_SQL),
+    Query("session_stats_6h", q_session_stats_6h, SESSION_STATS_SQL),
+    Query("lttb_48", q_lttb_48, LTTB_SQL),
+    Query("ewma_03", q_ewma_03, EWMA_SQL),
+    Query("hampel_3", q_hampel_3, HAMPEL_SQL),
+    Query("interval_join_sessions", q_interval_join_sessions,
+          INTERVAL_JOIN_SQL),
+    Query("twa_1h", q_twa_1h, TWA_SQL),
+    Query("winsorized_1h", q_winsorized_1h, WINSORIZED_1H_SQL),
+    Query("state_durations", q_state_durations, STATE_DURATIONS_SQL),
+    Query("counter_rate_1h", q_counter_rate_1h, COUNTER_RATE_SQL),
+    Query("sax_motifs_w4", q_sax_motifs_w4, SAX_MOTIFS_SQL),
+    Query("serve_range_stitched", q_serve_range_stitched, SERVE_RANGE_SQL),
+    Query("distinct_users_1h", q_distinct_users_1h, DISTINCT_USERS_SQL),
+    Query("value_quantiles_1h", q_value_quantiles_1h, VALUE_QUANTILES_SQL),
+    Query("serve_quantiles_range", q_serve_quantiles_range,
+          SERVE_QUANTILES_SQL),
+    Query("top_tokens_1h", q_top_tokens_1h, TOP_TOKENS_SQL),
+    Query("chunk_docs", q_chunk_docs, CHUNK_DOCS_SQL),
+    Query("dict_encode_docs", q_dict_encode, DICT_ENCODE_SQL),
+    Query("forecast_24h", q_forecast_24h, FORECAST_SQL),
+    Query("anomaly_stl_24", q_anomaly_stl_24, _anomaly_sql()),
+    Query("threshold_alerts", q_threshold_alerts, ALERTS_SQL),
+    Query("heartbeat_gaps", q_heartbeat_gaps, HEARTBEAT_SQL),
+    Query("tier_refresh_late", q_tier_refresh_late, _rollup_sql(60)),
+    Query("holt_forecast_12", q_holt_forecast_12, _holt_sql()),
+    Query("holt_winters_24", q_holt_winters_24, _holt_winters_sql()),
+    Query("theil_sen_trend", q_theil_sen_trend, THEIL_SEN_SQL),
+    Query("graph_mixing_hvg", q_graph_mixing_hvg, GRAPH_MIXING_SQL),
+    Query("mann_kendall", q_mann_kendall, MANN_KENDALL_SQL),
+    Query("betweenness_hvg", q_betweenness_hvg, BETWEENNESS_HVG_SQL),
+    Query("psi_drift", q_psi_drift, PSI_DRIFT_SQL),
+    Query("tokens_refresh_late", q_tokens_refresh_late, TOKENS_ROLLUP_SQL),
+    Query("burst_hourly", q_burst_hourly, BURST_SQL),
+    Query("source_cap_25", q_source_cap_25, SOURCE_CAP_SQL),
+    Query("seasonal_strength_24", q_seasonal_strength_24,
+          SEASONAL_STRENGTH_SQL),
+    Query("dominant_period", q_dominant_period, DOMINANT_PERIOD_SQL),
+    Query("degree_exponent_hvg", q_degree_exponent_hvg, DEGREE_EXPONENT_SQL),
+    Query("path_metrics_hvg", q_path_metrics_hvg, PATH_METRICS_HVG_SQL),
+    Query("gapfill_1m_locf", q_gapfill_1m_locf, GAPFILL_LOCF_SQL),
+    Query("bm25_top10", q_bm25_top10, BM25_SQL),
+    Query("heaps_law", q_heaps_law, HEAPS_SQL),
+    Query("dedup_survivors", q_dedup_survivors, DEDUP_SURVIVORS_SQL),
+    Query("slo_burn_alerts", q_slo_burn_alerts, SLO_BURN_SQL),
+    Query("ar2_forecast_12", q_ar2_forecast_12, AR2_SQL),
+    Query("ks_drift", q_ks_drift, KS_DRIFT_SQL),
+    Query("paragraph_dedup", q_paragraph_dedup, PARAGRAPH_DEDUP_SQL),
+    Query("ivf_recall_top5", q_ivf_recall_top5, IVF_RECALL_SQL),
+    Query("pelt_daily", q_pelt_daily, _pelt_dp_sql()),
+    Query("rolling_p95_1h", q_rolling_p95_1h, ROLLING_P95_SQL),
+    Query("incremental_dedup", q_incremental_dedup, INCREMENTAL_DEDUP_SQL),
+    Query("lsh_hot_capped", q_lsh_hot_capped,
+          _minhash_sql(max_bucket_size=2, candidates_only=True)),
+    Query("media_features_real", q_media_features_real,
+          MEDIA_FEATURES_REAL_SQL),
+    Query("ivf_recall_nprobe", q_ivf_recall_nprobe, IVF_RECALL_NPROBE_SQL),
+    Query("pii_redact", q_pii_redact, _pii_redact_sql()),
+    Query("int8_recall_top5", q_int8_recall_top5, INT8_RECALL_SQL),
+    Query("normalize_unicode", q_normalize_unicode, NORMALIZE_UNICODE_SQL),
+    Query("domain_stats", q_domain_stats, _domain_stats_sql()),
+    Query("pq_recall_top5", q_pq_recall_top5, PQ_RECALL_SQL),
+    Query("ivfpq_recall_top5", q_ivfpq_recall_top5, IVFPQ_RECALL_SQL),
+    Query("hll_users_by_type", q_hll_users_by_type, HLL_BY_TYPE_SQL),
+    Query("hll_users_daily_merged", q_hll_users_daily_merged, HLL_DAILY_SQL),
+    Query("weighted_sample_10", q_weighted_sample_10, WEIGHTED_SAMPLE_SQL),
+    Query("hll_overlap_click_purchase", q_hll_overlap_click_purchase,
+          HLL_OVERLAP_SQL),
+    Query("cms_hot_words", q_cms_hot_words, CMS_HOT_WORDS_SQL),
+    Query("bloom_prune_orders", q_bloom_prune_orders, BLOOM_PRUNE_SQL),
+    Query("lpa_communities_hvg", q_lpa_communities_hvg, LPA_HVG_SQL),
+    Query("wl_fingerprints_hvg", q_wl_fingerprints_hvg, WL_HVG_SQL),
+    Query("lpa_modularity_hvg", q_lpa_modularity_hvg, LPA_MODULARITY_SQL),
+    Query("kmv_users_by_type", q_kmv_users_by_type, KMV_BY_TYPE_SQL),
+    Query("kmv_users_daily_merged", q_kmv_users_daily_merged, KMV_DAILY_SQL),
+    Query("url_canonical_dedup", q_url_canonical_dedup, _url_dedup_sql()),
+    Query("span_corruption_docs", q_span_corruption, SPAN_CORRUPTION_SQL),
+    Query("tpch_q6", q_tpch_q6, TPCH_Q6_SQL),
+    Query("mrl_recall_top5", q_mrl_recall, MRL_RECALL_SQL),
+    Query("bpe_merges_k8", q_bpe_merges_k8, _bpe_oracle_sql(8, apply=False)),
+    Query("bpe_apply_k8", q_bpe_apply_k8, _bpe_oracle_sql(8, apply=True)),
+    Query("quality_auc", q_quality_auc, QUALITY_AUC_SQL),
+    Query("hdr_value_quantiles", q_hdr_value_quantiles, HDR_BY_TYPE_SQL),
+    Query("hdr_quantiles_daily_merged", q_hdr_quantiles_daily_merged,
+          HDR_DAILY_SQL),
+    Query("props_key_census", q_props_key_census, _props_census_sql()),
+    Query("props_k_rollup", q_props_k_rollup, PROPS_K_ROLLUP_SQL),
+    Query("quality_top25_by_source", q_quality_top25, QUALITY_TOP25_SQL),
+    Query("link_prediction_hvg", q_link_prediction_hvg,
+          LINK_PREDICTION_HVG_SQL),
+    Query("mase_hourly24", q_mase_hourly24, MASE_HOURLY24_SQL),
+    Query("predict_linear_1h", q_predict_linear_1h, PREDICT_LINEAR_1H_SQL),
+    # rows-only twins whose ORACLED variants hold the prefix slots
+    # (r5): eigh eigensolver and seeded-Mersenne-Twister visitors,
+    # parity-pinned in tests/test_analytics.py / test_generate.py.
+    Query("eigencentrality_hvg", q_eigencentrality_hvg, None,
+          "dominant-eigenvector solve; networkx parity is pinned in "
+          "tests/test_analytics.py"),
+    Query("generate_walks", q_generate_walks, None, _SEEDED_WALKS),
+    Query("vocab_coverage_20", q_vocab_coverage20, VOCAB_COVERAGE20_SQL),
+    Query("user_growth_daily", q_user_growth_daily, USER_GROWTH_SQL),
+)
+
+
+def _check_registry(rows: tuple[Query, ...]) -> None:
+    seen: set[str] = set()
+    for row in rows:
+        if row.name in seen:
+            raise ValueError(f"contract query {row.name!r} declared twice")
+        seen.add(row.name)
+        if bool(row.oracle) == bool(row.reason):
+            raise ValueError(f"contract query {row.name!r} needs exactly "
+                             "one of an oracle and a rows-only reason")
+
+
+_check_registry(REGISTRY)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {row.name: _with_confs(row.builder) for row in REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "rollup_1m": _rollup_sql(60),
-        "tokens_rollup_1m": TOKENS_ROLLUP_SQL,
-        "rollup_tiers_up": ROLLUP_TIERS_UP_SQL,
-        "rollup_1m_quantiles": ROLLUP_QUANTILES_SQL,
-        "gapfill_1h": GAPFILL_SQL,
-        "retention_1m_recent": RETENTION_SQL,
-        "codec_roundtrip": CODEC_SQL,
-        "hvg_edges": HVG_SQL,  # base + limit=2 tagged union
-        "nvg_edges": NVG_SQL,
-        "opg_edges_w3": OPG_SQL,
-        "qg_edges_q4": QG_SQL,
-        "qg_mean_jump": QG_JUMP_SQL,
-        "sessionize_30m": SESSION_SQL,
-        "daily_counts": DAILY_SQL,
-        "tpch_q1": TPCH_Q1_SQL,
-        "tpch_q3_top10": TPCH_Q3_SQL,
-        "dedup_exact": DEDUP_EXACT_SQL,
-        "fingerprints": FINGERPRINT_SQL,
-        "token_counts": TOKEN_COUNTS_SQL,
-        "quality_scores": QUALITY_SQL,
-        "lang_id": _lang_sql(),
-        "ngram_jaccard": NGRAM_JACCARD_SQL,
-        "dedup_components": DEDUP_COMPONENTS_SQL,
-        "corpus_clean": _clean_sql(
-            "select doc_id, source, n_words from clean"),
-        "datamix_report": _clean_sql(
-            "select c.source, c.lang, count(*) as n_docs, "
-            "cast(sum(len(regexp_split_to_array(trim(d.text), '\\s+')))"
-            " as bigint) as total_tokens "
-            "from clean c join documents d on c.doc_id = d.doc_id "
-            "group by 1, 2"),
-        "sample_10pct": SAMPLE_SQL,
-        "stratified_sample": STRATIFIED_SQL,
-        "split_assignment": SPLIT_SQL,
-        # the engine default cap (4096) is replayed in the oracle too, so
-        # the contract cannot silently diverge at a scale factor whose
-        # boilerplate families exceed the cap (no tested sf does today —
-        # the hashes are unchanged — but the equality must hold by
-        # construction, not by data luck)
-        "minhash_lsh_candidates": _minhash_sql(max_bucket_size=4096),
-        # full recompute restricted to pairs touching the new batch —
-        # the incremental generator's defining equality
-        "incremental_dedup": (
-            "select doc_a, doc_b, jaccard from ("
-            + _minhash_sql(max_bucket_size=4096)
-            + ") where doc_a % 10 = 9 or doc_b % 10 = 9"),
-        "lsh_hot_capped": _minhash_sql(max_bucket_size=2,
-                                       candidates_only=True),
-        "media_features_real": MEDIA_FEATURES_REAL_SQL,
-        "ivf_recall_nprobe": IVF_RECALL_NPROBE_SQL,
-        "pii_redact": _pii_redact_sql(),
-        "int8_recall_top5": INT8_RECALL_SQL,
-        "normalize_unicode": NORMALIZE_UNICODE_SQL,
-        "domain_stats": _domain_stats_sql(),
-        "pq_recall_top5": PQ_RECALL_SQL,
-        "ivfpq_recall_top5": IVFPQ_RECALL_SQL,
-        "hll_users_by_type": HLL_BY_TYPE_SQL,
-        "hll_users_daily_merged": HLL_DAILY_SQL,
-        "weighted_sample_10": WEIGHTED_SAMPLE_SQL,
-        "hll_overlap_click_purchase": HLL_OVERLAP_SQL,
-        "cms_hot_words": CMS_HOT_WORDS_SQL,
-        "bloom_prune_orders": BLOOM_PRUNE_SQL,
-        "lpa_communities_hvg": LPA_HVG_SQL,
-        "wl_fingerprints_hvg": WL_HVG_SQL,
-        "lpa_modularity_hvg": LPA_MODULARITY_SQL,
-        "kmv_users_by_type": KMV_BY_TYPE_SQL,
-        "kmv_users_daily_merged": KMV_DAILY_SQL,
-        "url_canonical_dedup": _url_dedup_sql(),
-        "span_corruption_docs": SPAN_CORRUPTION_SQL,
-        "tpch_q6": TPCH_Q6_SQL,
-        "mrl_recall_top5": MRL_RECALL_SQL,
-        "bpe_merges_k8": _bpe_oracle_sql(8, apply=False),
-        "bpe_apply_k8": _bpe_oracle_sql(8, apply=True),
-        "quality_auc": QUALITY_AUC_SQL,
-        "hdr_value_quantiles": HDR_BY_TYPE_SQL,
-        "hdr_quantiles_daily_merged": HDR_DAILY_SQL,
-        "props_key_census": _props_census_sql(),
-        "props_k_rollup": PROPS_K_ROLLUP_SQL,
-        "quality_top25_by_source": QUALITY_TOP25_SQL,
-        "link_prediction_hvg": LINK_PREDICTION_HVG_SQL,
-        "mase_hourly24": MASE_HOURLY24_SQL,
-        "predict_linear_1h": PREDICT_LINEAR_1H_SQL,
-        "vocab_coverage_20": VOCAB_COVERAGE20_SQL,
-        "user_growth_daily": USER_GROWTH_SQL,
-        "pelt_daily": _pelt_dp_sql(),
-        "simhash_near": SIMHASH_SQL,
-        "link_seasonality_7": LINK_SEASONALITY_SQL,
-        "link_value_range": LINK_VALUE_RANGE_SQL,
-        "link_cooccurrence": LINK_COOCCURRENCE_SQL,
-        "embedding_rank": EMBEDDING_RANK_SQL,
-        "kendall_tau": KENDALL_TAU_SQL,
-        "kendall_tau_fast": KENDALL_TAU_SQL,
-        "media_dedup": MEDIA_DEDUP_SQL,
-        "proximity_eps": PROXIMITY_EPS_SQL,
-        "proximity_knn": PROXIMITY_KNN_SQL,
-        "nvg_angle": NVG_ANGLE_SQL,
-        "nvg_weighted": NVG_WEIGHTED_SQL,
-        "histogram_10": HISTOGRAM_SQL,
-        "proximity_cycle": PROXIMITY_CYCLE_SQL,
-        "proximity_annn": PROXIMITY_ANNN_SQL,
-        "opg_multivariate_w3": OPG_MV_SQL,
-        "link_correlation": LINK_CORRELATION_SQL,
-        "link_positional_correlation": LINK_POSCORR_SQL,
-        "link_correlation_grouped": LINK_CORR_GROUPED_SQL,
-        "link_window_chain": LINK_WINDOW_CHAIN_SQL,
-        "manual_edge": MANUAL_EDGE_SQL,
-        "combine_nodes": COMBINE_NODES_SQL,
-        "combine_subgraphs": COMBINE_SUBGRAPHS_SQL,
-        # generate_walks (and the standalone generate_plain/sliding/
-        # ordinal/sequences variants): no SQL oracle (seeded stochastic
-        # walks) -> rows-only checks; bit-parity vs the seeded reference
-        # pinned in tests/test_generate.py.
-        # eigencentrality_hvg / media_features: no SQL oracle
-        # (eigensolver / binary decode) -> rows-only checks; parity
-        # pinned by the reference-oracle pytest suites.  The power-
-        # method variant below IS oracled (bit-exact list_reduce
-        # replay), covering E1 with a value check.
-        "eigencentrality_power_hvg": EIGENCENTRALITY_POWER_SQL,
-        # generation family's oracled representative (r5): md5-driven
-        # integer-weighted walks, replayed by a recursive CTE.
-        "generate_walks_hashed": GENERATE_WALKS_HASHED_SQL,
-        # link_dtw graduated to a full oracle in r4 (recursive-CTE DP
-        # replay, see LINK_DTW_SQL).
-        "link_dtw": LINK_DTW_SQL,
-        "ann_cosine_top5": ANN_SQL,
-        "emb_cosine_dup": EMB_COSINE_DUP_SQL,
-        "embedding_norms": NORM_SQL,
-        "centroid_by_label": CENTROID_SQL,
-        # ann_lsh_top5 / ann_ivf_top5: intentionally no oracle (approximate
-        # by design; recall bounded in tests) -> driver records rows-only.
-        "repetition_signals": REPETITION_SQL,
-        "entropy_signals": ENTROPY_SQL,
-        "link_xcorr": LINK_XCORR_SQL,
-        "link_spearman": LINK_SPEARMAN_SQL,
-        "pii_counts": _pii_sql(),
-        "logodds_quality": LOGODDS_SQL,
-        "dsir_weights": DSIR_WEIGHTS_SQL,
-        "collocations_top20": COLLOCATIONS_SQL,
-        "top_2grams": TOP_2GRAMS_SQL,
-        "contamination": CONTAMINATION_SQL,
-        "pack_sequences": PACK_SEQUENCES_SQL,
-        "datamix_rebalance": DATAMIX_REBALANCE_SQL,
-        "datamix_apply": DATAMIX_APPLY_SQL,
-        "asof_enrich": ASOF_ENRICH_SQL,
-        "gapfill_1m_linear": GAPFILL_LINEAR_SQL,
-        "gapfill_1m_locf": GAPFILL_LOCF_SQL,
-        "bm25_top10": BM25_SQL,
-        "heaps_law": HEAPS_SQL,
-        "dedup_survivors": DEDUP_SURVIVORS_SQL,
-        "slo_burn_alerts": SLO_BURN_SQL,
-        "ar2_forecast_12": AR2_SQL,
-        "ks_drift": KS_DRIFT_SQL,
-        "paragraph_dedup": PARAGRAPH_DEDUP_SQL,
-        "ivf_recall_top5": IVF_RECALL_SQL,
-        "rolling_p95_1h": ROLLING_P95_SQL,
-        "lm_perplexity": LM_PERPLEXITY_SQL,
-        "tfidf_top_terms": TFIDF_SQL,
-        "duplicated_spans": _duplicated_spans_sql(),
-        "line_dedup": LINE_DEDUP_SQL,
-        "gopher_quality": GOPHER_QUALITY_SQL,
-        "semantic_dedup": SEMANTIC_DEDUP_SQL,
-        "m4_1h": M4_SQL,
-        "rolling_zscore": ZSCORE_SQL,
-        "sax_w8_a4": SAX_SQL,
-        "acf_4": ACF_SQL,
-        "cusum_changepoint": CUSUM_SQL,
-        "series_profile": SERIES_PROFILE_SQL,
-        "periodogram": PERIODOGRAM_SQL,
-        "vocab_stats": VOCAB_STATS_SQL,
-        "source_divergence": SOURCE_DIVERGENCE_SQL,
-        "corpus_length_profile": LENGTH_PROFILE_SQL,
-        "event_transitions": TRANSITIONS_SQL,
-        "funnel_vcp": FUNNEL_SQL,
-        "cohort_retention": COHORT_SQL,
-        "graph_summary_hvg": GRAPH_SUMMARY_SQL,
-        "clustering_hvg": CLUSTERING_SQL,
-        "kcore_hvg": KCORE_HVG_SQL,
-        "path_metrics_hvg": PATH_METRICS_HVG_SQL,
-        "betweenness_hvg": BETWEENNESS_HVG_SQL,
-        "pagerank_hvg": PAGERANK_SQL,
-        "seasonal_decompose_24": SEASONAL_DECOMP_SQL,
-        "session_stats_6h": SESSION_STATS_SQL,
-        "lttb_48": LTTB_SQL,
-        "ewma_03": EWMA_SQL,
-        "hampel_3": HAMPEL_SQL,
-        "interval_join_sessions": INTERVAL_JOIN_SQL,
-        "twa_1h": TWA_SQL,
-        "winsorized_1h": WINSORIZED_1H_SQL,
-        "state_durations": STATE_DURATIONS_SQL,
-        "counter_rate_1h": COUNTER_RATE_SQL,
-        "serve_range_stitched": SERVE_RANGE_SQL,
-        "distinct_users_1h": DISTINCT_USERS_SQL,
-        "value_quantiles_1h": VALUE_QUANTILES_SQL,
-        "serve_quantiles_range": SERVE_QUANTILES_SQL,
-        "top_tokens_1h": TOP_TOKENS_SQL,
-        "chunk_docs": CHUNK_DOCS_SQL,
-        "dict_encode_docs": DICT_ENCODE_SQL,
-        "forecast_24h": FORECAST_SQL,
-        "anomaly_stl_24": _anomaly_sql(),
-        "threshold_alerts": ALERTS_SQL,
-        "heartbeat_gaps": HEARTBEAT_SQL,
-        "tier_refresh_late": _rollup_sql(60),
-        "holt_forecast_12": _holt_sql(),
-        "holt_winters_24": _holt_winters_sql(),
-        "theil_sen_trend": THEIL_SEN_SQL,
-        "graph_mixing_hvg": GRAPH_MIXING_SQL,
-        "mann_kendall": MANN_KENDALL_SQL,
-        "psi_drift": PSI_DRIFT_SQL,
-        "tokens_refresh_late": TOKENS_ROLLUP_SQL,
-        "burst_hourly": BURST_SQL,
-        "source_cap_25": SOURCE_CAP_SQL,
-        "seasonal_strength_24": SEASONAL_STRENGTH_SQL,
-        "dominant_period": DOMINANT_PERIOD_SQL,
-        "degree_exponent_hvg": DEGREE_EXPONENT_SQL,
-        "sax_motifs_w4": SAX_MOTIFS_SQL,
-    }
+    return {row.name: row.oracle for row in REGISTRY if row.oracle}
+
+
+def rows_only() -> dict[str, str]:
+    return {row.name: row.reason for row in REGISTRY if row.reason}

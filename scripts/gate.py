@@ -8,7 +8,10 @@ query in `__spark_entry__.queries()` run the Spark DataFrame AND the
   * schema (column names, sorted),
   * value hash — columns sorted by name, rows sorted by all columns,
     floats canonicalized to 12 significant digits, csv -> md5.
-Queries without an oracle get a rows-only check (runs + row count >= 0).
+Queries without an oracle get a rows-only check (runs + row count >= 0)
+and print the contract's reason for having none.  `--out` keeps, per
+query, the Spark value hash (`spark_hash`) and, when oracled, the DuckDB
+one (`oracle_hash`), so two runs can be compared hash by hash.
 
 Usage:
     python scripts/gate.py [--sf-dir /root/testdata/sf0.01] [--only q1,q2]
@@ -98,6 +101,8 @@ def main() -> int:
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
+    # a contract module without rows_only() prints no reasons
+    reasons = getattr(entry, "rows_only", dict)()
     only = {x for x in args.only.split(",") if x}
     results: dict[str, dict] = {}
     n_fail = 0
@@ -109,15 +114,17 @@ def main() -> int:
         try:
             sdf = fn(spark, args.sf_dir).toPandas()
             rec["spark_rows"] = len(sdf)
+            rec["spark_hash"] = canon(sdf)
             if name in oracles:
                 odf = con.execute(oracles[name]).df()
                 rec["oracle_rows"] = len(odf)
+                rec["oracle_hash"] = canon(odf)
                 rec["rows_match"] = len(sdf) == len(odf)
                 rec["schema_match"] = (
                     sorted(sdf.columns) == sorted(odf.columns))
                 rec["hash_match"] = (
                     rec["rows_match"] and rec["schema_match"]
-                    and canon(sdf) == canon(odf))
+                    and rec["spark_hash"] == rec["oracle_hash"])
                 if not rec["hash_match"]:
                     n_fail += 1
             else:
@@ -130,16 +137,18 @@ def main() -> int:
         results[name] = rec
         status = ("ROWS-ONLY" if rec.get("err") == "no_oracle" else
                   "MATCH" if rec.get("hash_match") else "FAIL")
+        why = f"  ({reasons.get(name)})" if status == "ROWS-ONLY" else ""
         print(f"{status:9s} {name:32s} {rec['sec']:6.2f}s "
-              f"rows={rec.get('spark_rows')}", flush=True)
+              f"rows={rec.get('spark_rows')}{why}", flush=True)
 
     if args.out:
         with open(args.out, "w") as f:
             json.dump(results, f, indent=1)
     oracled = [r for r in results.values() if r.get("err") != "no_oracle"]
     ok = [r for r in oracled if r.get("hash_match")]
-    print(f"\n{len(ok)}/{len(oracled)} oracled MATCH, "
-          f"{len(results) - len(oracled)} rows-only, {n_fail} failures")
+    print(f"\n{len(results)} queries: {len(ok)}/{len(oracled)} oracled "
+          f"MATCH, {len(results) - len(oracled)} rows-only, "
+          f"{n_fail} failures")
     return 1 if n_fail else 0
 
 

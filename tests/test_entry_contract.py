@@ -107,3 +107,39 @@ def test_driver_prefix_ordering_contract():
     for must in ("tokens_rollup_1m", "proximity_knn", "emb_cosine_dup",
                  "ann_cosine_top5", "dedup_components", "rollup_1m"):
         assert must in prefix, must
+
+
+def test_registry_declares_each_query_once():
+    """The registry is the only place a query is declared: names are
+    unique, queries() has one entry per row, and every query without an
+    oracle says why it is checked for rows only."""
+    rows = entry_mod.REGISTRY
+    names = [row.name for row in rows]
+    assert len(names) == len(set(names))
+    assert list(entry_mod.queries()) == names
+    reasons = entry_mod.rows_only()
+    for row in rows:
+        if row.oracle is None:
+            assert row.reason and row.reason.strip(), row.name
+    assert set(reasons) == set(names) - set(entry_mod.oracle_sql())
+    assert set(reasons) == {
+        "media_features", "walk_corpus", "walk_embedding_rank",
+        "walk_pmi_rank", "generate_plain", "generate_sliding",
+        "generate_ordinal", "generate_sequences", "ann_lsh_top5",
+        "ann_ivf_top5", "matrix_profile_m16", "eigencentrality_hvg",
+        "generate_walks"}
+
+
+def test_registry_rejects_bad_rows():
+    """A repeated name, or a row with both or neither of an oracle and a
+    (non-empty) reason, raises at declaration time."""
+    def noop(spark, sf_dir):
+        return None
+
+    Q = entry_mod.Query
+    for rows in ((Q("a", noop, "select 1"), Q("a", noop, "select 2")),
+                 (Q("a", noop, "select 1", "and a reason"),),
+                 (Q("a", noop, None),),
+                 (Q("a", noop, None, ""),)):
+        with pytest.raises(ValueError):
+            entry_mod._check_registry(rows)

@@ -311,7 +311,6 @@ def merge_tier_states(
     state: DataFrame,
     delta: DataFrame,
     series_cols: list[str] = ("doc_id", "source"),
-    broadcast_keys: bool = True,
 ) -> DataFrame:
     """Incremental tier refresh: fold a (small) late-data `delta` state
     into the materialized tier `state`, touching ONLY the
@@ -324,8 +323,7 @@ def merge_tier_states(
     exchange of O(|delta|) rows.  At 10^12-bucket scale the refresh cost
     is proportional to the late batch, not the tier.  Buckets that exist
     only in the delta (a late point opening a brand-new bucket) fall out
-    of the same union.  Set broadcast_keys=False when the late batch is
-    itself huge (shuffle-hash joins instead).
+    of the same union.
 
     Merging is exact for cnt/min/max/first/last (associative picks over
     the stored unique order keys) and float-associative for sum — same
@@ -333,9 +331,7 @@ def merge_tier_states(
     keys = [*series_cols, "bucket_ts"]
     cols = [*keys, *_STATE_COLS]
     delta = delta.select(*cols)
-    dkeys = delta.select(*keys).dropDuplicates(keys)
-    if broadcast_keys:
-        dkeys = F.broadcast(dkeys)
+    dkeys = F.broadcast(delta.select(*keys).dropDuplicates(keys))
     untouched = state.select(*cols).join(dkeys, keys, "left_anti")
     touched = state.select(*cols).join(dkeys, keys, "left_semi")
     merged = touched.unionByName(delta).groupBy(*keys).agg(
@@ -373,14 +369,12 @@ def refresh_tier(
     ts_col: str = "ts",
     val_col: str = "value",
     okey=None,
-    broadcast_keys: bool = True,
 ) -> DataFrame:
     """Convenience composition: state ⊕ rollup_state(late batch) —
     the one-call late-data refresh over a materialized tier state."""
     delta = rollup_state(late_points, tier, series_cols=series_cols,
                          ts_col=ts_col, val_col=val_col, okey=okey)
-    return merge_tier_states(state, delta, series_cols=series_cols,
-                             broadcast_keys=broadcast_keys)
+    return merge_tier_states(state, delta, series_cols=series_cols)
 
 
 def apply_retention(
