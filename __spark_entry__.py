@@ -98,14 +98,14 @@ _SERVING = {"sum": "sum_val", "min": "min_val", "max": "max_val",
             "first": "first_val", "last": "last_val"}
 
 
-def _events_1m(spark, sf_dir) -> DataFrame:
-    """The per-user 1m tier of the events table, built by the engine:
+def _events_tier(spark, sf_dir, tier: str = "1m") -> DataFrame:
+    """The per-user `tier` of the events table, built by the engine:
     `plans.rollup.rollup_state` -> `finalize_state` (first/last picked by
     the unique `_okey`)."""
     from ts2g2_spark.plans import rollup
 
     state = rollup.rollup_state(
-        _events(spark, sf_dir), "1m", series_cols=_USER, ts_col="ts",
+        _events(spark, sf_dir), tier, series_cols=_USER, ts_col="ts",
         val_col="value", okey=_okey())
     return rollup.finalize_state(state, series_cols=_USER)
 
@@ -122,12 +122,8 @@ def _rounded(tier: DataFrame) -> DataFrame:
     return tier.withColumn("sum", F.round("sum", 6))
 
 
-def _rollup_events(spark, sf_dir) -> DataFrame:
-    return _serving_row(_rounded(_events_1m(spark, sf_dir)))
-
-
 def q_rollup_1m(spark, sf_dir):
-    return _rollup_events(spark, sf_dir)
+    return _serving_row(_rounded(_events_tier(spark, sf_dir)))
 
 
 def _rollup_sql(tier_s: int, where: str = "") -> str:
@@ -155,7 +151,7 @@ def q_rollup_tiers_up(spark, sf_dir):
     ts2g2 has no rollup path (engine-native, SURVEY §2.7)."""
     from ts2g2_spark.plans import rollup
 
-    h1 = rollup.rollup_tier_up(_events_1m(spark, sf_dir), "1h",
+    h1 = rollup.rollup_tier_up(_events_tier(spark, sf_dir), "1h",
                                series_cols=_USER)
     d1 = rollup.rollup_tier_up(h1, "1d", series_cols=_USER)
 
@@ -542,11 +538,11 @@ from events group by 1, 2
 def q_gapfill_1h(spark, sf_dir):
     """Dense hourly spine per user between its first and last hour;
     gapfilled marks hours with no events (engine-native op, SURVEY §2.7):
-    `plans.rollup.gapfill` over the engine's 1h tier (1m tier tiered up)."""
+    `plans.rollup.gapfill` over the engine's 1h tier, aggregated straight
+    from the events by `rollup_state`."""
     from ts2g2_spark.plans import rollup
 
-    h1 = rollup.rollup_tier_up(_events_1m(spark, sf_dir), "1h",
-                               series_cols=_USER)
+    h1 = _events_tier(spark, sf_dir, "1h")
     return rollup.gapfill(h1, "1h", series_cols=_USER).select(
         "user_id", "bucket_ts", "cnt", "gapfilled")
 
@@ -573,7 +569,7 @@ def q_retention_1m_recent(spark, sf_dir):
     """Retention predicate on the 1m tier: keep only the final 7 days of
     each dataset (cutoff = max bucket - 7d).  The filter compiles to a
     partition/file prune on date-partitioned storage."""
-    m1 = _rollup_events(spark, sf_dir).select(
+    m1 = q_rollup_1m(spark, sf_dir).select(
         "user_id", "bucket_ts", "cnt")
     mx = m1.agg(F.max("bucket_ts").alias("mx"))
     return m1.join(F.broadcast(mx)).where(
@@ -4037,7 +4033,7 @@ def _gapfill_1m(spark, sf_dir, fill: str) -> DataFrame:
     with the sums rounded to 6 decimals before the fill."""
     from ts2g2_spark.plans import rollup
 
-    tier = _rounded(_events_1m(spark, sf_dir).where(F.col("user_id") < 3))
+    tier = _rounded(_events_tier(spark, sf_dir).where(F.col("user_id") < 3))
     return _serving_row(rollup.gapfill(tier, "1m", series_cols=_USER,
                                        fill=fill), "gapfilled")
 

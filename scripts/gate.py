@@ -101,8 +101,7 @@ def main() -> int:
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    # a contract module without rows_only() prints no reasons
-    reasons = getattr(entry, "rows_only", dict)()
+    reasons = entry.rows_only()
     only = {x for x in args.only.split(",") if x}
     results: dict[str, dict] = {}
     n_fail = 0
@@ -137,7 +136,7 @@ def main() -> int:
         results[name] = rec
         status = ("ROWS-ONLY" if rec.get("err") == "no_oracle" else
                   "MATCH" if rec.get("hash_match") else "FAIL")
-        why = f"  ({reasons.get(name)})" if status == "ROWS-ONLY" else ""
+        why = f"  ({reasons[name]})" if status == "ROWS-ONLY" else ""
         print(f"{status:9s} {name:32s} {rec['sec']:6.2f}s "
               f"rows={rec.get('spark_rows')}{why}", flush=True)
 
