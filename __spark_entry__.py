@@ -8927,32 +8927,20 @@ from seqs{k}""")
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: 1m rollup of sf0.001 events tiered up to gap-filled 1h."""
+    """Flagship: 1m rollup of sf0.001 events tiered up to gap-filled 1h, on
+    the engine: `plans.rollup.rollup_tier_up` of the rounded 1m tier (the
+    1h sum is the rounded sum of the rounded minute sums), then
+    `plans.rollup.gapfill`."""
+    from ts2g2_spark.plans import rollup
+
     _ensure_session_confs(spark)
     sf_dir = "/root/testdata/sf0.001"
-    m1 = q_rollup_1m(spark, sf_dir)
-    h = m1.groupBy(
-        "user_id",
-        F.date_trunc("hour", "bucket_ts").alias("bucket_ts"),
-    ).agg(
-        F.sum("cnt").alias("cnt"),
-        F.round(F.sum("sum_val"), 6).alias("sum_val"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
-    )
-    spine = (
-        h.groupBy("user_id")
-        .agg(F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi"))
-        .select("user_id", F.explode(
-            F.sequence("lo", "hi", F.expr("interval 1 hour"))
-        ).alias("bucket_ts"))
-    )
-    return spine.join(h, ["user_id", "bucket_ts"], "left").select(
-        "user_id", "bucket_ts",
-        F.coalesce("cnt", F.lit(0)).alias("cnt"),
-        "sum_val", "min_val", "max_val",
-        F.col("cnt").isNull().alias("gapfilled"),
-    )
+    h1 = _rounded(rollup.rollup_tier_up(
+        _rounded(_events_tier(spark, sf_dir)), "1h", series_cols=_USER))
+    return rollup.gapfill(h1, "1h", series_cols=_USER).select(
+        "user_id", "bucket_ts", "cnt", F.col("sum").alias("sum_val"),
+        F.col("min").alias("min_val"), F.col("max").alias("max_val"),
+        "gapfilled")
 
 
 class Query(NamedTuple):

@@ -11,6 +11,15 @@ reference checkout.
     force from their definitions, including QG's integer transition
     counts, and the OPG kernel's lexsort against the np.unique(axis=0)
     rows it replaces, in both pattern modes.
+(c) The segmented kernels (one call per Arrow batch) against the
+    per-series loops they replace, on random batches with empty, 1- and
+    2-point series, null rows (length 0), flat runs, ties, +-inf and NaN
+    next to a series boundary, and a series longer than 1024 points.
+    Non-finite values are pinned: +-inf are ordinary ordered values; a NaN
+    blocks every line of sight over it (HVG: a NaN endpoint sees what the
+    other endpoint sees over; NVG: it sees nothing beyond its path edges);
+    OPG ranks NaN above every number, as np.argsort does; QG gives a
+    series holding a NaN or +-inf no edges.
 """
 
 from __future__ import annotations
@@ -70,10 +79,10 @@ def _weight(w: float):
     return None if math.isnan(w) else w
 
 
-def _expected_edges(kernel) -> Counter:
+def _expected_edges(kernel, series=SERIES) -> Counter:
     """Rows the emitter must produce: kernel(y) per non-null series."""
     rows = Counter()
-    for key, vals in SERIES:
+    for key, vals in series:
         if vals is None:
             continue
         out = kernel(np.asarray(vals, np.float64))
@@ -288,3 +297,242 @@ def test_qg_kernel_matches_brute_force(y, Q, phi):
     assert {tuple(p): x for p, x in zip(e.tolist(), wt.tolist())} == weights
     e, c = kernels.qg_transitions(np.asarray(y, np.float64), Q, phi)
     assert {tuple(p): x for p, x in zip(e.tolist(), c.tolist())} == counts
+
+
+# ---------------------------------------------- (c) segmented batch kernels
+def _hvg_ref(y, limit=0):
+    """HVG extra pairs (j >= i + 2) of one series, O(n^2): visible iff the
+    intermediates y[i + limit + 1 : j] are all <= y_i or all <= y_j (none
+    left: visible).  Their running max propagates NaN and a NaN compares
+    false, so a NaN intermediate blocks the pair."""
+    n, out = len(y), []
+    for i in range(n - 2):
+        lo = i + limit + 1
+        js = np.arange(i + 2, n)
+        wmax = np.full(len(js), -np.inf)
+        has = js > lo
+        if has.any():
+            wmax[has] = np.maximum.accumulate(y[lo:n - 1])[js[has] - lo - 1]
+        keep = ~has | (wmax <= y[i]) | (wmax <= y[js])
+        out += [(i, int(j)) for j in js[keep]]
+    return out
+
+
+def _opg_ref(y, w, tau, use_q=False, Q=3):
+    """Per-series OPG: each window's stable rank pattern (np.argsort order,
+    NaN last) or quantile pattern, then np.unique(axis=0) over consecutive
+    pattern pairs; weight = count / number of patterns."""
+    pats = []
+    for i in range(len(y) - w * tau + 1):
+        win = y[i:i + w * tau:tau]
+        if use_q:
+            thr = np.quantile(win, np.linspace(0, 1, Q + 1)[1:-1])
+            pats.append((win[:, None] > thr[None, :]).sum(axis=1))
+        else:
+            pats.append(np.argsort(np.argsort(win, kind="stable"),
+                                   kind="stable"))
+    if len(pats) < 2:
+        return []
+    pats = np.array(pats, dtype=np.int64)
+    uniq, counts = np.unique(np.concatenate([pats[:-1], pats[1:]], axis=1),
+                             axis=0, return_counts=True)
+    return [(tuple(r[:w]), tuple(r[w:]), c / float(len(pats)))
+            for r, c in zip(uniq.tolist(), counts.tolist())]
+
+
+def _qg_ref(y, Q, phi):
+    """Per-series QG: np.quantile bins + np.digitize (the reference's
+    literal discretization), np.unique(axis=0) over the bin pairs, rows
+    (src, dst, count, weight).  No transitions for a series with at most
+    phi points or a non-finite value."""
+    if len(y) <= phi or not np.isfinite(y).all():
+        return []
+    _, idx = kernels.quantile_bins_indices(y, Q)
+    uniq, counts = np.unique(np.stack([idx[:-phi], idx[phi:]], axis=1),
+                             axis=0, return_counts=True)
+    out_of = Counter()
+    for (s, _), c in zip(uniq.tolist(), counts.tolist()):
+        out_of[s] += c
+    return [(s, d, c, c / float(out_of[s]))
+            for (s, d), c in zip(uniq.tolist(), counts.tolist())]
+
+
+def _batch(series):
+    """Per-series arrays (a null row has no points), flat buffer, lengths."""
+    ys = [np.asarray(v if v is not None else [], np.float64) for v in series]
+    flat = np.concatenate(ys) if ys else np.empty(0)
+    return ys, flat, [len(y) for y in ys]
+
+
+def _nan_none(x: float):
+    return None if math.isnan(x) else x
+
+
+def _check_visibility(series, kind, limit, angle):
+    ys, flat, lengths = _batch(series)
+    seg, e, w = kernels.visibility_graph_segmented(
+        flat, lengths, kind=kind, limit=limit, angle=angle, weighted=True)
+    got = [(s, a, b, _nan_none(x)) for s, (a, b), x
+           in zip(seg.tolist(), e.tolist(), w.tolist())]
+    want = []
+    for s, y in enumerate(ys):
+        pe, pw = kernels.visibility_graph(y, kind=kind, limit=limit,
+                                          angle=angle, weighted=True)
+        want += [(s, a, b, _nan_none(x))
+                 for (a, b), x in zip(pe.tolist(), pw.tolist())]
+    assert got == want
+    # the extra edges against a reference independent of the batch code:
+    # the HVG predicate written out, the dense NVG scan
+    seg_fn = (kernels.hvg_edges_segmented if kind == "horizontal"
+              else kernels.nvg_edges_segmented)
+    xs, xd = seg_fn(flat, lengths, limit)
+    off = np.concatenate(([0], np.cumsum(lengths))).tolist()
+    want = []
+    for s, y in enumerate(ys):
+        ref = (_hvg_ref(y, limit) if kind == "horizontal"
+               else kernels._nvg_dense(y, limit).tolist() if len(y) >= 3
+               else [])
+        want += [(off[s] + a, off[s] + b) for a, b in ref]
+    assert list(zip(xs.tolist(), xd.tolist())) == want
+
+
+def _check_opg(series, w, tau, use_q):
+    ys, flat, lengths = _batch(series)
+    seg, pats, src, dst, wt = kernels.opg_edges_segmented(
+        *kernels.ordinal_patterns_segmented(flat, lengths, w, tau,
+                                            use_quantiles=use_q, Q=3))
+    got = [(s, tuple(pats[a].tolist()), tuple(pats[b].tolist()), x)
+           for s, a, b, x in zip(seg.tolist(), src.tolist(), dst.tolist(),
+                                 wt.tolist())]
+    want = [(s, *row) for s, y in enumerate(ys)
+            for row in _opg_ref(y, w, tau, use_q)]
+    assert got == want
+
+
+def _check_qg(series, Q, phi):
+    ys, flat, lengths = _batch(series)
+    seg, e, c = kernels.qg_transitions_segmented(flat, lengths, Q, phi)
+    seg_w, e_w, wt = kernels.qg_edges_segmented(flat, lengths, Q, phi)
+    assert np.array_equal(seg, seg_w) and np.array_equal(e, e_w)
+    got = [(s, a, b, n, x) for s, (a, b), n, x
+           in zip(seg.tolist(), e.tolist(), c.tolist(), wt.tolist())]
+    want = [(s, *row) for s, y in enumerate(ys) for row in _qg_ref(y, Q, phi)]
+    assert got == want
+
+
+finite = hst.one_of(hst.integers(-3, 3).map(float),
+                    hst.floats(-50, 50, allow_nan=False, width=32))
+nonfinite = hst.sampled_from([math.inf, -math.inf, math.nan])
+batches = hst.lists(hst.one_of(
+    hst.lists(finite, max_size=30),
+    hst.lists(hst.one_of(finite, nonfinite), max_size=5),
+    hst.none()), max_size=8)
+
+
+@settings(max_examples=150, deadline=None)
+@given(series=batches, limit=hst.integers(0, 2),
+       angle=hst.sampled_from([None, 0.5]),
+       kind=hst.sampled_from(["natural", "horizontal"]))
+def test_segmented_visibility_equals_per_series(series, limit, angle, kind):
+    _check_visibility(series, kind, limit, angle)
+
+
+@settings(max_examples=150, deadline=None)
+@given(series=batches, w=hst.integers(2, 4), tau=hst.integers(1, 2),
+       use_q=hst.booleans())
+def test_segmented_opg_equals_per_series(series, w, tau, use_q):
+    _check_opg(series, w, tau, use_q)
+
+
+@settings(max_examples=150, deadline=None)
+@given(series=batches, Q=hst.integers(2, 5), phi=hst.integers(1, 3))
+def test_segmented_qg_equals_per_series(series, Q, phi):
+    _check_qg(series, Q, phi)
+
+
+def _long_batch():
+    """Short series with +-inf/NaN at their ends around two long series
+    (> 1024 points, the early-stop regime of the NVG scan; one has a
+    monotone stretch where the stop is never provable)."""
+    r = np.random.default_rng(17)
+    long_a = np.round(r.normal(size=1100), 1)
+    long_b = np.concatenate([r.normal(size=400),
+                             np.sort(r.normal(size=300)) * 10.0,
+                             r.normal(size=400)])
+    return [[math.inf, 1.0, 2.0], long_a.tolist(), [math.nan, 3.0],
+            None, [2.0, -math.inf], [], long_b.tolist(),
+            [math.inf], [1.0, 1.0, math.nan, 1.0, 1.0]]
+
+
+@pytest.mark.parametrize("kind", ["natural", "horizontal"])
+@pytest.mark.parametrize("limit", [0, 2])
+def test_segmented_visibility_long_series(kind, limit):
+    _check_visibility(_long_batch(), kind, limit, None)
+
+
+def test_segmented_opg_qg_long_series():
+    _check_opg(_long_batch(), 3, 1, False)
+    _check_opg(_long_batch(), 4, 2, True)
+    _check_qg(_long_batch(), 4, 1)
+
+
+def test_nonfinite_values_pinned():
+    """The stated behaviour on small cases (extra edges beyond the path)."""
+    def extra(fn, y):
+        return [tuple(p) for p in fn(np.asarray(y, np.float64)).tolist()]
+
+    for fn in (kernels.hvg_edges, kernels.nvg_edges):
+        assert extra(fn, [1.0, math.nan, 1.0]) == []      # NaN blocks
+        assert extra(fn, [1.0, math.inf, 1.0]) == []      # +inf blocks
+        assert extra(fn, [1.0, -math.inf, 1.0]) == [(0, 2)]
+    # a NaN endpoint: HVG sees over what the other endpoint sees over
+    assert extra(kernels.hvg_edges, [math.nan, 0.0, 1.0]) == [(0, 2)]
+    assert extra(kernels.nvg_edges, [math.nan, 0.0, 1.0]) == []
+    e, w = kernels.qg_edges(np.array([1.0, 2.0, math.nan, 3.0]), 2)
+    assert len(e) == len(w) == 0
+
+
+NONFINITE_SERIES = [
+    ("a", [math.inf, 1.0, 2.0, 0.5]), ("b", [1.0, 2.0, 0.0, math.nan]),
+    ("c", None), ("d", [-math.inf, 0.0, 5.0, 1.0, 2.0]), ("e", []),
+    ("f", [2.0, 1.0, 3.0, math.inf]), ("g", [0.0, 2.0, 1.0, 3.0, 2.0]),
+]
+
+
+def test_emitters_on_nonfinite_series(spark):
+    """The Spark emitters keep the pinned non-finite behaviour across
+    Arrow batches of 2 rows: rows equal the per-series kernels."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        df = spark.createDataFrame(
+            NONFINITE_SERIES, "series_key string, values array<double>"
+        ).coalesce(1)
+        for kind in ("natural", "horizontal"):
+            assert _got(graphs.visibility_edges(df, kind=kind)) == \
+                _expected_edges(lambda y: kernels.visibility_graph(
+                    y, kind=kind), NONFINITE_SERIES)
+        assert _got(graphs.opg_edges(df, 3, 1)) == _expected_edges(
+            lambda y: kernels.opg_edges(kernels.ordinal_patterns(y, 3, 1)),
+            NONFINITE_SERIES)
+        got = _got(graphs.qg_edges(df, 2, 1))
+        assert got == _expected_edges(lambda y: kernels.qg_edges(y, 2, 1),
+                                      NONFINITE_SERIES)
+        assert {k for k, *_ in got} == {"g"}
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_segment_runs_cover_rows_within_the_point_budget():
+    """The emitter's kernel calls: consecutive row ranges covering every
+    row once, each within the point budget unless it is one longer row."""
+    lengths = np.array([0, 3, 5, 0, 12, 1, 1, 4, 0])
+    off = np.concatenate(([0], np.cumsum(lengths)))
+    for budget in (1, 4, 6, 13, 100):
+        runs = list(graphs._runs(off, budget))
+        assert [a for a, _ in runs] == [0] + [b for _, b in runs[:-1]]
+        assert runs[-1][1] == len(lengths)
+        assert all(off[b] - off[a] <= budget or b == a + 1 for a, b in runs)
+    assert list(graphs._runs(off, 100)) == [(0, len(lengths))]
+    assert list(graphs._runs(np.array([0]), 10)) == []

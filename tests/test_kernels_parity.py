@@ -292,7 +292,7 @@ def test_proximity_knn_stable_matches_reference_when_untied():
 # r4: output-sensitive visibility kernels vs literal-predicate brute force
 # (the reference-fixture tests above cap at n=120 and only exercise the
 # dense NVG path; these pin the sparse-table HVG enumeration and the
-# n > _NVG_DENSE_N early-stop NVG path against brute force)
+# n > _NVG_DENSE_N segmented NVG scan against brute force)
 # ---------------------------------------------------------------------------
 
 def _brute_hvg(y, limit=0):
@@ -337,18 +337,20 @@ def test_visibility_kernels_vs_brute_force(case, limit):
 
 
 @pytest.mark.parametrize("limit", [0, 2])
-def test_nvg_early_stop_path_matches_dense(limit):
-    """The n > _NVG_DENSE_N chunked early-stop path must emit the same
-    edge set as the dense whole-series scan (same predicate, different
-    physical strategy) — including across a monotone stretch where the
-    suffix-max stop condition is never provable."""
+def test_nvg_segmented_long_series_matches_dense(limit):
+    """A one-series call above _NVG_DENSE_N takes the segmented anchor
+    scan with its suffix-max early stop; it must emit the same edges, in
+    the same order, as the dense whole-series scan (same predicate,
+    different physical strategy) — including across a monotone stretch
+    where the stop condition is never provable."""
     r = np.random.default_rng(5)
     y = np.concatenate([r.normal(size=500),
                         np.sort(r.normal(size=300)) * 10.0,
                         r.normal(size=500)])
-    dense = {tuple(e) for e in kernels._nvg_dense(y, limit).tolist()}
-    fast = {tuple(e) for e in kernels._nvg_early_stop(y, limit).tolist()}
-    assert fast == dense
+    assert len(y) > kernels._NVG_DENSE_N
+    dense = kernels._nvg_dense(y, limit)
+    fast = kernels.nvg_edges(y, limit)
+    assert np.array_equal(fast, dense)
     assert len(dense) > len(y)  # sanity: non-trivial edge count
 
 

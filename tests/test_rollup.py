@@ -557,6 +557,21 @@ def test_gapfill_linear_matches_locf_on_real_rows(spark, gappy_df):
         lin["sum"].min(), lin["sum"].max()).all()
 
 
+@pytest.mark.parametrize("fill", ["null", "linear", "locf"])
+def test_gapfill_computes_its_tier_once(spark, gappy_df, tmp_path, fill):
+    """A tier that is not materialized is read and aggregated once: the
+    gap rows come out of the same windowed pass as the tier rows, with no
+    union of the tier with gaps derived from a second copy of it."""
+    path = str(tmp_path / "tokens")
+    gappy_df.write.parquet(path)
+    tier = rollup_mod.rollup_from_tokens(
+        spark.read.parquet(path), tier="1m", gapfill=False,
+        positions_col="positions")
+    plan = rollup_mod.gapfill(tier, "1m", fill=fill) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1 and "Union" not in plan
+
+
 # ----------------------------------------------- tier-stitched serving
 def test_decompose_range_covers_exactly():
     rng = np.random.default_rng(7)

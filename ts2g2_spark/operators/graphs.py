@@ -3,15 +3,23 @@
 Data contract — the "series frame": (series_key string, values
 array<double>).  A series is row-local (one row = one whole series or one
 segment), so every kernel below is one `mapInArrow` over Arrow batches with
-ZERO shuffle, sharing one emitter (`_map_series`): it reads a batch's
-`values` lengths and flat float64 buffer once, runs the numpy kernel from
-`kernels` once per series on a slice of that buffer, and builds the output
-batch column-wise (series_key gathered with `take`, numeric columns with
-`pa.array`) — no pandas and no per-edge Python objects.  Edges come out as
-rows keyed by series_key; adjacency is data, never a driver-side object
-(SURVEY §1.2).  A null `values` row yields no output rows.  A table that
-arrives as one row per point becomes a series frame with
-`series_from_points` (one groupBy).
+ZERO shuffle.  Both emitters read a batch's `values` lengths and flat
+float64 buffer once and build the output batch column-wise (series_key
+gathered with `take`, numeric columns with `pa.array`) — no pandas and no
+per-edge Python objects:
+
+- `_map_segments` runs one segmented kernel from `kernels` over the whole
+  batch (the flat buffer plus the series lengths), so numpy's per-call
+  cost is paid once per batch, not once per series.  The HVG, NVG, OPG and
+  QG edge sets (`visibility_edges`, `opg_edges`, `qg_edges`) use it.
+- `_map_series` runs a per-series kernel once per series on a slice of
+  that buffer.  `proximity_edges`, `histogram`, `opg_edges_multivariate`
+  and the `graphmetrics` `*_from_series` metrics still use it.
+
+Edges come out as rows keyed by series_key; adjacency is data, never a
+driver-side object (SURVEY §1.2).  A null `values` row yields no output
+rows.  A table that arrives as one row per point becomes a series frame
+with `series_from_points` (one groupBy).
 """
 
 from __future__ import annotations
@@ -31,7 +39,58 @@ PAT_EDGE_SCHEMA = (
 )
 
 
-# ---------------------------------------------------------------- emitter
+# --------------------------------------------------------------- emitters
+#: most points one segmented kernel call takes: a batch's rows are cut into
+#: runs of at most this many points (a longer series runs alone), which
+#: bounds kernel scratch such as HVG's ~log2(n) sparse-table levels
+_SEGMENT_POINTS = 1 << 18
+
+
+def _map_segments(
+    df: DataFrame,
+    schema: str,
+    kernel: Callable[[np.ndarray, np.ndarray],
+                     tuple[np.ndarray, dict[str, pa.Array]]],
+) -> DataFrame:
+    """Map-only mapInArrow over `df` with one segmented kernel call per
+    Arrow batch (per run of _SEGMENT_POINTS points).
+
+    kernel(values, lengths) gets the run's flat float64 `values` buffer and
+    its row lengths (a null row has length 0) and returns (seg, columns):
+    the row of each output row, in output order, and the output columns
+    after series_key, which is gathered from the input with one `take`."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            arr = batch.column("values")
+            lengths = arr.value_lengths().fill_null(0).to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            values = np.asarray(arr.flatten().to_numpy(zero_copy_only=False),
+                                np.float64)  # flatten skips null rows
+            off = np.concatenate(([0], np.cumsum(lengths)))
+            for a, b in _runs(off, _SEGMENT_POINTS):
+                seg, cols = kernel(values[off[a]:off[b]], lengths[a:b])
+                if len(seg):
+                    yield pa.RecordBatch.from_pydict({
+                        "series_key": batch.column("series_key").take(
+                            seg + a),
+                        **cols,
+                    })
+
+    return df.mapInArrow(run, schema=schema)
+
+
+def _runs(off: np.ndarray, max_points: int) -> Iterator[tuple[int, int]]:
+    """Consecutive row ranges [a, b) covering every row (row offsets
+    `off`), each of at most max_points points or a single row."""
+    a = 0
+    while a < len(off) - 1:
+        b = max(int(np.searchsorted(off, off[a] + max_points, "right")) - 1,
+                a + 1)
+        yield a, b
+        a = b
+
+
 def _slices(arr: pa.Array) -> list:
     """Each row of a list<double> column as a float64 slice of one flat
     buffer, None for a null row; a list<list<double>> row becomes a list of
@@ -55,13 +114,14 @@ def _map_series(
     build: Callable[[list], dict[str, pa.Array]],
     col: str = "values",
 ) -> DataFrame:
-    """The one emitter of this module: a map-only mapInArrow over `df`.
+    """The per-series emitter: a map-only mapInArrow over `df`.
 
     Per Arrow batch, kernel(y) runs once per non-null `col` row (a null row
     yields nothing) and returns a tuple of arrays whose first axis is that
     series' output rows; build(results) turns the batch's results into the
     output columns after series_key, which is gathered from the input with
-    one `take`."""
+    one `take`.  Used by the kernels that have no segmented form yet
+    (proximity, histogram, multivariate OPG, the graphmetrics metrics)."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -81,16 +141,21 @@ def _map_series(
     return df.mapInArrow(run, schema=schema)
 
 
-def _edge_columns(parts: list) -> dict[str, pa.Array]:
-    """(edges[m, 2], weights[m]) per series -> src, dst, weight.  A NaN
-    weight becomes null (an unweighted edge)."""
-    e = np.concatenate([p[0] for p in parts]).reshape(-1, 2)
+def _edge_arrays(e: np.ndarray, w: np.ndarray) -> dict[str, pa.Array]:
+    """edges[m, 2], weights[m] -> src, dst, weight.  A NaN weight becomes
+    null (an unweighted edge)."""
+    e = e.reshape(-1, 2)
     return {
         "src": pa.array(e[:, 0], pa.int64()),
         "dst": pa.array(e[:, 1], pa.int64()),
-        "weight": pa.array(np.concatenate([p[1] for p in parts]),
-                           pa.float64(), from_pandas=True),
+        "weight": pa.array(w, pa.float64(), from_pandas=True),
     }
+
+
+def _edge_columns(parts: list) -> dict[str, pa.Array]:
+    """(edges[m, 2], weights[m]) per series -> src, dst, weight."""
+    return _edge_arrays(np.concatenate([p[0] for p in parts]),
+                        np.concatenate([p[1] for p in parts]))
 
 
 def _pattern_strings(mats: list[np.ndarray]) -> pa.Array:
@@ -103,10 +168,10 @@ def _pattern_strings(mats: list[np.ndarray]) -> pa.Array:
         pats[a:a + len(m), :m.shape[1]] = m
     if not len(pats):
         return pa.array([], pa.string())
-    uniq, inv = np.unique(pats, axis=0, return_inverse=True)
+    inv, uniq = kernels._row_ids(pats)
     text = pa.array([",".join(str(r) for r in row if r >= 0)
                      for row in uniq.tolist()], pa.string())
-    return text.take(inv.reshape(-1))
+    return text.take(inv)
 
 
 def _pattern_edge_columns(parts: list) -> dict[str, pa.Array]:
@@ -227,29 +292,38 @@ def visibility_edges(
     weight_abs: bool = True,
 ) -> DataFrame:
     """NVG/HVG (+angle constraint, +angle weighting) edge rows.
-    Map-only; per-series cost O(n^2) worst-case vectorized (reference is
-    O(n^3) Python: to_graph/strategies.py:527-540)."""
+    Map-only, one segmented kernel call per Arrow batch; per-series cost
+    O(n^2) worst-case vectorized (reference is O(n^3) Python:
+    to_graph/strategies.py:527-540)."""
 
-    def kernel(y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        return kernels.visibility_graph(
-            y, kind=kind, limit=limit, angle=angle, angle_abs=angle_abs,
-            weighted=weighted, weight_abs=weight_abs)
+    def kernel(values: np.ndarray, lengths: np.ndarray):
+        seg, e, w = kernels.visibility_graph_segmented(
+            values, lengths, kind=kind, limit=limit, angle=angle,
+            angle_abs=angle_abs, weighted=weighted, weight_abs=weight_abs)
+        return seg, _edge_arrays(e, w)
 
-    return _map_series(df, EDGE_SCHEMA, kernel, _edge_columns)
+    return _map_segments(df, EDGE_SCHEMA, kernel)
 
 
 # ------------------------------------------- ordinal partition (G6/G7)
 def opg_edges(
     df: DataFrame, w: int, tau: int, use_quantiles: bool = False, Q: int = 4
 ) -> DataFrame:
-    """Ordinal-partition transition edges per series (kernel path).
-    Patterns serialized as comma-joined rank strings."""
+    """Ordinal-partition transition edges per series, one segmented kernel
+    call per Arrow batch.  Patterns serialized as comma-joined rank
+    strings, each distinct pattern formatted once."""
 
-    def kernel(y: np.ndarray) -> tuple[np.ndarray, ...]:
-        return kernels.opg_edges(kernels.ordinal_patterns(
-            y, w, tau, use_quantiles=use_quantiles, Q=Q))
+    def kernel(values: np.ndarray, lengths: np.ndarray):
+        seg, pats, src, dst, wt = kernels.opg_edges_segmented(
+            *kernels.ordinal_patterns_segmented(
+                values, lengths, w, tau, use_quantiles=use_quantiles, Q=Q))
+        text = pa.array([",".join(map(str, r)) for r in pats.tolist()],
+                        pa.string())
+        return seg, {"src_pattern": text.take(src),
+                     "dst_pattern": text.take(dst),
+                     "weight": pa.array(wt, pa.float64())}
 
-    return _map_series(df, PAT_EDGE_SCHEMA, kernel, _pattern_edge_columns)
+    return _map_segments(df, PAT_EDGE_SCHEMA, kernel)
 
 
 def opg_edges_multivariate(df: DataFrame, w: int, tau: int) -> DataFrame:
@@ -272,26 +346,29 @@ def qg_edges(
     df: DataFrame, Q: int, phi: int = 1, counts: bool = False
 ) -> DataFrame:
     """Quantile-graph transition edges per series (G8): (series_key, src,
-    dst, weight) with weight = count / transitions out of src.
+    dst, weight) with weight = count / transitions out of src, one
+    segmented kernel call per Arrow batch.  A series holding a NaN or
+    +-inf has no edges (its quantile bins are undefined).
 
     counts=True returns the raw integer transition counts as `w` (long)
     instead of `weight` — the exact integer form `generate.hash_walks`
     needs for its modular weighted choice (integer arithmetic end to end,
     no float weight on the walk path)."""
     if not counts:
-        return _map_series(df, EDGE_SCHEMA,
-                           lambda y: kernels.qg_edges(y, Q, phi),
-                           _edge_columns)
+        def kernel(values: np.ndarray, lengths: np.ndarray):
+            seg, e, w = kernels.qg_edges_segmented(values, lengths, Q, phi)
+            return seg, _edge_arrays(e, w)
 
-    def build(parts: list) -> dict[str, pa.Array]:
-        e = np.concatenate([p[0] for p in parts]).reshape(-1, 2)
-        return {"src": pa.array(e[:, 0], pa.int64()),
-                "dst": pa.array(e[:, 1], pa.int64()),
-                "w": pa.array(np.concatenate([p[1] for p in parts]),
-                              pa.int64())}
+        return _map_segments(df, EDGE_SCHEMA, kernel)
 
-    return _map_series(df, "series_key string, src long, dst long, w long",
-                       lambda y: kernels.qg_transitions(y, Q, phi), build)
+    def count_kernel(values: np.ndarray, lengths: np.ndarray):
+        seg, e, c = kernels.qg_transitions_segmented(values, lengths, Q, phi)
+        return seg, {"src": pa.array(e[:, 0], pa.int64()),
+                     "dst": pa.array(e[:, 1], pa.int64()),
+                     "w": pa.array(c, pa.int64())}
+
+    return _map_segments(df, "series_key string, src long, dst long, w long",
+                         count_kernel)
 
 
 # ------------------------------------------------- proximity (G11-G15)

@@ -1,8 +1,10 @@
 """Pure-numpy per-segment kernels with exact ts2g2 output parity.
 
 These are the vectorized compute cores that run inside Arrow batches
-(``mapInPandas`` / ``applyInPandas``) on executors.  Each kernel consumes one
-segment (a 1-D float64 array) and emits edge tuples.  Parity contract: the
+(``mapInArrow`` / ``applyInPandas``) on executors.  The HVG, NVG, OPG and
+QG edge-set kernels consume a whole batch of series (one flat float64
+buffer plus the series lengths) per call; every other kernel consumes one
+series (a 1-D float64 array) and emits edge tuples.  Parity contract: the
 edge SET (and, where the reference is deterministic, the weights) must equal
 what zangrcar/ts2g2 produces for the same input.  Reference semantics are
 cited by file:line; no reference code is copied — the reference computes the
@@ -27,19 +29,116 @@ _BOUNDARY_RTOL = 1e-9
 
 
 # ---------------------------------------------------------------------------
+# Segmented batches
+# ---------------------------------------------------------------------------
+# The edge-set kernels below (HVG, NVG, OPG, QG) take a whole Arrow batch of
+# series at once: one flat float64 buffer `values` plus the series lengths,
+# segment s being values[off[s] : off[s + 1]].  Each runs one vectorized
+# pass over the batch and clips every scan to its own segment, so no edge
+# pairs points of two series whatever the values next to a boundary are.
+# They return the segment index of each output row, rows ordered by
+# (segment, then the per-series order).  The per-series kernels are
+# one-segment calls of them.
+
+
+_NO_PAIRS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
+
+
+def _offsets(lengths) -> np.ndarray:
+    """Segment start offsets, with the total appended (int64)."""
+    lengths = np.asarray(lengths, dtype=np.int64)
+    return np.concatenate(([0], np.cumsum(lengths))).astype(np.int64)
+
+
+def _row_ids(rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Dense lexicographic ids of the rows of an int matrix: (ids, uniq)
+    with uniq[ids] == rows and uniq sorted lexicographically -- the rows
+    and inverse of np.unique(rows, axis=0) without its void-record sort.
+
+    The columns pack into one mixed-radix int64 key, first column most
+    significant, so the keys sort as the rows do.  When the next column
+    would overflow int64, the key so far is first replaced by its dense
+    rank (< len(rows)), so the key fits whenever len(rows) times each
+    column's value range does."""
+    key = np.zeros(len(rows), dtype=np.int64)
+    if not len(rows):
+        return key, rows[:0]
+    span = 1
+    for col in rows.T:
+        lo = int(col.min())
+        r = int(col.max()) - lo + 1
+        if span * r >= 1 << 63:
+            uniq, key = np.unique(key, return_inverse=True)
+            span = len(uniq)
+        key = key * r + (col - lo)
+        span *= r
+    uniq, ids = np.unique(key, return_inverse=True)
+    out = np.empty((len(uniq), rows.shape[1]), dtype=rows.dtype)
+    out[ids] = rows
+    return ids, out
+
+
+# ---------------------------------------------------------------------------
 # Visibility graphs  (ref: to_graph/strategies.py:479-546, 581-695, 698-751)
 # ---------------------------------------------------------------------------
+#
+# Non-finite values go through the same float64 comparisons as finite ones
+# (pinned in tests/test_graph_emitters.py): +-inf are ordinary ordered
+# values, and a NaN fails every comparison, so no line of sight passes over
+# it.  Under HVG a NaN endpoint sees what the other endpoint sees over;
+# under NVG a NaN endpoint sees nothing beyond its path edges.
 
-#: segments up to this length take the dense whole-series NVG path (one
-#: 2-D numpy pass per segment, ~8n^2 bytes of scratch); longer segments
-#: take the per-anchor early-stop path, which is output-sensitive for
-#: stationary series (each anchor's scan halts once the running obstructor
-#: slope provably clears the suffix maximum).
+#: a one-series call of at most this many points takes the dense NVG scan
+#: (one 2-D numpy pass, ~8n^2 bytes of scratch); batches and longer series
+#: take the segmented anchor scan, which needs ~n numpy steps per call.
+#: Measured on one core, 800 series x <=200 points: 770 ms as dense
+#: per-series calls, 3079 ms as one-segment calls of the segmented scan,
+#: 99 ms as one batched call (SCALE.md).
 _NVG_DENSE_N = 1024
 
 
 def nvg_edges(y: np.ndarray, limit: int = 0) -> np.ndarray:
-    """Natural visibility graph extra edges (beyond the path graph).
+    """Natural visibility graph extra edges (beyond the path graph) of one
+    series: the dense scan up to _NVG_DENSE_N points, else a one-segment
+    call of nvg_edges_segmented (same predicate and boundary recheck)."""
+    y = np.asarray(y, dtype=np.float64)
+    if len(y) < 3:
+        return np.empty((0, 2), dtype=np.int64)
+    if len(y) <= _NVG_DENSE_N:
+        return _nvg_dense(y, limit)
+    return np.stack(nvg_edges_segmented(y, [len(y)], limit), axis=1)
+
+
+def _nvg_dense(y: np.ndarray, limit: int) -> np.ndarray:
+    """Whole-series NVG scan: row i of the matrices IS anchor i's
+    slope/prefix-max scan of nvg_edges_segmented, one numpy pass for all
+    anchors."""
+    n = len(y)
+    idx = np.arange(n, dtype=np.int64)
+    dist = idx[None, :] - idx[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        S = (y[None, :] - y[:, None]) / dist
+        obstr = np.where(dist >= limit + 1, S, -np.inf)
+        # M[i, j] = max over obstructors k strictly before j (exclusive
+        # row-wise prefix max; lower triangle is -inf so it never leaks in)
+        M = np.full((n, n), -np.inf)
+        np.maximum.accumulate(obstr[:, :-1], axis=1, out=M[:, 1:])
+        cand = dist >= 2  # path edges handled by the caller
+        tol = _BOUNDARY_RTOL * (np.abs(M) + np.abs(S) + 1.0)
+        visible = M < S - tol
+        boundary = cand & ~visible & (M <= S + tol)
+        for i, j in zip(*np.nonzero(boundary)):
+            visible[i, j] = not _nvg_obstructed_ref(y, int(i), int(j), limit)
+    ii, jj = np.nonzero(cand & visible)
+    if not len(ii):
+        return np.empty((0, 2), dtype=np.int64)
+    return np.stack([ii, jj], axis=1).astype(np.int64)
+
+
+def nvg_edges_segmented(values: np.ndarray, lengths,
+                        limit: int = 0) -> tuple[np.ndarray, np.ndarray]:
+    """Natural visibility graph extra edges (beyond the path graph) of
+    every segment: (src, dst) flat-buffer indices, sorted by (src, dst).
 
     Reference predicate (to_graph/strategies.py:627-635): pair (x1,x2) is
     obstructed iff any intermediate point (x, y) with x in
@@ -48,112 +147,65 @@ def nvg_edges(y: np.ndarray, limit: int = 0) -> np.ndarray:
     SKIPS the first ``limit`` intermediates (it does not gate pair distance),
     so all pairs with x2-x1 <= limit+1 are unconditionally visible.
 
-    Fast path: visible(i,j) iff max_{k in window}(slope(i,k)) <= slope(i,j)
-    (mathematically equivalent).  Two physical strategies share that
-    predicate and the boundary-recheck contract (pairs within a relative
-    tolerance of the max are re-decided with the reference-literal
-    expression so boundary bits match exactly):
+    Fast path: visible(i,j) iff M < S, with S = slope(i,j) and M the
+    running max of slope(i,k) over the obstructors k (mathematically
+    equivalent); pairs within a relative tolerance of the max are re-decided
+    with the reference-literal expression, so boundary bits match exactly.
 
-    - n <= _NVG_DENSE_N: one whole-series 2-D scan (slope matrix +
-      exclusive row-wise running max) — no per-anchor Python loop, which
-      dominates at the short segment lengths produced by typical
-      segmentation (r4 rewrite; was a per-anchor loop).
-    - n > _NVG_DENSE_N: per-anchor scan in geometrically growing chunks
-      with a suffix-max EARLY STOP: once the running obstructor slope m
-      satisfies m > max(suffix_max - y_i, 0)/(j - i) by a 1e-6 relative
-      guard (1000x the recheck band), no later j can be visible or land
-      in the recheck band, so the anchor's scan halts.  Expected cost is
-      O(visible extent) per anchor on stationary series; worst case
-      O(n^2) only when the output itself is Theta(n^2) (e.g. convex
-      series, where every pair is an edge).
-
-    Returns int64 array (m, 2) of (src, dst) with src < dst, excluding the
-    path-graph edges (j == i+1), which the caller always includes.
+    Every anchor of the batch advances together: step d tests j = i + d
+    for all active anchors.  An anchor drops out at its segment end, or
+    once the running max m satisfies m > max(smax - y_i, 0)/(j - i) by a
+    1e-6 relative guard (1000x the recheck band), smax being the
+    segment-local suffix max from j on: every later slope is then below m,
+    so no later j is visible or lands in the recheck band.  The steps run
+    to the longest visible extent; on stationary series that is far below
+    the series length, and it reaches it only when the output itself is
+    Theta(n^2) (e.g. convex series, where every pair is an edge).
     """
+    y = np.asarray(values, dtype=np.float64)
+    off = _offsets(lengths)
     n = len(y)
     if n < 3:
-        return np.empty((0, 2), dtype=np.int64)
-    y = np.asarray(y, dtype=np.float64)
-    if n <= _NVG_DENSE_N:
-        return _nvg_dense(y, limit)
-    return _nvg_early_stop(y, limit)
-
-
-def _nvg_dense(y: np.ndarray, limit: int) -> np.ndarray:
-    """Whole-series NVG scan: same comparisons as the per-anchor loop
-    (row i of the matrices IS that anchor's slope/prefix-max scan), one
-    numpy pass for all anchors."""
-    n = len(y)
-    idx = np.arange(n, dtype=np.int64)
-    dist = idx[None, :] - idx[:, None]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        S = (y[None, :] - y[:, None]) / dist
-    obstr = np.where(dist >= limit + 1, S, -np.inf)
-    # M[i, j] = max over obstructors k strictly before j (exclusive
-    # row-wise prefix max; lower triangle is -inf so it never leaks in)
-    M = np.full((n, n), -np.inf)
-    np.maximum.accumulate(obstr[:, :-1], axis=1, out=M[:, 1:])
-    cand = dist >= 2  # path edges handled by the caller
-    tol = _BOUNDARY_RTOL * (np.abs(M) + np.abs(S) + 1.0)
-    visible = M < S - tol
-    boundary = cand & ~visible & (M <= S + tol)
-    for i, j in zip(*np.nonzero(boundary)):
-        visible[i, j] = not _nvg_obstructed_ref(y, int(i), int(j), limit)
-    ii, jj = np.nonzero(cand & visible)
-    if not len(ii):
-        return np.empty((0, 2), dtype=np.int64)
-    return np.stack([ii, jj], axis=1).astype(np.int64)
-
-
-def _nvg_early_stop(y: np.ndarray, limit: int) -> np.ndarray:
-    """Per-anchor NVG scan for long segments: geometrically growing
-    chunks + the suffix-max early stop (see nvg_edges docstring).
-
-    Safety of the stop: every obstructor/candidate slope from j0 onward
-    is <= slope_ub = max(smax[j0] - y_i, 0)/(j0 - i) (positive numerators
-    shrink with distance; non-positive slopes are < m > 0 outright), so
-    the running max M stays exactly m and M - slope > guard keeps every
-    skipped pair outside both the visible test and the recheck band."""
-    n = len(y)
-    smax = np.maximum.accumulate(y[::-1])[::-1]  # smax[j] = max(y[j:])
-    out: list[np.ndarray] = []
-    for i in range(n - 2):
-        m = -np.inf
-        j0, chunk = i + 1, 64
-        while j0 < n:
-            j1 = min(n, j0 + chunk)
-            js = np.arange(j0, j1)
-            slopes = (y[j0:j1] - y[i]) / (js - i)
-            obstr = np.where(js - i >= limit + 1, slopes, -np.inf)
-            M = np.empty_like(obstr)
-            M[0] = m
-            if len(obstr) > 1:
-                np.maximum.accumulate(obstr[:-1], out=M[1:])
-                np.maximum(M[1:], m, out=M[1:])
-            cand = js >= i + 2
-            tol = _BOUNDARY_RTOL * (np.abs(M) + np.abs(slopes) + 1.0)
-            visible = M < slopes - tol
-            boundary = cand & ~visible & (M <= slopes + tol)
-            for t in np.nonzero(boundary)[0]:
-                visible[t] = not _nvg_obstructed_ref(y, i, int(j0 + t),
-                                                     limit)
-            sel = np.nonzero(cand & visible)[0]
-            if len(sel):
-                e = np.empty((len(sel), 2), dtype=np.int64)
-                e[:, 0] = i
-                e[:, 1] = j0 + sel
-                out.append(e)
-            if len(obstr):
-                m = max(m, float(obstr.max()))
-            j0, chunk = j1, min(chunk * 4, 65536)
-            if j0 < n and m > 0.0:
-                slope_ub = max(smax[j0] - y[i], 0.0) / (j0 - i)
-                guard = 1e-6 * (abs(m) + abs(slope_ub) + 1.0)
-                if m > slope_ub + guard:
-                    break
-    if not out:
-        return np.empty((0, 2), dtype=np.int64)
-    return np.concatenate(out)
+        return _NO_PAIRS
+    seg = np.repeat(np.arange(len(off) - 1), np.diff(off))
+    start, end = off[seg], off[seg + 1]
+    pos = np.arange(n, dtype=np.int64)
+    # max(y[q : end_q]), the segment-local suffix max
+    smax = _range_max(_range_max_table(y, np.diff(off).max()), pos, end)
+    p = np.flatnonzero(pos + 2 < end)  # anchors with a candidate pair
+    yp, e, m = y[p], end[p], np.full(len(p), -np.inf)
+    src: list[np.ndarray] = []
+    dst: list[np.ndarray] = []
+    d = 1
+    with np.errstate(invalid="ignore"):
+        while len(p):
+            j = p + d
+            S = (y[j] - yp) / d
+            if d >= 2:
+                tol = _BOUNDARY_RTOL * (np.abs(m) + np.abs(S) + 1.0)
+                visible = m < S - tol
+                for t in np.flatnonzero(~visible & (m <= S + tol)):
+                    a = start[p[t]]
+                    visible[t] = not _nvg_obstructed_ref(
+                        y[a:e[t]], int(p[t] - a), int(j[t] - a), limit)
+                src.append(p[visible])
+                dst.append(j[visible])
+            if d >= limit + 1:
+                m = np.maximum(m, S)
+            j0 = j + 1
+            live = j0 < e
+            ub = np.maximum(smax[np.where(live, j0, j)] - yp, 0.0) / (d + 1)
+            live &= ~((m > 0.0)
+                      & (m > ub + 1e-6 * (np.abs(m) + np.abs(ub) + 1.0)))
+            if not live.all():
+                p, yp, e, m = p[live], yp[live], e[live], m[live]
+            d += 1
+    if not src:
+        return _NO_PAIRS
+    s = np.concatenate(src)
+    # each step's sources ascend, so the stable sort merges d-ordered runs
+    order = np.argsort(s, kind="stable")
+    return s[order], np.concatenate(dst)[order]
 
 
 def _nvg_obstructed_ref(y: np.ndarray, x1: int, x2: int, limit: int) -> bool:
@@ -168,12 +220,17 @@ def _nvg_obstructed_ref(y: np.ndarray, x1: int, x2: int, limit: int) -> bool:
     return bool(np.any(y[x1 + limit + 1: x2] > slope * ks + offset))
 
 
-def _range_max_table(y: np.ndarray) -> list[np.ndarray]:
-    """Sparse range-max table: T[l][k] = max(y[k : k + 2**l])."""
+def _range_max_table(y: np.ndarray,
+                     span: int | None = None) -> list[np.ndarray]:
+    """Sparse range-max table: T[l][k] = max(y[k : k + 2**l]), for the
+    levels with 2**l <= span (default len(y)).  Queries that never reach
+    past `span` points -- those clipped to a segment of at most `span`
+    points -- need no higher level."""
     n = len(y)
+    span = n if span is None else span
     T = [y]
     level = 1
-    while (1 << level) <= n:
+    while (1 << level) <= min(n, span):
         prev = T[-1]
         half = 1 << (level - 1)
         T.append(np.maximum(prev[: len(prev) - half], prev[half:]))
@@ -181,16 +238,32 @@ def _range_max_table(y: np.ndarray) -> list[np.ndarray]:
     return T
 
 
+def _range_max(T: list[np.ndarray], lo: np.ndarray,
+               hi: np.ndarray) -> np.ndarray:
+    """max(y[lo[q] : hi[q]]) per query (hi > lo): two overlapping 2**l
+    blocks of the sparse table, l = floor(log2(hi - lo))."""
+    level = np.frexp((hi - lo).astype(np.float64))[1] - 1
+    out = np.empty(len(lo))
+    for lv in np.unique(level).tolist():
+        q = level == lv
+        out[q] = np.maximum(T[lv][lo[q]], T[lv][hi[q] - (1 << lv)])
+    return out
+
+
 def _first_greater(T: list[np.ndarray], starts: np.ndarray,
                    targets: np.ndarray, n: int) -> np.ndarray:
     """Vectorized sparse-table walk: for each query, the first index
-    k >= starts[q] with y[k] > targets[q] (strict), else n.
+    k >= starts[q] with NOT y[k] <= targets[q] (y[k] > targets[q] for
+    non-NaN operands), else n.
 
     One pass from the highest level down: a 2**l block starting at the
     cursor is skipped iff its max <= target.  The cursor then advances by
     exactly the binary decomposition of (first violator - start), so a
-    single attempt per level suffices.  Comparisons are plain float64
-    max/compare — bit-identical to the reference's strict-> predicate."""
+    single attempt per level suffices.  With levels up to L the walk
+    reaches 2**(L+1) - 1 points past the start; beyond that it stops short
+    of the first violator, which a caller clipping to a segment of at most
+    2**(L+1) - 1 points never sees.  Comparisons are plain float64
+    max/compare -- bit-identical to the reference's strict-> predicate."""
     cur = np.minimum(starts, n).astype(np.int64)
     for level in range(len(T) - 1, -1, -1):
         width = 1 << level
@@ -210,60 +283,71 @@ def _ragged_offsets(cnt: np.ndarray) -> np.ndarray:
 
 
 def hvg_edges(y: np.ndarray, limit: int = 0) -> np.ndarray:
-    """Horizontal visibility graph extra edges (beyond the path graph).
+    """Horizontal visibility graph extra edges (beyond the path graph) of
+    one series, (src, dst) rows: a one-segment call of
+    hvg_edges_segmented."""
+    y = np.asarray(y, dtype=np.float64)
+    return np.stack(hvg_edges_segmented(y, [len(y)], limit), axis=1)
+
+
+def hvg_edges_segmented(values: np.ndarray, lengths,
+                        limit: int = 0) -> tuple[np.ndarray, np.ndarray]:
+    """Horizontal visibility graph extra edges (beyond the path graph) of
+    every segment: (src, dst) flat-buffer indices, sorted by (src, dst).
 
     Reference predicate (to_graph/strategies.py:687-692): obstructed iff any
     intermediate (skipping the first ``limit`` after the left endpoint) has
     y > max(y1, y2) (strict).  max/compare are exact in float64, so no
     boundary recheck is needed.
 
-    Output-sensitive enumeration, O(n log n + E) per segment (r4 rewrite;
-    was an O(n^2) per-anchor prefix-max loop).  A pair (i, j) is visible
-    iff max(y[i+limit+1 : j]) <= max(y_i, y_j), which splits by which
-    endpoint dominates:
+    Output-sensitive enumeration, O(N log N + E) per batch.  A pair (i, j)
+    is visible iff every intermediate of y[i+limit+1 : j] is <= y_i or
+    every one is <= y_j, which splits by which endpoint dominates:
 
-    - case A (interior max <= y_j): holds iff the LAST k < j with
-      y_k > y_j sits at or before i+limit, i.e. i >= prev_greater(j) -
-      limit — a contiguous i-run per j.
-    - case B (interior max <= y_i): holds iff the FIRST k >= i+limit+1
-      with y_k > y_i sits at or after j, i.e. j <= next_greater_lim(i) —
-      a contiguous j-run per i.
+    - case B (all <= y_i): holds iff the FIRST k >= i+limit+1 with
+      NOT y_k <= y_i sits at or after j, i.e. j <= next_greater(i) -- a
+      contiguous j-run per i, next_greater clipped to the segment end.
+    - case A (all <= y_j): holds iff the LAST such k < j sits at or before
+      i+limit, i.e. i >= prev_greater(j) - limit -- a contiguous i-run
+      per j, prev_greater clipped to the segment start.
 
-    Every visible pair is in A or B (its larger endpoint's case), every
-    A/B pair is visible, and both runs enumerate with repeat/arange; the
-    A-union-B overlap dedups through one np.unique on i*n+j keys (which
-    also yields the (src, dst)-lexicographic output order).  prev/next
-    greater indices come from the vectorized sparse-table walk, so there
-    is no per-anchor Python loop.  E itself is Theta(n^2) on monotone
-    runs (under this predicate every pair in a run is visible), so
+    Both runs enumerate with repeat/arange.  The A pairs that B's run
+    already holds (j <= B's bound of i) are dropped, and the rest merge
+    into B's (src, dst)-sorted keys.  prev/next greater indices come from
+    the vectorized sparse-table walk over the whole buffer, so there is no
+    per-anchor Python loop.  E itself is Theta(n^2) on monotone runs
+    (under this predicate every pair in a run is visible), so
     output-sensitive is the optimal shape.
     """
+    y = np.asarray(values, dtype=np.float64)
+    off = _offsets(lengths)
     n = len(y)
     if n < 3:
-        return np.empty((0, 2), dtype=np.int64)
-    y = np.asarray(y, dtype=np.float64)
-    T = _range_max_table(y)
+        return _NO_PAIRS
+    seg = np.repeat(np.arange(len(off) - 1), np.diff(off))
+    start, end = off[seg], off[seg + 1]
+    span = np.diff(off).max()
     idx = np.arange(n, dtype=np.int64)
-    # case B: first violator k >= i+limit+1 with y_k > y_i
-    nxt = _first_greater(T, idx + limit + 1, y, n)
-    jmax = np.minimum(nxt, n - 1)
+    # case B: first violator k >= i+limit+1, clipped to the segment end
+    nxt = _first_greater(_range_max_table(y, span), idx + limit + 1, y, n)
+    jmax = np.minimum(nxt, end - 1)
     cnt_b = np.maximum(jmax - idx - 1, 0)
     src_b = np.repeat(idx, cnt_b)
-    dst_b = src_b + 2 + _ragged_offsets(cnt_b)
-    # case A: last violator k < j with y_k > y_j, via the reversed array
+    key_b = src_b * n + src_b + 2 + _ragged_offsets(cnt_b)
+    # case A: last violator k < j, via the reversed buffer, clipped to the
+    # segment start (start - 1 = none)
     z = y[::-1]
-    Tz = _range_max_table(z)
-    nxt_z = _first_greater(Tz, (n - 1 - idx) + 1, z[n - 1 - idx], n)
-    prev = n - 1 - nxt_z  # nxt_z == n -> -1 (no violator)
-    imin = np.maximum(prev - limit, 0)
+    nxt_z = _first_greater(_range_max_table(z, span), n - idx, y, n)
+    prev = np.maximum(n - 1 - nxt_z, start - 1)
+    imin = np.maximum(prev - limit, start)
     cnt_a = np.maximum((idx - 2) - imin + 1, 0)
     dst_a = np.repeat(idx, cnt_a)
     src_a = np.repeat(imin, cnt_a) + _ragged_offsets(cnt_a)
-    key = np.concatenate([src_b * n + dst_b, src_a * n + dst_a])
-    if not len(key):
-        return np.empty((0, 2), dtype=np.int64)
-    key = np.unique(key)
-    return np.stack([key // n, key % n], axis=1).astype(np.int64)
+    a_only = dst_a > jmax[src_a]
+    key_a = np.sort(src_a[a_only] * n + dst_a[a_only])
+    # two sorted runs: the stable (merge) sort joins them in linear time
+    key = np.sort(np.concatenate([key_b, key_a]), kind="stable")
+    return key // n, key % n
 
 
 def visibility_graph(
@@ -275,8 +359,29 @@ def visibility_graph(
     weighted: bool = False,
     weight_abs: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Full visibility graph: path edges + visibility edges, optional angle
-    constraint and angle edge weights.
+    """Full visibility graph of one series: a one-segment call of
+    visibility_graph_segmented.  Returns (edges[m,2] int64 sorted
+    (src,dst), weights[m] float64 -- NaN where the edge exists unweighted,
+    i.e. a path edge the scan rejected)."""
+    y = np.asarray(y, dtype=np.float64)
+    _, e, w = visibility_graph_segmented(
+        y, [len(y)], kind=kind, limit=limit, angle=angle,
+        angle_abs=angle_abs, weighted=weighted, weight_abs=weight_abs)
+    return e, w
+
+
+def visibility_graph_segmented(
+    values: np.ndarray,
+    lengths,
+    kind: str = "natural",
+    limit: int = 0,
+    angle: float | None = None,
+    angle_abs: bool = True,
+    weighted: bool = False,
+    weight_abs: bool = True,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Full visibility graph of every segment: path edges + visibility
+    edges, optional angle constraint and angle edge weights.
 
     Mirrors TimeseriesToGraphStrategy.to_graph (to_graph/strategies.py:
     490-542): the path graph over 0..n-1 is ALWAYS present; the pairwise
@@ -285,55 +390,53 @@ def visibility_graph(
     visibility_angle (abs variants).  Edge weight (strategies.py:24-29) is
     atan((y2-y1)/(x2-x1)), optionally abs.
 
-    Returns (edges[m,2] int64 sorted (src,dst), weights[m] float64 — NaN
-    where the edge exists unweighted, i.e. a path edge the scan rejected).
+    Returns (seg[m], edges[m,2] int64 segment-local, weights[m] float64 --
+    NaN where the edge exists unweighted, i.e. a path edge the scan
+    rejected), sorted by (seg, src, dst).
     """
-    n = len(y)
-    y = np.asarray(y, dtype=np.float64)
-    if n == 0:
-        return np.empty((0, 2), dtype=np.int64), np.empty(0)
+    y = np.asarray(values, dtype=np.float64)
+    off = _offsets(lengths)
     if kind == "natural":
-        extra = nvg_edges(y, limit)
+        xs, xd = (np.asarray(nvg_edges(y, limit)).T if len(off) == 2
+                  else nvg_edges_segmented(y, lengths, limit))
     elif kind == "horizontal":
-        extra = hvg_edges(y, limit)
+        xs, xd = hvg_edges_segmented(y, lengths, limit)
     else:
         raise ValueError(f"unknown visibility kind: {kind}")
+    seg = np.repeat(np.arange(len(off) - 1), np.diff(off))
     # adjacent pairs: no intermediates -> always pass the visibility
     # constraint; they are also path edges.
-    adj = np.stack(
-        [np.arange(n - 1, dtype=np.int64), np.arange(1, n, dtype=np.int64)],
-        axis=1,
-    ) if n > 1 else np.empty((0, 2), dtype=np.int64)
-    scan_edges = np.concatenate([adj, extra]) if len(extra) else adj
-    # path edges the scan rejected: only the angle constraint rejects any
-    missing = adj[:0]
-    if angle is not None and len(scan_edges):
-        keep = _angle_visible(y, scan_edges, angle, angle_abs)
-        scan_edges = scan_edges[keep]
-        missing = adj[~keep[:len(adj)]]
+    a = np.flatnonzero(np.diff(seg) == 0)
+    # path edges stay whatever the angle says (unweighted when rejected)
+    keep_adj = np.ones(len(a), dtype=bool)
+    if angle is not None:
+        keep_adj = _angle_visible(y, a, a + 1, angle, angle_abs)
+        keep = _angle_visible(y, xs, xd, angle, angle_abs)
+        xs, xd = xs[keep], xd[keep]
+    src = np.concatenate([a, xs])
+    dst = np.concatenate([a + 1, xd])
     if weighted:
-        dy = y[scan_edges[:, 1]] - y[scan_edges[:, 0]]
-        dx = (scan_edges[:, 1] - scan_edges[:, 0]).astype(np.float64)
-        w = np.arctan(dy / dx)
+        w = np.arctan((y[dst] - y[src]) / (dst - src).astype(np.float64))
         if weight_abs:
             w = np.abs(w)
+        w[:len(a)][~keep_adj] = np.nan
     else:
-        w = np.full(len(scan_edges), np.nan)
-    # union with path edges (unweighted where the scan rejected them)
-    if len(missing):
-        scan_edges = np.concatenate([scan_edges, missing])
-        w = np.concatenate([w, np.full(len(missing), np.nan)])
-    order = np.lexsort((scan_edges[:, 1], scan_edges[:, 0]))
-    return scan_edges[order], w[order]
+        w = np.full(len(src), np.nan)
+    # per source: its path edge, then its extra edges (dst >= src + 2); the
+    # stable sort merges the two src-sorted runs
+    order = np.argsort(src, kind="stable")
+    src, dst, w = src[order], dst[order], w[order]
+    es = seg[src]
+    base = off[es]
+    return es, np.stack([src - base, dst - base], axis=1), w
 
 
-def _angle_visible(
-    y: np.ndarray, edges: np.ndarray, angle: float, angle_abs: bool
-) -> np.ndarray:
+def _angle_visible(y: np.ndarray, src: np.ndarray, dst: np.ndarray,
+                   angle: float, angle_abs: bool) -> np.ndarray:
     """Angle constraint (to_graph/strategies.py:739-748): obstructed iff
     atan(slope) < visibility_angle; abs of both when angle_abs."""
-    dy = y[edges[:, 1]] - y[edges[:, 0]]
-    dx = (edges[:, 1] - edges[:, 0]).astype(np.float64)
+    dy = y[dst] - y[src]
+    dx = (dst - src).astype(np.float64)
     a = np.arctan(dy / dx)
     va = angle
     if angle_abs:
@@ -362,34 +465,54 @@ def ordinal_patterns(
     use_quantiles: bool = False,
     Q: int = 4,
 ) -> np.ndarray:
-    """Ordinal patterns for every embedding window.
+    """Ordinal patterns of one series: a one-segment call of
+    ordinal_patterns_segmented.  Returns int64 array (num_windows, w)."""
+    y = np.asarray(y, dtype=np.float64)
+    return ordinal_patterns_segmented(y, [len(y)], w, tau,
+                                      use_quantiles=use_quantiles, Q=Q)[0]
+
+
+def ordinal_patterns_segmented(
+    values: np.ndarray,
+    lengths,
+    w: int,
+    tau: int,
+    use_quantiles: bool = False,
+    Q: int = 4,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Ordinal patterns for every embedding window of every segment.
 
     Embeddings (strategies.py:52-55): windows y[i : i+w*tau : tau] for
-    i in 0..n-w*tau.  Rank pattern (strategies.py:64-70): stable sort by
-    value, ties keep index order (verified [2,2,1] -> (1,2,0)).  Quantile
-    pattern (strategies.py:58-63): rank = #within-window thresholds
-    strictly below the value, thresholds = np.quantile(window,
-    linspace(0,1,Q+1)[1:-1]).
+    i in 0..n-w*tau, never crossing a segment.  Rank pattern
+    (strategies.py:64-70): stable sort by value, ties keep index order
+    (verified [2,2,1] -> (1,2,0)); NaN ranks above every number, as
+    np.argsort puts it.  Quantile pattern (strategies.py:58-63): rank =
+    #within-window thresholds strictly below the value, thresholds =
+    np.quantile(window, linspace(0,1,Q+1)[1:-1]).  Both are row-wise, so a
+    window's pattern does not depend on the rest of the batch.
 
-    Returns int64 array (num_windows, w) of ranks.
+    Returns (patterns[M, w] int64 in segment order, npat[S] = windows per
+    segment).
     """
-    y = np.asarray(y, dtype=np.float64)
-    n = len(y)
-    m = n - w * tau + 1
-    if m <= 0:
-        return np.empty((0, w), dtype=np.int64)
-    idx = np.arange(m)[:, None] + np.arange(0, w * tau, tau)[None, :]
-    E = y[idx]
+    y = np.asarray(values, dtype=np.float64)
+    off = _offsets(lengths)
+    npat = np.maximum(np.diff(off) - w * tau + 1, 0)
+    starts = np.repeat(off[:-1], npat) + _ragged_offsets(npat)
+    E = y[starts[:, None] + np.arange(0, w * tau, tau)[None, :]]
+    m = len(E)
     if use_quantiles:
+        if not m:
+            return np.empty((0, w), dtype=np.int64), npat
         qs = np.linspace(0, 1, Q + 1)[1:-1]
-        thr = np.quantile(E, qs, axis=1).T  # (m, Q-1)
+        with np.errstate(invalid="ignore"):  # +-inf windows lerp to NaN
+            thr = np.quantile(E, qs, axis=1).T  # (m, Q-1)
         ranks = (E[:, :, None] > thr[:, None, :]).sum(axis=2)
-        return ranks.astype(np.int64)
+        return ranks.astype(np.int64), npat
     order = np.argsort(E, axis=1, kind="stable")
     ranks = np.empty((m, w), dtype=np.int64)
     rows = np.arange(m)[:, None]
     ranks[rows, order] = np.arange(w)[None, :]
-    return ranks
+    return ranks, npat
 
 
 def multivariate_ordinal_patterns(
@@ -411,31 +534,43 @@ def multivariate_ordinal_patterns(
 
 
 def opg_edges(patterns: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Transition edges between consecutive patterns.
+    """Transition edges between consecutive patterns of one series: a
+    one-segment call of opg_edges_segmented.
 
-    Weight = transition_count / num_patterns (strategies.py:110-122 — the
-    denominator is the number of PATTERNS, not transitions).
-
-    Returns (src_patterns[m,w], dst_patterns[m,w], weights[m]).
+    Returns (src_patterns[m,w], dst_patterns[m,w], weights[m]) in the row
+    order of np.unique over the (src, dst) pattern pairs.
     """
-    npat = len(patterns)
-    if npat < 2:
-        w = patterns.shape[1] if patterns.ndim == 2 else 0
-        e = np.empty((0, w), dtype=np.int64)
-        return e, e, np.empty(0)
-    pairs = np.concatenate([patterns[:-1], patterns[1:]], axis=1)
-    # the rows and counts of np.unique(pairs, axis=0), from an integer
-    # lexsort over the 2w columns (np.unique sorts them as void records,
-    # ~8x slower)
-    s = pairs[np.lexsort(pairs.T[::-1])]
-    new = np.empty(len(s), dtype=bool)
-    new[0] = True
-    np.any(s[1:] != s[:-1], axis=1, out=new[1:])
-    starts = np.flatnonzero(new)
-    uniq = s[starts]
-    counts = np.diff(starts, append=len(s))
-    w = patterns.shape[1]
-    return uniq[:, :w], uniq[:, w:], counts / float(npat)
+    _, pats, src, dst, wt = opg_edges_segmented(patterns, [len(patterns)])
+    return pats[src], pats[dst], wt
+
+
+def opg_edges_segmented(
+    patterns: np.ndarray, npat
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Transition edges between consecutive patterns of every segment
+    (segment s owns the next npat[s] rows of `patterns`).
+
+    Weight = transition_count / num_patterns (strategies.py:110-122 -- the
+    denominator is the number of PATTERNS of that series, not transitions).
+
+    Each distinct pattern row gets a dense lexicographic id, and the
+    (segment, src id, dst id) triples of the transitions that stay inside
+    a segment group in one more pass, which sorts them as np.unique sorts
+    each series' (src, dst) pattern pairs.  Returns (seg[m], pats[P, w]
+    distinct patterns, src[m], dst[m] row indices into pats, weights[m]).
+    """
+    npat = np.asarray(npat, dtype=np.int64)
+    width = patterns.shape[1] if patterns.ndim == 2 else 0
+    pats = np.asarray(patterns, dtype=np.int64).reshape(-1, width)
+    pid, uniq = _row_ids(pats)
+    seg = np.repeat(np.arange(len(npat)), npat)
+    inside = np.flatnonzero(seg[:-1] == seg[1:])
+    tid, trans = _row_ids(np.stack(
+        [seg[inside], pid[inside], pid[inside + 1]], axis=1))
+    counts = np.bincount(tid, minlength=len(trans))
+    ts = trans[:, 0]
+    return ts, uniq, trans[:, 1], trans[:, 2], counts / npat[ts].astype(
+        np.float64)
 
 
 # ---------------------------------------------------------------------------
@@ -458,38 +593,102 @@ def quantile_bins_indices(
 def qg_transitions(
     y: np.ndarray, Q: int, phi: int = 1
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Quantile-graph transitions bin(y_t) -> bin(y_{t+phi}) with their
-    integer counts.  Returns (edges[m,2] int64 sorted, counts[m] int64)."""
-    if len(y) <= phi:  # no transition (and np.quantile rejects [])
-        return np.empty((0, 2), dtype=np.int64), np.empty(0, dtype=np.int64)
-    _, idx = quantile_bins_indices(y, Q)
-    pairs = np.stack([idx[:-phi], idx[phi:]], axis=1)
-    return np.unique(pairs, axis=0, return_counts=True)
+    """Quantile-graph transitions bin(y_t) -> bin(y_{t+phi}) of one series
+    with their integer counts: a one-segment call of
+    qg_transitions_segmented.  Returns (edges[m,2] int64 sorted,
+    counts[m] int64)."""
+    y = np.asarray(y, dtype=np.float64)
+    _, e, c = qg_transitions_segmented(y, [len(y)], Q, phi)
+    return e, c
+
+
+def qg_transitions_segmented(
+    values: np.ndarray, lengths, Q: int, phi: int = 1
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Quantile-graph transitions of every segment with their integer
+    counts: (seg[m], edges[m,2] int64, counts[m] int64), sorted by (seg,
+    src, dst) as np.unique(axis=0) sorts each series' pairs.
+
+    The bins are the reference's (quantile_bins_indices), computed for all
+    segments at once: one sort of the batch by (segment, value), then
+    np.quantile's "linear" interpolation written out -- virtual index
+    (n-1)*q, lerp a + (b-a)*t, or b - (b-a)*(1-t) where t >= 0.5 -- which
+    gives np.quantile's bins bit for bit; a value's bin is the count of
+    bins strictly below it, minus one (np.digitize(right=True) - 1).
+    A segment with at most phi points, or holding a NaN or +-inf (its
+    quantile bins are undefined), has no transitions.
+    """
+    y = np.asarray(values, dtype=np.float64)
+    off = _offsets(lengths)
+    n_seg = np.diff(off)
+    seg = np.repeat(np.arange(len(n_seg)), n_seg)
+    bad = np.bincount(seg[~np.isfinite(y)], minlength=len(n_seg))
+    ok = (n_seg > phi) & (bad == 0)
+    # sort the batch by (segment, value): any value order, then a stable
+    # radix sort by segment id
+    order = np.argsort(y)
+    order = order[np.argsort(
+        seg[order].astype(np.min_scalar_type(len(n_seg))), kind="stable")]
+    ys = y[order]
+    q = np.linspace(0, 1, Q + 1)
+    s_ok = np.flatnonzero(ok)
+    n = n_seg[s_ok][:, None]
+    virt = (n - 1) * q[None, :]
+    prev = np.floor(virt)
+    top = virt >= n - 1
+    t = virt - prev
+    lo = off[s_ok][:, None] + np.where(top, n - 1, prev.astype(np.int64))
+    a = ys[lo]
+    b = ys[np.where(top, lo, lo + 1)]
+    diff = b - a
+    bins = np.where(t >= 0.5, b - diff * (1 - t), a + diff * t)
+    bins[:, 0] -= 1e-9
+    # bin index of every point of an ok segment
+    row = np.full(len(n_seg), -1)
+    row[s_ok] = np.arange(len(s_ok))
+    pts = np.flatnonzero(ok[seg])
+    r, v = row[seg[pts]], y[pts]
+    bin_of = np.zeros(len(y), dtype=np.int64)
+    bin_of[pts] = -1
+    for k in range(Q + 1):
+        bin_of[pts] += bins[r, k] < v
+    # transitions t -> t+phi inside a segment
+    t0 = pts[np.flatnonzero(pts + phi < off[seg[pts] + 1])]
+    tid, trans = _row_ids(np.stack(
+        [seg[t0], bin_of[t0], bin_of[t0 + phi]], axis=1))
+    counts = np.bincount(tid, minlength=len(trans))
+    return trans[:, 0], trans[:, 1:], counts
 
 
 def qg_edges(
     y: np.ndarray, Q: int, phi: int = 1
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Quantile-graph transition edges with per-source normalization
-    (strategies.py:437-459).  Returns (edges[m,2] int64, weights[m]).
-    Nodes 0..Q-1 always exist; only edges are returned here."""
-    uniq, counts = qg_transitions(y, Q, phi)
-    # normalize per source node over its successors (sums of integer
-    # counts: exact in float64)
-    _, src_of = np.unique(uniq[:, 0], return_inverse=True)
+    """Quantile-graph transition edges of one series with per-source
+    normalization: a one-segment call of qg_edges_segmented.  Returns
+    (edges[m,2] int64, weights[m]).  Nodes 0..Q-1 always exist; only edges
+    are returned here."""
+    y = np.asarray(y, dtype=np.float64)
+    _, e, w = qg_edges_segmented(y, [len(y)], Q, phi)
+    return e, w
+
+
+def qg_edges_segmented(
+    values: np.ndarray, lengths, Q: int, phi: int = 1
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Quantile-graph transition edges of every segment (strategies.py:
+    437-459): weight = count / transitions out of the same source bin of
+    the same segment.  Returns (seg[m], edges[m,2] int64, weights[m])."""
+    seg, e, counts = qg_transitions_segmented(values, lengths, Q, phi)
+    # the rows are sorted by (seg, src): each source's successors are one
+    # run, and their sum of integer counts is exact in float64
     w = counts.astype(np.float64)
-    return uniq, w / np.bincount(src_of, weights=w)[src_of]
-
-
-def qg_mean_jump_length(y: np.ndarray, Q: int, phi_max: int) -> np.ndarray:
-    """mean_jump_length (strategies.py:415-425): for each phi in 1..phi_max,
-    mean over edges of |i-j| * weight."""
-    out = []
-    for phi in range(1, phi_max + 1):
-        e, w = qg_edges(y, Q, phi)
-        jumps = np.abs(e[:, 0] - e[:, 1]) * w
-        out.append(np.mean(jumps) if len(jumps) else np.nan)
-    return np.array(out)
+    if not len(w):
+        return seg, e, w
+    first = np.ones(len(w), dtype=bool)
+    first[1:] = (seg[1:] != seg[:-1]) | (e[1:, 0] != e[:-1, 0])
+    starts = np.flatnonzero(first)
+    run = np.cumsum(first) - 1
+    return seg, e, w / np.add.reduceat(w, starts)[run]
 
 
 # ---------------------------------------------------------------------------

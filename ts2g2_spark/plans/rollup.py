@@ -183,72 +183,64 @@ def gapfill(
     series_cols: list[str] = ("doc_id", "source"),
     fill: str = "null",
 ) -> DataFrame:
-    """Relational gap-fill, join-free: per series, lead(bucket_ts) finds
-    each gap and sequence()+explode emits exactly the missing interior
-    buckets, unioned with the original rows.  One window shuffle on the
-    series key — no spine build, no second scan of the tier, no join (the
-    spine-join formulation reads the tier twice and exchanges both sides;
-    this reads it once).  fill='null'|'zero'|'locf'|'linear' (locf via
-    last(ignorenulls) window; linear interpolates each value column
-    between the gap's endpoints, with lead() riding the same window pass
-    as the gap detection — interior gaps only by construction, so both
-    endpoints always exist)."""
+    """Relational gap-fill, join-free, in one windowed pass: per series,
+    lead(bucket_ts) finds each row's successor, and the row explodes into
+    sequence(bucket_ts, nxt - step): element 0 keeps the row itself, the
+    rest are exactly the missing interior buckets before the successor.
+    One window shuffle on the series key — no spine build, no join, and no
+    union of the tier with gaps derived from it, so a tier that is not
+    materialized is computed and scanned once.  fill='null'|'zero'|'locf'|
+    'linear' (locf via last(ignorenulls) window over the same partitioning;
+    linear interpolates each value column between the gap's endpoints,
+    with lead() riding the same window pass as the gap detection —
+    interior gaps only by construction, so both endpoints always exist)."""
     from pyspark.sql.window import Window
 
     tier_s = TIER_SECONDS[tier]
+    step = F.expr(f"interval {tier_s} second")
     scols = list(series_cols)
     w = Window.partitionBy(*scols).orderBy("bucket_ts")
-    nxt = F.lead("bucket_ts").over(w)
     agg_cols = ["cnt", "sum", "min", "max", "first", "last"]
     val_cols = agg_cols[1:]
-    pre = [nxt.alias("nxt")]
-    if fill == "linear":
-        # interpolation needs the gap's far endpoint: lead() each value
-        # column in the SAME window pass — still one shuffle, no second
-        # scan and no ignorenulls window over the unioned frame.
-        pre += [F.lead(c).over(w).alias(f"_n_{c}") for c in val_cols]
-        pre += [F.col(c).alias(f"_p_{c}") for c in val_cols]
-    gaps = (
-        tier_df.select(*scols, "bucket_ts", *pre)
-        .where(F.col("nxt") > F.col("bucket_ts")
-               + F.expr(f"interval {tier_s} second"))
+    nxt = F.lead("bucket_ts").over(w)
+    lead_vals = ([F.lead(c).over(w).alias(f"_n_{c}") for c in val_cols]
+                 if fill == "linear" else [])
+    rows = (
+        tier_df.select(*scols, "bucket_ts", *agg_cols, "gapfilled",
+                       nxt.alias("nxt"), *lead_vals)
         .select(
-            *scols,
-            F.col("bucket_ts").alias("_gap_lo"),
-            F.col("nxt").alias("_gap_hi"),
-            *[F.col(f"_p_{c}") for c in val_cols if fill == "linear"],
-            *[F.col(f"_n_{c}") for c in val_cols if fill == "linear"],
-            F.explode(F.sequence(
-                F.col("bucket_ts") + F.expr(f"interval {tier_s} second"),
-                F.col("nxt") - F.expr(f"interval {tier_s} second"),
-                F.expr(f"interval {tier_s} second"),
-            )).alias("bucket_ts"),
+            "*",
+            F.posexplode(
+                F.when(F.col("nxt") > F.col("bucket_ts") + step,
+                       F.sequence("bucket_ts", F.col("nxt") - step, step))
+                .otherwise(F.array("bucket_ts"))
+            ).alias("_i", "_ts"),
         )
     )
+    own = F.col("_i") == 0
     if fill == "linear":
         # value = prev + (next - prev) * (t - t_prev) / (t_next - t_prev);
         # integer epoch arithmetic then one double division, so an ANSI-SQL
         # oracle reproduces the float bit-for-bit at 12 significant digits.
         frac = (
-            (F.unix_timestamp("bucket_ts")
-             - F.unix_timestamp("_gap_lo")).cast("double")
-            / (F.unix_timestamp("_gap_hi")
-               - F.unix_timestamp("_gap_lo")).cast("double")
+            (F.unix_timestamp("_ts")
+             - F.unix_timestamp("bucket_ts")).cast("double")
+            / (F.unix_timestamp("nxt")
+               - F.unix_timestamp("bucket_ts")).cast("double")
         )
-        fills = [
-            (F.col(f"_p_{c}")
-             + (F.col(f"_n_{c}") - F.col(f"_p_{c}")) * frac).alias(c)
-            for c in val_cols
-        ]
+        fills = {c: F.col(c) + (F.col(f"_n_{c}") - F.col(c)) * frac
+                 for c in val_cols}
     else:
-        fills = [F.lit(None).cast("double").alias(c) for c in val_cols]
-    gaps = gaps.select(
-        *scols, "bucket_ts",
-        F.lit(0).cast("long").alias("cnt"), *fills,
-        F.lit(True).alias("gapfilled"),
+        fills = {c: F.lit(None).cast("double") for c in val_cols}
+    out = rows.select(
+        *scols, F.col("_ts").alias("bucket_ts"),
+        F.when(own, F.col("cnt")).otherwise(F.lit(0).cast("long"))
+        .alias("cnt"),
+        *[F.when(own, F.col(c)).otherwise(fills[c]).alias(c)
+          for c in val_cols],
+        F.when(own, F.col("gapfilled")).otherwise(F.lit(True))
+        .alias("gapfilled"),
     )
-    out = tier_df.select(*scols, "bucket_ts", *agg_cols, "gapfilled") \
-        .unionAll(gaps)
     if fill == "zero":
         for c in ("sum", "min", "max", "first", "last"):
             out = out.withColumn(c, F.coalesce(c, F.lit(0.0)))
