@@ -149,9 +149,12 @@ def test_proximity_emitter_matches_kernel(frame):
 
 
 def test_multivariate_opg_emitter_matches_kernel(frame):
+    """One to three variables a row, so a batch mixes pattern widths."""
     mv = frame.select("series_key", F.when(
         F.col("values").isNotNull(),
-        F.array("values", F.expr("transform(values, x -> -x * x)")),
+        F.slice(F.array("values", F.expr("transform(values, x -> -x * x)"),
+                        F.expr("transform(values, x -> 2 * x)")),
+                1, F.size("values") % 3 + 1),
     ).alias("variables"))
     got = _got(graphs.opg_edges_multivariate(mv, 3, 1))
     want = Counter()
@@ -159,11 +162,13 @@ def test_multivariate_opg_emitter_matches_kernel(frame):
         if vals is None:
             continue
         y = np.asarray(vals, np.float64)
+        variables = [y, -y * y, 2 * y][:len(y) % 3 + 1]
         s, d, w = kernels.opg_edges(
-            kernels.multivariate_ordinal_patterns([y, -y * y], 3, 1))
+            kernels.multivariate_ordinal_patterns(variables, 3, 1))
         want.update((key, ",".join(map(str, a)), ",".join(map(str, b)), x)
                     for a, b, x in zip(s.tolist(), d.tolist(), w.tolist()))
     assert got == want and len(got) > 0
+    assert len({r[1].count(",") for r in got}) == 3
 
 
 def test_histogram_emitter_matches_numpy(frame):

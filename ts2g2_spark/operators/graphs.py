@@ -11,10 +11,12 @@ per-edge Python objects:
 - `_map_segments` runs one segmented kernel from `kernels` over the whole
   batch (the flat buffer plus the series lengths), so numpy's per-call
   cost is paid once per batch, not once per series.  The HVG, NVG, OPG and
-  QG edge sets (`visibility_edges`, `opg_edges`, `qg_edges`) use it.
+  QG edge sets (`visibility_edges`, `opg_edges`, `qg_edges`) use it, and
+  so does `opg_edges_multivariate`, which builds each series' patterns
+  per series but groups the batch's transitions in one call.
 - `_map_series` runs a per-series kernel once per series on a slice of
-  that buffer.  `proximity_edges`, `histogram`, `opg_edges_multivariate`
-  and the `graphmetrics` `*_from_series` metrics still use it.
+  that buffer.  `proximity_edges`, `histogram` and the `graphmetrics`
+  `*_from_series` metrics still use it.
 
 Edges come out as rows keyed by series_key; adjacency is data, never a
 driver-side object (SURVEY §1.2).  A null `values` row yields no output
@@ -49,27 +51,24 @@ _SEGMENT_POINTS = 1 << 18
 def _map_segments(
     df: DataFrame,
     schema: str,
-    kernel: Callable[[np.ndarray, np.ndarray],
-                     tuple[np.ndarray, dict[str, pa.Array]]],
+    kernel: Callable[..., tuple[np.ndarray, dict[str, pa.Array]]],
+    col: str = "values",
 ) -> DataFrame:
     """Map-only mapInArrow over `df` with one segmented kernel call per
     Arrow batch (per run of _SEGMENT_POINTS points).
 
-    kernel(values, lengths) gets the run's flat float64 `values` buffer and
-    its row lengths (a null row has length 0) and returns (seg, columns):
-    the row of each output row, in output order, and the output columns
-    after series_key, which is gathered from the input with one `take`."""
+    For a list<double> `col`, kernel(values, lengths) gets the run's flat
+    float64 buffer and its row lengths (a null row has length 0); for a
+    list<list<double>> `col`, kernel(rows) gets the batch's rows, each a
+    list of float64 slices or None for a null row.  It returns (seg,
+    columns): the row of each output row, in output order, and the output
+    columns after series_key, which is gathered from the input with one
+    `take`."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            arr = batch.column("values")
-            lengths = arr.value_lengths().fill_null(0).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            values = np.asarray(arr.flatten().to_numpy(zero_copy_only=False),
-                                np.float64)  # flatten skips null rows
-            off = np.concatenate(([0], np.cumsum(lengths)))
-            for a, b in _runs(off, _SEGMENT_POINTS):
-                seg, cols = kernel(values[off[a]:off[b]], lengths[a:b])
+            for a, args in _row_runs(batch.column(col)):
+                seg, cols = kernel(*args)
                 if len(seg):
                     yield pa.RecordBatch.from_pydict({
                         "series_key": batch.column("series_key").take(
@@ -78,6 +77,21 @@ def _map_segments(
                     })
 
     return df.mapInArrow(run, schema=schema)
+
+
+def _row_runs(arr: pa.Array) -> Iterator[tuple[int, tuple]]:
+    """(first row, kernel arguments) for each run of a batch column, as
+    _map_segments hands them to its kernel."""
+    if pa.types.is_list(arr.type.value_type):
+        yield 0, (_slices(arr),)
+        return
+    lengths = arr.value_lengths().fill_null(0).to_numpy(
+        zero_copy_only=False).astype(np.int64)
+    values = np.asarray(arr.flatten().to_numpy(zero_copy_only=False),
+                        np.float64)  # flatten skips null rows
+    off = np.concatenate(([0], np.cumsum(lengths)))
+    for a, b in _runs(off, _SEGMENT_POINTS):
+        yield a, (values[off[a]:off[b]], lengths[a:b])
 
 
 def _runs(off: np.ndarray, max_points: int) -> Iterator[tuple[int, int]]:
@@ -121,7 +135,7 @@ def _map_series(
     series' output rows; build(results) turns the batch's results into the
     output columns after series_key, which is gathered from the input with
     one `take`.  Used by the kernels that have no segmented form yet
-    (proximity, histogram, multivariate OPG, the graphmetrics metrics)."""
+    (proximity, histogram, the graphmetrics metrics)."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -158,33 +172,16 @@ def _edge_columns(parts: list) -> dict[str, pa.Array]:
                         np.concatenate([p[1] for p in parts]))
 
 
-def _pattern_strings(mats: list[np.ndarray]) -> pa.Array:
-    """Comma-joined rank strings of the rows of `mats`, in order.  Each
-    distinct pattern is formatted once and gathered with `take`; rows of
-    different widths are padded with -1 (ranks are >= 0) for the grouping."""
-    starts = np.cumsum([0] + [len(m) for m in mats]).tolist()
-    pats = np.full((starts[-1], max(m.shape[1] for m in mats)), -1, np.int64)
-    for m, a in zip(mats, starts):
-        pats[a:a + len(m), :m.shape[1]] = m
-    if not len(pats):
-        return pa.array([], pa.string())
-    inv, uniq = kernels._row_ids(pats)
+def _pattern_columns(pats: np.ndarray, src: np.ndarray, dst: np.ndarray,
+                    wt: np.ndarray) -> dict[str, pa.Array]:
+    """Distinct pattern rows `pats` (padded with -1; ranks are >= 0) and
+    each edge's src/dst row indices into them -> src_pattern, dst_pattern,
+    weight.  Each distinct pattern is formatted once, as comma-joined
+    ranks, and gathered with `take`."""
     text = pa.array([",".join(str(r) for r in row if r >= 0)
-                     for row in uniq.tolist()], pa.string())
-    return text.take(inv)
-
-
-def _pattern_edge_columns(parts: list) -> dict[str, pa.Array]:
-    """(src_patterns[m, w], dst_patterns[m, w], weights[m]) per series ->
-    src_pattern, dst_pattern, weight."""
-    text = _pattern_strings([p[0] for p in parts] + [p[1] for p in parts])
-    m = len(text) // 2
-    return {
-        "src_pattern": text.slice(0, m),
-        "dst_pattern": text.slice(m),
-        "weight": pa.array(np.concatenate([p[2] for p in parts]),
-                           pa.float64(), from_pandas=True),
-    }
+                     for row in pats.tolist()], pa.string())
+    return {"src_pattern": text.take(src), "dst_pattern": text.take(dst),
+            "weight": pa.array(wt, pa.float64())}
 
 
 def _list_rows(rows: np.ndarray, type_: pa.DataType) -> pa.Array:
@@ -317,11 +314,7 @@ def opg_edges(
         seg, pats, src, dst, wt = kernels.opg_edges_segmented(
             *kernels.ordinal_patterns_segmented(
                 values, lengths, w, tau, use_quantiles=use_quantiles, Q=Q))
-        text = pa.array([",".join(map(str, r)) for r in pats.tolist()],
-                        pa.string())
-        return seg, {"src_pattern": text.take(src),
-                     "dst_pattern": text.take(dst),
-                     "weight": pa.array(wt, pa.float64())}
+        return seg, _pattern_columns(pats, src, dst, wt)
 
     return _map_segments(df, PAT_EDGE_SCHEMA, kernel)
 
@@ -331,14 +324,28 @@ def opg_edges_multivariate(df: DataFrame, w: int, tau: int) -> DataFrame:
     per-variable up/down diff patterns concatenated variable-major, then
     the same transition aggregate (weight = count / #patterns).  Input
     frame: (series_key, variables array<array<double>>) — all variables of
-    one multivariate series row-local, so the kernel stays map-only."""
+    one multivariate series row-local, so the kernel stays map-only.
 
-    def kernel(series: list[np.ndarray]) -> tuple[np.ndarray, ...]:
-        return kernels.opg_edges(
-            kernels.multivariate_ordinal_patterns(series, w, tau))
+    The patterns are built per series; the transitions of a whole Arrow
+    batch are grouped by one opg_edges_segmented call, with rows of
+    different widths (variable counts) padded with -1."""
 
-    return _map_series(df, PAT_EDGE_SCHEMA, kernel, _pattern_edge_columns,
-                       col="variables")
+    def kernel(rows: list):
+        mats = [kernels.multivariate_ordinal_patterns(s, w, tau)
+                if s is not None else np.empty((0, 0), np.int64)
+                for s in rows]
+        pats = np.full((sum(len(m) for m in mats),
+                        max((m.shape[1] for m in mats), default=0)), -1,
+                       np.int64)
+        a = 0
+        for m in mats:
+            pats[a:a + len(m), :m.shape[1]] = m
+            a += len(m)
+        seg, uniq, src, dst, wt = kernels.opg_edges_segmented(
+            pats, [len(m) for m in mats])
+        return seg, _pattern_columns(uniq, src, dst, wt)
+
+    return _map_segments(df, PAT_EDGE_SCHEMA, kernel, col="variables")
 
 
 # ------------------------------------------------- quantile graph (G8/G9)

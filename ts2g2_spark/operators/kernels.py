@@ -561,7 +561,7 @@ def opg_edges_segmented(
     """
     npat = np.asarray(npat, dtype=np.int64)
     width = patterns.shape[1] if patterns.ndim == 2 else 0
-    pats = np.asarray(patterns, dtype=np.int64).reshape(-1, width)
+    pats = np.asarray(patterns, dtype=np.int64).reshape(len(patterns), width)
     pid, uniq = _row_ids(pats)
     seg = np.repeat(np.arange(len(npat)), npat)
     inside = np.flatnonzero(seg[:-1] == seg[1:])
@@ -689,6 +689,17 @@ def qg_edges_segmented(
     starts = np.flatnonzero(first)
     run = np.cumsum(first) - 1
     return seg, e, w / np.add.reduceat(w, starts)[run]
+
+
+def qg_mean_jump_length(y: np.ndarray, Q: int, phi_max: int) -> np.ndarray:
+    """mean_jump_length (strategies.py:415-425): for each phi in 1..phi_max,
+    mean over edges of |i-j| * weight."""
+    out = []
+    for phi in range(1, phi_max + 1):
+        e, w = qg_edges(y, Q, phi)
+        jumps = np.abs(e[:, 0] - e[:, 1]) * w
+        out.append(np.mean(jumps) if len(jumps) else np.nan)
+    return np.array(out)
 
 
 # ---------------------------------------------------------------------------
