@@ -509,3 +509,23 @@ def test_null_series_row_yields_no_row(spark, builder):
         [r for r in rows if r[1] is not None], schema).coalesce(1)).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert {str(r[0]) for r in got} == {"1", "3"}
+
+
+@pytest.mark.parametrize("bad", [np.nan, -np.inf, np.inf],
+                         ids=["nan", "-inf", "+inf"])
+@pytest.mark.parametrize("builder", ["quantile", "ordinal"])
+def test_nonfinite_series_row_yields_no_row(spark, builder, bad):
+    """A series holding NaN or ±inf gets no graph (the QG edge kernels'
+    rule), so the walkers give it no row, as they do a null row; the
+    other rows of its Arrow batch are unchanged."""
+    rng = np.random.default_rng(5)
+    rows = [("1", rng.normal(size=20).tolist()),
+            ("2", [1.0, bad, 2.0, 3.0, 0.5]),
+            ("3", rng.normal(size=15).tolist())]
+    schema = "series_key string, values array<double>"
+    build = _series_builders()[builder]
+    got = build(spark.createDataFrame(rows, schema).coalesce(1)).collect()
+    want = build(spark.createDataFrame(
+        [rows[0], rows[2]], schema).coalesce(1)).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert {r.series_key for r in got} == {"1", "3"}

@@ -28,13 +28,20 @@ def media(spark):
 
 
 def test_metadata_and_exact_dedup(spark, media):
-    meta = mm.attach_metadata(media)
-    r = {x.media_id: x for x in meta.collect()}
-    assert r["img0"].n_bytes == 128
-    assert r["img0"].content_hash == r["img_dup"].content_hash
+    """Exact duplicates group by content hash, and the payload bytes
+    never enter the dedup shuffle."""
     groups = mm.exact_media_dedup(media).collect()
     assert len(groups) == 1
     assert groups[0].members == ["img0", "img_dup"]
+    # payload binary never enters the dedup shuffle: the Exchange operator
+    # itself must not carry the payload column (children print BELOW it in
+    # the plan string, so inspect the Exchange line only)
+    plan = mm.exact_media_dedup(
+        spark.createDataFrame([], mm.MEDIA_SCHEMA))._jdf \
+        .queryExecution().executedPlan().toString()
+    exchange_lines = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert exchange_lines
+    assert all("payload" not in ln for ln in exchange_lines)
 
 
 def test_extract_features_deterministic(spark, media):
@@ -51,28 +58,6 @@ def test_extract_features_deterministic(spark, media):
 def test_extract_features_stub_marker(spark, media):
     with pytest.raises(NotImplementedError):
         mm.extract_features(media, decoder=None)
-
-
-def test_sample_frames(spark, media):
-    frames = mm.sample_frames(media, every_n=10).collect()
-    assert [f.frame_idx for f in frames] == [0, 10, 20]
-    assert all(len(f.payload) == 64 for f in frames)  # 8x8 grid
-
-
-def test_resize_images(spark, media):
-    out = mm.resize_images(media, out_w=4, out_h=4)
-    rows = out.collect()
-    assert len(rows) == 7  # images only, video/audio filtered
-    assert all(len(r.payload) == 16 for r in rows)
-    # payload binary never enters the dedup shuffle: the Exchange operator
-    # itself must not carry the payload column (children print BELOW it in
-    # the plan string, so inspect the Exchange line only)
-    plan = mm.exact_media_dedup(
-        spark.createDataFrame([], mm.MEDIA_SCHEMA))._jdf \
-        .queryExecution().executedPlan().toString()
-    exchange_lines = [ln for ln in plan.splitlines() if "Exchange" in ln]
-    assert exchange_lines
-    assert all("payload" not in ln for ln in exchange_lines)
 
 
 def test_custom_decoder(spark, media):
@@ -202,21 +187,3 @@ def test_extract_features_codec_real_pixels(spark, codec_media):
     assert np.array_equal(feats["pgm0"], _pool(g.ravel(), 16))
     assert np.array_equal(feats["bmp0"], _pool(mc.luma(c).ravel(), 16))
     assert np.array_equal(feats["wav0"], _pool(s, 16))
-
-
-def test_resize_images_codec_real_pixels(spark, codec_media):
-    df, g, c, s = codec_media
-    out = {r.media_id: r for r in
-           mm.resize_images(df, out_w=4, out_h=4,
-                            decoder="codec").collect()}
-    assert set(out) == {"pgm0", "bmp0"}  # audio filtered out
-    yi, xi = np.arange(4) * 8 // 4, np.arange(4) * 8 // 4
-    assert out["pgm0"].payload == g[yi][:, xi].tobytes()
-    lc = mc.luma(c)
-    yi, xi = np.arange(4) * 6 // 4, np.arange(4) * 6 // 4
-    assert out["bmp0"].payload == lc[yi][:, xi].tobytes()
-
-
-def test_sample_frames_codec_raises(spark, codec_media):
-    with pytest.raises(NotImplementedError, match="video"):
-        mm.sample_frames(codec_media[0], decoder="codec")

@@ -307,13 +307,6 @@ def test_exact_topk_matches_naive(spark):
         exact_topk(df, "cnt", 0, "word")
 
 
-def test_streaming_hll_requires_group_cols(spark):
-    from ts2g2_spark.streaming import ingest
-    rows = spark.createDataFrame([], ingest.EVENTS_SCHEMA)
-    with pytest.raises(ValueError, match="group_cols"):
-        ingest.streaming_hll_distinct(rows, group_cols=())
-
-
 # ---------------------------------------------------------------- bloom
 
 def test_bloom_no_false_negatives_and_twins(spark):

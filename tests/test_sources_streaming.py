@@ -88,243 +88,7 @@ def test_read_financial_xml(spark):
     assert [r.value for r in other.orderBy("idx").collect()] == [10.0, 12.5]
 
 
-def test_stream_dedup(spark, tmp_path):
-    """Duplicates within a batch AND across batches (inside the
-    watermark) are dropped; output equals batch-distinct."""
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    def mk(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("d"), (F.col("id") % 50)).alias("doc_id"),
-            F.lit("s0").alias("source"),
-            F.timestamp_seconds(1704067200 + (F.col("id") % 50)).alias("ts"),
-            F.lit(1.0).alias("value"),
-        )
-
-    # 200 rows -> 50 distinct (doc_id, ts) keys, duplicated 4x in-batch
-    mk(0, 200).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.stream_dedup(ingest.stream_points(spark, in_dir)),
-        out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == 50
-
-    # the same keys again in a second batch (same event times, within
-    # the watermark): all suppressed by carried state
-    mk(0, 100).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.stream_dedup(ingest.stream_points(spark, in_dir)),
-        out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == 50
-
-
-# ------------------------------------------------- streaming corpus clean
-def test_streaming_clean_matches_batch_gates(spark, tmp_path):
-    """The gate projection on a stream selects exactly the docs the
-    batch quality_gate selects, and exact dups are suppressed within a
-    micro-batch and across micro-batches inside the watermark."""
-    from ts2g2_spark.plans.corpus import quality_gate
-    from ts2g2_spark.streaming import corpus as scorpus
-
-    in_dir = str(tmp_path / "docs_in")
-    out_dir = str(tmp_path / "docs_out")
-    ckpt = str(tmp_path / "docs_ckpt")
-    os.makedirs(in_dir)
-
-    en = "the cat and of to is that with"
-    good = [(i, f"{en} " + " ".join(f"w{i}x{j}" for j in range(22)), "s",)
-            for i in range(4)]
-    bad = [(10, "too short", "s"), (11, "the " * 40 + en, "s")]
-    dup = [(20, good[0][1], "s")]  # exact dup of doc 0
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "doc_id long, text string, source string"
-        ).select("*", F.timestamp_seconds(
-            F.lit(1704067200) + F.col("doc_id")).alias("ingest_ts"))
-
-    mk(good + bad + dup).coalesce(1).write.mode("append").parquet(in_dir)
-    scorpus.run_available_now(
-        scorpus.streaming_clean(
-            scorpus.stream_docs(spark, in_dir), max_dup_2gram_frac=0.5),
-        out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
-    # one survivor per distinct content hash; gates match batch
-    want_gate = quality_gate(mk(good + bad), max_dup_2gram_frac=0.5)
-    assert (sorted(r["content_hash"] for r in
-                   got.select("content_hash").collect())
-            == sorted(r for (r,) in want_gate.select(F.md5("text"))
-                      .distinct().collect()))
-    assert got.count() == len(good)  # bad gated out, dup suppressed
-
-    # batch 2: re-send doc 0's text (same hash, inside the watermark)
-    # plus one genuinely new doc -> only the new doc appears
-    new = [(30, f"{en} " + " ".join(f"z{j}" for j in range(22)), "s")]
-    mk(dup + new).coalesce(1).write.mode("append").parquet(in_dir)
-    scorpus.run_available_now(
-        scorpus.streaming_clean(
-            scorpus.stream_docs(spark, in_dir), max_dup_2gram_frac=0.5),
-        out_dir, ckpt)
-    got2 = spark.read.parquet(out_dir)
-    assert got2.count() == len(good) + 1
-    assert {r["doc_id"] for r in got2.collect()} >= {30}
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    from ts2g2_spark.operators.eventseq import sessionize
-
-    in_dir = str(tmp_path / "sess_in")
-    out_dir = str(tmp_path / "sess_out")
-    ckpt = str(tmp_path / "sess_ckpt")
-    os.makedirs(in_dir)
-
-    def mk_events(lo, hi, base=1704067200):
-        # scrambled offsets on a 37s grid: per-user sorted gaps are
-        # multiples of 37 (mix of < and > the 120s threshold), and 120
-        # is NOT a multiple of 37, so the half-open boundary divergence
-        # (see streaming_sessionize docstring) cannot bite
-        return spark.range(lo, hi).select(
-            F.col("id").alias("event_id"),
-            F.timestamp_seconds(
-                base + ((F.col("id") * 7919) % 2700) * 37).alias("ts"),
-            (F.col("id") % 5).alias("user_id"),
-            F.lit("view").alias("event_type"),
-            F.col("id").cast("double").alias("value"),
-            F.lit(None).cast("string").alias("props"),
-        )
-
-    # ONE file per drain: the file source's watermark advances between
-    # micro-batches, and ts is scrambled across ids, so a multi-file
-    # batch would drop rows older than a prior micro-batch's watermark
-    mk_events(0, 400).coalesce(1).write.mode("append").parquet(in_dir)
-    sess = ingest.streaming_sessionize(
-        ingest.stream_events(spark, in_dir), gap_s=120)
-    ingest.run_available_now(sess, out_dir, ckpt)
-    # push the watermark past every first-batch session, then drain again
-    mk_events(100000, 100010, base=1704067200 + 500_000).coalesce(1) \
-        .write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_sessionize(
-            ingest.stream_events(spark, in_dir), gap_s=120),
-        out_dir, ckpt)
-
-    # batch-2's own early-ending sessions also finalize in the second
-    # drain (the watermark passes them) — compare the batch-1 range only
-    got = spark.read.parquet(out_dir).where(
-        F.col("start_ts") < F.timestamp_seconds(F.lit(1704067200 + 500_000)))
-    want = sessionize(mk_events(0, 400), gap_s=120,
-                      order_col="event_id")
-    cols = ["user_id", "start_ts", "end_ts", "n_events", "duration_us"]
-    w = want.select(F.col("user_id"), F.col("start_ts"),
-                    F.col("end_ts"), F.col("n_events"),
-                    F.col("duration_us"))
-    assert got.count() == w.count() > 0
-    assert got.select(*cols).exceptAll(w).count() == 0
-    assert w.exceptAll(got.select(*cols)).count() == 0
-
-
-def test_streaming_distinct_matches_batch_and_tiers_up(spark, tmp_path):
-    from ts2g2_spark.plans import rollup as R2
-
-    in_dir = str(tmp_path / "din")
-    out_dir = str(tmp_path / "dout")
-    ckpt = str(tmp_path / "dckpt")
-    os.makedirs(in_dir)
-
-    def mk_points(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("d"), (F.col("id") % 3)).alias("doc_id"),
-            F.lit("src_00").alias("source"),
-            F.timestamp_seconds(1704067200 + F.col("id") * 7).alias("ts"),
-            (F.col("id") % 11).cast("double").alias("value"),
-        )
-
-    mk_points(0, 500).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_distinct_1m(ingest.stream_points(spark, in_dir)),
-        out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == 0  # watermark holds
-
-    mk_points(100000, 100200).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_distinct_1m(ingest.stream_points(spark, in_dir)),
-        out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
-
-    want = R2.distinct_rollup(mk_points(0, 500), "1m", "value",
-                              series_cols=["doc_id", "source"])
-    assert got.count() == want.count() > 0
-    g = {(r.doc_id, r.bucket_ts): r.n_distinct for r in got.collect()}
-    w = {(r.doc_id, r.bucket_ts): r.n_distinct for r in want.collect()}
-    assert g == w
-    # sparse exact regime: estimates equal exact distincts
-    exact = {(r.doc_id, r.b): r.n for r in mk_points(0, 500).groupBy(
-        "doc_id", F.date_trunc("minute", "ts").alias("b")).agg(
-        F.countDistinct("value").alias("n")).collect()}
-    assert g == exact
-    # batch tier-up composes on the STREAMED sketch state
-    h_stream = R2.distinct_tier_up(got, "1h",
-                                   series_cols=["doc_id", "source"])
-    h_direct = R2.distinct_rollup(mk_points(0, 500), "1h", "value",
-                                  series_cols=["doc_id", "source"])
-    hs = {(r.doc_id, r.bucket_ts): r.n_distinct for r in h_stream.collect()}
-    hd = {(r.doc_id, r.bucket_ts): r.n_distinct for r in h_direct.collect()}
-    assert hs == hd
-
-
-def test_streaming_histogram_matches_batch_and_tiers_up(spark, tmp_path):
-    from ts2g2_spark.plans import rollup as R3
-
-    in_dir = str(tmp_path / "hin")
-    out_dir = str(tmp_path / "hout")
-    ckpt = str(tmp_path / "hckpt")
-    os.makedirs(in_dir)
-    LO, HI, NB = 0.0, 11.0, 11
-
-    def mk_points(lo, hi):
-        return spark.range(lo, hi).select(
-            F.concat(F.lit("d"), (F.col("id") % 3)).alias("doc_id"),
-            F.lit("src_00").alias("source"),
-            F.timestamp_seconds(1704067200 + F.col("id") * 7).alias("ts"),
-            (F.col("id") % 11).cast("double").alias("value"),
-        )
-
-    mk_points(0, 500).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_histogram_1m(
-            ingest.stream_points(spark, in_dir), LO, HI, NB),
-        out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == 0  # watermark holds
-
-    mk_points(100000, 100200).write.mode("append").parquet(in_dir)
-    ingest.run_available_now(
-        ingest.streaming_histogram_1m(
-            ingest.stream_points(spark, in_dir), LO, HI, NB),
-        out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
-
-    want = R3.histogram_rollup(mk_points(0, 500), "1m", LO, HI, NB,
-                               series_cols=["doc_id", "source"])
-    assert got.count() == want.count() > 0
-    key = lambda r: (r.doc_id, r.bucket_ts, r.bin)  # noqa: E731
-    assert {key(r): r.cnt for r in got.collect()} == \
-           {key(r): r.cnt for r in want.collect()}
-    # batch tier-up + quantile serving compose on the STREAMED state
-    h_stream = R3.histogram_tier_up(got, "1h",
-                                    series_cols=["doc_id", "source"])
-    q_stream = R3.histogram_quantiles(
-        h_stream, [0.5], LO, HI, NB, series_cols=["doc_id", "source"])
-    h_direct = R3.histogram_rollup(mk_points(0, 500), "1h", LO, HI, NB,
-                                   series_cols=["doc_id", "source"])
-    q_direct = R3.histogram_quantiles(
-        h_direct, [0.5], LO, HI, NB, series_cols=["doc_id", "source"])
-    qs = {(r.doc_id, r.bucket_ts): r.quantile for r in q_stream.collect()}
-    qd = {(r.doc_id, r.bucket_ts): r.quantile for r in q_direct.collect()}
-    assert qs == qd and len(qs) > 0
-
-
+# ------------------------------------------------- incremental tier fold
 def test_incremental_tier_fold_matches_batch_and_is_idempotent(
         spark, tmp_path):
     """Three out-of-order micro-batches folded through the mergeable
@@ -531,73 +295,6 @@ def test_incremental_fold_layout_guard(spark, tmp_path):
         assert json.load(f) == before
 
 
-def test_streaming_threshold_alerts_matches_batch(spark, tmp_path):
-    """Out-of-order delivery across micro-batches: the stateful
-    operator buffers per-series events, finalizes the prefix behind
-    the watermark in (ts, event_id) order, and the emitted transition
-    stream equals the batch hysteresis operator exactly (once a
-    sentinel advances the watermark past all real data)."""
-    import numpy as np
-    import pandas as pd
-
-    from ts2g2_spark.operators.metrics import threshold_alerts
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    rng = np.random.default_rng(23)
-    n = 600
-    base = 1704067200
-    pdf = pd.DataFrame({
-        "event_id": np.arange(n, dtype=np.int64),
-        "ts": pd.to_datetime(
-            base + rng.integers(0, 3000, n), unit="s"),
-        "user_id": rng.integers(0, 4, n).astype(np.int64),
-        "event_type": "t",
-        "value": rng.normal(70, 25, n).round(1),
-        "props": "",
-    })
-    # three shuffled slices -> heavy cross-batch reordering (all within
-    # the 1h watermark), then a far-future sentinel to flush
-    order = rng.permutation(n)
-    slices = np.array_split(order, 3)
-    batches = [pdf.iloc[ix] for ix in slices]
-    # watermark advances AFTER the batch that carries the new max event
-    # time, so flushing needs two sentinel drains: the first moves the
-    # watermark past all real data, the second's processing finalizes it
-    def sentinel(eid, t_off):
-        return pd.DataFrame({
-            "event_id": [eid], "ts": pd.to_datetime([base + t_off],
-                                                    unit="s"),
-            "user_id": [999], "event_type": ["t"], "value": [0.0],
-            "props": [""],
-        })
-    for b in [*batches, sentinel(10**6, 10**6),
-              sentinel(10**6 + 1, 10**6 + 7200)]:
-        spark.createDataFrame(b).write.mode("append").parquet(in_dir)
-        ingest.run_available_now(
-            ingest.streaming_threshold_alerts(
-                ingest.stream_events(spark, in_dir), upper=90.0,
-                lower=55.0),
-            out_dir, ckpt)
-
-    got = spark.read.parquet(out_dir).where("user_id != 999").toPandas()
-    want = threshold_alerts(
-        spark.createDataFrame(pdf), upper=90.0, lower=55.0,
-        order_col="event_id").toPandas()
-    keys = ["user_id", "ts"]
-    for df in (got, want):
-        df.sort_values(keys, inplace=True, ignore_index=True)
-    assert len(got) == len(want) and len(got) > 0
-    for c in ("user_id", "ts", "value", "event"):
-        assert (got[c] == want[c]).all(), c
-    with pytest.raises(ValueError, match="lower <= upper"):
-        ingest.streaming_threshold_alerts(
-            ingest.stream_events(spark, in_dir), upper=1.0, lower=2.0)
-
-
 def test_incremental_fold_crash_window_redelivery(spark, tmp_path,
                                                   monkeypatch):
     """Crash-window property (VERDICT r4 #6): a failure injected inside
@@ -724,162 +421,3 @@ def test_incremental_fold_crash_window_redelivery(spark, tmp_path,
     assert not os.path.exists(os.path.join(tbl, "v2", "_pb=0",
                                            "part-junk.parquet"))
     shutil.rmtree(str(tmp_path / "control"), ignore_errors=True)
-
-
-def test_streaming_hll_converges_to_batch(spark, tmp_path):
-    """streaming_hll_distinct: update-mode running estimate; after each
-    drain the LATEST row per group equals the batch hll_distinct over
-    all rows streamed so far — bit-exact, including across a
-    checkpoint-resumed second drain."""
-    from ts2g2_spark.operators import sketches
-
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    def mk_events(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id").alias("event_id"),
-            F.timestamp_seconds(1704067200 + F.col("id")).alias("ts"),
-            (F.col("id") % 37).alias("user_id"),
-            F.concat(F.lit("t"), (F.col("id") % 3)).alias("event_type"),
-            F.lit(1.0).alias("value"),
-            F.lit("{}").alias("props"),
-        )
-
-    emitted: list[tuple[int, list]] = []
-
-    def drain():
-        q = (
-            ingest.streaming_hll_distinct(
-                ingest.stream_events(spark, in_dir, max_files=1))
-            .writeStream
-            .foreachBatch(lambda df, bid: emitted.append(
-                (bid, df.collect())))
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def latest_per_group():
-        last = {}
-        for bid, rows in sorted(emitted, key=lambda t: t[0]):
-            for r in rows:
-                last[r.event_type] = r
-        return last
-
-    mk_events(0, 400).write.mode("append").parquet(in_dir)
-    drain()
-    got1 = latest_per_group()
-    want1 = {r.event_type: r for r in sketches.hll_distinct(
-        mk_events(0, 400), "user_id", ("event_type",)).collect()}
-    assert {k: (v.n_occupied, v.sum_units, v.est_distinct)
-            for k, v in got1.items()} == \
-           {k: (v.n_occupied, v.sum_units, v.est_distinct)
-            for k, v in want1.items()}
-
-    # second drain resumes the register state from the checkpoint;
-    # new users (id % 53 shifts the residues) must fold into it
-    mk_events(4000, 4600).select(
-        "event_id", "ts", (F.col("event_id") % 53).alias("user_id"),
-        "event_type", "value", "props",
-    ).write.mode("append").parquet(in_dir)
-    drain()
-    union = mk_events(0, 400).unionByName(
-        mk_events(4000, 4600).select(
-            "event_id", "ts", (F.col("event_id") % 53).alias("user_id"),
-            "event_type", "value", "props"))
-    want2 = {r.event_type: r for r in sketches.hll_distinct(
-        union, "user_id", ("event_type",)).collect()}
-    got2 = latest_per_group()
-    assert {k: (v.n_occupied, v.sum_units, v.est_distinct)
-            for k, v in got2.items()} == \
-           {k: (v.n_occupied, v.sum_units, v.est_distinct)
-            for k, v in want2.items()}
-    # the running estimate grew (more distincts streamed)
-    assert all(got2[k].n_occupied >= got1[k].n_occupied for k in got1)
-
-
-def test_streaming_hdr_converges_to_batch(spark, tmp_path):
-    """streaming_hdr_quantiles: update-mode running quantiles; after
-    each drain the LATEST rows per group equal the batch
-    hdr_quantiles(hdr_sketch(...)) over all rows streamed so far —
-    integer-exact, including across a checkpoint-resumed second
-    drain."""
-    from ts2g2_spark.operators import sketches
-
-    in_dir = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(in_dir)
-
-    def mk_events(lo, hi, scale=37):
-        return spark.range(lo, hi).select(
-            F.col("id").alias("event_id"),
-            F.timestamp_seconds(1704067200 + F.col("id")).alias("ts"),
-            (F.col("id") % 7).alias("user_id"),
-            F.concat(F.lit("t"), (F.col("id") % 3)).alias("event_type"),
-            ((F.col("id") * scale) % 9001).cast("double").alias("value"),
-            F.lit("{}").alias("props"),
-        )
-
-    emitted: list[tuple[int, list]] = []
-
-    def drain():
-        q = (
-            ingest.streaming_hdr_quantiles(
-                ingest.stream_events(spark, in_dir, max_files=1),
-                "CAST(value AS BIGINT)", qs=(0.5, 0.99))
-            .writeStream
-            .foreachBatch(lambda df, bid: emitted.append(
-                (bid, df.collect())))
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    def latest_per_key():
-        last = {}
-        for bid, rows in sorted(emitted, key=lambda t: t[0]):
-            for r in rows:
-                last[(r.event_type, r.q)] = (
-                    r.n_total, r.rank, r.q_lo, r.q_hi)
-        return last
-
-    def batch(df):
-        sk = sketches.hdr_sketch(df, "CAST(value AS BIGINT)",
-                                 group_cols=("event_type",))
-        return {(r.event_type, r.q): (r.n_total, r.rank, r.q_lo, r.q_hi)
-                for r in sketches.hdr_quantiles(
-                    sk, (0.5, 0.99),
-                    group_cols=("event_type",)).collect()}
-
-    mk_events(0, 400).write.mode("append").parquet(in_dir)
-    drain()
-    assert latest_per_key() == batch(mk_events(0, 400))
-
-    # second drain resumes bucket state from the checkpoint; a new
-    # value scale shifts the distribution upward
-    mk_events(4000, 4500, scale=91).write.mode("append").parquet(in_dir)
-    drain()
-    union = mk_events(0, 400).unionByName(mk_events(4000, 4500,
-                                                    scale=91))
-    got2 = latest_per_key()
-    assert got2 == batch(union)
-    # n_total grew by exactly the second batch's rows (900 / 3 groups)
-    assert all(got2[k][0] == 300 for k in got2)
-
-
-def test_streaming_hdr_validation(spark, tmp_path):
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    stream = ingest.stream_events(spark, in_dir, max_files=1)
-    with pytest.raises(ValueError, match="group_cols"):
-        ingest.streaming_hdr_quantiles(stream, "value", group_cols=())
-    with pytest.raises(ValueError, match="q must be"):
-        ingest.streaming_hdr_quantiles(stream, "value", qs=(0.0,))
-    with pytest.raises(ValueError, match="sub_bits"):
-        ingest.streaming_hdr_quantiles(stream, "value", sub_bits=99)

@@ -814,19 +814,6 @@ def test_url_hosts_skips_userinfo(spark):
     assert got == ["bad.org", "evil.com", "plain.net"]
 
 
-def test_blocklist_filter_drops_linking_docs(spark, url_docs):
-    from ts2g2_spark.operators.text import blocklist_filter
-
-    kept = sorted(r.doc_id for r in blocklist_filter(
-        url_docs, ["a.example.com"]).collect())
-    # doc 1 matches via the lowercased A.example.com link; only 3 survives
-    assert kept == [3]
-    assert sorted(r.doc_id for r in blocklist_filter(
-        url_docs, ["b.org"]).collect()) == [2, 3, 4]
-    # empty blocklist is the identity
-    assert blocklist_filter(url_docs, []).count() == 4
-
-
 def test_canonicalize_urls_hand_cases(spark):
     from ts2g2_spark.operators.text import canonicalize_urls
 

@@ -3,8 +3,8 @@
 The multimodal operators (operators/multimodal.py) treat media as opaque
 binary + typed metadata; this module supplies REAL decode for the
 formats that need no external library — uncompressed BMP, binary PPM/PGM
-(netpbm P5/P6), and PCM WAV — so `extract_features` / `resize_images`
-can compute from actual pixels/samples instead of the deterministic fake.
+(netpbm P5/P6), and PCM WAV — so `extract_features` can compute from
+actual pixels/samples instead of the deterministic fake.
 Compressed formats (PNG/JPEG/GIF, any video codec) still raise
 NotImplementedError with the magic spelled out: the sandbox ships no
 pillow/ffmpeg, and silently faking a decode for real compressed data

@@ -182,6 +182,8 @@ def generate_quantile_sequences(
                 if r.values is None:
                     continue  # a null series yields no row
                 y = np.asarray(r.values, np.float64)
+                if not np.isfinite(y).all():
+                    continue  # nor does one holding NaN/±inf: no graph
                 bins, idx = K.quantile_bins_indices(y, Q)
                 q_values: list[list[float]] = [[] for _ in range(Q)]
                 for i, b in enumerate(idx):
@@ -231,6 +233,8 @@ def generate_ordinal_sequences(
                 if r.values is None:
                     continue  # a null series yields no row
                 y = np.asarray(r.values, np.float64)
+                if not np.isfinite(y).all():
+                    continue  # nor does one holding NaN/±inf: no graph
                 pats = K.ordinal_patterns(y, w, tau)
                 uniq = list(dict.fromkeys(map(tuple, pats.tolist())))
                 index = {p: i for i, p in enumerate(uniq)}

@@ -40,27 +40,12 @@ MEDIA_SCHEMA = (
 FEATURE_SCHEMA = (
     "media_id string, kind string, feature array<float>, feat_dim int"
 )
-FRAME_SCHEMA = (
-    "media_id string, frame_idx int, payload binary, width int, height int"
-)
 
 
 def _fake_pixels(payload: bytes, h: int, w: int) -> np.ndarray:
     """Deterministic fake decode: pixel grid seeded by the payload crc."""
     rng = np.random.default_rng(zlib.crc32(payload))
     return rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-
-
-def attach_metadata(
-    media: DataFrame,
-    bytes_col: str = "payload",
-) -> DataFrame:
-    """Cheap byte-level metadata without decoding: size + content hash —
-    pure Catalyst (xxhash64/length), used for exact dedup and partition
-    pruning of media tables."""
-    return media.withColumn(
-        "n_bytes", F.length(F.col(bytes_col))
-    ).withColumn("content_hash", F.xxhash64(F.col(bytes_col)))
 
 
 def exact_media_dedup(media: DataFrame, bytes_col: str = "payload"
@@ -133,91 +118,3 @@ def extract_features(
 
     return media.select("media_id", "kind", "payload").mapInPandas(
         kern, schema=FEATURE_SCHEMA)
-
-
-def sample_frames(
-    media: DataFrame,
-    every_n: int = 10,
-    decoder: Callable[[bytes, str], np.ndarray] | str | None = "fake",
-) -> DataFrame:
-    """Frame sampling for video rows: emit every_n-th frame as its own
-    binary row (fan-out inside the Arrow batch; output rows are small and
-    re-partitionable downstream).  Fake decode synthesizes n_frames from
-    metadata.  decoder="codec" raises: there is no self-contained
-    (uncompressed, container-free) video format to hand-decode — real
-    frame extraction needs ffmpeg."""
-    if decoder is None or decoder == "codec":
-        raise NotImplementedError(
-            "video decoding unavailable here — every practical video "
-            "format is codec-compressed (needs ffmpeg); decoder='fake' "
-            "exercises the fan-out plumbing deterministically")
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                n = int(r.n_frames or 0)
-                for fi in range(0, n, every_n):
-                    px = _fake_pixels(bytes(r.payload) + fi.to_bytes(4, "big"),
-                                      int(r.height or 8), int(r.width or 8))
-                    rows.append({
-                        "media_id": r.media_id, "frame_idx": fi,
-                        "payload": px.tobytes(),
-                        "width": int(r.width or 8),
-                        "height": int(r.height or 8),
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media.where(F.col("kind") == "video").select(
-        "media_id", "payload", "width", "height", "n_frames"
-    ).mapInPandas(kern, schema=FRAME_SCHEMA)
-
-
-def resize_images(
-    media: DataFrame,
-    out_w: int = 16,
-    out_h: int = 16,
-    decoder: Callable[[bytes, str], np.ndarray] | str | None = "fake",
-) -> DataFrame:
-    """Nearest-neighbor image resize.  decoder="codec" decodes REAL
-    BMP/PGM/PPM payloads (RGB reduced to integer luma so the output grid
-    is single-channel like the schema's width x height payload);
-    "fake" synthesizes a crc-seeded grid from the metadata dimensions.
-    Output payload is the raw resized uint8 grid."""
-    if decoder is None:
-        raise NotImplementedError("image decoding unavailable here")
-
-    def _px(payload: bytes, h: int, w: int) -> np.ndarray:
-        from ts2g2_spark.functions import mediacodec
-
-        if callable(decoder):
-            # a real decoder commonly returns (H, W, 3) RGB — reduce to
-            # luma like the codec path so the grid unpack below holds
-            return mediacodec.luma(
-                np.asarray(decoder(payload, "image"), dtype=np.uint8))
-        if decoder == "codec":
-            return mediacodec.luma(mediacodec.decode_media(payload, "image"))
-        return _fake_pixels(payload, h, w)
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                px = _px(bytes(r.payload), int(r.height or 32),
-                         int(r.width or 32))
-                h, w = px.shape
-                yi = (np.arange(out_h) * h // out_h)
-                xi = (np.arange(out_w) * w // out_w)
-                small = px[yi][:, xi]
-                rows.append({
-                    "media_id": r.media_id, "frame_idx": 0,
-                    "payload": small.tobytes(),
-                    "width": out_w, "height": out_h,
-                })
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return media.where(F.col("kind") == "image").select(
-        "media_id", "payload", "width", "height"
-    ).mapInPandas(kern, schema=FRAME_SCHEMA)

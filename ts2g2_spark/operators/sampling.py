@@ -89,21 +89,6 @@ def split_assignment(
     )
 
 
-def train_val_split(
-    df: DataFrame,
-    val_fraction: float,
-    key_col: str = "doc_id",
-    salt: str = "split",
-) -> tuple[DataFrame, DataFrame]:
-    """(train, val) pair from split_assignment — disjoint and exhaustive
-    by construction."""
-    assigned = split_assignment(df, val_fraction, key_col, salt)
-    return (
-        assigned.where(F.col("split") == "train").drop("split"),
-        assigned.where(F.col("split") == "val").drop("split"),
-    )
-
-
 def datamix_rebalance(
     docs: DataFrame,
     targets: dict[str, float],

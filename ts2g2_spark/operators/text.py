@@ -1156,26 +1156,6 @@ def domain_stats(
     return out.withColumn("blocked", blocked)
 
 
-def blocklist_filter(
-    docs: DataFrame,
-    blocked_hosts: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Drop every doc that links to ANY blocked host (the enforcement
-    half of `domain_stats`).  The offending id set is built map-side
-    (isin literal on the exploded hosts, then distinct) and removed
-    with a left-anti join on the id — the doc payload is never
-    shuffled; only ids move.  Blocklist entries are lowercased on entry
-    (extracted hosts always are)."""
-    if not blocked_hosts:
-        return docs
-    bad = (url_hosts(docs, text_col=text_col, id_col=id_col)
-           .where(F.col("host").isin([b.lower() for b in blocked_hosts]))
-           .select(id_col).distinct())
-    return docs.join(bad, id_col, "left_anti")
-
-
 # URL canonicalization contract (crawl-dedup hygiene).  Every regex is a
 # module constant so the SQL oracle interpolates the SAME pattern — the
 # two engines can't drift (the URL_HOST_RE posture).  All patterns are

@@ -43,8 +43,8 @@ def quality_gate(
 ) -> DataFrame:
     """The STATELESS half of corpus cleaning: quality + language (+
     optional repetition) gates as ONE projection pass — no joins, no
-    state, so the identical expression tree runs on a batch frame or a
-    readStream (streaming/corpus.py).  Deriving gates as separate
+    state, so the identical expression tree would run on a batch frame
+    or a readStream alike.  Deriving gates as separate
     frames and joining back re-expands the scan subtree once per join
     (the audited anti-pattern: 25 exchanges in the first cut of
     datamix_report)."""
