@@ -597,18 +597,17 @@ def q_codec_roundtrip(spark, sf_dir):
     per-group pandas sort it replaces was ~40% of the stage); the Arrow
     kernel only runs the codecs.  Spark timestamps are µs precision, so
     unix_micros*1000 equals pandas' datetime64[ns] int64 view."""
-    from collections.abc import Iterator
-
-    import pandas as pd
+    import numpy as np
 
     from ts2g2_spark.functions import codecs
+    from ts2g2_spark.operators import graphs
 
     ev = _events(spark, sf_dir)
     packed = ev.groupBy("user_id").agg(
         F.array_sort(
             F.collect_list(F.struct("ts", "event_id", "value"))).alias("p")
     ).select(
-        "user_id",
+        F.col("user_id").alias("series_key"),
         # events.ts is TIMESTAMP_NTZ; the session is pinned UTC, so the
         # cast re-reads the wall time as the same instant (= pandas'
         # datetime64[ns] int64 view of the NTZ value)
@@ -617,30 +616,21 @@ def q_codec_roundtrip(spark, sf_dir):
         F.expr("transform(p, s -> s.value)").alias("vals"),
     )
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(_key, ts, v):
+        ok = bool(
+            np.array_equal(codecs.dod_decode(codecs.dod_encode(ts)), ts)
+            and np.array_equal(
+                codecs.gorilla_decode(codecs.gorilla_encode(v)).view("u8"),
+                v.view("u8"),
+            )
+        )
+        return [len(ts)], [ok]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                ts = np.asarray(r.ts_ns, dtype=np.int64)
-                v = np.asarray(r.vals, dtype=np.float64)
-                ok = bool(
-                    np.array_equal(
-                        codecs.dod_decode(codecs.dod_encode(ts)), ts)
-                    and np.array_equal(
-                        codecs.gorilla_decode(
-                            codecs.gorilla_encode(v)).view("u8"),
-                        v.view("u8"),
-                    )
-                )
-                rows.append({"user_id": r.user_id, "n_pts": len(ts),
-                             "roundtrip_ok": ok})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return packed.mapInPandas(
-        kern, schema="user_id long, n_pts long, roundtrip_ok boolean")
+    return graphs._map_segments(
+        packed, "series_key long, n_pts long, roundtrip_ok boolean",
+        graphs._row_kernel([("n_pts", "long"), ("roundtrip_ok", "boolean")],
+                           row),
+    ).withColumnRenamed("series_key", "user_id")
 
 
 CODEC_SQL = """
@@ -839,34 +829,20 @@ def q_qg_mean_jump(spark, sf_dir):
     reproduced; the reference's own method crashes upstream).  Ordering
     via the JVM series pack (series_from_points); the kernel is
     map-only."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from ts2g2_spark.operators import kernels
+    from ts2g2_spark.operators import graphs, kernels
 
     series = _event_series(spark, sf_dir)
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(_key, y):
+        jump = kernels.qg_mean_jump_length(y, 4, 2)
+        return [1, 2], [round(float(x), 9) for x in jump]
 
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.values is None:
-                    continue  # a null series yields no row
-                y = np.asarray(r.values, dtype=np.float64)
-                for phi in (1, 2):
-                    e, w = kernels.qg_edges(y, 4, phi)
-                    jumps = np.abs(e[:, 0] - e[:, 1]) * w
-                    rows.append({
-                        "user_id": int(r.series_key), "phi": phi,
-                        "mean_jump": round(float(np.mean(jumps)), 9)})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return series.mapInPandas(
-        kern, schema="user_id long, phi int, mean_jump double")
+    return graphs._map_segments(
+        series.select("series_key", "values"),
+        "series_key string, phi int, mean_jump double",
+        graphs._row_kernel([("phi", "int"), ("mean_jump", "double")], row),
+    ).select(F.col("series_key").cast("long").alias("user_id"), "phi",
+             "mean_jump")
 
 
 QG_JUMP_SQL = f"""

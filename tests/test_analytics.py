@@ -174,6 +174,11 @@ def test_kendall_tau_fast_equals_pairjoin(spark):
         slow = analytics.kendall_tau(a, b).collect()[0].tau
         fast = analytics.kendall_tau_fast(a, b).collect()[0].tau
         assert abs(slow - fast) < 1e-12, (n, slow, fast)
+    # no pair (an empty or 1-element ranking): tau is undefined, null
+    one = spark.createDataFrame([(0, 1)], "id long, rank long")
+    for x in (one, one.limit(0)):
+        assert [tuple(r) for r in analytics.kendall_tau_fast(
+            x, one).collect()] == [(None,)]
 
 
 def test_count_inversions():
@@ -464,3 +469,70 @@ def test_eigenvector_centrality_power_spark(spark):
     assert [r.node for r in rows] == list(range(6))
     assert np.allclose([r.centrality for r in rows],
                        [ref[i] for i in range(6)], atol=1e-8)
+
+
+# series: a path, one self-loop node, one edge, a star; node_counts adds
+# an edgeless 3-node and an edgeless 1-node series
+PACK_EDGES = [("path", 0, 1), ("path", 1, 2), ("path", 2, 3),
+              ("loop", 0, 0), ("pair", 1, 0),
+              ("star", 0, 1), ("star", 0, 2), ("star", 3, 0)]
+PACK_COUNTS = [("path", 6), ("loop", 1), ("pair", 2), ("star", 4),
+               ("empty", 3), ("single", 1)]
+
+
+def _by_series(edges):
+    out = {}
+    for k, s, d in sorted(edges):
+        out.setdefault(k, ([], []))
+        out[k][0].append(s)
+        out[k][1].append(d)
+    return {k: (np.asarray(s, np.int64), np.asarray(d, np.int64))
+            for k, (s, d) in out.items()}
+
+
+def test_packed_operators_match_kernels(spark):
+    """The per-series analytics operators in 2-row Arrow batches, on
+    1-node, edgeless and 1-edge graphs: rows equal their kernels run per
+    series in-process."""
+    from ts2g2_spark.operators.generate import _seeds
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        edges = spark.createDataFrame(
+            PACK_EDGES, "series_key string, src long, dst long")
+        counts = spark.createDataFrame(
+            PACK_COUNTS, "series_key string, n long")
+        g = _by_series(PACK_EDGES)
+        nmax = {k: int(max(s.max(), d.max())) + 1 for k, (s, d) in g.items()}
+        empty = (np.empty(0, np.int64), np.empty(0, np.int64))
+
+        got = {r.series_key: r.embedding for r in
+               analytics.eigenvector_centrality(edges).collect()}
+        assert got == {k: analytics.eigenvector_centrality_kernel(
+            nmax[k], *g[k]).tolist() for k in g}
+        got = {r.series_key: r.embedding for r in
+               analytics.eigenvector_centrality(edges, counts).collect()}
+        assert got == {k: analytics.eigenvector_centrality_kernel(
+            n, *g.get(k, empty)).tolist() for k, n in PACK_COUNTS}
+
+        got = sorted(tuple(r) for r in analytics.eigenvector_centrality_power(
+            edges, n_iter=7).collect())
+        assert got == sorted(
+            (k, i, c) for k in g for i, c in enumerate(
+                analytics.power_centrality_kernel(
+                    nmax[k], *g[k], n_iter=7).tolist()))
+
+        got = sorted(tuple(r) for r in analytics.random_walk_corpus(
+            edges, sample_size=2, path_length=4, run_seed=3).collect())
+        want = []
+        for k, (s, d) in g.items():
+            walks = analytics.random_walk_paths_kernel(
+                s.tolist(), d.tolist(), 2, 4,
+                np.random.RandomState(_seeds(3, k)[1]))
+            want += [(k, i, [str(x) for x in p])
+                     for i, p in enumerate(walks)]
+        assert got == sorted(want)
+    finally:
+        spark.conf.set(key, old)

@@ -111,3 +111,45 @@ def test_segment_encoders_equal_per_array_encodes(segs):
             chunk = data[offsets[i]:offsets[i + 1]].tobytes()
             assert chunk == encode(part)
             assert np.array_equal(decode(chunk), part)
+
+
+def test_codec_roundtrip_query_matches_kernel(spark):
+    """The contract's codec round-trip in 2-row Arrow batches, on a
+    1-point user, a user with a null value and ties on ts: one row per
+    user, n_pts and roundtrip_ok equal to the codecs run in-process on
+    the (ts, event_id)-ordered series."""
+    import datetime as dt
+
+    import __spark_entry__ as entry
+
+    t0 = dt.datetime(2024, 1, 1)
+    ev = [(1, t0, 10, 1.5),
+          (2, t0 + dt.timedelta(seconds=5), 20, None),
+          (3, t0, 20, -0.0), (4, t0 + dt.timedelta(microseconds=7), 20, 2.0),
+          (5, t0 + dt.timedelta(seconds=5), 20, 3.25)]
+    ev += [(10 + i, t0 + dt.timedelta(seconds=i // 2), 30, float(i) / 3)
+           for i in range(9)]
+    frame = spark.createDataFrame(
+        ev, "event_id long, ts timestamp, user_id long, value double")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old, orig = spark.conf.get(key), entry._events
+    spark.conf.set(key, "2")
+    entry._events = lambda spark, sf_dir: frame
+    try:
+        got = sorted(tuple(r) for r in entry.q_codec_roundtrip(
+            spark, None).collect())
+    finally:
+        entry._events = orig
+        spark.conf.set(key, old)
+    want = []
+    for user in sorted({u for *_, u, _ in ev}):
+        pts = sorted((t, e, v) for e, t, u, v in ev if u == user)
+        ts = np.array([(t - dt.datetime(1970, 1, 1))
+                       // dt.timedelta(microseconds=1) * 1000
+                       for t, _, _ in pts], np.int64)
+        v = np.array([np.nan if x is None else x for *_, x in pts])
+        ok = (np.array_equal(codecs.dod_decode(codecs.dod_encode(ts)), ts)
+              and np.array_equal(codecs.gorilla_decode(
+                  codecs.gorilla_encode(v)).view("u8"), v.view("u8")))
+        want.append((user, len(ts), bool(ok)))
+    assert got == want and [r[1] for r in got] == [1, 4, 9]

@@ -487,6 +487,8 @@ def _series_builders():
             entry._event_series = orig
 
     return {
+        "sliding": lambda s: generate.generate_sliding_sequences(
+            s, win_size=4, move_len=2, ts_length=12),
         "quantile": lambda s: generate.generate_quantile_sequences(
             s, Q=4, ts_length=12),
         "ordinal": lambda s: generate.generate_ordinal_sequences(
@@ -495,7 +497,8 @@ def _series_builders():
     }
 
 
-@pytest.mark.parametrize("builder", ["quantile", "ordinal", "qg_mean_jump"])
+@pytest.mark.parametrize("builder",
+                         ["sliding", "quantile", "ordinal", "qg_mean_jump"])
 def test_null_series_row_yields_no_row(spark, builder):
     """A null `values` row among others in one Arrow batch yields no
     output row, and the other rows are those of the frame without it."""
@@ -529,3 +532,123 @@ def test_nonfinite_series_row_yields_no_row(spark, builder, bad):
         [rows[0], rows[2]], schema).coalesce(1)).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert {r.series_key for r in got} == {"1", "3"}
+
+
+# ------------------------------------- walkers vs their row kernels
+_WALK = {"ts_length": 12, "node_strategy": "randomly", "skip": 0,
+         "switch": 1}
+_ROWS = ([("empty", []), ("one", [2.0]), ("null", None), ("two", [1.0, 3.0])]
+         + [(f"r{i}", np.round(np.random.default_rng(i).normal(
+             size=5 + 4 * i), 2).tolist()) for i in range(6)])
+
+
+def _walk_cases():
+    from ts2g2_spark.operators import generate
+
+    return {
+        "sliding": (
+            lambda s: generate.generate_sliding_sequences(
+                s, win_size=3, move_len=2, ts_length=12, run_seed=5),
+            lambda rng, y: generate._sliding_walk(
+                rng, y, win_size=3, move_len=2,
+                value_strategy="random_sliding", **_WALK)),
+        "quantile": (
+            lambda s: generate.generate_quantile_sequences(
+                s, Q=3, ts_length=12, run_seed=5),
+            lambda rng, y: generate._quantile_walk(
+                rng, y, Q=3, value_strategy="quantile_random", **_WALK)),
+        "ordinal": (
+            lambda s: generate.generate_ordinal_sequences(
+                s, w=3, tau=1, hist_bins=4, ts_length=12, run_seed=5),
+            lambda rng, y: generate._ordinal_walk(
+                rng, y, w=3, tau=1, hist_bins=4, **_WALK)),
+    }
+
+
+@pytest.fixture
+def two_row_batches(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    yield spark
+    spark.conf.set(key, old)
+
+
+def _want(rows, walk):
+    from ts2g2_spark.operators import generate
+
+    out = []
+    for key, *vals in rows:
+        if any(v is None for v in vals):
+            continue
+        ps, ns = generate._seeds(5, key)
+        seq = walk(gk.Rng.seeded(ps, ns), *vals)
+        if seq is not None:
+            out.append((key, ps, ns, [float(x) for x in seq]))
+    return out
+
+
+@pytest.mark.parametrize("walker", ["sliding", "quantile", "ordinal"])
+def test_series_walker_matches_row_kernel(two_row_batches, walker):
+    """In 2-row Arrow batches, with empty, 1-point and null rows: the
+    walker's rows, in order, are its row kernel's walks in-process with
+    the same seeds; a row with no graph or no window gives none."""
+    spark = two_row_batches
+    build, walk = _walk_cases()[walker]
+    df = spark.createDataFrame(
+        _ROWS, "series_key string, values array<double>").coalesce(1)
+    got = [tuple(r) for r in build(df).collect()]
+    want = _want([(k, None if v is None else np.asarray(v, np.float64))
+                  for k, v in _ROWS], walk)
+    assert got == want
+    assert not {"empty", "null"} & {k for k, *_ in got}
+    assert len(got) >= 6
+
+
+def test_packed_walker_matches_row_kernel(two_row_batches):
+    """generate_sequences on packed rows (a 1-node graph, paths, a null
+    row) in 2-row Arrow batches: its rows are _plain_walk's in-process."""
+    from ts2g2_spark.operators import generate
+
+    spark = two_row_batches
+    rows = [("one", 1, [[4.0]], [], []),
+            ("null", 2, None, [0], [1]),
+            ("path", 3, [[1.0, 2.0], [3.0], [4.0, 5.0]], [0, 1], [1, 2]),
+            ("pair", 2, [[7.0], [8.0]], [0], [1]),
+            ("star", 4, [[0.5], [1.5], [2.5], [3.5]], [0, 0, 0], [1, 2, 3])]
+    df = spark.createDataFrame(
+        rows, "series_key string, n long, node_values array<array<double>>,"
+        " adj_src array<long>, adj_dst array<long>").coalesce(1)
+    got = [tuple(r) for r in generate.generate_sequences(
+        df, ts_length=12, run_seed=5).collect()]
+    want = _want(
+        [(k, n, None if v is None else [np.asarray(x) for x in v],
+          np.asarray(s, np.int64), np.asarray(d, np.int64))
+         for k, n, v, s, d in rows],
+        lambda rng, *a: generate._plain_walk(
+            rng, *a, value_strategy="random", **_WALK))
+    assert got == want and [r[0] for r in got] == [
+        "one", "path", "pair", "star"]
+
+
+def test_qg_mean_jump_matches_kernel(two_row_batches):
+    """The contract's G9 builder in 2-row Arrow batches, with empty,
+    1-point and null rows: one row per phi of every non-null series, the
+    in-process kernels.qg_mean_jump_length rounded to 9 dp (NaN, for a
+    series with no transitions, is null)."""
+    from ts2g2_spark.operators import kernels
+
+    spark = two_row_batches
+    rows = [(str(i), v) for i, (_, v) in enumerate(_ROWS)]
+    got = [tuple(r) for r in _series_builders()["qg_mean_jump"](
+        spark.createDataFrame(
+            rows, "series_key string, values array<double>").coalesce(1)
+    ).collect()]
+    want = []
+    for key, v in rows:
+        if v is not None:
+            jump = kernels.qg_mean_jump_length(np.asarray(v, float), 4, 2)
+            want += [(int(key), phi, None if np.isnan(x) else round(x, 9))
+                     for phi, x in zip((1, 2), jump.tolist())]
+    assert got == want
+    assert any(x is None for *_, x in got) and any(x for *_, x in got)

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ts2g2_spark.operators import graphs, kernels
 
-BATCH_ROWS = 7
+BATCH_ROWS = 2
 
 SERIES = [
     ("empty", []),
@@ -142,10 +142,23 @@ def test_qg_emitter_matches_kernel(frame, Q, phi):
 
 
 def test_proximity_emitter_matches_kernel(frame):
-    got = _got(graphs.proximity_edges(
-        frame, method="recurrence", recurrence_type="epsilon", epsilon=0.5))
+    cases = [
+        ({"recurrence_type": "epsilon", "epsilon": 0.5},
+         lambda y: kernels.proximity_epsilon_edges(y, 0.5)),
+        ({"recurrence_type": "k-nnn", "k": 3},
+         lambda y: kernels.proximity_knn_edges(y, 3)),
+        ({"recurrence_type": "k-nnn", "k": 2, "tie_order": "stable"},
+         lambda y: kernels.proximity_knn_edges(y, 2, tie_order="stable")),
+        ({"recurrence_type": "annn", "k": 3},
+         lambda y: kernels.proximity_annn_edges(y, 3)),
+    ]
+    for kw, kernel in cases:
+        got = _got(graphs.proximity_edges(frame, method="recurrence", **kw))
+        assert got == _expected_edges(kernel) and len(got) > 0, kw
+    got = _got(graphs.proximity_edges(frame, method="cycle",
+                                      segment_length=3, threshold=0.2))
     assert got == _expected_edges(
-        lambda y: kernels.proximity_epsilon_edges(y, 0.5))
+        lambda y: kernels.proximity_cycle_edges(y, 3, 0.2))
 
 
 def test_multivariate_opg_emitter_matches_kernel(frame):
@@ -493,6 +506,18 @@ def test_nonfinite_values_pinned():
     # a NaN endpoint: HVG sees over what the other endpoint sees over
     assert extra(kernels.hvg_edges, [math.nan, 0.0, 1.0]) == [(0, 2)]
     assert extra(kernels.nvg_edges, [math.nan, 0.0, 1.0]) == []
+    # NVG with limit >= 1: a pair inside the window (2 <= j - i <= limit +
+    # 1) has no obstructor, so it is visible unless an endpoint is NaN --
+    # also when an endpoint is +-inf and the slope is -inf or NaN
+    for fn in (lambda y: kernels.nvg_edges(y, 1),
+               lambda y: np.stack(kernels.nvg_edges_segmented(
+                   y, [len(y)], 1), axis=1)):
+        assert extra(fn, [0.0, 5.0, -math.inf, 1.0, 2.0]) == [
+            (0, 2), (0, 3), (0, 4), (1, 3), (1, 4), (2, 4)]
+        assert extra(fn, [math.inf, 1.0, 2.0, 0.5, 3.0]) == [
+            (0, 2), (1, 3), (1, 4), (2, 4)]
+        assert extra(fn, [1.0, math.nan, 2.0, 3.0]) == [(0, 2), (0, 3)]
+        assert extra(fn, [math.inf, 0.0, math.inf]) == [(0, 2)]
     e, w = kernels.qg_edges(np.array([1.0, 2.0, math.nan, 3.0]), 2)
     assert len(e) == len(w) == 0
 

@@ -41,7 +41,7 @@ SERIES = {
     "steps": [1.0, 1.0, 2.0, 2.0, 1.0, 3.0, 3.0, 1.0, 2.0, 4.0],
     "ints": [float(x) for x in np.random.default_rng(23).integers(0, 9, 40)],
 }
-BATCH_ROWS = 3
+BATCH_ROWS = 2
 
 
 @pytest.fixture(scope="module")

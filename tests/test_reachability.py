@@ -39,14 +39,6 @@ ALLOWED: dict[str, str] = {
     "operators.sketches.bloom_py_contains": _SKETCH_ORACLE,
     "operators.sketches.kmv_py": _SKETCH_ORACLE,
     "operators.sketches.hdr_py": _SKETCH_ORACLE,
-    "operators.sketches.cms_merge":
-        "merge half of the mergeable count-min sketch; its linearity is "
-        "pinned by test_sketches",
-    "operators.sketches.bloom_merge":
-        "merge half of the mergeable Bloom filter, pinned by test_sketches",
-    "operators.sketches.bloom_contains":
-        "join-path membership probe that bloom_words' size guard names "
-        "as its alternative",
     "operators.bpe.pair_counts":
         "relational pair count, test_bpe's oracle for the counting kernel",
     "functions.codecs.int_array_roundtrip_ok":
@@ -61,8 +53,6 @@ ALLOWED: dict[str, str] = {
     "sources.io.read_financial_xml": _PAPER_INPUT,
     "operators.kernels.qg_transitions":
         "reference-shaped QG transitions the parity suite pins",
-    "operators.kernels.qg_mean_jump_length":
-        "G9 mean jump length (COVERAGE.md) the parity suite pins",
 }
 
 _IDENT = re.compile(r"[A-Za-z_]\w*\Z")

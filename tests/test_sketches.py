@@ -215,18 +215,6 @@ def test_cms_matches_python_twin_and_overcounts(spark):
     assert sum(1 for w in truth if est2[w] == truth[w]) >= 18
 
 
-def test_cms_merge_linearity(spark):
-    words = spark.range(0, 4000).select(
-        (F.col("id") % 97).cast("string").alias("w"),
-        (F.col("id") % 2).alias("half"))
-    whole = sketches.cms_sketch(words, "w", d=3, w_buckets=256)
-    parts = sketches.cms_sketch(
-        words, "w", group_cols=("half",), d=3, w_buckets=256)
-    merged = sketches.cms_merge(parts, group_cols=())
-    sym = merged.exceptAll(whole).unionAll(whole.exceptAll(merged))
-    assert sym.count() == 0
-
-
 def test_cms_validation(spark):
     with pytest.raises(ValueError):
         sketches.cms_py([], [], d=0)
@@ -322,18 +310,21 @@ def test_bloom_no_false_negatives_and_twins(spark):
     # bloom never drops a true member
     assert exact.exceptAll(pruned).count() == 0
     assert pruned.count() >= exact.count()
-    # join-path membership == packed-literal path
-    items = facts.select(F.col("fk").alias("v")).distinct()
-    jset = {r.v for r in sketches.bloom_contains(
-        bits, items, "v", k=3, n_bits=2048).where("may_contain").collect()}
-    pset = {r.fk for r in pruned.select("fk").distinct().collect()}
-    assert jset == pset
     # python twin builds the identical bit set
     pybits = sketches.bloom_py(
         [r.key for r in keys.collect()], k=3, n_bits=2048)
     assert pybits == {r.bit_pos for r in bits.collect()}
     for r in keys.collect():  # twin membership: every insert tests true
         assert sketches.bloom_py_contains(pybits, r.key, k=3, n_bits=2048)
+    # empty key set prunes everything
+    assert sketches.bloom_prune(
+        facts, "fk", keys.limit(0), "key", k=3, n_bits=2048).count() == 0
+    with pytest.raises(ValueError):
+        sketches.bloom_bits(keys, "key", k=0, n_bits=1024)
+    with pytest.raises(ValueError):
+        sketches.bloom_bits(keys, "key", k=3, n_bits=32)
+    with pytest.raises(ValueError, match="max_bits"):
+        sketches.bloom_words(bits, n_bits=1 << 30)
 
 
 def test_bloom_prune_plan_is_map_only(spark):
@@ -343,29 +334,6 @@ def test_bloom_prune_plan_is_map_only(spark):
                                   n_bits=1024)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Join" not in plan
-
-
-def test_bloom_merge_empty_and_guards(spark):
-    keys = spark.range(0, 100).select(F.col("id").alias("key"))
-    lo = sketches.bloom_bits(keys.where("key < 50"), "key", k=3,
-                             n_bits=1024)
-    hi = sketches.bloom_bits(keys.where("key >= 50"), "key", k=3,
-                             n_bits=1024)
-    merged = {r.bit_pos for r in
-              sketches.bloom_merge(lo.unionByName(hi)).collect()}
-    full = {r.bit_pos for r in
-            sketches.bloom_bits(keys, "key", k=3, n_bits=1024).collect()}
-    assert merged == full
-    # empty key set prunes everything
-    facts = spark.range(0, 200).select(F.col("id").alias("fk"))
-    assert sketches.bloom_prune(
-        facts, "fk", keys.limit(0), "key", k=3, n_bits=1024).count() == 0
-    with pytest.raises(ValueError):
-        sketches.bloom_bits(keys, "key", k=0, n_bits=1024)
-    with pytest.raises(ValueError):
-        sketches.bloom_bits(keys, "key", k=3, n_bits=32)
-    with pytest.raises(ValueError, match="max_bits"):
-        sketches.bloom_words(lo, n_bits=1 << 30)
 
 
 def test_kmv_matches_python_twin_exactly(spark):

@@ -7,17 +7,21 @@ deterministic closed-form model over the same corpus; walk_hash_embedding
 remains as the cheap streaming-friendly variant.  E3 (TS2Vec) stays out:
 the reference's vendored ts2vec directory is empty upstream
 (embeddings/ts2g2_embeddings.py:122 import fails there too, SURVEY §2.6).
+
+The per-series kernels (the centralities, the walk corpus) and
+kendall_tau_fast's one-row inversion count run map-only on the emitter of
+operators/graphs.py (`graphs._map_segments`), one kernel call per packed
+row.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ts2g2_spark.operators import graphs
 
 
 # ------------------------------------------------------------------ E1
@@ -91,20 +95,13 @@ def eigenvector_centrality(
             )
         )
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                v = eigenvector_centrality_kernel(
-                    int(r.n),
-                    np.asarray(r.srcs, np.int64),
-                    np.asarray(r.dsts, np.int64))
-                rows.append({"series_key": r.series_key, "embedding": v})
-            if rows:
-                yield pd.DataFrame(rows)
+    def row(_key, srcs, dsts, n):
+        return [eigenvector_centrality_kernel(int(n), srcs, dsts)],
 
-    return packed.mapInPandas(
-        kern, schema="series_key string, embedding array<double>")
+    return graphs._map_segments(
+        packed.select("series_key", "srcs", "dsts", "n"),
+        "series_key string, embedding array<double>",
+        graphs._row_kernel([("embedding", "array<double>")], row))
 
 
 def power_centrality_kernel(
@@ -189,23 +186,14 @@ def eigenvector_centrality_power(
         (F.greatest(F.max("src"), F.max("dst")) + 1).alias("n"),
     )
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                v = power_centrality_kernel(
-                    int(r.n),
-                    np.asarray(r.srcs, np.int64),
-                    np.asarray(r.dsts, np.int64),
-                    n_iter=n_iter)
-                for node, c in enumerate(v):
-                    rows.append({"series_key": r.series_key,
-                                 "node": node, "centrality": c})
-            if rows:
-                yield pd.DataFrame(rows)
+    def row(_key, srcs, dsts, n):
+        v = power_centrality_kernel(int(n), srcs, dsts, n_iter=n_iter)
+        return np.arange(len(v)), v
 
-    return packed.mapInPandas(
-        kern, schema="series_key string, node int, centrality double")
+    return graphs._map_segments(
+        packed.select("series_key", "srcs", "dsts", "n"),
+        "series_key string, node int, centrality double",
+        graphs._row_kernel([("node", "int"), ("centrality", "double")], row))
 
 
 # ------------------------------------------------------------------ E2
@@ -271,31 +259,23 @@ def random_walk_corpus(
     of shuffle order."""
     from ts2g2_spark.operators.generate import _seeds
 
+    e = F.array_sort(F.collect_list(F.struct("src", "dst")))
     packed = edges.groupBy("series_key").agg(
-        F.array_sort(
-            F.collect_list(F.struct("src", "dst"))).alias("e"))
+        F.transform(e, lambda s: s["src"]).alias("srcs"),
+        F.transform(e, lambda s: s["dst"]).alias("dsts"))
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                srcs = [int(x["src"]) for x in r.e]
-                dsts = [int(x["dst"]) for x in r.e]
-                _, np_seed = _seeds(run_seed, r.series_key)
-                rs = np.random.RandomState(np_seed)
-                walks = random_walk_paths_kernel(
-                    srcs, dsts, sample_size, path_length, rs)
-                for i, p in enumerate(walks):
-                    rows.append({
-                        "series_key": r.series_key, "walk_id": i,
-                        "walk": [str(x) for x in p],
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
+    def row(key, srcs, dsts):
+        _, np_seed = _seeds(run_seed, key)
+        walks = random_walk_paths_kernel(
+            srcs.tolist(), dsts.tolist(), sample_size, path_length,
+            np.random.RandomState(np_seed))
+        return (np.arange(len(walks)),
+                [[str(x) for x in p] for p in walks])
 
-    return packed.mapInPandas(
-        kern,
-        schema="series_key string, walk_id int, walk array<string>")
+    return graphs._map_segments(
+        packed, "series_key string, walk_id int, walk array<string>",
+        graphs._row_kernel([("walk_id", "int"), ("walk", "array<string>")],
+                           row))
 
 
 def walk_hash_embedding(
@@ -508,25 +488,23 @@ def kendall_tau_fast(
     kendall_tau (fully distributed pair join, same result)."""
     a = ranking_a.select(F.col("id"), F.col("rank").alias("ra"))
     b = ranking_b.select(F.col("id"), F.col("rank").alias("rb"))
-    packed = a.join(b, "id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("ra", "rb"))).alias("pairs"))
+    packed = a.join(b, "id").agg(F.transform(
+        F.array_sort(F.collect_list(F.struct("ra", "rb"))),
+        lambda p: p["rb"]).alias("rb"))  # rb ordered by ra
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                rb = np.array([int(p["rb"]) for p in r.pairs],
-                              dtype=np.int64)  # already ordered by ra
-                n = len(rb)
-                total = n * (n - 1) // 2
-                if total == 0:
-                    yield pd.DataFrame({"tau": [float("nan")]})
-                    continue
-                inv = _count_inversions(rb)
-                yield pd.DataFrame(
-                    {"tau": [(total - 2 * inv) / total]})
+    def row(_key, rb):
+        n = len(rb)
+        total = n * (n - 1) // 2
+        if total == 0:
+            return [float("nan")],
+        inv = _count_inversions(rb.astype(np.int64))
+        return [(total - 2 * inv) / total],
 
-    return packed.mapInPandas(kern, schema="tau double")
+    # one row, keyed by a constant for the emitter
+    return graphs._map_segments(
+        packed.select(F.lit("").alias("series_key"), "rb"),
+        "series_key string, tau double",
+        graphs._row_kernel([("tau", "double")], row)).select("tau")
 
 
 def kendall_tau(

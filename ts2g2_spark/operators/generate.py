@@ -7,27 +7,30 @@ kernel with a DETERMINISTIC per-series seed derived from (run_seed,
 series_key) — recorded in the output so lineage can replay any row
 (SURVEY §4.3 "deterministic RNG for R-ops").
 
-The walks themselves are embarrassingly parallel across series: one
-mapInPandas stage, zero shuffle beyond the pack groupBy.
+The walks themselves are embarrassingly parallel across series: each
+walker is one map-only Arrow stage on the emitter of operators/graphs.py
+(`graphs._map_segments`, one walk per row), zero shuffle beyond the pack
+groupBy.  A null series row yields no output row.  `hash_walks` is the
+exception: it walks per-series edge groups, so it is one grouped
+applyInPandas.
 """
 
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ts2g2_spark.operators import genkernels as gk
+from ts2g2_spark.operators import graphs, kernels
 
 PACKED_SCHEMA = (
     "series_key string, n long, node_values array<array<double>>, "
     "adj_src array<long>, adj_dst array<long>"
 )
 SEQ_SCHEMA = "series_key string, py_seed long, np_seed long, seq array<double>"
+_SEQ_COLS = [("py_seed", "long"), ("np_seed", "long"), ("seq", "array<double>")]
 
 
 def pack_graph_rows(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -65,15 +68,35 @@ def _seeds(run_seed: int, series_key: str) -> tuple[int, int]:
     return base & 0x7FFFFFFF, (base ^ 0x5DEECE66) & 0x7FFFFFFF
 
 
-def _graph_from_row(row) -> gk.GraphData:
-    n = int(row.n)
-    neighbors: list[list[int]] = [[] for _ in range(n)]
-    for s, d in zip(row.adj_src, row.adj_dst):
-        s, d = int(s), int(d)
+def _walk_rows(series: DataFrame, run_seed: int, walk, **params
+               ) -> DataFrame:
+    """One generated sequence per non-null row of `series` (series_key,
+    then walk's columns): walk(rng, *row values after series_key,
+    **params) with the row's seeded Rng; a walk that returns None gives
+    its row no output row."""
+
+    def row(key, *args):
+        ps, ns = _seeds(run_seed, key)
+        seq = walk(gk.Rng.seeded(ps, ns), *args, **params)
+        if seq is None:
+            return [], [], []
+        return [ps], [ns], [np.asarray(seq, np.float64)]
+
+    return graphs._map_segments(series, SEQ_SCHEMA,
+                                graphs._row_kernel(_SEQ_COLS, row))
+
+
+def _plain_walk(rng, n, node_values, adj_src, adj_dst, *, ts_length,
+                value_strategy, node_strategy, skip, switch):
+    """One packed graph's walk (generate_sequences' row kernel)."""
+    neighbors: list[list[int]] = [[] for _ in range(int(n))]
+    for s, d in zip(adj_src.tolist(), adj_dst.tolist()):
         neighbors[s].append(d)
         neighbors[d].append(s)  # undirected adjacency, insertion order
-    values = [list(map(float, v)) for v in row.node_values]
-    return gk.GraphData(values=values, neighbors=neighbors)
+    g = gk.GraphData(values=[v.tolist() for v in node_values],
+                     neighbors=neighbors)
+    return gk.walk_plain([g], ts_length, value_strategy, node_strategy, rng,
+                         skip=skip, switch=switch)[0]
 
 
 def generate_sequences(
@@ -87,24 +110,32 @@ def generate_sequences(
 ) -> DataFrame:
     """Walk every packed per-series graph; returns the generated sequence
     plus the seeds used (lineage/replay contract)."""
+    return _walk_rows(
+        packed.select("series_key", "n", "node_values", "adj_src",
+                      "adj_dst"), run_seed, _plain_walk,
+        ts_length=ts_length, value_strategy=value_strategy,
+        node_strategy=node_strategy, skip=skip, switch=switch)
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                g = _graph_from_row(r)
-                ps, ns = _seeds(run_seed, r.series_key)
-                rng = gk.Rng.seeded(ps, ns)
-                seq = gk.walk_plain([g], ts_length, value_strategy,
-                                    node_strategy, rng, skip=skip,
-                                    switch=switch)[0]
-                rows.append({"series_key": r.series_key, "py_seed": ps,
-                             "np_seed": ns,
-                             "seq": np.asarray(seq, np.float64)})
-            if rows:
-                yield pd.DataFrame(rows)
 
-    return packed.mapInPandas(kern, schema=SEQ_SCHEMA)
+def _sliding_walk(rng, values, *, win_size, move_len, ts_length,
+                  value_strategy, node_strategy, skip, switch):
+    """One series' sliding-window walk, None when it has no window
+    (generate_sliding_sequences' row kernel)."""
+    y = values.tolist()
+    n = len(y)
+    if n <= win_size:
+        return None
+    starts = list(range(0, n - win_size, move_len))
+    win_values = [[[y[s + t]] for t in range(win_size)] for s in starts]
+    m = len(starts)
+    neighbors: list[list[int]] = [[] for _ in range(m)]
+    for i in range(m - 1):
+        neighbors[i].append(i + 1)
+        neighbors[i + 1].append(i)
+    g = gk.GraphData(values=[[] for _ in range(m)], neighbors=neighbors,
+                     win_values=win_values)
+    return gk.walk_sliding([g], ts_length, value_strategy, node_strategy,
+                           rng, skip=skip, switch=switch)[0]
 
 
 def generate_sliding_sequences(
@@ -125,38 +156,31 @@ def generate_sliding_sequences(
     reference windowing off-by-one (core/model.py:81-82: the final window
     starting at len-win is dropped; len <= win -> no windows -> the series
     emits no row)."""
+    return _walk_rows(
+        series.select("series_key", "values"), run_seed, _sliding_walk,
+        win_size=win_size, move_len=move_len, ts_length=ts_length,
+        value_strategy=value_strategy, node_strategy=node_strategy,
+        skip=skip, switch=switch)
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                y = [float(v) for v in r.values]
-                n = len(y)
-                if n <= win_size:
-                    continue
-                starts = list(range(0, n - win_size, move_len))
-                win_values = [[[y[s + t]] for t in range(win_size)]
-                              for s in starts]
-                m = len(starts)
-                neighbors: list[list[int]] = [[] for _ in range(m)]
-                for i in range(m - 1):
-                    neighbors[i].append(i + 1)
-                    neighbors[i + 1].append(i)
-                g = gk.GraphData(values=[[] for _ in range(m)],
-                                 neighbors=neighbors,
-                                 win_values=win_values)
-                ps, ns = _seeds(run_seed, r.series_key)
-                rng = gk.Rng.seeded(ps, ns)
-                seq = gk.walk_sliding([g], ts_length, value_strategy,
-                                      node_strategy, rng, skip=skip,
-                                      switch=switch)[0]
-                rows.append({"series_key": r.series_key, "py_seed": ps,
-                             "np_seed": ns,
-                             "seq": np.asarray(seq, np.float64)})
-            if rows:
-                yield pd.DataFrame(rows)
 
-    return series.mapInPandas(kern, schema=SEQ_SCHEMA)
+def _quantile_walk(rng, y, *, Q, ts_length, value_strategy, node_strategy,
+                   skip, switch):
+    """One series' quantile-graph walk, None when it has no graph
+    (generate_quantile_sequences' row kernel)."""
+    if not len(y) or not np.isfinite(y).all():
+        return None  # an empty series, or one holding NaN/±inf: no bins
+    bins, idx = kernels.quantile_bins_indices(y, Q)
+    q_values: list[list[float]] = [[] for _ in range(Q)]
+    for i, b in enumerate(idx):
+        q_values[int(b)].append(float(y[i]))
+    e, _ = kernels.qg_edges(y, Q)
+    neighbors: list[list[int]] = [[] for _ in range(Q)]
+    for s, d in e.tolist():
+        neighbors[s].append(d)
+    g = gk.GraphData(values=[[] for _ in range(Q)], neighbors=neighbors,
+                     q_bins=bins.tolist(), q_values=q_values)
+    return gk.walk_quantile([g], ts_length, value_strategy, node_strategy,
+                            rng, skip=skip, switch=switch)[0]
 
 
 def generate_quantile_sequences(
@@ -173,40 +197,34 @@ def generate_quantile_sequences(
     (series_key, values): the kernel rebuilds the reference's quantile
     state (bins with the 1e-9 epsilon, recorded per-bin values —
     to_graph/strategies.py:407-435) and walks it, all row-local."""
-    from ts2g2_spark.operators import kernels as K
+    return _walk_rows(
+        series.select("series_key", "values"), run_seed, _quantile_walk,
+        Q=Q, ts_length=ts_length, value_strategy=value_strategy,
+        node_strategy=node_strategy, skip=skip, switch=switch)
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.values is None:
-                    continue  # a null series yields no row
-                y = np.asarray(r.values, np.float64)
-                if not np.isfinite(y).all():
-                    continue  # nor does one holding NaN/±inf: no graph
-                bins, idx = K.quantile_bins_indices(y, Q)
-                q_values: list[list[float]] = [[] for _ in range(Q)]
-                for i, b in enumerate(idx):
-                    q_values[int(b)].append(float(y[i]))
-                e, _ = K.qg_edges(y, Q)
-                neighbors: list[list[int]] = [[] for _ in range(Q)]
-                for s, d in e.tolist():
-                    neighbors[s].append(d)
-                g = gk.GraphData(values=[[] for _ in range(Q)],
-                                 neighbors=neighbors,
-                                 q_bins=bins.tolist(), q_values=q_values)
-                ps, ns = _seeds(run_seed, r.series_key)
-                rng = gk.Rng.seeded(ps, ns)
-                seq = gk.walk_quantile([g], ts_length, value_strategy,
-                                       node_strategy, rng, skip=skip,
-                                       switch=switch)[0]
-                rows.append({"series_key": r.series_key, "py_seed": ps,
-                             "np_seed": ns,
-                             "seq": np.asarray(seq, np.float64)})
-            if rows:
-                yield pd.DataFrame(rows)
 
-    return series.mapInPandas(kern, schema=SEQ_SCHEMA)
+def _ordinal_walk(rng, y, *, w, tau, hist_bins, ts_length, node_strategy,
+                  skip, switch):
+    """One series' ordinal-partition walk, None when it has no graph
+    (generate_ordinal_sequences' row kernel)."""
+    if not np.isfinite(y).all():
+        return None  # a series holding NaN/±inf has no graph
+    pats = kernels.ordinal_patterns(y, w, tau)
+    if not len(pats):
+        return None  # nor does one too short for a pattern
+    uniq = list(dict.fromkeys(map(tuple, pats.tolist())))
+    index = {p: i for i, p in enumerate(uniq)}
+    neighbors: list[list[int]] = [[] for _ in range(len(uniq))]
+    for a, b in zip(pats[:-1], pats[1:]):
+        ia, ib = index[tuple(a)], index[tuple(b)]
+        if ib not in neighbors[ia]:
+            neighbors[ia].append(ib)
+    freqs, bins = np.histogram(y, bins=hist_bins)
+    g = gk.GraphData(values=[[] for _ in uniq], neighbors=neighbors,
+                     patterns=uniq)
+    return gk.walk_ordinal_partition(
+        [g], ts_length, node_strategy, rng, freqs=[freqs.astype(np.float64)],
+        bins=[bins], w=w, tau=tau, skip=skip, switch=switch)[0]
 
 
 def generate_ordinal_sequences(
@@ -224,41 +242,10 @@ def generate_ordinal_sequences(
     (patterns + transitions, to_graph/strategies.py:96-126) and the
     histogram state (core/model.py:225-233) row-locally, then walks
     (core/model.py:673-716)."""
-    from ts2g2_spark.operators import kernels as K
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.values is None:
-                    continue  # a null series yields no row
-                y = np.asarray(r.values, np.float64)
-                if not np.isfinite(y).all():
-                    continue  # nor does one holding NaN/±inf: no graph
-                pats = K.ordinal_patterns(y, w, tau)
-                uniq = list(dict.fromkeys(map(tuple, pats.tolist())))
-                index = {p: i for i, p in enumerate(uniq)}
-                neighbors: list[list[int]] = [[] for _ in range(len(uniq))]
-                for a, b in zip(pats[:-1], pats[1:]):
-                    ia, ib = index[tuple(a)], index[tuple(b)]
-                    if ib not in neighbors[ia]:
-                        neighbors[ia].append(ib)
-                freqs, bins = np.histogram(y, bins=hist_bins)
-                g = gk.GraphData(values=[[] for _ in uniq],
-                                 neighbors=neighbors, patterns=uniq)
-                ps, ns = _seeds(run_seed, r.series_key)
-                rng = gk.Rng.seeded(ps, ns)
-                seq = gk.walk_ordinal_partition(
-                    [g], ts_length, node_strategy, rng,
-                    freqs=[freqs.astype(np.float64)], bins=[bins],
-                    w=w, tau=tau, skip=skip, switch=switch)[0]
-                rows.append({"series_key": r.series_key, "py_seed": ps,
-                             "np_seed": ns,
-                             "seq": np.asarray(seq, np.float64)})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return series.mapInPandas(kern, schema=SEQ_SCHEMA)
+    return _walk_rows(
+        series.select("series_key", "values"), run_seed, _ordinal_walk,
+        w=w, tau=tau, hist_bins=hist_bins, ts_length=ts_length,
+        node_strategy=node_strategy, skip=skip, switch=switch)
 
 
 # ------------------------------------------- hash-replayable walks (R2/R7)
@@ -299,6 +286,8 @@ def hash_walks(
     a quantile graph), so a series costs a few thousand md5 calls; walk
     state is never collected and the work is embarrassingly parallel
     across series."""
+    import pandas as pd
+
     from ts2g2_spark.functions.hashing import h64_py
 
     sk_type = edges.schema["series_key"].dataType.simpleString()

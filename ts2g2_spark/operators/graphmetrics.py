@@ -6,11 +6,12 @@ the only built-in: eigenvector centrality).  ts2g2's unit of work is the
 per-series segment, so a graph metric is row-local: the `*_from_series`
 operators build each series' visibility graph AND run the metric on it
 inside the Arrow batch that holds the series, with zero shuffles, through
-the one emitter of operators/graphs.py (`graphs._map_series`).  The
-numeric semantics (canonical undirected edge set, HALF_UP / IEEE-floor
-rounding contracts, fixed iteration schedules) live in the
-`kernels.graph_*_kernel` functions; the contract's DuckDB oracles replay
-them.
+the one emitter of operators/graphs.py (`graphs._map_segments`): one
+segmented visibility-graph build per run of a batch, then the metric on
+each series' slice of those edges.  The numeric semantics (canonical
+undirected edge set, HALF_UP / IEEE-floor rounding contracts, fixed
+iteration schedules) live in the `kernels.graph_*_kernel` functions; the
+contract's DuckDB oracles replay them.
 
 Three relational operators stay for edge frames that already exist:
 `canonical_edges`, `degrees` and `degree_exponent` (one aggregate over
@@ -28,7 +29,6 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Sequence
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -94,11 +94,6 @@ def degree_exponent(edges: DataFrame, round_dp: int = 6) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Per-series metrics: visibility graph + metric in one map-only pass
 # ---------------------------------------------------------------------------
-_TYPES = {"long": (np.int64, pa.int64()),
-          "double": (np.float64, pa.float64()),
-          "boolean": (np.bool_, pa.bool_())}
-
-
 def _per_series(
     series_df: DataFrame,
     kind: str,
@@ -108,26 +103,26 @@ def _per_series(
 ) -> DataFrame:
     """visibility_edges(kind, limit) |> metric per series, map-only.
 
-    metric(edges) returns one sequence per (name, type) of `cols`, all of
-    the series' output-row count (zero-length for none).  A None in a
-    double column becomes null."""
-    dtypes = [_TYPES[t] for _, t in cols]
+    Each run's visibility graphs come from one
+    kernels.visibility_graph_segmented call; metric(edges) then runs on
+    each non-null series' edge slice and returns one sequence per (name,
+    Spark type) of `cols`, all of the series' output-row count
+    (zero-length for none).  A None in a double column becomes null."""
     schema = ", ".join(
         ["series_key string"] + [f"{n} {t}" for n, t in cols])
+    types = [t for _, t in cols]
 
-    def kernel(y: np.ndarray) -> tuple[np.ndarray, ...]:
-        e, _w = kernels.visibility_graph(y, kind=kind, limit=limit)
-        return tuple(np.asarray(c, dt) for c, (dt, _) in
-                     zip(metric(e), dtypes))
+    def kernel(_keys, v: graphs.Lists):
+        seg, e, _w = kernels.visibility_graph_segmented(
+            v.values, v.lengths, kind=kind, limit=limit)
+        cut = np.searchsorted(seg, np.arange(len(v.valid) + 1)).tolist()
+        rows = np.flatnonzero(v.valid).tolist()
+        parts = [metric(e[cut[r]:cut[r + 1]]) for r in rows]
+        seg, out = graphs._stack(rows, parts, types)
+        return seg, {n: c for (n, _), c in zip(cols, out)}
 
-    def build(parts: list) -> dict[str, pa.Array]:
-        return {
-            n: pa.array(np.concatenate([p[i] for p in parts]), t,
-                        from_pandas=True)
-            for i, ((n, _), (_, t)) in enumerate(zip(cols, dtypes))
-        }
-
-    return graphs._map_series(series_df, schema, kernel, build)
+    return graphs._map_segments(
+        series_df.select("series_key", "values"), schema, kernel)
 
 
 def _row(values: Iterable) -> list[list]:

@@ -3,20 +3,20 @@
 Data contract — the "series frame": (series_key string, values
 array<double>).  A series is row-local (one row = one whole series or one
 segment), so every kernel below is one `mapInArrow` over Arrow batches with
-ZERO shuffle.  Both emitters read a batch's `values` lengths and flat
-float64 buffer once and build the output batch column-wise (series_key
-gathered with `take`, numeric columns with `pa.array`) — no pandas and no
-per-edge Python objects:
+ZERO shuffle, through the one emitter `_map_segments`: per run of an Arrow
+batch it hands the kernel each column once (a list column as its flat
+numpy buffer plus row offsets and validity, `Lists`), and builds the
+output batch column-wise (series_key gathered with `take`, numeric columns
+with `pa.array`) — no pandas and no per-edge Python objects.
 
-- `_map_segments` runs one segmented kernel from `kernels` over the whole
-  batch (the flat buffer plus the series lengths), so numpy's per-call
-  cost is paid once per batch, not once per series.  The HVG, NVG, OPG and
-  QG edge sets (`visibility_edges`, `opg_edges`, `qg_edges`) use it, and
-  so does `opg_edges_multivariate`, which builds each series' patterns
-  per series but groups the batch's transitions in one call.
-- `_map_series` runs a per-series kernel once per series on a slice of
-  that buffer.  `proximity_edges`, `histogram` and the `graphmetrics`
-  `*_from_series` metrics still use it.
+- The HVG, NVG, OPG and QG edge sets (`visibility_edges`, `opg_edges`,
+  `qg_edges`) run one segmented kernel from `kernels` over the whole run,
+  so numpy's per-call cost is paid once per batch, not once per series;
+  `opg_edges_multivariate` builds each series' patterns per series and
+  groups the run's transitions in one call.
+- Kernels with no segmented form (`proximity_edges`, `histogram`, the
+  `generate` walkers, the `analytics` centralities) run per row through
+  `_row_kernel`, still inside that one emitter.
 
 Edges come out as rows keyed by series_key; adjacency is data, never a
 driver-side object (SURVEY §1.2).  A null `values` row yields no output
@@ -26,7 +26,8 @@ with `series_from_points` (one groupBy).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
@@ -41,57 +42,85 @@ PAT_EDGE_SCHEMA = (
 )
 
 
-# --------------------------------------------------------------- emitters
-#: most points one segmented kernel call takes: a batch's rows are cut into
-#: runs of at most this many points (a longer series runs alone), which
-#: bounds kernel scratch such as HVG's ~log2(n) sparse-table levels
+# --------------------------------------------------------------- emitter
+#: most points one kernel call takes: a batch's rows are cut into runs of
+#: at most this many points (a longer series runs alone), which bounds
+#: kernel scratch such as HVG's ~log2(n) sparse-table levels
 _SEGMENT_POINTS = 1 << 18
+
+
+class Lists(NamedTuple):
+    """A list column's rows in one run: row r is values[off[r]:off[r+1]]
+    (values is itself a Lists for a list<list<...>> column, else a numpy
+    array of the column's element type).  A null row is empty and has
+    valid[r] False."""
+
+    values: np.ndarray | Lists
+    off: np.ndarray
+    valid: np.ndarray
+
+    @property
+    def lengths(self) -> np.ndarray:
+        return np.diff(self.off)
+
+    def rows(self) -> list:
+        """Each row as a slice of values (a list of slices for a nested
+        column), None for a null row."""
+        flat = (self.values.rows() if isinstance(self.values, Lists)
+                else self.values)
+        off = self.off.tolist()
+        return [flat[a:b] if ok else None
+                for a, b, ok in zip(off[:-1], off[1:], self.valid.tolist())]
+
+    def run(self, a: int, b: int) -> Lists:
+        """Rows [a, b)."""
+        lo, hi = int(self.off[a]), int(self.off[b])
+        values = (self.values.run(lo, hi) if isinstance(self.values, Lists)
+                  else self.values[lo:hi])
+        return Lists(values, self.off[a:b + 1] - lo, self.valid[a:b])
+
+
+def _column(arr: pa.Array):
+    """A batch column as kernels get it: Lists for a list column, else a
+    numpy array (object for strings)."""
+    if not pa.types.is_list(arr.type):
+        return arr.to_numpy(zero_copy_only=False)
+    lengths = arr.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    return Lists(_column(arr.flatten()),  # flatten skips null rows
+                 np.concatenate(([0], np.cumsum(lengths, dtype=np.int64))),
+                 arr.is_valid().to_numpy(zero_copy_only=False))
 
 
 def _map_segments(
     df: DataFrame,
     schema: str,
     kernel: Callable[..., tuple[np.ndarray, dict[str, pa.Array]]],
-    col: str = "values",
 ) -> DataFrame:
-    """Map-only mapInArrow over `df` with one segmented kernel call per
-    Arrow batch (per run of _SEGMENT_POINTS points).
+    """Map-only mapInArrow over `df` with one kernel call per run of an
+    Arrow batch (rows whose list columns hold at most _SEGMENT_POINTS
+    elements in all, or one longer row).
 
-    For a list<double> `col`, kernel(values, lengths) gets the run's flat
-    float64 buffer and its row lengths (a null row has length 0); for a
-    list<list<double>> `col`, kernel(rows) gets the batch's rows, each a
-    list of float64 slices or None for a null row.  It returns (seg,
-    columns): the row of each output row, in output order, and the output
-    columns after series_key, which is gathered from the input with one
-    `take`."""
+    kernel gets one argument per column of `df`, in order: a list column
+    as Lists, any other as a numpy array.  It returns (seg, columns): the
+    run row of each output row, in output order, and the output columns
+    after series_key, which is gathered from the input with one `take`."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            for a, args in _row_runs(batch.column(col)):
-                seg, cols = kernel(*args)
+            cols = [_column(c) for c in batch.columns]
+            off = sum((c.off for c in cols if isinstance(c, Lists)),
+                      np.zeros(batch.num_rows + 1, np.int64))
+            for a, b in _runs(off, _SEGMENT_POINTS):
+                seg, out = kernel(*(c.run(a, b) if isinstance(c, Lists)
+                                    else c[a:b] for c in cols))
                 if len(seg):
                     yield pa.RecordBatch.from_pydict({
                         "series_key": batch.column("series_key").take(
                             seg + a),
-                        **cols,
+                        **out,
                     })
 
     return df.mapInArrow(run, schema=schema)
-
-
-def _row_runs(arr: pa.Array) -> Iterator[tuple[int, tuple]]:
-    """(first row, kernel arguments) for each run of a batch column, as
-    _map_segments hands them to its kernel."""
-    if pa.types.is_list(arr.type.value_type):
-        yield 0, (_slices(arr),)
-        return
-    lengths = arr.value_lengths().fill_null(0).to_numpy(
-        zero_copy_only=False).astype(np.int64)
-    values = np.asarray(arr.flatten().to_numpy(zero_copy_only=False),
-                        np.float64)  # flatten skips null rows
-    off = np.concatenate(([0], np.cumsum(lengths)))
-    for a, b in _runs(off, _SEGMENT_POINTS):
-        yield a, (values[off[a]:off[b]], lengths[a:b])
 
 
 def _runs(off: np.ndarray, max_points: int) -> Iterator[tuple[int, int]]:
@@ -105,54 +134,55 @@ def _runs(off: np.ndarray, max_points: int) -> Iterator[tuple[int, int]]:
         a = b
 
 
-def _slices(arr: pa.Array) -> list:
-    """Each row of a list<double> column as a float64 slice of one flat
-    buffer, None for a null row; a list<list<double>> row becomes a list of
-    such slices."""
-    lengths = arr.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
-    off = np.concatenate(([0], np.cumsum(lengths, dtype=np.int64))).tolist()
-    child = arr.flatten()  # skips the child ranges of null rows
-    if pa.types.is_list(child.type):
-        flat = _slices(child)
-    else:
-        flat = np.asarray(child.to_numpy(zero_copy_only=False), np.float64)
-    valid = arr.is_valid().to_numpy(zero_copy_only=False).tolist()
-    return [flat[a:b] if ok else None
-            for a, b, ok in zip(off[:-1], off[1:], valid)]
+#: Arrow type of each Spark type a row kernel emits
+_ARROW = {"long": pa.int64(), "int": pa.int32(), "double": pa.float64(),
+          "boolean": pa.bool_(), "array<double>": pa.list_(pa.float64()),
+          "array<long>": pa.list_(pa.int64()),
+          "array<string>": pa.list_(pa.string())}
 
 
-def _map_series(
-    df: DataFrame,
-    schema: str,
-    kernel: Callable,
-    build: Callable[[list], dict[str, pa.Array]],
-    col: str = "values",
-) -> DataFrame:
-    """The per-series emitter: a map-only mapInArrow over `df`.
+def _stack(rows: list[int], parts: list[Sequence], types: Sequence[str]
+           ) -> tuple[np.ndarray, list[pa.Array]]:
+    """parts[k] holds run row rows[k]'s output: one sequence per output
+    column (Spark types `types`), all of its output-row count -> (seg,
+    output columns).  A None or NaN double, in a list or not, becomes
+    null."""
+    seg = np.repeat(np.asarray(rows, np.int64), [len(p[0]) for p in parts])
+    cols = []
+    for k, t in enumerate(types):
+        at = _ARROW[t]
+        if pa.types.is_list(at):
+            vals = [x for p in parts for x in p[k]]
+        else:
+            dt = at.to_pandas_dtype()
+            vals = np.concatenate([np.asarray(p[k], dt) for p in parts]
+                                  or [np.empty(0, dt)])
+        cols.append(pa.array(vals, at, from_pandas=True))
+    return seg, cols
 
-    Per Arrow batch, kernel(y) runs once per non-null `col` row (a null row
-    yields nothing) and returns a tuple of arrays whose first axis is that
-    series' output rows; build(results) turns the batch's results into the
-    output columns after series_key, which is gathered from the input with
-    one `take`.  Used by the kernels that have no segmented form yet
-    (proximity, histogram, the graphmetrics metrics)."""
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            rows, parts = [], []
-            for i, y in enumerate(_slices(batch.column(col))):
-                if y is not None:
-                    rows.append(i)
-                    parts.append(kernel(y))
-            if not parts:
-                continue
-            take = np.repeat(rows, [len(p[0]) for p in parts])
-            yield pa.RecordBatch.from_pydict({
-                "series_key": batch.column("series_key").take(take),
-                **build(parts),
-            })
+def _row_kernel(cols: Sequence[tuple[str, str]], f: Callable[..., Sequence]
+                ) -> Callable:
+    """A _map_segments kernel that runs f once per row whose list columns
+    are all non-null (a null list row yields no output rows).  f gets that
+    row's value of each column (a list row as a numpy slice, a nested one
+    as a list of slices) and returns one sequence per (name, Spark type)
+    of `cols`, all of the row's output-row count."""
+    names = [n for n, _ in cols]
+    types = [t for _, t in cols]
 
-    return df.mapInArrow(run, schema=schema)
+    def kernel(*args):
+        lists = [isinstance(a, Lists) for a in args]
+        rows, parts = [], []
+        for i, row in enumerate(zip(*(a.rows() if isl else a
+                                      for a, isl in zip(args, lists)))):
+            if not any(x is None for x, isl in zip(row, lists) if isl):
+                rows.append(i)
+                parts.append(f(*row))
+        seg, out = _stack(rows, parts, types)
+        return seg, dict(zip(names, out))
+
+    return kernel
 
 
 def _edge_arrays(e: np.ndarray, w: np.ndarray) -> dict[str, pa.Array]:
@@ -166,12 +196,6 @@ def _edge_arrays(e: np.ndarray, w: np.ndarray) -> dict[str, pa.Array]:
     }
 
 
-def _edge_columns(parts: list) -> dict[str, pa.Array]:
-    """(edges[m, 2], weights[m]) per series -> src, dst, weight."""
-    return _edge_arrays(np.concatenate([p[0] for p in parts]),
-                        np.concatenate([p[1] for p in parts]))
-
-
 def _pattern_columns(pats: np.ndarray, src: np.ndarray, dst: np.ndarray,
                     wt: np.ndarray) -> dict[str, pa.Array]:
     """Distinct pattern rows `pats` (padded with -1; ranks are >= 0) and
@@ -182,14 +206,6 @@ def _pattern_columns(pats: np.ndarray, src: np.ndarray, dst: np.ndarray,
                      for row in pats.tolist()], pa.string())
     return {"src_pattern": text.take(src), "dst_pattern": text.take(dst),
             "weight": pa.array(wt, pa.float64())}
-
-
-def _list_rows(rows: np.ndarray, type_: pa.DataType) -> pa.Array:
-    """2-D array -> Arrow list column, one list per row."""
-    n, k = rows.shape
-    return pa.ListArray.from_arrays(
-        pa.array(np.arange(n + 1, dtype=np.int32) * k),
-        pa.array(rows.ravel(), type_))
 
 
 # ----------------------------------------------------------------- inputs
@@ -261,21 +277,15 @@ def sliding_windows(
 
 def histogram(df: DataFrame, bins: int) -> DataFrame:
     """np.histogram per series (ref core/model.py:225-233), exact."""
-    schema = "series_key string, bin_edges array<double>, freqs array<long>"
+    cols = [("bin_edges", "array<double>"), ("freqs", "array<long>")]
 
-    def kernel(y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    def row(_key, y: np.ndarray) -> tuple[list, list]:
         f, b = np.histogram(y, bins)
-        return b[None, :], f[None, :]
+        return [b], [f]
 
-    def build(parts: list) -> dict[str, pa.Array]:
-        return {
-            "bin_edges": _list_rows(
-                np.concatenate([p[0] for p in parts]), pa.float64()),
-            "freqs": _list_rows(
-                np.concatenate([p[1] for p in parts]), pa.int64()),
-        }
-
-    return _map_series(df, schema, kernel, build)
+    return _map_segments(df.select("series_key", "values"),
+                         "series_key string, bin_edges array<double>, "
+                         "freqs array<long>", _row_kernel(cols, row))
 
 
 # --------------------------------------------------- visibility (G1-G5)
@@ -293,13 +303,14 @@ def visibility_edges(
     O(n^2) worst-case vectorized (reference is O(n^3) Python:
     to_graph/strategies.py:527-540)."""
 
-    def kernel(values: np.ndarray, lengths: np.ndarray):
+    def kernel(_keys, v: Lists):
         seg, e, w = kernels.visibility_graph_segmented(
-            values, lengths, kind=kind, limit=limit, angle=angle,
+            v.values, v.lengths, kind=kind, limit=limit, angle=angle,
             angle_abs=angle_abs, weighted=weighted, weight_abs=weight_abs)
         return seg, _edge_arrays(e, w)
 
-    return _map_segments(df, EDGE_SCHEMA, kernel)
+    return _map_segments(df.select("series_key", "values"), EDGE_SCHEMA,
+                         kernel)
 
 
 # ------------------------------------------- ordinal partition (G6/G7)
@@ -310,13 +321,15 @@ def opg_edges(
     call per Arrow batch.  Patterns serialized as comma-joined rank
     strings, each distinct pattern formatted once."""
 
-    def kernel(values: np.ndarray, lengths: np.ndarray):
+    def kernel(_keys, v: Lists):
         seg, pats, src, dst, wt = kernels.opg_edges_segmented(
             *kernels.ordinal_patterns_segmented(
-                values, lengths, w, tau, use_quantiles=use_quantiles, Q=Q))
+                v.values, v.lengths, w, tau, use_quantiles=use_quantiles,
+                Q=Q))
         return seg, _pattern_columns(pats, src, dst, wt)
 
-    return _map_segments(df, PAT_EDGE_SCHEMA, kernel)
+    return _map_segments(df.select("series_key", "values"), PAT_EDGE_SCHEMA,
+                         kernel)
 
 
 def opg_edges_multivariate(df: DataFrame, w: int, tau: int) -> DataFrame:
@@ -330,10 +343,10 @@ def opg_edges_multivariate(df: DataFrame, w: int, tau: int) -> DataFrame:
     batch are grouped by one opg_edges_segmented call, with rows of
     different widths (variable counts) padded with -1."""
 
-    def kernel(rows: list):
+    def kernel(_keys, v: Lists):
         mats = [kernels.multivariate_ordinal_patterns(s, w, tau)
                 if s is not None else np.empty((0, 0), np.int64)
-                for s in rows]
+                for s in v.rows()]
         pats = np.full((sum(len(m) for m in mats),
                         max((m.shape[1] for m in mats), default=0)), -1,
                        np.int64)
@@ -345,7 +358,8 @@ def opg_edges_multivariate(df: DataFrame, w: int, tau: int) -> DataFrame:
             pats, [len(m) for m in mats])
         return seg, _pattern_columns(uniq, src, dst, wt)
 
-    return _map_segments(df, PAT_EDGE_SCHEMA, kernel, col="variables")
+    return _map_segments(df.select("series_key", "variables"),
+                         PAT_EDGE_SCHEMA, kernel)
 
 
 # ------------------------------------------------- quantile graph (G8/G9)
@@ -361,21 +375,25 @@ def qg_edges(
     instead of `weight` — the exact integer form `generate.hash_walks`
     needs for its modular weighted choice (integer arithmetic end to end,
     no float weight on the walk path)."""
+    series = df.select("series_key", "values")
     if not counts:
-        def kernel(values: np.ndarray, lengths: np.ndarray):
-            seg, e, w = kernels.qg_edges_segmented(values, lengths, Q, phi)
+        def kernel(_keys, v: Lists):
+            seg, e, w = kernels.qg_edges_segmented(
+                v.values, v.lengths, Q, phi)
             return seg, _edge_arrays(e, w)
 
-        return _map_segments(df, EDGE_SCHEMA, kernel)
+        return _map_segments(series, EDGE_SCHEMA, kernel)
 
-    def count_kernel(values: np.ndarray, lengths: np.ndarray):
-        seg, e, c = kernels.qg_transitions_segmented(values, lengths, Q, phi)
+    def count_kernel(_keys, v: Lists):
+        seg, e, c = kernels.qg_transitions_segmented(
+            v.values, v.lengths, Q, phi)
         return seg, {"src": pa.array(e[:, 0], pa.int64()),
                      "dst": pa.array(e[:, 1], pa.int64()),
                      "w": pa.array(c, pa.int64())}
 
-    return _map_segments(df, "series_key string, src long, dst long, w long",
-                         count_kernel)
+    return _map_segments(
+        series, "series_key string, src long, dst long, w long",
+        count_kernel)
 
 
 # ------------------------------------------------- proximity (G11-G15)
@@ -411,4 +429,12 @@ def proximity_edges(
     else:
         raise ValueError(method)
 
-    return _map_series(df, EDGE_SCHEMA, fn, _edge_columns)
+    def row(_key, y: np.ndarray) -> tuple[np.ndarray, ...]:
+        e, w = fn(y)
+        e = np.asarray(e).reshape(-1, 2)
+        return e[:, 0], e[:, 1], w
+
+    return _map_segments(
+        df.select("series_key", "values"), EDGE_SCHEMA,
+        _row_kernel([("src", "long"), ("dst", "long"), ("weight", "double")],
+                    row))

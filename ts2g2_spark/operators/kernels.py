@@ -124,9 +124,13 @@ def _nvg_dense(y: np.ndarray, limit: int) -> np.ndarray:
         M = np.full((n, n), -np.inf)
         np.maximum.accumulate(obstr[:, :-1], axis=1, out=M[:, 1:])
         cand = dist >= 2  # path edges handled by the caller
+        # a pair inside the limit window has no obstructor
+        inwin = cand & (dist <= limit + 1)
+        nan = np.isnan(y)
         tol = _BOUNDARY_RTOL * (np.abs(M) + np.abs(S) + 1.0)
-        visible = M < S - tol
-        boundary = cand & ~visible & (M <= S + tol)
+        visible = np.where(inwin, ~(nan[:, None] | nan[None, :]),
+                           M < S - tol)
+        boundary = cand & ~inwin & ~visible & (M <= S + tol)
         for i, j in zip(*np.nonzero(boundary)):
             visible[i, j] = not _nvg_obstructed_ref(y, int(i), int(j), limit)
     ii, jj = np.nonzero(cand & visible)
@@ -145,7 +149,9 @@ def nvg_edges_segmented(values: np.ndarray, lengths,
     [x1+limit+1, x2) satisfies  y > slope*x + offset  where
     slope=(y2-y1)/(x2-x1), offset=y2-slope*x2 (strict >).  The ``limit``
     SKIPS the first ``limit`` intermediates (it does not gate pair distance),
-    so all pairs with x2-x1 <= limit+1 are unconditionally visible.
+    so a pair with x2-x1 <= limit+1 has no obstructor: it is visible
+    unless an endpoint is NaN (a NaN endpoint sees nothing under NVG),
+    decided directly, whatever the slope.
 
     Fast path: visible(i,j) iff M < S, with S = slope(i,j) and M the
     running max of slope(i,k) over the obstructors k (mathematically
@@ -182,12 +188,15 @@ def nvg_edges_segmented(values: np.ndarray, lengths,
             j = p + d
             S = (y[j] - yp) / d
             if d >= 2:
-                tol = _BOUNDARY_RTOL * (np.abs(m) + np.abs(S) + 1.0)
-                visible = m < S - tol
-                for t in np.flatnonzero(~visible & (m <= S + tol)):
-                    a = start[p[t]]
-                    visible[t] = not _nvg_obstructed_ref(
-                        y[a:e[t]], int(p[t] - a), int(j[t] - a), limit)
+                if d <= limit + 1:  # inside the window: no obstructor
+                    visible = ~(np.isnan(yp) | np.isnan(y[j]))
+                else:
+                    tol = _BOUNDARY_RTOL * (np.abs(m) + np.abs(S) + 1.0)
+                    visible = m < S - tol
+                    for t in np.flatnonzero(~visible & (m <= S + tol)):
+                        a = start[p[t]]
+                        visible[t] = not _nvg_obstructed_ref(
+                            y[a:e[t]], int(p[t] - a), int(j[t] - a), limit)
                 src.append(p[visible])
                 dst.append(j[visible])
             if d >= limit + 1:

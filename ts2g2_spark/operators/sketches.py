@@ -320,8 +320,8 @@ def cms_sketch(
     (group_cols..., cms_row, bucket, cnt) — at most d * w_buckets rows
     per group NO MATTER the input size, and the count agg is
     partial-aggregatable (map-side combine), so the exchange carries
-    bounded state like the HLL register frame.  Sketches MERGE by
-    summing cnt cell-wise (linearity) — `cms_merge`.
+    bounded state like the HLL register frame.  Sketches merge by
+    summing cnt cell-wise (linearity).
 
     Estimate guarantee: lookup >= true count always (only overcounts,
     by hash collisions); error <= 2N/w_buckets with probability
@@ -338,19 +338,6 @@ def cms_sketch(
         )
         .groupBy(*group_cols, "cms_row", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def cms_merge(
-    sketches: DataFrame,
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Merge sketch partials to a coarser grain: cell-wise sum
-    (count-min is linear, so merged partials are row-identical to a
-    sketch built from the union of the raw inputs)."""
-    return (
-        sketches.groupBy(*group_cols, "cms_row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
     )
 
 
@@ -476,8 +463,7 @@ def bloom_bits(
     output (group_cols..., bit_pos) — the DISTINCT set bit positions,
     at most n_bits rows per group no matter the input size, built with
     one partial-aggregatable exchange (distinct = hash agg).  Sketches
-    MERGE by unioning rows and re-distincting (`bloom_merge`) — bloom
-    OR.  Guarantee: membership of every inserted key tests true (no
+    merge by unioning rows and re-distincting (bloom OR).  Guarantee: membership of every inserted key tests true (no
     false negatives); false-positive rate ~ (1 - e^(-kn/m))^k."""
     _check_bloom(k, n_bits)
     return (
@@ -488,56 +474,6 @@ def bloom_bits(
             .alias("bit_pos"),
         )
         .distinct()
-    )
-
-
-def bloom_merge(
-    bits: DataFrame,
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Merge bloom partials built with the SAME (k, n_bits): bitwise OR
-    == union + distinct of the set-bit rows."""
-    return bits.select(*group_cols, "bit_pos").distinct()
-
-
-def bloom_contains(
-    bits: DataFrame,
-    items: DataFrame,
-    value_col: str,
-    group_cols: tuple[str, ...] = (),
-    k: int = 7,
-    n_bits: int = 1 << 20,
-) -> DataFrame:
-    """Join-path membership test: (group_cols..., value_col,
-    may_contain) — True iff ALL k probe positions are set.  Items are
-    distinct'd; duplicate probe positions within one item (double
-    hashing can collide) are array_distinct'd so the matched-count
-    comparison is against the item's own distinct-probe count.  Same
-    join shape as cms_lookup: inner probe-cell join (broadcastable)
-    then a left join back onto the item set, so an item matching zero
-    cells still reports may_contain = false."""
-    _check_bloom(k, n_bits)
-    base = items.select(
-        *[F.col(c) for c in group_cols], F.col(value_col)).distinct()
-    pos = base.select(
-        "*",
-        F.array_distinct(
-            _bloom_positions(value_col, k, n_bits)).alias("_pos"))
-    probes = pos.select(
-        *[F.col(c) for c in group_cols], F.col(value_col),
-        F.size("_pos").alias("_n"), F.explode("_pos").alias("bit_pos"))
-    hits = (
-        probes.join(bits, [*group_cols, "bit_pos"], "inner")
-        .groupBy(*group_cols, value_col, "_n")
-        .agg(F.count(F.lit(1)).alias("_hit"))
-    )
-    return (
-        base.join(hits, [*group_cols, value_col], "left")
-        .select(
-            *[F.col(c) for c in group_cols], F.col(value_col),
-            F.coalesce(F.col("_hit") == F.col("_n"), F.lit(False))
-            .alias("may_contain"),
-        )
     )
 
 
@@ -554,8 +490,7 @@ def bloom_words(
     if n_bits > max_bits:
         raise ValueError(
             f"bloom_words: n_bits={n_bits} exceeds the driver-collect "
-            f"guard max_bits={max_bits}; raise max_bits explicitly or "
-            f"use the join-path bloom_contains instead")
+            f"guard max_bits={max_bits}; raise max_bits explicitly")
     packed = (
         bits.groupBy(F.shiftright("bit_pos", 6).alias("_w"))
         .agg(F.bit_or(F.expr(
