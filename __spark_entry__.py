@@ -600,7 +600,7 @@ def q_codec_roundtrip(spark, sf_dir):
     import numpy as np
 
     from ts2g2_spark.functions import codecs
-    from ts2g2_spark.operators import graphs
+    from ts2g2_spark.operators import emit
 
     ev = _events(spark, sf_dir)
     packed = ev.groupBy("user_id").agg(
@@ -626,10 +626,10 @@ def q_codec_roundtrip(spark, sf_dir):
         )
         return [len(ts)], [ok]
 
-    return graphs._map_segments(
+    return emit._map_segments(
         packed, "series_key long, n_pts long, roundtrip_ok boolean",
-        graphs._row_kernel([("n_pts", "long"), ("roundtrip_ok", "boolean")],
-                           row),
+        emit._row_kernel([("n_pts", "long"), ("roundtrip_ok", "boolean")],
+                         row),
     ).withColumnRenamed("series_key", "user_id")
 
 
@@ -829,7 +829,7 @@ def q_qg_mean_jump(spark, sf_dir):
     reproduced; the reference's own method crashes upstream).  Ordering
     via the JVM series pack (series_from_points); the kernel is
     map-only."""
-    from ts2g2_spark.operators import graphs, kernels
+    from ts2g2_spark.operators import emit, kernels
 
     series = _event_series(spark, sf_dir)
 
@@ -837,10 +837,10 @@ def q_qg_mean_jump(spark, sf_dir):
         jump = kernels.qg_mean_jump_length(y, 4, 2)
         return [1, 2], [round(float(x), 9) for x in jump]
 
-    return graphs._map_segments(
+    return emit._map_segments(
         series.select("series_key", "values"),
         "series_key string, phi int, mean_jump double",
-        graphs._row_kernel([("phi", "int"), ("mean_jump", "double")], row),
+        emit._row_kernel([("phi", "int"), ("mean_jump", "double")], row),
     ).select(F.col("series_key").cast("long").alias("user_id"), "phi",
              "mean_jump")
 

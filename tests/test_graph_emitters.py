@@ -34,7 +34,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as hst
 from pyspark.sql import functions as F
 
-from ts2g2_spark.operators import graphs, kernels
+from ts2g2_spark.operators import emit, graphs, kernels
 
 BATCH_ROWS = 2
 
@@ -506,18 +506,26 @@ def test_nonfinite_values_pinned():
     # a NaN endpoint: HVG sees over what the other endpoint sees over
     assert extra(kernels.hvg_edges, [math.nan, 0.0, 1.0]) == [(0, 2)]
     assert extra(kernels.nvg_edges, [math.nan, 0.0, 1.0]) == []
+    # NVG: a non-finite endpoint (NaN or +-inf) sees only its path
+    # neighbours, whatever the slope; the line through it is undefined
+    for limit, rest in ((0, [(2, 4)]), (1, [(1, 3), (1, 4), (2, 4)])):
+        for fn in (lambda y: kernels.nvg_edges(y, limit),
+                   lambda y: np.stack(kernels.nvg_edges_segmented(
+                       y, [len(y)], limit), axis=1)):
+            assert extra(fn, [-math.inf, 1.0, 2.0, 0.5, 3.0]) == rest
+            assert extra(fn, [math.inf, 1.0, 2.0, 0.5, 3.0]) == rest
+            assert extra(fn, [1.0, 0.0, math.inf]) == []
+            assert extra(fn, [1.0, 0.0, -math.inf]) == []
+            assert extra(fn, [math.inf, 0.0, math.inf]) == []
     # NVG with limit >= 1: a pair inside the window (2 <= j - i <= limit +
-    # 1) has no obstructor, so it is visible unless an endpoint is NaN --
-    # also when an endpoint is +-inf and the slope is -inf or NaN
+    # 1) has no obstructor, so it is visible unless an endpoint is
+    # non-finite
     for fn in (lambda y: kernels.nvg_edges(y, 1),
                lambda y: np.stack(kernels.nvg_edges_segmented(
                    y, [len(y)], 1), axis=1)):
         assert extra(fn, [0.0, 5.0, -math.inf, 1.0, 2.0]) == [
-            (0, 2), (0, 3), (0, 4), (1, 3), (1, 4), (2, 4)]
-        assert extra(fn, [math.inf, 1.0, 2.0, 0.5, 3.0]) == [
-            (0, 2), (1, 3), (1, 4), (2, 4)]
+            (0, 3), (0, 4), (1, 3), (1, 4)]
         assert extra(fn, [1.0, math.nan, 2.0, 3.0]) == [(0, 2), (0, 3)]
-        assert extra(fn, [math.inf, 0.0, math.inf]) == [(0, 2)]
     e, w = kernels.qg_edges(np.array([1.0, 2.0, math.nan, 3.0]), 2)
     assert len(e) == len(w) == 0
 
@@ -560,9 +568,9 @@ def test_segment_runs_cover_rows_within_the_point_budget():
     lengths = np.array([0, 3, 5, 0, 12, 1, 1, 4, 0])
     off = np.concatenate(([0], np.cumsum(lengths)))
     for budget in (1, 4, 6, 13, 100):
-        runs = list(graphs._runs(off, budget))
+        runs = list(emit._runs(off, budget))
         assert [a for a, _ in runs] == [0] + [b for _, b in runs[:-1]]
         assert runs[-1][1] == len(lengths)
         assert all(off[b] - off[a] <= budget or b == a + 1 for a, b in runs)
-    assert list(graphs._runs(off, 100)) == [(0, len(lengths))]
-    assert list(graphs._runs(np.array([0]), 10)) == []
+    assert list(emit._runs(off, 100)) == [(0, len(lengths))]
+    assert list(emit._runs(np.array([0]), 10)) == []

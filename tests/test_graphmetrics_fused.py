@@ -632,6 +632,43 @@ def test_link_prediction_kernel_empty_and_min_cn():
         link_prediction_kernel(path, min_cn=0)
 
 
+def test_link_prediction_aa_is_the_sequential_ascending_fold():
+    """Adamic-Adar equals, bit for bit, a pure-Python left fold of
+    1/ln(deg) over each pair's hub degrees sorted ascending -- also for a
+    pair that shares many hubs of mixed (and repeated) degrees."""
+    from ts2g2_spark.operators.kernels import link_prediction_kernel
+
+    rng = np.random.default_rng(7)
+    edges, leaf = [], 100
+    for h, extra in enumerate(rng.integers(0, 6, 40).tolist()):
+        hub = 2 + h
+        edges += [(0, hub), (1, hub)]  # nodes 0 and 1 share 40 hubs
+        for _ in range(extra):
+            edges.append((hub, leaf))
+            leaf += 1
+    edges += [tuple(e) for e in rng.integers(2, 60, (80, 2)).tolist()
+              if e[0] != e[1]]
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    u, v, cn, _j, aa = link_prediction_kernel(np.array(edges, np.int64))
+    got = dict(zip(zip(u.tolist(), v.tolist()), aa.tolist()))
+    want = {}
+    for a in adj:
+        for b in adj:
+            common = adj[a] & adj[b]
+            if a < b and b not in adj[a] and common:
+                logs = np.log(np.array(sorted(len(adj[z]) for z in common),
+                                       np.float64))
+                acc = 0.0
+                for t in logs.tolist():
+                    acc += 1.0 / t
+                want[(a, b)] = acc
+    assert cn[(u == 0) & (v == 1)].tolist() == [40]
+    assert got == want
+
+
 @pytest.mark.parametrize("cap", [2, 3, 5])
 def test_link_prediction_hub_cap_bitequal_both_strategies(series_df, cap):
     """Under max_hub_degree the Spark op and the kernel run per series

@@ -790,7 +790,7 @@ def test_pelt_pruning_validity_delay():
     survive min_size-1 more steps): the minimal counterexample plus a
     cross-min_size fuzz against the exhaustive DP — no Spark needed
     (module-level pure DP)."""
-    from ts2g2_spark.operators.seriesstats import _pelt_segments
+    from ts2g2_spark.operators.kernels import _pelt_segments
 
     # minimal counterexample: undelayed pruning drops s=0 at t=4 and
     # returns [(0,2),(2,5)] (cost 11.667) instead of [(0,5)] (10.8)

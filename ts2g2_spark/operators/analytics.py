@@ -9,9 +9,9 @@ the reference's vendored ts2vec directory is empty upstream
 (embeddings/ts2g2_embeddings.py:122 import fails there too, SURVEY §2.6).
 
 The per-series kernels (the centralities, the walk corpus) and
-kendall_tau_fast's one-row inversion count run map-only on the emitter of
-operators/graphs.py (`graphs._map_segments`), one kernel call per packed
-row.
+kendall_tau_fast's one-row inversion count run map-only on the package's
+one emitter (`emit._map_segments`, operators/emit.py), one kernel call
+per packed row.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ts2g2_spark.operators import graphs
+from ts2g2_spark.operators import emit
 
 
 # ------------------------------------------------------------------ E1
@@ -98,10 +98,10 @@ def eigenvector_centrality(
     def row(_key, srcs, dsts, n):
         return [eigenvector_centrality_kernel(int(n), srcs, dsts)],
 
-    return graphs._map_segments(
+    return emit._map_segments(
         packed.select("series_key", "srcs", "dsts", "n"),
         "series_key string, embedding array<double>",
-        graphs._row_kernel([("embedding", "array<double>")], row))
+        emit._row_kernel([("embedding", "array<double>")], row))
 
 
 def power_centrality_kernel(
@@ -190,10 +190,10 @@ def eigenvector_centrality_power(
         v = power_centrality_kernel(int(n), srcs, dsts, n_iter=n_iter)
         return np.arange(len(v)), v
 
-    return graphs._map_segments(
+    return emit._map_segments(
         packed.select("series_key", "srcs", "dsts", "n"),
         "series_key string, node int, centrality double",
-        graphs._row_kernel([("node", "int"), ("centrality", "double")], row))
+        emit._row_kernel([("node", "int"), ("centrality", "double")], row))
 
 
 # ------------------------------------------------------------------ E2
@@ -272,10 +272,10 @@ def random_walk_corpus(
         return (np.arange(len(walks)),
                 [[str(x) for x in p] for p in walks])
 
-    return graphs._map_segments(
+    return emit._map_segments(
         packed, "series_key string, walk_id int, walk array<string>",
-        graphs._row_kernel([("walk_id", "int"), ("walk", "array<string>")],
-                           row))
+        emit._row_kernel([("walk_id", "int"), ("walk", "array<string>")],
+                         row))
 
 
 def walk_hash_embedding(
@@ -501,10 +501,10 @@ def kendall_tau_fast(
         return [(total - 2 * inv) / total],
 
     # one row, keyed by a constant for the emitter
-    return graphs._map_segments(
+    return emit._map_segments(
         packed.select(F.lit("").alias("series_key"), "rb"),
         "series_key string, tau double",
-        graphs._row_kernel([("tau", "double")], row)).select("tau")
+        emit._row_kernel([("tau", "double")], row)).select("tau")
 
 
 def kendall_tau(

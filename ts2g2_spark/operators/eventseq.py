@@ -7,7 +7,7 @@ reference's ordinal-partition transition graph (to_graph/strategies.py
 ordinal strategy): states are the event types themselves instead of
 value-order patterns, edges are observed consecutive transitions.
 
-Scale shapes (pure Catalyst):
+Scale shapes (Catalyst, except burst_detection):
   * event_transitions: ONE ordered window on the series key for the
     lag pairing, then a partial-agg'd groupBy (src, dst) — the second
     exchange carries one row per distinct transition, never per event.
@@ -25,14 +25,21 @@ Scale shapes (pure Catalyst):
     key; the per-session rollup groups on a strict refinement of that
     key and partial-aggregates, so the second exchange carries one row
     per session, never per event.
+  * burst_detection is the one Python crossing: one collect_list shuffle,
+    then the package's Arrow emitter (`emit._map_segments`) with the
+    Viterbi passes vectorized across the series of a run.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
+from ts2g2_spark.operators import kernels
+from ts2g2_spark.operators.emit import _map_segments
 from ts2g2_spark.operators.summarize import _okey
 
 
@@ -304,9 +311,6 @@ def burst_detection(
 
     Output: series cols + bucket_ts, cnt, burst (boolean), one row per
     dense bucket."""
-    from pyspark.sql.types import (BooleanType, LongType, StructField,
-                                   StructType)
-
     if s <= 1.0:
         raise ValueError(f"burst_detection: need s > 1, got {s=}")
     if gamma < 0.0:
@@ -324,87 +328,22 @@ def burst_detection(
     grouped = cnts.groupBy(*scols).agg(
         F.sort_array(
             F.collect_list(F.struct("bucket_sec", "cnt"))).alias("_s")
-    ).select(*scols, F.col("_s.bucket_sec").alias("_secs"),
-             F.col("_s.cnt").alias("_cs"))
-    key_fields = [grouped.schema[c] for c in series_cols]
-    out_schema = StructType(key_fields + [
+    ).select(F.col("_s.bucket_sec").alias("_secs"),
+             F.col("_s.cnt").alias("_cs"), *scols)
+    out_schema = StructType([grouped.schema[c] for c in series_cols] + [
         StructField("bucket_sec", LongType()),
         StructField("cnt", LongType()),
         StructField("burst", BooleanType()),
     ])
-    names = list(series_cols)
 
-    def kern(batches):
-        import numpy as np
-        import pandas as pd
+    def kernel(secs, cs, *_keys):
+        seg, sec, cnt, burst = kernels.burst_states_segmented(
+            secs.values, cs.values, secs.lengths, bucket_s, s, gamma,
+            state_dp)
+        return seg, {"bucket_sec": pa.array(sec), "cnt": pa.array(cnt),
+                     "burst": pa.array(burst)}
 
-        from ts2g2_spark.operators.kernels import quantize_ieee
-
-        def quant(x):
-            return quantize_ieee(x, state_dp)
-
-        for pdf in batches:
-            outs = []
-            # densify every series in the batch into one (lanes, T) grid
-            secs, lens, counts = [], [], []
-            for k in range(len(pdf)):
-                ts = np.asarray(pdf["_secs"].iat[k], dtype=np.int64)
-                cs = np.asarray(pdf["_cs"].iat[k], dtype=np.int64)
-                n = int((ts[-1] - ts[0]) // bucket_s) + 1
-                dense = np.zeros(n, dtype=np.int64)
-                dense[(ts - ts[0]) // bucket_s] = cs
-                secs.append(int(ts[0]))
-                lens.append(n)
-                counts.append(dense)
-            lens = np.asarray(lens)
-            t_max = int(lens.max())
-            lanes = len(counts)
-            c_mat = np.zeros((lanes, t_max), dtype=np.float64)
-            for i, dense in enumerate(counts):
-                c_mat[i, : len(dense)] = dense
-            n_f = lens.astype(np.float64)
-            l0 = c_mat.sum(axis=1) / n_f
-            l1 = s * l0
-            ln0, ln1 = np.log(l0), np.log(l1)
-            g = gamma * np.log(n_f)
-            c0 = quant(l0 - c_mat[:, 0] * ln0)
-            c1 = quant(g + l1 - c_mat[:, 0] * ln1)
-            ptr0 = np.zeros((lanes, t_max), dtype=np.int8)
-            ptr1 = np.zeros((lanes, t_max), dtype=np.int8)
-            for t in range(1, t_max):
-                act = t < lens
-                e0 = l0 - c_mat[:, t] * ln0
-                e1 = l1 - c_mat[:, t] * ln1
-                p0 = np.where(c0 <= c1, 0, 1).astype(np.int8)
-                p1 = np.where(c0 + g <= c1, 0, 1).astype(np.int8)
-                n0 = quant(e0 + np.minimum(c0, c1))
-                n1 = quant(e1 + np.minimum(c0 + g, c1))
-                ptr0[:, t] = np.where(act, p0, 0)
-                ptr1[:, t] = np.where(act, p1, 0)
-                c0 = np.where(act, n0, c0)
-                c1 = np.where(act, n1, c1)
-            # backtrack, vectorized across lanes
-            st = np.zeros((lanes, t_max), dtype=np.int8)
-            lane = np.arange(lanes)
-            final = (c1 < c0).astype(np.int8)  # ties prefer state 0
-            st[lane, lens - 1] = final
-            for t in range(t_max - 2, -1, -1):
-                nxt = st[:, t + 1]
-                via = np.where(nxt == 0, ptr0[lane, t + 1],
-                               ptr1[lane, t + 1])
-                st[:, t] = np.where(t + 1 < lens, via, st[:, t])
-            for i in range(lanes):
-                n = int(lens[i])
-                outs.append(pd.DataFrame({
-                    **{c: pdf[c].iat[i] for c in names},
-                    "bucket_sec": secs[i] + np.arange(n) * bucket_s,
-                    "cnt": counts[i],
-                    "burst": st[i, :n].astype(bool),
-                }))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    out = grouped.mapInPandas(kern, schema=out_schema)
+    out = _map_segments(grouped, out_schema, kernel)
     return out.select(
         *[F.col(c) for c in series_cols],
         F.timestamp_seconds("bucket_sec").alias("bucket_ts"),

@@ -8,11 +8,11 @@ series_key) — recorded in the output so lineage can replay any row
 (SURVEY §4.3 "deterministic RNG for R-ops").
 
 The walks themselves are embarrassingly parallel across series: each
-walker is one map-only Arrow stage on the emitter of operators/graphs.py
-(`graphs._map_segments`, one walk per row), zero shuffle beyond the pack
-groupBy.  A null series row yields no output row.  `hash_walks` is the
-exception: it walks per-series edge groups, so it is one grouped
-applyInPandas.
+walker is one map-only Arrow stage on the package's one emitter
+(`emit._map_segments`, operators/emit.py, one walk per row), zero
+shuffle beyond the pack groupBy.  A null series row yields no output
+row.  `hash_walks` is the exception: it walks per-series edge groups,
+so it is one grouped applyInPandas.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ts2g2_spark.operators import genkernels as gk
-from ts2g2_spark.operators import graphs, kernels
+from ts2g2_spark.operators import emit, kernels
 
 PACKED_SCHEMA = (
     "series_key string, n long, node_values array<array<double>>, "
@@ -82,8 +82,8 @@ def _walk_rows(series: DataFrame, run_seed: int, walk, **params
             return [], [], []
         return [ps], [ns], [np.asarray(seq, np.float64)]
 
-    return graphs._map_segments(series, SEQ_SCHEMA,
-                                graphs._row_kernel(_SEQ_COLS, row))
+    return emit._map_segments(series, SEQ_SCHEMA,
+                              emit._row_kernel(_SEQ_COLS, row))
 
 
 def _plain_walk(rng, n, node_values, adj_src, adj_dst, *, ts_length,

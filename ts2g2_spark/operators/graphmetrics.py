@@ -6,7 +6,7 @@ the only built-in: eigenvector centrality).  ts2g2's unit of work is the
 per-series segment, so a graph metric is row-local: the `*_from_series`
 operators build each series' visibility graph AND run the metric on it
 inside the Arrow batch that holds the series, with zero shuffles, through
-the one emitter of operators/graphs.py (`graphs._map_segments`): one
+the package's one emitter (`emit._map_segments`, operators/emit.py): one
 segmented visibility-graph build per run of a batch, then the metric on
 each series' slice of those edges.  The numeric semantics (canonical
 undirected edge set, HALF_UP / IEEE-floor rounding contracts, fixed
@@ -32,7 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ts2g2_spark.operators import graphs, kernels
+from ts2g2_spark.operators import emit, kernels
 
 
 def canonical_edges(edges: DataFrame) -> DataFrame:
@@ -112,16 +112,16 @@ def _per_series(
         ["series_key string"] + [f"{n} {t}" for n, t in cols])
     types = [t for _, t in cols]
 
-    def kernel(_keys, v: graphs.Lists):
+    def kernel(_keys, v: emit.Lists):
         seg, e, _w = kernels.visibility_graph_segmented(
             v.values, v.lengths, kind=kind, limit=limit)
         cut = np.searchsorted(seg, np.arange(len(v.valid) + 1)).tolist()
         rows = np.flatnonzero(v.valid).tolist()
         parts = [metric(e[cut[r]:cut[r + 1]]) for r in rows]
-        seg, out = graphs._stack(rows, parts, types)
+        seg, out = emit._stack(rows, parts, types)
         return seg, {n: c for (n, _), c in zip(cols, out)}
 
-    return graphs._map_segments(
+    return emit._map_segments(
         series_df.select("series_key", "values"), schema, kernel)
 
 

@@ -2,10 +2,14 @@
 
 These are the vectorized compute cores that run inside Arrow batches
 (``mapInArrow`` / ``applyInPandas``) on executors.  The HVG, NVG, OPG and
-QG edge-set kernels consume a whole batch of series (one flat float64
-buffer plus the series lengths) per call; every other kernel consumes one
-series (a 1-D float64 array) and emits edge tuples.  Parity contract: the
-edge SET (and, where the reference is deterministic, the weights) must equal
+QG edge-set kernels, and the Holt, Holt-Winters and burst kernels, consume
+a whole batch of series (one flat buffer plus the series lengths) per
+call; every other kernel consumes one series (a 1-D float64 array), or a
+pair for linking.  The series statistics, forecasts and linking kernels at
+the end have no ts2g2 counterpart (or, for linking, replay the reference's
+formula); their outputs match the contract's SQL oracles, except the
+matrix profile's (BLAS summation order, rows-only).  Parity contract for
+the graph kernels: the edge SET (and, where the reference is deterministic, the weights) must equal
 what zangrcar/ts2g2 produces for the same input.  Reference semantics are
 cited by file:line; no reference code is copied — the reference computes the
 same predicates with O(n^2)/O(n^3) Python loops over NetworkX, these kernels
@@ -16,6 +20,9 @@ reproduced with the identical expression (HVG max-compare, digitize, argsort
 ties) or guarded: a fast vectorized predicate classifies pairs, and pairs
 within a relative tolerance band of the decision boundary are re-evaluated
 with the reference's literal arithmetic, so the decision bit is identical.
+
+Non-finite values: an NVG endpoint that is NaN or +-inf sees only its path
+neighbours; the visibility-graph section below states every rule.
 """
 
 from __future__ import annotations
@@ -82,11 +89,13 @@ def _row_ids(rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 # Visibility graphs  (ref: to_graph/strategies.py:479-546, 581-695, 698-751)
 # ---------------------------------------------------------------------------
 #
-# Non-finite values go through the same float64 comparisons as finite ones
-# (pinned in tests/test_graph_emitters.py): +-inf are ordinary ordered
-# values, and a NaN fails every comparison, so no line of sight passes over
-# it.  Under HVG a NaN endpoint sees what the other endpoint sees over;
-# under NVG a NaN endpoint sees nothing beyond its path edges.
+# Non-finite values (pinned in tests/test_graph_emitters.py): between the
+# endpoints, +-inf are ordinary ordered values, and a NaN fails every
+# comparison, so no line of sight passes over it.  Under HVG a NaN
+# endpoint sees what the other endpoint sees over and +-inf endpoints are
+# ordered values.  Under NVG a non-finite endpoint (NaN or +-inf) sees
+# nothing beyond its path edges, inside the `limit` window too: the line
+# through it is undefined, so no pair with it is decided by a slope.
 
 #: a one-series call of at most this many points takes the dense NVG scan
 #: (one 2-D numpy pass, ~8n^2 bytes of scratch); batches and longer series
@@ -124,13 +133,16 @@ def _nvg_dense(y: np.ndarray, limit: int) -> np.ndarray:
         M = np.full((n, n), -np.inf)
         np.maximum.accumulate(obstr[:, :-1], axis=1, out=M[:, 1:])
         cand = dist >= 2  # path edges handled by the caller
-        # a pair inside the limit window has no obstructor
+        # a pair inside the limit window has no obstructor; a non-finite
+        # endpoint sees nothing beyond its path edges
         inwin = cand & (dist <= limit + 1)
-        nan = np.isnan(y)
+        fin = np.isfinite(y)
+        ends = fin[:, None] & fin[None, :]
         tol = _BOUNDARY_RTOL * (np.abs(M) + np.abs(S) + 1.0)
-        visible = np.where(inwin, ~(nan[:, None] | nan[None, :]),
-                           M < S - tol)
-        boundary = cand & ~inwin & ~visible & (M <= S + tol)
+        visible = ends & (inwin | (M < S - tol))
+        # a +inf obstructor (M = +inf) blocks every later pair outright
+        boundary = (cand & ~inwin & ends & ~visible & (M <= S + tol)
+                    & (M < np.inf))
         for i, j in zip(*np.nonzero(boundary)):
             visible[i, j] = not _nvg_obstructed_ref(y, int(i), int(j), limit)
     ii, jj = np.nonzero(cand & visible)
@@ -149,9 +161,10 @@ def nvg_edges_segmented(values: np.ndarray, lengths,
     [x1+limit+1, x2) satisfies  y > slope*x + offset  where
     slope=(y2-y1)/(x2-x1), offset=y2-slope*x2 (strict >).  The ``limit``
     SKIPS the first ``limit`` intermediates (it does not gate pair distance),
-    so a pair with x2-x1 <= limit+1 has no obstructor: it is visible
-    unless an endpoint is NaN (a NaN endpoint sees nothing under NVG),
-    decided directly, whatever the slope.
+    so a pair with x2-x1 <= limit+1 has no obstructor: it is visible,
+    decided directly, whatever the slope.  A non-finite endpoint (NaN or
+    +-inf) sees nothing beyond its path edges, in the window or not: the
+    line through it is undefined (the literal predicate's NaN line).
 
     Fast path: visible(i,j) iff M < S, with S = slope(i,j) and M the
     running max of slope(i,k) over the obstructors k (mathematically
@@ -163,7 +176,9 @@ def nvg_edges_segmented(values: np.ndarray, lengths,
     once the running max m satisfies m > max(smax - y_i, 0)/(j - i) by a
     1e-6 relative guard (1000x the recheck band), smax being the
     segment-local suffix max from j on: every later slope is then below m,
-    so no later j is visible or lands in the recheck band.  The steps run
+    so no later j is visible or lands in the recheck band.  It also drops
+    out once m is +inf (a +inf obstructor hides every later point).  The
+    steps run
     to the longest visible extent; on stationary series that is far below
     the series length, and it reaches it only when the output itself is
     Theta(n^2) (e.g. convex series, where every pair is an edge).
@@ -178,7 +193,8 @@ def nvg_edges_segmented(values: np.ndarray, lengths,
     pos = np.arange(n, dtype=np.int64)
     # max(y[q : end_q]), the segment-local suffix max
     smax = _range_max(_range_max_table(y, np.diff(off).max()), pos, end)
-    p = np.flatnonzero(pos + 2 < end)  # anchors with a candidate pair
+    # finite anchors with a candidate pair: a non-finite one sees nothing
+    p = np.flatnonzero((pos + 2 < end) & np.isfinite(y))
     yp, e, m = y[p], end[p], np.full(len(p), -np.inf)
     src: list[np.ndarray] = []
     dst: list[np.ndarray] = []
@@ -188,12 +204,14 @@ def nvg_edges_segmented(values: np.ndarray, lengths,
             j = p + d
             S = (y[j] - yp) / d
             if d >= 2:
+                fin = np.isfinite(y[j])
                 if d <= limit + 1:  # inside the window: no obstructor
-                    visible = ~(np.isnan(yp) | np.isnan(y[j]))
+                    visible = fin
                 else:
                     tol = _BOUNDARY_RTOL * (np.abs(m) + np.abs(S) + 1.0)
-                    visible = m < S - tol
-                    for t in np.flatnonzero(~visible & (m <= S + tol)):
+                    visible = fin & (m < S - tol)
+                    for t in np.flatnonzero(fin & ~visible & (m <= S + tol)
+                                            & (m < np.inf)):
                         a = start[p[t]]
                         visible[t] = not _nvg_obstructed_ref(
                             y[a:e[t]], int(p[t] - a), int(j[t] - a), limit)
@@ -206,6 +224,7 @@ def nvg_edges_segmented(values: np.ndarray, lengths,
             ub = np.maximum(smax[np.where(live, j0, j)] - yp, 0.0) / (d + 1)
             live &= ~((m > 0.0)
                       & (m > ub + 1e-6 * (np.abs(m) + np.abs(ub) + 1.0)))
+            live &= m < np.inf  # past a +inf obstructor nothing is visible
             if not live.all():
                 p, yp, e, m = p[live], yp[live], e[live], m[live]
             d += 1
@@ -1386,7 +1405,8 @@ def link_prediction_kernel(
 
     Fully vectorized: wedge enumeration is a rank-expansion over the
     hub-sorted adjacency (sum-of-deg^2 rows, the triangle-count
-    budget), the fold is a rank-position loop bounded by max(cn).
+    budget), the fold is a rank-position loop bounded by max(cn), each
+    rank one contiguous slice of the rank-sorted wedges.
     Returns (u, v, cn, jaccard_raw, aa_raw) with u < v in original
     node labels.
 
@@ -1447,15 +1467,17 @@ def link_prediction_kernel(
     uniq, cn = np.unique(key_s, return_counts=True)
     # sequential ascending fold, vectorized across pairs: one pass per
     # rank position adds each pair's k-th smallest 1/ln(dz) term — the
-    # exact per-pair operand order of the oracle's fold
+    # exact per-pair operand order of the oracle's fold.  The wedges are
+    # ordered by rank once, so rank k's terms are one contiguous slice.
     seg_id = np.repeat(np.arange(uniq.shape[0], dtype=np.int64), cn)
     pos = np.arange(key_s.shape[0], dtype=np.int64) - np.repeat(
         np.cumsum(cn) - cn, cn)
-    terms = 1.0 / np.log(dz_s)
+    by_pos = np.argsort(pos, kind="stable")
+    cut = np.concatenate(([0], np.cumsum(np.bincount(pos))))
+    seg_k, terms_k = seg_id[by_pos], (1.0 / np.log(dz_s))[by_pos]
     aa = np.zeros(uniq.shape[0], dtype=np.float64)
-    for k in range(int(cn.max())):
-        sel = pos == k
-        aa[seg_id[sel]] += terms[sel]  # <=1 term per segment per rank
+    for lo, hi in zip(cut[:-1].tolist(), cut[1:].tolist()):
+        aa[seg_k[lo:hi]] += terms_k[lo:hi]  # <=1 term per pair per rank
     edge_key = ai * np.int64(n) + bi
     keep = (cn >= min_cn) & ~np.isin(uniq, np.sort(edge_key))
     uu = (uniq // n)[keep]
@@ -1465,3 +1487,430 @@ def link_prediction_kernel(
     dv = degree[vv]
     jacc = cnk.astype(np.float64) / (du + dv - cnk).astype(np.float64)
     return nodes[uu], nodes[vv], cnk, jacc, aa[keep]
+
+
+# ---------------------------------------------------------------------------
+# Series statistics, forecasts and linking (run on the Arrow emitter by
+# operators/seriesstats.py, metrics.py, eventseq.py and linking.py)
+# ---------------------------------------------------------------------------
+# The row kernels take one series (or a pair of series) and return one
+# sequence per output column, all empty for no row.  The segmented ones
+# take a run's flat buffer plus its segment lengths and step every segment
+# of the run together through one (lanes, T) grid.
+
+
+def theil_sen_kernel(sec: np.ndarray, y: np.ndarray,
+                     out_dp: int) -> tuple[list, ...]:
+    """One series' Theil-Sen (n_buckets, slope, intercept) from its
+    bucket epoch seconds and means; no row for < 2 buckets."""
+    if len(y) < 2:
+        return [], [], []
+    t = sec.astype(np.float64) / 3600.0
+    i, j = np.triu_indices(len(y), 1)
+    slope = float(np.median((y[j] - y[i]) / (t[j] - t[i])))
+    intercept = float(np.median(y - slope * t))
+    return [len(y)], [_quant(slope, out_dp)], [_quant(intercept, out_dp)]
+
+
+def _quant(x: float, dp: int) -> float:
+    """quantize_ieee of a scalar, -0.0 canonicalized."""
+    return float(quantize_ieee(x, dp)) + 0.0
+
+
+def mann_kendall_kernel(y: np.ndarray, z_crit: float,
+                        out_dp: int) -> tuple[list, ...]:
+    """One series' Mann-Kendall (n_buckets, s_stat, var_s, z, trend)
+    from its bucket means; no row for < 2 buckets."""
+    n = len(y)
+    if n < 2:
+        return [], [], [], [], []
+    i, j = np.triu_indices(n, 1)
+    s = int(np.sign(y[j] - y[i]).sum())
+    _, tcnt = np.unique(y, return_counts=True)
+    t = tcnt[tcnt > 1].astype(np.int64)
+    var_num = (n * (n - 1) * (2 * n + 5)
+               - int((t * (t - 1) * (2 * t + 5)).sum()))
+    var_s = var_num / 18.0
+    if s == 0:
+        z = 0.0
+    else:
+        adj = s - 1 if s > 0 else s + 1
+        z = _quant(adj / np.sqrt(var_s), out_dp)
+    trend = ("no trend" if abs(z) <= z_crit
+             else "increasing" if z > 0 else "decreasing")
+    return [n], [s], [var_s], [z], [trend]
+
+
+def matrix_profile_kernel(x: np.ndarray, m: int, excl: int, round_dp: int,
+                          max_subsequences: int) -> tuple[np.ndarray, ...]:
+    """One series' matrix profile rows (pos, nn_pos, dist); none when it
+    has < 2 subsequences."""
+    n = len(x)
+    p = n - m + 1  # number of subsequences
+    if p < 2:
+        return [], [], []
+    if p > max_subsequences:
+        raise ValueError(
+            f"matrix_profile: series has {p} subsequences "
+            f"(> max_subsequences={max_subsequences}); the "
+            f"profile is O(n^2) per series — raise the cap "
+            f"explicitly if this is intended")
+    idx = np.arange(p)[:, None] + np.arange(m)[None, :]
+    W = x[idx]
+    mu = W.mean(axis=1)
+    sig = W.std(axis=1)
+    const = sig <= 1e-12
+    nn = np.empty(p, dtype=np.int64)
+    nd = np.empty(p, dtype=np.float64)
+    pos_all = np.arange(p)
+    for lo in range(0, p, 2048):
+        hi = min(lo + 2048, p)
+        G = W[lo:hi] @ W.T
+        blk = slice(lo, hi)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            rho = ((G - m * mu[blk, None] * mu[None, :])
+                   / (m * sig[blk, None] * sig[None, :]))
+        d2 = 2.0 * m * (1.0 - rho)
+        cb = const[blk]
+        # constant-vs-constant -> 0; constant-vs-varying -> sqrt(m)
+        # (stumpy convention)
+        both = cb[:, None] & const[None, :]
+        one = cb[:, None] ^ const[None, :]
+        d2 = np.where(both, 0.0, d2)
+        d2 = np.where(one, float(m), d2)
+        # trivial-match exclusion zone
+        tri = np.abs(pos_all[blk, None] - pos_all[None, :]) <= excl
+        d2 = np.where(tri, np.inf, d2)
+        j = np.argmin(d2, axis=1)
+        nn[blk] = j
+        nd[blk] = np.sqrt(np.maximum(d2[np.arange(hi - lo), j], 0.0))
+    # no non-trivial neighbor at all (every candidate sits inside the
+    # exclusion zone): nn = -1, dist = inf — the stumpy convention, not
+    # the argmin's index 0
+    nn[np.isinf(nd)] = -1
+    return pos_all, nn, quantize_ieee(nd, round_dp)
+
+
+def _pelt_segments(y, beta: float, msz: int):
+    """The pure PELT DP (module-level so tests can fuzz it against the
+    exhaustive DP without Spark): returns [(start, end), ...] segment
+    bounds, end-exclusive, for the L2 cost with penalty `beta` and
+    minimum segment length `msz`.
+
+    Pruning with a VALIDITY DELAY: the classic prune (drop s once
+    F(s) + C(s,t) > F(t)) is only sound when the dominating candidate t
+    is itself usable at every future T — which min_size breaks for
+    T in (t, t + msz).  A violating candidate is therefore only MARKED
+    at t and keeps participating until T >= t_mark + msz, after which
+    domination genuinely holds (C_L2 is subadditive).  Without the
+    delay, msz >= 2 returns provably suboptimal segmentations
+    (~1.6% of random series in fuzzing).  DP argmin ties resolve to
+    the smallest candidate."""
+
+    y = np.asarray(y, dtype=np.float64)
+    n = len(y)
+    s1 = np.concatenate([[0.0], np.cumsum(y)])
+    s2 = np.concatenate([[0.0], np.cumsum(y * y)])
+
+    def seg_cost(s, t):
+        ln = t - s
+        d = s1[t] - s1[s]
+        return (s2[t] - s2[s]) - d * d / ln
+
+    NEVER = np.int64(2 * (n + msz) + 10)  # "unmarked"; no int overflow
+    Fv = np.full(n + 1, np.inf)
+    Fv[0] = -beta
+    prev = np.zeros(n + 1, dtype=np.int64)
+    cand = np.array([0], dtype=np.int64)
+    mark = np.array([NEVER], dtype=np.int64)
+    for t in range(msz, n + 1):
+        ok = cand[t - cand >= msz]
+        if len(ok) == 0:
+            cand = np.append(cand, t)
+            mark = np.append(mark, NEVER)
+            continue
+        tot = Fv[ok] + seg_cost(ok, t) + beta
+        j = int(np.argmin(tot))
+        Fv[t] = tot[j]
+        prev[t] = ok[j]
+        # retire candidates whose marker is now >= msz steps old
+        live = t < mark + msz
+        cand, mark = cand[live], mark[live]
+        # mark (don't drop) newly-dominated candidates
+        viol = (mark == NEVER) & (
+            Fv[cand] + seg_cost(cand, t) > Fv[t])
+        mark[viol] = t
+        cand = np.append(cand, t)
+        mark = np.append(mark, NEVER)
+    bounds = [n]
+    t = n
+    while t > 0:
+        t = int(prev[t])
+        bounds.append(t)
+    b = bounds[::-1]
+    return list(zip(b[:-1], b[1:])), s1, s2
+
+
+def pelt_kernel(y: np.ndarray, beta: float, msz: int, round_dp: int,
+                max_points: int) -> tuple[np.ndarray, ...]:
+    """One series' PELT segment rows (seg_id, start_pos, end_pos,
+    n_points, seg_mean, seg_cost); none for an empty series."""
+    n = len(y)
+    if n < 1:
+        return [], [], [], [], [], []
+    if n > max_points:
+        raise ValueError(
+            f"pelt_changepoints: series has {n} points "
+            f"(> max_points={max_points}) — worst case is "
+            f"quadratic; raise the cap explicitly")
+    segs, s1, s2 = _pelt_segments(y, beta, msz)
+    st = np.array([a for a, _ in segs], dtype=np.int64)
+    en = np.array([b for _, b in segs], dtype=np.int64)
+    ln = en - st
+    mean = (s1[en] - s1[st]) / ln
+    cost = (s2[en] - s2[st]) - (s1[en] - s1[st]) ** 2 / ln
+    return (np.arange(len(segs), dtype=np.int64), st, en, ln,
+            quantize_ieee(mean, round_dp),
+            quantize_ieee(np.maximum(cost, 0.0), round_dp))
+
+
+def pearson_prefix(a: np.ndarray, b: np.ndarray) -> float:
+    """Pearson r over the common prefix; NaN -> 0 like the reference
+    (strategy_linking_multi_graphs.py:66-68)."""
+    n = min(len(a), len(b))
+    # pandas Series.corr aligns on index; the reference resets the index,
+    # so alignment is positional over the common length
+    with np.errstate(invalid="ignore", divide="ignore"):
+        c = np.corrcoef(a[:n], b[:n])[0, 1] if n >= 2 else np.nan
+    return 0.0 if np.isnan(c) else float(c)
+
+
+def xcorr_best(a: np.ndarray, b: np.ndarray, max_lag: int,
+                min_overlap: int, round_dp: int) -> tuple[list, ...]:
+    """One pair's best (lag, weight, binding) over lags -max_lag..max_lag
+    (|r| desc, then lag asc); no row when no lag overlaps min_overlap
+    points."""
+    best = None  # (-|w|, lag, w)
+    for lag in range(-max_lag, max_lag + 1):
+        t0 = max(0, -lag)
+        t1 = min(len(a), len(b) - lag)
+        if t1 - t0 < min_overlap:
+            continue
+        with np.errstate(invalid="ignore", divide="ignore"):
+            c = np.corrcoef(a[t0:t1], b[t0 + lag:t1 + lag])[0, 1]
+        # quantize_ieee, not np.round: half-to-even vs the cross-engine
+        # floor(x*1e{dp}+0.5) contract would rank an exact-.5-boundary r
+        # differently from the oracle
+        w = 0.0 if np.isnan(c) else float(quantize_ieee(c, round_dp))
+        w += 0.0  # canonicalize -0.0
+        key = (-abs(w), lag)
+        if best is None or key < best[:2]:
+            best = (-abs(w), lag, w)
+    if best is None:
+        return [], [], []
+    return [best[1]], [best[2]], ["xcorr"]
+
+
+def dtw_path(
+    s1: np.ndarray, s2: np.ndarray, band: int | None = None
+) -> list[tuple[int, int]]:
+    """DTW optimal warping path (ref strategy_linking_multi_graphs.py:
+    310-316 via dtaidistance.dtw).  dtaidistance is absent upstream and
+    here, so the engine pins the contract to the published DTW recurrence:
+    D[i,j] = (s1[i]-s2[j])^2 + min(D[i-1,j-1], D[i-1,j], D[i,j-1]),
+    backtrack preferring the diagonal on ties (first-minimum order
+    diag/up/left).  O(n*m) DP, vectorized per row.
+
+    band: Sakoe-Chiba radius — cells with |i*m/n - j| > band are pruned,
+    bounding the DP at O(n*band) for long series (the remaining quadratic
+    in the linking family).  band=None (default) is the exact full DP;
+    a band >= max(n, m) is equivalent to exact (pinned by test).  The band
+    is measured around the diagonal of the RESCALED grid so unequal
+    lengths stay reachable."""
+    s1 = np.asarray(s1, np.float64)
+    s2 = np.asarray(s2, np.float64)
+    n, m = len(s1), len(s2)
+    if n == 0 or m == 0:
+        raise ValueError(
+            f"dtw_path: empty series (lengths {n}, {m}) — no alignment")
+    D = np.full((n + 1, m + 1), np.inf)
+    D[0, 0] = 0.0
+    for i in range(1, n + 1):
+        if band is None:
+            jlo, jhi = 1, m
+        else:
+            center = i * m / n
+            jlo = max(1, int(np.ceil(center - band)))
+            jhi = min(m, int(np.floor(center + band)))
+            if jlo > jhi:
+                continue
+        c = (s1[i - 1] - s2) ** 2
+        # vectorized row update: D[i,j] needs D[i,j-1] (left), so scan the
+        # row with a running min — still O(m) per row, no inner Python loop
+        # over the three candidates.
+        diag = D[i - 1, :-1]
+        up = D[i - 1, 1:]
+        best = np.minimum(diag, up)
+        row = np.full(m + 1, np.inf)
+        for j in range(jlo, jhi + 1):
+            row[j] = c[j - 1] + min(best[j - 1], row[j - 1])
+        D[i] = row
+    if not np.isfinite(D[n, m]):
+        # a band narrower than the per-row center shift (roughly
+        # band < (m/n - 1)/2) leaves consecutive row windows
+        # non-overlapping — no valid warping path exists; fail loudly
+        # instead of backtracking through inf into a fabricated path
+        raise ValueError(
+            f"dtw_path: band={band} too narrow for lengths ({n}, {m}) — "
+            f"no reachable path; use band >= ~{max(1, (m + n - 1) // n)}")
+    # backtrack (diag, up, left) first-minimum, mirroring the conftest stub
+    # and dtaidistance.dtw.best_path tie behavior
+    i, j = n, m
+    path = [(i - 1, j - 1)]
+    while i > 1 or j > 1:
+        cands = ((D[i - 1, j - 1], i - 1, j - 1), (D[i - 1, j], i - 1, j),
+                 (D[i, j - 1], i, j - 1))
+        _, i, j = min(cands, key=lambda t: t[0])
+        path.append((i - 1, j - 1))
+    path.reverse()
+    return path
+
+
+def _grid(values: np.ndarray, lengths: np.ndarray, rows: np.ndarray
+          ) -> np.ndarray:
+    """Segments `rows` of a flat buffer (segment lengths `lengths`) as a
+    (len(rows), longest) float matrix, each left-aligned, NaN-padded."""
+    lens = lengths[rows]
+    out = np.full((len(rows), int(lens.max(initial=0))), np.nan)
+    lane = np.repeat(np.arange(len(rows)), lens)
+    col = np.arange(len(lane)) - np.repeat(np.cumsum(lens) - lens, lens)
+    out[lane, col] = values[np.repeat(_offsets(lengths)[rows], lens) + col]
+    return out
+
+
+def holt_state_segmented(values: np.ndarray, lengths, alpha: float,
+                         beta: float, state_dp: int
+                         ) -> tuple[np.ndarray, ...]:
+    """Final Holt state of every segment with >= 2 buckets: (segment, n,
+    level, trend), one numpy step per bucket index across all of them
+    (NaN-padded lanes masked)."""
+    lengths = np.asarray(lengths, np.int64)
+    rows = np.flatnonzero(lengths >= 2)
+    lens = lengths[rows]
+    if not len(rows):
+        return rows, lens, np.empty(0), np.empty(0)
+    y = _grid(values, lengths, rows)
+    ia, ib = 1.0 - alpha, 1.0 - beta
+    lvl = y[:, 0].copy()
+    trd = quantize_ieee(y[:, 1] - y[:, 0], state_dp)
+    for t in range(1, y.shape[1]):
+        act = t < lens
+        y_t = y[:, t]
+        l_new = quantize_ieee(alpha * y_t + ia * (lvl + trd), state_dp)
+        t_new = quantize_ieee(beta * (l_new - lvl) + ib * trd, state_dp)
+        lvl = np.where(act, l_new, lvl)
+        trd = np.where(act, t_new, trd)
+    return rows, lens, lvl, trd
+
+
+def holt_winters_state_segmented(values: np.ndarray, lengths, m: int,
+                                 alpha: float, beta: float, gamma: float,
+                                 state_dp: int) -> tuple[np.ndarray, ...]:
+    """Final Holt-Winters state of every segment with >= 2m buckets:
+    (segment, n, level, trend, seasonals[lanes, m]), one numpy step per
+    bucket index across all of them with a rolling (lanes, m) seasonal
+    buffer; seasonals[r, j] = s_{n-m+1+j}."""
+    lengths = np.asarray(lengths, np.int64)
+    rows = np.flatnonzero(lengths >= 2 * m)
+    lens = lengths[rows]
+    if not len(rows):
+        return rows, lens, np.empty(0), np.empty(0), np.empty((0, m))
+    y = _grid(values, lengths, rows)
+    ia, ib, ig = 1.0 - alpha, 1.0 - beta, 1.0 - gamma
+
+    def quant(x):
+        return quantize_ieee(x, state_dp)
+
+    acc1 = np.zeros(len(rows))
+    acc2 = np.zeros(len(rows))
+    for i in range(m):
+        acc1 = quant(acc1 + y[:, i])
+        acc2 = quant(acc2 + y[:, m + i])
+    mean1 = quant(acc1 / m)
+    mean2 = quant(acc2 / m)
+    lvl = mean1.copy()
+    trd = quant((mean2 - mean1) / m)
+    s = quant(y[:, :m] - mean1[:, None])  # slot i = s_{i+1}
+    for t in range(m, y.shape[1]):
+        act = t < lens
+        slot = t % m
+        s_old = s[:, slot]
+        y_t = y[:, t]
+        l_new = quant(alpha * (y_t - s_old) + ia * (lvl + trd))
+        t_new = quant(beta * (l_new - lvl) + ib * trd)
+        s_new = quant(gamma * (y_t - l_new) + ig * s_old)
+        lvl = np.where(act, l_new, lvl)
+        trd = np.where(act, t_new, trd)
+        s[:, slot] = np.where(act, s_new, s_old)
+    # roll each lane so element j (0-based) = s_{n-m+1+j}: slot (n % m)
+    # holds the OLDEST live seasonal s_{n-m+1}
+    rolled = s[np.arange(len(rows))[:, None],
+               (np.arange(m)[None, :] + lens[:, None]) % m]
+    return rows, lens, lvl, trd, rolled
+
+
+def burst_states_segmented(secs: np.ndarray, counts: np.ndarray, lengths,
+                           bucket_s: int, s: float, gamma: float,
+                           state_dp: int) -> tuple[np.ndarray, ...]:
+    """Kleinberg two-state Viterbi burst labels of every segment: each
+    segment's observed (bucket second, count) pairs densified between its
+    first and last bucket into one (lanes, T) count grid, forward and
+    backward passes vectorized across lanes.  Returns (segment,
+    bucket_sec, cnt, burst), one row per dense bucket."""
+
+    def quant(x):
+        return quantize_ieee(x, state_dp)
+
+    lengths = np.asarray(lengths, np.int64)
+    off = _offsets(lengths)
+    rows = np.flatnonzero(lengths > 0)
+    first = secs[off[rows]]
+    lens = (secs[off[rows + 1] - 1] - first) // bucket_s + 1
+    lanes, t_max = len(rows), int(lens.max(initial=1))
+    lane = np.repeat(np.arange(lanes), lengths[rows])
+    cnt = np.zeros((lanes, t_max), dtype=np.int64)
+    cnt[lane, (secs - first[lane]) // bucket_s] = counts
+    c_mat = cnt.astype(np.float64)
+    n_f = lens.astype(np.float64)
+    l0 = c_mat.sum(axis=1) / n_f
+    l1 = s * l0
+    ln0, ln1 = np.log(l0), np.log(l1)
+    g = gamma * np.log(n_f)
+    c0 = quant(l0 - c_mat[:, 0] * ln0)
+    c1 = quant(g + l1 - c_mat[:, 0] * ln1)
+    ptr0 = np.zeros((lanes, t_max), dtype=np.int8)
+    ptr1 = np.zeros((lanes, t_max), dtype=np.int8)
+    for t in range(1, t_max):
+        act = t < lens
+        e0 = l0 - c_mat[:, t] * ln0
+        e1 = l1 - c_mat[:, t] * ln1
+        p0 = np.where(c0 <= c1, 0, 1).astype(np.int8)
+        p1 = np.where(c0 + g <= c1, 0, 1).astype(np.int8)
+        n0 = quant(e0 + np.minimum(c0, c1))
+        n1 = quant(e1 + np.minimum(c0 + g, c1))
+        ptr0[:, t] = np.where(act, p0, 0)
+        ptr1[:, t] = np.where(act, p1, 0)
+        c0 = np.where(act, n0, c0)
+        c1 = np.where(act, n1, c1)
+    # backtrack, vectorized across lanes
+    st = np.zeros((lanes, t_max), dtype=np.int8)
+    lane = np.arange(lanes)
+    st[lane, lens - 1] = (c1 < c0).astype(np.int8)  # ties prefer state 0
+    for t in range(t_max - 2, -1, -1):
+        nxt = st[:, t + 1]
+        via = np.where(nxt == 0, ptr0[lane, t + 1], ptr1[lane, t + 1])
+        st[:, t] = np.where(t + 1 < lens, via, st[:, t])
+    dense = np.arange(t_max) < lens[:, None]
+    lane, t = np.nonzero(dense)
+    return (rows[lane], first[lane] + t * bucket_s, cnt[dense],
+            st[dense].astype(bool))

@@ -27,13 +27,13 @@ edge once with src <= dst (NetworkX Graph dedup canonicalized).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ts2g2_spark.operators import kernels
+from ts2g2_spark.operators.emit import _map_segments, _row_kernel
+from ts2g2_spark.operators.kernels import dtw_path
 
 LINK_EDGE_SCHEMA = "src string, dst string, weight double, binding string"
 
@@ -104,29 +104,13 @@ def link_value_within_range(
 
 # --------------------------------------------------------------- L3/L4
 def _pearson_pairs(pairs: DataFrame, binding: str) -> DataFrame:
-    """Vectorized Pearson over joined (values_a, values_b) columns;
-    NaN -> 0 like the reference (strategy_linking_multi_graphs.py:66-68)."""
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ws = np.empty(len(pdf))
-            for i, (a, b) in enumerate(zip(pdf["values_a"], pdf["values_b"])):
-                a = np.asarray(a, np.float64)
-                b = np.asarray(b, np.float64)
-                n = min(len(a), len(b))
-                # pandas Series.corr aligns on index; reference resets the
-                # index so alignment is positional over the common length
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    c = np.corrcoef(a[:n], b[:n])[0, 1] if n >= 2 else np.nan
-                ws[i] = 0.0 if np.isnan(c) else c
-            yield pd.DataFrame({
-                "src": pdf["src"], "dst": pdf["dst"], "weight": ws,
-                "binding": binding,
-            })
-
-    return pairs.mapInPandas(kern, schema=LINK_EDGE_SCHEMA)
+    """Pearson weight of each (src, dst, values_a, values_b) pair row; a
+    pair with a null `values` yields no row."""
+    return _map_segments(
+        pairs, LINK_EDGE_SCHEMA,
+        _row_kernel([("weight", "double"), ("binding", "string")],
+                    lambda _src, _dst, a, b: (
+                        [kernels.pearson_prefix(a, b)], [binding])))
 
 
 def link_correlation(nodes: DataFrame, group_col: str | None = None) -> DataFrame:
@@ -139,20 +123,23 @@ def link_correlation(nodes: DataFrame, group_col: str | None = None) -> DataFram
     Physical plan: self-join a < b — at reference scale the node count is
     the variable count, so Spark broadcasts the smaller side; the grouped
     variant joins on (group, a<b)."""
-    cols = ["node_id", "values"] + ([group_col] if group_col else [])
-    n = nodes.select(*cols)
-    on = F.col("a.node_id") < F.col("b.node_id")
+    return _pearson_pairs(_value_pairs(nodes, "node_id", group_col),
+                          "Correlation")
+
+
+def _value_pairs(frame: DataFrame, key: str,
+                 group_col: str | None = None) -> DataFrame:
+    """(src, dst, values_a, values_b) for every pair of rows with
+    key a < key b (and, with group_col, the same group): one self-join,
+    broadcast at variable-count scale."""
+    n = frame.select(key, "values", *([group_col] if group_col else []))
+    on = F.col(f"a.{key}") < F.col(f"b.{key}")
     if group_col:
         on = (F.col(f"a.{group_col}") == F.col(f"b.{group_col}")) & on
-    pairs = (
-        n.alias("a").join(n.alias("b"), on=on)
-        .select(
-            F.col("a.node_id").alias("src"), F.col("b.node_id").alias("dst"),
-            F.col("a.values").alias("values_a"),
-            F.col("b.values").alias("values_b"),
-        )
-    )
-    return _pearson_pairs(pairs, "Correlation")
+    return n.alias("a").join(n.alias("b"), on=on).select(
+        F.col(f"a.{key}").alias("src"), F.col(f"b.{key}").alias("dst"),
+        F.col("a.values").alias("values_a"),
+        F.col("b.values").alias("values_b"))
 
 
 # ------------------------------------------------------- L3 rank variant
@@ -181,21 +168,13 @@ def link_spearman(nodes: DataFrame) -> DataFrame:
 
     int64 bound: half-ranks <= 2n, so n*sum(ha*hb) <= 4*n^4 — the int64
     ceiling is n ~ 38k and the double-exactness ceiling n ~ 6.9k."""
-    n = nodes.select("node_id", "values")
-    keyed = (
-        n.alias("a").join(n.alias("b"),
-                          on=F.col("a.node_id") < F.col("b.node_id"))
-        .select(
-            F.col("a.node_id").alias("src"), F.col("b.node_id").alias("dst"),
-            F.col("a.values").alias("va"), F.col("b.values").alias("vb"),
-        )
-    )
+    keyed = _value_pairs(nodes, "node_id")
     pairs = (
         keyed
-        .withColumn("n", F.least(F.size("va"), F.size("vb")))
+        .withColumn("n", F.least(F.size("values_a"), F.size("values_b")))
         .select("src", "dst",
-                F.slice("va", 1, F.col("n")).alias("pa"),
-                F.slice("vb", 1, F.col("n")).alias("pb"))
+                F.slice("values_a", 1, F.col("n")).alias("pa"),
+                F.slice("values_b", 1, F.col("n")).alias("pb"))
         .select("src", "dst",
                 F.posexplode(F.arrays_zip(F.col("pa"), F.col("pb"))))
         .select("src", "dst", F.col("col.pa").alias("xa"),
@@ -259,17 +238,8 @@ def link_time_cooccurrence(nodes: DataFrame) -> DataFrame:
 def link_positional_correlation(nodes: DataFrame) -> DataFrame:
     """L5 plus Pearson weight of the two nodes' timeseries attributes (ref
     strategy_linking_multi_graphs.py:180-240)."""
-    n = nodes.select("node_id", "ord", "values")
-    pairs = (
-        n.alias("a").join(n.alias("b"), on="ord")
-        .where(F.col("a.node_id") < F.col("b.node_id"))
-        .select(
-            F.col("a.node_id").alias("src"), F.col("b.node_id").alias("dst"),
-            F.col("a.values").alias("values_a"),
-            F.col("b.values").alias("values_b"),
-        )
-    )
-    return _pearson_pairs(pairs, "positional")
+    return _pearson_pairs(_value_pairs(nodes, "node_id", "ord"),
+                          "positional")
 
 
 # --------------------------------------------------------------- L7
@@ -293,71 +263,6 @@ def link_sliding_window_chain(segment_graphs: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------- L8
-def dtw_path(
-    s1: np.ndarray, s2: np.ndarray, band: int | None = None
-) -> list[tuple[int, int]]:
-    """DTW optimal warping path (ref strategy_linking_multi_graphs.py:
-    310-316 via dtaidistance.dtw).  dtaidistance is absent upstream and
-    here, so the engine pins the contract to the published DTW recurrence:
-    D[i,j] = (s1[i]-s2[j])^2 + min(D[i-1,j-1], D[i-1,j], D[i,j-1]),
-    backtrack preferring the diagonal on ties (first-minimum order
-    diag/up/left).  O(n*m) DP, vectorized per row.
-
-    band: Sakoe-Chiba radius — cells with |i*m/n - j| > band are pruned,
-    bounding the DP at O(n*band) for long series (the remaining quadratic
-    in the linking family).  band=None (default) is the exact full DP;
-    a band >= max(n, m) is equivalent to exact (pinned by test).  The band
-    is measured around the diagonal of the RESCALED grid so unequal
-    lengths stay reachable."""
-    s1 = np.asarray(s1, np.float64)
-    s2 = np.asarray(s2, np.float64)
-    n, m = len(s1), len(s2)
-    if n == 0 or m == 0:
-        raise ValueError(
-            f"dtw_path: empty series (lengths {n}, {m}) — no alignment")
-    D = np.full((n + 1, m + 1), np.inf)
-    D[0, 0] = 0.0
-    for i in range(1, n + 1):
-        if band is None:
-            jlo, jhi = 1, m
-        else:
-            center = i * m / n
-            jlo = max(1, int(np.ceil(center - band)))
-            jhi = min(m, int(np.floor(center + band)))
-            if jlo > jhi:
-                continue
-        c = (s1[i - 1] - s2) ** 2
-        # vectorized row update: D[i,j] needs D[i,j-1] (left), so scan the
-        # row with a running min — still O(m) per row, no inner Python loop
-        # over the three candidates.
-        diag = D[i - 1, :-1]
-        up = D[i - 1, 1:]
-        best = np.minimum(diag, up)
-        row = np.full(m + 1, np.inf)
-        for j in range(jlo, jhi + 1):
-            row[j] = c[j - 1] + min(best[j - 1], row[j - 1])
-        D[i] = row
-    if not np.isfinite(D[n, m]):
-        # a band narrower than the per-row center shift (roughly
-        # band < (m/n - 1)/2) leaves consecutive row windows
-        # non-overlapping — no valid warping path exists; fail loudly
-        # instead of backtracking through inf into a fabricated path
-        raise ValueError(
-            f"dtw_path: band={band} too narrow for lengths ({n}, {m}) — "
-            f"no reachable path; use band >= ~{max(1, (m + n - 1) // n)}")
-    # backtrack (diag, up, left) first-minimum, mirroring the conftest stub
-    # and dtaidistance.dtw.best_path tie behavior
-    i, j = n, m
-    path = [(i - 1, j - 1)]
-    while i > 1 or j > 1:
-        cands = ((D[i - 1, j - 1], i - 1, j - 1), (D[i - 1, j], i - 1, j),
-                 (D[i, j - 1], i, j - 1))
-        _, i, j = min(cands, key=lambda t: t[0])
-        path.append((i - 1, j - 1))
-    path.reverse()
-    return path
-
-
 def link_dtw(series: DataFrame, band: int | None = None) -> DataFrame:
     """DTW linking (ref strategy_linking_multi_graphs.py:288-333): for each
     series pair (i < j), compute the DTW best path over the RAW series and
@@ -368,35 +273,20 @@ def link_dtw(series: DataFrame, band: int | None = None) -> DataFrame:
     Physical plan: self-join on key order (variable-count scale -> Spark
     broadcasts), DTW DP inside an Arrow kernel per pair.  Pass band= (a
     Sakoe-Chiba radius) to bound the per-pair DP at O(n*band) when series
-    are long; default None = the exact reference-parity full DP."""
-    n = series.select("series_key", "values")
-    pairs = (
-        n.alias("a").join(n.alias("b"),
-                          on=F.col("a.series_key") < F.col("b.series_key"))
-        .select(
-            F.col("a.series_key").alias("key_a"),
-            F.col("b.series_key").alias("key_b"),
-            F.col("a.values").alias("values_a"),
-            F.col("b.values").alias("values_b"),
-        )
-    )
+    are long; default None = the exact reference-parity full DP.  A
+    pair with a null `values` yields no row; an empty series raises
+    (`kernels.dtw_path`)."""
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                for a, b in dtw_path(np.asarray(r.values_a, np.float64),
-                                     np.asarray(r.values_b, np.float64),
-                                     band=band):
-                    rows.append({
-                        "src": f"{r.key_a}:{a}", "dst": f"{r.key_b}:{b}",
-                        "weight": None,
-                        "binding": "dynamical time warping",
-                    })
-            if rows:
-                yield pd.DataFrame(rows)
+    def links(key_a, key_b, a, b):
+        path = dtw_path(a, b, band=band)
+        return ([f"{key_a}:{i}" for i, _ in path],
+                [f"{key_b}:{j}" for _, j in path],
+                [None] * len(path), ["dynamical time warping"] * len(path))
 
-    return pairs.mapInPandas(kern, schema=LINK_EDGE_SCHEMA)
+    return _map_segments(
+        _value_pairs(series, "series_key"), LINK_EDGE_SCHEMA,
+        _row_kernel([("src", "string"), ("dst", "string"),
+                     ("weight", "double"), ("binding", "string")], links))
 
 
 # --------------------------------------------------------------- L10
@@ -536,54 +426,10 @@ def link_cross_correlation(
     lag grid — no extra shuffle beyond the pair join."""
     if max_lag < 0 or min_overlap < 2:
         raise ValueError("max_lag must be >= 0 and min_overlap >= 2")
-    n = nodes.select("node_id", "values")
-    pairs = (
-        n.alias("a").join(
-            n.alias("b"), on=F.col("a.node_id") < F.col("b.node_id"))
-        .select(
-            F.col("a.node_id").alias("src"),
-            F.col("b.node_id").alias("dst"),
-            F.col("a.values").alias("values_a"),
-            F.col("b.values").alias("values_b"),
-        )
-    )
-    lags = list(range(-max_lag, max_lag + 1))
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ts2g2_spark.operators.kernels import quantize_ieee
-
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                a = np.asarray(r.values_a, np.float64)
-                b = np.asarray(r.values_b, np.float64)
-                best = None  # (-|w|, lag, w)
-                for lag in lags:
-                    t0 = max(0, -lag)
-                    t1 = min(len(a), len(b) - lag)
-                    m = t1 - t0
-                    if m < min_overlap:
-                        continue
-                    with np.errstate(invalid="ignore", divide="ignore"):
-                        c = np.corrcoef(a[t0:t1], b[t0 + lag:t1 + lag])[0, 1]
-                    # quantize_ieee, not np.round: half-to-even vs the
-                    # cross-engine floor(x*1e{dp}+0.5) contract would rank
-                    # an exact-.5-boundary r differently from the oracle
-                    w = (0.0 if np.isnan(c)
-                         else float(quantize_ieee(c, round_dp)))
-                    w += 0.0  # canonicalize -0.0
-                    key = (-abs(w), lag)
-                    if best is None or key < best[:2]:
-                        best = (-abs(w), lag, w)
-                if best is not None:
-                    out.append({"src": r.src, "dst": r.dst,
-                                "lag": best[1], "weight": best[2],
-                                "binding": "xcorr"})
-            if out:
-                yield pd.DataFrame(out)
-
-    return pairs.mapInPandas(
-        kern,
-        schema="src string, dst string, lag int, weight double,"
-               " binding string",
-    )
+    return _map_segments(
+        _value_pairs(nodes, "node_id"),
+        "src string, dst string, lag int, weight double, binding string",
+        _row_kernel([("lag", "int"), ("weight", "double"),
+                     ("binding", "string")],
+                    lambda _src, _dst, a, b: kernels.xcorr_best(
+                        a, b, max_lag, min_overlap, round_dp)))

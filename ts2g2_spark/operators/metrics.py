@@ -9,15 +9,24 @@ Scale shapes (pure Catalyst): each operator is one ordered window on
 the series key (lag/lead neighbours) followed by a hash aggregate on
 (series, bucket) — a strict refinement of the window key, so the
 second exchange is partial-aggregated and carries one row per bucket.
-No joins, no Python crossings.
+No joins, no Python crossings.  The exception is the smoothing
+forecasts (`holt_forecast`, `holt_winters_forecast`): one collect_list
+shuffle on the series key, then one crossing through the package's Arrow
+emitter (`emit._map_segments`) whose recurrence runs vectorized across
+the series of a run.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DoubleType, LongType, StructField,
+                               StructType, TimestampType)
 
-from ts2g2_spark.operators.seriesstats import _series_windows
+from ts2g2_spark.operators import kernels
+from ts2g2_spark.operators.emit import _map_segments
+from ts2g2_spark.operators.seriesstats import _series_windows, bucket_means
 
 # seconds per FIXED-WIDTH date_trunc unit — the single source of truth
 # for every bucket/grid validation in this module (variable-width units
@@ -25,6 +34,20 @@ from ts2g2_spark.operators.seriesstats import _series_windows
 # rejected or require an explicit *_s override, per call site)
 BUCKET_SECONDS = {"second": 1, "minute": 60, "hour": 3600,
                   "day": 86400, "week": 604800}
+
+
+def _bucket_seconds(op: str, bucket: str, bucket_s: int | None) -> int:
+    """The width of a `bucket` in seconds: BUCKET_SECONDS' for a fixed-
+    width unit, which an explicit bucket_s must agree with; a variable-
+    width unit needs bucket_s."""
+    known = BUCKET_SECONDS.get(bucket)
+    if known is not None and bucket_s not in (None, known):
+        raise ValueError(f"{op}: bucket_s={bucket_s} contradicts "
+                         f"bucket='{bucket}' ({known}s)")
+    if known is None and bucket_s is None:
+        raise ValueError(f"{op}: pass bucket_s for non-fixed-length "
+                         f"bucket '{bucket}'")
+    return known if bucket_s is None else bucket_s
 
 
 def time_weighted_avg(
@@ -192,18 +215,7 @@ def seasonal_naive_forecast(
         raise ValueError(
             f"seasonal_naive_forecast: need period >= 1 and "
             f"1 <= horizon <= period, got {period=} {horizon=}")
-    known = BUCKET_SECONDS
-    if bucket in known:
-        if bucket_s is None:
-            bucket_s = known[bucket]
-        elif bucket_s != known[bucket]:
-            raise ValueError(
-                f"seasonal_naive_forecast: bucket_s={bucket_s} "
-                f"contradicts bucket='{bucket}' ({known[bucket]}s)")
-    elif bucket_s is None:
-        raise ValueError(
-            f"seasonal_naive_forecast: pass bucket_s for "
-            f"non-fixed-length bucket '{bucket}'")
+    bucket_s = _bucket_seconds("seasonal_naive_forecast", bucket, bucket_s)
     scols = [F.col(c) for c in series_cols]
     b = F.date_trunc(bucket, F.col(ts_col))
     means = (
@@ -292,80 +304,31 @@ def holt_forecast(
 
     Output: series cols + bucket_ts (future), step (1..horizon), yhat,
     level, trend (final smoothed state, `state_dp` decimals)."""
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType, TimestampType)
-
     if not (0.0 < alpha <= 1.0 and 0.0 < beta <= 1.0):
         raise ValueError(
             f"holt_forecast: need 0 < alpha, beta <= 1, got {alpha=} "
             f"{beta=}")
     if horizon < 1:
         raise ValueError(f"holt_forecast: need horizon >= 1, got {horizon=}")
-    known = BUCKET_SECONDS
-    if bucket in known:
-        if bucket_s is None:
-            bucket_s = known[bucket]
-        elif bucket_s != known[bucket]:
-            raise ValueError(
-                f"holt_forecast: bucket_s={bucket_s} contradicts "
-                f"bucket='{bucket}' ({known[bucket]}s)")
-    elif bucket_s is None:
-        raise ValueError(
-            f"holt_forecast: pass bucket_s for non-fixed-length "
-            f"bucket '{bucket}'")
-    from ts2g2_spark.operators.seriesstats import bucket_means
-
+    bucket_s = _bucket_seconds("holt_forecast", bucket, bucket_s)
     scols = [F.col(c) for c in series_cols]
-    means = bucket_means(points, bucket, series_cols, ts_col, val_col,
-                         dp=out_dp)
-    grouped = means.groupBy(*scols).agg(
-        F.sort_array(F.collect_list(F.struct("bucket_ts", "y"))).alias("_s")
-    ).select(*scols, F.col("_s.y").alias("_ys"),
-             F.element_at(F.col("_s.bucket_ts"), -1).alias("last_ts"))
-    key_fields = [grouped.schema[c] for c in series_cols]
-    out_schema = StructType(key_fields + [
+    grouped = _bucket_series(points, bucket, series_cols, ts_col, val_col,
+                             out_dp)
+    out_schema = StructType([grouped.schema[c] for c in series_cols] + [
         StructField("last_ts", TimestampType()),
         StructField("n", LongType()),
         StructField("level", DoubleType()),
         StructField("trend", DoubleType()),
     ])
-    ia, ib = 1.0 - alpha, 1.0 - beta
-    names = list(series_cols)
 
-    def kern(batches):
-        import numpy as np
+    def kernel(ys, *_keys):
+        rows, n, level, trend = kernels.holt_state_segmented(
+            ys.values, ys.lengths, alpha, beta, state_dp)
+        return rows, {"n": pa.array(n),
+                      "level": pa.array(level, from_pandas=True),
+                      "trend": pa.array(trend, from_pandas=True)}
 
-        from ts2g2_spark.operators.kernels import quantize_ieee
-
-        def quant(x):
-            return quantize_ieee(x, state_dp)
-
-        for pdf in batches:
-            lens = pdf["_ys"].map(len).to_numpy()
-            sub = pdf.loc[lens >= 2]
-            if sub.empty:
-                continue
-            lens = lens[lens >= 2]
-            t_max = int(lens.max())
-            y_mat = np.full((len(sub), t_max), np.nan)
-            for i, v in enumerate(sub["_ys"]):
-                y_mat[i, : len(v)] = v
-            lvl = y_mat[:, 0].copy()
-            trd = quant(y_mat[:, 1] - y_mat[:, 0])
-            for t in range(1, t_max):
-                act = t < lens
-                y_t = y_mat[:, t]
-                l_new = quant(alpha * y_t + ia * (lvl + trd))
-                t_new = quant(beta * (l_new - lvl) + ib * trd)
-                lvl = np.where(act, l_new, lvl)
-                trd = np.where(act, t_new, trd)
-            out = sub[[*names, "last_ts"]].copy()
-            out["n"] = lens
-            out["level"] = lvl
-            out["trend"] = trd
-            yield out
-
-    state = grouped.mapInPandas(kern, schema=out_schema)
+    state = _map_segments(grouped, out_schema, kernel)
     step = F.explode(F.sequence(F.lit(1), F.lit(horizon))).alias("step")
     # yhat quantized with the same IEEE floor formula (F.round would
     # reintroduce the decimal-HALF_UP vs engine-round divergence);
@@ -383,6 +346,19 @@ def holt_forecast(
         (F.col("level") + F.lit(0.0)).alias("level"),
         (F.col("trend") + F.lit(0.0)).alias("trend"),
     )
+
+
+def _bucket_series(points, bucket, series_cols, ts_col, val_col, dp):
+    """(_ys, series cols..., last_ts): each series' bucket means (rounded
+    to `dp`) in time order and its last bucket — the smoothing
+    forecasts' input, one collect_list shuffle on the series key."""
+    scols = [F.col(c) for c in series_cols]
+    means = bucket_means(points, bucket, series_cols, ts_col, val_col,
+                         dp=dp)
+    return means.groupBy(*scols).agg(
+        F.sort_array(F.collect_list(F.struct("bucket_ts", "y"))).alias("_s")
+    ).select(F.col("_s.y").alias("_ys"), *scols,
+             F.element_at(F.col("_s.bucket_ts"), -1).alias("last_ts"))
 
 
 def psi_drift(
@@ -612,10 +588,6 @@ def holt_winters_forecast(
 
     Output: series cols + bucket_ts (future), step, yhat, level, trend,
     seasonal (the seasonal component applied at that step)."""
-    from pyspark.sql.types import (ArrayType, DoubleType, LongType,
-                                   StructField, StructType,
-                                   TimestampType)
-
     if not (0.0 < alpha <= 1.0 and 0.0 < beta <= 1.0
             and 0.0 < gamma <= 1.0):
         raise ValueError(
@@ -627,29 +599,11 @@ def holt_winters_forecast(
     if horizon < 1:
         raise ValueError(
             f"holt_winters_forecast: need horizon >= 1, got {horizon=}")
-    known = BUCKET_SECONDS
-    if bucket in known:
-        if bucket_s is None:
-            bucket_s = known[bucket]
-        elif bucket_s != known[bucket]:
-            raise ValueError(
-                f"holt_winters_forecast: bucket_s={bucket_s} "
-                f"contradicts bucket='{bucket}' ({known[bucket]}s)")
-    elif bucket_s is None:
-        raise ValueError(
-            f"holt_winters_forecast: pass bucket_s for non-fixed-length "
-            f"bucket '{bucket}'")
-    from ts2g2_spark.operators.seriesstats import bucket_means
-
+    bucket_s = _bucket_seconds("holt_winters_forecast", bucket, bucket_s)
     scols = [F.col(c) for c in series_cols]
-    means = bucket_means(points, bucket, series_cols, ts_col, val_col,
-                         dp=out_dp)
-    grouped = means.groupBy(*scols).agg(
-        F.sort_array(F.collect_list(F.struct("bucket_ts", "y"))).alias("_s")
-    ).select(*scols, F.col("_s.y").alias("_ys"),
-             F.element_at(F.col("_s.bucket_ts"), -1).alias("last_ts"))
-    key_fields = [grouped.schema[c] for c in series_cols]
-    out_schema = StructType(key_fields + [
+    grouped = _bucket_series(points, bucket, series_cols, ts_col, val_col,
+                             out_dp)
+    out_schema = StructType([grouped.schema[c] for c in series_cols] + [
         StructField("last_ts", TimestampType()),
         StructField("n", LongType()),
         StructField("level", DoubleType()),
@@ -657,60 +611,17 @@ def holt_winters_forecast(
         StructField("seasonals", ArrayType(DoubleType())),
     ])
     m = period
-    ia, ib, ig = 1.0 - alpha, 1.0 - beta, 1.0 - gamma
-    names = list(series_cols)
 
-    def kern(batches):
-        import numpy as np
+    def kernel(ys, *_keys):
+        rows, n, level, trend, seas = kernels.holt_winters_state_segmented(
+            ys.values, ys.lengths, m, alpha, beta, gamma, state_dp)
+        return rows, {"n": pa.array(n),
+                      "level": pa.array(level, from_pandas=True),
+                      "trend": pa.array(trend, from_pandas=True),
+                      "seasonals": pa.array(list(seas), pa.list_(
+                          pa.float64()), from_pandas=True)}
 
-        from ts2g2_spark.operators.kernels import quantize_ieee
-
-        def quant(x):
-            return quantize_ieee(x, state_dp)
-
-        for pdf in batches:
-            lens = pdf["_ys"].map(len).to_numpy()
-            sub = pdf.loc[lens >= 2 * m]
-            if sub.empty:
-                continue
-            lens = lens[lens >= 2 * m]
-            t_max = int(lens.max())
-            y = np.full((len(sub), t_max), np.nan)
-            for i, v in enumerate(sub["_ys"]):
-                y[i, : len(v)] = v
-            acc1 = np.zeros(len(sub))
-            acc2 = np.zeros(len(sub))
-            for i in range(m):
-                acc1 = quant(acc1 + y[:, i])
-                acc2 = quant(acc2 + y[:, m + i])
-            mean1 = quant(acc1 / m)
-            mean2 = quant(acc2 / m)
-            lvl = mean1.copy()
-            trd = quant((mean2 - mean1) / m)
-            s = quant(y[:, :m] - mean1[:, None])  # slot i = s_{i+1}
-            for t in range(m, t_max):
-                act = t < lens
-                slot = t % m
-                s_old = s[:, slot]
-                y_t = y[:, t]
-                l_new = quant(alpha * (y_t - s_old) + ia * (lvl + trd))
-                t_new = quant(beta * (l_new - lvl) + ib * trd)
-                s_new = quant(gamma * (y_t - l_new) + ig * s_old)
-                lvl = np.where(act, l_new, lvl)
-                trd = np.where(act, t_new, trd)
-                s[:, slot] = np.where(act, s_new, s_old)
-            out = sub[[*names, "last_ts"]].copy()
-            out["n"] = lens
-            out["level"] = lvl
-            out["trend"] = trd
-            # roll the buffer so element j (0-based) = s_{n-m+1+j}:
-            # slot (n % m) holds the OLDEST live seasonal s_{n-m+1}
-            rolled = [np.roll(s[i], -int(lens[i]) % m).tolist()
-                      for i in range(len(sub))]
-            out["seasonals"] = rolled
-            yield out
-
-    state = grouped.mapInPandas(kern, schema=out_schema)
+    state = _map_segments(grouped, out_schema, kernel)
     step = F.explode(F.sequence(F.lit(1), F.lit(horizon))).alias("step")
     out_scale = 10.0 ** out_dp
     seas = F.element_at(
@@ -862,8 +773,6 @@ def ar2_forecast(
     the series — no global ordering, no kernel, no join bigger than
     series x 1."""
     from pyspark.sql.window import Window
-
-    from ts2g2_spark.operators.seriesstats import bucket_means
 
     if horizon < 1:
         raise ValueError("ar2_forecast: horizon must be >= 1")

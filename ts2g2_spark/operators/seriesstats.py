@@ -7,7 +7,7 @@ linking, strategy_linking_multi_graphs.py:28-60; correlation linking,
 :80-118) with the classic statistical summaries a monitoring/analytics
 tier serves next to the rollup tables.
 
-Scale shapes (all Catalyst, no Python crossings):
+Scale shapes (Catalyst, except the per-series kernels named last):
   * acf / cusum / periodogram: ONE exchange on the series key — the
     per-series moments ride an unordered window over the same partition
     the ordered window uses, and the final aggregate is a partial-agg'd
@@ -22,6 +22,12 @@ Scale shapes (all Catalyst, no Python crossings):
     group's values in memory (sort-based agg); at 10^12-point scale swap
     `F.percentile` for `percentile_approx` — same call shape, sketch
     memory, no exchange change.
+  * theil_sen_trend / mann_kendall / matrix_profile / pelt_changepoints:
+    one collect_list shuffle on the series key, then one Python crossing
+    through the package's Arrow emitter (`emit._map_segments`, one
+    kernel per series row; a null series row yields no rows).  The
+    per-series quadratic work stays inside the kernel, never in a
+    shuffle.
 """
 
 from __future__ import annotations
@@ -30,8 +36,12 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (DoubleType, LongType, StringType,
+                               StructField, StructType)
 from pyspark.sql.window import Window
 
+from ts2g2_spark.operators import kernels
+from ts2g2_spark.operators.emit import _map_segments, _row_kernel
 from ts2g2_spark.operators.summarize import _okey
 
 
@@ -630,9 +640,6 @@ def theil_sen_trend(
     buckets is 2160 points, 2.3M pair slopes, ~19 MB); nothing
     quadratic ever enters a shuffle, unlike the relational twin the
     oracle runs.  Series with < 2 buckets are skipped."""
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
     scols = [F.col(c) for c in series_cols]
     # the kernel receives epoch SECONDS via unix_timestamp (an absolute
     # instant) rather than the timestamps themselves: Arrow hands Python
@@ -643,46 +650,17 @@ def theil_sen_trend(
         F.sort_array(F.collect_list(F.struct(
             "bucket_ts", "y",
             F.unix_timestamp("bucket_ts").alias("sec")))).alias("_s")
-    ).select(*scols, F.col("_s.sec").alias("_secs"),
-             F.col("_s.y").alias("_ys"))
-    key_fields = [grouped.schema[c] for c in series_cols]
-    out_schema = StructType(key_fields + [
+    ).select(F.col("_s.sec").alias("_secs"), F.col("_s.y").alias("_ys"),
+             *scols)
+    out_schema = StructType([grouped.schema[c] for c in series_cols] + [
         StructField("n_buckets", LongType()),
         StructField("slope", DoubleType()),
         StructField("intercept", DoubleType()),
     ])
-    names = list(series_cols)
-
-    def kern(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ts2g2_spark.operators.kernels import quantize_ieee
-
-        def quant(x):
-            return float(quantize_ieee(x, out_dp)) + 0.0
-
-        for pdf in batches:
-            rows = []
-            # positional access: itertuples mangles the _-prefixed
-            # staging column names
-            for k in range(len(pdf)):
-                y = np.asarray(pdf["_ys"].iat[k], dtype=np.float64)
-                if len(y) < 2:
-                    continue
-                sec = np.asarray(pdf["_secs"].iat[k], dtype=np.int64)
-                t = sec.astype(np.float64) / 3600.0
-                i, j = np.triu_indices(len(y), 1)
-                slope = float(np.median((y[j] - y[i]) / (t[j] - t[i])))
-                intercept = float(np.median(y - slope * t))
-                rows.append((*[pdf[c].iat[k] for c in names], len(y),
-                             quant(slope), quant(intercept)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[*names, "n_buckets", "slope",
-                                   "intercept"])
-
-    return grouped.mapInPandas(kern, schema=out_schema)
+    return _map_segments(grouped, out_schema, _row_kernel(
+        [("n_buckets", "long"), ("slope", "double"),
+         ("intercept", "double")],
+        lambda sec, y, *_keys: kernels.theil_sen_kernel(sec, y, out_dp)))
 
 
 def mann_kendall(
@@ -715,62 +693,23 @@ def mann_kendall(
     Scale shape: identical to theil_sen_trend — bucket means, one
     collect_list shuffle, map-only kernel with the O(n^2) sign pairs
     transient per series."""
-    from pyspark.sql.types import (DoubleType, LongType, StringType,
-                                   StructField, StructType)
-
     scols = [F.col(c) for c in series_cols]
     means = bucket_means(points, bucket, series_cols, ts_col, val_col)
     grouped = means.groupBy(*scols).agg(
         F.sort_array(F.collect_list(F.struct("bucket_ts", "y"))).alias("_s")
-    ).select(*scols, F.col("_s.y").alias("_ys"))
-    key_fields = [grouped.schema[c] for c in series_cols]
-    out_schema = StructType(key_fields + [
+    ).select(F.col("_s.y").alias("_ys"), *scols)
+    out_schema = StructType([grouped.schema[c] for c in series_cols] + [
         StructField("n_buckets", LongType()),
         StructField("s_stat", LongType()),
         StructField("var_s", DoubleType()),
         StructField("z", DoubleType()),
         StructField("trend", StringType()),
     ])
-    names = list(series_cols)
-
-    def kern(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ts2g2_spark.operators.kernels import quantize_ieee
-
-        def quant(x):
-            return float(quantize_ieee(x, out_dp)) + 0.0
-
-        for pdf in batches:
-            rows = []
-            for k in range(len(pdf)):
-                y = np.asarray(pdf["_ys"].iat[k], dtype=np.float64)
-                n = len(y)
-                if n < 2:
-                    continue
-                i, j = np.triu_indices(n, 1)
-                s = int(np.sign(y[j] - y[i]).sum())
-                _, tcnt = np.unique(y, return_counts=True)
-                t = tcnt[tcnt > 1].astype(np.int64)
-                var_num = (n * (n - 1) * (2 * n + 5)
-                           - int((t * (t - 1) * (2 * t + 5)).sum()))
-                var_s = var_num / 18.0
-                if s == 0:
-                    z = 0.0
-                else:
-                    adj = s - 1 if s > 0 else s + 1
-                    z = quant(adj / np.sqrt(var_s))
-                trend = ("no trend" if abs(z) <= z_crit
-                         else "increasing" if z > 0 else "decreasing")
-                rows.append((*[pdf[c].iat[k] for c in names],
-                             n, s, var_s, z, trend))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[*names, "n_buckets", "s_stat",
-                                   "var_s", "z", "trend"])
-
-    return grouped.mapInPandas(kern, schema=out_schema)
+    return _map_segments(grouped, out_schema, _row_kernel(
+        [("n_buckets", "long"), ("s_stat", "long"), ("var_s", "double"),
+         ("z", "double"), ("trend", "string")],
+        lambda y, *_keys: kernels.mann_kendall_kernel(
+            y, z_crit, out_dp)))
 
 
 def decompose_strength(
@@ -867,160 +806,24 @@ def matrix_profile(
 
     Output: series cols + pos, nn_pos, dist — one row per subsequence.
     """
-    from pyspark.sql.types import (ArrayType, DoubleType, LongType,
-                                   StructField, StructType)
-
     if m < 3:
         raise ValueError(f"matrix_profile: m must be >= 3, got {m}")
     excl = max(1, m // 4) if exclusion is None else int(exclusion)
     if excl < 1:
         raise ValueError("matrix_profile: exclusion must be >= 1")
-    scols = [F.col(c) for c in series_cols]
     grouped, key_fields = _collect_raw_series(
         points, series_cols, ts_col, val_col, order_col)
-    grouped = grouped.drop("_uss")
     out_schema = StructType(key_fields + [
-        StructField("pos", ArrayType(LongType())),
-        StructField("nn_pos", ArrayType(LongType())),
-        StructField("dist", ArrayType(DoubleType())),
+        StructField("pos", LongType()),
+        StructField("nn_pos", LongType()),
+        StructField("dist", DoubleType()),
     ])
-    names = list(series_cols)
-
-    def kern(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ts2g2_spark.operators.kernels import quantize_ieee
-
-        for pdf in batches:
-            rows = []
-            for k in range(len(pdf)):
-                x = np.asarray(pdf["_vs"].iat[k], dtype=np.float64)
-                n = len(x)
-                p = n - m + 1  # number of subsequences
-                if p < 2:
-                    continue
-                if p > max_subsequences:
-                    raise ValueError(
-                        f"matrix_profile: series has {p} subsequences "
-                        f"(> max_subsequences={max_subsequences}); the "
-                        f"profile is O(n^2) per series — raise the cap "
-                        f"explicitly if this is intended")
-                idx = np.arange(p)[:, None] + np.arange(m)[None, :]
-                W = x[idx]
-                mu = W.mean(axis=1)
-                sig = W.std(axis=1)
-                const = sig <= 1e-12
-                nn = np.empty(p, dtype=np.int64)
-                nd = np.empty(p, dtype=np.float64)
-                pos_all = np.arange(p)
-                for lo in range(0, p, 2048):
-                    hi = min(lo + 2048, p)
-                    G = W[lo:hi] @ W.T
-                    blk = slice(lo, hi)
-                    with np.errstate(invalid="ignore",
-                                     divide="ignore"):
-                        rho = ((G - m * mu[blk, None] * mu[None, :])
-                               / (m * sig[blk, None] * sig[None, :]))
-                    d2 = 2.0 * m * (1.0 - rho)
-                    cb = const[blk]
-                    # constant-vs-constant -> 0; constant-vs-varying
-                    # -> sqrt(m) (stumpy convention)
-                    both = cb[:, None] & const[None, :]
-                    one = cb[:, None] ^ const[None, :]
-                    d2 = np.where(both, 0.0, d2)
-                    d2 = np.where(one, float(m), d2)
-                    # trivial-match exclusion zone
-                    tri = np.abs(pos_all[blk, None]
-                                 - pos_all[None, :]) <= excl
-                    d2 = np.where(tri, np.inf, d2)
-                    j = np.argmin(d2, axis=1)
-                    nn[blk] = j
-                    nd[blk] = np.sqrt(
-                        np.maximum(d2[np.arange(hi - lo), j], 0.0))
-                # no non-trivial neighbor at all (every candidate sits
-                # inside the exclusion zone): nn = -1, dist = inf —
-                # the stumpy convention, not the argmin's index 0
-                nn[np.isinf(nd)] = -1
-                nd = np.asarray(quantize_ieee(nd, round_dp),
-                                dtype=np.float64)
-                rows.append((*[pdf[c].iat[k] for c in names],
-                             pos_all.astype(np.int64), nn, nd))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[*names, "pos", "nn_pos", "dist"])
-
-    arrays = grouped.mapInPandas(kern, schema=out_schema)
-    exploded = arrays.select(
-        *scols, F.arrays_zip("pos", "nn_pos", "dist").alias("_z")
-    ).select(*scols, F.explode("_z").alias("_e"))
-    return exploded.select(
-        *scols,
-        F.col("_e.pos").alias("pos"),
-        F.col("_e.nn_pos").alias("nn_pos"),
-        F.col("_e.dist").alias("dist"),
-    )
-
-
-def _pelt_segments(y, beta: float, msz: int):
-    """The pure PELT DP (module-level so tests can fuzz it against the
-    exhaustive DP without Spark): returns [(start, end), ...] segment
-    bounds, end-exclusive, for the L2 cost with penalty `beta` and
-    minimum segment length `msz`.
-
-    Pruning with a VALIDITY DELAY: the classic prune (drop s once
-    F(s) + C(s,t) > F(t)) is only sound when the dominating candidate t
-    is itself usable at every future T — which min_size breaks for
-    T in (t, t + msz).  A violating candidate is therefore only MARKED
-    at t and keeps participating until T >= t_mark + msz, after which
-    domination genuinely holds (C_L2 is subadditive).  Without the
-    delay, msz >= 2 returns provably suboptimal segmentations
-    (~1.6% of random series in fuzzing).  DP argmin ties resolve to
-    the smallest candidate."""
-    import numpy as np
-
-    y = np.asarray(y, dtype=np.float64)
-    n = len(y)
-    s1 = np.concatenate([[0.0], np.cumsum(y)])
-    s2 = np.concatenate([[0.0], np.cumsum(y * y)])
-
-    def seg_cost(s, t):
-        ln = t - s
-        d = s1[t] - s1[s]
-        return (s2[t] - s2[s]) - d * d / ln
-
-    NEVER = np.int64(2 * (n + msz) + 10)  # "unmarked"; no int overflow
-    Fv = np.full(n + 1, np.inf)
-    Fv[0] = -beta
-    prev = np.zeros(n + 1, dtype=np.int64)
-    cand = np.array([0], dtype=np.int64)
-    mark = np.array([NEVER], dtype=np.int64)
-    for t in range(msz, n + 1):
-        ok = cand[t - cand >= msz]
-        if len(ok) == 0:
-            cand = np.append(cand, t)
-            mark = np.append(mark, NEVER)
-            continue
-        tot = Fv[ok] + seg_cost(ok, t) + beta
-        j = int(np.argmin(tot))
-        Fv[t] = tot[j]
-        prev[t] = ok[j]
-        # retire candidates whose marker is now >= msz steps old
-        live = t < mark + msz
-        cand, mark = cand[live], mark[live]
-        # mark (don't drop) newly-dominated candidates
-        viol = (mark == NEVER) & (
-            Fv[cand] + seg_cost(cand, t) > Fv[t])
-        mark[viol] = t
-        cand = np.append(cand, t)
-        mark = np.append(mark, NEVER)
-    bounds = [n]
-    t = n
-    while t > 0:
-        t = int(prev[t])
-        bounds.append(t)
-    b = bounds[::-1]
-    return list(zip(b[:-1], b[1:])), s1, s2
+    return _map_segments(
+        grouped.select("_vs", *series_cols), out_schema,
+        _row_kernel([("pos", "long"), ("nn_pos", "long"),
+                     ("dist", "double")],
+                    lambda x, *_keys: kernels.matrix_profile_kernel(
+                        x, m, excl, round_dp, max_subsequences)))
 
 
 def pelt_changepoints(
@@ -1043,7 +846,7 @@ def pelt_changepoints(
 
     with PELT's candidate pruning under a min_size VALIDITY DELAY (a
     dominated candidate is only retired once the dominating one is
-    itself a usable changepoint — see `_pelt_segments`; the undelayed
+    itself a usable changepoint — see `kernels._pelt_segments`; the undelayed
     textbook prune is unsound for min_size >= 2), so typical cost is
     O(n) per series against the O(n^2) exhaustive DP — which it
     provably equals (pinned by the brute-force parity + fuzz tests).
@@ -1064,78 +867,29 @@ def pelt_changepoints(
     (_collect_raw_series), then a map-only Arrow kernel; one series per
     task (the theil_sen retention-bounded contract), `max_points` guards
     the worst-case quadratic loudly."""
-    from pyspark.sql.types import (ArrayType, DoubleType, LongType,
-                                   StructField, StructType)
-
     if penalty <= 0:
         raise ValueError("pelt_changepoints: penalty must be > 0")
     if min_size < 1:
         raise ValueError("pelt_changepoints: min_size must be >= 1")
-    scols = [F.col(c) for c in series_cols]
     grouped, key_fields = _collect_raw_series(
         points, series_cols, ts_col, val_col, order_col)
-    grouped = grouped.drop("_uss")
     out_schema = StructType(key_fields + [
-        StructField("seg_id", ArrayType(LongType())),
-        StructField("start_pos", ArrayType(LongType())),
-        StructField("end_pos", ArrayType(LongType())),
-        StructField("n_points", ArrayType(LongType())),
-        StructField("seg_mean", ArrayType(DoubleType())),
-        StructField("seg_cost", ArrayType(DoubleType())),
+        StructField("seg_id", LongType()),
+        StructField("start_pos", LongType()),
+        StructField("end_pos", LongType()),
+        StructField("n_points", LongType()),
+        StructField("seg_mean", DoubleType()),
+        StructField("seg_cost", DoubleType()),
     ])
-    names = list(series_cols)
     beta = float(penalty)
     msz = int(min_size)
-
-    def kern(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ts2g2_spark.operators.kernels import quantize_ieee
-
-        for pdf in batches:
-            rows = []
-            for k in range(len(pdf)):
-                y = np.asarray(pdf["_vs"].iat[k], dtype=np.float64)
-                n = len(y)
-                if n < 1:
-                    continue
-                if n > max_points:
-                    raise ValueError(
-                        f"pelt_changepoints: series has {n} points "
-                        f"(> max_points={max_points}) — worst case is "
-                        f"quadratic; raise the cap explicitly")
-                segs, s1, s2 = _pelt_segments(y, beta, msz)
-                st = np.array([a for a, _ in segs], dtype=np.int64)
-                en = np.array([b for _, b in segs], dtype=np.int64)
-                ln = en - st
-                mean = (s1[en] - s1[st]) / ln
-                cost = (s2[en] - s2[st]) - (s1[en] - s1[st]) ** 2 / ln
-                rows.append((
-                    *[pdf[c].iat[k] for c in names],
-                    np.arange(len(segs), dtype=np.int64), st, en, ln,
-                    np.asarray(quantize_ieee(mean, round_dp)),
-                    np.asarray(quantize_ieee(np.maximum(cost, 0.0),
-                                             round_dp)),
-                ))
-            if rows:
-                yield pd.DataFrame(rows, columns=[
-                    *names, "seg_id", "start_pos", "end_pos",
-                    "n_points", "seg_mean", "seg_cost"])
-
-    arrays = grouped.mapInPandas(kern, schema=out_schema)
-    z = F.arrays_zip("seg_id", "start_pos", "end_pos", "n_points",
-                     "seg_mean", "seg_cost")
-    exploded = arrays.select(*scols, F.explode(z).alias("_e"))
-    return exploded.select(
-        *scols,
-        F.col("_e.seg_id").alias("seg_id"),
-        F.col("_e.start_pos").alias("start_pos"),
-        F.col("_e.end_pos").alias("end_pos"),
-        F.col("_e.n_points").alias("n_points"),
-        F.col("_e.seg_mean").alias("seg_mean"),
-        F.col("_e.seg_cost").alias("seg_cost"),
-    )
+    return _map_segments(
+        grouped.select("_vs", *series_cols), out_schema,
+        _row_kernel([("seg_id", "long"), ("start_pos", "long"),
+                     ("end_pos", "long"), ("n_points", "long"),
+                     ("seg_mean", "double"), ("seg_cost", "double")],
+                    lambda y, *_keys: kernels.pelt_kernel(
+                        y, beta, msz, round_dp, max_points)))
 
 
 def rolling_quantile(

@@ -15,7 +15,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
@@ -88,6 +87,7 @@ def decompress_chunks(chunks: DataFrame) -> DataFrame:
     applyInPandas (not mapInPandas): a doc's chunks must be reassembled
     whole, and grouped-UDF semantics guarantee the full group per call even
     when a stored chunk table was split across files/batches."""
+    import pandas as pd
 
     def kernel(g: pd.DataFrame) -> pd.DataFrame:
         g = g.sort_values("chunk_id")
