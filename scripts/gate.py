@@ -13,7 +13,7 @@ and print the contract's reason for having none.  `--out` keeps, per
 query, the Spark value hash (`spark_hash`) and, when oracled, the DuckDB
 one (`oracle_hash`), so two runs can be compared hash by hash.
 
-Usage:
+Usage, from any directory:
     python scripts/gate.py [--sf-dir /root/testdata/sf0.01] [--only q1,q2]
 Exit code 0 iff every checked query matches.
 """
@@ -31,7 +31,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -88,6 +89,10 @@ def main() -> int:
     ap.add_argument("--out", default="")
     args = ap.parse_args()
 
+    # Python workers fork from ts2g2_spark.pydaemon: put this checkout on
+    # their path, so the gate runs from any directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     import __spark_entry__ as entry
     from ts2g2_spark.session import get_spark
 

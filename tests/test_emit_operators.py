@@ -5,7 +5,8 @@ function run in-process on the same series, in the same order within a
 series.  The
 inputs hold series shorter than each operator's minimum (< 2 buckets,
 < 2 periods, < 2 subsequences) and, for the linking operators, a null
-`values` row, which yields no row.
+`values` row, which yields no row; `link_dtw` also gets an empty series,
+which yields no row either.
 """
 
 from __future__ import annotations
@@ -161,9 +162,11 @@ def _correlation(spark, grouped):
 
 
 def _dtw(spark, points):
+    """Also holds an empty series, which has no alignment: no row for its
+    pairs."""
     series = spark.createDataFrame(
-        [(n, v) for _, n, v in NODES], "series_key string, values "
-                                       "array<double>")
+        [(n, v) for _, n, v in NODES] + [("g", [])],
+        "series_key string, values array<double>")
     got = linking.link_dtw(series).collect()
     want = [(f"{s}:{i}", f"{d}:{j}", None, "dynamical time warping")
             for s, d, a, b in _pairs() for i, j in kernels.dtw_path(a, b)]

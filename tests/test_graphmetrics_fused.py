@@ -164,52 +164,46 @@ def test_clustering_kernel_matches_networkx(name):
         assert c == pytest.approx(nxc[int(n)], abs=1e-9)
 
 
-@pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_clustering_kernel_sparse_path_matches_dense(name, monkeypatch):
-    # force the CSR intersection path by shrinking the dense cutoff
-    import ts2g2_spark.operators.kernels as K
+def _equal_degree_graphs():
+    """Random graphs where most nodes share a degree (regular graphs, a
+    triangular lattice, circulant graphs), so the (degree, index)
+    orientation of the triangle count breaks most of its ties by index."""
+    out = [nx.random_regular_graph(d, n, seed=s)
+           for s, (d, n) in enumerate([(3, 20), (4, 30), (6, 40), (8, 24),
+                                       (5, 50), (10, 30)])]
+    out.append(nx.triangular_lattice_graph(5, 8))
+    out.append(nx.circulant_graph(30, [1, 2, 5]))
+    out.append(nx.complete_graph(9))
+    return [nx.convert_node_labels_to_integers(g) for g in out]
 
-    e = np.array(GRAPHS[name], dtype=np.int64)
-    dense = graph_clustering_kernel(e)
 
-    src = K.graph_clustering_kernel.__doc__  # keep coverage honest
-    assert "4096" in src
+TRIANGLE_GRAPHS = {
+    "equal_degrees": _equal_degree_graphs,
+    # > 4096 nodes and sparse, plus planted triangles and one hub
+    "sparse_5000_nodes": lambda: [nx.compose_all([
+        nx.gnm_random_graph(5000, 12000, seed=3),
+        nx.Graph([(i, i + 1) for i in range(0, 4500, 3)]
+                 + [(i, i + 2) for i in range(0, 4500, 3)]
+                 + [(i + 1, i + 2) for i in range(0, 4500, 3)]),
+        nx.star_graph(300)])],
+}
 
-    def sparse_variant(edges):
-        a, b, nodes, degree = K._canonical_edge_arrays(edges)
-        n = len(nodes)
-        ia = np.searchsorted(nodes, a)
-        ib = np.searchsorted(nodes, b)
-        nbr_start = np.zeros(n + 1, dtype=np.int64)
-        np.add.at(nbr_start, ia + 1, 1)
-        np.add.at(nbr_start, ib + 1, 1)
-        nbr_start = np.cumsum(nbr_start)
-        nbrs = np.empty(2 * len(ia), dtype=np.int64)
-        fill = nbr_start[:-1].copy()
-        for u, v in zip(ia, ib):
-            nbrs[fill[u]] = v
-            fill[u] += 1
-            nbrs[fill[v]] = u
-            fill[v] += 1
-        for u in range(n):
-            nbrs[nbr_start[u]: nbr_start[u + 1]].sort()
-        tri = np.zeros(n, dtype=np.int64)
-        for u, v in zip(ia, ib):
-            common = np.intersect1d(
-                nbrs[nbr_start[u]: nbr_start[u + 1]],
-                nbrs[nbr_start[v]: nbr_start[v + 1]],
-                assume_unique=True,
-            )
-            tri[u] += len(common)
-            tri[v] += len(common)
-            tri[common] += 1
-        tri //= 3
-        return nodes, degree, tri
 
-    n2, d2, t2 = sparse_variant(e)
-    assert np.array_equal(dense[0], n2)
-    assert np.array_equal(dense[1], d2)
-    assert np.array_equal(dense[2], t2)
+@pytest.mark.parametrize("case", sorted(TRIANGLE_GRAPHS))
+def test_triangle_count_matches_networkx(case):
+    """The one triangle count (graph_clustering_kernel) equals
+    nx.triangles on graphs full of equal degrees and on one sparse graph
+    of more than 4096 nodes, from noisy edges."""
+    total = 0
+    for g in TRIANGLE_GRAPHS[case]():
+        nodes, degree, tri, _lcc = graph_clustering_kernel(
+            noisy_edges(list(g.edges())))
+        nxt = nx.triangles(g)
+        assert nodes.tolist() == sorted(v for v in g if g.degree[v])
+        assert degree.tolist() == [g.degree[v] for v in nodes.tolist()]
+        assert tri.tolist() == [nxt[v] for v in nodes.tolist()]
+        total += int(tri.sum())
+    assert total > 0
 
 
 def test_pagerank_kernel_sums_to_one_and_matches_dense_model():

@@ -28,6 +28,7 @@ neighbours; the visibility-graph section below states every rule.
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
 
@@ -917,33 +918,87 @@ def quantize_ieee(x, dp: int):
     return np.floor(np.asarray(x, dtype=np.float64) * scale + 0.5) / scale
 
 
-def _canonical_edge_arrays(
-    edges: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(m,2) any-orientation edge array -> (a, b, nodes, degree) with
-    a < b unique (self-loops dropped), nodes = sorted unique endpoints,
-    degree aligned to nodes.  Mirrors graphmetrics.canonical_edges +
-    degrees."""
-    if len(edges) == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, z, z
-    a = np.minimum(edges[:, 0], edges[:, 1])
-    b = np.maximum(edges[:, 0], edges[:, 1])
-    keep = a != b
-    a, b = a[keep], b[keep]
-    ab = np.unique(np.stack([a, b], axis=1), axis=0)
-    a, b = ab[:, 0], ab[:, 1]
-    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
-    degree = np.bincount(inv, minlength=len(nodes)).astype(np.int64)
-    return a, b, nodes, degree
+class _Graph(NamedTuple):
+    """One graph's adjacency, as every metric kernel below reads it."""
+
+    nodes: np.ndarray   # sorted labels; every other field holds indices
+    degree: np.ndarray  # per node
+    ia: np.ndarray      # the canonical edges ia < ib, sorted by key
+    ib: np.ndarray
+    key: np.ndarray     # ia * n + ib, unique and sorted
+    indptr: np.ndarray  # CSR of both orientations: node u's entries are
+    src: np.ndarray     # [indptr[u], indptr[u + 1]), with src == u and
+    dst: np.ndarray     # dst its neighbours, ascending
+
+
+def _graph(edges: np.ndarray) -> _Graph:
+    """Canonicalize an (m, 2) integer edge array of any orientation once:
+    self-loops are dropped, and one sort of packed int64 keys, both
+    orientations of every edge, collapses duplicates of either orientation
+    and yields the CSR; its entries with src < dst are the canonical edges.
+    Nodes are the endpoints of the remaining edges (mirrors nx.Graph
+    insert semantics)."""
+    e = np.asarray(edges, dtype=np.int64).reshape(-1, 2)
+    e = e[e[:, 0] != e[:, 1]]
+    nodes, inv = np.unique(e, return_inverse=True)
+    n = np.int64(max(len(nodes), 1))  # >= 1: divmod of an edgeless graph
+    a, b = inv.reshape(-1, 2).T
+    both = np.unique(np.concatenate([a * n + b, b * n + a]))
+    src, dst = np.divmod(both, n)
+    up = src < dst
+    ia, ib, key = src[up], dst[up], both[up]
+    degree = np.bincount(src, minlength=len(nodes))
+    indptr = np.concatenate(([0], np.cumsum(degree)))
+    return _Graph(nodes, degree, ia, ib, key, indptr, src, dst)
+
+
+def _is_edge(g: _Graph, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Whether each index pair u < v is an edge of g (g has >= 1 edge)."""
+    k = u * len(g.nodes) + v
+    return g.key[np.minimum(np.searchsorted(g.key, k), len(g.key) - 1)] == k
+
+
+def _gather(g: _Graph, frontier: np.ndarray):
+    """(u, v) for every adjacency entry of the nodes in frontier, in
+    frontier order, each row ascending (the BFS step of betweenness and
+    path metrics)."""
+    lens = g.degree[frontier]
+    k = np.repeat(g.indptr[frontier], lens) + _ragged_offsets(lens)
+    return g.src[k], g.dst[k]
+
+
+def _wedges(hub: np.ndarray, nb: np.ndarray):
+    """Every wedge u - z - v of an adjacency grouped by hub with each
+    hub's neighbours ascending: (z, u, v) with u < v, each unordered pair
+    of one hub's neighbours once.  Rank expansion: the neighbour at rank r
+    of its hub's run pairs, as v, with the r neighbours before it; wedges
+    come out ordered by the position of v, then of u."""
+    rank = _ragged_offsets(np.bincount(hub))
+    j = np.repeat(np.arange(len(hub), dtype=np.int64), rank)
+    i = j - np.repeat(rank, rank) + _ragged_offsets(rank)
+    return hub[j], nb[i], nb[j]
+
+
+def _triangles(g: _Graph) -> np.ndarray:
+    """Triangles per node of a graph with >= 1 edge.  Each edge points
+    from its lower (degree, index) end to its higher one; an oriented
+    wedge z -> u, z -> v is a triangle iff (u, v) is an edge, so each
+    triangle is counted once, at its lowest node.  Σ C(out-degree, 2)
+    wedges, out-degree <= sqrt(2m) under this order."""
+    d = g.degree
+    up = (d[g.dst] > d[g.src]) | ((d[g.dst] == d[g.src]) & (g.dst > g.src))
+    z, u, v = _wedges(g.src[up], g.dst[up])
+    closed = _is_edge(g, u, v)
+    return np.bincount(np.concatenate([z[closed], u[closed], v[closed]]),
+                       minlength=len(g.nodes))
 
 
 def graph_summary_kernel(edges: np.ndarray) -> dict:
     """Per-graph summary over one edge array: node/edge counts, density,
     degree stats; the float fields rounded HALF_UP to 9 dp."""
-    a, _b, nodes, degree = _canonical_edge_arrays(edges)
-    n = len(nodes)
-    m = len(a)
+    g = _graph(edges)
+    n = len(g.nodes)
+    m = len(g.ia)
     if n == 0:
         return {"n_nodes": 0, "n_edges": 0, "density": 0.0,
                 "max_degree": 0, "avg_degree": 0.0}
@@ -952,9 +1007,9 @@ def graph_summary_kernel(edges: np.ndarray) -> dict:
         "n_nodes": int(n),
         "n_edges": int(m),
         "density": float(round_half_up(np.array([density]), 9)[0]),
-        "max_degree": int(degree.max()),
+        "max_degree": int(g.degree.max()),
         "avg_degree": float(
-            round_half_up(np.array([int(degree.sum()) / n]), 9)[0]
+            round_half_up(np.array([int(g.degree.sum()) / n]), 9)[0]
         ),
     }
 
@@ -963,63 +1018,22 @@ def graph_clustering_kernel(
     edges: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Local clustering per node of one small graph: (nodes, degree,
-    triangles, lcc).  Dense boolean-adjacency matmul for n <= 4096 (the
-    ts2g2 per-segment regime), sorted-neighbor intersection above.
-    lcc = round(2T / (d (d-1)), 9) HALF_UP, 0.0 for degree < 2 (the
-    networkx convention)."""
-    a, b, nodes, degree = _canonical_edge_arrays(edges)
-    n = len(nodes)
+    triangles, lcc), triangles counted by one oriented-wedge pass
+    (`_triangles`) at every size.  lcc = round(2T / (d (d-1)), 9)
+    HALF_UP, 0.0 for degree < 2 (the networkx convention)."""
+    g = _graph(edges)
+    n = len(g.nodes)
     if n == 0:
         z = np.empty(0, dtype=np.int64)
         return z, z, z, np.empty(0)
-    ia = np.searchsorted(nodes, a)
-    ib = np.searchsorted(nodes, b)
-    tri = _triangles_from_canonical(ia, ib, n)
+    degree = g.degree
+    tri = _triangles(g)
     lcc = np.zeros(n, dtype=np.float64)
     mask = degree > 1
     lcc[mask] = round_half_up(
         2.0 * tri[mask] / (degree[mask] * (degree[mask] - 1)), 9
     )
-    return nodes, degree, tri, lcc
-
-
-def _triangles_from_canonical(
-    ia: np.ndarray, ib: np.ndarray, n: int,
-) -> np.ndarray:
-    """Per-node triangle counts from canonical index-mapped edges —
-    the shared core of graph_clustering_kernel and graph_mixing_kernel
-    (one canonicalization per caller, not two)."""
-    if n <= 4096:
-        A = np.zeros((n, n), dtype=np.int64)
-        A[ia, ib] = 1
-        A[ib, ia] = 1
-        tri = ((A @ A) * A).sum(axis=1) // 2
-    else:
-        nbr_start = np.zeros(n + 1, dtype=np.int64)
-        np.add.at(nbr_start, ia + 1, 1)
-        np.add.at(nbr_start, ib + 1, 1)
-        nbr_start = np.cumsum(nbr_start)
-        nbrs = np.empty(2 * len(ia), dtype=np.int64)
-        fill = nbr_start[:-1].copy()
-        for u, v in zip(ia, ib):
-            nbrs[fill[u]] = v
-            fill[u] += 1
-            nbrs[fill[v]] = u
-            fill[v] += 1
-        for u in range(n):
-            nbrs[nbr_start[u]: nbr_start[u + 1]].sort()
-        tri = np.zeros(n, dtype=np.int64)
-        for u, v in zip(ia, ib):
-            common = np.intersect1d(
-                nbrs[nbr_start[u]: nbr_start[u + 1]],
-                nbrs[nbr_start[v]: nbr_start[v + 1]],
-                assume_unique=True,
-            )
-            tri[u] += len(common)
-            tri[v] += len(common)
-            tri[common] += 1
-        tri //= 3  # each triangle reached via all 3 of its edges
-    return tri
+    return g.nodes, degree, tri, lcc
 
 
 def graph_mixing_kernel(
@@ -1037,17 +1051,15 @@ def graph_mixing_kernel(
     transitivity = 3*triangles / wedges = sum_v tri(v) / sum_v C(d_v,2).
     Degenerate cases are None: constant degrees, no wedges.  Quantized
     with floor(x*10^dp + 0.5)/10^dp (quantize_ieee)."""
-    a, b, nodes, degree = _canonical_edge_arrays(edges)
-    n = len(nodes)
-    if n == 0:
+    g = _graph(edges)
+    if len(g.nodes) == 0:
         return None
     def quant(x: float) -> float:
         return float(quantize_ieee(x, round_dp)) + 0.0
 
-    ia = np.searchsorted(nodes, a)
-    ib = np.searchsorted(nodes, b)
-    da = degree[ia].astype(np.int64)
-    db = degree[ib].astype(np.int64)
+    degree = g.degree
+    da = degree[g.ia]
+    db = degree[g.ib]
     m2 = 2 * len(da)  # symmetrized pair count
     sx = int(da.sum() + db.sum())
     sxy = int(2 * (da * db).sum())
@@ -1055,44 +1067,12 @@ def graph_mixing_kernel(
     den = m2 * sxx - sx * sx
     assort = quant(float(m2 * sxy - sx * sx) / float(den)) \
         if den > 0 else None
-    tri = _triangles_from_canonical(ia, ib, n)
+    tri = _triangles(g)
     # d(d-1)/2 and the triangle counts are exact integers in double, so
     # the sums (and their ratio) are order-independent bit-for-bit
     wedges = float((degree * (degree - 1) / 2).sum())
     trans = quant(float(tri.sum()) / wedges) if wedges > 0 else None
     return assort, trans
-
-
-def _csr_gather(ia: np.ndarray, ib: np.ndarray, n: int):
-    """Build a both-orientations CSR adjacency and return a
-    frontier-gather closure: gather(frontier) -> flat (u, v) adjacency
-    pairs with u in frontier.  Shared by the BFS-based kernels
-    (betweenness, path metrics)."""
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.add.at(indptr, ia + 1, 1)
-    np.add.at(indptr, ib + 1, 1)
-    indptr = np.cumsum(indptr)
-    indices = np.empty(2 * len(ia), dtype=np.int64)
-    fill = indptr[:-1].copy()
-    for u, v in zip(ia, ib):
-        indices[fill[u]] = v
-        fill[u] += 1
-        indices[fill[v]] = u
-        fill[v] += 1
-
-    def gather(frontier):
-        starts = indptr[frontier]
-        lens = indptr[frontier + 1] - starts
-        total = int(lens.sum())
-        if total == 0:
-            return (np.empty(0, np.int64),) * 2
-        u_rep = np.repeat(frontier, lens)
-        base = np.repeat(starts, lens)
-        local = np.arange(total) - np.repeat(
-            np.cumsum(lens) - lens, lens)
-        return u_rep, indices[base + local]
-
-    return gather
 
 
 def graph_path_metrics_kernel(edges: np.ndarray) -> dict | None:
@@ -1102,21 +1082,18 @@ def graph_path_metrics_kernel(edges: np.ndarray) -> dict | None:
     length separates series classes; HVGs are always connected since
     adjacent points see each other).
 
-    BFS from every source with the shared frontier-vectorized CSR
-    gather; all quantities are exact integers or one exact-integer
+    BFS from every source, each level one `_gather` of the frontier's
+    adjacency; all quantities are exact integers or one exact-integer
     ratio (sum of distances / ordered reachable pairs), so the result
     is engine-independent with no rounding contract needed (avg_spl
     emitted at full double precision of one division).  On a
     DISCONNECTED graph, eccentricities and the average are over
     REACHABLE pairs only and `connected` is False.  O(n*m) per graph —
     per-series segment regime."""
-    a, b, nodes, _deg = _canonical_edge_arrays(edges)
-    n = len(nodes)
+    g = _graph(edges)
+    n = len(g.nodes)
     if n == 0:
         return None
-    ia = np.searchsorted(nodes, a)
-    ib = np.searchsorted(nodes, b)
-    gather = _csr_gather(ia, ib, n)
     total_sum = 0
     total_pairs = 0
     ecc = np.zeros(n, dtype=np.int64)
@@ -1127,7 +1104,7 @@ def graph_path_metrics_kernel(edges: np.ndarray) -> dict | None:
         frontier = np.array([s], dtype=np.int64)
         depth = 0
         while True:
-            _u, v_all = gather(frontier)
+            _u, v_all = _gather(g, frontier)
             fresh = np.unique(v_all[dist[v_all] == -1]) \
                 if len(v_all) else v_all
             if len(fresh) == 0:
@@ -1165,16 +1142,12 @@ def graph_kcore_kernel(
     integer arithmetic on a deterministic schedule — engine-independent
     with no rounding contract, like the path-metrics kernel.
     """
-    a, b, nodes, degree = _canonical_edge_arrays(edges)
-    n = len(nodes)
+    g = _graph(edges)
+    n = len(g.nodes)
     if n == 0:
         z = np.empty(0, dtype=np.int64)
         return z, z
-    ai = np.searchsorted(nodes, a)
-    bi = np.searchsorted(nodes, b)
-    src = np.concatenate([ai, bi])
-    dst = np.concatenate([bi, ai])
-    deg = degree.copy()
+    deg = g.degree.copy()
     core = np.zeros(n, dtype=np.int64)
     active = np.ones(n, dtype=bool)
     k = 1
@@ -1187,10 +1160,9 @@ def graph_kcore_kernel(
         active[weak] = False
         # decrement survivors adjacent to this round's removals;
         # removed-removed edges decrement nothing (dst inactive)
-        sel = weak[src] & active[dst]
-        if sel.any():
-            np.subtract.at(deg, dst[sel], 1)
-    return nodes, core
+        sel = weak[g.src] & active[g.dst]
+        deg -= np.bincount(g.dst[sel], minlength=n)
+    return g.nodes, core
 
 
 def graph_lpa_kernel(
@@ -1206,23 +1178,22 @@ def graph_lpa_kernel(
     so an SQL oracle replays the schedule verbatim (fixed iterations
     sidestep sync-LPA's possible 2-cycles the same way the pagerank
     contract fixes its iteration count)."""
+    g = _graph(edges)
+    return g.nodes, _lpa(g, n_iter)
+
+
+def _lpa(g: _Graph, n_iter: int) -> np.ndarray:
+    """graph_lpa_kernel's labels, aligned to g.nodes."""
     if n_iter < 1:
         raise ValueError(f"graph_lpa_kernel: need n_iter >= 1, got {n_iter}")
-    a, b, nodes, _deg = _canonical_edge_arrays(edges)
-    n = len(nodes)
-    if n == 0:
-        z = np.empty(0, dtype=np.int64)
-        return z, z
-    ai = np.searchsorted(nodes, a)
-    bi = np.searchsorted(nodes, b)
-    src = np.concatenate([ai, bi])
-    dst = np.concatenate([bi, ai])
-    lab = nodes.copy()
+    lab = g.nodes.copy()
+    if len(lab) == 0:
+        return lab
     for _ in range(n_iter):
-        nl = lab[dst]
+        nl = lab[g.dst]
         # counts per (node, neighbor-label) via grouped run-lengths
-        order = np.lexsort((nl, src))
-        uu, ll = src[order], nl[order]
+        order = np.lexsort((nl, g.src))
+        uu, ll = g.src[order], nl[order]
         new_grp = np.concatenate(
             [[True], (uu[1:] != uu[:-1]) | (ll[1:] != ll[:-1])])
         cnt = np.bincount(np.cumsum(new_grp) - 1)
@@ -1230,10 +1201,10 @@ def graph_lpa_kernel(
         # argmax per node: (cnt desc, label asc), first row per node
         o2 = np.lexsort((gl, -cnt, gu))
         first = np.concatenate([[True], gu[o2][1:] != gu[o2][:-1]])
-        new_lab = np.empty(n, dtype=np.int64)
+        new_lab = np.empty(len(lab), dtype=np.int64)
         new_lab[gu[o2][first]] = gl[o2][first]
         lab = new_lab  # every node has >= 1 edge, so fully assigned
-    return nodes, lab
+    return lab
 
 
 def graph_modularity_kernel(
@@ -1248,17 +1219,13 @@ def graph_modularity_kernel(
     int64 well under 2^53, so the single IEEE division is bit-identical
     in every engine, then quantize_ieee(round_dp) (the
     graph_mixing_kernel posture).  Returns (0, nan-free 0.0) for an edgeless graph."""
-    a, b, nodes, degree = _canonical_edge_arrays(edges)
-    m = len(a)
+    g = _graph(edges)
+    m = len(g.ia)
     if m == 0:
         return 0, 0.0
-    nodes2, lab = graph_lpa_kernel(edges, n_iter=n_iter)
-    assert np.array_equal(nodes, nodes2)
-    comm, cidx = np.unique(lab, return_inverse=True)
-    ai = np.searchsorted(nodes, a)
-    bi = np.searchsorted(nodes, b)
-    sum_ec = int(np.sum(cidx[ai] == cidx[bi]))
-    deg_c = np.bincount(cidx, weights=degree.astype(np.float64))
+    comm, cidx = np.unique(_lpa(g, n_iter), return_inverse=True)
+    sum_ec = int(np.sum(cidx[g.ia] == cidx[g.ib]))
+    deg_c = np.bincount(cidx, weights=g.degree.astype(np.float64))
     sum_dc2 = int(np.sum((deg_c.astype(np.int64)) ** 2))
     q = (4 * m * sum_ec - sum_dc2) / float(4 * m * m)
     return int(len(comm)), float(quantize_ieee(q, round_dp))
@@ -1269,8 +1236,8 @@ def graph_betweenness_kernel(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact betweenness centrality of one small undirected graph:
     (nodes, bc) via Brandes' algorithm, with every per-source phase
-    VECTORIZED over the BFS frontier (flat CSR gathers + np.add.at for
-    path counts and dependency accumulation — no per-edge Python).
+    VECTORIZED over the BFS frontier (`_gather` + np.add.at for path
+    counts and dependency accumulation — no per-edge Python).
 
     Normalization matches networkx betweenness_centrality(
     normalized=True): pair double-counting halved, then scaled by
@@ -1278,14 +1245,10 @@ def graph_betweenness_kernel(
     level order, rounded HALF_UP at the end only (float accumulation
     inside one implementation is order-stable).  O(n*m) per graph —
     the per-series segment regime; not for one huge graph."""
-    a, b, nodes, _deg = _canonical_edge_arrays(edges)
-    n = len(nodes)
+    g = _graph(edges)
+    n = len(g.nodes)
     if n == 0:
-        return nodes, np.empty(0)
-    ia = np.searchsorted(nodes, a)
-    ib = np.searchsorted(nodes, b)
-    _gather = _csr_gather(ia, ib, n)
-
+        return g.nodes, np.empty(0)
     bc = np.zeros(n, dtype=np.float64)
     for s in range(n):
         dist = np.full(n, -1, dtype=np.int64)
@@ -1294,7 +1257,7 @@ def graph_betweenness_kernel(
         sigma[s] = 1.0
         levels = [np.array([s], dtype=np.int64)]
         while True:
-            u_rep, v_all = _gather(levels[-1])
+            u_rep, v_all = _gather(g, levels[-1])
             if len(v_all) == 0:
                 break
             fresh = v_all[dist[v_all] == -1]
@@ -1307,7 +1270,7 @@ def graph_betweenness_kernel(
             levels.append(nxt)
         delta = np.zeros(n, dtype=np.float64)
         for depth in range(len(levels) - 1, 0, -1):
-            w_rep, v_all = _gather(levels[depth])
+            w_rep, v_all = _gather(g, levels[depth])
             pred = dist[v_all] == depth - 1
             vp, wp = v_all[pred], w_rep[pred]
             np.add.at(delta, vp,
@@ -1317,7 +1280,7 @@ def graph_betweenness_kernel(
     bc /= 2.0  # undirected: each (s, t) pair contributes twice
     if normalized and n > 2:
         bc *= 2.0 / ((n - 1) * (n - 2))
-    return nodes, round_half_up(bc, round_dp)
+    return g.nodes, round_half_up(bc, round_dp)
 
 
 def graph_pagerank_kernel(
@@ -1329,22 +1292,19 @@ def graph_pagerank_kernel(
     """Fixed-iteration PageRank on one small undirected graph: (nodes,
     ranks).  Ranks are rounded HALF_UP to round_dp at EVERY iteration (including the
     uniform init), shares rank/degree unrounded, no dangling term
-    (every node has degree >= 1 by construction)."""
-    a, b, nodes, degree = _canonical_edge_arrays(edges)
-    n = len(nodes)
+    (every node has degree >= 1 by construction).  Each node sums its
+    inflow in ascending-neighbour order (one adjacency row)."""
+    g = _graph(edges)
+    n = len(g.nodes)
     if n == 0:
-        return nodes, np.empty(0)
-    ia = np.searchsorted(nodes, a)
-    ib = np.searchsorted(nodes, b)
-    src = np.concatenate([ia, ib])
-    dst = np.concatenate([ib, ia])
+        return g.nodes, np.empty(0)
     rank = round_half_up(np.full(n, 1.0 / n), round_dp)
     base = (1.0 - damping) / n
     for _ in range(iters):
-        share = rank / degree
-        inflow = np.bincount(dst, weights=share[src], minlength=n)
+        share = rank / g.degree
+        inflow = np.bincount(g.src, weights=share[g.dst], minlength=n)
         rank = round_half_up(base + damping * inflow, round_dp)
-    return nodes, rank
+    return g.nodes, rank
 
 
 def graph_wl_kernel(
@@ -1365,27 +1325,20 @@ def graph_wl_kernel(
 
     if n_iter < 1:
         raise ValueError(f"graph_wl_kernel: need n_iter >= 1, got {n_iter}")
-    a, b, nodes, deg = _canonical_edge_arrays(edges)
-    n = len(nodes)
+    g = _graph(edges)
+    n = len(g.nodes)
     if n == 0:
         z = np.empty(0, dtype=np.int64)
         return z, z
-    ai = np.searchsorted(nodes, a)
-    bi = np.searchsorted(nodes, b)
-    src = np.concatenate([ai, bi])
-    dst = np.concatenate([bi, ai])
-    order = np.argsort(src, kind="stable")
-    src_s, dst_s = src[order], dst[order]
-    bounds = np.searchsorted(src_s, np.arange(n + 1))
-    lab = deg.astype(np.int64)
+    lab = g.degree
     for _ in range(n_iter):
         new_lab = np.empty(n, dtype=np.int64)
         for v in range(n):
-            nb = np.sort(lab[dst_s[bounds[v]:bounds[v + 1]]])
+            nb = np.sort(lab[g.dst[g.indptr[v]:g.indptr[v + 1]]])
             sig = f"{lab[v]}|" + ",".join(str(x) for x in nb)
             new_lab[v] = h64_py(sig)
         lab = new_lab
-    return nodes, lab
+    return g.nodes, lab
 
 
 def link_prediction_kernel(
@@ -1403,10 +1356,9 @@ def link_prediction_kernel(
     terms).  Returns RAW unrounded doubles; the caller applies
     the repo's rounding contract JVM-side (F.round, HALF_UP).
 
-    Fully vectorized: wedge enumeration is a rank-expansion over the
-    hub-sorted adjacency (sum-of-deg^2 rows, the triangle-count
-    budget), the fold is a rank-position loop bounded by max(cn), each
-    rank one contiguous slice of the rank-sorted wedges.
+    Fully vectorized: the wedges are `_wedges` over the adjacency
+    (sum-of-deg^2 rows), the fold is a rank-position loop bounded by
+    max(cn), each rank one contiguous slice of the rank-sorted wedges.
     Returns (u, v, cn, jaccard_raw, aa_raw) with u < v in original
     node labels.
 
@@ -1423,43 +1375,20 @@ def link_prediction_kernel(
     if max_hub_degree is not None and max_hub_degree < 1:
         raise ValueError("link_prediction_kernel: need max_hub_degree "
                          f">= 1, got {max_hub_degree=}")
-    a, b, nodes, degree = _canonical_edge_arrays(edges)
-    m = len(a)
+    g = _graph(edges)
     zi = np.empty(0, dtype=np.int64)
     zd = np.empty(0, dtype=np.float64)
-    if m == 0:
-        return zi, zi, zi, zd, zd
-    n = len(nodes)
-    ai = np.searchsorted(nodes, a)
-    bi = np.searchsorted(nodes, b)
-    hub = np.concatenate([ai, bi])
-    nb = np.concatenate([bi, ai])
-    order = np.lexsort((nb, hub))
-    hub_s, nb_s = hub[order], nb[order]
+    hub, nb = g.src, g.dst
     if max_hub_degree is not None:
-        # drop ALL adjacency entries of over-cap hubs before the rank
-        # expansion: their wedges never materialize (du/dv below still
-        # read true degrees from the uncapped edge set)
-        keep_e = degree[hub_s] <= max_hub_degree
-        hub_s, nb_s = hub_s[keep_e], nb_s[keep_e]
-        if hub_s.shape[0] == 0:
-            return zi, zi, zi, zd, zd
-    counts = np.bincount(hub_s, minlength=n)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    idx = np.arange(hub_s.shape[0], dtype=np.int64)
-    rank = idx - np.repeat(starts, counts)
-    # the element at rank r of its hub's (ascending) neighbor list pairs
-    # as the LARGER side with the r earlier neighbors — u < v for free,
-    # every unordered pair exactly once
-    j_rep = np.repeat(idx, rank)
-    if j_rep.shape[0] == 0:
+        # over-cap hubs' wedges never materialize (du/dv below still
+        # read true degrees)
+        keep_e = g.degree[hub] <= max_hub_degree
+        hub, nb = hub[keep_e], nb[keep_e]
+    z, u, v = _wedges(hub, nb)
+    if len(z) == 0:
         return zi, zi, zi, zd, zd
-    csum = np.cumsum(rank) - rank
-    offs = np.arange(j_rep.shape[0], dtype=np.int64) - np.repeat(csum, rank)
-    i_idx = np.repeat(starts[hub_s], rank) + offs
-    u = nb_s[i_idx]
-    v = nb_s[j_rep]
-    dz = degree[hub_s[j_rep]]
+    n = len(g.nodes)
+    dz = g.degree[z]
     key = u * np.int64(n) + v
     order2 = np.lexsort((dz, key))
     key_s = key[order2]
@@ -1470,23 +1399,21 @@ def link_prediction_kernel(
     # exact per-pair operand order of the oracle's fold.  The wedges are
     # ordered by rank once, so rank k's terms are one contiguous slice.
     seg_id = np.repeat(np.arange(uniq.shape[0], dtype=np.int64), cn)
-    pos = np.arange(key_s.shape[0], dtype=np.int64) - np.repeat(
-        np.cumsum(cn) - cn, cn)
+    pos = _ragged_offsets(cn)
     by_pos = np.argsort(pos, kind="stable")
     cut = np.concatenate(([0], np.cumsum(np.bincount(pos))))
     seg_k, terms_k = seg_id[by_pos], (1.0 / np.log(dz_s))[by_pos]
     aa = np.zeros(uniq.shape[0], dtype=np.float64)
     for lo, hi in zip(cut[:-1].tolist(), cut[1:].tolist()):
         aa[seg_k[lo:hi]] += terms_k[lo:hi]  # <=1 term per pair per rank
-    edge_key = ai * np.int64(n) + bi
-    keep = (cn >= min_cn) & ~np.isin(uniq, np.sort(edge_key))
-    uu = (uniq // n)[keep]
-    vv = (uniq % n)[keep]
+    uu, vv = np.divmod(uniq, n)
+    keep = (cn >= min_cn) & ~_is_edge(g, uu, vv)
+    uu, vv = uu[keep], vv[keep]
     cnk = cn[keep].astype(np.int64)
-    du = degree[uu]
-    dv = degree[vv]
+    du = g.degree[uu]
+    dv = g.degree[vv]
     jacc = cnk.astype(np.float64) / (du + dv - cnk).astype(np.float64)
-    return nodes[uu], nodes[vv], cnk, jacc, aa[keep]
+    return g.nodes[uu], g.nodes[vv], cnk, jacc, aa[keep]
 
 
 # ---------------------------------------------------------------------------

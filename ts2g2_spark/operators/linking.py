@@ -274,11 +274,11 @@ def link_dtw(series: DataFrame, band: int | None = None) -> DataFrame:
     broadcasts), DTW DP inside an Arrow kernel per pair.  Pass band= (a
     Sakoe-Chiba radius) to bound the per-pair DP at O(n*band) when series
     are long; default None = the exact reference-parity full DP.  A
-    pair with a null `values` yields no row; an empty series raises
-    (`kernels.dtw_path`)."""
+    pair with a null or empty `values` yields no row (an empty series
+    has no alignment; `kernels.dtw_path` raises for one)."""
 
     def links(key_a, key_b, a, b):
-        path = dtw_path(a, b, band=band)
+        path = dtw_path(a, b, band=band) if len(a) and len(b) else []
         return ([f"{key_a}:{i}" for i, _ in path],
                 [f"{key_b}:{j}" for _, j in path],
                 [None] * len(path), ["dynamical time warping"] * len(path))
