@@ -35,8 +35,7 @@ def main() -> None:
                     help="parquet path of the documents table "
                          "(doc_id, text[, lang, source])")
     ap.add_argument("--catalog", required=True,
-                    help="output catalog root (stage tables + lineage + "
-                         "manifests)")
+                    help="output catalog root (stage tables + lineage)")
     ap.add_argument("--min-words", type=int, default=20)
     ap.add_argument("--lang", default="en")
     ap.add_argument("--contamination-max", type=float, default=0.5)

@@ -14,10 +14,10 @@ Ship the package with --py-files (north rule: "ships as a spark-submit
         [--retention-now 1735689600] [--run-id abc123]
 
 The job is resume-safe: re-submitting after a failure skips every stage
-whose manifest already committed for the same input fingerprint
-(plans/pipeline.py).  All cluster sizing (executors, memory, shuffle
-partitions) comes from spark-submit conf; the session here is getOrCreate
-so nothing is overridden, except that the job sets
+whose table's `_LATEST` pointer already records a commit for the same
+input fingerprint (plans/pipeline.py).  All cluster sizing (executors,
+memory, shuffle partitions) comes from spark-submit conf; the session here
+is getOrCreate so nothing is overridden, except that the job sets
 `session.FOOTER_STATS_CONF` (timestamps written as TIMESTAMP_MICROS) at
 runtime.  Retention decides which tiers to rewrite from the `bucket_ts`
 statistics in the tier files' footers, and Spark's default INT96
@@ -38,7 +38,7 @@ def main() -> None:
                          "(doc_id, tokens, n_tok, source[, positions])")
     ap.add_argument("--catalog", required=True,
                     help="output catalog root (tier tables + chunks + "
-                         "lineage + manifests)")
+                         "lineage)")
     ap.add_argument("--positions-col", default=None)
     ap.add_argument("--salt-buckets", type=int, default=256)
     ap.add_argument("--step-seconds", type=int, default=1)

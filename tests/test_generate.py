@@ -148,7 +148,7 @@ def test_quantile_walk_bit_parity(reference, value_strategy, ref_value_cls):
     gd = gk.GraphData(values=[[] for _ in range(Q)],
                       neighbors=[list(g.neighbors(i)) for i in range(Q)],
                       q_bins=bins.tolist(), q_values=q_values)
-    got = gk.walk_quantile([gd], 30, value_strategy, "randomly", _rng())
+    got = gk.walk_plain([gd], 30, value_strategy, "randomly", _rng())
     assert got[0] == ref_seqs[0]
     if value_strategy == "quantile_random":
         # every generated value sits inside its quantile bin span
@@ -231,7 +231,7 @@ def test_sliding_window_walk_bit_parity(reference):
     gd = gk.GraphData(values=[[] for _ in wins],
                       neighbors=[[1], [0, 2], [1]],
                       win_values=win_values)
-    got = gk.walk_sliding([gd], 20, "random_sliding", "randomly", _rng())
+    got = gk.walk_plain([gd], 20, "random_sliding", "randomly", _rng())
     assert got[0] == ref_seqs[0]
 
 
@@ -265,8 +265,8 @@ def test_round_robin_sliding_window_parity(reference):
                   for w in wins]
     gd = gk.GraphData(values=[[] for _ in wins], neighbors=[[1], [0]],
                       win_values=win_values)
-    got = gk.walk_sliding([gd], 16, "round_robin_sliding", "randomly",
-                          _rng())
+    got = gk.walk_plain([gd], 16, "round_robin_sliding", "randomly",
+                        _rng())
     assert got[0] == ref_seqs[0]
 
 

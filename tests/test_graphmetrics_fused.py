@@ -365,6 +365,47 @@ def test_betweenness_path_graph_exact(spark):
     assert bc.tolist() == [0.0, round(2 / 3, 9), round(2 / 3, 9), 0.0]
 
 
+def _nx_path_metrics(g):
+    """graph_path_metrics_kernel's dict from networkx shortest paths:
+    eccentricities and the average over reachable ordered pairs."""
+    ecc, total, pairs = [], 0, 0
+    for _s, d in nx.all_pairs_shortest_path_length(g):
+        ecc.append(max(d.values()))
+        total += sum(d.values())
+        pairs += len(d) - 1
+    return {"n_nodes": g.number_of_nodes(), "diameter": max(ecc),
+            "radius": min(ecc), "avg_spl": total / pairs if pairs else None,
+            "connected": nx.is_connected(g)}
+
+
+DISTANCE_GRAPHS = {
+    "sparse_5000_nodes": lambda: TRIANGLE_GRAPHS["sparse_5000_nodes"]()[0],
+    # a random graph plus small components, on sparse labels
+    "disconnected": lambda: nx.relabel_nodes(nx.disjoint_union_all([
+        nx.gnm_random_graph(800, 2000, seed=5), nx.path_graph(7),
+        nx.cycle_graph(9), nx.star_graph(5), nx.complete_graph(4),
+        nx.petersen_graph(), nx.Graph([(0, 1)])]), lambda v: 7919 * v + 3),
+}
+
+
+@pytest.mark.parametrize("case", sorted(DISTANCE_GRAPHS))
+def test_distance_kernels_match_networkx(case):
+    """Path metrics equal networkx's exactly, and betweenness equals
+    nx.betweenness_centrality(normalized=True) at the 9 dp rounding, on a
+    5000-node sparse graph and on a disconnected one, from noisy edges;
+    both are too large for one source block of the all-sources BFS."""
+    g = nx.Graph(DISTANCE_GRAPHS[case]().edges())  # no isolated nodes
+    e = noisy_edges(list(g.edges()))
+    n, m = g.number_of_nodes(), g.number_of_edges()
+    assert n * (n + 2 * m) > K._BFS_CELLS
+    assert K.graph_path_metrics_kernel(e) == _nx_path_metrics(g)
+    nodes, bc = K.graph_betweenness_kernel(e)
+    want = nx.betweenness_centrality(g, normalized=True)
+    assert nodes.tolist() == sorted(want)
+    np.testing.assert_allclose(bc, [want[v] for v in nodes.tolist()],
+                               rtol=0, atol=2e-9)
+
+
 # ------------------------------------------------------- path metrics
 
 def test_path_metrics_match_networkx(spark, series_df):

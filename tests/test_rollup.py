@@ -5,11 +5,13 @@ pipeline resume, lineage and retention."""
 from __future__ import annotations
 
 import os
+import pathlib
 
 import numpy as np
 import pytest
 
 from ts2g2_spark import datagen
+from ts2g2_spark.catalog import read_pointer
 from ts2g2_spark.plans import chunks as chunks_mod
 from ts2g2_spark.plans import rollup as rollup_mod
 from ts2g2_spark.plans.points import explode_points
@@ -362,7 +364,7 @@ def test_rollup_job_spark_job_floor(spark, input_df, tmp_path, count_jobs):
 def test_retention_without_footer_statistics(spark, input_df, tmp_path):
     """Tier files written with INT96 timestamps carry no bucket_ts
     statistics: retention rewrites every tier and still keeps exactly the
-    rows inside each horizon."""
+    rows inside each horizon, and a re-run still skips every stage."""
     key = "spark.sql.parquet.outputTimestampType"
     old = spark.conf.get(key)
     spark.conf.set(key, "INT96")
@@ -382,6 +384,11 @@ def test_retention_without_footer_statistics(spark, input_df, tmp_path):
         assert _rows(kept[t]) == _rows(p.cat.read(t)) == want[t]
     assert 0 < len(want["rollup_1m"]) < len(before["rollup_1m"])
     assert want["rollup_1h"] == before["rollup_1h"]
+    # the rewrites keep each stage's commit record: a re-run resumes
+    p2 = RollupPipeline(spark, p.cat.root, run_id="r2")
+    out = p2.run(input_df, "x")
+    assert all(s["skipped"] for s in p2.stage_log)
+    assert all(_rows(out[t]) == want[t] for t in tiers)
 
 
 def _versions(table_dir):
@@ -470,11 +477,59 @@ def test_catalog_keeps_live_and_previous_version(spark, tmp_path):
     table = os.path.join(str(tmp_path), "t")
     for k in range(4):
         path = cat.write(spark.range(k + 1), "t")
+        cat.commit("t", path)
         assert path == os.path.join(table, f"v{k}") == cat.table_path("t")
         assert _versions(table) == [f"v{j}" for j in range(max(0, k - 1),
                                                           k + 1)]
     assert _live(table) == "v3"
     assert sorted(r.id for r in cat.read("t").collect()) == [0, 1, 2, 3]
+
+
+STAGES = ("rollup_1m", "rollup_1h", "rollup_1d", "chunks")
+
+
+def _table_bytes(path):
+    """The sorted contents of a table version's data files."""
+    return sorted(pathlib.Path(d, f).read_bytes()
+                  for d, _, fs in os.walk(path) for f in fs
+                  if f.startswith("part-"))
+
+
+@pytest.mark.parametrize("crash_after", ["write", "commit"])
+def test_stage_crash_resumes_to_identical_tables(spark, input_df, tmp_path,
+                                                 monkeypatch, crash_after):
+    """A crash after the 1h stage's version write (before its lineage and
+    its commit) or right after its commit publishes: the re-run under the
+    same run_id recomputes the stage in the first case and skips it in
+    the second, and ends with tables byte-identical to an uncrashed run's
+    and one lineage file per (run, stage)."""
+    clean = RollupPipeline(spark, str(tmp_path / "clean"), run_id="r1")
+    clean.run(input_df, "x")
+    root = str(tmp_path / "cat")
+    p1 = RollupPipeline(spark, root, run_id="r1")
+    orig = getattr(p1.cat, crash_after)
+
+    def crash_on_1h(*a, **k):
+        out = orig(*a, **k)
+        if "rollup_1h" in a:  # write(df, name) and commit(name, path)
+            raise RuntimeError("injected crash")
+        return out
+
+    monkeypatch.setattr(p1.cat, crash_after, crash_on_1h)
+    with pytest.raises(RuntimeError, match="injected"):
+        p1.run(input_df, "x")
+    ptr = read_pointer(os.path.join(root, "rollup_1h"))
+    assert (ptr is not None) == (crash_after == "commit")
+    p2 = RollupPipeline(spark, root, run_id="r1")
+    p2.run(input_df, "x")
+    assert [s["skipped"] for s in p2.stage_log] == [
+        True, crash_after == "commit", False, False]
+    for stage in STAGES:
+        assert _table_bytes(p2.cat.table_path(stage)) == _table_bytes(
+            clean.cat.table_path(stage)), stage
+    lineage = sorted(os.listdir(p2.cat.table_path("lineage")))
+    assert lineage == sorted(os.listdir(clean.cat.table_path("lineage")))
+    assert len(lineage) == len(STAGES)
 
 
 def test_gapfill_linear_interpolates_endpoints(spark):

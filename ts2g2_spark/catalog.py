@@ -3,28 +3,31 @@
 In-sandbox everything is Parquet on the local FS.  The seam is written
 against "last committed snapshot" semantics so that swapping in an Iceberg
 catalog (org.apache.iceberg.spark.SparkCatalog; jar absent here — SURVEY §0)
-only changes `write`/`read` and commit becomes the Iceberg snapshot
-itself.  `commit` writes the stage's manifest under a temporary name and
-renames it atomically; a stage is committed iff its manifest file exists
-and matches the input fingerprint, which gives idempotent resume (north
-rule: resumable from the last committed checkpoint).
+only changes `write`/`read` and a commit becomes the Iceberg snapshot
+itself.
 
 Every committed table has one format: version directories `<table>/v<k>/`
 and a `<table>/_LATEST` JSON pointer, `{"version": "v<k>", ...}`, that
-names the live one.  The pointer is the table's manifest; a writer may add
-its own keys to it (the tier fold records its last batch and its layout).
-A write goes into a version directory no reader resolves to, then
-`publish` writes the new pointer under a temporary name and `os.replace`s
-it onto `_LATEST`; that replace is the commit.  After it, the versions
-other than the live one and the one it replaced are removed.  So:
+names the live one.  The pointer is the table's one commit record; a
+writer may add its own keys to it (a pipeline stage records its input
+fingerprint, run_id and wall_ms; the tier fold its last batch and its
+layout).  A write goes into a version directory no reader resolves to,
+then `publish` writes the new pointer under a temporary name and
+`os.replace`s it onto `_LATEST`; that replace is the commit.  After it,
+the versions other than the live one and the one it replaced are
+removed.  So:
 - a table can be rewritten from a frame that reads it (retention needs
   no checkpoint);
 - a frame planned over the previous version keeps reading it until the
   next publish;
 - a crash during the write or before the replace leaves the previous
   version live and an unnamed version directory, which the next write of
-  that version clears and the next publish removes.
-`publish` is the only writer of `_LATEST`; the catalog's `write` and the
+  that version clears and the next publish removes;
+- a stage is committed iff its table's pointer carries the stage's input
+  fingerprint, and resuming it reads exactly the version that pointer
+  names (idempotent resume — north rule: resumable from the last
+  committed checkpoint).
+`publish` is the only writer of `_LATEST`; `Catalog.commit` and the
 streaming tier fold (`streaming.ingest.incremental_tier_fold`) both commit
 through it, and `read_table` is the one reader.  The catalog has one
 writer per table.
@@ -44,7 +47,6 @@ import json
 import os
 import re
 import shutil
-import time
 import uuid
 
 import pyarrow.parquet as pq
@@ -166,49 +168,38 @@ class Catalog:
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
-        os.makedirs(os.path.join(root, "_manifest"), exist_ok=True)
 
-    # -- manifest -----------------------------------------------------
-    def _manifest_path(self, stage: str) -> str:
-        return os.path.join(self.root, "_manifest", f"{stage}.json")
-
-    def committed(self, stage: str, fingerprint: str) -> bool:
-        p = self._manifest_path(stage)
-        if not os.path.exists(p):
-            return False
-        try:
-            with open(p) as f:
-                m = json.load(f)
-            return m.get("fingerprint") == fingerprint
-        except (json.JSONDecodeError, OSError):
-            return False
-
-    def commit(self, stage: str, fingerprint: str, meta: dict) -> None:
-        p = self._manifest_path(stage)
-        tmp = p + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"stage": stage, "fingerprint": fingerprint,
-                 "committed_at": time.time(), **meta}, f)
-        os.replace(tmp, p)  # atomic on POSIX — the "snapshot commit"
-
-    # -- tables -------------------------------------------------------
     def table_path(self, name: str) -> str:
         """The live version directory of table `name` (see
         `live_path`)."""
         return live_path(os.path.join(self.root, name))
 
     def write(self, df: DataFrame, name: str) -> str:
-        """Write `df` as the next version of table `name` and publish it
-        (see the module docstring); `df` may read the table it replaces.
-        Returns the new version's directory."""
+        """Write `df` as the next version of table `name`, unpublished
+        until `commit`; `df` may read the table it replaces.  Returns the
+        new version's directory."""
         table = os.path.join(self.root, name)
         cur = read_pointer(table)
         version = f"v{int(cur['version'][1:]) + 1 if cur else 0}"
         path = version_dir(table, version)
         df.write.mode("overwrite").parquet(path)
-        publish(table, version)
         return path
+
+    def commit(self, name: str, path: str, **meta) -> None:
+        """Publish the version `write` put at `path` as table `name`'s
+        live one.  The new pointer keeps the previous pointer's keys
+        (a rewrite such as retention keeps its stage's record), updated
+        by `meta`."""
+        table = os.path.join(self.root, name)
+        keep = {k: v for k, v in (read_pointer(table) or {}).items()
+                if k != "version"}
+        publish(table, os.path.basename(path), **{**keep, **meta})
+
+    def committed(self, stage: str, fingerprint: str) -> bool:
+        """Whether table `stage`'s live version was committed by a stage
+        run on input `fingerprint`."""
+        ptr = read_pointer(os.path.join(self.root, stage))
+        return ptr is not None and ptr.get("fingerprint") == fingerprint
 
     def read(self, name: str) -> DataFrame:
         return read_table(self.spark, os.path.join(self.root, name))

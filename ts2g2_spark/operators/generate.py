@@ -134,8 +134,8 @@ def _sliding_walk(rng, values, *, win_size, move_len, ts_length,
         neighbors[i + 1].append(i)
     g = gk.GraphData(values=[[] for _ in range(m)], neighbors=neighbors,
                      win_values=win_values)
-    return gk.walk_sliding([g], ts_length, value_strategy, node_strategy,
-                           rng, skip=skip, switch=switch)[0]
+    return gk.walk_plain([g], ts_length, value_strategy, node_strategy, rng,
+                         skip=skip, switch=switch)[0]
 
 
 def generate_sliding_sequences(
@@ -179,8 +179,8 @@ def _quantile_walk(rng, y, *, Q, ts_length, value_strategy, node_strategy,
         neighbors[s].append(d)
     g = gk.GraphData(values=[[] for _ in range(Q)], neighbors=neighbors,
                      q_bins=bins.tolist(), q_values=q_values)
-    return gk.walk_quantile([g], ts_length, value_strategy, node_strategy,
-                            rng, skip=skip, switch=switch)[0]
+    return gk.walk_plain([g], ts_length, value_strategy, node_strategy, rng,
+                         skip=skip, switch=switch)[0]
 
 
 def generate_quantile_sequences(

@@ -206,7 +206,11 @@ def walk_plain(
 ) -> list[list[float]]:
     """ToSequenceVisitor.to_sequence (core/model.py:619-644): each outer
     step appends one value per variable from the current node, then
-    advances every walk (skip+1) times."""
+    advances every walk (skip+1) times.  The sliding-window and quantile
+    visitors (core/model.py:535-573, 752-773) walk with this same loop:
+    their behaviour lives in their value strategies (_append_value), and
+    a sliding step appends one value per node of the current window-graph,
+    so that sequence can overshoot ts_length, as upstream."""
     k = len(graphs)
     seqs: list[list[float]] = [[] for _ in range(k)]
     current = [0] * k
@@ -223,26 +227,6 @@ def walk_plain(
                                          step, kk, current, switch)
         step += 1
     return seqs
-
-
-def walk_sliding(
-    graphs: list[GraphData],
-    ts_length: int,
-    value_strategy: str,
-    node_strategy: str,
-    rng: Rng,
-    skip: int = 0,
-    switch: int = 1,
-) -> list[list[float]]:
-    """ToSequenceVisitorSlidingWindow (core/model.py:535-573): a step
-    appends one value per node OF THE CURRENT WINDOW-GRAPH (so the sequence
-    can overshoot ts_length, as upstream).
-
-    The walk loop is IDENTICAL to walk_plain — the sliding behavior lives
-    entirely in the *_sliding value strategies (_append_value), so this
-    delegates rather than duplicating the loop."""
-    return walk_plain(graphs, ts_length, value_strategy, node_strategy,
-                      rng, skip=skip, switch=switch)
 
 
 def _op_append_start(
@@ -347,32 +331,4 @@ def walk_ordinal_partition(
     for kk in range(k):
         for j in range(tau):
             seqs[kk].extend(short[kk][j])
-    return seqs
-
-
-def walk_quantile(
-    graphs: list[GraphData],
-    ts_length: int,
-    value_strategy: str,
-    node_strategy: str,
-    rng: Rng,
-    skip: int = 0,
-    switch: int = 1,
-) -> list[list[float]]:
-    """ToSequenceVisitorQuantile (core/model.py:752-773)."""
-    k = len(graphs)
-    seqs: list[list[float]] = [[] for _ in range(k)]
-    current = [0] * k
-    counters: dict = {}
-    state: dict = {}
-    step = 0
-    while len(seqs[0]) < ts_length:
-        for j in range(k):
-            _append_value(value_strategy, rng, graphs[j], counters, j,
-                          current[j], seqs[j])
-        for _ in range(skip + 1):
-            for kk in range(k):
-                current[kk] = _next_node(node_strategy, rng, graphs, state,
-                                         step, kk, current, switch)
-        step += 1
     return seqs

@@ -958,13 +958,41 @@ def _is_edge(g: _Graph, u: np.ndarray, v: np.ndarray) -> np.ndarray:
     return g.key[np.minimum(np.searchsorted(g.key, k), len(g.key) - 1)] == k
 
 
-def _gather(g: _Graph, frontier: np.ndarray):
-    """(u, v) for every adjacency entry of the nodes in frontier, in
-    frontier order, each row ascending (the BFS step of betweenness and
-    path metrics)."""
-    lens = g.degree[frontier]
-    k = np.repeat(g.indptr[frontier], lens) + _ragged_offsets(lens)
-    return g.src[k], g.dst[k]
+#: `_bfs` runs sources in blocks of at most this many (source, node) plus
+#: (source, adjacency entry) cells, ~26 bytes of scratch each (<= ~55 MB).
+#: Of 800 random-walk series of 150-200 points, every NVG and all but 21
+#: HVGs (2m up to ~14k: two blocks) run as one block; a 5000-node sparse
+#: graph as ~90.  HVG's cost is the O(n*m) gather, not per-call overhead.
+_BFS_CELLS = 1 << 21
+
+
+def _bfs(g: _Graph):
+    """Breadth-first search from every node, one block of consecutive
+    sources at a time.  Yields per block (dist, tree): dist[i, v] the hop
+    count from the block's i-th source to v, -1 where unreached;
+    tree[d - 1] the (pred, succ) flat keys of dist of the shortest-path
+    DAG edges into depth d, ordered by pred then succ.  Each level is one
+    gather of the CSR rows of every source's frontier, kept sorted."""
+    n = len(g.nodes)
+    step = max(1, _BFS_CELLS // (n + len(g.src)))
+    for lo in range(0, n, step):
+        src = np.arange(lo, min(lo + step, n))
+        frontier = (src - lo) * n + src
+        dist = np.full(len(src) * n, -1, dtype=np.int64)
+        dist[frontier] = 0
+        tree = []
+        while len(frontier):
+            u = frontier % n
+            lens = g.degree[u]
+            ends = np.cumsum(lens)
+            k = np.arange(ends[-1]) + np.repeat(g.indptr[u] - ends + lens,
+                                                lens)
+            succ = np.repeat(frontier - u, lens) + g.dst[k]
+            down = dist[succ] < 0
+            tree.append((np.repeat(frontier, lens)[down], succ[down]))
+            frontier = np.unique(tree[-1][1])
+            dist[frontier] = len(tree)
+        yield dist.reshape(len(src), n), tree
 
 
 def _wedges(hub: np.ndarray, nb: np.ndarray):
@@ -1082,49 +1110,31 @@ def graph_path_metrics_kernel(edges: np.ndarray) -> dict | None:
     length separates series classes; HVGs are always connected since
     adjacent points see each other).
 
-    BFS from every source, each level one `_gather` of the frontier's
-    adjacency; all quantities are exact integers or one exact-integer
-    ratio (sum of distances / ordered reachable pairs), so the result
-    is engine-independent with no rounding contract needed (avg_spl
-    emitted at full double precision of one division).  On a
-    DISCONNECTED graph, eccentricities and the average are over
-    REACHABLE pairs only and `connected` is False.  O(n*m) per graph —
-    per-series segment regime."""
+    One all-sources BFS (`_bfs`); all quantities are exact integers or
+    one exact-integer ratio (sum of distances / ordered reachable pairs),
+    so the result is engine-independent with no rounding contract needed
+    (avg_spl emitted at full double precision of one division).  On a
+    DISCONNECTED graph, eccentricities and the average are over REACHABLE
+    pairs only and `connected` is False.  O(n*m) per graph."""
     g = _graph(edges)
     n = len(g.nodes)
     if n == 0:
         return None
-    total_sum = 0
-    total_pairs = 0
-    ecc = np.zeros(n, dtype=np.int64)
-    connected = True
-    for s in range(n):
-        dist = np.full(n, -1, dtype=np.int64)
-        dist[s] = 0
-        frontier = np.array([s], dtype=np.int64)
-        depth = 0
-        while True:
-            _u, v_all = _gather(g, frontier)
-            fresh = np.unique(v_all[dist[v_all] == -1]) \
-                if len(v_all) else v_all
-            if len(fresh) == 0:
-                break
-            depth += 1
-            dist[fresh] = depth
-            frontier = fresh
+    ecc, total_sum, total_pairs, connected = [], 0, -n, True  # no (s, s)
+    for dist, _tree in _bfs(g):
         reach = dist >= 0
-        if not reach.all():
-            connected = False
-        ecc[s] = depth
+        ecc.append(dist.max(axis=1))
         total_sum += int(dist[reach].sum())
-        total_pairs += int(reach.sum()) - 1
+        total_pairs += int(reach.sum())
+        connected &= bool(reach.all())
+    ecc = np.concatenate(ecc)
     avg = float(total_sum) / total_pairs if total_pairs > 0 else None
     return {
         "n_nodes": n,
         "diameter": int(ecc.max()),
         "radius": int(ecc.min()),
         "avg_spl": avg,
-        "connected": bool(connected),
+        "connected": connected,
     }
 
 
@@ -1235,48 +1245,35 @@ def graph_betweenness_kernel(
     edges: np.ndarray, normalized: bool = True, round_dp: int = 9,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact betweenness centrality of one small undirected graph:
-    (nodes, bc) via Brandes' algorithm, with every per-source phase
-    VECTORIZED over the BFS frontier (`_gather` + np.add.at for path
-    counts and dependency accumulation — no per-edge Python).
+    (nodes, bc) via Brandes' algorithm over `_bfs`: path counts σ added
+    level by level down its shortest-path DAG, dependencies δ back up
+    (np.add.at in the DAG's edge order — no per-edge Python).
 
     Normalization matches networkx betweenness_centrality(
     normalized=True): pair double-counting halved, then scaled by
-    2/((n-1)(n-2)) for n > 2.  Deterministic: fixed source order, fixed
-    level order, rounded HALF_UP at the end only (float accumulation
-    inside one implementation is order-stable).  O(n*m) per graph —
-    the per-series segment regime; not for one huge graph."""
+    2/((n-1)(n-2)) for n > 2.  Deterministic: each (source, node) sums
+    its terms with sources, frontier nodes and neighbours ascending, and
+    bc sums the sources' δ rows in source order, rounded HALF_UP at the
+    end only.  O(n*m) per graph — the per-series segment regime; not for
+    one huge graph."""
     g = _graph(edges)
     n = len(g.nodes)
     if n == 0:
         return g.nodes, np.empty(0)
     bc = np.zeros(n, dtype=np.float64)
-    for s in range(n):
-        dist = np.full(n, -1, dtype=np.int64)
-        sigma = np.zeros(n, dtype=np.float64)
-        dist[s] = 0
-        sigma[s] = 1.0
-        levels = [np.array([s], dtype=np.int64)]
-        while True:
-            u_rep, v_all = _gather(g, levels[-1])
-            if len(v_all) == 0:
-                break
-            fresh = v_all[dist[v_all] == -1]
-            if len(fresh) == 0:
-                break
-            nxt = np.unique(fresh)
-            dist[nxt] = len(levels)
-            tree = dist[v_all] == len(levels)
-            np.add.at(sigma, v_all[tree], sigma[u_rep[tree]])
-            levels.append(nxt)
-        delta = np.zeros(n, dtype=np.float64)
-        for depth in range(len(levels) - 1, 0, -1):
-            w_rep, v_all = _gather(g, levels[depth])
-            pred = dist[v_all] == depth - 1
-            vp, wp = v_all[pred], w_rep[pred]
-            np.add.at(delta, vp,
-                      sigma[vp] / sigma[wp] * (1.0 + delta[wp]))
-        delta[s] = 0.0
-        bc += delta
+    for dist, tree in _bfs(g):
+        roots = np.flatnonzero(dist == 0)
+        sigma = np.zeros(dist.size)
+        sigma[roots] = 1.0
+        for pred, succ in tree:
+            np.add.at(sigma, succ, sigma[pred])
+        delta = np.zeros(dist.size)
+        for pred, succ in reversed(tree):
+            np.add.at(delta, pred,
+                      sigma[pred] / sigma[succ] * (1.0 + delta[succ]))
+        delta[roots] = 0.0
+        for row in delta.reshape(dist.shape):
+            bc += row
     bc /= 2.0  # undirected: each (s, t) pair contributes twice
     if normalized and n > 2:
         bc *= 2.0 / ((n - 1) * (n - 2))
@@ -1331,13 +1328,15 @@ def graph_wl_kernel(
         z = np.empty(0, dtype=np.int64)
         return z, z
     lab = g.degree
+    ptr = g.indptr.tolist()
     for _ in range(n_iter):
-        new_lab = np.empty(n, dtype=np.int64)
-        for v in range(n):
-            nb = np.sort(lab[g.dst[g.indptr[v]:g.indptr[v + 1]]])
-            sig = f"{lab[v]}|" + ",".join(str(x) for x in nb)
-            new_lab[v] = h64_py(sig)
-        lab = new_lab
+        nb = lab[g.dst]
+        # every node's neighbour labels sorted, formatted once per round
+        words = list(map(str, nb[np.lexsort((nb, g.src))].tolist()))
+        own = lab.tolist()
+        lab = np.array([h64_py(f"{own[v]}|" + ",".join(words[a:b]))
+                        for v, (a, b) in enumerate(zip(ptr, ptr[1:]))],
+                       dtype=np.int64)
     return g.nodes, lab
 
 

@@ -1,6 +1,6 @@
 """End-to-end rollup pipeline with checkpoint/resume + lineage.
 
-Stage DAG (each stage commits its output + manifest before the next runs —
+Stage DAG (each stage commits its output table before the next runs —
 the checkpoint granularity of the north rule):
 
   input (tokenized_sequences)
@@ -20,22 +20,25 @@ skew (max/median of those counts).  Reading a committed table back starts
 no Spark job either: `Catalog.read` takes the schema from a data file's
 footer, and the lineage table is read with its fixed schema.
 
-Each stage's table is committed as a new version behind the table's
-`_LATEST` pointer (`catalog.Catalog.write`), then the stage's manifest.
-Resume: a stage whose manifest matches the input fingerprint is skipped and
-its table's live version is read back instead of recomputed; re-running a
-killed job produces identical tables with no duplicates (a version is live
-only once published, and a stage re-run under the same run_id replaces its
-lineage file).
+Each stage writes its table as a new, unpublished version
+(`catalog.Catalog.write`), then its lineage file from that version's
+footers, then commits: `Catalog.commit` publishes the version with the
+stage's input fingerprint, run_id and wall_ms in the table's `_LATEST`
+pointer, the stage's one commit record.  Resume: a stage whose pointer
+carries the input fingerprint is skipped and the version that pointer
+names is read back instead of recomputed.  A crash before the commit
+leaves the previous version live, so the re-run recomputes the stage;
+re-running a killed job produces identical tables with no duplicates (a
+stage re-run under the same run_id replaces its lineage file).
 
 Retention is decided from the tier files' footers, not by a Spark
 aggregate: a tier is rewritten unless the per-row-group statistics of
 `bucket_ts` prove that no row is null or older than the tier's cutoff
 (files without those statistics, such as INT96 timestamps, are always
-rewritten).  The rewrite reads the live version and `Catalog.write`
-publishes the result as the next one, so there is no checkpoint, and a
-frame read from the tier before the rewrite still reads the previous
-version.
+rewritten).  The rewrite reads the live version and commits the result
+as the next one, keeping the stage's record in the pointer, so there is
+no checkpoint, resume still skips the stage, and a frame read from the
+tier before the rewrite still reads the previous version.
 """
 
 from __future__ import annotations
@@ -61,10 +64,11 @@ def _fingerprint(desc: str) -> str:
 
 class StagedPipeline:
     """Checkpoint/resume + lineage base shared by the rollup and corpus
-    pipelines: each stage commits its output table and an atomic
-    manifest before the next stage runs; on re-submit, a stage whose
-    manifest matches the input fingerprint is read back instead of
-    recomputed (idempotent resume from the last committed stage)."""
+    pipelines: each stage commits its output table, with its input
+    fingerprint in the table's pointer, before the next stage runs; on
+    re-submit, a stage committed with the same fingerprint is read back
+    instead of recomputed (idempotent resume from the last committed
+    stage)."""
 
     def __init__(self, spark: SparkSession, catalog_root: str,
                  run_id: str | None = None):
@@ -73,20 +77,18 @@ class StagedPipeline:
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.stage_log: list[dict] = []
 
-    def _run_stage(self, stage: str, fingerprint: str, build,
-                   force: bool = False) -> DataFrame:
-        if not force and self.cat.committed(stage, fingerprint):
+    def _run_stage(self, stage: str, fingerprint: str, build) -> DataFrame:
+        if self.cat.committed(stage, fingerprint):
             self.stage_log.append({"stage": stage, "skipped": True})
             return self.cat.read(stage)
         t0 = time.time()
-        df = build()
-        self.cat.write(df, stage)
+        path = self.cat.write(build(), stage)
         wall_ms = (time.time() - t0) * 1000
-        lin = partition_metrics(self.cat.table_path(stage), self.run_id,
-                                stage, fingerprint, wall_ms)
+        lin = partition_metrics(path, self.run_id, stage, fingerprint,
+                                wall_ms)
         write_lineage(self.cat.table_path("lineage"), self.run_id, stage, lin)
-        self.cat.commit(stage, fingerprint,
-                        {"wall_ms": wall_ms, "run_id": self.run_id})
+        self.cat.commit(stage, path, fingerprint=fingerprint,
+                        run_id=self.run_id, wall_ms=wall_ms)
         rows = lin.column("rows").to_numpy()
         self.stage_log.append(
             {"stage": stage, "skipped": False, "wall_ms": wall_ms,
@@ -155,7 +157,8 @@ class RollupPipeline(StagedPipeline):
             name = f"rollup_{tier}"
             cutoff = now_epoch - horizons[tier]
             if not self.cat.all_at_or_after(name, "bucket_ts", cutoff):
-                self.cat.write(rollup_mod.apply_retention(
-                    self.cat.read(name), tier, now_epoch, horizons), name)
+                kept = rollup_mod.apply_retention(
+                    self.cat.read(name), tier, now_epoch, horizons)
+                self.cat.commit(name, self.cat.write(kept, name))
             out[name] = self.cat.read(name)
         return out
