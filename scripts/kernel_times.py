@@ -5,12 +5,12 @@ Builds 800 random-walk series of 150-200 points (numpy `default_rng(1201)`),
 their horizontal and natural visibility graphs with one
 `kernels.visibility_graph_segmented` call per kind, split per series, then
 runs each metric kernel over every graph of a kind and prints the min and
-max wall time of `--runs` repetitions, in seconds, one line per
+max wall time of RUNS repetitions, in seconds, one line per
 (kernel, kind).
 
 Usage, from any directory (pin one core for steadier numbers):
     taskset -c 0 python scripts/kernel_times.py [--root CHECKOUT]
-        [--runs 3] [--only betweenness,path_metrics] [--kinds hvg,nvg]
+        [--only betweenness,path_metrics]
 
 `--root` times the kernels of another checkout (default: this one), so two
 checkouts can be timed one after the other with the same script.
@@ -41,6 +41,7 @@ KERNELS = {  # name -> kernels attribute, run with its default parameters
     "link_prediction": "link_prediction_kernel",
 }
 KINDS = {"hvg": "horizontal", "nvg": "natural"}
+RUNS = 3
 
 
 def series(n_series: int = 800, seed: int = 1201):
@@ -62,10 +63,8 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--root", default=ROOT,
                     help="checkout whose ts2g2_spark is timed")
-    ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--only", default="",
                     help="comma-separated kernel names (default: all)")
-    ap.add_argument("--kinds", default="hvg,nvg")
     args = ap.parse_args()
     sys.path.insert(0, os.path.abspath(args.root))
     from ts2g2_spark.operators import kernels
@@ -73,18 +72,18 @@ def main() -> int:
     names = args.only.split(",") if args.only else list(KERNELS)
     values, lengths = series()
     print(f"# {kernels.__file__}, {len(lengths)} series, "
-          f"min/max of {args.runs} runs, seconds")
-    for kind in args.kinds.split(","):
-        gs = graphs(kernels, KINDS[kind], values, lengths)
+          f"min/max of {RUNS} runs, seconds")
+    for label, kind in KINDS.items():
+        gs = graphs(kernels, kind, values, lengths)
         for name in names:
             fn = getattr(kernels, KERNELS[name])
             times = []
-            for _ in range(args.runs):
+            for _ in range(RUNS):
                 t = time.perf_counter()
                 for e in gs:
                     fn(e)
                 times.append(time.perf_counter() - t)
-            print(f"{name:16s} {kind}  {min(times):8.3f}  {max(times):8.3f}",
+            print(f"{name:16s} {label}  {min(times):8.3f}  {max(times):8.3f}",
                   flush=True)
     return 0
 

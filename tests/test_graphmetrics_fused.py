@@ -380,6 +380,9 @@ def _nx_path_metrics(g):
 
 DISTANCE_GRAPHS = {
     "sparse_5000_nodes": lambda: TRIANGLE_GRAPHS["sparse_5000_nodes"]()[0],
+    # a random graph plus one hub, small enough for networkx's Brandes
+    "sparse_1500_nodes": lambda: nx.compose(
+        nx.gnm_random_graph(1500, 3600, seed=4), nx.star_graph(100)),
     # a random graph plus small components, on sparse labels
     "disconnected": lambda: nx.relabel_nodes(nx.disjoint_union_all([
         nx.gnm_random_graph(800, 2000, seed=5), nx.path_graph(7),
@@ -388,17 +391,31 @@ DISTANCE_GRAPHS = {
 }
 
 
-@pytest.mark.parametrize("case", sorted(DISTANCE_GRAPHS))
-def test_distance_kernels_match_networkx(case):
-    """Path metrics equal networkx's exactly, and betweenness equals
-    nx.betweenness_centrality(normalized=True) at the 9 dp rounding, on a
-    5000-node sparse graph and on a disconnected one, from noisy edges;
-    both are too large for one source block of the all-sources BFS."""
+def _distance_case(case):
+    """(graph, noisy edges) of a DISTANCE_GRAPHS case, which the
+    all-sources BFS runs in several source blocks, the last one partial."""
     g = nx.Graph(DISTANCE_GRAPHS[case]().edges())  # no isolated nodes
-    e = noisy_edges(list(g.edges()))
     n, m = g.number_of_nodes(), g.number_of_edges()
-    assert n * (n + 2 * m) > K._BFS_CELLS
+    step = K._BFS_CELLS // (n + 2 * m)  # sources per block
+    assert n > step and n % step
+    return g, noisy_edges(list(g.edges()))
+
+
+@pytest.mark.parametrize("case", ["disconnected", "sparse_5000_nodes"])
+def test_path_metrics_kernel_matches_networkx_in_blocks(case):
+    """Path metrics equal networkx's exactly on a 5000-node sparse graph
+    (93 source blocks) and on a disconnected one (2 blocks)."""
+    g, e = _distance_case(case)
     assert K.graph_path_metrics_kernel(e) == _nx_path_metrics(g)
+
+
+@pytest.mark.parametrize("case", ["disconnected", "sparse_1500_nodes"])
+def test_betweenness_kernel_matches_networkx_in_blocks(case):
+    """Betweenness equals nx.betweenness_centrality(normalized=True) at
+    the 9 dp rounding on a 1500-node sparse graph (7 source blocks) and
+    on a disconnected one (2 blocks).  Not on the 5000-node graph:
+    networkx's pure-Python Brandes takes about a minute there."""
+    g, e = _distance_case(case)
     nodes, bc = K.graph_betweenness_kernel(e)
     want = nx.betweenness_centrality(g, normalized=True)
     assert nodes.tolist() == sorted(want)

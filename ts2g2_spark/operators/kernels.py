@@ -984,9 +984,7 @@ def _bfs(g: _Graph):
         while len(frontier):
             u = frontier % n
             lens = g.degree[u]
-            ends = np.cumsum(lens)
-            k = np.arange(ends[-1]) + np.repeat(g.indptr[u] - ends + lens,
-                                                lens)
+            k = np.repeat(g.indptr[u], lens) + _ragged_offsets(lens)
             succ = np.repeat(frontier - u, lens) + g.dst[k]
             down = dist[succ] < 0
             tree.append((np.repeat(frontier, lens)[down], succ[down]))
